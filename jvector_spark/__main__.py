@@ -137,23 +137,17 @@ def cmd_shard_query(args) -> int:
 
 
 def cmd_stats(args) -> int:
-    from pyspark.sql import functions as F
-
-    from .index.storage import read_segments, read_table
+    from .index.storage import lineage_totals, read_segments
 
     spark = _spark(args)
     seg = read_segments(spark, args.index)
-    lineage = read_table(spark, args.index, "build_lineage")
-    totals = lineage.agg(
-        F.sum("postings_emitted").alias("postings"),
-        F.sum("bytes_compressed").alias("bytes"),
-    ).collect()[0]
+    postings, bytes_compressed = lineage_totals(args.index)
     print(
         json.dumps(
             {
                 **{k: (float(v) if isinstance(v, float) else v) for k, v in seg.items()},
-                "postings": int(totals["postings"] or 0),
-                "bytes_compressed": int(totals["bytes"] or 0),
+                "postings": postings,
+                "bytes_compressed": bytes_compressed,
             }
         )
     )

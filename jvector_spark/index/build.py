@@ -51,6 +51,11 @@ from ..operators.text_stats import doc_stats, term_freq
 from .codec import varint_encode
 from .storage import (
     FORMAT_VERSION,
+    LINEAGE_SCHEMA,
+    POSTINGS_SCHEMA,
+    lineage_totals,
+    local_df,
+    read_local,
     read_table,
     shuffle_n,
     sized_shuffle_n,
@@ -58,10 +63,9 @@ from .storage import (
     write_table,
 )
 
-POSTINGS_SCHEMA = (
-    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
-    "max_tf long, min_dl long, doc_ids_packed binary, "
-    "tfs_packed binary, dls_packed binary"
+SEGMENTS_SCHEMA = (
+    "format_version int, n_docs long, avgdl double, k1 double, b double, "
+    "block_size int, token_pattern string, n_parts int"
 )
 
 # serializes the session-global Arrow batch-size override around the encode
@@ -648,26 +652,24 @@ def build_index(
         )
         enriched.write.mode("overwrite").partitionBy("part_id").parquet(staging_dir)
 
-        seg = spark.createDataFrame(
+        seg = local_df(
+            spark,
             [
                 (
                     FORMAT_VERSION, n_docs, avgdl, float(k1), float(b),
                     int(block_size), TOKEN_PATTERN, int(n_parts),
                 )
             ],
-            "format_version int, n_docs long, avgdl double, k1 double, b double, "
-            "block_size int, token_pattern string, n_parts int",
+            SEGMENTS_SCHEMA,
         )
         write_table(seg, index_dir, "segments")  # stage-1 completion marker
         corpus.unpersist()
 
     done_parts: set[int] = set()
-    if resume and os.path.exists(lineage_path):
+    lineage_rows = read_local(index_dir, "build_lineage") if resume else None
+    if lineage_rows is not None:
         done_parts = {
-            r.part_id
-            for r in read_table(spark, index_dir, "build_lineage")
-            .filter(F.col("status") == "complete")
-            .collect()
+            r["part_id"] for r in lineage_rows.to_pylist() if r["status"] == "complete"
         }
 
     # per-part distinct doc counts in ONE column-pruned job (not one per
@@ -689,11 +691,9 @@ def build_index(
         part_src = os.path.join(staging_dir, f"part_id={p}")
         if not os.path.exists(part_src):
             # empty hash bucket — record it complete so resume skips it
-            spark.createDataFrame(
-                [(p, 0, 0, 0, "complete")],
-                "part_id int, docs_indexed long, postings_emitted long, "
-                "bytes_compressed long, status string",
-            ).write.mode("append").parquet(lineage_path)
+            local_df(spark, [(p, 0, 0, 0, "complete")], LINEAGE_SCHEMA).write.mode(
+                "append"
+            ).parquet(lineage_path)
             committed += 1
             continue
         part = spark.read.parquet(part_src)
@@ -715,15 +715,15 @@ def build_index(
         out_path = os.path.join(table_path(index_dir, "postings"), f"part_id={p}")
         blocks.write.mode("overwrite").parquet(out_path)
         m = obs.get
-        lineage_row = spark.createDataFrame(
+        lineage_row = local_df(
+            spark,
             [
                 (
                     p, int(part_docs.get(p, 0)), int(m["postings"]),
                     int(m["bytes"]), "complete",
                 )
             ],
-            "part_id int, docs_indexed long, postings_emitted long, "
-            "bytes_compressed long, status string",
+            LINEAGE_SCHEMA,
         )
         lineage_row.write.mode("append").parquet(lineage_path)
         committed += 1
@@ -735,16 +735,12 @@ def build_index(
 
         shutil.rmtree(staging_dir, ignore_errors=True)
 
-    lineage = read_table(spark, index_dir, "build_lineage")
-    totals = lineage.agg(
-        F.sum("postings_emitted").alias("postings"),
-        F.sum("bytes_compressed").alias("bytes"),
-    ).collect()[0]
+    postings_emitted, bytes_compressed = lineage_totals(index_dir)
     return {
         "parts": n_parts,
         "parts_built": committed,
-        "postings_emitted": int(totals["postings"]),
-        "bytes_compressed": int(totals["bytes"]),
+        "postings_emitted": postings_emitted,
+        "bytes_compressed": bytes_compressed,
     }
 
 
@@ -1164,20 +1160,20 @@ def _build_index_single_shot(
     # one commit").
     def _write_meta() -> None:
         t_m = time.perf_counter()
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(-1, n_docs, int(m["postings"]), int(m["bytes"]), "complete")],
-            "part_id int, docs_indexed long, postings_emitted long, "
-            "bytes_compressed long, status string",
+            LINEAGE_SCHEMA,
         ).write.mode("overwrite").parquet(table_path(index_dir, "build_lineage"))
-        seg = spark.createDataFrame(
+        seg = local_df(
+            spark,
             [
                 (
                     FORMAT_VERSION, n_docs, avgdl, float(k1), float(b),
                     int(block_size), TOKEN_PATTERN, int(n_parts),
                 )
             ],
-            "format_version int, n_docs long, avgdl double, k1 double, "
-            "b double, block_size int, token_pattern string, n_parts int",
+            SEGMENTS_SCHEMA,
         )
         write_table(seg, index_dir, "segments")
         _tick("meta_writes", t_m)

@@ -42,11 +42,13 @@ from pyspark.sql import functions as F
 from .. import BLOCK_SIZE, BM25_B, BM25_K1
 from ..functions.analysis import TOKEN_PATTERN, tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import POSTINGS_SCHEMA, _bg_job, _bg_join, _encode_occ_map_fn
+from .build import _bg_job, _bg_join, _encode_occ_map_fn
 from .query import SPARSE_EXACT_LIMIT, wand_topk_arrays
 from .storage import (
     FORMAT_VERSION,
+    POSTINGS_SCHEMA,
     local_df,
+    local_relation,
     read_table,
     shuffle_n,
     sized_shuffle_n,
@@ -295,8 +297,8 @@ def bm25_topk_docpart(
     # the per-query broadcast of idf constants surveyed as P2
     qrows = qd.toPandas()
     if len(qrows) == 0:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, score double"
+        return local_relation(
+            spark, [], "query_id int, rank int, doc_id long, score double"
         )
     term_ids = sorted(int(t) for t in qrows["term_id"].unique())
     by_query = {

@@ -17,10 +17,13 @@ Design:
 - the dictionary is re-merged (df/cf updated, existing term_ids stable,
   new terms get ids above the old max) — term_id stability is the analog
   of the reference's OrdinalMapper keeping old ordinals valid;
-- global stats (n_docs, avgdl) are refreshed in ``segments``. Block upper
-  bounds are DERIVED at query time from per-block (max_tf, min_dl) +
-  current stats (format v2), so pre-existing blocks stay exactly correct
-  under the new stats — no rescore pass (contrast B9) is ever needed;
+- global stats (n_docs, avgdl) are refreshed in ``segments`` from the old
+  row plus the delta's row count and Σdl (observed on the delta's doc_stats
+  write), never by rescanning doc_stats — an extend costs O(delta), not
+  O(corpus). Block upper bounds are DERIVED at query time from per-block
+  (max_tf, min_dl) + current stats (format v2), so pre-existing blocks stay
+  exactly correct under the new stats — no rescore pass (contrast B9) is
+  ever needed;
 - per-generation lineage rows record the delta (docs, postings, bytes) —
   the same checkpoint/metrics contract as the initial build.
 
@@ -31,15 +34,36 @@ unioned corpus exactly (tested in tests/test_extend_maintenance.py).
 from __future__ import annotations
 
 import os
+import shutil
+from fractions import Fraction
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.doc_ids import assign_dense_ids
-from ..operators.text_stats import dictionary as build_dictionary
 from ..operators.text_stats import doc_stats, term_freq
-from .build import POSTINGS_SCHEMA, _encode_map_fn
-from .storage import read_segments, read_table, shuffle_n, table_path, update_segments
+from .build import _encode_map_fn
+from .storage import (
+    LINEAGE_SCHEMA,
+    POSTINGS_SCHEMA,
+    local_df,
+    read_segments,
+    read_table,
+    shuffle_n,
+    table_path,
+    update_segments,
+)
+
+
+def _dl_sum(seg: dict) -> int:
+    """Σdl of the index's documents, recovered exactly from the segments row.
+    ``avgdl`` is the correctly rounded ``Σdl / n_docs`` (Spark's ``avg`` over
+    the integer dl column), so the exact product differs from the integer
+    Σdl by at most Σdl·2⁻⁵³ — under ½ below 2⁵² tokens, where rounding it
+    recovers Σdl. An index with no documents (compacted empty) has a null
+    avgdl and Σdl 0."""
+    n_docs = int(seg["n_docs"])
+    return round(Fraction(seg["avgdl"]) * n_docs) if n_docs else 0
 
 
 def extend_index(
@@ -66,13 +90,15 @@ def extend_index(
 
     pins: list = []
     if order_cols:
+        # the id pass's per-partition counts already give the delta size
+        n_out: list = []
         delta = assign_dense_ids(
-            new_corpus, order_cols, "doc_id", pins=pins
-        ).withColumn("doc_id", F.col("doc_id") + F.lit(n_old))
+            new_corpus, order_cols, "doc_id", pins=pins, n_out=n_out
+        ).withColumn("doc_id", F.col("doc_id") + F.lit(n_old)).persist()
+        m = n_out[0]
     else:
-        delta = new_corpus  # caller-provided doc_id must be >= n_old
-    delta = delta.persist()
-    m = delta.count()
+        delta = new_corpus.persist()  # caller-provided doc_id must be >= n_old
+        m = delta.count()
     if m == 0:
         delta.unpersist()
         for p in pins:
@@ -115,8 +141,6 @@ def extend_index(
     tmp = table_path(index_dir, "dictionary__new")
     new_dct.write.mode("overwrite").parquet(tmp)
     old_path = table_path(index_dir, "dictionary")
-    import shutil
-
     shutil.rmtree(old_path)
     os.rename(tmp, old_path)
     dct = read_table(spark, index_dir, "dictionary")
@@ -158,23 +182,29 @@ def extend_index(
     mtr = obs.get
 
     # ---- append doc_stats / doc_map, refresh segments stats
-    dstats_new.write.mode("append").parquet(table_path(index_dir, "doc_stats"))
+    stats_obs = Observation("extend_doc_stats")
+    dstats_new.observe(
+        stats_obs,
+        F.count("*").alias("n"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
+    ).write.mode("append").parquet(table_path(index_dir, "doc_stats"))
     if doc_map_cols:
         delta.select("doc_id", *doc_map_cols).write.mode("append").parquet(
             table_path(index_dir, "doc_map")
         )
-    total = read_table(spark, index_dir, "doc_stats").agg(
-        F.count("*").cast("long"), F.avg("dl")
-    ).collect()[0]
-    # stats refresh preserves every other segments column (update_segments)
-    update_segments(spark, index_dir, n_docs=int(total[0]), avgdl=float(total[1]))
+    # doc_stats now holds the old rows plus the delta's: its count(*) and
+    # avg(dl) follow from the old segments row and the observed delta with
+    # no scan (Σdl / n in Python is correctly rounded, like Spark's avg over
+    # the integer dl column); every other segments column is preserved
+    n_docs = n_old + int(stats_obs.get["n"])
+    avgdl = (_dl_sum(seg) + int(stats_obs.get["dl_sum"])) / n_docs
+    update_segments(spark, index_dir, n_docs=n_docs, avgdl=avgdl)
 
-    gen = spark.createDataFrame(
+    local_df(
+        spark,
         [(-1, int(m), int(mtr["postings"]), int(mtr["bytes"]), "delta")],
-        "part_id int, docs_indexed long, postings_emitted long, "
-        "bytes_compressed long, status string",
-    )
-    gen.write.mode("append").parquet(table_path(index_dir, "build_lineage"))
+        LINEAGE_SCHEMA,
+    ).write.mode("append").parquet(table_path(index_dir, "build_lineage"))
     delta.unpersist()
     for p in pins:
         p.unpersist()
@@ -182,5 +212,5 @@ def extend_index(
         "docs_added": int(m),
         "postings_emitted": int(mtr["postings"]),
         "bytes_compressed": int(mtr["bytes"]),
-        "n_docs": int(total[0]),
+        "n_docs": n_docs,
     }

@@ -15,10 +15,11 @@ Semantics:
   reference's holes-then-renumber-at-write model); density is restored by
   a full rebuild if ever needed.
 
-Scale notes: the tombstone set is read as a DataFrame and applied via
-broadcast anti-join semantics (query side) or an executor-side numpy mask
-(WAND side). A tombstone set too large to broadcast is the signal to run
-``compact_index`` — same policy as the reference's cleanup threshold.
+Scale notes: the tombstone set is read with pyarrow on the driver and
+applied via a broadcast anti-join (relational paths) or an executor-side
+numpy mask (WAND side). A tombstone set too large to broadcast is the
+signal to run ``compact_index`` — same policy as the reference's cleanup
+threshold.
 """
 
 from __future__ import annotations
@@ -29,9 +30,14 @@ import shutil
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import POSTINGS_SCHEMA, _encode_map_fn
+from .build import _encode_map_fn
 from .query import decode_postings
 from .storage import (
+    LINEAGE_SCHEMA,
+    POSTINGS_SCHEMA,
+    lineage_totals,
+    local_df,
+    local_relation,
     read_segments,
     read_table,
     shuffle_n,
@@ -47,17 +53,22 @@ TOMBSTONES = "tombstones"
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     """Tombstone the given doc_ids (iterable of int or a 1-col DataFrame).
-    Returns the number of tombstones appended."""
-    if isinstance(doc_ids, DataFrame):
-        df = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    else:
-        rows = [(int(d),) for d in doc_ids]
-        if not rows:
-            return 0
-        df = spark.createDataFrame(rows, "doc_id long")
-    df = df.distinct()
+    Returns the number of tombstones appended. A Python iterable is
+    deduplicated on the driver and appended by a single one-file write
+    job; a DataFrame is deduplicated and counted in Spark."""
+    path = table_path(index_dir, TOMBSTONES)
+    if not isinstance(doc_ids, DataFrame):
+        ids = sorted({int(d) for d in doc_ids})
+        if ids:
+            local_df(spark, [(d,) for d in ids], "doc_id long").write.mode(
+                "append"
+            ).parquet(path)
+        return len(ids)
+    df = doc_ids.select(
+        F.col(doc_ids.columns[0]).cast("long").alias("doc_id")
+    ).distinct()
     n = df.count()
-    df.write.mode("append").parquet(table_path(index_dir, TOMBSTONES))
+    df.write.mode("append").parquet(path)
     return n
 
 
@@ -77,7 +88,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     n_parts = int(seg["n_parts"])
     block_size = int(seg["block_size"])
     dead_df = F.broadcast(
-        spark.createDataFrame([(int(d),) for d in sorted(dead)], "doc_id long")
+        local_relation(spark, [(int(d),) for d in sorted(dead)], "doc_id long")
     )
 
     # decode → drop dead docs → re-encode (streams through the same
@@ -114,16 +125,27 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     postings_live = int(obs.get["postings"])
     bytes_live = int(obs.get["bytes"])
 
-    # shrink doc_stats / doc_map
-    for name in ("doc_stats", "doc_map"):
+    # shrink doc_stats / doc_map; the live docs' count and Σdl are observed
+    # on the doc_stats rewrite (the global stats refresh below needs no
+    # second scan)
+    def shrink(name: str, obs: Observation | None = None) -> None:
         path = table_path(index_dir, name)
-        if not os.path.exists(path):
-            continue
         kept = spark.read.parquet(path).join(dead_df, "doc_id", "left_anti")
+        if obs is not None:
+            kept = kept.observe(
+                obs,
+                F.count("*").alias("n"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
+            )
         tmp = path + "__compact"
         kept.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path)
         os.rename(tmp, path)
+
+    stats_obs = Observation("compact_doc_stats")
+    shrink("doc_stats", stats_obs)
+    if os.path.exists(table_path(index_dir, "doc_map")):
+        shrink("doc_map")
 
     # refresh dictionary df/cf from the live postings (drops empty terms'
     # counts to 0 but keeps their term_ids stable)
@@ -150,24 +172,22 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     os.rename(tmp, old)
 
     # refresh global stats (all other segment columns preserved verbatim);
-    # clear tombstones
-    total = read_table(spark, index_dir, "doc_stats").agg(
-        F.count("*").cast("long"), F.avg("dl")
-    ).collect()[0]
-    update_segments(spark, index_dir, n_docs=int(total[0]), avgdl=float(total[1]))
+    # Σdl / n in Python is correctly rounded, bit-equal to Spark's avg(dl)
+    # over the integer dl column; clear tombstones
+    n_docs = int(stats_obs.get["n"])
+    avgdl = int(stats_obs.get["dl_sum"]) / n_docs if n_docs else None
+    update_segments(spark, index_dir, n_docs=n_docs, avgdl=avgdl)
     # build_lineage is REWRITTEN with post-compaction totals so verify_index
     # reconciles against what is actually on disk (a compacted index must
     # not raise a false corruption alarm against pre-compaction lineage)
-    spark.createDataFrame(
-        [(-1, int(total[0]), postings_live, bytes_live, "compacted")],
-        "part_id int, docs_indexed long, postings_emitted long, "
-        "bytes_compressed long, status string",
+    local_df(
+        spark, [(-1, n_docs, postings_live, bytes_live, "compacted")], LINEAGE_SCHEMA
     ).write.mode("overwrite").parquet(table_path(index_dir, "build_lineage"))
     shutil.rmtree(table_path(index_dir, TOMBSTONES), ignore_errors=True)
     return {
         "docs_removed": len(dead),
         "postings_live": postings_live,
-        "n_docs": int(total[0]),
+        "n_docs": n_docs,
     }
 
 
@@ -195,11 +215,7 @@ def verify_index(spark: SparkSession, index_dir: str) -> dict:
     write time; also fold a content hash over the packed payloads so bit
     rot, not just truncation, is caught. Returns a report dict with
     ``ok``; callers decide whether to rebuild."""
-    lineage = read_table(spark, index_dir, "build_lineage")
-    want = lineage.agg(
-        F.sum("postings_emitted").alias("postings"),
-        F.sum("bytes_compressed").alias("bytes"),
-    ).collect()[0]
+    postings_expected, bytes_expected = lineage_totals(index_dir)
     p = read_table(spark, index_dir, "postings")
     got = p.agg(
         F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
@@ -216,9 +232,9 @@ def verify_index(spark: SparkSession, index_dir: str) -> dict:
         ).alias("content_fold"),
     ).collect()[0]
     report = {
-        "postings_expected": int(want["postings"] or 0),
+        "postings_expected": postings_expected,
         "postings_found": int(got["postings"] or 0),
-        "bytes_expected": int(want["bytes"] or 0),
+        "bytes_expected": bytes_expected,
         "bytes_found": int(got["bytes"] or 0),
         "content_fold": int(got["content_fold"] or 0),
     }

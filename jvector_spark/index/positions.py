@@ -41,6 +41,7 @@ from ..operators.phrase import token_positions
 from .build import _varint_encode_with_lengths
 from .codec import varint_decode
 from .storage import (
+    local_relation,
     read_segments,
     read_table,
     shuffle_n,
@@ -396,7 +397,7 @@ def phrase_count_indexed(
         raise ValueError("phrase needs >= 2 terms")
     occ, tids = _occurrences_for_terms(spark, index_dir, terms)
     if occ is None:
-        return spark.createDataFrame([], "doc_id long, n_phrase long")
+        return local_relation(spark, [], "doc_id long, n_phrase long")
 
     # decode ONCE, co-locate by doc (one narrow shuffle of the queried
     # terms' occurrences), then intersect ALL docs' positional sets in one
@@ -476,7 +477,7 @@ def proximity_count_indexed(
         raise ValueError(f"slop must be >= 1, got {slop}")
     occ, tids = _occurrences_for_terms(spark, index_dir, (t1, t2))
     if occ is None:
-        return spark.createDataFrame([], "doc_id long, n_prox long")
+        return local_relation(spark, [], "doc_id long, n_prox long")
 
     POS_BITS = 21
     tid1, tid2 = int(tids[t1]), int(tids[t2])

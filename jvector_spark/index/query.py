@@ -9,8 +9,9 @@ the pruned and unpruned paths must return byte-identical results (tested),
 unlike the reference's approximate first pass.
 
 Plan shape / scale notes:
-- the query set joins the dictionary broadcast-side; the needed ``part_id``
-  hive-buckets are computed first so the postings scan *directory-prunes*
+- the query set is collected to the driver and looked up in ONE dictionary
+  scan filtered to its terms; the needed ``part_id`` hive-buckets are then
+  computed driver-side so the postings scan *directory-prunes*
   to only the buckets holding the query's terms — the analog of jvector
   seeking only the adjacency regions a search touches;
 - the fused blocks carry tf **and dl** inline, so exact scoring never
@@ -39,7 +40,13 @@ from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from .codec import varint_decode
-from .storage import hash_parts, read_segments, read_table, table_path, tombstone_ids
+from .storage import (
+    hash_parts,
+    local_relation,
+    read_segments,
+    read_table,
+    tombstone_ids,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -109,47 +116,62 @@ def _query_spec(
     global_df: DataFrame | None = None,
     idf: str = "bm25",
 ):
-    """(qd_rows, qid_type, postings): the enriched query relation collected
-    driver-side (tiny — queries × terms), the caller relation's query_id
-    dtype, and the part-id-pruned postings scan.
+    """(qd_rows, qid_type, postings): the enriched query relation as
+    driver-side ``(query_id, term_id, weight, idf, n_salts)`` tuples (tiny —
+    queries × terms), the caller relation's query_id dtype, and the
+    part-id-pruned postings scan.
+
+    The caller's relation is collected once; the dictionary is then read
+    with one known-schema scan filtered to the queried terms, so the only
+    Spark job here is that scan (none when the relation is a local one
+    with no terms). idf is computed in that same scan, with the exact
+    Catalyst expression the relational paths use.
 
     ``global_df`` (term, df) overrides the shard-local document frequencies
     for idf — the sharded-index path computes idf from CORPUS-wide stats so
     per-shard scores are exact final scores (see ``index.sharded``);
-    ``seg['n_docs']`` is likewise already the global count there."""
-    dct = read_table(spark, index_dir, "dictionary").select(
-        "term", "term_id", "df", "n_salts"
-    )
-    if global_df is not None:
-        dct = dct.drop("df").join(global_df.select("term", "df"), "term")
-    # the enriched query relation is tiny (queries × terms): collect it ONCE
-    # and re-emit a local DataFrame for the broadcast join — no persist, so
-    # a long-running query loop pins zero executor storage (round-1 leak)
-    idf_col = (
-        # Robertson-Sparck-Jones (BM25) idf
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(seg["n_docs"])) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
+    ``seg['n_docs']`` is likewise already the global count there. Only the
+    filtered dictionary rows join it."""
+    qid_type = dict(qterms.dtypes).get("query_id", "int")
+    qrows = qterms.select("query_id", "term", "weight").collect()
+    terms = sorted({r.term for r in qrows})
+    by_term = {}
+    if terms:
+        dct = (
+            read_table(spark, index_dir, "dictionary")
+            .filter(F.col("term").isin(terms))
+            .select("term", "term_id", "df", "n_salts")
         )
-        if idf == "bm25"
-        # classic smoothed tf-idf idf (Q11's second exact kernel)
-        else F.log(F.lit(1.0) + F.lit(float(seg["n_docs"])) / F.col("df"))
-    )
-    qd_rows = (
-        qterms.join(dct, "term")
-        .withColumn("idf", idf_col)
-        .select("query_id", "term_id", "weight", "idf", "n_salts")
-        .collect()
-    )
+        if global_df is not None:
+            dct = dct.drop("df").join(global_df.select("term", "df"), "term")
+        idf_col = (
+            # Robertson-Sparck-Jones (BM25) idf
+            F.log(
+                F.lit(1.0)
+                + (F.lit(float(seg["n_docs"])) - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            )
+            if idf == "bm25"
+            # classic smoothed tf-idf idf (Q11's second exact kernel)
+            else F.log(F.lit(1.0) + F.lit(float(seg["n_docs"])) / F.col("df"))
+        )
+        by_term = {
+            r.term: (int(r.term_id), float(r.idf), int(r.n_salts))
+            for r in dct.select("term", "term_id", idf_col.alias("idf"), "n_salts")
+            .collect()
+        }
+    qd_rows = []
+    for r in qrows:
+        if r.term in by_term:
+            tid, idf_v, n_salts = by_term[r.term]
+            qd_rows.append((r.query_id, tid, float(r.weight), idf_v, n_salts))
     # which hive buckets hold these terms? resolved driver-side with the
     # bit-exact python twin of pmod(xxhash64(...)) — no throwaway Spark job
-    pairs = [(int(r.term_id), s) for r in qd_rows for s in range(int(r.n_salts))]
+    pairs = [(tid, s) for _, tid, _, _, n_salts in qd_rows for s in range(n_salts)]
     parts = hash_parts(pairs, int(seg["n_parts"])) if pairs else []
     postings = read_table(spark, index_dir, "postings")
     if parts:
         postings = postings.filter(F.col("part_id").isin(parts))
-    qid_type = dict(qterms.dtypes).get("query_id", "int")
     return qd_rows, qid_type, postings
 
 
@@ -166,14 +188,14 @@ def _prepared_query_blocks(
     qd_rows, qid_type, postings = _query_spec(
         spark, index_dir, qterms, seg, global_df, idf
     )
-    # the enriched query relation is tiny (queries × terms): collect it ONCE
-    # and re-emit a local DataFrame for the broadcast join — no persist, so
-    # a long-running query loop pins zero executor storage (round-1 leak).
+    # the enriched query relation is tiny (queries × terms): re-emitted as
+    # a local relation for the broadcast join — no persist, so a
+    # long-running query loop pins zero executor storage (round-1 leak).
     # Schema derives query_id's type from the caller's relation
-    # (long/string query ids must round-trip unchanged); weight is coerced
-    # to double so integer weights survive type verification
-    qd = spark.createDataFrame(
-        [(r.query_id, r.term_id, float(r.weight), float(r.idf)) for r in qd_rows],
+    # (long/string query ids must round-trip unchanged)
+    qd = local_relation(
+        spark,
+        [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _ in qd_rows],
         f"query_id {qid_type}, term_id long, weight double, idf double",
     )
     return postings.join(F.broadcast(qd), "term_id")
@@ -187,7 +209,7 @@ def _mask_tombstones(spark: SparkSession, index_dir: str, decoded: DataFrame) ->
     if not dead:
         return decoded
     dead_df = F.broadcast(
-        spark.createDataFrame([(int(x),) for x in sorted(dead)], "doc_id long")
+        local_relation(spark, [(int(x),) for x in sorted(dead)], "doc_id long")
     )
     return decoded.join(dead_df, "doc_id", "left_anti")
 
@@ -647,18 +669,18 @@ def bm25_topk_indexed(
     # identical to the per-query grouping (equivalence pytest-enforced).
     qd_rows, _, postings = _query_spec(spark, index_dir, qterms, seg, global_df)
     qspec: dict = {}
-    for r in qd_rows:
+    for qid, tid, weight, idf_v, _ in qd_rows:
         # duplicate (query, term) rows sum their weights — same math as the
         # per-query path scoring each duplicate block row separately
-        tmap = qspec.setdefault(r.query_id, {})
-        w, i_ = tmap.get(int(r.term_id), (0.0, float(r.idf)))
-        tmap[int(r.term_id)] = (w + float(r.weight), i_)
+        tmap = qspec.setdefault(qid, {})
+        w, i_ = tmap.get(tid, (0.0, idf_v))
+        tmap[tid] = (w + weight, i_)
     qids = sorted(qspec)
     if not qids:
         # no query term matched the dictionary (OOV batch, or a shard whose
         # local vocabulary lacks every term): same empty result as the
         # per-query grouping — never repartition(0), which raises
-        return spark.createDataFrame([], schema)
+        return local_relation(spark, [], schema)
     if query_buckets is None:
         # bucket count sized by the QUERY BATCH, never by parallelism: the
         # shuffled volume is Σ_buckets |blocks(bucket's terms)| — hot Zipf
@@ -681,7 +703,8 @@ def bm25_topk_indexed(
         )
         bucket_queries.setdefault(bkt, []).append((int(qid), arrs))
         tb_pairs.update((t, bkt) for t in spec)
-    tb = spark.createDataFrame(
+    tb = local_relation(
+        spark,
         [(int(t), int(bkt)) for t, bkt in sorted(tb_pairs)],
         "term_id long, bucket int",
     )

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .query import bm25_topk_indexed
-from .storage import read_segments, read_table
+from .storage import local_df, read_local, read_segments, read_table
 
 GLOBAL_DIR = "_global"
 
@@ -97,7 +97,8 @@ def merge_shard_stats(spark: SparkSession, shard_dirs: list[str]) -> dict:
     )
     out = os.path.join(shard_dirs[0], GLOBAL_DIR)
     gdct.write.mode("overwrite").parquet(os.path.join(out, "dictionary"))
-    spark.createDataFrame(
+    local_df(
+        spark,
         [(n_docs, float(avgdl), len(shard_dirs))],
         "n_docs long, avgdl double, n_shards int",
     ).write.mode("overwrite").parquet(os.path.join(out, "stats"))
@@ -106,9 +107,9 @@ def merge_shard_stats(spark: SparkSession, shard_dirs: list[str]) -> dict:
 
 def read_global_stats(spark: SparkSession, shard_dirs: list[str]) -> tuple[dict, DataFrame]:
     out = os.path.join(shard_dirs[0], GLOBAL_DIR)
-    row = spark.read.parquet(os.path.join(out, "stats")).collect()[0]
+    row = read_local(out, "stats").slice(0, 1).to_pylist()[0]
     gdf = spark.read.parquet(os.path.join(out, "dictionary"))
-    return {"n_docs": int(row.n_docs), "avgdl": float(row.avgdl)}, gdf
+    return {"n_docs": int(row["n_docs"]), "avgdl": float(row["avgdl"])}, gdf
 
 
 def bm25_topk_sharded(

@@ -33,14 +33,30 @@ jvector-base/.../graph/disk/OnDiskGraphIndex.java:72, CommonHeader.java:59-152):
 bucket of (term_id, salt)) so query-time term lookups prune directories —
 the analog of jvector only seeking the adjacency regions the search
 touches.
+
+Driver-sized tables go through Arrow on the driver; Spark jobs are only for
+corpus-sized tables. The segments row, the tombstone set and the lineage
+rows are read with pyarrow straight from the index directory
+(:func:`read_local`), and every relation built from driver-local rows
+(query relations, bucket and offset maps, metadata rows to write) is a
+pandas→Arrow local relation (:func:`local_relation`), which Spark scans
+without a job or a Python worker. Index directories are therefore
+driver-visible paths — the same assumption the ``os.rename`` /
+``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
+corpus-sized tables (postings, dictionary, doc_stats) are read with their
+known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
+schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # v2: posting blocks carry (max_tf, min_dl); the BM25 block upper bound is
 # derived at query time from current global stats, so incremental extends /
@@ -49,6 +65,26 @@ from pyspark.sql import functions as F
 FORMAT_VERSION = 2
 
 TABLES = ("segments", "dictionary", "postings", "doc_stats", "doc_map", "build_lineage")
+
+POSTINGS_SCHEMA = (
+    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
+    "max_tf long, min_dl long, doc_ids_packed binary, "
+    "tfs_packed binary, dls_packed binary"
+)
+
+# the schemas the engine writes its corpus-sized tables with, as Spark would
+# infer them back (postings' hive partition column last); passing them to
+# the reader skips the footer-sampling job an inferred read plans
+TABLE_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA + ", part_id int",
+    "dictionary": "term string, term_id long, df long, cf long, n_salts int",
+    "doc_stats": "doc_id long, dl long",
+}
+
+LINEAGE_SCHEMA = (
+    "part_id int, docs_indexed long, postings_emitted long, "
+    "bytes_compressed long, status string"
+)
 
 
 def table_path(index_dir: str, name: str) -> str:
@@ -112,25 +148,41 @@ def _ddl_names(schema: str) -> list[str]:
     return names
 
 
-def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """One-partition DataFrame from driver-local rows, converted via Arrow.
+def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """DataFrame over driver-local rows, converted via pandas→Arrow.
 
-    ``createDataFrame(list)`` splits local data into ``defaultParallelism``
-    pickled slices, and a ``coalesce(1)`` over that local-relation parent
-    re-serializes the whole relation through a Python-worker task
-    (measured ~4 s per job at local[32], even for 64 rows). The pandas/
-    Arrow conversion happens driver-side with no Python worker at all, and
-    ``repartition(1)`` gives writers their single output file for well
-    under a second."""
+    With ``spark.sql.execution.arrow.pyspark.enabled`` (``session.get_spark``
+    sets it), Spark turns an Arrow payload below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
+    into a ``LocalRelation``: collecting or broadcasting it runs no job,
+    and nothing crosses into a Python worker. ``createDataFrame(list)`` instead pickles the rows into
+    ``defaultParallelism`` slices that every scan unpickles in Python-worker
+    tasks. Raises ``ValueError`` (before Spark is touched) when a row's
+    arity differs from the schema's column count."""
     import pandas as pd
 
     names = _ddl_names(schema)
+    for i, row in enumerate(rows):
+        if len(row) != len(names):
+            raise ValueError(
+                f"row {i} has {len(row)} values for {len(names)} columns "
+                f"({', '.join(names)})"
+            )
     pdf = (
         pd.DataFrame(dict(zip(names, map(list, zip(*rows)))))
         if rows
         else pd.DataFrame({n: [] for n in names})
     )
-    return spark.createDataFrame(pdf, schema).repartition(1)
+    return spark.createDataFrame(pdf, schema)
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """:func:`local_relation` as one partition, for writers: the table gets
+    a single output file from a single one-task job (``coalesce(1)`` over a
+    local relation is a JVM-side narrow read; over a pickled
+    ``createDataFrame(list)`` it re-serialized every row through a Python
+    worker, ~4 s per job at local[32])."""
+    return local_relation(spark, rows, schema).coalesce(1)
 
 
 # Spark's XxHash64 primes (sql/catalyst XXH64) — used to resolve
@@ -200,12 +252,38 @@ def write_table(df: DataFrame, index_dir: str, name: str, mode: str = "overwrite
 
 
 def read_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(index_dir, name))
+    """Spark scan of a table; engine-owned tables use their known schema."""
+    reader = spark.read
+    if name in TABLE_SCHEMAS:
+        reader = reader.schema(TABLE_SCHEMAS[name])
+    return reader.parquet(table_path(index_dir, name))
+
+
+def read_local(index_dir: str, name: str) -> pa.Table | None:
+    """A driver-sized table read with pyarrow on the driver (no Spark job),
+    or None when the directory is absent or holds no data file. Files
+    starting with ``_`` or ``.`` (``_SUCCESS``, checksums) are skipped, as
+    Spark's reader skips them."""
+    path = table_path(index_dir, name)
+    if not os.path.isdir(path):
+        return None
+    files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+    if not files:
+        return None
+    return pa.concat_tables(pq.read_table(os.path.join(path, f)) for f in files)
+
+
+def _segments(index_dir: str) -> tuple[pa.Table, dict]:
+    tbl = read_local(index_dir, "segments")
+    if tbl is None or tbl.num_rows == 0:
+        raise FileNotFoundError(f"no segments row under {index_dir}")
+    return tbl, tbl.slice(0, 1).to_pylist()[0]
 
 
 def read_segments(spark: SparkSession, index_dir: str) -> dict:
-    """The single segments row as a plain dict (header metadata)."""
-    return read_table(spark, index_dir, "segments").collect()[0].asDict()
+    """The single segments row as a plain dict (header metadata), with the
+    Python types Spark's ``Row.asDict`` would give."""
+    return _segments(index_dir)[1]
 
 
 def update_segments(spark: SparkSession, index_dir: str, **updates) -> dict:
@@ -215,15 +293,16 @@ def update_segments(spark: SparkSession, index_dir: str, **updates) -> dict:
     parameter refresh). This is the only sanctioned way to rewrite
     ``segments``: re-emitting a fixed column list would silently strip a
     newer layout's columns and corrupt query dispatch."""
-    tbl = read_table(spark, index_dir, "segments")
-    schema = tbl.schema
-    seg = tbl.collect()[0].asDict()
+    tbl, seg = _segments(index_dir)
     unknown = set(updates) - set(seg)
     if unknown:
         raise KeyError(f"unknown segments column(s): {sorted(unknown)}")
     seg.update(updates)
-    row = tuple(seg[f.name] for f in schema.fields)
-    write_table(spark.createDataFrame([row], schema), index_dir, "segments")
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in from_arrow_schema(tbl.schema)
+    )
+    row = tuple(seg[name] for name in tbl.column_names)
+    write_table(local_df(spark, [row], schema), index_dir, "segments")
     return seg
 
 
@@ -233,11 +312,22 @@ def tombstone_ids(spark: SparkSession, index_dir: str) -> set[int] | None:
     same way the reference keeps deletions as an in-memory bitset
     (OnHeapGraphIndex deletedNodes; marked via GraphIndexBuilder.java:681-683).
     A set too large to broadcast is the signal to compact."""
-    path = table_path(index_dir, "tombstones")
-    if not os.path.exists(path):
+    tbl = read_local(index_dir, "tombstones")
+    if tbl is None:
         return None
-    got = {r.doc_id for r in spark.read.parquet(path).distinct().collect()}
-    return got or None
+    return set(pc.unique(tbl["doc_id"]).to_pylist()) or None
+
+
+def lineage_totals(index_dir: str) -> tuple[int, int]:
+    """(postings_emitted, bytes_compressed) summed over the build_lineage
+    rows; (0, 0) when there are none."""
+    tbl = read_local(index_dir, "build_lineage")
+    if tbl is None:
+        return 0, 0
+    return (
+        int(pc.sum(tbl["postings_emitted"]).as_py() or 0),
+        int(pc.sum(tbl["bytes_compressed"]).as_py() or 0),
+    )
 
 
 def block_meta(spark: SparkSession, index_dir: str) -> DataFrame:

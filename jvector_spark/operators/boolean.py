@@ -11,13 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..index.storage import local_relation
 from .text_stats import term_freq
 
 
 def _matches(corpus: DataFrame, terms: list[str], text_col: str, id_col: str) -> DataFrame:
     tf = term_freq(corpus, text_col, id_col)
-    terms_df = corpus.sparkSession.createDataFrame(
-        [(t,) for t in sorted(set(terms))], "term string"
+    terms_df = local_relation(
+        corpus.sparkSession, [(t,) for t in sorted(set(terms))], "term string"
     )
     return tf.join(F.broadcast(terms_df), "term")
 
@@ -56,7 +57,7 @@ def _matches_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:
         "term_id", "n_salts"
     ).collect()
     if not rows:
-        return spark.createDataFrame([], "term_id long, doc_id long, tf long, dl long")
+        return local_relation(spark, [], "term_id long, doc_id long, tf long, dl long")
     tids = [int(r.term_id) for r in rows]
     postings = read_table(spark, index_dir, "postings")
     if seg.get("layout") != "doc":

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..index.storage import local_relation
+
 
 def assign_dense_ids(
     df: DataFrame,
@@ -93,10 +95,11 @@ def assign_dense_ids(
         acc += counts[pid]
     if n_out is not None:
         n_out.append(acc)
-    spark = df.sparkSession
     offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
+        local_relation(
+            df.sparkSession,
+            [(int(p), int(o)) for p, o in offsets.items()],
+            "_pid int, _offset long",
         )
     )
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])

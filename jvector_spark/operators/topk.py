@@ -21,11 +21,14 @@ Plan shape (scale notes):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..functions.bm25 import bm25_term_score_col, idf_col
+from ..index.storage import local_relation
 from .text_stats import doc_stats, term_freq, with_corpus_stats
 
 
@@ -34,16 +37,17 @@ def queries_df(spark, query_rows, weight_dups: bool = True) -> DataFrame:
 
     ``query_rows``: iterable of (query_id, list-of-terms). Duplicate terms in
     one query become a weight (bag semantics — each occurrence contributes a
-    full BM25 term score, matching fixtures.bm25_oracle).
+    full BM25 term score, matching fixtures.bm25_oracle). The weights are
+    counted on the driver and the relation is a local Arrow one, so reading
+    it back costs no Spark job.
     """
-    rows = []
-    for qid, terms in query_rows:
-        for t in terms:
-            rows.append((int(qid), t))
-    q = spark.createDataFrame(rows, "query_id int, term string")
-    if weight_dups:
-        return q.groupBy("query_id", "term").agg(F.count("*").cast("double").alias("weight"))
-    return q.withColumn("weight", F.lit(1.0))
+    pairs = [(int(qid), t) for qid, terms in query_rows for t in terms]
+    rows = (
+        [(*pair, float(n)) for pair, n in Counter(pairs).items()]
+        if weight_dups
+        else [(*pair, 1.0) for pair in pairs]
+    )
+    return local_relation(spark, rows, "query_id int, term string, weight double")
 
 
 def bm25_contributions(

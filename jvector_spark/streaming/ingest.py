@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..index.storage import local_df
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -103,7 +105,8 @@ def _record_batch(
     metrics: dict,
     status: str = "complete",
 ) -> None:
-    spark.createDataFrame(
+    local_df(
+        spark,
         [
             (
                 int(batch_id),

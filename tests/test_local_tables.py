@@ -1,0 +1,201 @@
+"""Driver-sized tables go through Arrow on the driver: the pyarrow readers
+must return exactly what a Spark read returns, the serve and delete paths
+must stay inside their Spark-job budgets, and extend/compact must keep the
+segments row's global stats equal to a full doc_stats scan."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs ``fn`` ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy(src: str, tmp_path) -> str:
+    dst = str(tmp_path / "idx")
+    shutil.copytree(src, dst)
+    return dst
+
+
+@pytest.fixture(scope="module")
+def term_index(tmp_path_factory, corpus):
+    from jvector_spark.index.build import build_index
+
+    d = str(tmp_path_factory.mktemp("term_idx"))
+    build_index(
+        corpus.filter(F.col("doc_id") < 800), d, n_parts=2,
+        doc_map_cols=["conv_id", "turn_idx"],
+    )
+    return d
+
+
+@pytest.fixture(scope="module")
+def doc_index(tmp_path_factory, corpus):
+    from jvector_spark.index.docpart import build_doc_partitioned
+
+    d = str(tmp_path_factory.mktemp("doc_idx"))
+    build_doc_partitioned(corpus.filter(F.col("doc_id") < 800), d, n_buckets=4)
+    return d
+
+
+def test_local_relation_rejects_row_arity_mismatch():
+    # the check runs before Spark is touched, so no session is needed
+    from jvector_spark.index.storage import local_df, local_relation
+
+    schema = "part_id int, n long, tags array<string>"
+    with pytest.raises(ValueError, match="row 1 has 2 values for 3 columns"):
+        local_relation(None, [(1, 2, ["a"]), (3, 4)], schema)
+    with pytest.raises(ValueError, match="row 0 has 4 values for 3 columns"):
+        local_df(None, [(1, 2, ["a"], 5)], schema)
+
+
+def _spark_segments(spark, index_dir: str) -> dict:
+    return spark.read.parquet(os.path.join(index_dir, "segments")).collect()[0].asDict()
+
+
+def _typed(d: dict) -> dict:
+    return {k: (type(v), v) for k, v in d.items()}
+
+
+@pytest.mark.parametrize("layout", ["term", "doc"])
+def test_segments_reader_matches_spark(spark, term_index, doc_index, tmp_path, layout):
+    from jvector_spark.index.storage import read_segments, update_segments
+
+    d = _copy(term_index if layout == "term" else doc_index, tmp_path)
+    seg = read_segments(spark, d)
+    assert _typed(seg) == _typed(_spark_segments(spark, d))
+    assert list(seg) == list(_spark_segments(spark, d))
+
+    update_segments(spark, d, k1=1.5, avgdl=seg["avgdl"] + 0.25)
+    got = read_segments(spark, d)
+    assert _typed(got) == _typed(_spark_segments(spark, d))
+    assert got == {**seg, "k1": 1.5, "avgdl": seg["avgdl"] + 0.25}
+    if layout == "doc":
+        assert got["layout"] == "doc"
+        assert got["bucket_width"] == seg["bucket_width"]
+
+
+def _by_name(schema) -> list:
+    return sorted(schema.fields, key=lambda f: f.name)
+
+
+@pytest.mark.parametrize("layout", ["term", "doc"])
+def test_known_table_schemas_match_inferred(spark, term_index, doc_index, layout):
+    from jvector_spark.index.storage import TABLE_SCHEMAS, read_table
+
+    # columns are matched by name: the build paths do not all write the
+    # dictionary's columns in one order, and the known schema fixes the
+    # scan's order
+    d = term_index if layout == "term" else doc_index
+    for name in TABLE_SCHEMAS:
+        inferred = spark.read.parquet(os.path.join(d, name))
+        known = read_table(spark, d, name)
+        assert _by_name(known.schema) == _by_name(inferred.schema), name
+        want = inferred.select(*known.columns).collect()
+        assert sorted(known.collect()) == sorted(want), name
+
+
+def test_tombstone_reader_matches_spark_distinct(spark, term_index, tmp_path):
+    from jvector_spark.index.maintenance import delete_docs
+    from jvector_spark.index.storage import tombstone_ids
+
+    d = _copy(term_index, tmp_path)
+    tomb = os.path.join(d, "tombstones")
+    assert tombstone_ids(spark, d) is None  # absent
+    os.makedirs(tomb)
+    open(os.path.join(tomb, "_SUCCESS"), "w").close()
+    assert tombstone_ids(spark, d) is None  # present but holding no data file
+    shutil.rmtree(tomb)
+
+    assert delete_docs(spark, d, [5, 3, 3, 9]) == 3
+    assert delete_docs(spark, d, iter([9, 11, 5])) == 3
+    assert delete_docs(spark, d, spark.createDataFrame([(11,), (12,), (12,)], "x long")) == 2
+    want = {r.doc_id for r in spark.read.parquet(tomb).distinct().collect()}
+    got = tombstone_ids(spark, d)
+    assert got == want == {3, 5, 9, 11, 12}
+    assert all(type(x) is int for x in got)
+
+
+def test_serve_and_delete_job_budgets(spark, term_index, tmp_path):
+    from jvector_spark.index.maintenance import delete_docs
+    from jvector_spark.index.query import bm25_topk_indexed
+    from jvector_spark.index.storage import read_segments, tombstone_ids
+    from jvector_spark.operators.topk import queries_df
+
+    d = _copy(term_index, tmp_path)
+    n, jobs = _jobs(spark, lambda: delete_docs(spark, d, [7, 2, 7, 40]))
+    assert (n, jobs) == (3, 1)
+    _, jobs = _jobs(spark, lambda: read_segments(spark, d))
+    assert jobs == 0
+    dead, jobs = _jobs(spark, lambda: tombstone_ids(spark, d))
+    assert (dead, jobs) == ({2, 7, 40}, 0)
+
+    terms = [
+        r.term
+        for r in spark.read.parquet(os.path.join(d, "dictionary"))
+        .orderBy(F.desc("df")).limit(2).collect()
+    ]
+    rows, jobs = _jobs(
+        spark,
+        lambda: bm25_topk_indexed(
+            spark, d, queries_df(spark, [(0, terms)]), k=10, prune=True
+        ).collect(),
+    )
+    assert len(rows) == 10 and not {r.doc_id for r in rows} & dead
+    assert jobs <= 6, f"single-query read ran {jobs} Spark jobs"
+
+
+def _doc_stats_totals(spark, index_dir: str) -> tuple[int, float]:
+    row = spark.read.parquet(os.path.join(index_dir, "doc_stats")).agg(
+        F.count("*").cast("long"), F.avg("dl")
+    ).collect()[0]
+    return int(row[0]), row[1]
+
+
+def test_extend_and_compact_keep_exact_global_stats(spark, corpus, term_index, tmp_path):
+    from jvector_spark.index.extend import extend_index
+    from jvector_spark.index.maintenance import compact_index, delete_docs
+    from jvector_spark.index.storage import read_segments
+
+    d = _copy(term_index, tmp_path)
+
+    def check():
+        seg = read_segments(spark, d)
+        n_docs, avgdl = _doc_stats_totals(spark, d)
+        assert seg["n_docs"] == n_docs
+        assert seg["avgdl"] == avgdl  # bit for bit, not approx
+
+    check()
+    # raw rows, ids assigned by the natural key order
+    raw = corpus.filter((F.col("doc_id") >= 800) & (F.col("doc_id") < 1100)).drop("doc_id")
+    m = extend_index(raw, d, order_cols=["conv_id", "turn_idx"])
+    assert m["docs_added"] == 300
+    check()
+    # caller-provided doc_ids, one row repeated: doc_stats keeps both rows,
+    # and the segments row must count both like count(*) does
+    n_old = read_segments(spark, d)["n_docs"]
+    delta = corpus.filter((F.col("doc_id") >= 1100) & (F.col("doc_id") < 1250)).withColumn(
+        "doc_id", F.col("doc_id") - F.lit(1100) + F.lit(n_old)
+    )
+    delta = delta.unionByName(delta.filter(F.col("doc_id") == n_old + 3))
+    m = extend_index(delta, d, order_cols=None)
+    assert m["docs_added"] == 151
+    check()
+    delete_docs(spark, d, [0, 1, 850, n_old + 3])
+    compact_index(spark, d)
+    check()
