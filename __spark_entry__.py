@@ -221,7 +221,9 @@ def _vec0_deleted(spark: SparkSession) -> DataFrame:
     """vec_id 0 is the query vector of the single-query ANN entries — the
     persisted structures cover the FULL table, so the entries mask it via
     the M1 tombstone plumbing instead of re-encoding a filtered corpus."""
-    return spark.createDataFrame([(0,)], "vec_id long")
+    from jvector_spark.index.storage import local_relation
+
+    return local_relation(spark, [(0,)], "vec_id long")
 
 
 def _extended_index_for(spark: SparkSession, sf_dir: str) -> str:

@@ -46,6 +46,11 @@ driver-visible paths — the same assumption the ``os.rename`` /
 corpus-sized tables (postings, dictionary, doc_stats) are read with their
 known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
 schema-inference job.
+
+The persisted vector tiers (``index.vectors``) follow the same rule: the
+manifest, SQ8 params, PQ codebooks and vector tombstones are read with
+:func:`read_local`, and the corpus-sized codes table is opened with the
+schema in its own footer (:func:`local_schema`).
 """
 
 from __future__ import annotations
@@ -57,6 +62,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 # v2: posting blocks carry (max_tf, min_dl); the BM25 block upper bound is
 # derived at query time from current global stats, so incremental extends /
@@ -154,8 +160,9 @@ def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     With ``spark.sql.execution.arrow.pyspark.enabled`` (``session.get_spark``
     sets it), Spark turns an Arrow payload below
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
-    into a ``LocalRelation``: collecting or broadcasting it runs no job,
-    and nothing crosses into a Python worker. ``createDataFrame(list)`` instead pickles the rows into
+    into a ``LocalRelation``: collecting it runs no job (broadcasting it
+    still runs one), and nothing crosses into a Python worker.
+    ``createDataFrame(list)`` instead pickles the rows into
     ``defaultParallelism`` slices that every scan unpickles in Python-worker
     tasks. Raises ``ValueError`` (before Spark is touched) when a row's
     arity differs from the schema's column count."""
@@ -259,18 +266,35 @@ def read_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
     return reader.parquet(table_path(index_dir, name))
 
 
-def read_local(index_dir: str, name: str) -> pa.Table | None:
-    """A driver-sized table read with pyarrow on the driver (no Spark job),
-    or None when the directory is absent or holds no data file. Files
-    starting with ``_`` or ``.`` (``_SUCCESS``, checksums) are skipped, as
-    Spark's reader skips them."""
+def _data_files(index_dir: str, name: str) -> list[str]:
+    """A table's data files, sorted; files starting with ``_`` or ``.``
+    (``_SUCCESS``, checksums) are skipped, as Spark's reader skips them."""
     path = table_path(index_dir, name)
     if not os.path.isdir(path):
-        return None
-    files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        return []
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if not f.startswith(("_", "."))
+    ]
+
+
+def read_local(index_dir: str, name: str) -> pa.Table | None:
+    """A driver-sized table read with pyarrow on the driver (no Spark job),
+    or None when the directory is absent or holds no data file."""
+    files = _data_files(index_dir, name)
     if not files:
         return None
-    return pa.concat_tables(pq.read_table(os.path.join(path, f)) for f in files)
+    return pa.concat_tables(pq.read_table(f) for f in files)
+
+
+def local_schema(index_dir: str, name: str) -> StructType | None:
+    """The Spark schema of a table, from its first data file's footer
+    (pyarrow on the driver), or None when it holds no data file. Passing
+    it to ``spark.read.schema`` skips the schema-inference job, and it is
+    right for whatever id column name the table was written with."""
+    files = _data_files(index_dir, name)
+    return from_arrow_schema(pq.read_schema(files[0])) if files else None
 
 
 def _segments(index_dir: str) -> tuple[pa.Table, dict]:

@@ -26,6 +26,14 @@ conventions as the text index's format v2 and the IVF structure):
 Queries load the k·dsub-sized codebooks driver-side (broadcast-sized, like
 the text dictionary) and SCAN ``codes/`` — the per-query cost at 100 TB is
 one compressed columnar scan, never a retrain/re-encode.
+
+Driver-sized tables go through Arrow on the driver (the ``index.storage``
+rule): the manifest, params, codebooks and tombstones are read with
+pyarrow and run no Spark job, and ``codes/`` is opened with the schema in
+its own footer, so no schema-inference job is planned either. Every tier
+then serves through the one two-phase path
+(``operators.similarity.two_phase_topk``): a single-query call runs two
+Spark jobs, the codes scan and the fetch of the candidates' vectors.
 """
 
 from __future__ import annotations
@@ -33,10 +41,12 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .storage import local_df
+from .storage import local_df, local_relation, local_schema, read_local
 
 FORMAT_VERSION = 1
 
@@ -61,9 +71,17 @@ def _write_manifest(spark: SparkSession, index_dir: str, kind: str, **fields) ->
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "manifest"))
 
 
+def _read_required(index_dir: str, name: str) -> pa.Table:
+    tbl = read_local(index_dir, name)
+    if tbl is None or tbl.num_rows == 0:
+        raise FileNotFoundError(f"no {name} rows under {index_dir}")
+    return tbl
+
+
 def read_manifest(spark: SparkSession, index_dir: str) -> dict:
-    r = spark.read.parquet(os.path.join(index_dir, "manifest")).collect()[0]
-    d = r.asDict()
+    """The manifest row as a plain dict (the Python types ``Row.asDict``
+    gives); raises on a format version newer than this engine."""
+    d = _read_required(index_dir, "manifest").slice(0, 1).to_pylist()[0]
     if d["version"] > FORMAT_VERSION:
         raise ValueError(
             f"vector index at {index_dir} has format version {d['version']}; "
@@ -73,23 +91,34 @@ def read_manifest(spark: SparkSession, index_dir: str) -> dict:
 
 
 def read_codes(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "codes"))
+    """The corpus-sized codes table, opened with its footer's schema."""
+    return spark.read.schema(local_schema(index_dir, "codes")).parquet(
+        os.path.join(index_dir, "codes")
+    )
 
 
 def vector_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    path = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(path) or not os.listdir(path):
+    """The distinct tombstoned ids as a local relation (read with pyarrow;
+    no Spark job), or None when there are none."""
+    tbl = read_local(index_dir, "tombstones")
+    if tbl is None or tbl.num_rows == 0:
         return None
-    return spark.read.parquet(path)
+    name = tbl.column_names[0]
+    ids = sorted(pc.unique(tbl[name]).to_pylist())
+    return local_relation(spark, [(i,) for i in ids], f"{name} long")
 
 
 def vector_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_id") -> None:
     """Tombstone vectors in any persisted compressed structure (M1): ids
     land in ``tombstones/`` and every indexed query masks them off the
-    codes scan. Physical reclamation = rebuild/refine over live rows."""
-    spark.createDataFrame(
-        [(int(i),) for i in ids], f"{id_col} long"
-    ).write.mode("append").parquet(os.path.join(index_dir, "tombstones"))
+    codes scan. Physical reclamation = rebuild/refine over live rows. The
+    ids are deduplicated on the driver and appended by one one-file write
+    job."""
+    ids = sorted({int(i) for i in ids})
+    if ids:
+        local_df(spark, [(i,) for i in ids], f"{id_col} long").write.mode(
+            "append"
+        ).parquet(os.path.join(index_dir, "tombstones"))
 
 
 # ---------------------------------------------------------------------------
@@ -147,12 +176,10 @@ def pq_build(
 
 def pq_read_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
     man = read_manifest(spark, index_dir)
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "codebooks"))
-        .orderBy("subspace", "cluster")
-        .collect()
+    tbl = _read_required(index_dir, "codebooks").sort_by(
+        [("subspace", "ascending"), ("cluster", "ascending")]
     )
-    books = np.array([list(r.centroid) for r in rows], dtype=np.float64)
+    books = pc.list_flatten(tbl["centroid"]).to_numpy().astype(np.float64)
     return books.reshape(man["m"], man["k"], man["dsub"])
 
 
@@ -272,7 +299,8 @@ def ann_topk_pq_indexed(
     """Two-phase PQ top-k against the PERSISTED structure: broadcast-sized
     codebooks load driver-side, the codes table scans off parquet (no
     retrain/re-encode anywhere on the query path), tombstones mask the
-    scan (M1)."""
+    scan (M1). Runs the scan eagerly — two Spark jobs — and returns
+    (rank, id, cos) as a local relation."""
     from ..operators.pq import ann_topk_pq
 
     books, codes = pq_load(spark, index_dir)
@@ -280,24 +308,6 @@ def ann_topk_pq_indexed(
         embeddings, query_vec, k=k, rerank=rerank, codes=codes,
         codebooks=books, deleted=vector_tombstones(spark, index_dir),
         id_col=id_col, vec_col=vec_col,
-    )
-
-
-def ann_topk_pq_batch_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    **kw,
-) -> DataFrame:
-    from ..operators.pq import ann_topk_pq_batch
-
-    books, codes = pq_load(spark, index_dir)
-    return ann_topk_pq_batch(
-        embeddings, queries, k=k, rerank=rerank, codes=codes, codebooks=books,
-        deleted=vector_tombstones(spark, index_dir), **kw,
     )
 
 
@@ -331,10 +341,10 @@ def sq8_build(
 
 
 def sq8_read_params(spark: SparkSession, index_dir: str) -> tuple[np.ndarray, np.ndarray]:
-    rows = spark.read.parquet(os.path.join(index_dir, "params")).orderBy("i").collect()
+    tbl = _read_required(index_dir, "params").sort_by("i")
     return (
-        np.array([r.mn for r in rows], dtype=np.float64),
-        np.array([r.scale for r in rows], dtype=np.float64),
+        tbl["mn"].to_numpy().astype(np.float64),
+        tbl["scale"].to_numpy().astype(np.float64),
     )
 
 
@@ -417,6 +427,9 @@ def ann_topk_sq8_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
+    """Two-phase SQ8 top-k against the persisted params + codes,
+    tombstones masked off the scan. Runs the scan eagerly — two Spark
+    jobs — and returns (rank, id, cos) as a local relation."""
     from ..operators.similarity import ann_topk_sq8
 
     params, codes = sq8_load(spark, index_dir)
@@ -491,6 +504,9 @@ def ann_topk_bq_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
+    """Two-phase BQ top-k against the persisted sign-bit codes,
+    tombstones masked off the scan. Runs the scan eagerly — two Spark
+    jobs — and returns (rank, id, cos) as a local relation."""
     from ..operators.bq import ann_topk_bq
 
     _, codes = bq_load(spark, index_dir)
@@ -572,6 +588,9 @@ def ann_topk_nvq_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
+    """Two-phase NVQ top-k against the persisted codes, tombstones masked
+    off the scan. Runs the scan eagerly — two Spark jobs — and returns
+    (rank, id, cos) as a local relation."""
     from ..operators.nvq import ann_topk_nvq
 
     bits, codes = nvq_load(spark, index_dir)
@@ -579,24 +598,6 @@ def ann_topk_nvq_indexed(
         embeddings, query_vec, k=k, rerank=rerank, codes=codes, bits=bits,
         deleted=vector_tombstones(spark, index_dir),
         id_col=id_col, vec_col=vec_col,
-    )
-
-
-def ann_topk_nvq_batch_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    **kw,
-) -> DataFrame:
-    from ..operators.nvq import ann_topk_nvq_batch
-
-    bits, codes = nvq_load(spark, index_dir)
-    return ann_topk_nvq_batch(
-        embeddings, queries, k=k, rerank=rerank, codes=codes, bits=bits,
-        deleted=vector_tombstones(spark, index_dir), **kw,
     )
 
 
@@ -619,36 +620,14 @@ def ann_topk_pq_nvq_indexed(
     budget (m B + ~dim B per vector vs 4·dim B raw)."""
     from ..operators.nvq import nvq_rerank
     from ..operators.pq import PQ_RERANK_FACTOR, PQ_RERANK_FLOOR, pq_approx_scores
+    from ..operators.similarity import ann_candidates
 
     if rerank is None:
         rerank = max(PQ_RERANK_FLOOR, PQ_RERANK_FACTOR * k)
     books, pq_codes = pq_load(spark, pq_dir)
     bits, nvq_codes = nvq_load(spark, nvq_dir)
-    approx = pq_approx_scores(pq_codes, books, query_vec, id_col)
-    dead = vector_tombstones(spark, pq_dir)
-    if dead is not None:
-        approx = approx.join(F.broadcast(dead.select(id_col)), id_col, "left_anti")
-    cand_ids = (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
+    cand_ids = ann_candidates(
+        pq_approx_scores(pq_codes, books, query_vec, id_col), rerank,
+        vector_tombstones(spark, pq_dir), id_col,
     )
     return nvq_rerank(nvq_codes, cand_ids, query_vec, k=k, bits=bits, id_col=id_col)
-
-
-def ann_topk_sq8_batch_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    **kw,
-) -> DataFrame:
-    from ..operators.similarity import ann_topk_sq8_batch
-
-    params, codes = sq8_load(spark, index_dir)
-    return ann_topk_sq8_batch(
-        embeddings, queries, k=k, rerank=rerank, codes=codes, params=params,
-        deleted=vector_tombstones(spark, index_dir), **kw,
-    )

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine_topk, exact_rerank_batch
+from .similarity import exact_rerank_batch, two_phase_topk
 
 BQ_RERANK_FACTOR = 16
 BQ_RERANK_FLOOR = 512
@@ -116,24 +116,18 @@ def ann_topk_bq(
     ``cosine_topk`` on the test fixtures (same oracle as the exact scan,
     the TestCompressedVectors.java:231 fast-vs-slow idiom at 32× scan-byte
     reduction). ``codes`` accepts the persisted structure
-    (``index.vectors.bq_build``); ``deleted`` is the M1 tombstone mask."""
+    (``index.vectors.bq_build``); ``deleted`` is the M1 tombstone mask.
+    The call runs the scan eagerly and returns a local relation
+    (:func:`two_phase_topk`)."""
     if rerank is None:
         rerank = max(BQ_RERANK_FLOOR, BQ_RERANK_FACTOR * k)
     if codes is None:
         codes = bq_encode(embeddings, id_col, vec_col)
     dim = len(query_vec)
     approx = bq_approx_scores(codes, query_vec, dim, id_col)
-    if deleted is not None:
-        approx = approx.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    cand_ids = (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
+    return two_phase_topk(
+        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
     )
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ann_topk_bq_batch(

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine_topk, exact_rerank_batch
+from .similarity import exact_rerank_batch, two_phase_topk
 
 NVQ_RERANK_FACTOR = 6
 NVQ_RERANK_FLOOR = 64
@@ -209,23 +209,16 @@ def ann_topk_nvq(
     exact float rerank orders the final k — same fast-vs-slow contract as
     the SQ8/PQ/BQ tiers (TestCompressedVectors.java:231), with the first
     pass reading 1 B/dim + 3 doubles per vector. ``deleted`` is the M1
-    tombstone mask, dropped before candidate selection."""
+    tombstone mask, dropped before candidate selection. The call runs the
+    scan eagerly and returns a local relation (:func:`two_phase_topk`)."""
     if rerank is None:
         rerank = max(NVQ_RERANK_FLOOR, NVQ_RERANK_FACTOR * k)
     if codes is None:
         codes = nvq_encode(embeddings, bits, id_col, vec_col)
     approx = nvq_approx_scores(codes, query_vec, bits, id_col)
-    if deleted is not None:
-        approx = approx.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    cand_ids = (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
+    return two_phase_topk(
+        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
     )
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ann_topk_nvq_batch(

@@ -20,7 +20,8 @@ Spark-first shape (the same two-phase plumbing as the SQ8 tier):
   codes is ``m`` vectorized table lookups + a sum, touching only
   ``m`` bytes per corpus vector (32× fewer than float32 at m = dim/8).
 - ``ann_topk_pq``: compressed scan → top-``rerank`` candidates
-  (TakeOrderedAndProject, per-partition heaps) → exact float rerank.
+  (TakeOrderedAndProject, per-partition heaps) → exact float rerank on
+  the driver (``similarity.two_phase_topk``, shared by every tier).
   With the default margin the output is rank-IDENTICAL to the exact scan
   (the fast-vs-slow equivalence idiom: same DuckDB oracle as ``ann_topk``
   in the driver contract, hash-checked).
@@ -38,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import IVF_MAX_TRAINING, cosine_topk
+from .similarity import IVF_MAX_TRAINING, two_phase_topk
 
 # candidates = max(PQ_RERANK_FLOOR, factor·k). Factor 10 is the reference
 # grid's top overquery (Bench.java:47-52: overquery ∈ {1,2,5,10}); the floor
@@ -270,7 +271,8 @@ def ann_topk_pq(
     once, scan codes per query batch). ``deleted`` is the tombstone
     relation (M1 mask, same contract as every other ANN tier): those ids
     drop off the compressed scan before candidate selection, so they
-    neither surface nor consume rerank budget."""
+    neither surface nor consume rerank budget. The call runs the scan
+    eagerly and returns a local relation (:func:`two_phase_topk`)."""
     if rerank is None:
         rerank = max(PQ_RERANK_FLOOR, PQ_RERANK_FACTOR * k)
     if codebooks is None:
@@ -278,17 +280,9 @@ def ann_topk_pq(
     if codes is None:
         codes = pq_encode(embeddings, codebooks, id_col, vec_col)
     approx = pq_approx_scores(codes, codebooks, query_vec, id_col)
-    if deleted is not None:
-        approx = approx.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    cand_ids = (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
+    return two_phase_topk(
+        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
     )
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ann_topk_pq_batch(

@@ -61,19 +61,34 @@ def _norm(a: Column) -> Column:
     )
 
 
+def cosine_kernel(X: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Exact float64 cosine of every row of ``X`` against ``q`` — the one
+    exact-score kernel, shared by the Spark scan (:func:`cosine_scores`)
+    and the driver-side rerank (:func:`two_phase_topk`).
+
+    ``einsum`` rather than ``X @ q``: a BLAS matrix-vector product may sum
+    a row's products in an order that depends on how many rows share the
+    call, and the two callers score different row sets. ``einsum`` sums
+    each row on its own, so a vector gets the same bits from any batch. A
+    zero-norm row (or query) scores 0, not NaN: a NaN would sort above
+    every real score in Spark's descending order."""
+    dots = np.einsum("ij,j->i", X, q)
+    den = float(np.linalg.norm(q)) * np.linalg.norm(X, axis=1)
+    return np.divide(dots, den, out=np.zeros_like(dots), where=den > 0)
+
+
 def cosine_scores(
     embeddings: DataFrame,
     query_vec: list[float],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, cos) for every row — exact; one float64 matrix-vector
-    product per Arrow batch (the bulk-scoring shape of the reference's
-    fused kernels, surveyed Q14). The Catalyst higher-order fold this
+    """(vec_id, cos) for every row — exact; one :func:`cosine_kernel`
+    call per Arrow batch (the bulk-scoring shape of the reference's fused
+    kernels, surveyed Q14). The Catalyst higher-order fold this
     replaces is interpreted per element (~0.4 ms/row at dim 64) — 100×
     off the hardware for a brute-force ground-truth scan."""
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
     id_type = embeddings.schema[id_col].dataType.simpleString()
 
     def fn(it):
@@ -81,8 +96,9 @@ def cosine_scores(
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cos = (X @ q) / (qn * np.linalg.norm(X, axis=1))
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "cos": cos})
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].to_numpy(), "cos": cosine_kernel(X, q)}
+            )
 
     return embeddings.select(id_col, vec_col).mapInPandas(
         fn, schema=f"{id_col} {id_type}, cos double"
@@ -985,6 +1001,87 @@ def sq8_approx_scores(
     return codes.mapInPandas(fn, schema=f"{id_col} long, approx double")
 
 
+def _ids_in(id_col: str, ids: list[int]) -> Column:
+    """``id_col IN (ids)``, parsed from one SQL string: ``Column.isin``
+    makes one Py4J call per literal, ~0.3 s of driver time for a
+    512-id rerank window. An empty list is ``false``."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{id_col}` IN ({', '.join(str(int(i)) for i in ids)})")
+
+
+def ann_candidates(
+    approx: DataFrame,
+    rerank: int,
+    deleted: DataFrame | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """First pass of every compressed tier: the ``rerank`` best ids of an
+    ``(id, approx)`` scan by (approx desc, id asc) — TakeOrderedAndProject,
+    per-partition heaps, no global sort. ``deleted`` is the tombstone
+    relation (M1 mask): its ids are collected to the driver and filtered
+    off the scan BEFORE selection, so deletes neither surface nor consume
+    rerank budget. A filter, not a broadcast anti-join: broadcasting even
+    a local relation runs a Spark job of its own, and collecting one runs
+    none. A tombstone set too large to ship in the plan is the signal to
+    rebuild."""
+    if deleted is not None:
+        dead = sorted({r[0] for r in deleted.select(id_col).collect()})
+        approx = approx.filter(~_ids_in(id_col, dead))
+    return (
+        approx.orderBy(F.desc("approx"), F.asc(id_col))
+        .limit(int(rerank))
+        .select(id_col)
+    )
+
+
+def two_phase_topk(
+    embeddings: DataFrame,
+    approx: DataFrame,
+    query_vec: list[float],
+    k: int,
+    rerank: int,
+    deleted: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(rank, id, cos): the serve path every compressed tier (SQ8, PQ, BQ,
+    NVQ) shares — approximate scan, rerank window, exact rerank (the
+    reference's ``ApproximateScoreFunction`` + ``Reranker`` split).
+
+    Runs EAGERLY in two Spark jobs. Collecting the :func:`ann_candidates`
+    ids runs the approximate scan (job 1). Their ≤ ``rerank`` vectors come
+    back through a JVM-only ``IN`` filter on ``embeddings`` (job 2, no
+    Python worker). The exact cosine (:func:`cosine_kernel`, the same
+    bits as :func:`cosine_topk`) and the (cos desc, id asc) order are
+    computed on the driver, and the top k return as a local relation, so
+    reading the result runs no further job."""
+    from ..index.storage import local_relation
+
+    spark = embeddings.sparkSession
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+    schema = f"rank int, {id_col} {id_type}, cos double"
+    ids = [r[0] for r in ann_candidates(approx, rerank, deleted, id_col).collect()]
+    pdf = (
+        embeddings.filter(_ids_in(id_col, ids))
+        .select(id_col, vec_col)
+        .toPandas()
+    )
+    if len(pdf) == 0:
+        return local_relation(spark, [], schema)
+    cid = pdf[id_col].to_numpy()
+    cos = cosine_kernel(
+        np.array(pdf[vec_col].tolist(), dtype=np.float64),
+        np.asarray(query_vec, dtype=np.float64),
+    )
+    top = np.lexsort((cid, -cos))[: int(k)]
+    return local_relation(
+        spark,
+        [(r + 1, int(cid[i]), float(cos[i])) for r, i in enumerate(top)],
+        schema,
+    )
+
+
 def ann_topk_sq8(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -1005,7 +1102,9 @@ def ann_topk_sq8(
     (at scale: persist ``sq8_encode`` output once, scan it per query).
     ``deleted`` is the tombstone relation (M1 mask): those ids are dropped
     BEFORE candidate selection, so deletes neither surface nor consume
-    rerank budget — re-encode (compaction) reclaims the bytes."""
+    rerank budget — re-encode (compaction) reclaims the bytes. The call
+    runs the scan eagerly and returns a local relation
+    (:func:`two_phase_topk`)."""
     if rerank is None:
         rerank = max(64, SQ8_RERANK_FACTOR * k)
     if params is None:
@@ -1014,17 +1113,9 @@ def ann_topk_sq8(
     if codes is None:
         codes = sq8_encode(embeddings, mn, scale, id_col, vec_col)
     approx = sq8_approx_scores(codes, mn, scale, query_vec, id_col)
-    if deleted is not None:
-        approx = approx.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    cand_ids = (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
+    return two_phase_topk(
+        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
     )
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ann_topk_sq8_batch(

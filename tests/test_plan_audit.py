@@ -10,6 +10,7 @@ asserting the vectorized dispatch is actually taken
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +63,47 @@ def test_no_row_python_in_contract_plans(spark, entry_mod, key):
     # frame — release it so the audit walk leaves no pins behind for later
     # tests (callers own the pin by contract)
     df.unpersist()
+
+
+@pytest.mark.parametrize("tier", ["sq8", "pq", "bq", "nvq"])
+def test_ann_first_pass_scans_codes_only(spark, entry_mod, tier):
+    """The tier contract entries return a driver-built local relation, so
+    the audit above sees no scan there. The first pass they run (codes
+    scan → tombstone mask → rerank window, ``ann_candidates``) is audited
+    here on the same persisted structures: Arrow-batched Python only, and
+    the one parquet scan reads the id and code columns alone — never a raw
+    vector."""
+    from jvector_spark.index import vectors as V
+    from jvector_spark.operators.bq import bq_approx_scores
+    from jvector_spark.operators.nvq import nvq_approx_scores
+    from jvector_spark.operators.pq import pq_approx_scores
+    from jvector_spark.operators.similarity import ann_candidates, sq8_approx_scores
+
+    idx = getattr(entry_mod, f"_{tier}_index_for")(spark, SF_DIR)
+    qv = list(
+        spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+        .filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    )
+    if tier == "sq8":
+        (mn, scale), codes = V.sq8_load(spark, idx)
+        approx = sq8_approx_scores(codes, mn, scale, qv)
+    elif tier == "pq":
+        books, codes = V.pq_load(spark, idx)
+        approx = pq_approx_scores(codes, books, qv)
+    elif tier == "bq":
+        dim, codes = V.bq_load(spark, idx)
+        approx = bq_approx_scores(codes, qv, dim)
+    else:
+        bits, codes = V.nvq_load(spark, idx)
+        approx = nvq_approx_scores(codes, qv, bits)
+    first = ann_candidates(approx, 64, entry_mod._vec0_deleted(spark))
+    assert_no_row_python(first, f"ann_topk_{tier} first pass")
+    audit = plan_audit(first)
+    assert "MapInPandas" in audit["python"]["arrow"]
+    assert len(audit["read_schemas"]) == 1, audit["read_schemas"]
+    read = set(re.findall(r"(\w+):", audit["read_schemas"][0]))
+    assert read == set(codes.columns), audit["read_schemas"]
+    assert "embedding" not in codes.columns
 
 
 def test_scan_filter_pushdown_and_pruning(spark, entry_mod):
