@@ -88,23 +88,6 @@ def make_transcripts_pdf(n_turns: int = 5000, seed: int = 42) -> pd.DataFrame:
     return pdf
 
 
-def make_transcripts(spark, n_turns: int = 5000, seed: int = 42):
-    """Spark DataFrame of the synthetic transcripts (Arrow path)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("role", T.StringType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("tool", T.StringType(), True),
-            T.StructField("ts", T.TimestampType(), False),
-        ]
-    )
-    return spark.createDataFrame(make_transcripts_pdf(n_turns, seed), schema=schema)
-
-
 def make_transcripts_distributed(
     spark, n_turns: int, n_partitions: int = 64, seed: int = 42
 ):

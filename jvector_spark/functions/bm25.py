@@ -42,17 +42,6 @@ def bm25_term_score_col(
     return idf_col(df_col, n_docs) * tf / denom
 
 
-def bm25_sql_expr(tf: str, df: str, dl: str, n: str, avgdl: str,
-                  k1: float = BM25_K1, b: float = BM25_B) -> str:
-    """The same formula as an ANSI-SQL string (used by the DuckDB oracle and
-    by spark.sql paths), guaranteeing both engines evaluate an identical
-    expression tree."""
-    return (
-        f"ln(1.0 + ({n} - {df} + 0.5) / ({df} + 0.5)) * {tf} / "
-        f"({tf} + {k1} * (1.0 - {b} + {b} * {dl} / {avgdl}))"
-    )
-
-
 def tfidf_term_score_col(
     tf_col: Column,
     df_col: Column,

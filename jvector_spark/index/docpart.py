@@ -249,13 +249,6 @@ def build_doc_partitioned(
     }
 
 
-def is_doc_partitioned(spark: SparkSession, index_dir: str) -> bool:
-    from .storage import read_segments
-
-    seg = read_segments(spark, index_dir)
-    return seg.get("layout") == "doc"
-
-
 def bm25_topk_docpart(
     spark: SparkSession,
     index_dir: str,

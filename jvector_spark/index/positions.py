@@ -157,19 +157,6 @@ def encode_positions_pdf(pdf: pd.DataFrame, block_size: int = BLOCK_SIZE) -> pd.
     )
 
 
-def _encode_positions_map_fn(block_size: int):
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        batches = [p for p in it]
-        if not batches:
-            yield _empty_positions_pdf()
-            return
-        yield encode_positions_pdf(
-            pd.concat(batches, ignore_index=True), block_size
-        )
-
-    return fn
-
-
 def add_positions(
     corpus: DataFrame,
     index_dir: str,

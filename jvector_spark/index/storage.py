@@ -45,7 +45,13 @@ driver-visible paths — the same assumption the ``os.rename`` /
 ``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
 corpus-sized tables (postings, dictionary, doc_stats) are read with their
 known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
-schema-inference job.
+schema-inference job. An aggregate the Parquet footers already hold is
+read from them, not computed by a job: ``extend_index`` takes the
+dictionary's max term_id from its row-group statistics
+(:func:`footer_max`). An extend's delta vocabulary is delta-sized, so it
+is collected to the driver with its existing (term_id, n_salts) in one
+round-trip; fresh term ids are numbered there, and the dictionary update
+and encode map go back to Spark as local relations.
 
 The persisted vector tiers (``index.vectors``) follow the same rule: the
 manifest, SQ8 params, PQ codebooks and vector tombstones are read with
@@ -295,6 +301,30 @@ def local_schema(index_dir: str, name: str) -> StructType | None:
     right for whatever id column name the table was written with."""
     files = _data_files(index_dir, name)
     return from_arrow_schema(pq.read_schema(files[0])) if files else None
+
+
+def footer_max(index_dir: str, name: str, column: str) -> int | None:
+    """Max of an integer column over a table's data files, read from the
+    Parquet footers' row-group statistics on the driver (no Spark job, no
+    data page read), or None when the table holds no row. A row group
+    written without statistics has its column read instead."""
+    best = None
+    for f in _data_files(index_dir, name):
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        j = md.schema.names.index(column)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(j).statistics
+            if st is not None and st.has_min_max:
+                v = st.max
+            else:
+                v = pc.max(pf.read_row_group(i, columns=[column])[column]).as_py()
+            if v is not None and (best is None or v > best):
+                best = int(v)
+    return best
 
 
 def _segments(index_dir: str) -> tuple[pa.Table, dict]:

@@ -22,7 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analysis import tokens_col
@@ -117,16 +117,6 @@ def exact_dedup(corpus: DataFrame, text_col: str = "text", id_col: str = "doc_id
         )
         .select("rep_doc_id", "n_dups")
     )
-
-
-def shingles_col(text_col: str, n: int = 3) -> Column:
-    """array<string> of word n-gram shingles (space-joined), from the
-    normalized token stream."""
-    toks = tokens_col(text_col)
-    return F.when(F.size(toks) >= n, F.expr(
-        f"transform(sequence(1, size(filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != '')) - {n} + 1), "
-        f"i -> concat_ws(' ', slice(filter(split(lower({text_col}), '[^a-z0-9]+'), x -> x != ''), i, {n})))"
-    )).otherwise(F.array().cast("array<string>"))
 
 
 def minhash_signatures(

@@ -2,9 +2,10 @@
 descendant of the reference's core capability (ANN top-k,
 GraphSearcher.java:209-230), re-expressed Spark-first.
 
-- ``cosine_topk``: exact brute-force scan — all math in JVM expressions
-  (zip_with dot product folded in float64), global top-k via window. This
-  is the ground-truth path, like jvector's exact-similarity rerank tier.
+- ``cosine_topk``: exact brute-force scan — one float64 Arrow batch
+  kernel (``cosine_kernel``) per scan batch, global top-k without a
+  window. This is the ground-truth path, like jvector's exact-similarity
+  rerank tier.
 - ``cosine_topk_lsh``: the scale path — random-hyperplane LSH bucketing
   (signs of dot products with R fixed seeded hyperplanes); candidates are
   restricted to the query's bucket (± multi-probe neighbors at Hamming
@@ -40,25 +41,6 @@ def _auto_blocks(n_rows: int, dim: int, floor: int = 8) -> int:
 
     need = math.ceil(max(1, n_rows) * max(1, dim) * 8 / TARGET_BLOCK_BYTES)
     return max(int(floor), int(need))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """float64 dot product of two array columns, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 def cosine_kernel(X: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -236,18 +218,6 @@ def _band_keys_col(vec_col: Column, planes: np.ndarray, bands: int, r: int) -> C
     return _keys(vec_col)
 
 
-def lsh_bucket_col(vec_col: Column, planes: np.ndarray) -> Column:
-    """int bucket id: bit r = sign(v · plane_r)."""
-    acc = F.lit(0).cast("long")
-    for r, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec_col, p) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        acc = acc + F.shiftleft(bit, r)
-    return acc
-
-
 def cosine_topk_lsh(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -322,30 +292,6 @@ def _normalized(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         return pd.Series(list(X))
 
     return embeddings.select(F.col(id_col), _norm_vec(F.col(vec_col)).alias("_nv"))
-
-
-def _pair_cos_col() -> Column:
-    """Pairwise dot of the joined normalized vectors (_va · _vb).
-
-    Arrow-vectorized pandas UDF, NOT a Catalyst higher-order function:
-    HOF lambdas are interpreted per element (no codegen), and the pair
-    verify evaluates millions of pairs × dim elements — measured ~10× the
-    whole operator. einsum crunches each Arrow batch at memory bandwidth;
-    this is the batch-kernel idiom of the reference's fused bulk scoring
-    (surveyed Q14), and exactly the 'Arrow-batched when Python is
-    unavoidable' rule — row-at-a-time BatchEvalPython remains banned by
-    the plan-audit tests (ArrowEvalPython is the allowed node)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        a = np.array(va.tolist(), dtype=np.float64)
-        b = np.array(vb.tolist(), dtype=np.float64)
-        return pd.Series(np.einsum("ij,ij->i", a, b))
-
-    return _pair_dot(F.col("_va"), F.col("_vb"))
 
 
 def embedding_near_dups(

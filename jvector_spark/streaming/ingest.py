@@ -173,9 +173,10 @@ def flush_staged(
     """Merge ALL staged batches into the index in ONE ``extend_index``
     delta — the amortization point of the reference's cleanup-threshold
     idiom (GraphIndexBuilder.java:475-511: inserts accumulate, one cleanup
-    pass merges). The per-batch fixed costs (full dictionary outer-join +
-    rewrite, segments refresh, lineage scans) are paid once per flush
-    instead of once per microbatch.
+    pass merges). An extend's fixed costs (the id pass, the one
+    delta-vocabulary collect, the dictionary rewrite, the segments and
+    lineage writes: about 20 Spark jobs whatever the delta's size) are
+    paid once per flush instead of once per microbatch.
 
     Crash semantics match the per-batch path: 'pending' rows for every
     staged batch are written BEFORE the (non-atomic) extend and 'complete'

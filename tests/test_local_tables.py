@@ -1,7 +1,10 @@
 """Driver-sized tables go through Arrow on the driver: the pyarrow readers
 must return exactly what a Spark read returns, the serve and delete paths
 must stay inside their Spark-job budgets, and extend/compact must keep the
-segments row's global stats equal to a full doc_stats scan."""
+segments row's global stats equal to a full doc_stats scan. Extend numbers
+fresh terms from the dictionary's footer max term_id, keeps df/cf equal to
+a full recount, stays inside its job budget and rejects caller doc_ids
+below n_docs before writing anything."""
 
 from __future__ import annotations
 
@@ -199,3 +202,162 @@ def test_extend_and_compact_keep_exact_global_stats(spark, corpus, term_index, t
     delete_docs(spark, d, [0, 1, 850, n_old + 3])
     compact_index(spark, d)
     check()
+
+
+def _dictionary(spark, index_dir: str) -> dict:
+    return {
+        r.term: (r.term_id, r.df, r.cf, r.n_salts)
+        for r in spark.read.parquet(os.path.join(index_dir, "dictionary")).collect()
+    }
+
+
+def _spark_max_term_id(spark, index_dir: str) -> int:
+    return spark.read.parquet(os.path.join(index_dir, "dictionary")).agg(
+        F.max("term_id")
+    ).collect()[0][0]
+
+
+def _with_fresh_terms(df, tag: str):
+    """Rows whose text also carries words no base document has."""
+    return df.withColumn(
+        "text",
+        F.concat_ws(
+            " ", "text",
+            F.concat(F.lit(f"zz{tag}"), (F.col("turn_idx") % 5).cast("string")),
+            F.lit(f"qq{tag}"),
+        ),
+    )
+
+
+def test_footer_max_and_fresh_term_numbering_without_spark(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jvector_spark.index.extend import _resolve_vocabulary
+    from jvector_spark.index.storage import footer_max
+
+    t = str(tmp_path / "dictionary")
+    os.makedirs(t)
+    assert footer_max(str(tmp_path), "dictionary", "term_id") is None  # no file
+    schema = pa.schema([("term", pa.string()), ("term_id", pa.int64())])
+    pq.write_table(pa.table({"term": [], "term_id": []}, schema), f"{t}/part-0.parquet")
+    assert footer_max(str(tmp_path), "dictionary", "term_id") is None  # no row
+    pq.write_table(pa.table({"term": ["a", "b"], "term_id": [7, 3]}, schema),
+                   f"{t}/part-1.parquet")
+    # a file written without statistics has its column read instead
+    pq.write_table(pa.table({"term": ["c"], "term_id": [9]}, schema),
+                   f"{t}/part-2.parquet", write_statistics=False)
+    assert not pq.ParquetFile(f"{t}/part-2.parquet").metadata.row_group(0).column(1).is_stats_set
+    assert footer_max(str(tmp_path), "dictionary", "term_id") == 9
+
+    # (term, df_new, cf_new, term_id, n_salts); term_id None = fresh term
+    vocab = [("zeta", 1, 2, None, None), ("é", 1, 1, None, None),
+             ("alpha", 2, 5, 4, 3), ("beta", 1, 1, None, None)]
+    updates, fresh, tmap = _resolve_vocabulary(vocab, 9)
+    assert updates == [("alpha", 2, 5)]
+    # code point order, which is Spark's UTF-8 byte order: "é" after "zeta"
+    assert fresh == [("beta", 10, 1, 1, 1), ("zeta", 11, 1, 2, 1), ("é", 12, 1, 1, 1)]
+    assert tmap == [("alpha", 4, 3), ("beta", 10, 1), ("zeta", 11, 1), ("é", 12, 1)]
+    assert [r[1] for r in _resolve_vocabulary(vocab, None)[1]] == [0, 1, 2]
+
+
+def test_extend_numbers_fresh_terms_after_footer_max(spark, corpus, term_index, tmp_path):
+    from jvector_spark.index.extend import extend_index
+    from jvector_spark.index.storage import footer_max
+    from jvector_spark.operators.text_stats import dictionary
+
+    d = _copy(term_index, tmp_path)
+    _, jobs = _jobs(spark, lambda: footer_max(d, "dictionary", "term_id"))
+    assert jobs == 0
+    assert footer_max(d, "dictionary", "term_id") == _spark_max_term_id(spark, d)
+
+    base = corpus.filter(F.col("doc_id") < 800).select("conv_id", "turn_idx", "text")
+    deltas = [
+        _with_fresh_terms(
+            corpus.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            .select("conv_id", "turn_idx", "text"),
+            tag,
+        )
+        for lo, hi, tag in ((800, 950, "b"), (950, 1100, "a"))
+    ]
+    for delta in deltas:
+        before = _dictionary(spark, d)
+        old_max = footer_max(d, "dictionary", "term_id")
+        extend_index(delta, d, order_cols=["conv_id", "turn_idx"])
+        after = _dictionary(spark, d)
+        assert footer_max(d, "dictionary", "term_id") == _spark_max_term_id(spark, d)
+        # old term_ids and salt plans are stable
+        assert {t: after[t][0::3] for t in before} == {t: v[0::3] for t, v in before.items()}
+        # fresh terms are numbered from the old max + 1, in term order
+        fresh = sorted(set(after) - set(before))
+        assert len(fresh) >= 6
+        assert [after[t][0] for t in fresh] == list(
+            range(old_max + 1, old_max + 1 + len(fresh))
+        )
+        assert all(after[t][3] == 1 for t in fresh)
+
+    # df/cf equal a full recount over base ∪ deltas
+    union = base
+    for delta in deltas:
+        union = union.unionByName(delta)
+    union = union.withColumn("doc_id", F.monotonically_increasing_id())
+    from jvector_spark.operators.text_stats import term_freq
+
+    want = {
+        r.term: (r.df, r.cf)
+        for r in dictionary(term_freq(union), assign_term_ids=False).collect()
+    }
+    assert {t: v[1:3] for t, v in _dictionary(spark, d).items()} == want
+
+
+def test_extend_job_budget(spark, corpus, term_index, tmp_path):
+    from jvector_spark.index.extend import extend_index
+
+    d = _copy(term_index, tmp_path)
+    # the delta is read from one file, as a caller's would be: filtered
+    # straight off the session-cached corpus, the count would also include
+    # the jobs that re-materialize whatever of that cache the session has
+    # evicted by then (2 more in a full test run)
+    src = str(tmp_path / "delta.parquet")
+    corpus.filter((F.col("doc_id") >= 800) & (F.col("doc_id") < 1100)).drop(
+        "doc_id"
+    ).coalesce(1).write.parquet(src)
+    raw = spark.read.parquet(src)
+    m, jobs = _jobs(
+        spark,
+        lambda: extend_index(
+            raw, d, order_cols=["conv_id", "turn_idx"],
+            doc_map_cols=["conv_id", "turn_idx"],
+        ),
+    )
+    assert m["docs_added"] == 300
+    # measured on this fixture: 22 (5 id pass + tokenize, 8 vocabulary
+    # collect, 2 dictionary rewrite, 3 postings encode, 1 each for
+    # doc_stats, doc_map, segments and lineage)
+    assert jobs <= 22, f"extend_index ran {jobs} Spark jobs"
+
+
+def _snapshot(index_dir: str) -> dict:
+    out = {}
+    for root, _, files in os.walk(index_dir):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, index_dir)] = fh.read()
+    return out
+
+
+def test_extend_rejects_doc_ids_below_n_docs(spark, corpus, term_index, tmp_path):
+    from jvector_spark.index.extend import extend_index
+    from jvector_spark.index.storage import read_segments
+
+    d = _copy(term_index, tmp_path)
+    n_old = read_segments(spark, d)["n_docs"]
+    before = _snapshot(d)
+    # one caller id collides with an existing document
+    delta = corpus.filter((F.col("doc_id") >= 800) & (F.col("doc_id") < 900)).withColumn(
+        "doc_id", F.col("doc_id") - F.lit(800) + F.lit(n_old - 1)
+    )
+    with pytest.raises(ValueError, match=f"smallest is {n_old - 1}"):
+        extend_index(delta, d, order_cols=None)
+    assert _snapshot(d) == before

@@ -1,0 +1,116 @@
+"""Compare two index directories table by table, by their rows.
+
+Two Spark writes of the same rows do not give the same Parquet bytes, and
+the same rows may be split across files differently. So each table is read
+whole with pyarrow (hive ``key=value`` directories become columns), sorted
+on every column, and compared row for row. No Spark session is started.
+
+Usage: python tools/diff_index.py INDEX_A INDEX_B
+
+Prints one line per table and exits 1 when any table differs or exists on
+one side only, 0 when every table holds the same rows.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+
+def _skipped(name: str) -> bool:
+    # Spark's reader skips _SUCCESS, _temporary, and .crc checksum files
+    return name.startswith(("_", "."))
+
+
+def _partition_value(text: str):
+    try:
+        return pa.scalar(int(text), pa.int32())
+    except ValueError:
+        return pa.scalar(text, pa.string())
+
+
+def read_rows(table_dir: str) -> pa.Table | None:
+    """Every row of a table directory, or None when it has no data file."""
+    parts = []
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not _skipped(d))
+        rel = os.path.relpath(root, table_dir)
+        keys = [
+            seg.split("=", 1) for seg in ([] if rel == "." else rel.split(os.sep))
+        ]
+        for f in sorted(files):
+            if _skipped(f):
+                continue
+            t = pq.read_table(os.path.join(root, f))
+            for k, v in keys:
+                val = _partition_value(v)
+                t = t.append_column(k, pa.array([val.as_py()] * t.num_rows, val.type))
+            parts.append(t)
+    if not parts:
+        return None
+    return pa.concat_tables(parts, promote_options="permissive")
+
+
+def _sorted(t: pa.Table, names: list[str]) -> pa.Table:
+    t = t.select(names)
+    return t.sort_by([(n, "ascending") for n in names])
+
+
+def compare(a: pa.Table | None, b: pa.Table | None) -> str | None:
+    """None when ``a`` and ``b`` hold the same rows, else why not."""
+    if a is None or b is None:
+        return None if a is b else "no data files on one side"
+    if sorted(a.column_names) != sorted(b.column_names):
+        return f"columns {sorted(a.column_names)} != {sorted(b.column_names)}"
+    names = sorted(a.column_names)
+    for n in names:
+        if a.schema.field(n).type != b.schema.field(n).type:
+            return f"column {n}: {a.schema.field(n).type} != {b.schema.field(n).type}"
+    if a.num_rows != b.num_rows:
+        return f"{a.num_rows} rows != {b.num_rows} rows"
+    sa, sb = _sorted(a, names), _sorted(b, names)
+    if sa.equals(sb):
+        return None
+    for i in range(sa.num_rows):
+        ra, rb = sa.slice(i, 1).to_pylist()[0], sb.slice(i, 1).to_pylist()[0]
+        if ra != rb:
+            return f"sorted row {i} differs: {ra} != {rb}"
+    return "rows differ"
+
+
+def tables(index_dir: str) -> set[str]:
+    return {
+        d
+        for d in os.listdir(index_dir)
+        if not _skipped(d) and os.path.isdir(os.path.join(index_dir, d))
+    }
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) != 2:
+        print("usage: python tools/diff_index.py INDEX_A INDEX_B", file=sys.stderr)
+        return 2
+    dir_a, dir_b = argv
+    bad = 0
+    for name in sorted(tables(dir_a) | tables(dir_b)):
+        pa_, pb = os.path.join(dir_a, name), os.path.join(dir_b, name)
+        if not (os.path.isdir(pa_) and os.path.isdir(pb)):
+            print(f"{name}: only in {dir_a if os.path.isdir(pa_) else dir_b}")
+            bad += 1
+            continue
+        a, b = read_rows(pa_), read_rows(pb)
+        why = compare(a, b)
+        if why is None:
+            print(f"{name}: equal ({0 if a is None else a.num_rows} rows)")
+        else:
+            print(f"{name}: DIFFERENT: {why}")
+            bad += 1
+    print("all tables equal" if not bad else f"{bad} table(s) differ")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
