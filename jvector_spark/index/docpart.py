@@ -43,7 +43,7 @@ from .. import BLOCK_SIZE, BM25_B, BM25_K1
 from ..functions.analysis import TOKEN_PATTERN, tokens_col
 from ..operators.doc_ids import assign_dense_ids
 from .build import _bg_job, _bg_join, _encode_occ_map_fn
-from .query import SPARSE_EXACT_LIMIT, wand_topk_arrays
+from .query import SPARSE_EXACT_LIMIT, lookup_terms, wand_topk_arrays
 from .storage import (
     FORMAT_VERSION,
     POSTINGS_SCHEMA,
@@ -266,37 +266,29 @@ def bm25_topk_docpart(
     seg = read_segments(spark, index_dir)
     if seg.get("layout") != "doc":
         raise ValueError(f"{index_dir} is not a doc-partitioned index")
-    k1, b_, avgdl, n_docs = seg["k1"], seg["b"], seg["avgdl"], int(seg["n_docs"])
+    k1, b_, avgdl = seg["k1"], seg["b"], seg["avgdl"]
     # tombstones mask on this layout too (M1 semantics — deleted docs must
     # neither fill nor shadow result slots); the sorted id array ships into
     # the same WAND kernel `dead` input the term-partitioned path uses
     dead_set = tombstone_ids(spark, index_dir)
     dead = np.sort(np.fromiter(dead_set, dtype=np.int64)) if dead_set else None
 
-    dct = read_table(spark, index_dir, "dictionary")
-    qd = (
-        qterms.join(dct.select("term", "term_id", "df"), "term")
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .select("query_id", "term_id", "weight", "idf")
-    )
-    # the query table is tiny (queries × terms); ship it in the closure —
+    # the query table is tiny (queries × terms); it is looked up on the
+    # driver the way the term-partitioned engine does (pyarrow dictionary
+    # read, the engine's one idf function) and shipped in the closure —
     # the per-query broadcast of idf constants surveyed as P2
-    qrows = qd.toPandas()
-    if len(qrows) == 0:
+    qd_rows, _ = lookup_terms(spark, index_dir, qterms, seg)
+    if not qd_rows:
         return local_relation(
             spark, [], "query_id int, rank int, doc_id long, score double"
         )
-    term_ids = sorted(int(t) for t in qrows["term_id"].unique())
+    term_ids = sorted({tid for _, tid, *_ in qd_rows})
+    by_query: dict = {}
+    for qid, tid, weight, idf_v, _, _ in qd_rows:
+        by_query.setdefault(int(qid), []).append((tid, weight, idf_v))
     by_query = {
-        int(qid): g[["term_id", "weight", "idf"]].reset_index(drop=True)
-        for qid, g in qrows.groupby("query_id")
+        qid: pd.DataFrame(rows, columns=["term_id", "weight", "idf"])
+        for qid, rows in by_query.items()
     }
 
     meta_cols = [

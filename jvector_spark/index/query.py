@@ -9,18 +9,32 @@ the pruned and unpruned paths must return byte-identical results (tested),
 unlike the reference's approximate first pass.
 
 Plan shape / scale notes:
-- the query set is collected to the driver and looked up in ONE dictionary
-  scan filtered to its terms; the needed ``part_id`` hive-buckets are then
-  computed driver-side so the postings scan *directory-prunes*
-  to only the buckets holding the query's terms — the analog of jvector
-  seeking only the adjacency regions a search touches;
+- the query set is collected to the driver and its terms are looked up in
+  the dictionary with a pyarrow filter on ``term``; idf is computed there
+  with the JVM's own ``StrictMath.log`` (:func:`idf_values`), so the lookup
+  runs no Spark job. The needed ``part_id`` hive-buckets are then computed
+  driver-side, so postings reads *directory-prune* to only the buckets
+  holding the query's terms — the analog of jvector seeking only the
+  adjacency regions a search touches;
 - the fused blocks carry tf **and dl** inline, so exact scoring never
   touches the corpus-sized doc_stats table at query time;
-- pruned path: one task per query (a searcher per query, exactly the
-  reference's GraphSearcher-per-thread model) — cluster QPS scales across
-  queries; candidate segments are processed in descending upper-bound order
-  with a rising top-k floor θ, skipping every block whose doc-range segment
-  cannot beat θ;
+- pruned path: a searcher per query (the reference's GraphSearcher-per-
+  thread model); candidate segments are processed in descending
+  upper-bound order with a rising top-k floor θ, skipping every block
+  whose doc-range segment cannot beat θ. It runs in one of two places,
+  chosen by one sizing rule (:data:`DRIVER_MAX_POSTINGS`,
+  :data:`DRIVER_MAX_BYTES`):
+  - *driver path*, when the postings the batch's kernels could decode
+    (Σ_q Σ_{t∈q} df_t) and the bytes of the part files it would open are
+    both under the constants: the pruned part files are read with pyarrow
+    filtered to the query terms, every query runs on the driver, and the
+    result is a local relation — zero Spark jobs, the reference's
+    in-process ``GraphSearcher``;
+  - *Spark path* otherwise: queries are dealt into buckets, each bucket's
+    blocks are gathered by one shuffle, and one task per bucket runs its
+    queries, so cluster QPS scales across queries.
+  Both run the same per-bucket body (:func:`_wand_queries`) over blocks in
+  one fixed order, so they return the same rows and score bits (tested);
 - unpruned path: decode → relational aggregate → window top-k; it is the
   oracle for the pruned path and the scale-out path for very large single
   queries (per-doc-range partial top-k then global merge, the rerankFloor
@@ -30,11 +44,13 @@ Plan shape / scale notes:
 from __future__ import annotations
 
 import math
+import os
 import time
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,7 +58,11 @@ from .. import BM25_B, BM25_K1
 from .codec import varint_decode
 from .storage import (
     hash_parts,
+    ids_in,
     local_relation,
+    postings_files,
+    read_dictionary,
+    read_files,
     read_segments,
     read_table,
     tombstone_ids,
@@ -111,68 +131,98 @@ def decode_postings(spark: SparkSession, index_dir: str, extra_cols: list[str] |
 # query prep
 # ---------------------------------------------------------------------------
 
-def _query_spec(
+def idf_values(spark: SparkSession, dfs, n_docs: int, idf: str = "bm25") -> dict:
+    """``{df: idf}`` for the distinct document frequencies ``dfs`` in a
+    corpus of ``n_docs`` — the engine's one idf function, for every indexed
+    path and both layouts. Robertson-Sparck-Jones (BM25) idf is
+    ``ln(1 + (N - df + 0.5) / (df + 0.5))``; the classic smoothed tf-idf
+    idf (``idf="tfidf"``, Q11's second exact kernel) is ``ln(1 + N / df)``.
+
+    The arithmetic runs in the operation order of the Catalyst expressions
+    ``F.log(1 + (n - df + 0.5) / (df + 0.5))`` and ``F.log(1 + n / df)``,
+    and the log is the JVM's own ``java.lang.StrictMath.log`` through the
+    session's Py4J gateway: Catalyst's ``log`` is ``StrictMath.log``, so
+    the result equals those expressions bit for bit (pytest-enforced),
+    where ``math.log`` and ``np.log`` differ in the last bit on a few
+    percent of df values. One gateway call per distinct df, ~0.1 ms."""
+    jlog = spark.sparkContext._jvm.java.lang.StrictMath.log
+    n = float(n_docs)
+    out = {}
+    for df in set(dfs):
+        d = float(df)
+        x = 1.0 + (n - d + 0.5) / (d + 0.5) if idf == "bm25" else 1.0 + n / d
+        out[df] = float(jlog(x))
+    return out
+
+
+def lookup_terms(
     spark: SparkSession, index_dir: str, qterms: DataFrame, seg: dict,
     global_df: DataFrame | None = None,
     idf: str = "bm25",
-):
-    """(qd_rows, qid_type, postings): the enriched query relation as
-    driver-side ``(query_id, term_id, weight, idf, n_salts)`` tuples (tiny —
-    queries × terms), the caller relation's query_id dtype, and the
-    part-id-pruned postings scan.
+) -> tuple[list, str]:
+    """(qd_rows, qid_type): the caller's (query_id, term, weight) relation,
+    collected once, as driver-side ``(query_id, term_id, weight, idf,
+    n_salts, df)`` tuples for its rows whose term is in the dictionary, and
+    the relation's query_id dtype. ``df`` is this index's own document
+    frequency: the number of postings a read of the term decodes.
 
-    The caller's relation is collected once; the dictionary is then read
-    with one known-schema scan filtered to the queried terms, so the only
-    Spark job here is that scan (none when the relation is a local one
-    with no terms). idf is computed in that same scan, with the exact
-    Catalyst expression the relational paths use.
+    Runs no Spark job when ``qterms`` is a local relation: the dictionary
+    rows of the query terms are read with a pyarrow filter on ``term``
+    (:func:`storage.read_dictionary`) and idf comes from
+    :func:`idf_values`. A query_id that does not fit the output's
+    ``query_id int`` raises ``ValueError``: truncated, two queries would
+    merge silently.
 
-    ``global_df`` (term, df) overrides the shard-local document frequencies
-    for idf — the sharded-index path computes idf from CORPUS-wide stats so
+    ``global_df`` (term, df) overrides the document frequencies for idf —
+    the sharded-index path computes idf from CORPUS-wide stats so
     per-shard scores are exact final scores (see ``index.sharded``);
-    ``seg['n_docs']`` is likewise already the global count there. Only the
-    filtered dictionary rows join it."""
+    ``seg['n_docs']`` is likewise already the global count there. Its rows
+    for the query terms are collected in one Spark job."""
     qid_type = dict(qterms.dtypes).get("query_id", "int")
     qrows = qterms.select("query_id", "term", "weight").collect()
-    terms = sorted({r.term for r in qrows})
-    by_term = {}
-    if terms:
-        dct = (
-            read_table(spark, index_dir, "dictionary")
-            .filter(F.col("term").isin(terms))
-            .select("term", "term_id", "df", "n_salts")
-        )
-        if global_df is not None:
-            dct = dct.drop("df").join(global_df.select("term", "df"), "term")
-        idf_col = (
-            # Robertson-Sparck-Jones (BM25) idf
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(seg["n_docs"])) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
+    for r in qrows:
+        if not -(1 << 31) <= int(r.query_id) < 1 << 31:
+            raise ValueError(
+                f"query_id {r.query_id} does not fit the output's query_id int"
             )
-            if idf == "bm25"
-            # classic smoothed tf-idf idf (Q11's second exact kernel)
-            else F.log(F.lit(1.0) + F.lit(float(seg["n_docs"])) / F.col("df"))
+    terms = sorted({r.term for r in qrows if r.term is not None})
+    if not terms:
+        return [], qid_type
+    dct = read_dictionary(index_dir, pc.field("term").isin(terms)).to_pylist()
+    idf_df = {r["term"]: r["df"] for r in dct}
+    if global_df is not None:
+        gdf = dict(
+            global_df.filter(F.col("term").isin(terms)).select("term", "df").collect()
         )
-        by_term = {
-            r.term: (int(r.term_id), float(r.idf), int(r.n_salts))
-            for r in dct.select("term", "term_id", idf_col.alias("idf"), "n_salts")
-            .collect()
-        }
+        idf_df = {t: gdf[t] for t in idf_df if t in gdf}
+    idfs = idf_values(spark, idf_df.values(), seg["n_docs"], idf)
+    by_term = {
+        r["term"]: (r["term_id"], idfs[idf_df[r["term"]]], r["n_salts"], r["df"])
+        for r in dct
+        if r["term"] in idf_df
+    }
     qd_rows = []
     for r in qrows:
         if r.term in by_term:
-            tid, idf_v, n_salts = by_term[r.term]
-            qd_rows.append((r.query_id, tid, float(r.weight), idf_v, n_salts))
-    # which hive buckets hold these terms? resolved driver-side with the
-    # bit-exact python twin of pmod(xxhash64(...)) — no throwaway Spark job
-    pairs = [(tid, s) for _, tid, _, _, n_salts in qd_rows for s in range(n_salts)]
-    parts = hash_parts(pairs, int(seg["n_parts"])) if pairs else []
+            tid, idf_v, n_salts, df = by_term[r.term]
+            qd_rows.append((r.query_id, tid, float(r.weight), idf_v, n_salts, df))
+    return qd_rows, qid_type
+
+
+def _part_ids(qd_rows: list, seg: dict) -> list[int]:
+    """The postings part ids holding the queried terms, resolved driver-side
+    with the bit-exact python twin of pmod(xxhash64(...)) — no throwaway
+    Spark job."""
+    pairs = {(tid, s) for _, tid, _, _, n_salts, _ in qd_rows for s in range(n_salts)}
+    return hash_parts(pairs, int(seg["n_parts"])) if pairs else []
+
+
+def _postings_scan(spark: SparkSession, index_dir: str, parts: list[int]) -> DataFrame:
+    """The postings scan directory-pruned to ``parts``."""
     postings = read_table(spark, index_dir, "postings")
     if parts:
         postings = postings.filter(F.col("part_id").isin(parts))
-    return qd_rows, qid_type, postings
+    return postings
 
 
 def _prepared_query_blocks(
@@ -185,9 +235,7 @@ def _prepared_query_blocks(
     block row replicates once per matching (query, term) pair — fine for
     the relational paths; the WAND batch path uses the bucketed gather in
     :func:`bm25_topk_indexed` instead (blocks ship once per query BUCKET)."""
-    qd_rows, qid_type, postings = _query_spec(
-        spark, index_dir, qterms, seg, global_df, idf
-    )
+    qd_rows, qid_type = lookup_terms(spark, index_dir, qterms, seg, global_df, idf)
     # the enriched query relation is tiny (queries × terms): re-emitted as
     # a local relation for the broadcast join — no persist, so a
     # long-running query loop pins zero executor storage (round-1 leak).
@@ -195,23 +243,21 @@ def _prepared_query_blocks(
     # (long/string query ids must round-trip unchanged)
     qd = local_relation(
         spark,
-        [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _ in qd_rows],
+        [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _, _ in qd_rows],
         f"query_id {qid_type}, term_id long, weight double, idf double",
     )
+    postings = _postings_scan(spark, index_dir, _part_ids(qd_rows, seg))
     return postings.join(F.broadcast(qd), "term_id")
 
 
 def _mask_tombstones(spark: SparkSession, index_dir: str, decoded: DataFrame) -> DataFrame:
-    """Anti-join decoded postings against the tombstone set (broadcast) —
+    """Filter the tombstone set off decoded postings (``doc_id NOT IN``) —
     deleted docs must neither fill nor shadow result slots (M1 semantics,
     the Bits-acceptOrds filter of GraphSearcher.java:202-205)."""
     dead = tombstone_ids(spark, index_dir)
     if not dead:
         return decoded
-    dead_df = F.broadcast(
-        local_relation(spark, [(int(x),) for x in sorted(dead)], "doc_id long")
-    )
-    return decoded.join(dead_df, "doc_id", "left_anti")
+    return decoded.filter(~ids_in("doc_id", sorted(dead)))
 
 
 # ---------------------------------------------------------------------------
@@ -487,6 +533,53 @@ def wand_topk_arrays(
     return top_docs, top_scores, n_decoded, nb - n_decoded
 
 
+def _wand_query(
+    sub: pd.DataFrame, qid: int,
+    k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
+    dead: np.ndarray | None = None,
+    accept: np.ndarray | None = None,
+    offset: int = 0,
+) -> pd.DataFrame:
+    """One query's output rows from its posting blocks ``sub`` (with
+    ``weight`` and ``idf`` columns): the WAND kernel, then ranks
+    (offset, offset+k] and, ``with_metrics``, its search-cost columns."""
+    # pagination (Q9 resume analog): compute top-(offset+k) exactly,
+    # emit ranks (offset, offset+k] — a batch engine re-derives the
+    # skipped prefix instead of holding cursor state
+    t0 = time.perf_counter() if with_metrics else 0.0
+    docs, scores, dec, skip = wand_topk_arrays(
+        sub, offset + k, k1, b, avgdl, dead, accept
+    )
+    kernel_ms = (time.perf_counter() - t0) * 1e3
+    docs, scores = docs[offset:], scores[offset:]
+    out = pd.DataFrame(
+        {
+            "query_id": np.full(len(docs), qid, dtype=np.int32),
+            "rank": np.arange(offset + 1, offset + len(docs) + 1, dtype=np.int32),
+            "doc_id": docs,
+            "score": scores,
+        }
+    )
+    if with_metrics:
+        # per-query search-cost + latency counters (SearchResult.java's
+        # visited/expanded + LatencyBenchmark.java:30-80 percentiles
+        # feed off this column in bench.py)
+        out["blocks_decoded"] = np.int32(dec)
+        out["blocks_skipped"] = np.int32(skip)
+        out["kernel_ms"] = np.float64(kernel_ms)
+    return out
+
+
+def _block_order(blocks: pd.DataFrame) -> pd.DataFrame:
+    """``blocks`` in (term_id, base) order, which identifies a block. The
+    kernel sums each doc's contributions in block order, so fixing the
+    order fixes the score bits whatever order a shuffle or a file read
+    delivered the blocks in."""
+    return blocks.take(
+        np.lexsort((blocks["base"].to_numpy(), blocks["term_id"].to_numpy()))
+    )
+
+
 def _wand_group_fn(
     k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
     dead: np.ndarray | None = None,
@@ -494,43 +587,59 @@ def _wand_group_fn(
     offset: int = 0,
 ):
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
-        # pagination (Q9 resume analog): compute top-(offset+k) exactly,
-        # emit ranks (offset, offset+k] — a batch engine re-derives the
-        # skipped prefix instead of holding cursor state
-        t0 = time.perf_counter() if with_metrics else 0.0
-        docs, scores, dec, skip = wand_topk_arrays(
-            pdf, offset + k, k1, b, avgdl, dead, accept
+        return _wand_query(
+            _block_order(pdf), int(key[0]), k, k1, b, avgdl, with_metrics,
+            dead, accept, offset,
         )
-        kernel_ms = (time.perf_counter() - t0) * 1e3
-        docs, scores = docs[offset:], scores[offset:]
-        out = pd.DataFrame(
-            {
-                "query_id": np.full(len(docs), qid, dtype=np.int32),
-                "rank": np.arange(offset + 1, offset + len(docs) + 1, dtype=np.int32),
-                "doc_id": docs,
-                "score": scores,
-            }
-        )
-        if with_metrics:
-            # per-query search-cost + latency counters (SearchResult.java's
-            # visited/expanded + LatencyBenchmark.java:30-80 percentiles
-            # feed off this column in bench.py)
-            out["blocks_decoded"] = np.int32(dec)
-            out["blocks_skipped"] = np.int32(skip)
-            out["kernel_ms"] = np.float64(kernel_ms)
-        return out
 
     return fn
 
 
-def _wand_bucket_fn(
-    bucket_queries_bc,
+def _wand_queries(
+    blocks: pd.DataFrame, queries,
     k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
     dead: np.ndarray | None = None,
     accept: np.ndarray | None = None,
     offset: int = 0,
-):
+) -> pd.DataFrame:
+    """WAND top-k of each ``(query_id, (term_ids, weights, idfs))`` in
+    ``queries`` over ``blocks``, which hold each block of their terms once:
+    the body of a Spark bucket task and of a driver-side read alike. Each
+    query selects its terms' blocks (spec merge) and runs
+    :func:`_wand_query`."""
+    blocks = _block_order(blocks)
+    outs = []
+    for qid, (tids, weights, idfs) in queries:
+        spec = pd.DataFrame({"term_id": tids, "weight": weights, "idf": idfs})
+        sub = blocks.merge(spec, on="term_id")
+        if len(sub):
+            outs.append(
+                _wand_query(
+                    sub, qid, k, k1, b, avgdl, with_metrics, dead, accept, offset
+                )
+            )
+    if outs:
+        return pd.concat(outs, ignore_index=True)
+    return pd.DataFrame(
+        {
+            "query_id": np.zeros(0, np.int32),
+            "rank": np.zeros(0, np.int32),
+            "doc_id": np.zeros(0, np.int64),
+            "score": np.zeros(0, np.float64),
+            **(
+                {
+                    "blocks_decoded": np.zeros(0, np.int32),
+                    "blocks_skipped": np.zeros(0, np.int32),
+                    "kernel_ms": np.zeros(0, np.float64),
+                }
+                if with_metrics
+                else {}
+            ),
+        }
+    )
+
+
+def _wand_bucket_fn(bucket_queries_bc, **kernel):
     """Kernel for the bucketed gather: the group holds each matched block
     ONCE per bucket; ``bucket_queries_bc`` (a Spark BROADCAST of the
     query-batch-sized dict) lists each bucket's queries as
@@ -545,56 +654,53 @@ def _wand_bucket_fn(
     buckets less shuffle+Arrow traffic."""
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for qid, (tids, weights, idfs) in bucket_queries_bc.value.get(int(key[0]), ()):
-            spec = pd.DataFrame(
-                {"term_id": tids, "weight": weights, "idf": idfs}
-            )
-            sub = pdf.merge(spec, on="term_id")
-            if len(sub) == 0:
-                continue
-            t0 = time.perf_counter() if with_metrics else 0.0
-            docs, scores, dec, skip = wand_topk_arrays(
-                sub, offset + k, k1, b, avgdl, dead, accept
-            )
-            kernel_ms = (time.perf_counter() - t0) * 1e3
-            docs, scores = docs[offset:], scores[offset:]
-            out = pd.DataFrame(
-                {
-                    "query_id": np.full(len(docs), qid, dtype=np.int32),
-                    "rank": np.arange(
-                        offset + 1, offset + len(docs) + 1, dtype=np.int32
-                    ),
-                    "doc_id": docs,
-                    "score": scores,
-                }
-            )
-            if with_metrics:
-                out["blocks_decoded"] = np.int32(dec)
-                out["blocks_skipped"] = np.int32(skip)
-                out["kernel_ms"] = np.float64(kernel_ms)
-            outs.append(out)
-        if not outs:
-            return pd.DataFrame(
-                {
-                    "query_id": np.zeros(0, np.int32),
-                    "rank": np.zeros(0, np.int32),
-                    "doc_id": np.zeros(0, np.int64),
-                    "score": np.zeros(0, np.float64),
-                    **(
-                        {
-                            "blocks_decoded": np.zeros(0, np.int32),
-                            "blocks_skipped": np.zeros(0, np.int32),
-                            "kernel_ms": np.zeros(0, np.float64),
-                        }
-                        if with_metrics
-                        else {}
-                    ),
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
+        return _wand_queries(
+            pdf, bucket_queries_bc.value.get(int(key[0]), ()), **kernel
+        )
 
     return fn
+
+
+# The sizing rule between the two pruned paths. A batch runs on the driver
+# when both the postings its kernels could decode (Σ_q Σ_{t∈q} df_t, known
+# from the dictionary lookup) and the bytes of the part files it would open
+# are under these constants; otherwise the Spark path runs.
+#
+# Postings, measured on local[4] over the seed-1 serve_mixed index (6,000
+# turns, 0.2 MB of postings), median of 3 warm batches:
+#   queries   Σdf     Spark path  driver path
+#         1       7      638 ms       65 ms
+#        50     86k    1,835 ms      187 ms
+#       200    315k    1,816 ms      732 ms
+#     1,000   1.61M    2,722 ms    2,981 ms
+# The driver costs ~1.7 ms and Spark ~0.7 ms per 1k postings, so the
+# crossover is near 1.4M; 2^20 keeps the driver on the winning side, and
+# 1000-query batches (and anything larger) stay on Spark.
+DRIVER_MAX_POSTINGS = 1 << 20
+# Bytes, measured on local[4] with a one-term read through pyarrow's
+# term_id filter vs a Spark scan + applyInPandas over the same 4 files:
+#   14 MB: 10 vs 519 ms; 57 MB: 34 vs 539 ms; 226 MB: 105 vs 461 ms.
+# No crossover below 226 MB (extrapolated: ~1 GB); the cap stays inside
+# the measured range, which also bounds what one read can pull into the
+# driver process.
+DRIVER_MAX_BYTES = 1 << 28
+
+# the columns the WAND kernel reads from a postings block
+_WAND_COLS = [
+    "term_id", "n", "base", "max_doc_id", "max_tf", "min_dl",
+    "doc_ids_packed", "tfs_packed", "dls_packed",
+]
+
+
+def _driver_files(index_dir: str, parts: list[int], n_postings: int) -> list[str] | None:
+    """The postings files a driver-side read of ``parts`` opens, or None
+    when the read is too large for the driver (the rule above)."""
+    if n_postings >= DRIVER_MAX_POSTINGS:
+        return None
+    files = postings_files(index_dir, parts)
+    if sum(os.path.getsize(f) for f in files) >= DRIVER_MAX_BYTES:
+        return None
+    return files
 
 
 def bm25_topk_indexed(
@@ -627,7 +733,11 @@ def bm25_topk_indexed(
     ``accept_ids`` (sorted int64 array) restricts results to those doc ids
     INSIDE the WAND kernel (the Bits-acceptOrds mask, Q8) — the bucketed
     gather then serves filtered batches with the same ≤ buckets× block
-    shuffle as unfiltered ones; only the pruned path supports it."""
+    shuffle as unfiltered ones; only the pruned path supports it.
+
+    A pruned batch under the sizing rule (:data:`DRIVER_MAX_POSTINGS`,
+    :data:`DRIVER_MAX_BYTES`) runs on the driver and returns a local
+    relation: no Spark job. ``query_buckets`` applies to the Spark path."""
     seg0 = read_segments(spark, index_dir)
     if global_stats:
         seg0 = {**seg0, **global_stats}
@@ -657,6 +767,48 @@ def bm25_topk_indexed(
     if with_metrics:
         schema += ", blocks_decoded int, blocks_skipped int, kernel_ms double"
 
+    qd_rows, _ = lookup_terms(spark, index_dir, qterms, seg, global_df)
+    qspec: dict = {}
+    n_postings = 0
+    for qid, tid, weight, idf_v, _, df in qd_rows:
+        # duplicate (query, term) rows sum their weights — same math as the
+        # per-query path scoring each duplicate block row separately
+        tmap = qspec.setdefault(qid, {})
+        if tid not in tmap:
+            n_postings += df
+        w, i_ = tmap.get(tid, (0.0, idf_v))
+        tmap[tid] = (w + weight, i_)
+    if not qspec:
+        # no query term matched the dictionary (OOV batch, or a shard whose
+        # local vocabulary lacks every term): same empty result as the
+        # per-query grouping — never repartition(0), which raises
+        return local_relation(spark, [], schema)
+    queries = [
+        (
+            int(qid),
+            (
+                np.fromiter(spec.keys(), dtype=np.int64),
+                np.fromiter((v[0] for v in spec.values()), dtype=np.float64),
+                np.fromiter((v[1] for v in spec.values()), dtype=np.float64),
+            ),
+        )
+        for qid, spec in sorted(qspec.items())
+    ]
+    kernel = dict(
+        k=k, k1=seg["k1"], b=seg["b"], avgdl=seg["avgdl"],
+        with_metrics=with_metrics, dead=dead, accept=accept_ids, offset=offset,
+    )
+    parts = _part_ids(qd_rows, seg)
+    files = _driver_files(index_dir, parts, n_postings)
+    if files is not None:
+        # driver path: the part files' blocks of the queried terms, read
+        # with pyarrow, through the same kernel body a bucket task runs
+        term_ids = sorted({tid for _, tid, *_ in qd_rows})
+        blocks = read_files(
+            files, _WAND_COLS, pc.field("term_id").isin(term_ids)
+        ).to_pandas()
+        return local_relation(spark, _wand_queries(blocks, queries, **kernel), schema)
+
     # Bucketed gather (the 2→8-core scaling fix): grouping by query_id
     # replicates each posting block once per query that matches its term —
     # for a 5000-query batch over a shared vocabulary that is a memory-
@@ -667,20 +819,6 @@ def bm25_topk_indexed(
     # times total, vs ≤ queries times); the kernel loops the bucket's
     # queries in-task. Math, tie-breaks, metrics and pagination are
     # identical to the per-query grouping (equivalence pytest-enforced).
-    qd_rows, _, postings = _query_spec(spark, index_dir, qterms, seg, global_df)
-    qspec: dict = {}
-    for qid, tid, weight, idf_v, _ in qd_rows:
-        # duplicate (query, term) rows sum their weights — same math as the
-        # per-query path scoring each duplicate block row separately
-        tmap = qspec.setdefault(qid, {})
-        w, i_ = tmap.get(tid, (0.0, idf_v))
-        tmap[tid] = (w + weight, i_)
-    qids = sorted(qspec)
-    if not qids:
-        # no query term matched the dictionary (OOV batch, or a shard whose
-        # local vocabulary lacks every term): same empty result as the
-        # per-query grouping — never repartition(0), which raises
-        return local_relation(spark, [], schema)
     if query_buckets is None:
         # bucket count sized by the QUERY BATCH, never by parallelism: the
         # shuffled volume is Σ_buckets |blocks(bucket's terms)| — hot Zipf
@@ -690,31 +828,20 @@ def bm25_topk_indexed(
         # artifact, the same principle as data-sized shuffle partitions).
         # ~64 queries/bucket amortizes each bucket's block set well; the
         # floor keeps small batches parallel across a few dozen tasks.
-        query_buckets = min(len(qids), max(32, -(-len(qids) // 64)))
+        query_buckets = min(len(queries), max(32, -(-len(queries) // 64)))
     bucket_queries: dict[int, list] = {}
     tb_pairs = set()
-    for i, qid in enumerate(qids):
+    for i, (qid, arrs) in enumerate(queries):
         bkt = i % query_buckets
-        spec = qspec[qid]
-        arrs = (
-            np.fromiter(spec.keys(), dtype=np.int64),
-            np.fromiter((v[0] for v in spec.values()), dtype=np.float64),
-            np.fromiter((v[1] for v in spec.values()), dtype=np.float64),
-        )
-        bucket_queries.setdefault(bkt, []).append((int(qid), arrs))
-        tb_pairs.update((t, bkt) for t in spec)
+        bucket_queries.setdefault(bkt, []).append((qid, arrs))
+        tb_pairs.update((int(t), bkt) for t in arrs[0])
     tb = local_relation(
-        spark,
-        [(int(t), int(bkt)) for t, bkt in sorted(tb_pairs)],
-        "term_id long, bucket int",
+        spark, sorted(tb_pairs), "term_id long, bucket int"
     )
     bq_bc = spark.sparkContext.broadcast(bucket_queries)
-    blocks = postings.join(F.broadcast(tb), "term_id")
+    blocks = _postings_scan(spark, index_dir, parts).join(F.broadcast(tb), "term_id")
     return (
-        blocks.select(
-            "bucket", "term_id", "n", "base", "max_doc_id",
-            "max_tf", "min_dl", "doc_ids_packed", "tfs_packed", "dls_packed",
-        )
+        blocks.select("bucket", *_WAND_COLS)
         # one shuffle partition PER BUCKET: under the session default (32)
         # several buckets hash-collide into one partition and the tail
         # task serializes 4-6 buckets' kernels — a straggler that costs
@@ -722,13 +849,7 @@ def bm25_topk_indexed(
         # reuses this exchange (partitioning satisfies the distribution).
         .repartition(query_buckets, "bucket")
         .groupBy("bucket")
-        .applyInPandas(
-            _wand_bucket_fn(
-                bq_bc, k, seg["k1"], seg["b"], seg["avgdl"],
-                with_metrics, dead, accept=accept_ids, offset=offset,
-            ),
-            schema=schema,
-        )
+        .applyInPandas(_wand_bucket_fn(bq_bc, **kernel), schema=schema)
     )
 
 
@@ -749,14 +870,17 @@ def bm25_topk_prefix(
     rewrite). The expanded terms ride the normal directory-pruned WAND
     path, so only their posting blocks are read. Must match the brute
     ``operators.topk.prefix_topk_bruteforce`` rank-identically; a prefix
-    matching no dictionary term returns no rows."""
+    matching no dictionary term returns no rows. The expansion is a pyarrow
+    ``starts_with`` filter on the dictionary's ``term`` (no Spark job)."""
     if not prefix:
         raise ValueError("prefix must be non-empty")
-    dct = read_table(spark, index_dir, "dictionary")
-    qterms = dct.filter(F.col("term").startswith(prefix)).select(
-        F.lit(int(query_id)).alias("query_id"),
-        "term",
-        F.lit(1.0).alias("weight"),
+    terms = read_dictionary(
+        index_dir, pc.starts_with(pc.field("term"), pattern=prefix)
+    )["term"].to_pylist()
+    qterms = local_relation(
+        spark,
+        [(int(query_id), t, 1.0) for t in terms],
+        "query_id long, term string, weight double",
     )
     return bm25_topk_indexed(
         spark, index_dir, qterms, k=k, prune=prune, **kwargs

@@ -53,6 +53,15 @@ is collected to the driver with its existing (term_id, n_salts) in one
 round-trip; fresh term ids are numbered there, and the dictionary update
 and encode map go back to Spark as local relations.
 
+A query's own slice of the index is driver-sized too. Every indexed read
+looks its terms up in the dictionary with a pyarrow dataset filter on
+``term`` (:func:`read_dictionary`), not with a Spark scan. A read whose
+matched postings and part files are small (the rule in ``index.query``)
+then reads only the ``postings/part_id=…`` directories its (term_id,
+salt) pairs hash to (:func:`postings_files`, :func:`hash_parts`), with a
+``term_id`` filter (:func:`read_files`), and runs no Spark job at all.
+Larger reads scan the same directories with Spark.
+
 The persisted vector tiers (``index.vectors``) follow the same rule: the
 manifest, SQ8 params, PQ codebooks and vector tombstones are read with
 :func:`read_local`, and the corpus-sized codes table is opened with the
@@ -63,10 +72,13 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -160,8 +172,12 @@ def _ddl_names(schema: str) -> list[str]:
     return names
 
 
-def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+def local_relation(
+    spark: SparkSession, rows: list | pd.DataFrame, schema: str
+) -> DataFrame:
     """DataFrame over driver-local rows, converted via pandas→Arrow.
+    ``rows`` is a list of tuples, or a pandas frame holding the schema's
+    columns.
 
     With ``spark.sql.execution.arrow.pyspark.enabled`` (``session.get_spark``
     sets it), Spark turns an Arrow payload below
@@ -172,9 +188,9 @@ def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     ``defaultParallelism`` slices that every scan unpickles in Python-worker
     tasks. Raises ``ValueError`` (before Spark is touched) when a row's
     arity differs from the schema's column count."""
-    import pandas as pd
-
     names = _ddl_names(schema)
+    if isinstance(rows, pd.DataFrame):
+        return spark.createDataFrame(rows[names], schema)
     for i, row in enumerate(rows):
         if len(row) != len(names):
             raise ValueError(
@@ -256,6 +272,18 @@ def hash_parts(pairs, n_parts: int) -> list[int]:
     return sorted({hash_part_id(int(t), int(s), int(n_parts)) for t, s in pairs})
 
 
+def ids_in(id_col: str, ids: list[int]) -> Column:
+    """``id_col IN (ids)``, parsed from one SQL string: ``Column.isin``
+    makes one Py4J call per literal, ~0.3 s of driver time for a
+    512-id rerank window. An empty list is ``false``. Negated, it is the
+    tombstone mask every read path applies: a filter, not a broadcast
+    anti-join, because broadcasting even a local relation runs a Spark job
+    of its own."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{id_col}` IN ({', '.join(str(int(i)) for i in ids)})")
+
+
 def write_table(df: DataFrame, index_dir: str, name: str, mode: str = "overwrite",
                 partition_by: list[str] | None = None) -> None:
     w = df.write.mode(mode)
@@ -292,6 +320,35 @@ def read_local(index_dir: str, name: str) -> pa.Table | None:
     if not files:
         return None
     return pa.concat_tables(pq.read_table(f) for f in files)
+
+
+def read_files(files: list[str], columns: list[str], filter=None) -> pa.Table:
+    """``columns`` of the rows of Parquet ``files`` that pass the pyarrow
+    ``filter`` expression, read on the driver (no Spark job). Files may
+    hold their columns in different orders; they are matched by name."""
+    return ds.dataset(files, format="parquet").to_table(
+        columns=columns, filter=filter
+    )
+
+
+def read_dictionary(index_dir: str, filter) -> pa.Table:
+    """The dictionary rows (term, term_id, df, n_salts) that pass a pyarrow
+    ``filter`` on ``term``."""
+    return read_files(
+        _data_files(index_dir, "dictionary"),
+        ["term", "term_id", "df", "n_salts"],
+        filter,
+    )
+
+
+def postings_files(index_dir: str, parts: list[int]) -> list[str]:
+    """The data files of the ``postings/part_id=…`` directories of
+    ``parts``, the same files a Spark scan pruned to those part ids reads."""
+    return [
+        f
+        for p in parts
+        for f in _data_files(index_dir, os.path.join("postings", f"part_id={int(p)}"))
+    ]
 
 
 def local_schema(index_dir: str, name: str) -> StructType | None:

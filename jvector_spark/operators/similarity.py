@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..index.storage import ids_in
+
 
 # packed-block budget for the block-GEMM tiers: one collect_list row holds
 # (N / n_blocks) float64 vectors, so blocks are sized to keep that matrix
@@ -947,15 +949,6 @@ def sq8_approx_scores(
     return codes.mapInPandas(fn, schema=f"{id_col} long, approx double")
 
 
-def _ids_in(id_col: str, ids: list[int]) -> Column:
-    """``id_col IN (ids)``, parsed from one SQL string: ``Column.isin``
-    makes one Py4J call per literal, ~0.3 s of driver time for a
-    512-id rerank window. An empty list is ``false``."""
-    if not ids:
-        return F.lit(False)
-    return F.expr(f"`{id_col}` IN ({', '.join(str(int(i)) for i in ids)})")
-
-
 def ann_candidates(
     approx: DataFrame,
     rerank: int,
@@ -973,7 +966,7 @@ def ann_candidates(
     rebuild."""
     if deleted is not None:
         dead = sorted({r[0] for r in deleted.select(id_col).collect()})
-        approx = approx.filter(~_ids_in(id_col, dead))
+        approx = approx.filter(~ids_in(id_col, dead))
     return (
         approx.orderBy(F.desc("approx"), F.asc(id_col))
         .limit(int(rerank))
@@ -1009,7 +1002,7 @@ def two_phase_topk(
     schema = f"rank int, {id_col} {id_type}, cos double"
     ids = [r[0] for r in ann_candidates(approx, rerank, deleted, id_col).collect()]
     pdf = (
-        embeddings.filter(_ids_in(id_col, ids))
+        embeddings.filter(ids_in(id_col, ids))
         .select(id_col, vec_col)
         .toPandas()
     )

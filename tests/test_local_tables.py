@@ -160,7 +160,19 @@ def test_serve_and_delete_job_budgets(spark, term_index, tmp_path):
         ).collect(),
     )
     assert len(rows) == 10 and not {r.doc_id for r in rows} & dead
-    assert jobs <= 6, f"single-query read ran {jobs} Spark jobs"
+    # a driver-sized read: pyarrow dictionary and postings reads, the
+    # kernel on the driver, a local relation back
+    assert jobs == 0, f"single-query read ran {jobs} Spark jobs"
+    # the relational oracle path runs neither a dictionary scan nor a
+    # tombstone broadcast (measured 4; 6 with both)
+    rows, jobs = _jobs(
+        spark,
+        lambda: bm25_topk_indexed(
+            spark, d, queries_df(spark, [(0, terms)]), k=10, prune=False
+        ).collect(),
+    )
+    assert len(rows) == 10 and not {r.doc_id for r in rows} & dead
+    assert jobs <= 4, f"single-query unpruned read ran {jobs} Spark jobs"
 
 
 def _doc_stats_totals(spark, index_dir: str) -> tuple[int, float]:

@@ -122,18 +122,45 @@ def test_hash_join_broadcasts_small_side(spark, entry_mod):
     assert plan_audit(df)["has_broadcast"], "customer side should broadcast"
 
 
-def test_indexed_query_prunes_postings_partitions(spark, entry_mod):
+def test_indexed_query_prunes_postings_partitions(spark, entry_mod, monkeypatch):
     """The WAND path must read only the hive part_id buckets that hold the
     query's terms (directory pruning — the analog of jvector seeking only
-    the adjacency regions a search touches)."""
-    idx = entry_mod._index_for(spark, SF_DIR)
-    from jvector_spark.index.query import bm25_topk_indexed
-
-    df = bm25_topk_indexed(spark, idx, entry_mod._qterms(spark), k=10, prune=True)
+    the adjacency regions a search touches), on the Spark path and on the
+    driver path alike."""
+    import jvector_spark.index.query as Q
+    from jvector_spark.index.storage import hash_parts, read_segments
+    from jvector_spark.operators.topk import queries_df
     from jvector_spark.plans import explain_str
 
+    idx = entry_mod._index_for(spark, SF_DIR)
+    # the Spark path, forced: the partition filter is on the postings scan
+    monkeypatch.setattr(Q, "DRIVER_MAX_POSTINGS", 0)
+    df = Q.bm25_topk_indexed(spark, idx, entry_mod._qterms(spark), k=10, prune=True)
     plan = explain_str(df, "formatted")
     assert "part_id" in plan  # partition filter present on the postings scan
+    monkeypatch.undo()
+
+    # the driver path opens the files of exactly the terms' part directories
+    opened: list[str] = []
+    read_files = Q.read_files
+
+    def spy(files, *args, **kwargs):
+        opened.extend(files)
+        return read_files(files, *args, **kwargs)
+
+    monkeypatch.setattr(Q, "read_files", spy)
+    n_parts = int(read_segments(spark, idx)["n_parts"])
+    dct = spark.read.parquet(os.path.join(idx, "dictionary"))
+    for r in dct.filter(F.col("n_salts") == 1).orderBy("term").limit(3).collect():
+        opened.clear()
+        rows = Q.bm25_topk_indexed(
+            spark, idx, queries_df(spark, [(0, [r.term])]), k=10
+        ).collect()
+        assert rows
+        want = hash_parts([(r.term_id, 0)], n_parts)
+        dirs = {os.path.basename(os.path.dirname(f)) for f in opened}
+        assert opened and dirs == {f"part_id={p}" for p in want}
+        assert len(want) < n_parts
 
 
 def test_minhash_verification_is_candidates_only(spark, entry_mod):
