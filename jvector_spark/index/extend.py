@@ -18,8 +18,9 @@ Design:
   new terms get ids above the old max) — term_id stability is the analog
   of the reference's OrdinalMapper keeping old ordinals valid;
 - global stats (n_docs, avgdl) are refreshed in ``segments`` from the old
-  row plus the delta's row count and Σdl (observed on the delta's doc_stats
-  write), never by rescanning doc_stats — an extend costs O(delta), not
+  row plus the delta's row count and Σdl (summed on the driver, or
+  observed on the Spark path's doc_stats write), never by rescanning
+  doc_stats — an extend costs O(delta), not
   O(corpus). Block upper bounds are DERIVED at query time from per-block
   (max_tf, min_dl) + current stats (format v2), so pre-existing blocks stay
   exactly correct under the new stats — no rescore pass (contrast B9) is
@@ -27,8 +28,28 @@ Design:
 - per-generation lineage rows record the delta (docs, postings, bytes) —
   the same checkpoint/metrics contract as the initial build.
 
-Job shape (22 Spark jobs on a 400-turn delta; the cost is O(delta) plus
-one scan of the dictionary):
+Two paths, one on-disk result. A delta is *driver-sized* when the
+Catalyst size estimate of its tokenized projection (``sizeInBytes``, known
+without a job) is at most :data:`DRIVER_MAX_DELTA_BYTES`. Such a delta is
+extended in 3 Spark jobs:
+- one job tokenizes the delta in Catalyst (``tokens_col``) and collects it
+  to the driver as Arrow, sorted by ``order_cols`` within one partition,
+  so Spark's own ordering (nulls, NaN, strings) fixes the order doc ids
+  follow;
+- on the driver: doc ids are numbered from ``n_docs``, the (doc_id, term,
+  tf, dl) occurrences are counted with pyarrow, the vocabulary is looked
+  up with a pyarrow filter on the dictionary and fresh terms are numbered
+  from the footer max term_id, part ids come from the pure-Python
+  ``hash_part_id``, and the blocks are encoded with the build's own
+  ``encode_partition_pdf``. Every row to write is computed before the
+  first file is written;
+- the dictionary rewrite, old rows joined to a local update relation and
+  unioned with the fresh rows, is the one corpus-sized step (2 jobs);
+- the postings delta (one file per ``part_id=`` directory), doc_stats,
+  doc_map, segments and the lineage row are written with pyarrow
+  (``storage.write_local``, no job).
+
+A larger delta runs the Spark path (20 jobs on a 400-turn delta):
 - the id pass tokenizes: ``assign_dense_ids(pre_persist=...)`` caches
   (doc_id, token array, doc_map columns), and the delta's text is never
   read again (5 jobs). With caller doc_ids (``order_cols=None``) one
@@ -38,19 +59,21 @@ one scan of the dictionary):
   occurrences, ``dl`` as a max, so no doc_stats join is needed;
 - the delta vocabulary (term, df_new, cf_new) and its existing
   (term_id, n_salts) come to the driver in ONE collect (8 jobs, most of
-  them populating the two caches). The old max term_id is read from the
-  dictionary's Parquet footer statistics (no job), and fresh terms are
-  numbered on the driver in term order from max + 1 — the ids a dense
-  rank over ``term`` would give them;
-- the dictionary is rewritten as old rows joined to a local update
-  relation, unioned with a local relation of fresh rows (2 jobs);
+  them populating the two caches), and fresh terms are numbered there;
+- the dictionary rewrite is the same 2 jobs;
 - postings are encoded against a local term → (term_id, n_salts)
   relation, in ``sized_shuffle_n`` tasks sized from the occurrence count
   Σ df_new (3 jobs);
-- doc_stats, doc_map, segments and lineage are one job each.
+- doc_stats and doc_map are one job each; segments and lineage are
+  written with pyarrow.
+
+Both paths put a delta posting in its term's last salt, ``n_salts - 1``:
+every delta doc id is at least ``n_docs``, past the doc range the build's
+``doc_id * n_salts // n_docs`` split covers.
 
 Every query after ``extend_index`` must equal a brute-force BM25 over the
-unioned corpus exactly (tested in tests/test_extend_maintenance.py).
+unioned corpus exactly (tests/test_extend_maintenance.py), and both paths
+must write the same rows (tests/test_extend_paths.py).
 """
 
 from __future__ import annotations
@@ -59,24 +82,61 @@ import os
 import shutil
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, Observation
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.analysis import tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import _encode_map_fn
+from .build import _encode_map_fn, encode_partition_pdf
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
     TABLE_SCHEMAS,
+    arrow_rows,
+    arrow_schema,
     footer_max,
-    local_df,
+    hash_part_id,
     local_relation,
+    read_dictionary,
     read_segments,
     read_table,
     sized_shuffle_n,
     table_path,
     update_segments,
+    write_local,
+)
+
+# The sizing rule between the two paths: a delta is extended on the driver
+# when the Catalyst size estimate of its tokenized projection (id or order
+# columns, doc_map columns, token array; for a Parquet scan, the files'
+# bytes scaled to those columns) is at most this constant.
+#
+# Measured on local[4]: transcript deltas into a copy of a 6,000-turn
+# index, order_cols and doc_map_cols set, wall / core time of the warm run:
+#     turns  estimate   Spark path (20-21 jobs)  driver path (3 jobs)
+#       400     17 KB     5.9 s / 10.0 core-s      1.5 s /  2.3 core-s
+#     2,000     75 KB     4.7 s /  7.7 core-s      1.0 s /  1.5 core-s
+#     8,000    289 KB     4.4 s /  8.9 core-s      1.0 s /  2.0 core-s
+#    30,000    1.1 MB     4.8 s / 12.4 core-s      1.4 s /  2.6 core-s
+#   100,000    3.5 MB     7.5 s / 17.1 core-s      3.2 s /  4.0 core-s
+#   400,000   14.0 MB    24.0 s / 71.7 core-s      9.3 s / 12.0 core-s
+# No crossover inside the measured range; the cap (8 MB) stays inside it,
+# which also bounds what one extend pulls into the driver process. A delta
+# whose plan Spark cannot size (an RDD scan) estimates far above it.
+DRIVER_MAX_DELTA_BYTES = 1 << 23
+
+# column types the driver path writes to doc_stats/doc_map with pyarrow
+# exactly as Spark would write them (Spark writes timestamps as INT96, so
+# a delta carrying one in its doc_map takes the Spark path)
+_DRIVER_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
 )
 
 
@@ -113,31 +173,144 @@ def _resolve_vocabulary(vocab: list, max_tid: int | None) -> tuple[list, list, l
     return updates, fresh, tmap
 
 
-def extend_index(
-    new_corpus: DataFrame,
-    index_dir: str,
-    order_cols: list[str] | None = None,
-    text_col: str = "text",
-    doc_map_cols: list[str] | None = None,
-) -> dict:
-    """Append ``new_corpus`` (raw rows, no doc_id yet unless ``order_cols``
-    is None and a ``doc_id`` column exists) to the index at ``index_dir``.
-    With ``order_cols=None`` every caller-provided doc_id must be at least
-    the index's ``n_docs``; a smaller one raises ``ValueError`` before
-    anything is written. Returns delta metrics."""
-    spark = new_corpus.sparkSession
-    seg = read_segments(spark, index_dir)
-    if seg.get("layout") == "doc":
-        raise NotImplementedError(
-            "extend_index does not support the doc-partitioned layout yet "
-            "(delta docs would need bucket-aligned part_ids, not the "
-            "(term_id, salt) hash); rebuild via build_doc_partitioned"
-        )
-    n_old = int(seg["n_docs"])
-    n_parts = int(seg["n_parts"])
-    block_size = int(seg["block_size"])
-    keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
+def _driver_sized(sel: DataFrame, written: list[str]) -> bool:
+    """The sizing rule: the delta projection's Catalyst ``sizeInBytes``
+    (file sizes for a file scan, no job) is at most
+    :data:`DRIVER_MAX_DELTA_BYTES`, and the ``written`` columns are of
+    types pyarrow writes as Spark does."""
+    est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return est <= DRIVER_MAX_DELTA_BYTES and all(
+        isinstance(sel.schema[c].dataType, _DRIVER_TYPES) for c in written
+    )
 
+
+def _check_caller_ids(min_id, n_old: int) -> None:
+    if min_id is not None and min_id < n_old:
+        raise ValueError(
+            f"extend_index: caller-provided doc_ids must be >= the "
+            f"index's n_docs ({n_old}); the delta's smallest is {min_id}"
+        )
+
+
+def _rewrite_dictionary(
+    spark: SparkSession, index_dir: str, updates: list, fresh: list
+) -> None:
+    """Rewrite the dictionary with :func:`_resolve_vocabulary`'s update and
+    fresh rows: stable term_ids, df/cf updated, fresh terms appended;
+    written to a staging dir, then swapped in (2 jobs)."""
+    upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
+    new_dct = (
+        read_table(spark, index_dir, "dictionary")
+        .join(upd, "term", "left")
+        .select(
+            "term",
+            "term_id",
+            (F.col("df") + F.coalesce(F.col("df_new"), F.lit(0))).alias("df"),
+            (F.col("cf") + F.coalesce(F.col("cf_new"), F.lit(0))).alias("cf"),
+            "n_salts",
+        )
+        .unionByName(local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"]))
+    )
+    tmp = table_path(index_dir, "dictionary__new")
+    new_dct.write.mode("overwrite").parquet(tmp)
+    old_path = table_path(index_dir, "dictionary")
+    shutil.rmtree(old_path)
+    os.rename(tmp, old_path)
+
+
+def _extend_on_driver(
+    sel: DataFrame, index_dir: str, order_cols: list[str] | None,
+    doc_map_cols: list[str] | None, n_old: int, n_parts: int, block_size: int,
+) -> tuple[int, int, int, int] | None:
+    """The driver path (module docstring). Returns (docs, Σdl, postings,
+    bytes), or None for an empty delta, which writes nothing."""
+    spark = sel.sparkSession
+    one = sel.coalesce(1)
+    tbl = (one.sortWithinPartitions(*order_cols) if order_cols else one).toArrow()
+    m = tbl.num_rows
+    if order_cols:
+        doc_id = pa.array(np.arange(n_old, n_old + m, dtype=np.int64))
+    else:
+        doc_id = tbl["doc_id"].cast(to_arrow_type(sel.schema["doc_id"].dataType))
+        _check_caller_ids(pc.min(doc_id).as_py(), n_old)
+    if m == 0:
+        return None
+
+    # (doc_id, term, tf, dl): a repeated caller row sums its tf into one
+    # posting, and dl is the max, as the Spark path's groupBy gives them
+    toks = tbl["_toks"].combine_chunks()
+    dl = pc.list_value_length(toks).cast(pa.int64())
+    parent = pc.list_parent_indices(toks)
+    occ = (
+        pa.table({
+            "doc_id": pc.take(doc_id.cast(pa.int64()), parent),
+            "term": pc.list_flatten(toks),
+            "dl": pc.take(dl, parent),
+        })
+        .group_by(["doc_id", "term"])
+        .aggregate([("dl", "count"), ("dl", "max")])
+        .rename_columns(["doc_id", "term", "tf", "dl"])
+    )
+    voc = occ.group_by("term").aggregate([("doc_id", "count"), ("tf", "sum")])
+    terms = voc["term"]
+    known = read_dictionary(index_dir, pc.field("term").isin(terms))
+    ids = dict(zip(known["term"].to_pylist(),
+                   zip(known["term_id"].to_pylist(), known["n_salts"].to_pylist())))
+    vocab = [
+        (t, df, cf, *ids.get(t, (None, None)))
+        for t, df, cf in zip(terms.to_pylist(), voc["doc_id_count"].to_pylist(),
+                             voc["tf_sum"].to_pylist())
+    ]
+    updates, fresh, tmap = _resolve_vocabulary(
+        vocab, footer_max(index_dir, "dictionary", "term_id")
+    )
+
+    # encode: each term's (term_id, salt, part_id) looked up per occurrence
+    tid = np.array([t for _, t, _ in tmap], dtype=np.int64)
+    salt = np.array([s - 1 for _, _, s in tmap], dtype=np.int32)
+    part = np.array(
+        [hash_part_id(t, s - 1, n_parts) for _, t, s in tmap], dtype=np.int32
+    )
+    at = pc.index_in(occ["term"], pa.array([r[0] for r in tmap])).to_numpy()
+    blocks = encode_partition_pdf(
+        pd.DataFrame({
+            "part_id": part[at], "term_id": tid[at], "salt": salt[at],
+            "doc_id": occ["doc_id"].to_numpy(), "tf": occ["tf"].to_numpy(),
+            "dl": occ["dl"].to_numpy(),
+        }),
+        block_size, carry_part_id=True,
+    )
+    postings = int(blocks["n"].sum())
+    nbytes = int(sum(
+        blocks[c].map(len).sum() for c in ("doc_ids_packed", "tfs_packed", "dls_packed")
+    ))
+    post_schema = arrow_schema(POSTINGS_SCHEMA)
+    per_part = [
+        (p, pa.Table.from_pandas(g[post_schema.names], post_schema, preserve_index=False))
+        for p, g in blocks.groupby("part_id", sort=True)
+    ]
+    doc_stats = pa.table({"doc_id": doc_id, "dl": dl})
+    doc_map = pa.table({
+        "doc_id": doc_id,
+        **{c: tbl[c].cast(to_arrow_type(sel.schema[c].dataType)) for c in doc_map_cols},
+    }) if doc_map_cols else None
+
+    _rewrite_dictionary(spark, index_dir, updates, fresh)
+    for p, t in per_part:
+        write_local(t, index_dir, os.path.join("postings", f"part_id={p}"))
+    write_local(doc_stats, index_dir, "doc_stats")
+    if doc_map is not None:
+        write_local(doc_map, index_dir, "doc_map")
+    return m, int(pc.sum(dl).as_py() or 0), postings, nbytes
+
+
+def _extend_in_spark(
+    new_corpus: DataFrame, sel: DataFrame, index_dir: str,
+    order_cols: list[str] | None, keep: list[str], text_col: str,
+    doc_map_cols: list[str] | None, n_old: int, n_parts: int, block_size: int,
+) -> tuple[int, int, int, int] | None:
+    """The Spark path (module docstring); returns as :func:`_extend_on_driver`."""
+    spark = new_corpus.sparkSession
     cached: list = []
     try:
         # ---- tokenize once: the cached delta is (doc_id, _toks, doc_map cols)
@@ -154,18 +327,12 @@ def extend_index(
             cached.append(delta)
             m = n_out[0]
         else:
-            delta = new_corpus.select(
-                "doc_id", *keep, tokens_col(text_col).alias("_toks")
-            ).persist()
+            delta = sel.persist()
             cached.append(delta)
             m, min_id = delta.agg(F.count("*"), F.min("doc_id")).collect()[0]
-            if m and min_id < n_old:
-                raise ValueError(
-                    f"extend_index: caller-provided doc_ids must be >= the "
-                    f"index's n_docs ({n_old}); the delta's smallest is {min_id}"
-                )
+            _check_caller_ids(min_id, n_old)
         if m == 0:
-            return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}
+            return None
 
         # (doc_id, term, tf, dl) from one groupBy: a repeated caller row
         # sums its tf into one posting, and dl needs no doc_stats join
@@ -185,40 +352,25 @@ def extend_index(
         # existing (term_id, n_salts) comes to the driver in one collect;
         # fresh terms are numbered there from the old max term_id, which the
         # dictionary's Parquet footers hold
-        old_dct = read_table(spark, index_dir, "dictionary")
         vocab = (
             occ.groupBy("term")
             .agg(
                 F.count("*").cast("long").alias("df_new"),
                 F.sum("tf").cast("long").alias("cf_new"),
             )
-            .join(old_dct.select("term", "term_id", "n_salts"), "term", "left")
+            .join(
+                read_table(spark, index_dir, "dictionary").select(
+                    "term", "term_id", "n_salts"
+                ),
+                "term", "left",
+            )
             .select("term", "df_new", "cf_new", "term_id", "n_salts")
             .collect()
         )
         updates, fresh, tmap = _resolve_vocabulary(
             vocab, footer_max(index_dir, "dictionary", "term_id")
         )
-
-        # ---- dictionary rewrite: stable term_ids, df/cf updated, fresh
-        # terms appended; written to a staging dir, then swapped in
-        upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
-        new_dct = (
-            old_dct.join(upd, "term", "left")
-            .select(
-                "term",
-                "term_id",
-                (F.col("df") + F.coalesce(F.col("df_new"), F.lit(0))).alias("df"),
-                (F.col("cf") + F.coalesce(F.col("cf_new"), F.lit(0))).alias("cf"),
-                "n_salts",
-            )
-            .unionByName(local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"]))
-        )
-        tmp = table_path(index_dir, "dictionary__new")
-        new_dct.write.mode("overwrite").parquet(tmp)
-        old_path = table_path(index_dir, "dictionary")
-        shutil.rmtree(old_path)
-        os.rename(tmp, old_path)
+        _rewrite_dictionary(spark, index_dir, updates, fresh)
 
         # ---- encode delta postings into the same part buckets
         enriched = (
@@ -226,13 +378,7 @@ def extend_index(
                 local_relation(spark, tmap, "term string, term_id long, n_salts int"),
                 "term",
             )
-            .withColumn(
-                "salt",
-                F.least(
-                    (F.col("doc_id") * F.col("n_salts") / F.lit(n_old)).cast("int"),
-                    F.col("n_salts") - 1,
-                ).cast("int"),
-            )
+            .withColumn("salt", (F.col("n_salts") - 1).cast("int"))
             .withColumn(
                 "part_id",
                 F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int"),
@@ -263,41 +409,81 @@ def extend_index(
         blocks.write.mode("append").partitionBy("part_id").parquet(
             table_path(index_dir, "postings")
         )
-        mtr = obs.get
 
-        # ---- append doc_stats / doc_map, refresh segments stats
+        # ---- append doc_stats / doc_map; the delta's Σdl is observed on
+        # the doc_stats write
         stats_obs = Observation("extend_doc_stats")
         delta.select(
             "doc_id", F.size("_toks").cast("long").alias("dl")
         ).observe(
-            stats_obs,
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
+            stats_obs, F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
         ).write.mode("append").parquet(table_path(index_dir, "doc_stats"))
         if doc_map_cols:
             delta.select("doc_id", *doc_map_cols).write.mode("append").parquet(
                 table_path(index_dir, "doc_map")
             )
-        # doc_stats now holds the old rows plus the delta's: its count(*) and
-        # avg(dl) follow from the old segments row and the observed delta
-        # with no scan (Σdl / n in Python is correctly rounded, like Spark's
-        # avg over the integer dl column); every other segments column is
-        # preserved
-        n_docs = n_old + int(stats_obs.get["n"])
-        avgdl = (_dl_sum(seg) + int(stats_obs.get["dl_sum"])) / n_docs
-        update_segments(spark, index_dir, n_docs=n_docs, avgdl=avgdl)
-
-        local_df(
-            spark,
-            [(-1, int(m), int(mtr["postings"]), int(mtr["bytes"]), "delta")],
-            LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(table_path(index_dir, "build_lineage"))
+        return (
+            int(m), int(stats_obs.get["dl_sum"]),
+            int(obs.get["postings"]), int(obs.get["bytes"]),
+        )
     finally:
         for p in cached:
             p.unpersist()
+
+
+def extend_index(
+    new_corpus: DataFrame,
+    index_dir: str,
+    order_cols: list[str] | None = None,
+    text_col: str = "text",
+    doc_map_cols: list[str] | None = None,
+) -> dict:
+    """Append ``new_corpus`` (raw rows, no doc_id yet unless ``order_cols``
+    is None and a ``doc_id`` column exists) to the index at ``index_dir``.
+    With ``order_cols=None`` every caller-provided doc_id must be at least
+    the index's ``n_docs``; a smaller one raises ``ValueError`` before
+    anything is written. Returns delta metrics."""
+    seg = read_segments(new_corpus.sparkSession, index_dir)
+    if seg.get("layout") == "doc":
+        raise NotImplementedError(
+            "extend_index does not support the doc-partitioned layout yet "
+            "(delta docs would need bucket-aligned part_ids, not the "
+            "(term_id, salt) hash); rebuild via build_doc_partitioned"
+        )
+    n_old = int(seg["n_docs"])
+    n_parts = int(seg["n_parts"])
+    block_size = int(seg["block_size"])
+    keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
+    id_cols = list(order_cols) if order_cols else ["doc_id"]
+    sel = new_corpus.select(*id_cols, *keep, tokens_col(text_col).alias("_toks"))
+    written = [c for c in ("doc_id", *(doc_map_cols or [])) if c in sel.columns]
+    if _driver_sized(sel, written):
+        out = _extend_on_driver(
+            sel, index_dir, order_cols, doc_map_cols, n_old, n_parts, block_size
+        )
+    else:
+        out = _extend_in_spark(
+            new_corpus, sel, index_dir, order_cols, keep, text_col,
+            doc_map_cols, n_old, n_parts, block_size,
+        )
+    if out is None:
+        return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}
+    m, dl_sum, postings, nbytes = out
+
+    # doc_stats now holds the old rows plus the delta's: its count(*) and
+    # avg(dl) follow from the old segments row and the delta with no scan
+    # (Σdl / n in Python is correctly rounded, like Spark's avg over the
+    # integer dl column); every other segments column is preserved
+    n_docs = n_old + m
+    avgdl = (_dl_sum(seg) + dl_sum) / n_docs
+    update_segments(new_corpus.sparkSession, index_dir, n_docs=n_docs, avgdl=avgdl)
+    write_local(
+        arrow_rows([(-1, m, postings, nbytes, "delta")], LINEAGE_SCHEMA),
+        index_dir, "build_lineage",
+    )
     return {
-        "docs_added": int(m),
-        "postings_emitted": int(mtr["postings"]),
-        "bytes_compressed": int(mtr["bytes"]),
+        "docs_added": m,
+        "postings_emitted": postings,
+        "bytes_compressed": nbytes,
         "n_docs": n_docs,
     }

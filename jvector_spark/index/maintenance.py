@@ -16,10 +16,10 @@ Semantics:
   a full rebuild if ever needed.
 
 Scale notes: the tombstone set is read with pyarrow on the driver and
-applied via a broadcast anti-join (relational paths) or an executor-side
-numpy mask (WAND side). A tombstone set too large to broadcast is the
-signal to run ``compact_index`` — same policy as the reference's cleanup
-threshold.
+applied as a ``doc_id NOT IN`` filter (relational paths) or a numpy mask
+in the WAND kernel, on the driver or in Spark tasks. A tombstone set too
+large to inline in every read's plan is the signal to run
+``compact_index`` — same policy as the reference's cleanup threshold.
 """
 
 from __future__ import annotations
@@ -35,8 +35,8 @@ from .query import decode_postings
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
+    arrow_rows,
     lineage_totals,
-    local_df,
     local_relation,
     read_segments,
     read_table,
@@ -44,6 +44,7 @@ from .storage import (
     table_path,
     tombstone_ids,
     update_segments,
+    write_local,
 )
 
 __all__ = ["delete_docs", "tombstone_ids", "compact_index", "set_bm25_params", "verify_index"]
@@ -54,21 +55,19 @@ TOMBSTONES = "tombstones"
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     """Tombstone the given doc_ids (iterable of int or a 1-col DataFrame).
     Returns the number of tombstones appended. A Python iterable is
-    deduplicated on the driver and appended by a single one-file write
-    job; a DataFrame is deduplicated and counted in Spark."""
-    path = table_path(index_dir, TOMBSTONES)
+    deduplicated on the driver and appended as one file with pyarrow (no
+    Spark job); a DataFrame is deduplicated and counted in Spark."""
     if not isinstance(doc_ids, DataFrame):
         ids = sorted({int(d) for d in doc_ids})
         if ids:
-            local_df(spark, [(d,) for d in ids], "doc_id long").write.mode(
-                "append"
-            ).parquet(path)
+            write_local(arrow_rows([(d,) for d in ids], "doc_id long"),
+                        index_dir, TOMBSTONES)
         return len(ids)
     df = doc_ids.select(
         F.col(doc_ids.columns[0]).cast("long").alias("doc_id")
     ).distinct()
     n = df.count()
-    df.write.mode("append").parquet(path)
+    df.write.mode("append").parquet(table_path(index_dir, TOMBSTONES))
     return n
 
 
@@ -180,9 +179,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # build_lineage is REWRITTEN with post-compaction totals so verify_index
     # reconciles against what is actually on disk (a compacted index must
     # not raise a false corruption alarm against pre-compaction lineage)
-    local_df(
-        spark, [(-1, n_docs, postings_live, bytes_live, "compacted")], LINEAGE_SCHEMA
-    ).write.mode("overwrite").parquet(table_path(index_dir, "build_lineage"))
+    write_local(
+        arrow_rows([(-1, n_docs, postings_live, bytes_live, "compacted")], LINEAGE_SCHEMA),
+        index_dir, "build_lineage", mode="overwrite",
+    )
     shutil.rmtree(table_path(index_dir, TOMBSTONES), ignore_errors=True)
     return {
         "docs_removed": len(dead),

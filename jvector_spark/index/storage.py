@@ -38,9 +38,13 @@ Driver-sized tables go through Arrow on the driver; Spark jobs are only for
 corpus-sized tables. The segments row, the tombstone set and the lineage
 rows are read with pyarrow straight from the index directory
 (:func:`read_local`), and every relation built from driver-local rows
-(query relations, bucket and offset maps, metadata rows to write) is a
-pandas→Arrow local relation (:func:`local_relation`), which Spark scans
-without a job or a Python worker. Index directories are therefore
+(query relations, bucket and offset maps) is a pandas→Arrow local
+relation (:func:`local_relation`), which Spark scans without a job or a
+Python worker. Driver-sized rows are written the same way, with pyarrow
+and no job (:func:`write_local`): the segments row, tombstone appends,
+lineage rows, and a driver-sized extend's postings, doc_stats and doc_map
+delta. An append adds one file; an overwrite swaps in a sibling directory
+that carries Spark's ``_SUCCESS`` marker. Index directories are therefore
 driver-visible paths — the same assumption the ``os.rename`` /
 ``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
 corpus-sized tables (postings, dictionary, doc_stats) are read with their
@@ -49,9 +53,9 @@ schema-inference job. An aggregate the Parquet footers already hold is
 read from them, not computed by a job: ``extend_index`` takes the
 dictionary's max term_id from its row-group statistics
 (:func:`footer_max`). An extend's delta vocabulary is delta-sized, so it
-is collected to the driver with its existing (term_id, n_salts) in one
-round-trip; fresh term ids are numbered there, and the dictionary update
-and encode map go back to Spark as local relations.
+is resolved on the driver against its existing (term_id, n_salts); fresh
+term ids are numbered there, and only the dictionary rewrite, the one
+corpus-sized step, goes back to Spark.
 
 A query's own slice of the index is driver-sized too. Every indexed read
 looks its terms up in the dictionary with a pyarrow dataset filter on
@@ -71,6 +75,8 @@ schema in its own footer (:func:`local_schema`).
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 import pandas as pd
 import pyarrow as pa
@@ -154,22 +160,27 @@ def sized_shuffle_n(df: DataFrame, approx_rows: float | None) -> int:
     return max(1, min(n, -(-int(approx_rows) // ENCODE_ROWS_PER_TASK)))
 
 
-def _ddl_names(schema: str) -> list[str]:
-    """Column names from a DDL schema string, splitting only on top-level
-    commas (``array<double>`` etc. stay intact)."""
-    names, depth, cur = [], 0, []
+def _ddl_cols(schema: str) -> list[str]:
+    """The ``name type`` items of a DDL schema string, splitting only on
+    top-level commas (``array<double>`` etc. stay intact)."""
+    cols, depth, cur = [], 0, []
     for ch in schema:
         if ch == "<":
             depth += 1
         elif ch == ">":
             depth -= 1
         if ch == "," and depth == 0:
-            names.append("".join(cur).strip().split()[0])
+            cols.append("".join(cur).strip())
             cur = []
         else:
             cur.append(ch)
-    names.append("".join(cur).strip().split()[0])
-    return names
+    cols.append("".join(cur).strip())
+    return cols
+
+
+def _ddl_names(schema: str) -> list[str]:
+    """Column names from a DDL schema string."""
+    return [c.split()[0] for c in _ddl_cols(schema)]
 
 
 def local_relation(
@@ -203,6 +214,72 @@ def local_relation(
         else pd.DataFrame({n: [] for n in names})
     )
     return spark.createDataFrame(pdf, schema)
+
+
+# the Arrow types of the DDL types in the schemas of driver-written rows;
+# each is written as the Parquet type Spark writes for it
+_ARROW_TYPES = {
+    "int": pa.int32(), "long": pa.int64(), "string": pa.string(), "binary": pa.binary(),
+}
+
+
+def arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a DDL schema string of flat columns."""
+    fields = []
+    for col in _ddl_cols(schema):
+        name, typ = col.split()
+        fields.append(pa.field(name, _ARROW_TYPES[typ]))
+    return pa.schema(fields)
+
+
+def arrow_rows(rows: list, schema: str) -> pa.Table:
+    """Driver-local rows (tuples) as an Arrow table of a flat DDL
+    ``schema``: the pyarrow counterpart of :func:`local_relation`, for
+    :func:`write_local`."""
+    sch = arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [() for _ in sch]
+    return pa.table([pa.array(c, f.type) for c, f in zip(cols, sch)], schema=sch)
+
+
+def write_local(table: pa.Table, index_dir: str, name: str,
+                mode: str = "append") -> None:
+    """Write driver-sized rows to a table as one Parquet file, with pyarrow
+    on the driver (no Spark job). The file is written under a ``.``-name,
+    which readers skip, and renamed into place once complete.
+    ``mode="append"`` adds the file to the table directory (created when
+    absent). ``mode="overwrite"`` writes it to a hidden sibling directory
+    with Spark's ``_SUCCESS`` marker, which build resume and streaming
+    test for, and swaps that directory in for the table."""
+    path = table_path(index_dir, name)
+    if mode == "append":
+        os.makedirs(path, exist_ok=True)
+        _write_file(table, path)
+        return
+    if mode != "overwrite":
+        raise ValueError(f"unknown write mode {mode!r}")
+    parent, base = os.path.split(path)
+    tag = uuid.uuid4().hex
+    new = os.path.join(parent, f".{base}.{tag}.new")
+    os.makedirs(new)
+    _write_file(table, new)
+    open(os.path.join(new, "_SUCCESS"), "wb").close()
+    if os.path.exists(path):
+        old = os.path.join(parent, f".{base}.{tag}.old")
+        os.rename(path, old)
+        os.rename(new, path)
+        shutil.rmtree(old)
+    else:
+        os.rename(new, path)
+
+
+def _write_file(table: pa.Table, directory: str) -> None:
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, "." + name)
+    # zstd, the codec the session sets for Spark's own Parquet writes; no
+    # pandas or Arrow schema metadata in the footer (Spark ignores both)
+    pq.write_table(table.replace_schema_metadata(None), tmp,
+                   compression="zstd", store_schema=False)
+    os.rename(tmp, os.path.join(directory, name))
 
 
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -409,20 +486,20 @@ def update_segments(spark: SparkSession, index_dir: str, **updates) -> dict:
     if unknown:
         raise KeyError(f"unknown segments column(s): {sorted(unknown)}")
     seg.update(updates)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in from_arrow_schema(tbl.schema)
+    write_local(
+        pa.Table.from_pylist([seg], tbl.schema.remove_metadata()),
+        index_dir, "segments", mode="overwrite",
     )
-    row = tuple(seg[name] for name in tbl.column_names)
-    write_table(local_df(spark, [row], schema), index_dir, "segments")
     return seg
 
 
 def tombstone_ids(spark: SparkSession, index_dir: str) -> set[int] | None:
     """The current tombstone set (deleted doc_ids), or None if empty/absent.
-    Driver-side set is intentional: it is broadcast into scoring UDFs, the
-    same way the reference keeps deletions as an in-memory bitset
-    (OnHeapGraphIndex deletedNodes; marked via GraphIndexBuilder.java:681-683).
-    A set too large to broadcast is the signal to compact."""
+    Driver-side set is intentional: reads mask it with a ``NOT IN`` filter
+    (:func:`ids_in`) or a numpy mask in the WAND kernel, the same way the
+    reference keeps deletions as an in-memory bitset (OnHeapGraphIndex
+    deletedNodes; marked via GraphIndexBuilder.java:681-683). A set too
+    large to inline in every read's plan is the signal to compact."""
     tbl = read_local(index_dir, "tombstones")
     if tbl is None:
         return None

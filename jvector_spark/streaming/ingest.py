@@ -173,10 +173,10 @@ def flush_staged(
     """Merge ALL staged batches into the index in ONE ``extend_index``
     delta — the amortization point of the reference's cleanup-threshold
     idiom (GraphIndexBuilder.java:475-511: inserts accumulate, one cleanup
-    pass merges). An extend's fixed costs (the id pass, the one
-    delta-vocabulary collect, the dictionary rewrite, the segments and
-    lineage writes: about 20 Spark jobs whatever the delta's size) are
-    paid once per flush instead of once per microbatch.
+    pass merges). An extend's fixed costs (the tokenized collect and the
+    dictionary rewrite, 3 Spark jobs for a driver-sized delta, about 20
+    on the Spark path) are paid once per flush instead of once per
+    microbatch.
 
     Crash semantics match the per-batch path: 'pending' rows for every
     staged batch are written BEFORE the (non-atomic) extend and 'complete'

@@ -7,8 +7,10 @@ on every column, and compared row for row. No Spark session is started.
 
 Usage: python tools/diff_index.py INDEX_A INDEX_B
 
-Prints one line per table and exits 1 when any table differs or exists on
-one side only, 0 when every table holds the same rows.
+or, from Python, ``diff_dirs(INDEX_A, INDEX_B)`` for {table: equal}.
+
+The command prints one line per table and exits 1 when any table differs
+or exists on one side only, 0 when every table holds the same rows.
 """
 
 from __future__ import annotations
@@ -89,25 +91,35 @@ def tables(index_dir: str) -> set[str]:
     }
 
 
-def main(argv: list[str]) -> int:
-    if len(argv) != 2:
-        print("usage: python tools/diff_index.py INDEX_A INDEX_B", file=sys.stderr)
-        return 2
-    dir_a, dir_b = argv
-    bad = 0
+def _table_diffs(dir_a: str, dir_b: str):
+    """(table, report line, equal) for every table of either directory."""
     for name in sorted(tables(dir_a) | tables(dir_b)):
         pa_, pb = os.path.join(dir_a, name), os.path.join(dir_b, name)
         if not (os.path.isdir(pa_) and os.path.isdir(pb)):
-            print(f"{name}: only in {dir_a if os.path.isdir(pa_) else dir_b}")
-            bad += 1
+            yield name, f"{name}: only in {dir_a if os.path.isdir(pa_) else dir_b}", False
             continue
         a, b = read_rows(pa_), read_rows(pb)
         why = compare(a, b)
         if why is None:
-            print(f"{name}: equal ({0 if a is None else a.num_rows} rows)")
+            yield name, f"{name}: equal ({0 if a is None else a.num_rows} rows)", True
         else:
-            print(f"{name}: DIFFERENT: {why}")
-            bad += 1
+            yield name, f"{name}: DIFFERENT: {why}", False
+
+
+def diff_dirs(dir_a: str, dir_b: str) -> dict[str, bool]:
+    """{table: whether both index directories hold its same rows}, for
+    every table of either directory."""
+    return {name: equal for name, _, equal in _table_diffs(dir_a, dir_b)}
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) != 2:
+        print("usage: python tools/diff_index.py INDEX_A INDEX_B", file=sys.stderr)
+        return 2
+    bad = 0
+    for _, line, equal in _table_diffs(*argv):
+        print(line)
+        bad += not equal
     print("all tables equal" if not bad else f"{bad} table(s) differ")
     return 1 if bad else 0
 
