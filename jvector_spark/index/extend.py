@@ -30,7 +30,8 @@ Design:
 
 Two paths, one on-disk result. A delta is *driver-sized* when the
 Catalyst size estimate of its tokenized projection (``sizeInBytes``, known
-without a job) is at most :data:`DRIVER_MAX_DELTA_BYTES`. Such a delta is
+without a job) is at most :data:`DRIVER_MAX_DELTA_BYTES`, a cap set by
+the driver path's peak memory (measured at the constant). Such a delta is
 extended in 3 Spark jobs:
 - one job tokenizes the delta in Catalyst (``tokens_col``) and collects it
   to the driver as Arrow, sorted by ``order_cols`` within one partition,
@@ -49,7 +50,8 @@ extended in 3 Spark jobs:
   doc_map, segments and the lineage row are written with pyarrow
   (``storage.write_local``, no job).
 
-A larger delta runs the Spark path (20 jobs on a 400-turn delta):
+A delta over that memory cap, or one whose plan Spark cannot size, runs the
+Spark path (20 jobs on a 400-turn delta):
 - the id pass tokenizes: ``assign_dense_ids(pre_persist=...)`` caches
   (doc_id, token array, doc_map columns), and the delta's text is never
   read again (5 jobs). With caller doc_ids (``order_cols=None``) one
@@ -88,7 +90,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.analysis import tokens_col
@@ -117,27 +118,25 @@ from .storage import (
 # columns, doc_map columns, token array; for a Parquet scan, the files'
 # bytes scaled to those columns) is at most this constant.
 #
-# Measured on local[4]: transcript deltas into a copy of a 6,000-turn
-# index, order_cols and doc_map_cols set, wall / core time of the warm run:
-#     turns  estimate   Spark path (20-21 jobs)  driver path (3 jobs)
-#       400     17 KB     5.9 s / 10.0 core-s      1.5 s /  2.3 core-s
-#     2,000     75 KB     4.7 s /  7.7 core-s      1.0 s /  1.5 core-s
-#     8,000    289 KB     4.4 s /  8.9 core-s      1.0 s /  2.0 core-s
-#    30,000    1.1 MB     4.8 s / 12.4 core-s      1.4 s /  2.6 core-s
-#   100,000    3.5 MB     7.5 s / 17.1 core-s      3.2 s /  4.0 core-s
-#   400,000   14.0 MB    24.0 s / 71.7 core-s      9.3 s / 12.0 core-s
-# No crossover inside the measured range; the cap (8 MB) stays inside it,
-# which also bounds what one extend pulls into the driver process. A delta
-# whose plan Spark cannot size (an RDD scan) estimates far above it.
-DRIVER_MAX_DELTA_BYTES = 1 << 23
-
-# column types the driver path writes to doc_stats/doc_map with pyarrow
-# exactly as Spark would write them (Spark writes timestamps as INT96, so
-# a delta carrying one in its doc_map takes the Spark path)
-_DRIVER_TYPES = (
-    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
-)
+# Speed sets no cap: on local[4], transcript deltas into a copy of a
+# 6,000-turn index, the driver path was faster at every measured size, from
+# 400 turns (17 KB; 2.3 vs 10.0 core-s) to 400,000 (14 MB; 12.0 vs 71.7
+# core-s). Driver memory does. Measured the same way (order_cols and
+# doc_map_cols set; peak RSS of the driver's Python process during the
+# extend, above its level before it):
+#     turns  estimate  collected Arrow  peak RSS
+#     2,000     64 KB                     22 MB
+#    30,000    0.9 MB                    171 MB
+#   100,000    3.0 MB          17 MB     480 MB
+#   200,000    5.9 MB          34 MB    1.07 GB
+# The peak is ~180x the estimate; the collect itself (~6x) is also bounded
+# by spark.driver.maxResultSize (1 GB by default), past which the toArrow
+# job fails before anything is written. The cap holds the peak near 0.75 GB,
+# under that same 1 GB. The Spark path is the fallback for what the driver
+# path cannot hold: larger deltas, and plans Spark cannot size (an RDD scan
+# estimates at Long.MaxValue). No benchmark workload runs above the cap, so
+# the two paths' costs there are unmeasured.
+DRIVER_MAX_DELTA_BYTES = 1 << 22
 
 
 def _dl_sum(seg: dict) -> int:
@@ -173,15 +172,12 @@ def _resolve_vocabulary(vocab: list, max_tid: int | None) -> tuple[list, list, l
     return updates, fresh, tmap
 
 
-def _driver_sized(sel: DataFrame, written: list[str]) -> bool:
+def _driver_sized(sel: DataFrame) -> bool:
     """The sizing rule: the delta projection's Catalyst ``sizeInBytes``
     (file sizes for a file scan, no job) is at most
-    :data:`DRIVER_MAX_DELTA_BYTES`, and the ``written`` columns are of
-    types pyarrow writes as Spark does."""
+    :data:`DRIVER_MAX_DELTA_BYTES`."""
     est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return est <= DRIVER_MAX_DELTA_BYTES and all(
-        isinstance(sel.schema[c].dataType, _DRIVER_TYPES) for c in written
-    )
+    return est <= DRIVER_MAX_DELTA_BYTES
 
 
 def _check_caller_ids(min_id, n_old: int) -> None:
@@ -197,20 +193,23 @@ def _rewrite_dictionary(
 ) -> None:
     """Rewrite the dictionary with :func:`_resolve_vocabulary`'s update and
     fresh rows: stable term_ids, df/cf updated, fresh terms appended;
-    written to a staging dir, then swapped in (2 jobs)."""
-    upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
-    new_dct = (
-        read_table(spark, index_dir, "dictionary")
-        .join(upd, "term", "left")
-        .select(
+    written to a staging dir, then swapped in (2 jobs). An empty row list
+    is left out of the plan: an empty local relation is a pickled RDD scan,
+    one more job."""
+    new_dct = read_table(spark, index_dir, "dictionary")
+    if updates:
+        upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
+        new_dct = new_dct.join(upd, "term", "left").select(
             "term",
             "term_id",
             (F.col("df") + F.coalesce(F.col("df_new"), F.lit(0))).alias("df"),
             (F.col("cf") + F.coalesce(F.col("cf_new"), F.lit(0))).alias("cf"),
             "n_salts",
         )
-        .unionByName(local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"]))
-    )
+    if fresh:
+        new_dct = new_dct.unionByName(
+            local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"])
+        )
     tmp = table_path(index_dir, "dictionary__new")
     new_dct.write.mode("overwrite").parquet(tmp)
     old_path = table_path(index_dir, "dictionary")
@@ -252,7 +251,9 @@ def _extend_on_driver(
         .rename_columns(["doc_id", "term", "tf", "dl"])
     )
     voc = occ.group_by("term").aggregate([("doc_id", "count"), ("tf", "sum")])
-    terms = voc["term"]
+    # one typed array: the value set of a filter must have the column's type,
+    # which a ChunkedArray of no chunks (no tokens in the delta) does not give
+    terms = voc["term"].combine_chunks()
     known = read_dictionary(index_dir, pc.field("term").isin(terms))
     ids = dict(zip(known["term"].to_pylist(),
                    zip(known["term_id"].to_pylist(), known["n_salts"].to_pylist())))
@@ -271,7 +272,9 @@ def _extend_on_driver(
     part = np.array(
         [hash_part_id(t, s - 1, n_parts) for _, t, s in tmap], dtype=np.int32
     )
-    at = pc.index_in(occ["term"], pa.array([r[0] for r in tmap])).to_numpy()
+    at = pc.index_in(
+        occ["term"], pa.array([r[0] for r in tmap], occ["term"].type)
+    ).to_numpy()
     blocks = encode_partition_pdf(
         pd.DataFrame({
             "part_id": part[at], "term_id": tid[at], "salt": salt[at],
@@ -456,8 +459,7 @@ def extend_index(
     keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
     id_cols = list(order_cols) if order_cols else ["doc_id"]
     sel = new_corpus.select(*id_cols, *keep, tokens_col(text_col).alias("_toks"))
-    written = [c for c in ("doc_id", *(doc_map_cols or [])) if c in sel.columns]
-    if _driver_sized(sel, written):
+    if _driver_sized(sel):
         out = _extend_on_driver(
             sel, index_dir, order_cols, doc_map_cols, n_old, n_parts, block_size
         )

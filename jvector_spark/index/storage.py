@@ -275,10 +275,12 @@ def write_local(table: pa.Table, index_dir: str, name: str,
 def _write_file(table: pa.Table, directory: str) -> None:
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(directory, "." + name)
-    # zstd, the codec the session sets for Spark's own Parquet writes; no
-    # pandas or Arrow schema metadata in the footer (Spark ignores both)
+    # zstd, the codec the session sets for Spark's own Parquet writes;
+    # timestamps as INT96, Spark's default Parquet timestamp type; no pandas
+    # or Arrow schema metadata in the footer (Spark ignores both)
     pq.write_table(table.replace_schema_metadata(None), tmp,
-                   compression="zstd", store_schema=False)
+                   compression="zstd", store_schema=False,
+                   use_deprecated_int96_timestamps=True)
     os.rename(tmp, os.path.join(directory, name))
 
 

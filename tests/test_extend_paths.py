@@ -70,17 +70,23 @@ def _odd_keys(df):
     )
 
 
+# Spark jobs an extend may run on each path, measured on these tests: the
+# driver path 3 (the tokenized collect, 2 for the dictionary rewrite); the
+# Spark path 20 with order_cols, 15 with caller ids or with no tokens.
+# An empty delta stops after the collect, or after the Spark path's count
+JOB_BUDGET = {"driver": 3, "spark": 20}
+
+
 def _extend_both(spark, monkeypatch, base: str, tmp_path, make_call) -> dict:
     """Extend a copy of ``base`` on each path; return {path: index dir}.
-    The driver path must run at most 3 Spark jobs."""
+    Each path must stay within its :data:`JOB_BUDGET`."""
     out = {}
     for path in PATHS:
         d = str(tmp_path / path)
         shutil.copytree(base, d)
         _force(monkeypatch, path)
         _, jobs = _jobs(spark, lambda: make_call(d))
-        if path == "driver":
-            assert jobs <= 3, f"driver-path extend ran {jobs} Spark jobs"
+        assert jobs <= JOB_BUDGET[path], f"{path}-path extend ran {jobs} Spark jobs"
         out[path] = d
     return out
 
@@ -184,6 +190,56 @@ def test_empty_delta_writes_nothing(spark, monkeypatch, corpus, base_index, tmp_
     )
     for d in dirs.values():
         assert _snapshot(d) == before
+
+
+def test_delta_of_empty_texts(spark, monkeypatch, corpus, base_index, tmp_path):
+    """Texts that all tokenize to nothing add documents of length 0 and no
+    postings; the dictionary keeps its rows."""
+    from jvector_spark.index.storage import read_segments
+
+    raw = corpus.filter((F.col("doc_id") >= 800) & (F.col("doc_id") < 830)).withColumn(
+        "text",
+        F.when(F.col("turn_idx") % 2 == 0, F.lit("")).otherwise(F.lit("!!! ... ???")),
+    )
+    delta = _file(raw.select(*KEYS, "text"), tmp_path, "delta")
+    dirs = _extend_both(
+        spark, monkeypatch, base_index, tmp_path,
+        lambda d: E.extend_index(delta, d, order_cols=KEYS, doc_map_cols=KEYS),
+    )
+    _assert_same_index(dirs["spark"], dirs["driver"])
+    same = diff_dirs(base_index, dirs["driver"])
+    assert same["postings"] and same["dictionary"], same
+    seg = read_segments(spark, dirs["driver"])
+    old = read_segments(spark, base_index)
+    assert seg["n_docs"] == old["n_docs"] + 30
+    assert math.isclose(seg["avgdl"] * seg["n_docs"], old["avgdl"] * old["n_docs"])
+
+
+def test_timestamp_doc_map_column(spark, monkeypatch, corpus, tmp_path):
+    """The driver path writes a timestamp doc_map column as Spark does
+    (INT96), and Spark reads the instants back."""
+    import pyarrow.parquet as pq
+
+    from jvector_spark.index.build import build_index
+
+    cols = [*KEYS, "ts"]
+    base = str(tmp_path / "base")
+    build_index(corpus.filter(F.col("doc_id") < 200), base, n_parts=2, doc_map_cols=cols)
+    raw = corpus.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 300))
+    delta = _file(raw.select(*cols, "text"), tmp_path, "delta")
+    dirs = _extend_both(
+        spark, monkeypatch, base, tmp_path,
+        lambda d: E.extend_index(delta, d, order_cols=KEYS, doc_map_cols=cols),
+    )
+    _assert_same_index(dirs["spark"], dirs["driver"], n_tables=6)
+
+    doc_map = os.path.join(dirs["driver"], "doc_map")
+    for f in os.listdir(doc_map):
+        if f.endswith(".parquet"):
+            col = pq.ParquetFile(os.path.join(doc_map, f)).schema.column(3)
+            assert (col.name, col.physical_type) == ("ts", "INT96")
+    got = spark.read.parquet(doc_map).filter(F.col("doc_id") >= 200).select(*cols)
+    assert sorted(got.collect()) == sorted(raw.select(*cols).collect())
 
 
 @pytest.mark.parametrize("path", PATHS)
