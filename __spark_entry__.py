@@ -81,14 +81,11 @@ def _index_for(spark: SparkSession, sf_dir: str) -> str:
     from jvector_spark.index.build import build_index
 
     d = tempfile.mkdtemp(prefix="jvidx_entry_")
-    # single-shot fast path with the df-exact salt plan: no staging
-    # round-trip, no per-part jobs, and a block layout byte-identical to
-    # the checkpointed build (postings_build's block_meta is a contract
-    # row). The checkpointed/resumable path keeps its own test coverage.
+    # the one build pipeline; its df salt plan fixes the block layout
+    # (postings_build's block_meta is a contract row)
     build_index(
         _docs(spark, sf_dir), d, doc_map_cols=["source"],
         salt_threshold=256, target_salt_postings=256, n_parts=4,
-        checkpointed=False, exact_df_salts=True,
     )
     _INDEX_CACHE[sf_dir] = d
     return d

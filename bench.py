@@ -877,11 +877,10 @@ def transcripts_job(
 
     cpu0 = _cpu_sample()
     t0 = time.perf_counter()
-    # fused single-shot build: id-assignment + tokenize + text-drop inside
-    # the one caching pass (the round-1 chain cached the corpus 3× and its
-    # cache traffic capped 2→8-core scaling at 0.40); the checkpointed/
-    # resumable path is covered by its own tests and differs only by one
-    # staging write+read and per-part jobs
+    # fused build: id-assignment + tokenize + text-drop inside the one
+    # caching pass (the round-1 chain cached the corpus 3× and its cache
+    # traffic capped 2→8-core scaling at 0.40); build_index runs the same
+    # pipeline over an id'd corpus
     build_meta = build_index_transcripts(
         src, idx_dir, ["conv_id", "turn_idx"],
         doc_map_cols=["conv_id", "turn_idx"],

@@ -54,7 +54,6 @@ def cmd_build(args) -> int:
             doc_map_cols=order_cols,
             n_parts=args.n_parts,
             resume=args.resume,
-            checkpointed=not args.fast,
         )
     if args.positions:
         from .index.positions import add_positions
@@ -170,10 +169,6 @@ def main(argv: list[str] | None = None) -> int:
         "--layout", choices=["term", "doc"], default="term",
         help="term = salted term-partitioned (lookup-optimal); "
         "doc = doc-partitioned scatter-gather (QPS-optimal)",
-    )
-    b.add_argument(
-        "--fast", action="store_true",
-        help="single-shot build (no per-part checkpoints)",
     )
     b.set_defaults(fn=cmd_build)
 

@@ -31,29 +31,39 @@ the reference offering both in-memory and on-disk search tiers):
 from __future__ import annotations
 
 import math
-import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE, BM25_B, BM25_K1
 from ..functions.analysis import TOKEN_PATTERN, tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import _bg_job, _bg_join, _encode_occ_map_fn
+from .build import (
+    SEGMENTS_SCHEMA,
+    _bg_job,
+    _bg_join,
+    _encode_occ_map_fn,
+    exchange_row,
+    packed_bytes_col,
+    vocabulary,
+    write_doc_stats,
+)
 from .query import SPARSE_EXACT_LIMIT, lookup_terms, wand_topk_arrays
 from .storage import (
     FORMAT_VERSION,
+    LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
-    local_df,
+    arrow_rows,
     local_relation,
     read_table,
-    shuffle_n,
     sized_shuffle_n,
     table_path,
     tombstone_ids,
+    write_local,
     write_table,
 )
 
@@ -69,179 +79,106 @@ def build_doc_partitioned(
     block_size: int = BLOCK_SIZE,
     n_buckets: int = 32,
 ) -> dict:
-    """Build the doc-partitioned index: one corpus-sized shuffle
-    (occurrences → doc_bucket), per-bucket tf aggregation + block encode
-    inside the Arrow encoder, postings hive-partitioned by ``bucket`` and
-    sorted by (term_id, doc_id) within files so bucket-local term lookups
-    prune row groups."""
-    spark = corpus.sparkSession
-    from pyspark import StorageLevel
-
-    corpus = corpus.persist()
-
-    occ = (
-        corpus.select(
-            F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
-        )
-        .select(
-            "doc_id", F.size("_toks").alias("dl"), F.explode("_toks").alias("term")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    dl_rel = occ.groupBy("doc_id").agg(F.first("dl").cast("long").alias("dl"))
-    dstats = (
-        corpus.select(F.col(id_col).alias("doc_id"))
-        .join(dl_rel, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("dl"), F.lit(0)).alias("dl"))
-    )
-    obs_stats = Observation("dp_corpus_stats")
-    dstats = dstats.observe(
-        obs_stats, F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
-        F.max("dl").alias("max_dl"),
-        F.max("doc_id").alias("max_doc"), F.min("doc_id").alias("min_doc"),
-    )
-    write_table(dstats, index_dir, "doc_stats")
-    st = obs_stats.get
-    n_docs, avgdl = int(st["n"]), float(st["avgdl"])
-    max_dl = int(st["max_dl"] or 0)
-    max_doc, min_doc = int(st["max_doc"] or 0), int(st["min_doc"] or 0)
-    bucket_width = max(1, math.ceil(n_docs / n_buckets))
-
+    """Build the doc-partitioned index with the term-partitioned build's
+    steps (index.build): one cached token relation, the doc_stats pass,
+    the vocabulary aggregate (the dictionary is final before the encode),
+    and one corpus-sized shuffle of one-column occurrence rows, here
+    routed by doc bucket. tf is counted and blocks are encoded inside the
+    Arrow encoder; postings are hive-partitioned by ``bucket`` and sorted
+    by (term_id, block_id) within files so bucket-local term lookups prune
+    row groups."""
+    keep = [c for c in (doc_map_cols or []) if c != id_col]
+    toks = corpus.select(
+        F.col(id_col), tokens_col(text_col).alias("_toks"), *keep
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     pins: list = []
-    n_terms: list = []
-    dct = occ.groupBy("term").agg(F.count("*").cast("long").alias("cf"))
-    dct = assign_dense_ids(
-        dct, ["term"], id_col="term_id", pins=pins, n_out=n_terms
-    ).persist()
-    # doc_map is independent of the encode critical path — overlap it
-    # (same _bg_job discipline as the term-partitioned single-shot build)
-    dm_thread = dm_holder = None
-    if doc_map_cols:
-        dm_sel = corpus.select(id_col, *doc_map_cols)
-        dm_thread, dm_holder = _bg_job(
-            lambda: write_table(dm_sel, index_dir, "doc_map")
-        )
+    try:
+        st = write_doc_stats(toks, id_col, index_dir)
+        n_docs, avgdl = int(st["n"]), float(st["avgdl"])
+        bucket_width = max(1, math.ceil(n_docs / n_buckets))
 
-    enriched = (
-        occ.join(F.broadcast(dct.select("term", "term_id")), "term")
-        # the bucket rides in BOTH part_id (hive partitioning) and salt
-        # (the encoder's grouping key): encoder groups are (term_id, salt),
-        # so carrying the bucket in salt guarantees no posting block ever
-        # straddles a bucket boundary even when one shuffle task holds
-        # several buckets. Doc-partitioning subsumes hot-term salting — a
-        # term's in-bucket run is capped at bucket_width docs by layout.
-        .withColumn(
-            "salt", (F.col("doc_id") / F.lit(bucket_width)).cast("int")
-        )
-    )
-    # same PACKED two-int64 exchange row as build.py (see the narrated
-    # rationale there): ts = term_id << salt_bits | bucket, dd = doc_id <<
-    # dl_bits | dl. The repartition expression extracts the bucket from ts
-    # at shuffle-write time — routing is computed map-side, so only the
-    # two packed columns ride the corpus-sized exchange.
-    vocab_n = n_terms[0]  # from assign_dense_ids' own count collect
-    salt_bits = max(1, int(n_buckets).bit_length())
-    dl_bits = max(1, max(max_dl, 1).bit_length())
-    packable = (
-        min_doc >= 0
-        and ((vocab_n - 1) << salt_bits) + (1 << salt_bits) - 1 < (1 << 63)
-        and (max_doc << dl_bits) + max_dl < (1 << 63)
-    )
-    if packable:
-        enriched = enriched.select(
-            (F.shiftleft("term_id", salt_bits)
-             + F.col("salt").cast("long")).alias("ts"),
-            (F.shiftleft(F.col("doc_id"), dl_bits) + F.col("dl")).alias("dd"),
-        )
-        part_expr = [F.col("ts").bitwiseAND(F.lit((1 << salt_bits) - 1))]
-        sort_cols = ["ts", "dd"]
-        encode_fn = _encode_occ_map_fn(
-            block_size, presorted=True, carry_part_id=False,
-            packed_bits=(salt_bits, dl_bits),
-        )
-    else:
-        enriched = enriched.select("term_id", "salt", "doc_id", "dl")
-        part_expr = [F.col("salt")]
-        sort_cols = ["term_id", "salt", "doc_id"]
-        encode_fn = _encode_occ_map_fn(
-            block_size, presorted=True, carry_part_id=False
-        )
-    obs = Observation("dp_build_metrics")
-    blocks = (
-        # JVM-side Tungsten sort feeds the worker run-length-ready input —
-        # same presorted fast path as the term-partitioned build. part_id
-        # IS the bucket (== salt), so it is re-derived over the block
-        # relation after encoding instead of riding every occurrence row
-        # through the exchange (same minimal-row rationale as build.py).
-        enriched.repartition(
-            sized_shuffle_n(enriched, n_docs * avgdl), *part_expr
-        )
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(encode_fn, schema=POSTINGS_SCHEMA)
-        .withColumn("part_id", F.col("salt"))
-        .observe(
-            obs,
-            F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-            (
-                F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-            ).alias("bytes"),
-        )
-    )
-    (
-        blocks.sortWithinPartitions("term_id", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("part_id")
-        .parquet(table_path(index_dir, "postings"))
-    )
-    m = obs.get
+        n_terms: list = []
+        dct = assign_dense_ids(
+            vocabulary(toks), ["term"], id_col="term_id", pins=pins, n_out=n_terms
+        ).persist()
+        pins.append(dct)
+        # the dictionary and doc_map are independent of the encode — overlap
+        # them (same _bg_job discipline as the term-partitioned build)
+        jobs = [_bg_job(lambda: write_table(
+            dct.select("term", "term_id", "df", "cf", F.lit(1).alias("n_salts")),
+            index_dir, "dictionary",
+        ))]
+        if doc_map_cols:
+            dm = toks.select(id_col, *doc_map_cols)
+            jobs.append(_bg_job(lambda: write_table(dm, index_dir, "doc_map")))
 
-    # lineage + segments depend only on the already-observed encode
-    # metrics — overlap them with the dictionary finalize (same _bg_job
-    # overlap as the term-partitioned single-shot build)
-    def _write_meta() -> None:
-        local_df(
-            spark,
-            [(-1, n_docs, int(m["postings"]), int(m["bytes"]), "complete")],
-            "part_id int, docs_indexed long, postings_emitted long, "
-            "bytes_compressed long, status string",
-        ).write.mode("overwrite").parquet(table_path(index_dir, "build_lineage"))
-        seg = local_df(
-            spark,
-            [
-                (
-                    FORMAT_VERSION, n_docs, avgdl, float(k1), float(b),
-                    int(block_size), TOKEN_PATTERN, int(n_buckets), "doc",
-                    int(bucket_width),
-                )
-            ],
-            "format_version int, n_docs long, avgdl double, k1 double, "
-            "b double, block_size int, token_pattern string, n_parts int, "
-            "layout string, bucket_width long",
+        enriched = (
+            toks.select(
+                F.col(id_col).alias("doc_id"),
+                F.size("_toks").alias("dl"),
+                F.explode("_toks").alias("term"),
+            )
+            .join(F.broadcast(dct.select("term", "term_id")), "term")
+            # the bucket rides in BOTH part_id (hive partitioning) and salt
+            # (the encoder's grouping key): encoder groups are (term_id,
+            # salt), so carrying the bucket in salt guarantees no posting
+            # block ever straddles a bucket boundary even when one shuffle
+            # task holds several buckets. Doc-partitioning subsumes hot-term
+            # salting — a term's in-bucket run is capped at bucket_width
+            # docs by layout.
+            .withColumn("salt", (F.col("doc_id") / F.lit(bucket_width)).cast("int"))
         )
-        write_table(seg, index_dir, "segments")
+        salt_bits = max(1, int(n_buckets).bit_length())
+        row, bits = exchange_row(enriched, int(n_terms[0]), salt_bits, st)
+        if bits:
+            # the bucket is extracted from tsdd at shuffle-write time, so
+            # only the one packed column rides the exchange
+            bucket = F.shiftright("tsdd", bits[1] + bits[2]).bitwiseAND(
+                (1 << salt_bits) - 1
+            )
+            sort_cols = ["tsdd"]
+        else:
+            bucket, sort_cols = F.col("salt"), ["term_id", "salt", "doc_id"]
+        obs = Observation("dp_build_metrics")
+        blocks = (
+            # part_id IS the bucket (== salt), so it is re-derived over the
+            # block relation after encoding instead of riding every
+            # occurrence row through the exchange
+            row.repartition(sized_shuffle_n(row, n_docs * avgdl), bucket)
+            .sortWithinPartitions(*sort_cols)
+            .mapInPandas(_encode_occ_map_fn(block_size, bits), schema=POSTINGS_SCHEMA)
+            .withColumn("part_id", F.col("salt"))
+            .observe(
+                obs,
+                F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
+                F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
+            )
+        )
+        (
+            blocks.sortWithinPartitions("term_id", "block_id")
+            .write.mode("overwrite")
+            .partitionBy("part_id")
+            .parquet(table_path(index_dir, "postings"))
+        )
+        m = obs.get
+        for job in jobs:
+            _bg_join(*job)
+    finally:
+        for p in pins:
+            p.unpersist()
+        toks.unpersist()
 
-    meta_thread, meta_holder = _bg_job(_write_meta)
-
-    dfreq = (
-        read_table(spark, index_dir, "postings")
-        .groupBy("term_id")
-        .agg(F.sum("n").cast("long").alias("df"))
+    write_local(
+        arrow_rows([(-1, n_docs, int(m["postings"]), int(m["bytes"]), "complete")],
+                   LINEAGE_SCHEMA),
+        index_dir, "build_lineage", mode="overwrite",
     )
-    dct_final = dct.join(dfreq, "term_id").select(
-        "term", "term_id", "df", "cf", F.lit(1).alias("n_salts")
+    seg = (FORMAT_VERSION, n_docs, avgdl, float(k1), float(b), int(block_size),
+           TOKEN_PATTERN, int(n_buckets), "doc", int(bucket_width))
+    write_local(
+        arrow_rows([seg], SEGMENTS_SCHEMA + ", layout string, bucket_width long"),
+        index_dir, "segments", mode="overwrite",
     )
-    write_table(dct_final, index_dir, "dictionary")
-    _bg_join(meta_thread, meta_holder)
-    if dm_thread is not None:
-        _bg_join(dm_thread, dm_holder)
-    dct.unpersist()
-    occ.unpersist()
-    for p in pins:
-        p.unpersist()
-    corpus.unpersist()
     return {
         "buckets": n_buckets,
         "postings_emitted": int(m["postings"]),

@@ -7,9 +7,11 @@ on-disk graph, insert new nodes, write a merged index
 plus dictionary refresh (C4) and global-stats refresh (M2).
 
 Design:
-- new docs receive doc_ids ``[n_docs, n_docs + m)`` — strictly above every
-  existing id, so delta posting blocks cover doc ranges disjoint from (and
-  after) existing blocks; WAND treats blocks independently via their
+- new docs receive doc_ids ``[first, first + m)``, where ``first`` =
+  max(n_docs, max doc_id + 1) (the doc_stats footer max; a compaction
+  leaves n_docs at the live count without renumbering) — strictly above
+  every existing id, so delta posting blocks cover doc ranges disjoint
+  from (and after) existing blocks; WAND treats blocks independently via their
   [base, max_doc_id] ranges, so no existing block is rewritten;
 - delta blocks are APPENDED into the same hive ``part_id`` buckets
   (``pmod(xxhash64(term_id, salt), n_parts)``), so query-time directory
@@ -37,7 +39,7 @@ extended in 3 Spark jobs:
   to the driver as Arrow, sorted by ``order_cols`` within one partition,
   so Spark's own ordering (nulls, NaN, strings) fixes the order doc ids
   follow;
-- on the driver: doc ids are numbered from ``n_docs``, the (doc_id, term,
+- on the driver: doc ids are numbered from ``first``, the (doc_id, term,
   tf, dl) occurrences are counted with pyarrow, the vocabulary is looked
   up with a pyarrow filter on the dictionary and fresh terms are numbered
   from the footer max term_id, part ids come from the pure-Python
@@ -56,7 +58,7 @@ Spark path (20 jobs on a 400-turn delta):
   (doc_id, token array, doc_map columns), and the delta's text is never
   read again (5 jobs). With caller doc_ids (``order_cols=None``) one
   select caches the same relation, and one aggregate returns the delta's
-  size and min(doc_id), which must be at least the index's n_docs;
+  size and min(doc_id), which must be at least ``first``;
 - one ``groupBy(doc_id, term)`` gives the cached (doc_id, term, tf, dl)
   occurrences, ``dl`` as a max, so no doc_stats join is needed;
 - the delta vocabulary (term, df_new, cf_new) and its existing
@@ -70,8 +72,8 @@ Spark path (20 jobs on a 400-turn delta):
   written with pyarrow.
 
 Both paths put a delta posting in its term's last salt, ``n_salts - 1``:
-every delta doc id is at least ``n_docs``, past the doc range the build's
-``doc_id * n_salts // n_docs`` split covers.
+every delta doc id is at least ``first`` ≥ n_docs, past the doc range the
+build's ``doc_id * n_salts // n_docs`` split covers.
 
 Every query after ``extend_index`` must equal a brute-force BM25 over the
 unioned corpus exactly (tests/test_extend_maintenance.py), and both paths
@@ -94,7 +96,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.analysis import tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import _encode_map_fn, encode_partition_pdf
+from .build import _encode_map_fn, encode_partition_pdf, packed_bytes_col, part_id_col
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
@@ -180,11 +182,19 @@ def _driver_sized(sel: DataFrame) -> bool:
     return est <= DRIVER_MAX_DELTA_BYTES
 
 
-def _check_caller_ids(min_id, n_old: int) -> None:
-    if min_id is not None and min_id < n_old:
+def _first_id(index_dir: str, n_old: int) -> int:
+    """The first free doc id: above every id doc_stats holds (its footer
+    max) and at least ``n_docs``. A compaction leaves n_docs at the live
+    count without renumbering, so n_docs alone can be a live doc's id."""
+    max_id = footer_max(index_dir, "doc_stats", "doc_id")
+    return n_old if max_id is None else max(n_old, max_id + 1)
+
+
+def _check_caller_ids(min_id, first: int) -> None:
+    if min_id is not None and min_id < first:
         raise ValueError(
-            f"extend_index: caller-provided doc_ids must be >= the "
-            f"index's n_docs ({n_old}); the delta's smallest is {min_id}"
+            f"extend_index: caller-provided doc_ids must be >= {first}, the "
+            f"index's first free doc id; the delta's smallest is {min_id}"
         )
 
 
@@ -193,23 +203,20 @@ def _rewrite_dictionary(
 ) -> None:
     """Rewrite the dictionary with :func:`_resolve_vocabulary`'s update and
     fresh rows: stable term_ids, df/cf updated, fresh terms appended;
-    written to a staging dir, then swapped in (2 jobs). An empty row list
-    is left out of the plan: an empty local relation is a pickled RDD scan,
-    one more job."""
-    new_dct = read_table(spark, index_dir, "dictionary")
-    if updates:
-        upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
-        new_dct = new_dct.join(upd, "term", "left").select(
+    written to a staging dir, then swapped in (2 jobs)."""
+    upd = local_relation(spark, updates, "term string, df_new long, cf_new long")
+    new_dct = (
+        read_table(spark, index_dir, "dictionary")
+        .join(upd, "term", "left")
+        .select(
             "term",
             "term_id",
             (F.col("df") + F.coalesce(F.col("df_new"), F.lit(0))).alias("df"),
             (F.col("cf") + F.coalesce(F.col("cf_new"), F.lit(0))).alias("cf"),
             "n_salts",
         )
-    if fresh:
-        new_dct = new_dct.unionByName(
-            local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"])
-        )
+        .unionByName(local_relation(spark, fresh, TABLE_SCHEMAS["dictionary"]))
+    )
     tmp = table_path(index_dir, "dictionary__new")
     new_dct.write.mode("overwrite").parquet(tmp)
     old_path = table_path(index_dir, "dictionary")
@@ -219,19 +226,20 @@ def _rewrite_dictionary(
 
 def _extend_on_driver(
     sel: DataFrame, index_dir: str, order_cols: list[str] | None,
-    doc_map_cols: list[str] | None, n_old: int, n_parts: int, block_size: int,
+    doc_map_cols: list[str] | None, first: int, n_parts: int, block_size: int,
 ) -> tuple[int, int, int, int] | None:
-    """The driver path (module docstring). Returns (docs, Σdl, postings,
-    bytes), or None for an empty delta, which writes nothing."""
+    """The driver path (module docstring); new doc ids start at ``first``.
+    Returns (docs, Σdl, postings, bytes), or None for an empty delta,
+    which writes nothing."""
     spark = sel.sparkSession
     one = sel.coalesce(1)
     tbl = (one.sortWithinPartitions(*order_cols) if order_cols else one).toArrow()
     m = tbl.num_rows
     if order_cols:
-        doc_id = pa.array(np.arange(n_old, n_old + m, dtype=np.int64))
+        doc_id = pa.array(np.arange(first, first + m, dtype=np.int64))
     else:
         doc_id = tbl["doc_id"].cast(to_arrow_type(sel.schema["doc_id"].dataType))
-        _check_caller_ids(pc.min(doc_id).as_py(), n_old)
+        _check_caller_ids(pc.min(doc_id).as_py(), first)
     if m == 0:
         return None
 
@@ -310,9 +318,10 @@ def _extend_on_driver(
 def _extend_in_spark(
     new_corpus: DataFrame, sel: DataFrame, index_dir: str,
     order_cols: list[str] | None, keep: list[str], text_col: str,
-    doc_map_cols: list[str] | None, n_old: int, n_parts: int, block_size: int,
+    doc_map_cols: list[str] | None, first: int, n_parts: int, block_size: int,
 ) -> tuple[int, int, int, int] | None:
-    """The Spark path (module docstring); returns as :func:`_extend_on_driver`."""
+    """The Spark path (module docstring); takes and returns as
+    :func:`_extend_on_driver`."""
     spark = new_corpus.sparkSession
     cached: list = []
     try:
@@ -326,14 +335,14 @@ def _extend_in_spark(
                 pre_persist=lambda d: d.select(
                     "_pid", *order_cols, *keep, tokens_col(text_col).alias("_toks")
                 ),
-            ).withColumn("doc_id", F.col("doc_id") + F.lit(n_old)).persist()
+            ).withColumn("doc_id", F.col("doc_id") + F.lit(first)).persist()
             cached.append(delta)
             m = n_out[0]
         else:
             delta = sel.persist()
             cached.append(delta)
             m, min_id = delta.agg(F.count("*"), F.min("doc_id")).collect()[0]
-            _check_caller_ids(min_id, n_old)
+            _check_caller_ids(min_id, first)
         if m == 0:
             return None
 
@@ -382,10 +391,7 @@ def _extend_in_spark(
                 "term",
             )
             .withColumn("salt", (F.col("n_salts") - 1).cast("int"))
-            .withColumn(
-                "part_id",
-                F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int"),
-            )
+            .withColumn("part_id", part_id_col(n_parts))
             .select("part_id", "term_id", "salt", "doc_id", "tf", "dl")
         )
         # one occurrence row per (doc, term): Σ df_new of them
@@ -396,17 +402,13 @@ def _extend_in_spark(
                 sized_shuffle_n(enriched, n_occ), "part_id", "term_id", "salt"
             )
             .mapInPandas(
-                _encode_map_fn(block_size, carry_part_id=True),
+                _encode_map_fn(block_size),
                 schema="part_id int, " + POSTINGS_SCHEMA,
             )
             .observe(
                 obs,
                 F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-                (
-                    F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-                    + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-                    + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-                ).alias("bytes"),
+                F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
             )
         )
         blocks.write.mode("append").partitionBy("part_id").parquet(
@@ -444,8 +446,9 @@ def extend_index(
     """Append ``new_corpus`` (raw rows, no doc_id yet unless ``order_cols``
     is None and a ``doc_id`` column exists) to the index at ``index_dir``.
     With ``order_cols=None`` every caller-provided doc_id must be at least
-    the index's ``n_docs``; a smaller one raises ``ValueError`` before
-    anything is written. Returns delta metrics."""
+    the index's first free id, max(n_docs, max doc_id + 1); a smaller one
+    raises ``ValueError`` before anything is written. Returns delta
+    metrics."""
     seg = read_segments(new_corpus.sparkSession, index_dir)
     if seg.get("layout") == "doc":
         raise NotImplementedError(
@@ -459,14 +462,15 @@ def extend_index(
     keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
     id_cols = list(order_cols) if order_cols else ["doc_id"]
     sel = new_corpus.select(*id_cols, *keep, tokens_col(text_col).alias("_toks"))
+    first = _first_id(index_dir, n_old)
     if _driver_sized(sel):
         out = _extend_on_driver(
-            sel, index_dir, order_cols, doc_map_cols, n_old, n_parts, block_size
+            sel, index_dir, order_cols, doc_map_cols, first, n_parts, block_size
         )
     else:
         out = _extend_in_spark(
             new_corpus, sel, index_dir, order_cols, keep, text_col,
-            doc_map_cols, n_old, n_parts, block_size,
+            doc_map_cols, first, n_parts, block_size,
         )
     if out is None:
         return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}

@@ -30,7 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import _encode_map_fn
+from .build import _encode_map_fn, packed_bytes_col, part_id_col
 from .query import decode_postings
 from .storage import (
     LINEAGE_SCHEMA,
@@ -96,24 +96,20 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     live = decode_postings(
         spark, index_dir, extra_cols=["salt"]
     ).join(dead_df, "doc_id", "left_anti")
-    enriched = live.withColumn(
-        "part_id", F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int")
-    ).select("part_id", "term_id", "salt", "doc_id", "tf", "dl")
+    enriched = live.withColumn("part_id", part_id_col(n_parts)).select(
+        "part_id", "term_id", "salt", "doc_id", "tf", "dl"
+    )
     obs = Observation("compact_metrics")
     blocks = (
         enriched.repartition(shuffle_n(enriched), "part_id", "term_id", "salt")
         .mapInPandas(
-            _encode_map_fn(block_size, carry_part_id=True),
+            _encode_map_fn(block_size),
             schema="part_id int, " + POSTINGS_SCHEMA,
         )
         .observe(
             obs,
             F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-            (
-                F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-            ).alias("bytes"),
+            F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
         )
     )
     tmp = table_path(index_dir, "postings__compact")
@@ -219,11 +215,7 @@ def verify_index(spark: SparkSession, index_dir: str) -> dict:
     p = read_table(spark, index_dir, "postings")
     got = p.agg(
         F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-        (
-            F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-            + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-            + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-        ).alias("bytes"),
+        F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
         # order-independent content fold: XOR of per-block xxhash64 values
         # (commutative and overflow-free, unlike a long sum under ANSI SQL)
         F.bit_xor(

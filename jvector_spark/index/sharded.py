@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .query import bm25_topk_indexed
-from .storage import local_df, read_local, read_segments, read_table
+from .storage import arrow_rows, read_local, read_segments, read_table, write_local
 
 GLOBAL_DIR = "_global"
 
@@ -66,7 +66,7 @@ def build_shard(
     **build_kwargs,
 ) -> dict:
     """Build one shard's complete index with its doc_ids shifted into the
-    shard's global range. A thin wrapper over the fused single-shot build —
+    shard's global range. A thin wrapper over the fused transcripts build —
     each shard build is an independent job with zero cross-shard traffic."""
     from .build import build_index_transcripts
 
@@ -97,11 +97,11 @@ def merge_shard_stats(spark: SparkSession, shard_dirs: list[str]) -> dict:
     )
     out = os.path.join(shard_dirs[0], GLOBAL_DIR)
     gdct.write.mode("overwrite").parquet(os.path.join(out, "dictionary"))
-    local_df(
-        spark,
-        [(n_docs, float(avgdl), len(shard_dirs))],
-        "n_docs long, avgdl double, n_shards int",
-    ).write.mode("overwrite").parquet(os.path.join(out, "stats"))
+    write_local(
+        arrow_rows([(n_docs, float(avgdl), len(shard_dirs))],
+                   "n_docs long, avgdl double, n_shards int"),
+        out, "stats", mode="overwrite",
+    )
     return {"n_docs": n_docs, "avgdl": float(avgdl), "global_dir": out}
 
 

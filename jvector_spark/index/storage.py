@@ -25,8 +25,9 @@ jvector-base/.../graph/disk/OnDiskGraphIndex.java:72, CommonHeader.java:59-152):
       doc_stats/      doc_id, dl
       doc_map/        doc_id + the source's natural-key columns
       build_lineage/  part_id, docs_indexed, postings_emitted,
-                      bytes_compressed, status  (checkpoint/resume, the
-                      analog of OnHeapGraphIndex save/load + CheckpointManager,
+                      bytes_compressed, status  (one row per built part,
+                      the resume unit — the analog of OnHeapGraphIndex
+                      save/load + CheckpointManager,
                       GraphIndexBuilder.java:865-969)
 
 ``postings/`` is hive-partitioned by ``part_id`` (a deterministic hash
@@ -38,13 +39,15 @@ Driver-sized tables go through Arrow on the driver; Spark jobs are only for
 corpus-sized tables. The segments row, the tombstone set and the lineage
 rows are read with pyarrow straight from the index directory
 (:func:`read_local`), and every relation built from driver-local rows
-(query relations, bucket and offset maps) is a pandas→Arrow local
-relation (:func:`local_relation`), which Spark scans without a job or a
-Python worker. Driver-sized rows are written the same way, with pyarrow
-and no job (:func:`write_local`): the segments row, tombstone appends,
-lineage rows, and a driver-sized extend's postings, doc_stats and doc_map
-delta. An append adds one file; an overwrite swaps in a sibling directory
-that carries Spark's ``_SUCCESS`` marker. Index directories are therefore
+(query relations, bucket and offset maps) is an Arrow local relation
+(:func:`local_relation`), which Spark scans without a job or a Python
+worker, even when it is empty. Driver-sized rows are written the same
+way, with pyarrow and no job (:func:`write_local`): the segments row,
+tombstone appends, lineage rows, a driver-sized extend's postings,
+doc_stats and doc_map delta, the vector tiers' manifests, parameters and
+codebooks, and the streaming and sharded metadata rows. An append adds
+one file; an overwrite swaps in a sibling directory that carries Spark's
+``_SUCCESS`` marker. Index directories are therefore
 driver-visible paths — the same assumption the ``os.rename`` /
 ``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
 corpus-sized tables (postings, dictionary, doc_stats) are read with their
@@ -178,65 +181,67 @@ def _ddl_cols(schema: str) -> list[str]:
     return cols
 
 
-def _ddl_names(schema: str) -> list[str]:
-    """Column names from a DDL schema string."""
-    return [c.split()[0] for c in _ddl_cols(schema)]
-
-
 def local_relation(
     spark: SparkSession, rows: list | pd.DataFrame, schema: str
 ) -> DataFrame:
-    """DataFrame over driver-local rows, converted via pandas→Arrow.
-    ``rows`` is a list of tuples, or a pandas frame holding the schema's
-    columns.
+    """DataFrame over driver-local rows, handed to Spark as an Arrow table
+    (:func:`arrow_rows`). ``rows`` is a list of tuples, or a pandas frame
+    holding the schema's columns.
 
-    With ``spark.sql.execution.arrow.pyspark.enabled`` (``session.get_spark``
-    sets it), Spark turns an Arrow payload below
+    Spark turns an Arrow table below
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
-    into a ``LocalRelation``: collecting it runs no job (broadcasting it
-    still runs one), and nothing crosses into a Python worker.
-    ``createDataFrame(list)`` instead pickles the rows into
-    ``defaultParallelism`` slices that every scan unpickles in Python-worker
-    tasks. Raises ``ValueError`` (before Spark is touched) when a row's
-    arity differs from the schema's column count."""
-    names = _ddl_names(schema)
+    into a ``LocalRelation``, an empty one included: collecting it runs no
+    job (broadcasting it still runs one), and nothing crosses into a
+    Python worker. A pandas frame or a list would not: an empty pandas
+    frame becomes an RDD scan (one job to collect), and
+    ``createDataFrame(list)`` pickles the rows into ``defaultParallelism``
+    slices that every scan unpickles in Python-worker tasks. Raises
+    ``ValueError`` (before Spark is touched) when a row's arity differs
+    from the schema's column count."""
     if isinstance(rows, pd.DataFrame):
-        return spark.createDataFrame(rows[names], schema)
-    for i, row in enumerate(rows):
-        if len(row) != len(names):
-            raise ValueError(
-                f"row {i} has {len(row)} values for {len(names)} columns "
-                f"({', '.join(names)})"
-            )
-    pdf = (
-        pd.DataFrame(dict(zip(names, map(list, zip(*rows)))))
-        if rows
-        else pd.DataFrame({n: [] for n in names})
-    )
-    return spark.createDataFrame(pdf, schema)
+        sch = arrow_schema(schema)
+        tbl = pa.Table.from_pandas(rows[sch.names], sch, preserve_index=False)
+    else:
+        tbl = arrow_rows(rows, schema)
+    return spark.createDataFrame(tbl, schema)
 
 
-# the Arrow types of the DDL types in the schemas of driver-written rows;
-# each is written as the Parquet type Spark writes for it
+# the Arrow types of the DDL types in the schemas of driver-side rows; each
+# is written as the Parquet type Spark writes for it
 _ARROW_TYPES = {
-    "int": pa.int32(), "long": pa.int64(), "string": pa.string(), "binary": pa.binary(),
+    "tinyint": pa.int8(), "smallint": pa.int16(), "int": pa.int32(),
+    "long": pa.int64(), "bigint": pa.int64(), "float": pa.float32(),
+    "double": pa.float64(), "boolean": pa.bool_(), "string": pa.string(),
+    "binary": pa.binary(),
 }
 
 
+def _arrow_type(typ: str) -> pa.DataType:
+    if typ.startswith("array<") and typ.endswith(">"):
+        return pa.list_(_arrow_type(typ[len("array<"):-1].strip()))
+    return _ARROW_TYPES[typ]
+
+
 def arrow_schema(schema: str) -> pa.Schema:
-    """The Arrow schema of a DDL schema string of flat columns."""
-    fields = []
-    for col in _ddl_cols(schema):
-        name, typ = col.split()
-        fields.append(pa.field(name, _ARROW_TYPES[typ]))
-    return pa.schema(fields)
+    """The Arrow schema of a DDL schema string (scalar and array columns)."""
+    return pa.schema(
+        pa.field(name, _arrow_type(typ))
+        for name, typ in (col.split(None, 1) for col in _ddl_cols(schema))
+    )
 
 
 def arrow_rows(rows: list, schema: str) -> pa.Table:
-    """Driver-local rows (tuples) as an Arrow table of a flat DDL
-    ``schema``: the pyarrow counterpart of :func:`local_relation`, for
-    :func:`write_local`."""
+    """Driver-local rows (tuples) as an Arrow table of a DDL ``schema``,
+    for :func:`write_local` and :func:`local_relation`. Raises
+    ``ValueError`` when a row's arity differs from the schema's column
+    count."""
     sch = arrow_schema(schema)
+    for i, row in enumerate(rows):
+        if len(row) != len(sch):
+            raise ValueError(
+                f"row {i} has {len(row)} values for {len(sch)} columns "
+                f"({', '.join(sch.names)})"
+            )
     cols = list(zip(*rows)) if rows else [() for _ in sch]
     return pa.table([pa.array(c, f.type) for c, f in zip(cols, sch)], schema=sch)
 
@@ -248,8 +253,8 @@ def write_local(table: pa.Table, index_dir: str, name: str,
     which readers skip, and renamed into place once complete.
     ``mode="append"`` adds the file to the table directory (created when
     absent). ``mode="overwrite"`` writes it to a hidden sibling directory
-    with Spark's ``_SUCCESS`` marker, which build resume and streaming
-    test for, and swaps that directory in for the table."""
+    with Spark's ``_SUCCESS`` marker, which streaming resume tests for,
+    and swaps that directory in for the table."""
     path = table_path(index_dir, name)
     if mode == "append":
         os.makedirs(path, exist_ok=True)
@@ -277,20 +282,20 @@ def _write_file(table: pa.Table, directory: str) -> None:
     tmp = os.path.join(directory, "." + name)
     # zstd, the codec the session sets for Spark's own Parquet writes;
     # timestamps as INT96, Spark's default Parquet timestamp type; no pandas
-    # or Arrow schema metadata in the footer (Spark ignores both)
+    # or Arrow schema metadata in the footer (Spark ignores both); no
+    # dictionary for floating-point or nested columns: distinct doubles
+    # make a dictionary larger than the plain values, where Spark's writer
+    # falls back to plain and pyarrow's does not (a PQ codebook written
+    # with one was 21 % larger than Spark's)
+    dictionary = [
+        f.name for f in table.schema
+        if not (pa.types.is_floating(f.type) or pa.types.is_nested(f.type))
+    ]
     pq.write_table(table.replace_schema_metadata(None), tmp,
                    compression="zstd", store_schema=False,
+                   use_dictionary=dictionary,
                    use_deprecated_int96_timestamps=True)
     os.rename(tmp, os.path.join(directory, name))
-
-
-def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """:func:`local_relation` as one partition, for writers: the table gets
-    a single output file from a single one-task job (``coalesce(1)`` over a
-    local relation is a JVM-side narrow read; over a pickled
-    ``createDataFrame(list)`` it re-serialized every row through a Python
-    worker, ~4 s per job at local[32])."""
-    return local_relation(spark, rows, schema).coalesce(1)
 
 
 # Spark's XxHash64 primes (sql/catalyst XXH64) — used to resolve

@@ -46,7 +46,13 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .storage import local_df, local_relation, local_schema, read_local
+from .storage import (
+    arrow_rows,
+    local_relation,
+    local_schema,
+    read_local,
+    write_local,
+)
 
 FORMAT_VERSION = 1
 
@@ -55,7 +61,7 @@ FORMAT_VERSION = 1
 # shared plumbing
 # ---------------------------------------------------------------------------
 
-def _write_manifest(spark: SparkSession, index_dir: str, kind: str, **fields) -> None:
+def _write_manifest(index_dir: str, kind: str, **fields) -> None:
     row = {
         "version": FORMAT_VERSION,
         "kind": kind,
@@ -63,12 +69,14 @@ def _write_manifest(spark: SparkSession, index_dir: str, kind: str, **fields) ->
         "train_mse": 0.0,
         **fields,
     }
-    local_df(
-        spark,
-        [(int(row["version"]), str(row["kind"]), int(row["dim"]), int(row["m"]),
-          int(row["k"]), int(row["dsub"]), float(row["train_mse"]))],
-        "version int, kind string, dim int, m int, k int, dsub int, train_mse double",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "manifest"))
+    write_local(
+        arrow_rows(
+            [(int(row["version"]), str(row["kind"]), int(row["dim"]), int(row["m"]),
+              int(row["k"]), int(row["dsub"]), float(row["train_mse"]))],
+            "version int, kind string, dim int, m int, k int, dsub int, train_mse double",
+        ),
+        index_dir, "manifest", mode="overwrite",
+    )
 
 
 def _read_required(index_dir: str, name: str) -> pa.Table:
@@ -112,13 +120,12 @@ def vector_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_i
     """Tombstone vectors in any persisted compressed structure (M1): ids
     land in ``tombstones/`` and every indexed query masks them off the
     codes scan. Physical reclamation = rebuild/refine over live rows. The
-    ids are deduplicated on the driver and appended by one one-file write
-    job."""
+    ids are deduplicated on the driver and appended as one file with
+    pyarrow (no Spark job)."""
     ids = sorted({int(i) for i in ids})
     if ids:
-        local_df(spark, [(i,) for i in ids], f"{id_col} long").write.mode(
-            "append"
-        ).parquet(os.path.join(index_dir, "tombstones"))
+        write_local(arrow_rows([(i,) for i in ids], f"{id_col} long"),
+                    index_dir, "tombstones")
 
 
 # ---------------------------------------------------------------------------
@@ -148,28 +155,29 @@ def pq_build(
     preserves inner products at the same byte budget."""
     from ..operators.pq import pq_encode, pq_train
 
-    spark = embeddings.sparkSession
     books = pq_train(
         embeddings, m=m, n_clusters=n_clusters, n_iters=n_iters, seed=seed,
         id_col=id_col, vec_col=vec_col,
     )
     mm, k, dsub = books.shape
-    local_df(
-        spark,
-        [
-            (int(s), int(c), [float(x) for x in books[s, c]])
-            for s in range(mm)
-            for c in range(k)
-        ],
-        "subspace int, cluster int, centroid array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "codebooks"))
+    write_local(
+        arrow_rows(
+            [
+                (int(s), int(c), [float(x) for x in books[s, c]])
+                for s in range(mm)
+                for c in range(k)
+            ],
+            "subspace int, cluster int, centroid array<double>",
+        ),
+        index_dir, "codebooks", mode="overwrite",
+    )
     codes = pq_encode(
         embeddings, books, id_col, vec_col, anisotropic_eta=anisotropic_eta
     )
     codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
     mse = _pq_sample_mse(embeddings, books, id_col, vec_col)
     _write_manifest(
-        spark, index_dir, "pq", dim=mm * dsub, m=mm, k=k, dsub=dsub, train_mse=mse
+        index_dir, "pq", dim=mm * dsub, m=mm, k=k, dsub=dsub, train_mse=mse
     )
     return books
 
@@ -326,17 +334,18 @@ def sq8_build(
     of re-running the min/max aggregate + re-encode per call."""
     from ..operators.similarity import sq8_encode, sq8_train
 
-    spark = embeddings.sparkSession
     mn, scale = sq8_train(embeddings, vec_col)
-    local_df(
-        spark,
-        [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(mn, scale))],
-        "i int, mn double, scale double",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "params"))
+    write_local(
+        arrow_rows(
+            [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(mn, scale))],
+            "i int, mn double, scale double",
+        ),
+        index_dir, "params", mode="overwrite",
+    )
     sq8_encode(embeddings, mn, scale, id_col, vec_col).write.mode(
         "overwrite"
     ).parquet(os.path.join(index_dir, "codes"))
-    _write_manifest(spark, index_dir, "sq8", dim=len(mn))
+    _write_manifest(index_dir, "sq8", dim=len(mn))
     return mn, scale
 
 
@@ -458,7 +467,6 @@ def bq_build(
 
     from ..operators.bq import bq_encode
 
-    spark = embeddings.sparkSession
     first = embeddings.select(vec_col).first()
     dim = len(first[0]) if first else 0
     # count observed on the encode write itself — a separate read-back
@@ -470,7 +478,7 @@ def bq_build(
     )
     codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
     n = int(obs.get["n"])
-    _write_manifest(spark, index_dir, "bq", dim=dim)
+    _write_manifest(index_dir, "bq", dim=dim)
     return n
 
 
@@ -538,7 +546,6 @@ def nvq_build(
 
     from ..operators.nvq import nvq_encode
 
-    spark = embeddings.sparkSession
     first = embeddings.select(vec_col).first()
     dim = len(first[0]) if first else 0
     # count observed on the encode write (same as bq_build: no read-back)
@@ -548,7 +555,7 @@ def nvq_build(
     )
     codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
     n = int(obs.get["n"])
-    _write_manifest(spark, index_dir, "nvq", dim=dim, m=bits)
+    _write_manifest(index_dir, "nvq", dim=dim, m=bits)
     return n
 
 

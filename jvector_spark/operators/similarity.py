@@ -651,13 +651,15 @@ def ivf_build(
         n_clusters = max(2, int(round(float(embeddings.count()) ** 0.5)))
     cents = ivf_train(embeddings, n_clusters, n_iters, seed=seed,
                       id_col=id_col, vec_col=vec_col)
-    from ..index.storage import local_df
+    from ..index.storage import arrow_rows, write_local
 
-    local_df(
-        spark,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cluster int, centroid array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
+    write_local(
+        arrow_rows(
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
+            "cluster int, centroid array<double>",
+        ),
+        index_dir, "centroids", mode="overwrite",
+    )
     assigned = ivf_assign(embeddings, cents, id_col, vec_col).persist()
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(
         os.path.join(index_dir, "assignments")

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..index.storage import local_df
+from ..index.storage import arrow_rows, write_local
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -105,19 +105,14 @@ def _record_batch(
     metrics: dict,
     status: str = "complete",
 ) -> None:
-    local_df(
-        spark,
-        [
-            (
-                int(batch_id),
-                int(metrics.get("docs_added", metrics.get("docs", 0)) or 0),
-                int(metrics.get("postings_emitted", 0) or 0),
-                int(metrics.get("bytes_compressed", 0) or 0),
-                status,
-            )
-        ],
-        _LINEAGE_SCHEMA,
-    ).write.mode("append").parquet(os.path.join(index_dir, "stream_lineage"))
+    row = (
+        int(batch_id),
+        int(metrics.get("docs_added", metrics.get("docs", 0)) or 0),
+        int(metrics.get("postings_emitted", 0) or 0),
+        int(metrics.get("bytes_compressed", 0) or 0),
+        status,
+    )
+    write_local(arrow_rows([row], _LINEAGE_SCHEMA), index_dir, "stream_lineage")
 
 
 def staged_docs(spark: SparkSession, index_dir: str) -> DataFrame | None:

@@ -62,7 +62,7 @@ def test_docpart_topk_equals_bruteforce_and_termpart(
         assert got == want, f"prune={prune}"
 
     tp = str(tmp_path_factory.mktemp("tpidx"))
-    build_index(corpus, tp, n_parts=4, checkpointed=False)
+    build_index(corpus, tp, n_parts=4)
     tp_rows = sorted(
         (r.query_id, r.rank, r.doc_id, round(r.score, 9))
         for r in bm25_topk_indexed(spark, tp, qdf, k=10).collect()
@@ -98,7 +98,7 @@ def test_docpart_rejects_wrong_layout(spark, corpus, tmp_path):
     from jvector_spark.operators.topk import queries_df
 
     d = str(tmp_path / "tp")
-    build_index(corpus.limit(300), d, n_parts=2, checkpointed=False)
+    build_index(corpus.limit(300), d, n_parts=2)
     with pytest.raises(ValueError):
         bm25_topk_docpart(spark, d, queries_df(spark, [(0, ["t0001"])]), k=5)
 

@@ -207,7 +207,7 @@ def test_set_bm25_params_rescores_without_rewrite(spark, corpus, tmp_path, query
     from jvector_spark.operators.topk import bm25_topk_bruteforce, queries_df
 
     d = str(tmp_path / "rescore_idx")
-    build_index(corpus, d, n_parts=2, checkpointed=False)
+    build_index(corpus, d, n_parts=2)
     post_dir = table_path(d, "postings")
     before = {
         (r, f): os.path.getmtime(os.path.join(r, f))
@@ -246,7 +246,7 @@ def test_pagination_matches_full_topk(spark, corpus, tmp_path, query_set):
     from jvector_spark.operators.topk import queries_df
 
     d = str(tmp_path / "page_idx")
-    build_index(corpus, d, n_parts=2, checkpointed=False)
+    build_index(corpus, d, n_parts=2)
     qdf = queries_df(
         spark,
         list(zip(query_set["query_id"][:6], [list(t) for t in query_set["terms"][:6]])),
@@ -276,7 +276,7 @@ def test_verify_index_detects_loss(spark, corpus, tmp_path):
     from jvector_spark.index.maintenance import verify_index
 
     d = str(tmp_path / "vidx")
-    build_index(corpus.limit(800), d, n_parts=2, checkpointed=False)
+    build_index(corpus.limit(800), d, n_parts=2)
     r = verify_index(spark, d)
     assert r["ok"], r
     fold_before = r["content_fold"]

@@ -292,3 +292,48 @@ def test_extend_after_compacting_every_document(spark, monkeypatch, corpus, tmp_
     words = sorted({w for t in texts.values() for w in tokenize_py(t)})
     queries = [[w] for w in words[:: max(1, len(words) // 6)]] + [words[:3]]
     _oracle_check(spark, monkeypatch, dirs["driver"], texts, queries)
+
+
+def test_extend_after_partial_compaction(spark, monkeypatch, corpus, tmp_path):
+    """Compaction leaves n_docs at the live count without renumbering, so
+    n_docs can be a live doc's id: new ids start above the largest id in
+    doc_stats, and caller ids are held to the same bound."""
+    from jvector_spark.fixtures import tokenize_py
+    from jvector_spark.index.build import build_index
+    from jvector_spark.index.maintenance import compact_index, delete_docs
+    from jvector_spark.index.storage import read_segments
+
+    base = str(tmp_path / "base")
+    build_index(corpus.filter(F.col("doc_id") < 50), base, n_parts=2, doc_map_cols=KEYS)
+    delete_docs(spark, base, [3, 7])
+    compact_index(spark, base)
+    assert read_segments(spark, base)["n_docs"] == 48
+
+    raw = corpus.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 60))
+    delta = _file(raw.select(*KEYS, "text"), tmp_path, "delta")
+    dirs = _extend_both(
+        spark, monkeypatch, base, tmp_path,
+        lambda d: E.extend_index(delta, d, order_cols=KEYS, doc_map_cols=KEYS),
+    )
+    _assert_same_index(dirs["spark"], dirs["driver"], n_tables=6)
+    ids = [r.doc_id for r in spark.read.parquet(os.path.join(dirs["driver"], "doc_stats"))
+           .collect()]
+    assert len(ids) == len(set(ids)) == 58
+    assert read_segments(spark, dirs["driver"])["n_docs"] == 58
+
+    # the delta's ids continue the corpus's key order from 50
+    texts = {r.doc_id: r.text for r in corpus.filter(F.col("doc_id") < 60)
+             .select("doc_id", "text").collect() if r.doc_id not in (3, 7)}
+    words = sorted({w for t in texts.values() for w in tokenize_py(t)})
+    queries = [[w] for w in words[:: max(1, len(words) // 6)]] + [words[:3]]
+    _oracle_check(spark, monkeypatch, dirs["driver"], texts, queries)
+
+    caller = _file(
+        raw.withColumn("doc_id", F.col("doc_id") - F.lit(2)), tmp_path, "caller"
+    )
+    for path in PATHS:
+        d = str(tmp_path / f"caller_{path}")
+        shutil.copytree(base, d)
+        _force(monkeypatch, path)
+        with pytest.raises(ValueError, match="smallest is 48"):
+            E.extend_index(caller, d, order_cols=None, doc_map_cols=KEYS)

@@ -48,6 +48,41 @@ def test_golden_index_loads_and_answers(spark, golden_case):
     assert got == golden_case["expected"]
 
 
+def test_build_reproduces_golden_index(spark, tmp_path):
+    """A fresh build with ``tools/make_golden.py``'s arguments writes the
+    committed index's rows: segments, dictionary, postings, doc_stats and
+    doc_map equal, and one complete lineage row per part with the same
+    postings and bytes. The lineage's ``docs_indexed`` is the build's
+    document count on every part row, so it is left out."""
+    from jvector_spark.fixtures import make_transcripts_pdf
+    from jvector_spark.index.build import build_index
+    from jvector_spark.operators.doc_ids import assign_dense_ids
+    from tools.diff_index import diff_dirs, read_rows
+
+    corpus = assign_dense_ids(
+        spark.createDataFrame(make_transcripts_pdf(n_turns=300, seed=123)),
+        ["conv_id", "turn_idx"], "doc_id",
+    )
+    d = str(tmp_path / "v2_index")
+    build_index(
+        corpus, d, doc_map_cols=["conv_id", "turn_idx"],
+        salt_threshold=32, target_salt_postings=32, n_parts=2,
+    )
+    golden = os.path.join(GOLDEN, "v2_index")
+    same = diff_dirs(d, golden)
+    tables = ("segments", "dictionary", "postings", "doc_stats", "doc_map")
+    assert all(same[t] for t in tables), same
+
+    def lineage(idx):
+        cols = ["part_id", "postings_emitted", "bytes_compressed", "status"]
+        rows = read_rows(os.path.join(idx, "build_lineage")).select(cols)
+        return sorted(tuple(r.values()) for r in rows.to_pylist())
+
+    assert lineage(d) == lineage(golden)
+    assert [r[0] for r in lineage(d)] == [0, 1]
+    assert {r[3] for r in lineage(d)} == {"complete"}
+
+
 def test_golden_positions_feature_still_decodes(spark, golden_case):
     from jvector_spark.index.positions import decode_positions, has_positions
 

@@ -203,15 +203,15 @@ def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set)
 
     d = str(tmp_path / "idx_resume")
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(corpus, d, n_parts=4, fail_after_parts=2, keep_staging=True)
-    # resume completes the remaining parts without redoing stage 1
+        build_index(corpus, d, n_parts=4, fail_after_parts=2)
+    # resume encodes only the parts without a complete lineage row
     metrics = build_index(corpus, d, n_parts=4, resume=True)
     assert metrics["parts_built"] == 2
 
     qdf = queries_df(
         spark, list(zip(query_set["query_id"][:8], [list(t) for t in query_set["terms"][:8]]))
     )
-    # resumed index answers identically to the module-scoped single-shot one
+    # the resumed index answers the queries
     from jvector_spark.index.storage import read_table
 
     resumed = sorted(
@@ -221,6 +221,13 @@ def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set)
     assert len(resumed) > 0
     lineage = read_table(spark, d, "build_lineage")
     assert lineage.filter("status = 'complete'").count() == 4
+    # the resumed index holds an uninterrupted build's rows in every table
+    from tools.diff_index import diff_dirs
+
+    whole = str(tmp_path / "idx_whole")
+    build_index(corpus, whole, n_parts=4)
+    same = diff_dirs(d, whole)
+    assert len(same) == 5 and all(same.values()), same
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -274,36 +281,39 @@ def test_oov_query_batch_returns_empty(spark, index_dir):
     assert out.count() == 0
 
 
-def test_single_shot_build_equals_checkpointed(spark, corpus, index_dir, query_set, tmp_path):
-    """checkpointed=False must produce a logically identical index: same
-    segments stats, same decoded postings, same top-k (fast-path == slow-
-    path idiom, the TestFusedGraphIndex equality analog)."""
-    from jvector_spark.index.build import build_index
-    from jvector_spark.index.query import bm25_topk_indexed, decode_postings
-    from jvector_spark.index.storage import read_segments
-    from jvector_spark.operators.topk import queries_df
+def test_four_column_fallback_for_wide_ids(spark, transcripts, corpus, tmp_path,
+                                           monkeypatch):
+    """A shard whose doc ids start at 2^55 does not fit the one-column
+    tsdd exchange row beside the term and dl widths, so the build ships
+    the four-column row; its postings must still decode to term_freq."""
+    import jvector_spark.index.build as B
+    from jvector_spark.index.query import decode_postings
+    from jvector_spark.operators import term_freq
 
-    d = str(tmp_path / "fastidx")
-    build_index(
-        corpus, d, salt_threshold=64, target_salt_postings=64, n_parts=4,
-        checkpointed=False,
+    seen = []
+    encoder = B._encode_occ_map_fn
+
+    def spy(block_size, bits):
+        seen.append(bits)
+        return encoder(block_size, bits)
+
+    monkeypatch.setattr(B, "_encode_occ_map_fn", spy)
+    offset = 1 << 55
+    d = str(tmp_path / "wide")
+    B.build_index_transcripts(
+        transcripts, d, ["conv_id", "turn_idx"],
+        salt_threshold=64, target_salt_postings=64, n_parts=2, id_offset=offset,
     )
-    a, b = read_segments(spark, index_dir), read_segments(spark, d)
-    assert a == b
-    cnt = lambda p: decode_postings(spark, p).count()  # noqa: E731
-    assert cnt(d) == cnt(index_dir)
-    qdf = queries_df(
-        spark, list(zip(query_set["query_id"][:10], [list(t) for t in query_set["terms"][:10]]))
+    assert seen == [None]
+    want = sorted(
+        (r.term, r.doc_id + offset, r.tf) for r in term_freq(corpus).collect()
     )
-    ga = sorted(
-        (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-        for r in bm25_topk_indexed(spark, index_dir, qdf, k=10).collect()
+    terms = {r.term_id: r.term for r in spark.read.parquet(d + "/dictionary").collect()}
+    got = sorted(
+        (terms[r.term_id], r.doc_id, r.tf)
+        for r in decode_postings(spark, d).select("term_id", "doc_id", "tf").collect()
     )
-    gb = sorted(
-        (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-        for r in bm25_topk_indexed(spark, d, qdf, k=10).collect()
-    )
-    assert ga == gb
+    assert got == want
 
 
 def test_fused_transcripts_build_equals_chained(spark, transcripts, corpus, query_set, tmp_path):
@@ -330,7 +340,6 @@ def test_fused_transcripts_build_equals_chained(spark, transcripts, corpus, quer
     build_index(
         corpus, d2, doc_map_cols=["conv_id", "turn_idx"],
         salt_threshold=64, target_salt_postings=64, n_parts=4,
-        checkpointed=False,
     )
     assert read_segments(spark, d1) == read_segments(spark, d2)
     dec = lambda p: sorted(  # noqa: E731

@@ -58,13 +58,43 @@ def doc_index(tmp_path_factory, corpus):
 
 def test_local_relation_rejects_row_arity_mismatch():
     # the check runs before Spark is touched, so no session is needed
-    from jvector_spark.index.storage import local_df, local_relation
+    from jvector_spark.index.storage import local_relation
 
     schema = "part_id int, n long, tags array<string>"
     with pytest.raises(ValueError, match="row 1 has 2 values for 3 columns"):
         local_relation(None, [(1, 2, ["a"]), (3, 4)], schema)
     with pytest.raises(ValueError, match="row 0 has 4 values for 3 columns"):
-        local_df(None, [(1, 2, ["a"], 5)], schema)
+        local_relation(None, [(1, 2, ["a"], 5)], schema)
+
+
+def test_arrow_rows_rejects_row_arity_mismatch_without_spark():
+    from jvector_spark.index.storage import arrow_rows
+
+    schema = "part_id int, avg double, tags array<string>"
+    with pytest.raises(ValueError, match="row 0 has 4 values for 3 columns"):
+        arrow_rows([(1, 2.0, ["a"], 5)], schema)
+    with pytest.raises(ValueError, match="row 1 has 2 values for 3 columns"):
+        arrow_rows([(1, 2.0, ["a"]), (3, 4.0)], schema)
+    t = arrow_rows([(1, 2.5, ["a", "b"]), (2, 0.0, [])], schema)
+    assert [str(f.type) for f in t.schema] == ["int32", "double", "list<item: string>"]
+    assert t.to_pylist()[0] == {"part_id": 1, "avg": 2.5, "tags": ["a", "b"]}
+    assert arrow_rows([], schema).num_rows == 0
+
+
+def test_empty_local_relation_runs_no_job(spark):
+    """An empty local relation is an Arrow ``LocalRelation``: collecting
+    it runs no Spark job (an empty pandas frame would be an RDD scan)."""
+    from jvector_spark.index.storage import local_relation
+
+    schema = "query_id int, terms array<string>, score double"
+    empty = local_relation(spark, [], schema)
+    rows, jobs = _jobs(spark, empty.collect)
+    assert (rows, jobs) == ([], 0)
+    assert empty.schema.simpleString() == (
+        "struct<query_id:int,terms:array<string>,score:double>"
+    )
+    rows, jobs = _jobs(spark, local_relation(spark, [(1, ["a"], 0.5)], schema).collect)
+    assert jobs == 0 and rows[0].asDict() == {"query_id": 1, "terms": ["a"], "score": 0.5}
 
 
 def test_write_local_appends_and_swaps_without_spark(tmp_path):
@@ -86,6 +116,19 @@ def test_write_local_appends_and_swaps_without_spark(tmp_path):
     assert os.path.exists(os.path.join(d, "t", "_SUCCESS"))
     assert os.listdir(d) == ["t"]
     assert not [f for f in os.listdir(os.path.join(d, "t")) if f.startswith(".")]
+
+    # floating-point and nested columns get no dictionary page, as Spark
+    # writes distinct doubles
+    import pyarrow.parquet as pq
+
+    write_local(
+        arrow_rows([(i % 2, i / 7, [i / 3]) for i in range(50)],
+                   "k int, x double, v array<double>"),
+        d, "f", mode="overwrite",
+    )
+    (f,) = [f for f in os.listdir(os.path.join(d, "f")) if f.endswith(".parquet")]
+    rg = pq.ParquetFile(os.path.join(d, "f", f)).metadata.row_group(0)
+    assert [rg.column(i).has_dictionary_page for i in range(3)] == [True, False, False]
 
 
 def _spark_segments(spark, index_dir: str) -> dict:

@@ -189,7 +189,7 @@ def test_no_pinned_rdds_after_query_batch(spark, entry_mod):
     baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     d = tempfile.mkdtemp(prefix="jv_hygiene_")
     docs = entry_mod._docs(spark, SF_DIR)
-    build_index(docs, d, n_parts=2, checkpointed=False)
+    build_index(docs, d, n_parts=2)
     bm25_topk_indexed(spark, d, entry_mod._qterms(spark), k=10, prune=True).count()
     bm25_topk_indexed(spark, d, entry_mod._qterms(spark), k=10, prune=False).count()
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
