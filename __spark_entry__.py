@@ -733,7 +733,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_ann_topk_batch(spark, sf):
         # batched ANN: top-10 for FIVE query vectors in one corpus scan
-        # (X @ Q.T GEMM per Arrow batch + bounded rank window) — the
+        # (per-batch top-10 per query, merged on the driver) — the
         # multi-query analog of the reference's parallel query stream
         # (ThroughputBenchmark.java:188-236). Self-match ranks first by
         # construction (cos 1.0) and the oracle mirrors that.

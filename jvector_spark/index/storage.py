@@ -403,7 +403,18 @@ def read_local(index_dir: str, name: str) -> pa.Table | None:
     files = _data_files(index_dir, name)
     if not files:
         return None
-    return pa.concat_tables(pq.read_table(f) for f in files)
+    # files of one table may differ in nullability (Spark writes count(*)
+    # as non-null, pyarrow appends nullable columns)
+    return pa.concat_tables((pq.read_table(f) for f in files), promote_options="default")
+
+
+def read_required(index_dir: str, name: str) -> pa.Table:
+    """:func:`read_local` for a table that must hold rows; raises
+    ``FileNotFoundError`` naming the table otherwise."""
+    tbl = read_local(index_dir, name)
+    if tbl is None or tbl.num_rows == 0:
+        raise FileNotFoundError(f"no {name} rows under {index_dir}")
+    return tbl
 
 
 def read_files(files: list[str], columns: list[str], filter=None) -> pa.Table:
@@ -501,7 +512,8 @@ def update_segments(spark: SparkSession, index_dir: str, **updates) -> dict:
 
 
 def tombstone_ids(spark: SparkSession, index_dir: str) -> set[int] | None:
-    """The current tombstone set (deleted doc_ids), or None if empty/absent.
+    """The current tombstone set (deleted doc_ids, or vec_ids for a vector
+    structure: the table's one column), or None if empty/absent.
     Driver-side set is intentional: reads mask it with a ``NOT IN`` filter
     (:func:`ids_in`) or a numpy mask in the WAND kernel, the same way the
     reference keeps deletions as an in-memory bitset (OnHeapGraphIndex
@@ -510,7 +522,7 @@ def tombstone_ids(spark: SparkSession, index_dir: str) -> set[int] | None:
     tbl = read_local(index_dir, "tombstones")
     if tbl is None:
         return None
-    return set(pc.unique(tbl["doc_id"]).to_pylist()) or None
+    return set(pc.unique(tbl.column(0)).to_pylist()) or None
 
 
 def lineage_totals(index_dir: str) -> tuple[int, int]:

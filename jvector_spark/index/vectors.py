@@ -21,40 +21,58 @@ conventions as the text index's format v2 and the IVF structure):
                   dim/8 B (BQ), dim·bits/8 B + 3 doubles inline (NVQ,
                   per-vector params — NVQuantization.java:583-638)
                   per vector
-- ``tombstones/`` optional (vec_id) appended by ``*_delete``
+- ``tombstones/`` optional (vec_id) appended by ``vector_delete``
 
-Queries load the k·dsub-sized codebooks driver-side (broadcast-sized, like
-the text dictionary) and SCAN ``codes/`` — the per-query cost at 100 TB is
-one compressed columnar scan, never a retrain/re-encode.
+One lifecycle serves every tier: a tier is a record
+(``operators.similarity.Tier``: params, fit, encode kernel, score kernel,
+default rerank depth), and :func:`build`, :func:`load`, :func:`extend`
+and :func:`serve` are the one body each; the ``<tier>_build`` /
+``_load`` / ``_extend`` / ``ann_topk_<tier>_indexed`` names bind it.
 
 Driver-sized tables go through Arrow on the driver (the ``index.storage``
 rule): the manifest, params, codebooks and tombstones are read with
 pyarrow and run no Spark job, and ``codes/`` is opened with the schema in
-its own footer, so no schema-inference job is planned either. Every tier
-then serves through the one two-phase path
-(``operators.similarity.two_phase_topk``): a single-query call runs two
-Spark jobs, the codes scan and the fetch of the candidates' vectors.
+its own footer, so no schema-inference job is planned either. A build or
+extend counts its rows on the codes write itself. A query runs the shared
+two-phase path (``operators.similarity.ann_topk_tier``): two Spark jobs,
+the codes scan and the fetch of the candidates' vectors.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
-import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.bq import BQ
+from ..operators.nvq import NVQ
+from ..operators.pq import PQ, pq_sample_mse
+from ..operators.similarity import (
+    SQ8,
+    Tier,
+    ann_topk_tier,
+    encode_codes,
+    rerank_pass,
+    sample_matrix,
+    topk_pass,
+    topk_relation,
+)
 from .storage import (
     arrow_rows,
     local_relation,
     local_schema,
     read_local,
+    read_required,
+    tombstone_ids,
     write_local,
 )
 
 FORMAT_VERSION = 1
+TIERS = {t.kind: t for t in (SQ8, PQ, BQ, NVQ)}
 
 
 # ---------------------------------------------------------------------------
@@ -79,17 +97,10 @@ def _write_manifest(index_dir: str, kind: str, **fields) -> None:
     )
 
 
-def _read_required(index_dir: str, name: str) -> pa.Table:
-    tbl = read_local(index_dir, name)
-    if tbl is None or tbl.num_rows == 0:
-        raise FileNotFoundError(f"no {name} rows under {index_dir}")
-    return tbl
-
-
 def read_manifest(spark: SparkSession, index_dir: str) -> dict:
     """The manifest row as a plain dict (the Python types ``Row.asDict``
     gives); raises on a format version newer than this engine."""
-    d = _read_required(index_dir, "manifest").slice(0, 1).to_pylist()[0]
+    d = read_required(index_dir, "manifest").slice(0, 1).to_pylist()[0]
     if d["version"] > FORMAT_VERSION:
         raise ValueError(
             f"vector index at {index_dir} has format version {d['version']}; "
@@ -103,6 +114,10 @@ def read_codes(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.schema(local_schema(index_dir, "codes")).parquet(
         os.path.join(index_dir, "codes")
     )
+
+
+def _dead(spark: SparkSession, index_dir: str) -> list[int]:
+    return sorted(tombstone_ids(spark, index_dir) or ())
 
 
 def vector_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -128,6 +143,85 @@ def vector_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_i
                     index_dir, "tombstones")
 
 
+def _write_codes(
+    tier: Tier, embeddings: DataFrame, params, index_dir: str, mode: str,
+    id_col: str, vec_col: str, **encode_kw,
+) -> int:
+    """Encode and write ``codes/``; the row count is observed on the write
+    itself, so the encode runs once."""
+    obs = Observation(f"{tier.kind}_codes_n")
+    encode_codes(tier, embeddings, params, id_col, vec_col, **encode_kw).observe(
+        obs, F.count("*").alias("n")
+    ).write.mode(mode).parquet(os.path.join(index_dir, "codes"))
+    return int(obs.get["n"])
+
+
+def build(
+    tier: Tier,
+    embeddings: DataFrame,
+    index_dir: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    fit_kw: dict | None = None,
+    encode_kw: dict | None = None,
+):
+    """Fit the tier once, persist its params, encode the corpus once —
+    the serve-time query path is then one codes scan per query batch (the
+    Grid.java:681-719 pq_cache idiom; the anti-pattern this replaces is
+    retraining + re-encoding per call). Returns (params, rows encoded)."""
+    params, fields = tier.fit(embeddings, id_col, vec_col, **(fit_kw or {}))
+    if tier.write_params is not None:
+        tier.write_params(params, index_dir)
+    n = _write_codes(tier, embeddings, params, index_dir, "overwrite",
+                     id_col, vec_col, **(encode_kw or {}))
+    _write_manifest(index_dir, tier.kind, **fields)
+    return params, n
+
+
+def load(tier: Tier, spark: SparkSession, index_dir: str) -> tuple:
+    """(params, codes) from the persisted structure — the serve path; the
+    manifest read is the version gate."""
+    params = tier.read_params(index_dir, read_manifest(spark, index_dir))
+    return params, read_codes(spark, index_dir)
+
+
+def extend(
+    tier: Tier,
+    new_embeddings: DataFrame,
+    index_dir: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> int:
+    """Append vectors encoded under the EXISTING params (B10 —
+    buildAndMergeNewNodes: insert into the existing structure). Returns
+    the number of vectors appended."""
+    spark = new_embeddings.sparkSession
+    params = tier.read_params(index_dir, read_manifest(spark, index_dir))
+    return _write_codes(tier, new_embeddings, params, index_dir, "append",
+                        id_col, vec_col)
+
+
+def serve(
+    tier: Tier,
+    spark: SparkSession,
+    index_dir: str,
+    embeddings: DataFrame,
+    query_vec: list[float],
+    k: int = 10,
+    rerank: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Two-phase top-k against the persisted structure, tombstones masked
+    off the codes scan (M1). Runs eagerly — two Spark jobs — and returns
+    (rank, id, cos) as a local relation."""
+    params, codes = load(tier, spark, index_dir)
+    return ann_topk_tier(
+        tier, embeddings, query_vec, k, rerank, codes, params,
+        _dead(spark, index_dir), id_col, vec_col,
+    )
+
+
 # ---------------------------------------------------------------------------
 # PQ structure
 # ---------------------------------------------------------------------------
@@ -143,106 +237,34 @@ def pq_build(
     vec_col: str = "embedding",
     anisotropic_eta: float | None = None,
 ) -> np.ndarray:
-    """Train codebooks once, encode the corpus once, PERSIST both — the
-    serve-time query path is then one codes scan per query batch (the
-    Grid.java:681-719 pq_cache idiom; the anti-pattern this replaces is
-    retraining k-means + re-encoding per call). Returns the codebooks.
-
-    ``anisotropic_eta`` switches the encoder to anisotropic coordinate-
-    descent code assignment (ProductQuantization.java:244-424's
+    """Train codebooks, encode the corpus and persist both; returns the
+    codebooks. ``anisotropic_eta`` switches the encoder to anisotropic
+    coordinate-descent code assignment (ProductQuantization.java:244-424's
     accuracy-per-byte variant): reconstruction error parallel to the
-    vector is weighted ``eta`` × the orthogonal error, which preferentially
-    preserves inner products at the same byte budget."""
-    from ..operators.pq import pq_encode, pq_train
-
-    books = pq_train(
-        embeddings, m=m, n_clusters=n_clusters, n_iters=n_iters, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-    )
-    mm, k, dsub = books.shape
-    write_local(
-        arrow_rows(
-            [
-                (int(s), int(c), [float(x) for x in books[s, c]])
-                for s in range(mm)
-                for c in range(k)
-            ],
-            "subspace int, cluster int, centroid array<double>",
-        ),
-        index_dir, "codebooks", mode="overwrite",
-    )
-    codes = pq_encode(
-        embeddings, books, id_col, vec_col, anisotropic_eta=anisotropic_eta
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    mse = _pq_sample_mse(embeddings, books, id_col, vec_col)
-    _write_manifest(
-        index_dir, "pq", dim=mm * dsub, m=mm, k=k, dsub=dsub, train_mse=mse
-    )
-    return books
+    vector is weighted ``eta`` × the orthogonal error."""
+    return build(
+        PQ, embeddings, index_dir, id_col, vec_col,
+        fit_kw=dict(m=m, n_clusters=n_clusters, n_iters=n_iters, seed=seed),
+        encode_kw=dict(anisotropic_eta=anisotropic_eta),
+    )[0]
 
 
 def pq_read_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
-    man = read_manifest(spark, index_dir)
-    tbl = _read_required(index_dir, "codebooks").sort_by(
-        [("subspace", "ascending"), ("cluster", "ascending")]
-    )
-    books = pc.list_flatten(tbl["centroid"]).to_numpy().astype(np.float64)
-    return books.reshape(man["m"], man["k"], man["dsub"])
+    return PQ.read_params(index_dir, read_manifest(spark, index_dir))
 
 
 def pq_load(spark: SparkSession, index_dir: str) -> tuple[np.ndarray, DataFrame]:
-    """(codebooks, codes) from the persisted structure — the serve path."""
-    return pq_read_codebooks(spark, index_dir), read_codes(spark, index_dir)
+    """(codebooks, codes)."""
+    return load(PQ, spark, index_dir)
 
 
-def pq_extend(
-    new_embeddings: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Append vectors encoded under the EXISTING codebooks (B10 for the PQ
-    tier — buildAndMergeNewNodes: insert into the existing structure).
-    Codebooks are unchanged, so extend ≡ rebuild-with-same-codebooks;
-    distribution drift accumulates silently — monitor with
-    :func:`pq_drift` and fold back in with :func:`pq_refine`."""
-    from ..operators.pq import pq_encode
-
-    spark = new_embeddings.sparkSession
-    books = pq_read_codebooks(spark, index_dir)
-    delta = pq_encode(new_embeddings, books, id_col, vec_col)
-    n = delta.count()
-    delta.write.mode("append").parquet(os.path.join(index_dir, "codes"))
-    return int(n)
-
-
-def _pq_sample_mse(
-    embeddings: DataFrame,
-    books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 4096,
-) -> float:
-    """Mean squared quantization error of a bounded deterministic sample
-    under ``books`` — the drift statistic (stored at build time; compared
-    against fresh data by :func:`pq_drift`)."""
-    pdf = (
-        embeddings.select(id_col, vec_col).orderBy(id_col)
-        .limit(int(sample_size)).toPandas()
-    )
-    if len(pdf) == 0:
-        return 0.0
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    mm, _, dsub = books.shape
-    err = 0.0
-    for s in range(mm):
-        sub = X[:, s * dsub : (s + 1) * dsub]
-        d = ((books[s] ** 2).sum(axis=1) - 2.0 * (sub @ books[s].T))
-        code = np.argmin(d, axis=1)
-        err += float(((sub - books[s][code]) ** 2).sum())
-    return err / len(X)
+def pq_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id",
+              vec_col: str = "embedding") -> int:
+    """Append vectors encoded under the EXISTING codebooks: extend ≡
+    rebuild-with-same-codebooks; distribution drift accumulates silently
+    — monitor with :func:`pq_drift` and fold back in with
+    :func:`pq_refine`."""
+    return extend(PQ, new_embeddings, index_dir, id_col, vec_col)
 
 
 def pq_drift(
@@ -260,8 +282,8 @@ def pq_drift(
     is due. The verify_index-style health check the reference's refine
     loop implies (ProductQuantization.java:159-196)."""
     man = read_manifest(spark, index_dir)
-    books = pq_read_codebooks(spark, index_dir)
-    cur = _pq_sample_mse(embeddings, books, id_col, vec_col, sample_size)
+    books = PQ.read_params(index_dir, man)
+    cur = pq_sample_mse(embeddings, books, id_col, vec_col, sample_size)
     base = float(man["train_mse"]) or 1e-12
     return {
         "build_mse": float(man["train_mse"]),
@@ -285,8 +307,7 @@ def pq_refine(
     refine restores the recall of a fresh build (extend-then-refine ≡
     fresh-build, pytest-enforced). Keeps m/k from the manifest; clears no
     tombstones (masking is orthogonal to encoding)."""
-    spark = embeddings.sparkSession
-    man = read_manifest(spark, index_dir)
+    man = read_manifest(embeddings.sparkSession, index_dir)
     return pq_build(
         embeddings, index_dir, m=man["m"], n_clusters=man["k"],
         n_iters=n_iters, seed=seed, id_col=id_col, vec_col=vec_col,
@@ -294,29 +315,11 @@ def pq_refine(
     )
 
 
-def ann_topk_pq_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase PQ top-k against the PERSISTED structure: broadcast-sized
-    codebooks load driver-side, the codes table scans off parquet (no
-    retrain/re-encode anywhere on the query path), tombstones mask the
-    scan (M1). Runs the scan eagerly — two Spark jobs — and returns
-    (rank, id, cos) as a local relation."""
-    from ..operators.pq import ann_topk_pq
-
-    books, codes = pq_load(spark, index_dir)
-    return ann_topk_pq(
-        embeddings, query_vec, k=k, rerank=rerank, codes=codes,
-        codebooks=books, deleted=vector_tombstones(spark, index_dir),
-        id_col=id_col, vec_col=vec_col,
-    )
+def ann_topk_pq_indexed(spark: SparkSession, index_dir: str, embeddings: DataFrame,
+                        query_vec: list[float], k: int = 10, rerank: int | None = None,
+                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Two-phase PQ top-k against the persisted structure (:func:`serve`)."""
+    return serve(PQ, spark, index_dir, embeddings, query_vec, k, rerank, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -329,59 +332,29 @@ def sq8_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Persist the SQ8 structure: per-dimension (min, scale) params + the
-    1 B/dim codes table. Serving then scans codes per query batch instead
-    of re-running the min/max aggregate + re-encode per call."""
-    from ..operators.similarity import sq8_encode, sq8_train
-
-    mn, scale = sq8_train(embeddings, vec_col)
-    write_local(
-        arrow_rows(
-            [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(mn, scale))],
-            "i int, mn double, scale double",
-        ),
-        index_dir, "params", mode="overwrite",
-    )
-    sq8_encode(embeddings, mn, scale, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(index_dir, "codes"))
-    _write_manifest(index_dir, "sq8", dim=len(mn))
-    return mn, scale
+    """Persist the per-dimension (min, scale) params + the 1 B/dim codes;
+    returns (mn, scale)."""
+    return build(SQ8, embeddings, index_dir, id_col, vec_col)[0]
 
 
 def sq8_read_params(spark: SparkSession, index_dir: str) -> tuple[np.ndarray, np.ndarray]:
-    tbl = _read_required(index_dir, "params").sort_by("i")
-    return (
-        tbl["mn"].to_numpy().astype(np.float64),
-        tbl["scale"].to_numpy().astype(np.float64),
-    )
+    return SQ8.read_params(index_dir, read_manifest(spark, index_dir))
 
 
 def sq8_load(
     spark: SparkSession, index_dir: str
 ) -> tuple[tuple[np.ndarray, np.ndarray], DataFrame]:
-    read_manifest(spark, index_dir)  # version gate
-    return sq8_read_params(spark, index_dir), read_codes(spark, index_dir)
+    """((mn, scale), codes)."""
+    return load(SQ8, spark, index_dir)
 
 
-def sq8_extend(
-    new_embeddings: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
+def sq8_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id",
+               vec_col: str = "embedding") -> int:
     """Append vectors encoded under the EXISTING per-dim params. A new
     value outside the trained [min, max] clips to the range edge (bounded
-    error absorbed by the exact rerank); refine = ``sq8_build`` over the
-    current corpus."""
-    from ..operators.similarity import sq8_encode
-
-    spark = new_embeddings.sparkSession
-    mn, scale = sq8_read_params(spark, index_dir)
-    delta = sq8_encode(new_embeddings, mn, scale, id_col, vec_col)
-    n = delta.count()
-    delta.write.mode("append").parquet(os.path.join(index_dir, "codes"))
-    return int(n)
+    error absorbed by the exact rerank; :func:`sq8_drift` makes it
+    visible); refine = ``sq8_build`` over the current corpus."""
+    return extend(SQ8, new_embeddings, index_dir, id_col, vec_col)
 
 
 def sq8_drift(
@@ -398,7 +371,7 @@ def sq8_drift(
     makes that silence visible. Over a bounded deterministic sample of the
     CURRENT corpus it reports the fraction of (vector, dim) values that
     fall outside the trained range (``clip_fraction`` — exactly the values
-    ``sq8_encode`` would clamp) and the worst overshoot in code units
+    the encoder would clamp) and the worst overshoot in code units
     (``max_overshoot_codes`` — how many 1/255 steps beyond the edge).
     A fresh build measures 0.0 by construction (params ARE the corpus
     min/max), so any nonzero fraction after extends means the distribution
@@ -406,13 +379,9 @@ def sq8_drift(
     Same implied health-check idiom as the PQ refine loop
     (ProductQuantization.java:159-196)."""
     mn, scale = sq8_read_params(spark, index_dir)
-    pdf = (
-        embeddings.select(id_col, vec_col).orderBy(id_col)
-        .limit(int(sample_size)).toPandas()
-    )
-    if len(pdf) == 0:
+    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
+    if len(X) == 0:
         return {"clip_fraction": 0.0, "max_overshoot_codes": 0.0, "n_sampled": 0}
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
     codes = (X - mn) / scale  # pre-clip code coordinates
     overshoot = np.maximum(np.maximum(-codes, codes - 255.0), 0.0)
     # 1e-6 code units of tolerance: a value AT the trained edge reproduces
@@ -426,27 +395,11 @@ def sq8_drift(
     }
 
 
-def ann_topk_sq8_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase SQ8 top-k against the persisted params + codes,
-    tombstones masked off the scan. Runs the scan eagerly — two Spark
-    jobs — and returns (rank, id, cos) as a local relation."""
-    from ..operators.similarity import ann_topk_sq8
-
-    params, codes = sq8_load(spark, index_dir)
-    return ann_topk_sq8(
-        embeddings, query_vec, k=k, rerank=rerank, codes=codes, params=params,
-        deleted=vector_tombstones(spark, index_dir),
-        id_col=id_col, vec_col=vec_col,
-    )
+def ann_topk_sq8_indexed(spark: SparkSession, index_dir: str, embeddings: DataFrame,
+                         query_vec: list[float], k: int = 10, rerank: int | None = None,
+                         id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Two-phase SQ8 top-k against the persisted structure (:func:`serve`)."""
+    return serve(SQ8, spark, index_dir, embeddings, query_vec, k, rerank, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -459,70 +412,29 @@ def bq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Persist the BQ structure: sign-bit codes at dim/8 bytes per vector
+    """Persist sign-bit codes at dim/8 bytes per vector
     (BinaryQuantization.java:88-110's packed-long layout as a parquet
     binary column). No trained parameters — the manifest records only the
     dimension. Returns the number of vectors encoded."""
-    from pyspark.sql import Observation
-
-    from ..operators.bq import bq_encode
-
-    first = embeddings.select(vec_col).first()
-    dim = len(first[0]) if first else 0
-    # count observed on the encode write itself — a separate read-back
-    # count() job would re-scan the codes table for a number the write
-    # already saw
-    obs = Observation("bq_build_n")
-    codes = bq_encode(embeddings, id_col, vec_col).observe(
-        obs, F.count("*").alias("n")
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    n = int(obs.get["n"])
-    _write_manifest(index_dir, "bq", dim=dim)
-    return n
+    return build(BQ, embeddings, index_dir, id_col, vec_col)[1]
 
 
 def bq_load(spark: SparkSession, index_dir: str) -> tuple[int, DataFrame]:
-    man = read_manifest(spark, index_dir)
-    return int(man["dim"]), read_codes(spark, index_dir)
+    """(dim, codes)."""
+    return load(BQ, spark, index_dir)
 
 
-def bq_extend(
-    new_embeddings: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
+def bq_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id",
+              vec_col: str = "embedding") -> int:
     """Append sign-bit codes (no parameters → extend is always exact)."""
-    from ..operators.bq import bq_encode
-
-    delta = bq_encode(new_embeddings, id_col, vec_col)
-    n = delta.count()
-    delta.write.mode("append").parquet(os.path.join(index_dir, "codes"))
-    return int(n)
+    return extend(BQ, new_embeddings, index_dir, id_col, vec_col)
 
 
-def ann_topk_bq_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase BQ top-k against the persisted sign-bit codes,
-    tombstones masked off the scan. Runs the scan eagerly — two Spark
-    jobs — and returns (rank, id, cos) as a local relation."""
-    from ..operators.bq import ann_topk_bq
-
-    _, codes = bq_load(spark, index_dir)
-    return ann_topk_bq(
-        embeddings, query_vec, k=k, rerank=rerank, codes=codes,
-        deleted=vector_tombstones(spark, index_dir),
-        id_col=id_col, vec_col=vec_col,
-    )
+def ann_topk_bq_indexed(spark: SparkSession, index_dir: str, embeddings: DataFrame,
+                        query_vec: list[float], k: int = 10, rerank: int | None = None,
+                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Two-phase BQ top-k against the persisted structure (:func:`serve`)."""
+    return serve(BQ, spark, index_dir, embeddings, query_vec, k, rerank, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -536,76 +448,34 @@ def nvq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Persist the NVQ structure: per-vector (min, range, warp-rate)
-    params inline with the packed codes (NVQuantization.java:583-638's
-    serialized QuantizedSubVector layout as parquet columns). There is NO
-    trained corpus state — the manifest records only (dim, bits) — so
-    extend ≡ rebuild exactly and nothing can drift. Returns the number of
-    vectors encoded; ``m`` in the manifest carries ``bits``."""
-    from pyspark.sql import Observation
-
-    from ..operators.nvq import nvq_encode
-
-    first = embeddings.select(vec_col).first()
-    dim = len(first[0]) if first else 0
-    # count observed on the encode write (same as bq_build: no read-back)
-    obs = Observation("nvq_build_n")
-    codes = nvq_encode(embeddings, bits, id_col, vec_col).observe(
-        obs, F.count("*").alias("n")
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    n = int(obs.get["n"])
-    _write_manifest(index_dir, "nvq", dim=dim, m=bits)
-    return n
+    """Persist per-vector (min, range, warp-rate) params inline with the
+    packed codes (NVQuantization.java:583-638's serialized
+    QuantizedSubVector layout as parquet columns). There is NO trained
+    corpus state — the manifest records only (dim, bits), ``m`` carrying
+    ``bits`` — so extend ≡ rebuild exactly and nothing can drift. Returns
+    the number of vectors encoded."""
+    return build(NVQ, embeddings, index_dir, id_col, vec_col,
+                 fit_kw=dict(bits=bits))[1]
 
 
 def nvq_load(spark: SparkSession, index_dir: str) -> tuple[int, DataFrame]:
-    """(bits, codes) from the persisted structure — the serve path."""
-    man = read_manifest(spark, index_dir)
-    return int(man["m"]), read_codes(spark, index_dir)
+    """(bits, codes)."""
+    return load(NVQ, spark, index_dir)
 
 
-def nvq_extend(
-    new_embeddings: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
+def nvq_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id",
+               vec_col: str = "embedding") -> int:
     """Append NVQ codes. Every parameter is per-vector, so — uniquely
     among the compressed tiers — extend is EXACTLY a fresh build of the
-    union (no stale codebooks like PQ, no clipping like SQ8); there is no
-    drift metric because there is nothing shared to drift."""
-    from ..operators.nvq import nvq_encode
-
-    spark = new_embeddings.sparkSession
-    bits = int(read_manifest(spark, index_dir)["m"])
-    delta = nvq_encode(new_embeddings, bits, id_col, vec_col)
-    n = delta.count()
-    delta.write.mode("append").parquet(os.path.join(index_dir, "codes"))
-    return int(n)
+    union (no stale codebooks like PQ, no clipping like SQ8)."""
+    return extend(NVQ, new_embeddings, index_dir, id_col, vec_col)
 
 
-def ann_topk_nvq_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase NVQ top-k against the persisted codes, tombstones masked
-    off the scan. Runs the scan eagerly — two Spark jobs — and returns
-    (rank, id, cos) as a local relation."""
-    from ..operators.nvq import ann_topk_nvq
-
-    bits, codes = nvq_load(spark, index_dir)
-    return ann_topk_nvq(
-        embeddings, query_vec, k=k, rerank=rerank, codes=codes, bits=bits,
-        deleted=vector_tombstones(spark, index_dir),
-        id_col=id_col, vec_col=vec_col,
-    )
+def ann_topk_nvq_indexed(spark: SparkSession, index_dir: str, embeddings: DataFrame,
+                         query_vec: list[float], k: int = 10, rerank: int | None = None,
+                         id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Two-phase NVQ top-k against the persisted structure (:func:`serve`)."""
+    return serve(NVQ, spark, index_dir, embeddings, query_vec, k, rerank, id_col, vec_col)
 
 
 def ann_topk_pq_nvq_indexed(
@@ -621,20 +491,16 @@ def ann_topk_pq_nvq_indexed(
     selects candidates, NVQ codes rerank them — raw float vectors are
     never read anywhere on the query path (the Grid.java search
     configuration that pairs a PQ searcher with an NVQ reranker;
-    NVQScorer.java scores candidates off the codes). Scores are
-    quantized-precision cosines: recall vs the exact scan is a pytest
+    NVQScorer.java scores candidates off the codes). The shared two-phase
+    path with NVQ's kernel as the second-phase scorer; scores are
+    quantized-precision cosines, so recall vs the exact scan is a pytest
     floor, not a hash contract — the operator exists for the scan-byte
     budget (m B + ~dim B per vector vs 4·dim B raw)."""
-    from ..operators.nvq import nvq_rerank
-    from ..operators.pq import PQ_RERANK_FACTOR, PQ_RERANK_FLOOR, pq_approx_scores
-    from ..operators.similarity import ann_candidates
-
-    if rerank is None:
-        rerank = max(PQ_RERANK_FLOOR, PQ_RERANK_FACTOR * k)
     books, pq_codes = pq_load(spark, pq_dir)
     bits, nvq_codes = nvq_load(spark, nvq_dir)
-    cand_ids = ann_candidates(
-        pq_approx_scores(pq_codes, books, query_vec, id_col), rerank,
-        vector_tombstones(spark, pq_dir), id_col,
-    )
-    return nvq_rerank(nvq_codes, cand_ids, query_vec, k=k, bits=bits, id_col=id_col)
+    Q = np.asarray([query_vec], dtype=np.float64)
+    depth = PQ.rerank(k) if rerank is None else int(rerank)
+    cands = topk_pass(pq_codes, partial(PQ.score, params=books), Q, depth,
+                      _dead(spark, pq_dir), id_col)
+    hits = rerank_pass(nvq_codes, partial(NVQ.score, params=bits), Q, cands, k, id_col)
+    return topk_relation(spark, hits, id_col)

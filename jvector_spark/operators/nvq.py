@@ -22,13 +22,17 @@ separate slot next to SQ8/PQ/BQ):
   component distribution is dense, so 8 bits/dim reconstructs tighter
   than a uniform grid on heavy-centered data.
 
-Spark-first shape: encoding is one ``mapInPandas`` pass (whole-batch
-numpy; the reference's per-subvector Newton fit becomes a deterministic
-vectorized grid search over the growth rate with the midpoint fixed at
-the reference's initializer — the grid includes α = 0, i.e. plain
-uniform, so the learned code is never worse than uniform). Codes persist
-as one parquet row per vector ``(vec_id, mn, dl, alpha, codes binary)``;
-queries scan 1 B/dim (8-bit) or 0.5 B/dim (4-bit) plus three doubles.
+Spark-first shape — the ``NVQ`` tier record on the shared two-phase path
+(``similarity.ann_topk_tier``): encoding is one ``mapInPandas`` pass
+(whole-batch numpy; the reference's per-subvector Newton fit becomes a
+deterministic vectorized grid search over the growth rate with the
+midpoint fixed at the reference's initializer — the grid includes α = 0,
+i.e. plain uniform, so the learned code is never worse than uniform).
+Codes persist as one parquet row per vector ``(vec_id, mn, dl, alpha,
+codes binary)``; queries scan 1 B/dim (8-bit) or 0.5 B/dim (4-bit) plus
+three doubles. ``index.vectors.ann_topk_pq_nvq_indexed`` uses
+:func:`nvq_scores` as the second-phase scorer instead of the exact
+kernel, so raw floats are never read.
 """
 
 from __future__ import annotations
@@ -36,18 +40,22 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .similarity import exact_rerank_batch, two_phase_topk
-
-NVQ_RERANK_FACTOR = 6
-NVQ_RERANK_FLOOR = 64
+from .similarity import (
+    Tier,
+    ann_topk_tier,
+    binary_rows,
+    code_matrix,
+    deleted_ids,
+    encode_codes,
+    first_dim,
+    per_query,
+    unit,
+)
 
 # growth-rate candidates for the per-vector warp fit; 0 = uniform grid
 # (always in the grid → learned MSE ≤ uniform MSE by construction)
 NVQ_ALPHA_GRID = (0.0, 1.0, 2.0, 4.0, 8.0, 16.0)
-
-_CODE_SCHEMA = "{id} long, mn double, dl double, alpha double, codes binary"
 
 
 def _warp(u: np.ndarray, alpha: float) -> np.ndarray:
@@ -97,60 +105,32 @@ def _unpack(raw: np.ndarray, dim: int, bits: int) -> np.ndarray:
     return out[:, :dim]
 
 
-def nvq_encode(
-    embeddings: DataFrame,
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, mn, dl, alpha, codes binary) — per-vector nonuniform codes.
-
-    For each vector: range = [min, max] of ITS OWN components
-    (NVQuantization.java:524-526), then the growth rate of the logistic
-    warp is fit per vector by a deterministic grid search minimizing
-    reconstruction MSE (the whole-batch-vectorized form of the
-    reference's per-subvector loss minimization at :533-565; midpoint
-    fixed at the range center, the reference's initializer). No corpus
-    statistics are consumed anywhere — encode is embarrassingly parallel
-    and extend ≡ rebuild by construction."""
-    if bits not in (4, 8):
-        raise ValueError(f"bits must be 4 or 8, got {bits}")
+def _nvq_encode(X: np.ndarray, bits: int) -> dict:
+    """Per-vector nonuniform codes of a batch. For each vector: range =
+    [min, max] of ITS OWN components (NVQuantization.java:524-526), then
+    the growth rate of the logistic warp is fit per vector by a
+    deterministic grid search minimizing reconstruction MSE (the
+    whole-batch-vectorized form of the reference's per-subvector loss
+    minimization at :533-565; midpoint fixed at the range center, the
+    reference's initializer)."""
     levels = float((1 << bits) - 1)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mn = X.min(axis=1)
-            dl = np.maximum(X.max(axis=1) - mn, 1e-12)
-            u = (X - mn[:, None]) / dl[:, None]
-            best_mse = np.full(len(X), np.inf)
-            best_alpha = np.zeros(len(X))
-            best_codes = np.zeros(X.shape, dtype=np.uint8)
-            for alpha in NVQ_ALPHA_GRID:
-                y = _warp(u, alpha)
-                c = np.round(y * levels)
-                ru = _unwarp(c / levels, np.full(len(X), alpha))
-                mse = ((ru - u) ** 2).mean(axis=1)
-                take = mse < best_mse
-                best_mse[take] = mse[take]
-                best_alpha[take] = alpha
-                best_codes[take] = c[take].astype(np.uint8)
-            packed = _pack(best_codes, bits)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "mn": mn,
-                    "dl": dl,
-                    "alpha": best_alpha,
-                    "codes": [packed[i].tobytes() for i in range(len(packed))],
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        fn, schema=_CODE_SCHEMA.format(id=id_col)
-    )
+    mn = X.min(axis=1)
+    dl = np.maximum(X.max(axis=1) - mn, 1e-12)
+    u = (X - mn[:, None]) / dl[:, None]
+    best_mse = np.full(len(X), np.inf)
+    best_alpha = np.zeros(len(X))
+    best_codes = np.zeros(X.shape, dtype=np.uint8)
+    for alpha in NVQ_ALPHA_GRID:
+        y = _warp(u, alpha)
+        c = np.round(y * levels)
+        ru = _unwarp(c / levels, np.full(len(X), alpha))
+        mse = ((ru - u) ** 2).mean(axis=1)
+        take = mse < best_mse
+        best_mse[take] = mse[take]
+        best_alpha[take] = alpha
+        best_codes[take] = c[take].astype(np.uint8)
+    return {"mn": mn, "dl": dl, "alpha": best_alpha,
+            "codes": binary_rows(_pack(best_codes, bits))}
 
 
 def nvq_reconstruct_batch(
@@ -160,152 +140,72 @@ def nvq_reconstruct_batch(
     float64 — the NVQVectors.java scoring kernel's dequant step, whole
     batch at once."""
     levels = float((1 << bits) - 1)
-    n_bytes = (dim * bits + 7) // 8
-    buf = b"".join(pdf["codes"])
-    raw = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), n_bytes)
+    raw = code_matrix(pdf, (dim * bits + 7) // 8)
     y = _unpack(raw, dim, bits).astype(np.float64) / levels
     u = _unwarp(y, pdf["alpha"].to_numpy())
     return pdf["mn"].to_numpy()[:, None] + pdf["dl"].to_numpy()[:, None] * u
 
 
-def nvq_approx_scores(
-    codes: DataFrame,
-    query_vec: list[float],
-    bits: int = 8,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, approx) — cosine of the query against the DEQUANTIZED codes,
-    one reconstruct + GEMV per Arrow batch (NVQScorer.java's
-    score-off-the-codes contract; raw vectors are never read)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    dim = len(q)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = nvq_reconstruct_batch(pdf, dim, bits)
-            norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "approx": (X @ q) / norms}
-            )
-
-    return codes.mapInPandas(fn, schema=f"{id_col} long, approx double")
+def nvq_scores(codes: pd.DataFrame, Q: np.ndarray, params) -> np.ndarray:
+    """Cosine of each query against the DEQUANTIZED codes, one reconstruct
+    + GEMV per query per Arrow batch (NVQScorer.java's
+    score-off-the-codes contract; raw vectors are never read). ``params``
+    is the bit width."""
+    X = nvq_reconstruct_batch(codes, Q.shape[1], params)
+    norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
+    return per_query(Q, lambda q: (X @ unit(q)) / norms)
 
 
-def ann_topk_nvq(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    bits: int = 8,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase top-k: NVQ compressed scan selects ``rerank`` candidates,
-    exact float rerank orders the final k — same fast-vs-slow contract as
-    the SQ8/PQ/BQ tiers (TestCompressedVectors.java:231), with the first
-    pass reading 1 B/dim + 3 doubles per vector. ``deleted`` is the M1
-    tombstone mask, dropped before candidate selection. The call runs the
-    scan eagerly and returns a local relation (:func:`two_phase_topk`)."""
-    if rerank is None:
-        rerank = max(NVQ_RERANK_FLOOR, NVQ_RERANK_FACTOR * k)
-    if codes is None:
-        codes = nvq_encode(embeddings, bits, id_col, vec_col)
-    approx = nvq_approx_scores(codes, query_vec, bits, id_col)
-    return two_phase_topk(
-        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
+def _check_bits(bits: int) -> int:
+    if bits not in (4, 8):
+        raise ValueError(f"bits must be 4 or 8, got {bits}")
+    return int(bits)
+
+
+def _nvq_fit(embeddings: DataFrame, id_col: str, vec_col: str, bits: int = 8):
+    # nothing trained: the manifest records (dim, bits), ``m`` carrying bits
+    bits = _check_bits(bits)
+    return bits, {"dim": first_dim(embeddings, vec_col), "m": bits}
+
+
+NVQ = Tier(
+    "nvq", _nvq_fit, _nvq_encode, nvq_scores, floor=64, factor=6,
+    read_params=lambda index_dir, manifest: int(manifest["m"]),
+    code_schema="mn double, dl double, alpha double, codes binary",
+)
+
+
+def nvq_encode(embeddings: DataFrame, bits: int = 8, id_col: str = "vec_id",
+               vec_col: str = "embedding") -> DataFrame:
+    """(id, mn, dl, alpha, codes binary) — per-vector nonuniform codes
+    (:func:`_nvq_encode`). No corpus statistics are consumed anywhere —
+    encode is embarrassingly parallel and extend ≡ rebuild by
+    construction."""
+    return encode_codes(NVQ, embeddings, _check_bits(bits), id_col, vec_col)
+
+
+def ann_topk_nvq(embeddings: DataFrame, query_vec: list[float], k: int = 10,
+                 rerank: int | None = None, codes: DataFrame | None = None,
+                 bits: int = 8, deleted: DataFrame | None = None,
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """(rank, id, cos): NVQ two-phase top-k — same fast-vs-slow contract
+    as the SQ8/PQ/BQ tiers (TestCompressedVectors.java:231), with the
+    first pass reading 1 B/dim + 3 doubles per vector. ``deleted`` is the
+    M1 tombstone mask, dropped before candidate selection."""
+    return ann_topk_tier(
+        NVQ, embeddings, query_vec, k, rerank, codes, bits,
+        deleted_ids(deleted, id_col), id_col, vec_col,
     )
 
 
-def ann_topk_nvq_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    bits: int = 8,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """BATCH serving: ONE NVQ codes scan scores a whole query table
-    (reconstruct each Arrow batch once, one GEMM against all queries),
-    per-partition lexsort keeps ``rerank`` candidates per query, and the
-    shared bounded window + exact gather rerank orders the final k — the
-    batch shape every compressed tier serves
-    (ThroughputBenchmark.java:188-236). ``deleted`` tombstones are masked
-    off the codes scan itself (M1)."""
-    if rerank is None:
-        rerank = max(NVQ_RERANK_FLOOR, NVQ_RERANK_FACTOR * k)
-    if codes is None:
-        codes = nvq_encode(embeddings, bits, id_col, vec_col)
-    if deleted is not None:
-        codes = codes.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    qrows = queries.select(qid_col, qvec_col).collect()  # query-batch-sized
-    if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{qid_col} long, rank int, {id_col} long, cos double"
-        )
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    dim = Q.shape[1]
-    rr = int(rerank)
-
-    def approx_fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = nvq_reconstruct_batch(pdf, dim, bits)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            S = Xn @ Qn.T
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j in range(len(qids)):
-                top = np.lexsort((ids, -S[:, j]))[:rr]
-                parts.append(
-                    pd.DataFrame(
-                        {qid_col: qids[j], id_col: ids[top], "approx": S[top, j]}
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    partial = codes.mapInPandas(
-        approx_fn, schema=f"{qid_col} long, {id_col} long, approx double"
-    )
-    return exact_rerank_batch(
-        embeddings, partial, qids, Qn, k, rr, id_col, vec_col, qid_col
-    )
-
-
-def nvq_rerank(
-    codes: DataFrame,
-    cand_ids: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    bits: int = 8,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Order ``cand_ids`` by NVQ-scored cosine and keep the top k — the
-    reference's ACTUAL serving role for NVQ (NVQScorer.java: rerank the
-    coarse pass's candidates off the codes, never touching raw floats).
-    ``cand_ids`` is bounded (a first pass's rerank set), so the join
-    ships ≤ rerank code rows; scores are quantized-precision cosines."""
-    cand = codes.join(F.broadcast(cand_ids.select(id_col)), id_col)
-    scored = nvq_approx_scores(cand, query_vec, bits, id_col)
-    top = scored.orderBy(F.desc("approx"), F.asc(id_col)).limit(int(k))
-    # window-free rank over the ≤ k survivors (cosine_topk's idiom)
-    return (
-        top.coalesce(1)
-        .sortWithinPartitions(F.desc("approx"), F.asc(id_col))
-        .withColumn("rank", (F.monotonically_increasing_id() + 1).cast("int"))
-        .select("rank", id_col, F.col("approx").alias("cos"))
+def ann_topk_nvq_batch(embeddings: DataFrame, queries: DataFrame, k: int = 10,
+                       rerank: int | None = None, codes: DataFrame | None = None,
+                       bits: int = 8, deleted: DataFrame | None = None,
+                       id_col: str = "vec_id", vec_col: str = "embedding",
+                       qid_col: str = "query_id", qvec_col: str = "qvec") -> DataFrame:
+    """(query_id, rank, id, cos): BATCH serving — ONE NVQ codes scan scores
+    a whole query table (ThroughputBenchmark.java:188-236)."""
+    return ann_topk_tier(
+        NVQ, embeddings, queries, k, rerank, codes, bits,
+        deleted_ids(deleted, id_col), id_col, vec_col, qid_col, qvec_col,
     )

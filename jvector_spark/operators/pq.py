@@ -8,23 +8,23 @@ subspace (README.md:166-170's worked 32× example: 128 dims × 4 B → 16 B
 codes), and scores queries against codes via a precomputed per-query
 distance table — asymmetric distance computation, ``PQVectors.java:208-279``.
 
-Spark-first shape (the same two-phase plumbing as the SQ8 tier):
+Spark-first shape — the ``PQ`` tier record on the shared two-phase path
+(``similarity.ann_topk_tier``):
 
 - ``pq_train``: driver-side seeded k-means per subspace over a bounded
   ``orderBy(id).limit(n)`` sample — deterministic at any corpus size.
-- ``pq_encode``: ``mapInPandas`` Arrow batches; one argmin GEMM per
-  (batch × subspace), emitting ``m`` uint8 codes per vector as binary.
-  At scale the codes table is persisted once and scanned per query batch.
-- ``pq_approx_scores``: the ADC graft — ONE (m × k) table per query
+- encode: one argmin GEMM per (Arrow batch × subspace), emitting ``m``
+  uint8 codes per vector as binary. At scale the codes table is persisted
+  once (``index.vectors.pq_build``) and scanned per query batch.
+- ``pq_scores``: the ADC graft — ONE (m × k) table per query
   (codebook ⋅ query-subvector inner products), then scoring a batch of
-  codes is ``m`` vectorized table lookups + a sum, touching only
-  ``m`` bytes per corpus vector (32× fewer than float32 at m = dim/8).
-- ``ann_topk_pq``: compressed scan → top-``rerank`` candidates
-  (TakeOrderedAndProject, per-partition heaps) → exact float rerank on
-  the driver (``similarity.two_phase_topk``, shared by every tier).
-  With the default margin the output is rank-IDENTICAL to the exact scan
-  (the fast-vs-slow equivalence idiom: same DuckDB oracle as ``ann_topk``
-  in the driver contract, hash-checked).
+  codes is ``m`` vectorized table lookups + a sum, touching only ``m``
+  bytes per corpus vector (32× fewer than float32 at m = dim/8).
+- ``ann_topk_pq``/``ann_topk_pq_batch``: the top-``rerank`` ADC
+  candidates per query, then the exact float rerank on the driver. With
+  the default margin the output is rank-IDENTICAL to the exact scan (the
+  fast-vs-slow equivalence idiom: same DuckDB oracle as ``ann_topk`` in
+  the driver contract, hash-checked).
 
 Vectors are L2-normalized BEFORE encoding, so the ADC inner product
 against the normalized query approximates cosine directly and no
@@ -36,12 +36,24 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .similarity import IVF_MAX_TRAINING, two_phase_topk
+from ..index.storage import arrow_rows, read_required, write_local
+from .similarity import (
+    IVF_MAX_TRAINING,
+    Tier,
+    ann_topk_tier,
+    binary_rows,
+    code_matrix,
+    deleted_ids,
+    encode_codes,
+    per_query,
+    sample_matrix,
+    unit,
+)
 
-# candidates = max(PQ_RERANK_FLOOR, factor·k). Factor 10 is the reference
+# default rerank depth = max(256, 10·k). Factor 10 is the reference
 # grid's top overquery (Bench.java:47-52: overquery ∈ {1,2,5,10}); the floor
 # absorbs the near-uniform-noise adversary, where the margin the true top-10
 # needs GROWS with corpus size (measured on the synthetic Gaussian fixture:
@@ -49,8 +61,6 @@ from .similarity import IVF_MAX_TRAINING, two_phase_topk
 # information-theoretic regime documented for the LSH/IVF tiers. On clustered
 # data small margins suffice; bench's recall/QPS grid measures the curve.
 # 256 candidates is negligible rerank work at any real corpus size.
-PQ_RERANK_FACTOR = 10
-PQ_RERANK_FLOOR = 256
 
 
 def _kmeans_euclid(X: np.ndarray, k: int, n_iters: int, rng) -> np.ndarray:
@@ -96,13 +106,7 @@ def pq_train(
         # codes are uint8 — more than 256 clusters would silently wrap
         # modulo 256 and corrupt every ADC score downstream
         raise ValueError(f"n_clusters must be in [1, 256], got {n_clusters}")
-    pdf = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(int(sample_size))
-        .toPandas()
-    )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     dim = X.shape[1]
     if m is None:
@@ -177,226 +181,143 @@ def _encode_batch_anisotropic(
     return codes.astype(np.uint8)
 
 
-def pq_encode(
+def pq_sample_mse(
     embeddings: DataFrame,
-    codebooks: np.ndarray,
+    books: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    anisotropic_eta: float | None = None,
-) -> DataFrame:
+    sample_size: int = 4096,
+) -> float:
+    """Mean squared quantization error of a bounded deterministic sample
+    under ``books`` — the drift statistic (stored in the manifest at build
+    time; compared against fresh data by ``index.vectors.pq_drift``)."""
+    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
+    if len(X) == 0:
+        return 0.0
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    mm, _, dsub = books.shape
+    err = 0.0
+    for s in range(mm):
+        sub = X[:, s * dsub : (s + 1) * dsub]
+        d = ((books[s] ** 2).sum(axis=1) - 2.0 * (sub @ books[s].T))
+        code = np.argmin(d, axis=1)
+        err += float(((sub - books[s][code]) ** 2).sum())
+    return err / len(X)
+
+
+def pq_scores(codes: pd.DataFrame, Q: np.ndarray, params) -> np.ndarray:
+    """ADC: one (m × k) inner-product table per query (codebook entries ⋅
+    normalized query subvectors), then each code row scores as ``m`` table
+    lookups + sum (PQVectors.java:208-279's precomputed-table scoring,
+    vectorized over the whole Arrow batch)."""
+    B = np.ascontiguousarray(params, dtype=np.float64)
+    m, _, dsub = B.shape
+    C = code_matrix(codes, m)
+
+    def column(q):
+        # T[s, c] = codebook[s][c] · q_sub[s] — the per-query distance table
+        T = np.einsum("skd,sd->sk", B, unit(q).reshape(m, dsub))
+        return T[np.arange(m)[None, :], C].sum(axis=1)
+
+    return per_query(Q, column)
+
+
+def _pq_encode(X: np.ndarray, books, anisotropic_eta: float | None = None) -> dict:
+    B = np.ascontiguousarray(books, dtype=np.float64)  # (m, k, dsub)
+    bsq = (B**2).sum(axis=2)  # (m, k)
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    if anisotropic_eta is None:
+        return {"codes": binary_rows(_encode_batch(X, B, bsq))}
+    return {"codes": binary_rows(
+        _encode_batch_anisotropic(X, B, bsq, float(anisotropic_eta))
+    )}
+
+
+def _pq_write(books: np.ndarray, index_dir: str) -> None:
+    mm, k, _ = books.shape
+    write_local(
+        arrow_rows(
+            [
+                (int(s), int(c), [float(x) for x in books[s, c]])
+                for s in range(mm)
+                for c in range(k)
+            ],
+            "subspace int, cluster int, centroid array<double>",
+        ),
+        index_dir, "codebooks", mode="overwrite",
+    )
+
+
+def _pq_read(index_dir: str, manifest: dict) -> np.ndarray:
+    tbl = read_required(index_dir, "codebooks").sort_by(
+        [("subspace", "ascending"), ("cluster", "ascending")]
+    )
+    books = pc.list_flatten(tbl["centroid"]).to_numpy().astype(np.float64)
+    return books.reshape(manifest["m"], manifest["k"], manifest["dsub"])
+
+
+def _pq_fit(embeddings: DataFrame, id_col: str, vec_col: str, **kw):
+    books = pq_train(embeddings, id_col=id_col, vec_col=vec_col, **kw)
+    mm, k, dsub = books.shape
+    mse = pq_sample_mse(embeddings, books, id_col, vec_col)
+    return books, {"dim": mm * dsub, "m": mm, "k": k, "dsub": dsub, "train_mse": mse}
+
+
+PQ = Tier(
+    "pq", _pq_fit, _pq_encode, pq_scores, floor=256, factor=10,
+    read_params=_pq_read, write_params=_pq_write,
+)
+
+
+def pq_encode(embeddings: DataFrame, codebooks: np.ndarray, id_col: str = "vec_id",
+              vec_col: str = "embedding",
+              anisotropic_eta: float | None = None) -> DataFrame:
     """(id, codes binary) — ``m`` uint8 codes per vector: nearest codebook
     entry per subspace, one argmin GEMM per (Arrow batch × subspace).
     m = dim/8 → 32× smaller than float32 (the README.md:166-170 headline).
     ``anisotropic_eta`` (e.g. 4.0) switches to the anisotropic
     coordinate-descent assignment (see :func:`_encode_batch_anisotropic`)."""
-    B = np.ascontiguousarray(codebooks, dtype=np.float64)  # (m, k, dsub)
-    m, _, dsub = B.shape
-    if B.shape[1] > 256:
-        raise ValueError(f"codebooks have {B.shape[1]} clusters; uint8 codes cap at 256")
-    bsq = (B**2).sum(axis=2)  # (m, k)
-    eta = anisotropic_eta
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            codes = (
-                _encode_batch(X, B, bsq)
-                if eta is None
-                else _encode_batch_anisotropic(X, B, bsq, float(eta))
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "codes": [codes[i].tobytes() for i in range(len(codes))],
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, codes binary"
+    if np.shape(codebooks)[1] > 256:
+        raise ValueError(
+            f"codebooks have {np.shape(codebooks)[1]} clusters; uint8 codes cap at 256"
+        )
+    return encode_codes(
+        PQ, embeddings, codebooks, id_col, vec_col, anisotropic_eta=anisotropic_eta
     )
 
 
-def pq_approx_scores(
-    codes: DataFrame,
-    codebooks: np.ndarray,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, approx) — ADC: one (m × k) inner-product table per query
-    (codebook entries ⋅ normalized query subvectors), then each code row
-    scores as ``m`` table lookups + sum (PQVectors.java:208-279's
-    precomputed-table scoring, vectorized over the whole Arrow batch)."""
-    B = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, _, dsub = B.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    # T[s, c] = codebook[s][c] · q_sub[s]  — the per-query distance table
-    T = np.einsum("skd,sd->sk", B, q.reshape(m, dsub))
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            buf = b"".join(pdf["codes"])
-            C = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), m)
-            approx = T[np.arange(m)[None, :], C].sum(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "approx": approx}
-            )
-
-    return codes.mapInPandas(fn, schema=f"{id_col} long, approx double")
-
-
-def ann_topk_pq(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    codebooks: np.ndarray | None = None,
-    m: int | None = None,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase top-k: PQ compressed scan (m bytes/vector — 32× fewer
-    than float32 at the default m = dim/8) selects ``rerank`` candidates,
-    exact float rerank orders the final k. Same fast-vs-slow contract as
-    the SQ8 tier: with the default margin the result is rank-identical to
-    ``cosine_topk`` (hash-checked vs the same oracle). ``codes``/
-    ``codebooks`` accept a pre-built structure (at scale: train + encode
-    once, scan codes per query batch). ``deleted`` is the tombstone
-    relation (M1 mask, same contract as every other ANN tier): those ids
-    drop off the compressed scan before candidate selection, so they
-    neither surface nor consume rerank budget. The call runs the scan
-    eagerly and returns a local relation (:func:`two_phase_topk`)."""
-    if rerank is None:
-        rerank = max(PQ_RERANK_FLOOR, PQ_RERANK_FACTOR * k)
+def ann_topk_pq(embeddings: DataFrame, query_vec: list[float], k: int = 10,
+                rerank: int | None = None, codes: DataFrame | None = None,
+                codebooks: np.ndarray | None = None, m: int | None = None,
+                deleted: DataFrame | None = None, id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
+    """(rank, id, cos): PQ two-phase top-k (m bytes/vector scanned — 32×
+    fewer than float32 at the default m = dim/8). ``codes``/``codebooks``
+    accept a pre-built structure (at scale: train + encode once, scan
+    codes per query batch); ``deleted`` is the tombstone relation (M1
+    mask), dropped before candidate selection."""
     if codebooks is None:
         codebooks = pq_train(embeddings, m=m, id_col=id_col, vec_col=vec_col)
-    if codes is None:
-        codes = pq_encode(embeddings, codebooks, id_col, vec_col)
-    approx = pq_approx_scores(codes, codebooks, query_vec, id_col)
-    return two_phase_topk(
-        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
+    return ann_topk_tier(
+        PQ, embeddings, query_vec, k, rerank, codes, codebooks,
+        deleted_ids(deleted, id_col), id_col, vec_col,
     )
 
 
-def ann_topk_pq_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    codebooks: np.ndarray | None = None,
-    m: int | None = None,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """Batch two-phase PQ serving — the 32×-compression twin of
-    :func:`~jvector_spark.operators.similarity.ann_topk_sq8_batch`: ONE
-    compressed codes scan scores EVERY query (the per-query ADC tables for
-    the whole batch are precomputed driver-side and shipped in the kernel
-    closure; scoring a codes batch is ``m`` vectorized table gathers per
-    query block, reading m bytes/vector), a bounded window keeps
-    ``rerank`` candidates per query, and the exact float rerank touches
-    only the candidate union (each candidate vector gathered once). With
-    the default margin the output is rank-identical to
-    ``cosine_topk_batch`` (pytest-enforced). ``deleted`` tombstones mask
-    off the codes scan (M1). Reference analog: fused bulk ADC scoring
-    over a query stream (PQVectors.java:208-279 + Q14)."""
-    from pyspark.sql import Window
-
-    if rerank is None:
-        rerank = max(PQ_RERANK_FLOOR, PQ_RERANK_FACTOR * k)
+def ann_topk_pq_batch(embeddings: DataFrame, queries: DataFrame, k: int = 10,
+                      rerank: int | None = None, codes: DataFrame | None = None,
+                      codebooks: np.ndarray | None = None, m: int | None = None,
+                      deleted: DataFrame | None = None, id_col: str = "vec_id",
+                      vec_col: str = "embedding", qid_col: str = "query_id",
+                      qvec_col: str = "qvec") -> DataFrame:
+    """(query_id, rank, id, cos): the batch form of :func:`ann_topk_pq` —
+    ONE codes scan scores every query (fused bulk ADC over a query stream,
+    PQVectors.java:208-279 + Q14)."""
     if codebooks is None:
         codebooks = pq_train(embeddings, m=m, id_col=id_col, vec_col=vec_col)
-    if codes is None:
-        codes = pq_encode(embeddings, codebooks, id_col, vec_col)
-    if deleted is not None:
-        codes = codes.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    qrows = queries.select(qid_col, qvec_col).collect()  # query-batch-sized
-    if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{qid_col} long, rank int, {id_col} long, cos double"
-        )
-    B = np.ascontiguousarray(codebooks, dtype=np.float64)
-    mm, _, dsub = B.shape
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    # T[q, s, c] = codebook[s][c] · q_sub[s] — one ADC table PER QUERY,
-    # all precomputed in a single einsum (batch × m × k doubles)
-    T = np.einsum("skd,qsd->qsk", B, Qn.reshape(len(Qn), mm, dsub))
-    Tm = np.ascontiguousarray(T.transpose(1, 2, 0))  # (m, k, Q) for gathers
-    rr = int(rerank)
-
-    def approx_fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            buf = b"".join(pdf["codes"])
-            C = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), mm)
-            S = np.zeros((len(pdf), len(qids)))
-            for s in range(mm):
-                S += Tm[s, C[:, s], :]
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j in range(len(qids)):
-                top = np.lexsort((ids, -S[:, j]))[:rr]
-                parts.append(
-                    pd.DataFrame(
-                        {qid_col: qids[j], id_col: ids[top], "approx": S[top, j]}
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    partial = codes.mapInPandas(
-        approx_fn, schema=f"{qid_col} long, {id_col} long, approx double"
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("approx"), F.asc(id_col))
-    cand = (
-        partial.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= rr)
-        .select(qid_col, id_col)
-    )
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    joined = cand.join(embeddings.select(id_col, vec_col), id_col)
-
-    def rerank_fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            qi = np.fromiter(
-                (qpos[int(q)] for q in pdf[qid_col]), dtype=np.int64
-            )
-            cos = np.einsum("ij,ij->i", Xn, Qn[qi])
-            yield pd.DataFrame(
-                {
-                    qid_col: pdf[qid_col].to_numpy(),
-                    id_col: pdf[id_col].to_numpy(),
-                    "cos": cos,
-                }
-            )
-
-    exact = joined.mapInPandas(
-        rerank_fn, schema=f"{qid_col} long, {id_col} long, cos double"
-    )
-    w2 = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= int(k))
-        .select(qid_col, "rank", id_col, "cos")
+    return ann_topk_tier(
+        PQ, embeddings, queries, k, rerank, codes, codebooks,
+        deleted_ids(deleted, id_col), id_col, vec_col, qid_col, qvec_col,
     )
 
 

@@ -12,6 +12,9 @@ GraphSearcher.java:209-230), re-expressed Spark-first.
   distance 1), then scored exactly. Approximate (recall < 1) but turns a
   full scan into a bucket lookup — the graft of jvector's graph traversal
   visiting a tiny fraction of the corpus.
+- compressed tiers (SQ8 here; PQ, BQ, NVQ in their modules): each is a
+  ``Tier`` record, and single queries and batches share one two-phase
+  path (``ann_topk_tier``: approximate codes scan, exact rerank).
 
 Hyperplanes are generated from a fixed seed so results are deterministic
 across runs (the reference's randomizedtesting-with-fixed-seed idiom).
@@ -19,12 +22,25 @@ across runs (the reference's randomizedtesting-with-fixed-seed idiom).
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..index.storage import ids_in
+from ..index.storage import (
+    arrow_rows,
+    ids_in,
+    local_relation,
+    read_required,
+    tombstone_ids,
+    write_local,
+)
 
 
 # packed-block budget for the block-GEMM tiers: one collect_list row holds
@@ -48,7 +64,7 @@ def _auto_blocks(n_rows: int, dim: int, floor: int = 8) -> int:
 def cosine_kernel(X: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Exact float64 cosine of every row of ``X`` against ``q`` — the one
     exact-score kernel, shared by the Spark scan (:func:`cosine_scores`)
-    and the driver-side rerank (:func:`two_phase_topk`).
+    and the driver-side rerank (:func:`rerank_pass`).
 
     ``einsum`` rather than ``X @ q``: a BLAS matrix-vector product may sum
     a row's products in an order that depends on how many rows share the
@@ -106,7 +122,7 @@ def cosine_topk(
     one partition (global limit output is single-partition already; the
     coalesce makes that explicit), a within-partition sort fixes the
     order, and ``monotonically_increasing_id`` on partition 0 counts
-    0..k-1 in that order. This keeps WindowExec's single-partition
+    0..k-1 in that order. This keeps Spark's single-partition window
     warning a real signal elsewhere instead of noise every query."""
     scored = cosine_scores(embeddings, query_vec, id_col, vec_col)
     top = scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
@@ -131,48 +147,19 @@ def cosine_topk_batch(
     vectors in ONE corpus scan — the batch analog of :func:`cosine_topk`
     and the embedding twin of the docpart BM25 batch (surveyed Q13: the
     bounded query set ships inside the kernel closure; the corpus never
-    shuffles). Each Arrow batch computes one X @ Qᵀ GEMM and keeps its
-    LOCAL top-k per query, so the global rank window sees at most
-    partitions × queries × k rows. Ties break by ascending id (the
-    engine-wide determinism contract)."""
-    qrows = queries.select(qid_col, qvec_col).collect()  # query-batch-sized
-    if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{qid_col} long, rank int, {id_col} long, cos double"
+    shuffles). It is the first pass of the shared two-phase path
+    (:func:`topk_pass`) with the exact kernel and depth k, so each row
+    scores with the bits :func:`cosine_topk` gives it. Runs eagerly and
+    returns a local relation; ties break by ascending id."""
+    qids, Q = query_matrix(queries, qid_col, qvec_col)
+    hits = []
+    if qids:
+        hits = topk_pass(
+            embeddings.select(id_col, vec_col),
+            partial(cosine_rows, vec_col=vec_col), Q, k, (), id_col,
         )
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    kk = int(k)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            S = (X / np.maximum(
-                np.linalg.norm(X, axis=1, keepdims=True), 1e-300
-            )) @ Qn.T
-            parts = []
-            for j in range(len(qids)):
-                top = np.lexsort((ids, -S[:, j]))[:kk]
-                parts.append(
-                    pd.DataFrame(
-                        {qid_col: qids[j], id_col: ids[top], "cos": S[top, j]}
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{qid_col} long, {id_col} long, cos double"
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select(qid_col, "rank", id_col, "cos")
-    )
+    return topk_relation(embeddings.sparkSession, hits, id_col, qids=qids,
+                         qid_col=qid_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 1234) -> np.ndarray:
@@ -239,8 +226,9 @@ def cosine_topk_lsh(
 
     ``deleted`` is the M1 tombstone relation (``markNodeDeleted``,
     GraphIndexBuilder.java — same mask contract as the SQ8/PQ/IVF tiers):
-    tombstoned ids are dropped before scoring via a broadcast anti-join,
-    so they neither surface nor displace live candidates.
+    its ids are collected and masked off the candidates with the
+    ``NOT IN`` filter before scoring, so they neither surface nor displace
+    live candidates.
 
     At cluster scale the exploded (band, bucket) relation is stored
     partitioned by (band, bucket); a query touches ``bands`` partitions.
@@ -265,10 +253,9 @@ def cosine_topk_lsh(
         cond = keys[i] == F.lit(qk)
         match = cond if match is None else (match | cond)
     cand = embeddings.filter(match)
-    if deleted is not None:
-        cand = cand.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
+    dead = deleted_ids(deleted, id_col)
+    if dead:
+        cand = cand.filter(~ids_in(id_col, dead))
     return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
@@ -535,13 +522,7 @@ def ivf_train(
 
     The sample is the lowest ``sample_size`` ids (TakeOrderedAndProject —
     no global sort), so training is reproducible at any corpus size."""
-    pdf = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(int(sample_size))
-        .toPandas()
-    )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     n = len(X)
     k = min(n_clusters, n)
@@ -644,15 +625,10 @@ def ivf_build(
     plan-audit-tested), instead of recomputing the full assignment scan per
     query (the round-1 anti-pattern). ``n_clusters`` defaults to ≈√N, the
     classic IVF operating point. Returns the centroid matrix."""
-    import os
-
-    spark = embeddings.sparkSession
     if n_clusters is None:
         n_clusters = max(2, int(round(float(embeddings.count()) ** 0.5)))
     cents = ivf_train(embeddings, n_clusters, n_iters, seed=seed,
                       id_col=id_col, vec_col=vec_col)
-    from ..index.storage import arrow_rows, write_local
-
     write_local(
         arrow_rows(
             [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -670,43 +646,28 @@ def ivf_build(
     # (readers sum), so the mass-coverage knob never counts dead docs.
     # Aggregated from the persisted assignment relation (populated by the
     # write above) instead of re-reading the parquet just written.
-    _write_cluster_size_delta(
-        assigned.groupBy("cluster").agg(F.count("*").alias("n")),
-        index_dir, mode="overwrite",
-    )
+    _write_cluster_sizes(assigned.groupBy("cluster").count().collect(), index_dir,
+                         "overwrite")
     assigned.unpersist()
     return cents
 
 
-def _write_cluster_size_delta(delta: DataFrame, index_dir: str, mode: str = "append") -> None:
-    import os
-
-    delta.select(
-        F.col("cluster").cast("int"), F.col("n").cast("long")
-    ).coalesce(1).write.mode(mode).parquet(os.path.join(index_dir, "cluster_sizes"))
+def _write_cluster_sizes(counts, index_dir: str, mode: str = "append") -> None:
+    """(cluster, n) count deltas to the k-row sidecar, with pyarrow."""
+    write_local(arrow_rows(sorted((int(c), int(n)) for c, n in counts), "cluster int, n long"),
+                index_dir, "cluster_sizes", mode=mode)
 
 
 def ivf_cluster_sizes(spark, index_dir: str) -> dict[int, int]:
-    """Per-cluster LIVE vector counts — a k-row read of the persisted
-    sidecar (build/extend/delete each append deltas; readers sum). Falls
-    back to aggregating the assignments scan minus tombstones for index
-    dirs built before the sidecar existed."""
-    import os
-
-    path = os.path.join(index_dir, "cluster_sizes")
-    if os.path.isdir(path) and os.listdir(path):
-        rows = (
-            spark.read.parquet(path)
-            .groupBy("cluster").agg(F.sum("n").alias("n")).collect()
-        )
-        return {int(r.cluster): int(r.n) for r in rows}
-    assignments = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    tomb = _ivf_tombstones(spark, index_dir)
-    if tomb is not None:
-        key = tomb.columns[0]
-        assignments = assignments.join(F.broadcast(tomb.select(key)), key, "left_anti")
-    rows = assignments.groupBy("cluster").agg(F.count("*").alias("n")).collect()
-    return {int(r.cluster): int(r.n) for r in rows}
+    """Per-cluster LIVE vector counts — the k-row ``cluster_sizes``
+    sidecar (build/extend/delete each append deltas; readers sum), read
+    with pyarrow on the driver: no Spark job. Raises
+    ``FileNotFoundError`` when the sidecar is missing."""
+    tbl = read_required(index_dir, "cluster_sizes")
+    sizes: dict[int, int] = {}
+    for c, n in zip(tbl["cluster"].to_pylist(), tbl["n"].to_pylist()):
+        sizes[c] = sizes.get(c, 0) + n
+    return sizes
 
 
 def ivf_extend(
@@ -724,70 +685,56 @@ def ivf_extend(
     partition pruning keeps working for the appended files. Returns the
     number of vectors appended. Periodic retrain (a fresh ``ivf_build``)
     is the compaction analog once drift accumulates."""
-    import os
-
     spark = new_embeddings.sparkSession
     C = ivf_read_centroids(spark, index_dir)
     delta = ivf_assign(new_embeddings, C, id_col, vec_col)
-    n = delta.count()
     delta.write.mode("append").partitionBy("cluster").parquet(
         os.path.join(index_dir, "assignments")
     )
     # keep the k-row live-count sidecar current (appended delta; readers
     # sum) — ivf_assign is deterministic on fixed centroids, so this
-    # re-execution emits the same assignment the write persisted
-    _write_cluster_size_delta(
-        delta.groupBy("cluster").agg(F.count("*").alias("n")), index_dir
-    )
-    return int(n)
+    # re-execution emits the same assignment the write persisted, and its
+    # counts sum to the number appended
+    counts = delta.groupBy("cluster").count().collect()
+    _write_cluster_sizes(counts, index_dir)
+    return sum(int(n) for _, n in counts)
 
 
 def ivf_delete(spark, index_dir: str, ids, id_col: str = "vec_id") -> None:
     """Tombstone vectors in a persisted IVF index (markNodeDeleted / M1 for
-    the ANN tier): ids land in a ``tombstones`` table and every
-    ``ivf_topk_indexed`` masks them out of the candidate set. Physical
-    removal = rebuild (``ivf_build`` over the live rows), the B8 compaction
-    analog."""
-    import os
+    the ANN tier), with the compressed tiers' plumbing: the ids not
+    already dead are appended with pyarrow (``vector_delete``) and every
+    ``ivf_topk_indexed`` masks them out of the candidate set; their
+    clusters' negative deltas keep the live-count sidecar honest. Looking
+    those clusters up (an ``IN`` scan of the assignments) is the one Spark
+    job. Physical removal = rebuild (``ivf_build`` over the live rows),
+    the B8 compaction analog."""
+    from ..index.vectors import vector_delete
 
-    tomb = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long").distinct()
-    prior = _ivf_tombstones(spark, index_dir)
-    if prior is not None:
-        # re-deleting an id must not double-count the sidecar negative
-        tomb = tomb.join(F.broadcast(prior.select(id_col)), id_col, "left_anti")
-    tomb = tomb.persist()
-    tomb.write.mode("append").parquet(os.path.join(index_dir, "tombstones"))
-    # negative deltas keep the live-count sidecar honest (the deleted ids'
-    # clusters come from one broadcast semi-join against assignments —
-    # bounded by the delete batch, and deletes are rare)
-    dead_clusters = (
-        spark.read.parquet(os.path.join(index_dir, "assignments"))
-        .join(F.broadcast(tomb), id_col)
-        .groupBy("cluster")
-        .agg((-F.count("*")).alias("n"))
+    new = sorted({int(i) for i in ids} - (tombstone_ids(spark, index_dir) or set()))
+    if not new:
+        return
+    vector_delete(spark, index_dir, new, id_col)
+    dead = Counter(
+        r[0]
+        for r in _assignments(spark, index_dir, id_col)
+        .filter(ids_in(id_col, new)).select("cluster").collect()
     )
-    _write_cluster_size_delta(dead_clusters, index_dir)
-    tomb.unpersist()
+    if dead:
+        _write_cluster_sizes([(c, -n) for c, n in dead.items()], index_dir)
 
 
-def _ivf_tombstones(spark, index_dir: str) -> DataFrame | None:
-    import os
-
-    path = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(path) or not os.listdir(path):
-        return None
-    return spark.read.parquet(path)
+def _assignments(spark, index_dir: str, id_col: str) -> DataFrame:
+    """The hive-partitioned assignments, opened with the schema
+    ``ivf_assign`` writes, so no schema-inference job runs."""
+    return spark.read.schema(f"{id_col} long, cluster int").parquet(
+        os.path.join(index_dir, "assignments")
+    )
 
 
 def ivf_read_centroids(spark, index_dir: str) -> np.ndarray:
-    import os
-
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    return np.array([list(r.centroid) for r in rows], dtype=np.float64)
+    tbl = read_required(index_dir, "centroids").sort_by("cluster")
+    return np.array(tbl["centroid"].to_pylist(), dtype=np.float64)
 
 
 def ivf_topk_indexed(
@@ -815,13 +762,11 @@ def ivf_topk_indexed(
     hold the neighbors) and delivers the floor on noise. Cluster sizes
     come from the persisted k-row ``cluster_sizes`` sidecar (maintained by
     build/extend/delete, so tombstoned rows never count toward mass)."""
-    import os
-
     C = ivf_read_centroids(spark, index_dir)
     q = np.asarray(query_vec, dtype=np.float64)
     q /= max(np.linalg.norm(q), 1e-12)
     order = np.argsort(-(C @ q), kind="stable")
-    assignments = spark.read.parquet(os.path.join(index_dir, "assignments"))
+    assignments = _assignments(spark, index_dir, id_col)
     if n_probe is None:
         sizes = ivf_cluster_sizes(spark, index_dir)
         total = max(1, sum(sizes.values()))
@@ -835,30 +780,304 @@ def ivf_topk_indexed(
     else:
         probes = [int(c) for c in order[: int(n_probe)]]
     cand_ids = assignments.filter(F.col("cluster").isin(probes)).select(id_col)
-    tomb = _ivf_tombstones(spark, index_dir)
-    if tomb is not None:
-        # deleted ids never reach scoring (M1 mask; broadcast — the
-        # tombstone set is small until compaction rebuilds)
-        cand_ids = cand_ids.join(
-            F.broadcast(tomb.select(id_col)), id_col, "left_anti"
-        )
+    dead = tombstone_ids(spark, index_dir)
+    if dead:
+        # deleted ids never reach scoring (M1 mask, the NOT IN filter
+        # every tier applies)
+        cand_ids = cand_ids.filter(~ids_in(id_col, sorted(dead)))
     cand = embeddings.join(cand_ids, id_col)
     return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
-# SQ8 scalar quantization + two-phase exact rerank — the high-recall tier
+# compressed tiers: one record per tier, one two-phase path for all of them
+# ---------------------------------------------------------------------------
+# Reference analog: an ``ApproximateScoreFunction`` feeds a ``Reranker``
+# (ScoreFunction.java:69-79, GraphSearcher.java:451-487). Here a tier is
+# the record below; a single query is a batch of one, and every call runs
+# the same two passes:
+#
+# 1. ``topk_pass``: one ``mapInPandas`` over the codes (tombstones masked
+#    off by the ``NOT IN`` filter first) scores each Arrow batch with the
+#    tier's kernel and yields each query's top ``rerank`` rows of the batch
+#    by (approx desc, id asc); the driver merges them per query.
+# 2. ``rerank_pass``: one JVM-only ``IN`` fetch of the candidates' vectors,
+#    scored on the driver by the exact kernel (:func:`cosine_kernel`); the
+#    top k return as a local relation.
+#
+# Two Spark jobs for any number of queries, and one Python-worker crossing.
+
+
+@dataclass(frozen=True)
+class Tier:
+    """What differs between the compressed tiers; everything else (build,
+    load, extend, delete, serve) is one body (``index.vectors``).
+
+    - ``fit(embeddings, id_col, vec_col, **kw)`` → (params, manifest
+      fields): the training pass, or only the dimension for a tier
+      without trained state.
+    - ``encode(X, params, **kw)`` → the code columns (``code_schema``) of
+      a float64 batch of vectors.
+    - ``score(codes, Q, params)`` → S[n × nq], the ONE approximate-score
+      kernel: column j has the bits of a one-query call on ``Q[j]``.
+    - ``floor``/``factor``: the default rerank depth, max(floor, factor·k).
+    - ``read_params(index_dir, manifest)`` and ``write_params(params,
+      index_dir)``: the params (or codebooks) table; ``write_params`` is
+      None when the manifest holds everything."""
+
+    kind: str
+    fit: Callable
+    encode: Callable
+    score: Callable
+    floor: int
+    factor: int
+    read_params: Callable
+    write_params: Callable | None = None
+    code_schema: str = "codes binary"
+
+    def rerank(self, k: int) -> int:
+        return max(self.floor, self.factor * int(k))
+
+
+def sample_matrix(
+    embeddings: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> np.ndarray:
+    """float64 rows of the ``n`` lowest ids (TakeOrderedAndProject, no
+    global sort): the deterministic bounded sample every training pass and
+    health metric reads, reproducible at any corpus size."""
+    pdf = embeddings.select(id_col, vec_col).orderBy(id_col).limit(int(n)).toPandas()
+    if len(pdf) == 0:
+        return np.empty((0, 0))
+    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+
+
+def first_dim(embeddings: DataFrame, vec_col: str = "embedding") -> int:
+    """The vector dimension, from one row (0 for an empty table)."""
+    first = embeddings.select(vec_col).first()
+    return len(first[0]) if first else 0
+
+
+def code_matrix(codes: pd.DataFrame, width: int) -> np.ndarray:
+    """(n, width) uint8 view of a batch's fixed-width ``codes`` column."""
+    buf = b"".join(codes["codes"])
+    return np.frombuffer(buf, dtype=np.uint8).reshape(len(codes), width)
+
+
+def binary_rows(A: np.ndarray) -> list[bytes]:
+    """One ``binary`` value per row of a uint8 code matrix."""
+    return [A[i].tobytes() for i in range(len(A))]
+
+
+def unit(q: np.ndarray) -> np.ndarray:
+    """``q`` scaled to unit length; a zero query stays zero."""
+    return q / max(np.linalg.norm(q), 1e-12)
+
+
+def per_query(Q: np.ndarray, column: Callable) -> np.ndarray:
+    """S[n × nq] with column j = ``column(Q[j])``. Each query is scored on
+    its own, so a column never depends on the other queries in ``Q``."""
+    return np.stack([column(q) for q in Q], axis=1)
+
+
+def cosine_rows(rows: pd.DataFrame, Q: np.ndarray, vec_col: str = "embedding") -> np.ndarray:
+    """The exact kernel in the tier-kernel shape: :func:`cosine_kernel` of
+    every raw vector in ``rows`` against every query."""
+    X = np.array(rows[vec_col].tolist(), dtype=np.float64)
+    return per_query(Q, lambda q: cosine_kernel(X, q))
+
+
+def encode_codes(
+    tier: Tier,
+    embeddings: DataFrame,
+    params,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    **kw,
+) -> DataFrame:
+    """(id, code columns): the tier's encode kernel once per Arrow batch —
+    whole-batch numpy, no per-row Python."""
+    encode = tier.encode
+
+    def fn(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), **encode(X, params, **kw)})
+
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        fn, schema=f"{id_col} long, {tier.code_schema}"
+    )
+
+
+def query_matrix(
+    queries: DataFrame, qid_col: str = "query_id", qvec_col: str = "qvec"
+) -> tuple[list[int], np.ndarray]:
+    """(query ids, Q[nq × dim]) of a query table (query-batch-sized)."""
+    rows = queries.select(qid_col, qvec_col).collect()
+    return [int(r[0]) for r in rows], np.array([list(r[1]) for r in rows], dtype=np.float64)
+
+
+def deleted_ids(deleted: DataFrame | None, id_col: str) -> list[int]:
+    """The sorted distinct ids of a tombstone relation (none for None)."""
+    if deleted is None:
+        return []
+    return sorted({r[0] for r in deleted.select(id_col).collect()})
+
+
+def topk_frame(
+    frame: DataFrame,
+    score: Callable,
+    Q: np.ndarray,
+    depth: int,
+    dead=(),
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """(_q, id, _s): the first pass as a frame. ``dead`` ids are masked off
+    the scan with the ``NOT IN`` filter, so tombstones neither surface nor
+    consume depth; then each Arrow batch is scored with ``score(batch, Q)``
+    and yields, per query, its ``depth`` best rows by (score desc, id asc).
+    Any row of a query's global top ``depth`` is in its batch's top
+    ``depth``, so the output is ≤ batches × nq × depth rows."""
+    if dead:
+        frame = frame.filter(~ids_in(id_col, list(dead)))
+    depth = int(depth)
+
+    def fn(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            S = score(pdf, Q)
+            tops = [np.lexsort((ids, -S[:, j]))[:depth] for j in range(len(Q))]
+            yield pd.DataFrame({
+                "_q": np.repeat(np.arange(len(Q), dtype=np.int32), [len(t) for t in tops]),
+                id_col: np.concatenate([ids[t] for t in tops]),
+                "_s": np.concatenate([S[t, j] for j, t in enumerate(tops)]),
+            })
+
+    return frame.mapInPandas(fn, schema=f"_q int, {id_col} long, _s double")
+
+
+def topk_pass(
+    frame: DataFrame,
+    score: Callable,
+    Q: np.ndarray,
+    depth: int,
+    dead=(),
+    id_col: str = "vec_id",
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per query, (ids, scores) of its top ``depth`` rows of ``frame`` by
+    (score desc, id asc): :func:`topk_frame` collected (one Spark job) and
+    merged on the driver."""
+    got = topk_frame(frame, score, Q, depth, dead, id_col).toPandas()
+    q, ids, s = got["_q"].to_numpy(), got[id_col].to_numpy(), got["_s"].to_numpy()
+    order = np.lexsort((ids, -s, q))
+    q, ids, s = q[order], ids[order], s[order]
+    lo = np.searchsorted(q, np.arange(len(Q)))
+    hi = np.searchsorted(q, np.arange(len(Q)), side="right")
+    top = [slice(a, min(b, a + int(depth))) for a, b in zip(lo, hi)]
+    return [(ids[t], s[t]) for t in top]
+
+
+def rerank_pass(
+    frame: DataFrame,
+    score: Callable,
+    Q: np.ndarray,
+    cands: list[tuple[np.ndarray, np.ndarray]],
+    k: int,
+    id_col: str = "vec_id",
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """The second pass: the rows of ``frame`` whose ids are in any query's
+    candidates come back through a JVM-only ``IN`` filter (one Spark job,
+    no Python worker), ``score`` runs on the driver, and each query keeps
+    the top k of its own candidates by (score desc, id asc)."""
+    union = sorted({int(i) for ids, _ in cands for i in ids})
+    pdf = frame.filter(ids_in(id_col, union)).toPandas()
+    if len(pdf) == 0:
+        return [(np.array([], dtype=np.int64), np.array([]))] * len(Q)
+    fid = pdf[id_col].to_numpy()
+    S = score(pdf, Q)
+    out = []
+    for j, (ids, _) in enumerate(cands):
+        sel = np.flatnonzero(np.isin(fid, ids))
+        top = sel[np.lexsort((fid[sel], -S[sel, j]))[: int(k)]]
+        out.append((fid[top], S[top, j]))
+    return out
+
+
+def topk_relation(
+    spark,
+    hits: list[tuple[np.ndarray, np.ndarray]],
+    id_col: str = "vec_id",
+    id_type: str = "long",
+    qids: list[int] | None = None,
+    qid_col: str = "query_id",
+) -> DataFrame:
+    """The answer as a local relation (reading it runs no job): (rank, id,
+    cos) for a single query (``qids`` None), else (query_id, rank, id,
+    cos)."""
+    rows = [(q, r + 1, int(i), float(c)) for q, (ids, cos) in zip(qids or [0], hits)
+            for r, (i, c) in enumerate(zip(ids, cos))]
+    if qids is None:
+        return local_relation(spark, [r[1:] for r in rows],
+                              f"rank int, {id_col} {id_type}, cos double")
+    return local_relation(spark, rows, f"{qid_col} long, rank int, {id_col} long, cos double")
+
+
+def ann_topk_tier(
+    tier: Tier,
+    embeddings: DataFrame,
+    query,
+    k: int,
+    rerank: int | None,
+    codes: DataFrame | None,
+    params,
+    dead=(),
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    qid_col: str = "query_id",
+    qvec_col: str = "qvec",
+) -> DataFrame:
+    """Two-phase top-k for every compressed tier, single query and batch:
+    ``query`` is one vector → (rank, id, cos), or a query table →
+    (query_id, rank, id, cos). ``codes`` None encodes ``embeddings`` under
+    ``params`` inline; ``rerank`` None is the tier's default depth. With a
+    sufficient depth the answer equals the exact scan (the fast-vs-slow
+    idiom, TestCompressedVectors.java:231). Runs eagerly — two Spark jobs,
+    plus one to collect a query table that is not a local relation."""
+    spark = embeddings.sparkSession
+    if isinstance(query, DataFrame):
+        qids, Q = query_matrix(query, qid_col, qvec_col)
+        id_type = "long"
+    else:
+        qids, Q = None, np.asarray([query], dtype=np.float64)
+        id_type = embeddings.schema[id_col].dataType.simpleString()
+    hits = []
+    if len(Q):
+        if codes is None:
+            codes = encode_codes(tier, embeddings, params, id_col, vec_col)
+        depth = tier.rerank(k) if rerank is None else int(rerank)
+        cands = topk_pass(codes, partial(tier.score, params=params), Q, depth, dead, id_col)
+        hits = rerank_pass(
+            embeddings.select(id_col, vec_col),
+            partial(cosine_rows, vec_col=vec_col), Q, cands, k, id_col,
+        )
+    return topk_relation(spark, hits, id_col, id_type, qids, qid_col)
+
+
+# ---------------------------------------------------------------------------
+# SQ8 scalar quantization — the high-recall tier
 # ---------------------------------------------------------------------------
 # Reference analog: the compressed-first-pass + exact-rerank architecture
 # (quantization/ProductQuantization.java:244-446, README.md:166-175 headline
-# compression; two-phase search GraphSearcher.java:451-487). On near-uniform
-# embeddings, bucketing (LSH/IVF) recall ≈ scan fraction — the honest scale
-# play is scanning EVERY row in 1-byte-per-dim compressed form (4× fewer
-# bytes than float32, cheap dequantized dot), then exactly reranking a small
-# candidate multiple of k. Measured on the synthetic corpus:
-# recall@10 = 1.0 at rerank = 2k (vs 0.4-0.6 for the bucketed tiers).
-
-SQ8_RERANK_FACTOR = 6  # candidates = max(64, factor·k) — tie-safe margin
+# compression). On near-uniform embeddings, bucketing (LSH/IVF) recall ≈
+# scan fraction — the honest scale play is scanning EVERY row in
+# 1-byte-per-dim compressed form (4× fewer bytes than float32, cheap
+# dequantized dot), then exactly reranking a small candidate multiple of k.
+# Measured on the synthetic corpus: recall@10 = 1.0 at rerank = 2k (vs
+# 0.4-0.6 for the bucketed tiers); the default depth is max(64, 6·k), a
+# tie-safe margin.
 
 
 def sq8_train(
@@ -882,311 +1101,90 @@ def sq8_train(
     return mn, scale
 
 
-def sq8_encode(
-    embeddings: DataFrame,
-    mn: np.ndarray,
-    scale: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sq8_scores(codes: pd.DataFrame, Q: np.ndarray, params) -> np.ndarray:
+    """Dequantized cosine: x = code·scale + mn per dimension, then
+    (x · q̂) / |x| — one GEMV per query over the whole Arrow batch (the
+    bulk-ADC shape of Q14). Reads 1 byte/dim instead of 4."""
+    mn, scale = params
+    X = code_matrix(codes, len(mn)).astype(np.float64) * scale + mn
+    norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
+    return per_query(Q, lambda q: (X @ unit(q)) / norms)
+
+
+def _sq8_encode(X: np.ndarray, params) -> dict:
+    mn, scale = params
+    return {"codes": binary_rows(
+        np.clip(np.round((X - mn) / scale), 0, 255).astype(np.uint8)
+    )}
+
+
+def _sq8_write(params, index_dir: str) -> None:
+    mn, scale = params
+    write_local(
+        arrow_rows(
+            [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(mn, scale))],
+            "i int, mn double, scale double",
+        ),
+        index_dir, "params", mode="overwrite",
+    )
+
+
+def _sq8_read(index_dir: str, manifest: dict) -> tuple[np.ndarray, np.ndarray]:
+    tbl = read_required(index_dir, "params").sort_by("i")
+    return (
+        tbl["mn"].to_numpy().astype(np.float64),
+        tbl["scale"].to_numpy().astype(np.float64),
+    )
+
+
+def _sq8_fit(embeddings: DataFrame, id_col: str, vec_col: str):
+    mn, scale = sq8_train(embeddings, vec_col)
+    return (mn, scale), {"dim": len(mn)}
+
+
+SQ8 = Tier(
+    "sq8", _sq8_fit, _sq8_encode, sq8_scores, floor=64, factor=6,
+    read_params=_sq8_read, write_params=_sq8_write,
+)
+
+
+def sq8_encode(embeddings: DataFrame, mn: np.ndarray, scale: np.ndarray,
+               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """(id, codes binary) — 1 byte/dim (4× smaller than float32, the SQ
-    analog of the reference's 32×-PQ compression headline). Arrow-batched
-    whole-matrix numpy quantization; no per-row Python."""
-    import pandas as pd
-
-    mn_ = np.ascontiguousarray(mn)
-    sc_ = np.ascontiguousarray(scale)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q = np.clip(np.round((X - mn_) / sc_), 0, 255).astype(np.uint8)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "codes": [Q[i].tobytes() for i in range(len(Q))],
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, codes binary"
-    )
+    analog of the reference's 32×-PQ compression headline)."""
+    return encode_codes(SQ8, embeddings, (mn, scale), id_col, vec_col)
 
 
-def sq8_approx_scores(
-    codes: DataFrame,
-    mn: np.ndarray,
-    scale: np.ndarray,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, approx) — dequantized cosine vs the query, computed as one
-    matrix product per Arrow batch (the bulk-ADC shape of Q14/FusedPQ
-    bulk scoring). Reads 1 byte/dim off disk instead of 4."""
-    import pandas as pd
-
-    mn_ = np.ascontiguousarray(mn)
-    sc_ = np.ascontiguousarray(scale)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    dim = len(q)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            buf = b"".join(pdf["codes"])
-            Q8 = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), dim)
-            X = Q8.astype(np.float64) * sc_ + mn_
-            norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "approx": (X @ q) / norms,
-                }
-            )
-
-    return codes.mapInPandas(fn, schema=f"{id_col} long, approx double")
-
-
-def ann_candidates(
-    approx: DataFrame,
-    rerank: int,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """First pass of every compressed tier: the ``rerank`` best ids of an
-    ``(id, approx)`` scan by (approx desc, id asc) — TakeOrderedAndProject,
-    per-partition heaps, no global sort. ``deleted`` is the tombstone
-    relation (M1 mask): its ids are collected to the driver and filtered
-    off the scan BEFORE selection, so deletes neither surface nor consume
-    rerank budget. A filter, not a broadcast anti-join: broadcasting even
-    a local relation runs a Spark job of its own, and collecting one runs
-    none. A tombstone set too large to ship in the plan is the signal to
-    rebuild."""
-    if deleted is not None:
-        dead = sorted({r[0] for r in deleted.select(id_col).collect()})
-        approx = approx.filter(~ids_in(id_col, dead))
-    return (
-        approx.orderBy(F.desc("approx"), F.asc(id_col))
-        .limit(int(rerank))
-        .select(id_col)
-    )
-
-
-def two_phase_topk(
-    embeddings: DataFrame,
-    approx: DataFrame,
-    query_vec: list[float],
-    k: int,
-    rerank: int,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(rank, id, cos): the serve path every compressed tier (SQ8, PQ, BQ,
-    NVQ) shares — approximate scan, rerank window, exact rerank (the
-    reference's ``ApproximateScoreFunction`` + ``Reranker`` split).
-
-    Runs EAGERLY in two Spark jobs. Collecting the :func:`ann_candidates`
-    ids runs the approximate scan (job 1). Their ≤ ``rerank`` vectors come
-    back through a JVM-only ``IN`` filter on ``embeddings`` (job 2, no
-    Python worker). The exact cosine (:func:`cosine_kernel`, the same
-    bits as :func:`cosine_topk`) and the (cos desc, id asc) order are
-    computed on the driver, and the top k return as a local relation, so
-    reading the result runs no further job."""
-    from ..index.storage import local_relation
-
-    spark = embeddings.sparkSession
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    schema = f"rank int, {id_col} {id_type}, cos double"
-    ids = [r[0] for r in ann_candidates(approx, rerank, deleted, id_col).collect()]
-    pdf = (
-        embeddings.filter(ids_in(id_col, ids))
-        .select(id_col, vec_col)
-        .toPandas()
-    )
-    if len(pdf) == 0:
-        return local_relation(spark, [], schema)
-    cid = pdf[id_col].to_numpy()
-    cos = cosine_kernel(
-        np.array(pdf[vec_col].tolist(), dtype=np.float64),
-        np.asarray(query_vec, dtype=np.float64),
-    )
-    top = np.lexsort((cid, -cos))[: int(k)]
-    return local_relation(
-        spark,
-        [(r + 1, int(cid[i]), float(cos[i])) for r, i in enumerate(top)],
-        schema,
-    )
-
-
-def ann_topk_sq8(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    params: tuple[np.ndarray, np.ndarray] | None = None,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase top-k: SQ8 compressed scan selects ``rerank`` candidates
-    (TakeOrderedAndProject — per-partition heaps, no global sort), exact
-    float rerank orders the final k. With a sufficient rerank margin the
-    result is IDENTICAL to ``cosine_topk`` (hash-checked against the same
-    DuckDB oracle in the driver contract) while the first pass reads 4×
-    fewer vector bytes. ``codes``/``params`` accept a pre-encoded table
-    (at scale: persist ``sq8_encode`` output once, scan it per query).
-    ``deleted`` is the tombstone relation (M1 mask): those ids are dropped
-    BEFORE candidate selection, so deletes neither surface nor consume
-    rerank budget — re-encode (compaction) reclaims the bytes. The call
-    runs the scan eagerly and returns a local relation
-    (:func:`two_phase_topk`)."""
-    if rerank is None:
-        rerank = max(64, SQ8_RERANK_FACTOR * k)
+def ann_topk_sq8(embeddings: DataFrame, query_vec: list[float], k: int = 10,
+                 rerank: int | None = None, codes: DataFrame | None = None,
+                 params: tuple[np.ndarray, np.ndarray] | None = None,
+                 deleted: DataFrame | None = None, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """(rank, id, cos): SQ8 two-phase top-k (:func:`ann_topk_tier`).
+    ``codes``/``params`` accept a pre-encoded table (at scale: persist
+    ``sq8_encode`` output once, scan it per query); ``deleted`` is the
+    tombstone relation (M1 mask) — those ids are dropped before candidate
+    selection, so deletes neither surface nor consume rerank budget."""
     if params is None:
         params = sq8_train(embeddings, vec_col)
-    mn, scale = params
-    if codes is None:
-        codes = sq8_encode(embeddings, mn, scale, id_col, vec_col)
-    approx = sq8_approx_scores(codes, mn, scale, query_vec, id_col)
-    return two_phase_topk(
-        embeddings, approx, query_vec, k, rerank, deleted, id_col, vec_col
+    return ann_topk_tier(
+        SQ8, embeddings, query_vec, k, rerank, codes, params,
+        deleted_ids(deleted, id_col), id_col, vec_col,
     )
 
 
-def ann_topk_sq8_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int | None = None,
-    codes: DataFrame | None = None,
-    params: tuple[np.ndarray, np.ndarray] | None = None,
-    deleted: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """Two-phase BATCH serving: one SQ8 compressed scan scores ALL queries
-    (dequant + one GEMM per Arrow batch, reading 1 byte/dim), a bounded
-    window keeps ``rerank`` candidates PER QUERY, and the exact float
-    rerank touches only the candidate union. The batch shape of
-    :func:`ann_topk_sq8` — with the default margin the output is
-    rank-identical to :func:`cosine_topk_batch` (same oracle in the
-    driver contract). At scale: persist ``sq8_encode`` output once; the
-    per-query-batch cost is one compressed scan regardless of the number
-    of queries in the batch. ``deleted`` tombstones are masked off the
-    codes scan itself (M1), so deleted vectors cost nothing downstream."""
-    if rerank is None:
-        rerank = max(64, SQ8_RERANK_FACTOR * k)
+def ann_topk_sq8_batch(embeddings: DataFrame, queries: DataFrame, k: int = 10,
+                       rerank: int | None = None, codes: DataFrame | None = None,
+                       params: tuple[np.ndarray, np.ndarray] | None = None,
+                       deleted: DataFrame | None = None, id_col: str = "vec_id",
+                       vec_col: str = "embedding", qid_col: str = "query_id",
+                       qvec_col: str = "qvec") -> DataFrame:
+    """(query_id, rank, id, cos): the batch form of :func:`ann_topk_sq8` —
+    ONE codes scan scores every query of the table, and the exact rerank
+    fetches the candidate union once."""
     if params is None:
         params = sq8_train(embeddings, vec_col)
-    mn, scale = params
-    if codes is None:
-        codes = sq8_encode(embeddings, mn, scale, id_col, vec_col)
-    if deleted is not None:
-        codes = codes.join(
-            F.broadcast(deleted.select(id_col)), id_col, "left_anti"
-        )
-    qrows = queries.select(qid_col, qvec_col).collect()  # query-batch-sized
-    if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{qid_col} long, rank int, {id_col} long, cos double"
-        )
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    mn_ = np.ascontiguousarray(mn)
-    sc_ = np.ascontiguousarray(scale)
-    dim = Q.shape[1]
-    rr = int(rerank)
-
-    def approx_fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            buf = b"".join(pdf["codes"])
-            Q8 = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), dim)
-            X = Q8.astype(np.float64) * sc_ + mn_
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            S = Xn @ Qn.T
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j in range(len(qids)):
-                top = np.lexsort((ids, -S[:, j]))[:rr]
-                parts.append(
-                    pd.DataFrame(
-                        {qid_col: qids[j], id_col: ids[top], "approx": S[top, j]}
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    partial = codes.mapInPandas(
-        approx_fn, schema=f"{qid_col} long, {id_col} long, approx double"
-    )
-    return exact_rerank_batch(
-        embeddings, partial, qids, Qn, k, rr, id_col, vec_col, qid_col
-    )
-
-
-def exact_rerank_batch(
-    embeddings: DataFrame,
-    partial: DataFrame,
-    qids: np.ndarray,
-    Qn: np.ndarray,
-    k: int,
-    rerank: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-) -> DataFrame:
-    """Shared second phase of every compressed-tier batch server (SQ8 /
-    PQ / BQ): a bounded window keeps ``rerank`` candidates per query from
-    ``partial`` (qid, id, approx — per-partition tops of the compressed
-    scan), one gather join ships each candidate vector once, and the exact
-    kernel scores row i against its own query's unit vector
-    (closure-shipped ``Qn``, gathered by query_id). The window input is
-    ≤ rerank × partitions rows per query by construction — never
-    corpus-sized."""
-    rr = int(rerank)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("approx"), F.asc(id_col))
-    cand = (
-        partial.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= rr)
-        .select(qid_col, id_col)
-    )
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    joined = cand.join(embeddings.select(id_col, vec_col), id_col)
-
-    def rerank_fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            qi = np.fromiter(
-                (qpos[int(q)] for q in pdf[qid_col]), dtype=np.int64
-            )
-            cos = np.einsum("ij,ij->i", Xn, Qn[qi])
-            yield pd.DataFrame(
-                {
-                    qid_col: pdf[qid_col].to_numpy(),
-                    id_col: pdf[id_col].to_numpy(),
-                    "cos": cos,
-                }
-            )
-
-    exact = joined.mapInPandas(
-        rerank_fn, schema=f"{qid_col} long, {id_col} long, cos double"
-    )
-    w2 = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= int(k))
-        .select(qid_col, "rank", id_col, "cos")
+    return ann_topk_tier(
+        SQ8, embeddings, queries, k, rerank, codes, params,
+        deleted_ids(deleted, id_col), id_col, vec_col, qid_col, qvec_col,
     )

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -7,6 +8,12 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# the suite's one Spark session is sized to its fixtures (3,000 turns, the
+# sf0.01 tables), not to ``get_spark``'s 8g default, which is also -Xms: a
+# full run at 8g held ~7.4 GB resident, leaving little room for a second
+# Spark process on the same host. An explicit setting still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
 
 
 @pytest.fixture(scope="session")

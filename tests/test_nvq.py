@@ -98,24 +98,44 @@ def test_ann_topk_nvq_equals_exact_scan(spark, embeddings):
     assert got == _exact_topk(base, qv)
 
 
-def test_nvq_batch_equals_per_query(spark, embeddings):
-    """One codes scan serving five queries ≡ five single-query runs."""
-    from jvector_spark.operators.nvq import ann_topk_nvq, ann_topk_nvq_batch, nvq_encode
+@pytest.mark.parametrize("tier", ["sq8", "pq", "bq", "nvq"])
+def test_nvq_batch_equals_per_query(spark, embeddings, tmp_path, tier):
+    """One codes scan serving five queries ≡ five single-query runs, for
+    every tier, on a tombstoned index: the batch and the single query run
+    the same two-phase path with the same kernel, so the answers agree in
+    every bit."""
+    from jvector_spark.index import vectors as V
+    from jvector_spark.operators.bq import ann_topk_bq, ann_topk_bq_batch
+    from jvector_spark.operators.nvq import ann_topk_nvq, ann_topk_nvq_batch
+    from jvector_spark.operators.pq import ann_topk_pq, ann_topk_pq_batch
+    from jvector_spark.operators.similarity import ann_topk_sq8, ann_topk_sq8_batch
 
-    base = embeddings.filter(F.col("vec_id") >= 5)
-    codes = nvq_encode(base).cache()
+    d = str(tmp_path / tier)
+    getattr(V, f"{tier}_build")(embeddings, d)
+    dead = [5, 6, 17, 40]
+    V.vector_delete(spark, d, dead)
+    params, codes = getattr(V, f"{tier}_load")(spark, d)
+    single, batch, extra = {
+        "sq8": (ann_topk_sq8, ann_topk_sq8_batch, dict(params=params)),
+        "pq": (ann_topk_pq, ann_topk_pq_batch, dict(codebooks=params)),
+        "bq": (ann_topk_bq, ann_topk_bq_batch, {}),
+        "nvq": (ann_topk_nvq, ann_topk_nvq_batch, dict(bits=params)),
+    }[tier]
+    deleted = V.vector_tombstones(spark, d)
     qs = embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     got = {
-        (r.query_id, r.rank): (r.vec_id, round(r.cos, 9))
-        for r in ann_topk_nvq_batch(base, qs, k=5, codes=codes).collect()
+        (r.query_id, r.rank): (r.vec_id, r.cos)
+        for r in batch(embeddings, qs, k=5, codes=codes, deleted=deleted, **extra).collect()
     }
+    assert len(got) == 25
     for qid in range(5):
         qv = _qvec(embeddings, qid)
-        want = ann_topk_nvq(base, qv, k=5, codes=codes).collect()
+        want = single(embeddings, qv, k=5, codes=codes, deleted=deleted, **extra).collect()
         for r in want:
-            assert got[(qid, r.rank)] == (r.vec_id, round(r.cos, 9))
+            assert got[(qid, r.rank)] == (r.vec_id, r.cos)
+            assert r.vec_id not in dead
 
 
 def test_nvq_build_load_extend_equals_fresh_build(spark, embeddings, tmp_path):
@@ -161,7 +181,7 @@ def test_pq_nvq_compressed_only_pipeline_recall(spark, embeddings, tmp_path):
     from jvector_spark.index.vectors import (
         ann_topk_pq_nvq_indexed, nvq_build, pq_build, pq_load,
     )
-    from jvector_spark.operators.pq import pq_approx_scores
+    from jvector_spark.operators.pq import pq_scores
 
     base = embeddings.filter(F.col("vec_id") != 0)
     pq_dir = str(tmp_path / "pq")
@@ -178,13 +198,10 @@ def test_pq_nvq_compressed_only_pipeline_recall(spark, embeddings, tmp_path):
     assert recall >= 0.9
 
     books, codes = pq_load(spark, pq_dir)
-    adc_only = {
-        r.vec_id
-        for r in pq_approx_scores(codes, books, qv)
-        .orderBy(F.desc("approx"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    }
+    pdf = codes.toPandas()
+    approx = pq_scores(pdf, np.array([qv]), books)[:, 0]
+    ids = pdf["vec_id"].to_numpy()
+    adc_only = set(ids[np.lexsort((ids, -approx))[:10]].tolist())
     assert recall >= len(adc_only & want) / 10
 
     # ranks are ordered by the NVQ cosine, descending, ties by id

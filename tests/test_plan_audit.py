@@ -69,34 +69,25 @@ def test_no_row_python_in_contract_plans(spark, entry_mod, key):
 def test_ann_first_pass_scans_codes_only(spark, entry_mod, tier):
     """The tier contract entries return a driver-built local relation, so
     the audit above sees no scan there. The first pass they run (codes
-    scan → tombstone mask → rerank window, ``ann_candidates``) is audited
-    here on the same persisted structures: Arrow-batched Python only, and
-    the one parquet scan reads the id and code columns alone — never a raw
-    vector."""
+    scan → tombstone mask → per-batch top-``rerank`` rows, the shared
+    ``topk_frame``) is audited here on the same persisted structures with
+    each tier's own kernel: Arrow-batched Python only, and the one parquet
+    scan reads the id and code columns alone — never a raw vector."""
+    from functools import partial
+
+    import numpy as np
+
     from jvector_spark.index import vectors as V
-    from jvector_spark.operators.bq import bq_approx_scores
-    from jvector_spark.operators.nvq import nvq_approx_scores
-    from jvector_spark.operators.pq import pq_approx_scores
-    from jvector_spark.operators.similarity import ann_candidates, sq8_approx_scores
+    from jvector_spark.operators.similarity import topk_frame
 
     idx = getattr(entry_mod, f"_{tier}_index_for")(spark, SF_DIR)
     qv = list(
         spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
         .filter(F.col("vec_id") == 0).select("embedding").first()[0]
     )
-    if tier == "sq8":
-        (mn, scale), codes = V.sq8_load(spark, idx)
-        approx = sq8_approx_scores(codes, mn, scale, qv)
-    elif tier == "pq":
-        books, codes = V.pq_load(spark, idx)
-        approx = pq_approx_scores(codes, books, qv)
-    elif tier == "bq":
-        dim, codes = V.bq_load(spark, idx)
-        approx = bq_approx_scores(codes, qv, dim)
-    else:
-        bits, codes = V.nvq_load(spark, idx)
-        approx = nvq_approx_scores(codes, qv, bits)
-    first = ann_candidates(approx, 64, entry_mod._vec0_deleted(spark))
+    params, codes = V.load(V.TIERS[tier], spark, idx)
+    score = partial(V.TIERS[tier].score, params=params)
+    first = topk_frame(codes, score, np.array([qv]), 64, [0])
     assert_no_row_python(first, f"ann_topk_{tier} first pass")
     audit = plan_audit(first)
     assert "MapInPandas" in audit["python"]["arrow"]

@@ -42,20 +42,16 @@ def test_pq_codes_are_m_bytes_and_32x(embeddings):
 def test_pq_approx_orders_close_to_exact(embeddings):
     """ADC approx scores must rank the true top-10 within the default
     rerank margin — the property that makes the two-phase result exact."""
-    from jvector_spark.operators.pq import pq_approx_scores, pq_encode, pq_train
+    from jvector_spark.operators.pq import pq_encode, pq_scores, pq_train
     from jvector_spark.operators.similarity import cosine_topk
 
     qv = list(embeddings.filter(F.col("vec_id") == 0).select("embedding").first()[0])
     base = embeddings.filter(F.col("vec_id") != 0)
     books = pq_train(base, seed=99)
-    codes = pq_encode(base, books)
-    approx = pq_approx_scores(codes, books, qv)
-    top = {
-        r.vec_id
-        for r in approx.orderBy(F.desc("approx"), F.asc("vec_id"))
-        .limit(256)
-        .collect()
-    }
+    codes = pq_encode(base, books).toPandas()
+    approx = pq_scores(codes, np.array([qv]), books)[:, 0]
+    ids = codes["vec_id"].to_numpy()
+    top = set(ids[np.lexsort((ids, -approx))[:256]].tolist())
     want = {r.vec_id for r in cosine_topk(base, qv, k=10).collect()}
     assert want <= top
 

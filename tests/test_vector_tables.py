@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,6 +54,114 @@ def test_cosine_kernel_matches_numpy_oracle():
         for size in (1, 2, 9, 150):
             idx = np.sort(rng.choice(len(X), size=size, replace=False))
             assert np.array_equal(cosine_kernel(X[idx], q), got[idx])
+
+
+# ---------------------------------------------------------------------------
+# approximate-score kernels (no Spark): each against a plain-Python oracle,
+# and column j of a multi-query call bit-equal to a one-query call on Q[j]
+# ---------------------------------------------------------------------------
+
+
+def _cos(x, q) -> float:
+    nx = sum(float(v) * float(v) for v in x) ** 0.5
+    nq = sum(float(v) * float(v) for v in q) ** 0.5
+    return sum(float(a) * float(b) for a, b in zip(x, q)) / (nx * nq) if nx and nq else 0.0
+
+
+def _queries(rng, dim: int) -> np.ndarray:
+    Q = rng.standard_normal((4, dim))
+    Q[2] = 0.0  # zero query
+    return Q
+
+
+def _check_kernel(kernel, codes, Q, params, oracle):
+    S = kernel(codes, Q, params)
+    assert S.shape == (len(codes), len(Q))
+    for j, q in enumerate(Q):
+        # the single-query and batch paths share the kernel: a column must
+        # not depend on the other queries of the call
+        assert np.array_equal(S[:, j], kernel(codes, Q[j:j + 1], params)[:, 0])
+        want = np.array([oracle(i, q) for i in range(len(codes))])
+        assert np.allclose(S[:, j], want, rtol=0, atol=1e-12), j
+    return S
+
+
+def test_sq8_scores_match_python_oracle():
+    from jvector_spark.operators.similarity import sq8_scores
+
+    rng = np.random.default_rng(21)
+    dim, n = 7, 60
+    scale = rng.uniform(0.001, 0.02, dim)
+    mn = -3.0 * scale
+    C = rng.integers(0, 256, size=(n, dim), dtype=np.uint8)
+    C[4] = 3  # decodes to the zero vector
+    codes = pd.DataFrame({"codes": [C[i].tobytes() for i in range(n)]})
+
+    def oracle(i, q):
+        return _cos([int(C[i, d]) * scale[d] + mn[d] for d in range(dim)], q)
+
+    S = _check_kernel(sq8_scores, codes, _queries(rng, dim), (mn, scale), oracle)
+    assert not S[4].any() and not S[:, 2].any()
+
+
+def test_pq_scores_match_python_oracle():
+    from jvector_spark.operators.pq import pq_scores
+
+    rng = np.random.default_rng(22)
+    m, k, dsub, n = 3, 5, 4, 50
+    books = rng.standard_normal((m, k, dsub))
+    books[:, 0] = 0.0  # code 0 is the zero centroid in every subspace
+    C = rng.integers(0, k, size=(n, m), dtype=np.uint8)
+    C[7] = 0  # a zero-norm reconstruction
+    codes = pd.DataFrame({"codes": [C[i].tobytes() for i in range(n)]})
+
+    def oracle(i, q):
+        nq = sum(float(v) * float(v) for v in q) ** 0.5
+        qn = [float(v) / nq for v in q] if nq else [0.0] * len(q)
+        return sum(
+            float(books[s, C[i, s], d]) * qn[s * dsub + d]
+            for s in range(m) for d in range(dsub)
+        )
+
+    S = _check_kernel(pq_scores, codes, _queries(rng, m * dsub), books, oracle)
+    assert not S[7].any() and not S[:, 2].any()
+
+
+def test_bq_scores_match_python_oracle():
+    from jvector_spark.operators.bq import BQ, bq_scores
+
+    rng = np.random.default_rng(23)
+    dim, n = 13, 40  # not a multiple of 8: the last byte is partial
+    X = rng.standard_normal((n, dim))
+    X[3] = 0.0
+    codes = pd.DataFrame(BQ.encode(X, None))
+
+    def oracle(i, q):
+        agree = 0
+        for d in range(dim):
+            if (X[i, d] > 0) == (q[d] > 0):
+                agree += 1
+        return float(agree)
+
+    _check_kernel(bq_scores, codes, _queries(rng, dim), None, oracle)
+
+
+def test_nvq_scores_match_python_oracle():
+    from jvector_spark.operators.nvq import NVQ, nvq_reconstruct_batch, nvq_scores
+
+    rng = np.random.default_rng(24)
+    dim, n = 9, 40
+    X = rng.standard_normal((n, dim))
+    X[6] = 0.0
+    for bits in (8, 4):
+        codes = pd.DataFrame(NVQ.encode(X, bits))
+        R = nvq_reconstruct_batch(codes, dim, bits)
+        assert not R[6].any()
+        S = _check_kernel(
+            nvq_scores, codes, _queries(rng, dim), bits,
+            lambda i, q: _cos(R[i], q),
+        )
+        assert not S[6].any() and not S[:, 2].any()
 
 
 # ---------------------------------------------------------------------------
@@ -184,3 +293,94 @@ def test_all_tombstoned_tier_returns_no_rows(spark, embeddings, tier_dirs):
     out = ann_topk_bq(embeddings, qv, k=10, codes=codes, deleted=embeddings)
     assert out.columns == ["rank", "vec_id", "cos"]
     assert out.collect() == []
+
+
+def _batch_call(spark, tier: str, index_dir: str):
+    """The tier's batch operator and the kwargs that pass it the persisted
+    params (codes and params loaded from ``index_dir``)."""
+    from jvector_spark.index import vectors as V
+    from jvector_spark.operators.bq import ann_topk_bq_batch
+    from jvector_spark.operators.nvq import ann_topk_nvq_batch
+    from jvector_spark.operators.pq import ann_topk_pq_batch
+    from jvector_spark.operators.similarity import ann_topk_sq8_batch
+
+    params, codes = V.load(V.TIERS[tier], spark, index_dir)
+    fn, kw = {
+        "sq8": (ann_topk_sq8_batch, dict(params=params)),
+        "pq": (ann_topk_pq_batch, dict(codebooks=params)),
+        "bq": (ann_topk_bq_batch, {}),
+        "nvq": (ann_topk_nvq_batch, dict(bits=params)),
+    }[tier]
+    return fn, dict(codes=codes, **kw)
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_batch_serves_in_two_jobs(spark, embeddings, tier_dirs, tier):
+    """A batch runs the single query's two-phase path: one codes scan and
+    one candidate fetch for the whole query table, whatever its size."""
+    from jvector_spark.index.storage import local_relation
+
+    fn, kw = _batch_call(spark, tier, tier_dirs[tier])
+    qrows = embeddings.filter(F.col("vec_id") < 6).select("vec_id", "embedding").collect()
+    queries = local_relation(
+        spark, [(int(r[0]), [float(x) for x in r[1]]) for r in qrows],
+        "query_id long, qvec array<double>",
+    )
+    deleted = local_relation(spark, [(0,), (1,)], "vec_id long")
+    rows, jobs = _jobs(
+        spark, lambda: fn(embeddings, queries, k=10, deleted=deleted, **kw).collect()
+    )
+    assert jobs <= 2, f"{tier} batch ran {jobs} jobs"
+    assert len(rows) == 60 and not {r.vec_id for r in rows} & {0, 1}
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_extend_counts_on_the_write(spark, embeddings, tmp_path, tier):
+    """An extend encodes the delta once: the count is observed on the
+    codes append, one Spark job."""
+    from jvector_spark.index import vectors as V
+
+    d = str(tmp_path / tier)
+    getattr(V, f"{tier}_build")(embeddings.filter(F.col("vec_id") < 300), d)
+    rest = embeddings.filter(F.col("vec_id") >= 300)
+    n, jobs = _jobs(spark, lambda: getattr(V, f"{tier}_extend")(rest, d))
+    assert jobs == 1
+    assert n == rest.count() == V.read_codes(spark, d).count() - 300
+
+
+def test_ivf_delete_and_query_job_budgets(spark, embeddings, tmp_path):
+    """IVF shares the tiers' tombstone plumbing: a delete is one Spark job
+    (the clusters of the new ids), a repeat delete none, the sidecar and
+    centroid reads none, and a probed query two, with or without
+    tombstones. A missing sidecar raises."""
+    import shutil
+
+    from jvector_spark.operators.similarity import (
+        ivf_build,
+        ivf_cluster_sizes,
+        ivf_delete,
+        ivf_read_centroids,
+        ivf_topk_indexed,
+    )
+
+    d = str(tmp_path / "ivf")
+    ivf_build(embeddings, d, n_clusters=8, n_iters=4, seed=77)
+    qv = list(embeddings.filter(F.col("vec_id") == 4).select("embedding").first()[0])
+    rows, jobs = _jobs(spark, lambda: ivf_topk_indexed(spark, d, embeddings, qv, k=10).collect())
+    assert jobs <= 2
+    dead = [r.vec_id for r in rows[:3]]
+    _, jobs = _jobs(spark, lambda: ivf_delete(spark, d, dead + dead[:1]))
+    assert jobs == 1
+    _, jobs = _jobs(spark, lambda: ivf_delete(spark, d, dead))
+    assert jobs == 0
+    _, jobs = _jobs(spark, lambda: (ivf_cluster_sizes(spark, d), ivf_read_centroids(spark, d)))
+    assert jobs == 0
+    for n_probe in (4, None):
+        rows, jobs = _jobs(
+            spark,
+            lambda: ivf_topk_indexed(spark, d, embeddings, qv, k=10, n_probe=n_probe).collect(),
+        )
+        assert jobs <= 2 and not {r.vec_id for r in rows} & set(dead)
+    shutil.rmtree(os.path.join(d, "cluster_sizes"))
+    with pytest.raises(FileNotFoundError, match="cluster_sizes"):
+        ivf_cluster_sizes(spark, d)

@@ -156,7 +156,7 @@ def test_anisotropic_encode_valid_and_beats_plain_on_adc_rank(spark, embeddings,
     ordering they induce must rank the true top-10 at least as tightly
     (summed rank) as plain MSE codes on average over queries — the
     accuracy-per-byte claim of ProductQuantization.java:244-424."""
-    from jvector_spark.operators.pq import pq_approx_scores, pq_encode, pq_train
+    from jvector_spark.operators.pq import pq_encode, pq_scores, pq_train
     from jvector_spark.operators.similarity import cosine_topk
 
     books = pq_train(embeddings, seed=99)
@@ -171,12 +171,10 @@ def test_anisotropic_encode_valid_and_beats_plain_on_adc_rank(spark, embeddings,
     assert pc != ac
 
     def rank_sum(codes_df, qv, want):
-        order = [
-            r.vec_id
-            for r in pq_approx_scores(codes_df, books, qv)
-            .orderBy(F.desc("approx"), F.asc("vec_id"))
-            .collect()
-        ]
+        pdf = codes_df.toPandas()
+        approx = pq_scores(pdf, np.array([qv]), books)[:, 0]
+        ids = pdf["vec_id"].to_numpy()
+        order = ids[np.lexsort((ids, -approx))].tolist()
         pos = {v: i for i, v in enumerate(order)}
         return sum(pos[v] for v in want)
 
