@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from .. import BLOCK_SIZE, BM25_B, BM25_K1
 from ..functions.analysis import TOKEN_PATTERN, tokens_col
 from ..operators.doc_ids import assign_dense_ids
+from .codec import block_layout, pack_blocks
 from .storage import (
     FORMAT_VERSION,
     LINEAGE_SCHEMA,
@@ -124,48 +125,6 @@ def _bg_join(t: "threading.Thread", holder: list) -> None:
         raise holder[0]
 
 
-def _varint_nbytes(v: np.ndarray) -> np.ndarray:
-    """Per-value LEB128 byte length, bounded by the array max: one compare
-    pass per byte tier actually present (1-2 for tf/dl/gap data) instead of
-    the 10-round masked shift loop — the encoder is memory-bandwidth-bound
-    and every full-array pass shows up in multi-worker scaling."""
-    nb = np.ones(v.shape, dtype=np.int64)
-    vmax = int(v.max()) if v.size else 0
-    k = 1
-    while k < 10 and vmax >= (1 << (7 * k)):
-        nb += v >= np.uint64(1 << (7 * k))
-        k += 1
-    return nb
-
-
-def _varint_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """LEB128-encode the whole array once; also return per-value byte
-    lengths so callers can slice out sub-ranges without re-encoding.
-
-    Byte planes are written per tier over the COMPRESSED subset that still
-    has bytes left (values needing >j bytes), so single-byte-dominated
-    data (tfs, dls, small gaps) costs ~2 passes, not 10 masked rounds."""
-    v = np.asarray(values, dtype=np.uint64)
-    nb = _varint_nbytes(v)
-    if v.size == 0:
-        return b"", nb
-    ends = np.cumsum(nb)
-    starts = ends - nb
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    max_nb = int(nb.max())
-    for j in range(max_nb):
-        if j == 0:
-            idx, vj, nbj = starts, v, nb
-        else:
-            sel = nb > j
-            idx = starts[sel] + j
-            vj = v[sel]
-            nbj = nb[sel]
-        byte = ((vj >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        byte[nbj > j + 1] |= 0x80
-        out[idx] = byte
-    return out.tobytes(), nb
-
 def encode_partition_pdf(
     pdf: pd.DataFrame, block_size: int = BLOCK_SIZE, carry_part_id: bool = False,
 ) -> pd.DataFrame:
@@ -210,55 +169,19 @@ def _encode_sorted_arrays(
     """Array core of :func:`encode_partition_pdf`: input pre-sorted by
     (term, salt, doc); returns the posting-block columns as a plain dict
     (``part_id`` first when ``part`` is given)."""
-    n = len(d)
-
-    group_start = np.ones(n, dtype=bool)
-    group_start[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
-    # position within (term, salt) group
-    gidx = np.cumsum(group_start) - 1
-    first_of_group = np.flatnonzero(group_start)
-    pos = np.arange(n) - first_of_group[gidx]
-    blk_in_group = pos // block_size
-    block_start = group_start | (pos % block_size == 0)
-
-    prev_d = np.empty(n, dtype=np.int64)
-    prev_d[1:] = d[:-1]
-    # A group's first gap is 0 and its base is the first doc itself: this
-    # keeps every block's [base, max_doc_id] range tight (a base of 0 would
-    # make the first block of every (term, salt) run appear to span all of
-    # doc space, gutting block-max pruning).
-    prev_d[group_start] = d[group_start]
-    gaps = (d - prev_d).astype(np.uint64)
-
-    id_buf, id_len = _varint_encode_with_lengths(gaps)
-    tf_buf, tf_len = _varint_encode_with_lengths(tf.astype(np.uint64))
-    dl_buf, dl_len = _varint_encode_with_lengths(dl.astype(np.uint64))
-    id_off = np.concatenate(([0], np.cumsum(id_len)))
-    tf_off = np.concatenate(([0], np.cumsum(tf_len)))
-    dl_off = np.concatenate(([0], np.cumsum(dl_len)))
-
-    starts = np.flatnonzero(block_start)
-    ends = np.empty_like(starts)
-    ends[:-1] = starts[1:]
-    ends[-1] = n
-    # base: the group's first doc at a group's first block (gap there is 0),
-    # else the last doc of the previous block
-    base = np.where(starts == first_of_group[gidx[starts]], d[starts], d[starts - 1])
-
+    starts, ends, block_id, gaps, base = block_layout(term, salt, d, block_size)
     out = {
         "term_id": term[starts],
         "salt": salt[starts],
-        "block_id": blk_in_group[starts].astype(np.int32),
+        "block_id": block_id,
         "n": (ends - starts).astype(np.int32),
         "base": base,
         "max_doc_id": d[ends - 1],
         "max_tf": np.maximum.reduceat(tf, starts),
         "min_dl": np.minimum.reduceat(dl, starts),
-        "doc_ids_packed": [
-            id_buf[id_off[s] : id_off[e]] for s, e in zip(starts, ends)
-        ],
-        "tfs_packed": [tf_buf[tf_off[s] : tf_off[e]] for s, e in zip(starts, ends)],
-        "dls_packed": [dl_buf[dl_off[s] : dl_off[e]] for s, e in zip(starts, ends)],
+        "doc_ids_packed": pack_blocks(gaps, starts, ends),
+        "tfs_packed": pack_blocks(tf, starts, ends),
+        "dls_packed": pack_blocks(dl, starts, ends),
     }
     if part is not None:
         out = {"part_id": part[starts], **out}

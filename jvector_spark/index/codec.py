@@ -1,5 +1,9 @@
 """Posting-block codec: delta-encoded docID gaps + LEB128 varint packing,
-vectorized in numpy (no per-element Python loops on the hot path).
+vectorized in numpy (no per-element Python loops on the hot path). This
+module is the one place that knows the block wire format: the postings
+encoder (``build``), the positions encoder and decoder (``positions``) and
+every postings read (the WAND kernel, the relational reads, compaction,
+the boolean reads) call it.
 
 This is the text-domain analog of the reference's lossy PQ encode/decode
 (jvector-base/.../quantization/ProductQuantization.java:244-446, surveyed
@@ -7,57 +11,71 @@ C2/C3) — except ours is *lossless*: decode(encode(x)) == x exactly, enforced
 by property tests (mirroring the reference's round-trip suite,
 jvector-tests/.../TestCompressedVectors.java:43-116).
 
-Wire format per block:
-    doc_ids: varint(gap_0), varint(gap_1), ...   gap_0 = doc_ids[0] - base
-    tfs:     varint(tf_0), varint(tf_1), ...
-where base is the block's logical predecessor (0 for the first block of a
-(term, salt) run; otherwise the previous block's max_doc_id). Gaps within a
-block are strictly positive except gap_0 which may be 0.
+Wire format per posting block (at most ``block_size`` postings of one
+(term, salt) run, sorted by doc id):
+    doc_ids_packed: varint(gap_0), varint(gap_1), ...   gap_0 = doc_ids[0] - base
+    tfs_packed:     varint(tf_0), varint(tf_1), ...
+    dls_packed:     varint(dl_0), varint(dl_1), ...
+where base is the run's first doc id for the run's first block (so its
+gap_0 is 0 and the block's [base, max_doc_id] range stays tight) and the
+previous block's max_doc_id otherwise. Gaps within a block are strictly
+positive except gap_0.
 
 LEB128: little-endian 7-bit groups, high bit = continuation.
+
+Encode: :func:`block_layout` cuts sorted rows into blocks,
+:func:`pack_blocks` varint-encodes a column once and slices it per block.
+Decode: :func:`unpack_blocks` decodes any set of a column's blocks as one
+flat buffer and :func:`rebase` restarts the prefix sums per block;
+:func:`decode_blocks` is the one postings decoder built from them.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-_MAX_VARINT_BYTES = 10  # 64-bit worst case
+
+def _varint_nbytes(v: np.ndarray) -> np.ndarray:
+    """Per-value LEB128 byte length, bounded by the array max: one compare
+    pass per byte tier actually present (1-2 for tf/dl/gap data) instead of
+    the 10-round masked shift loop — the encoder is memory-bandwidth-bound
+    and every full-array pass shows up in multi-worker scaling."""
+    nb = np.ones(v.shape, dtype=np.int64)
+    vmax = int(v.max()) if v.size else 0
+    k = 1
+    while k < 10 and vmax >= (1 << (7 * k)):
+        nb += v >= np.uint64(1 << (7 * k))
+        k += 1
+    return nb
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """Vectorized LEB128 encode of a uint64 array."""
+def varint_encode(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """LEB128-encode the whole array once; also return per-value byte
+    lengths so callers can slice out sub-ranges without re-encoding.
+
+    Byte planes are written per tier over the COMPRESSED subset that still
+    has bytes left (values needing >j bytes), so single-byte-dominated
+    data (tfs, dls, small gaps) costs ~2 passes, not 10 masked rounds."""
     v = np.asarray(values, dtype=np.uint64)
+    nb = _varint_nbytes(v)
     if v.size == 0:
-        return b""
-    # byte-length per value: ceil(bits/7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    nz = v > 0
-    # bit_length via log2 is unsafe at 2^53; use frexp on uint64 through shifts
-    vv = v.copy()
-    while np.any(vv > 0):
-        nbits[vv > 0] += 1
-        vv >>= np.uint64(7)
-    nbits[~nz] = 1
-    total = int(nbits.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    # positions: cumulative offsets
-    ends = np.cumsum(nbits)
-    starts = ends - nbits
-    # fill byte-by-byte over at most 10 rounds (vectorized across values)
-    rem = v.copy()
-    active = np.ones(v.shape, dtype=bool)
-    pos = starts.copy()
-    for _ in range(_MAX_VARINT_BYTES):
-        if not np.any(active):
-            break
-        byte = (rem & np.uint64(0x7F)).astype(np.uint8)
-        rem = rem >> np.uint64(7)
-        more = active & (rem > 0)
-        byte[more] |= 0x80
-        out[pos[active]] = byte[active]
-        pos[active] += 1
-        active = more
-    return out.tobytes()
+        return b"", nb
+    ends = np.cumsum(nb)
+    starts = ends - nb
+    out = np.zeros(int(ends[-1]), dtype=np.uint8)
+    max_nb = int(nb.max())
+    for j in range(max_nb):
+        if j == 0:
+            idx, vj, nbj = starts, v, nb
+        else:
+            sel = nb > j
+            idx = starts[sel] + j
+            vj = v[sel]
+            nbj = nb[sel]
+        byte = ((vj >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
+        byte[nbj > j + 1] |= 0x80
+        out[idx] = byte
+    return out.tobytes(), nb
 
 
 def varint_decode(buf: bytes, n: int) -> np.ndarray:
@@ -82,52 +100,96 @@ def varint_decode(buf: bytes, n: int) -> np.ndarray:
     return vals
 
 
-def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, base: int) -> tuple[bytes, bytes]:
-    """Encode one sorted block; base = previous block's max_doc_id (or 0)."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    gaps = np.empty(d.shape, dtype=np.uint64)
-    gaps[0] = np.uint64(d[0] - base)
-    gaps[1:] = np.diff(d).astype(np.uint64)
-    return varint_encode(gaps), varint_encode(np.asarray(tfs, dtype=np.uint64))
+def block_layout(
+    term: np.ndarray, salt: np.ndarray, d: np.ndarray, block_size: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Cut rows sorted by (term, salt, doc) into posting blocks: each
+    (term, salt) run splits every ``block_size`` rows. Returns the blocks'
+    ``starts`` and ``ends`` (row offsets, end exclusive), ``block_id``
+    (position in the run), the rows' doc ``gaps`` (uint64) and the blocks'
+    ``base``."""
+    n = len(d)
+    group_start = np.ones(n, dtype=bool)
+    group_start[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
+    # position within (term, salt) group
+    gidx = np.cumsum(group_start) - 1
+    first_of_group = np.flatnonzero(group_start)
+    pos = np.arange(n) - first_of_group[gidx]
+    block_start = group_start | (pos % block_size == 0)
+
+    prev_d = np.empty(n, dtype=np.int64)
+    prev_d[1:] = d[:-1]
+    # A group's first gap is 0 and its base is the first doc itself: this
+    # keeps every block's [base, max_doc_id] range tight (a base of 0 would
+    # make the first block of every (term, salt) run appear to span all of
+    # doc space, gutting block-max pruning).
+    prev_d[group_start] = d[group_start]
+    gaps = (d - prev_d).astype(np.uint64)
+
+    starts = np.flatnonzero(block_start)
+    ends = np.empty_like(starts)
+    ends[:-1] = starts[1:]
+    ends[-1] = n
+    # base: the group's first doc at a group's first block (gap there is 0),
+    # else the last doc of the previous block
+    base = np.where(starts == first_of_group[gidx[starts]], d[starts], d[starts - 1])
+    block_id = (pos[starts] // block_size).astype(np.int32)
+    return starts, ends, block_id, gaps, base
 
 
-def decode_block(
-    doc_ids_packed: bytes, tfs_packed: bytes, n: int, base: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_block: (doc_ids int64 asc, tfs int64)."""
-    gaps = varint_decode(doc_ids_packed, n).astype(np.int64)
-    gaps[0] += base
-    return np.cumsum(gaps), varint_decode(tfs_packed, n).astype(np.int64)
+def pack_blocks(values: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> list[bytes]:
+    """Varint-encode ``values`` once and slice the bytes of each block's
+    rows ``[starts[i], ends[i])``."""
+    buf, nb = varint_encode(values)
+    off = np.concatenate(([0], np.cumsum(nb)))
+    return [buf[off[s] : off[e]] for s, e in zip(starts, ends)]
 
 
-# ---------------------------------------------------------------------------
-# binary packing (PFor-family) — evaluated alternative to LEB128
-# ---------------------------------------------------------------------------
+def unpack_blocks(packed, total: int, rows: np.ndarray | None = None) -> np.ndarray:
+    """Inverse of :func:`pack_blocks`: the ``total`` int64 values of the
+    blocks ``rows`` (all when None) of a packed column, decoded as one flat
+    buffer."""
+    col = np.asarray(packed, dtype=object)
+    if rows is not None:
+        col = col[rows]
+    return varint_decode(b"".join(col), total).astype(np.int64)
 
-def bitpack_encode(values: np.ndarray) -> tuple[bytes, int]:
-    """Frame-of-reference binary packing: every value stored at the block's
-    max bitwidth (NewPFD without exceptions — our gap distributions are
-    tight enough that exception patching buys nothing; see docs/SCALE.md).
-    Returns (payload, width). Vectorized: a (n × width) bit matrix packed
-    little-bit-first."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b"", 0
-    mx = int(v.max())
-    width = max(1, mx.bit_length())
-    bits = ((v[:, None] >> np.arange(width, dtype=np.uint64)) & np.uint64(1)).astype(
-        np.uint8
+
+def rebase(deltas: np.ndarray, counts: np.ndarray, base: np.ndarray | None = None) -> np.ndarray:
+    """Prefix sums of ``deltas`` restarted at each segment of ``counts``
+    rows (every count ≥ 1), plus the segment's ``base``: one global cumsum,
+    rebased per segment. Decodes a flat run of blocks' doc gaps
+    (segments = blocks) and of docs' position deltas (segments = docs)."""
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    c = np.cumsum(deltas)
+    out = c - np.repeat(c[starts] - deltas[starts], counts)
+    if base is not None:
+        out += np.repeat(base, counts)
+    return out
+
+
+def decode_blocks(
+    frame, rows: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode the posting blocks ``rows`` of ``frame`` (all blocks when
+    None) into flat int64 ``(row_idx, doc_id, tf, dl)``: ``row_idx`` is each
+    posting's block row, and postings come in ``rows`` order, each block's
+    in doc order. ``frame`` maps the block columns ``n``, ``base`` and the
+    three packed columns to arrays (a pandas frame or a dict of numpy
+    arrays). Three varint calls decode every block at once — the
+    bulk-decode analog of the reference's fused SIMD scoring
+    (FusedPQDecoder / jvector_simd.c bulk kernels)."""
+    ns = np.asarray(frame["n"])
+    if rows is None:
+        rows = np.arange(len(ns))
+    counts = ns[rows].astype(np.int64)
+    total = int(counts.sum())
+    if total == 0:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z, z
+    gaps, tf, dl = (
+        unpack_blocks(frame[c], total, rows)
+        for c in ("doc_ids_packed", "tfs_packed", "dls_packed")
     )
-    return np.packbits(bits.reshape(-1), bitorder="little").tobytes(), width
-
-
-def bitpack_decode(buf: bytes, count: int, width: int) -> np.ndarray:
-    """Exact inverse of :func:`bitpack_encode`."""
-    if count == 0:
-        return np.zeros(0, dtype=np.uint64)
-    bits = np.unpackbits(
-        np.frombuffer(buf, dtype=np.uint8), count=count * width, bitorder="little"
-    ).reshape(count, width)
-    return (bits.astype(np.uint64) << np.arange(width, dtype=np.uint64)).sum(
-        axis=1, dtype=np.uint64
-    )
+    docs = rebase(gaps, counts, np.asarray(frame["base"])[rows])
+    return np.repeat(rows, counts), docs, tf, dl

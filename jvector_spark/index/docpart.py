@@ -192,7 +192,6 @@ def bm25_topk_docpart(
     qterms: DataFrame,
     k: int = 10,
     prune: bool = True,
-    n_tasks: int | None = None,
 ) -> DataFrame:
     """Top-k over the doc-partitioned index: broadcast the query table into
     a scan-side UDF, per-bucket Block-Max WAND for every query at once,
@@ -291,9 +290,9 @@ def bm25_topk_docpart(
     # per-(query, task) kernel invocation overhead is paid cores times, not
     # buckets times (on a cluster: one task per executor-core slice of the
     # bucket set)
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    partial = postings.select(*meta_cols).coalesce(int(n_tasks)).mapInPandas(
+    partial = postings.select(*meta_cols).coalesce(
+        spark.sparkContext.defaultParallelism
+    ).mapInPandas(
         bucket_fn, schema="query_id int, doc_id long, score double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

@@ -33,20 +33,22 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE
 from ..operators.phrase import token_positions
-from .build import _varint_encode_with_lengths
-from .codec import varint_decode
+from .codec import block_layout, pack_blocks, rebase, unpack_blocks
 from .storage import (
     local_relation,
+    read_dictionary,
     read_segments,
     read_table,
     shuffle_n,
     sized_shuffle_n,
     table_path,
+    term_parts,
 )
 
 POSITIONS_SCHEMA = (
@@ -93,66 +95,30 @@ def encode_positions_pdf(pdf: pd.DataFrame, block_size: int = BLOCK_SIZE) -> pd.
     # position deltas: raw at each doc start, gap otherwise
     pdelta = pos.copy()
     pdelta[1:] = np.where(doc_start[1:], pos[1:], pos[1:] - pos[:-1])
-    pos_buf, pos_len = _varint_encode_with_lengths(pdelta.astype(np.uint64))
-    pos_off = np.concatenate(([0], np.cumsum(pos_len)))
 
-    # doc-level arrays
+    # doc-level arrays, cut into blocks like the postings
     dstarts = np.flatnonzero(doc_start)  # occ index of each doc's first occ
-    dends = np.empty_like(dstarts)
-    dends[:-1] = dstarts[1:]
-    dends[-1] = n_occ_total
+    occ_bounds = np.append(dstarts, n_occ_total)
+    counts = np.diff(occ_bounds)
     dd = d[dstarts]
     dterm = term[dstarts]
     dsalt = salt[dstarts]
-    counts = (dends - dstarts).astype(np.int64)
-    n_docs = len(dd)
-
-    dgrp_start = np.ones(n_docs, dtype=bool)
-    dgrp_start[1:] = (dterm[1:] != dterm[:-1]) | (dsalt[1:] != dsalt[:-1])
-    gidx = np.cumsum(dgrp_start) - 1
-    first_of_group = np.flatnonzero(dgrp_start)
-    dpos_in_grp = np.arange(n_docs) - first_of_group[gidx]
-    blk_start = dgrp_start | (dpos_in_grp % block_size == 0)
-
-    prev_d = np.empty(n_docs, dtype=np.int64)
-    prev_d[1:] = dd[:-1]
-    prev_d[dgrp_start] = dd[dgrp_start]  # first gap 0; base = first doc itself
-    gaps = (dd - prev_d).astype(np.uint64)
-    id_buf, id_len = _varint_encode_with_lengths(gaps)
-    id_off = np.concatenate(([0], np.cumsum(id_len)))
-    cnt_buf, cnt_len = _varint_encode_with_lengths(counts.astype(np.uint64))
-    cnt_off = np.concatenate(([0], np.cumsum(cnt_len)))
-
-    bstarts = np.flatnonzero(blk_start)  # doc index of each block start
-    bends = np.empty_like(bstarts)
-    bends[:-1] = bstarts[1:]
-    bends[-1] = n_docs
-    base = np.where(
-        bstarts == first_of_group[gidx[bstarts]], dd[bstarts], dd[bstarts - 1]
-    )
-    # occurrence byte-ranges per block
-    occ_s = dstarts[bstarts]
-    occ_e = np.where(bends < n_docs, dstarts[np.minimum(bends, n_docs - 1)], n_occ_total)
-    occ_e[bends >= n_docs] = n_occ_total
+    bstarts, bends, block_id, gaps, base = block_layout(dterm, dsalt, dd, block_size)
+    # occurrence ranges per block
+    occ_s, occ_e = occ_bounds[bstarts], occ_bounds[bends]
 
     return pd.DataFrame(
         {
             "term_id": dterm[bstarts],
             "salt": dsalt[bstarts].astype("int32"),
-            "block_id": (dpos_in_grp[bstarts] // block_size).astype("int32"),
+            "block_id": block_id,
             "n": (bends - bstarts).astype("int32"),
             "base": base,
             "max_doc_id": dd[bends - 1],
             "n_occ": (occ_e - occ_s).astype("int32"),
-            "doc_ids_packed": [
-                id_buf[id_off[s] : id_off[e]] for s, e in zip(bstarts, bends)
-            ],
-            "counts_packed": [
-                cnt_buf[cnt_off[s] : cnt_off[e]] for s, e in zip(bstarts, bends)
-            ],
-            "positions_packed": [
-                pos_buf[pos_off[s] : pos_off[e]] for s, e in zip(occ_s, occ_e)
-            ],
+            "doc_ids_packed": pack_blocks(gaps, bstarts, bends),
+            "counts_packed": pack_blocks(counts, bstarts, bends),
+            "positions_packed": pack_blocks(pdelta, occ_s, occ_e),
         }
     )
 
@@ -254,37 +220,23 @@ def _decode_positions_map_fn():
             if len(pdf) == 0:
                 continue
             # bulk decode: the WHOLE frame's blocks in three varint calls
-            # (flat concatenated buffers), mirroring the core kernel's
-            # chunked batch_decode (query.py) — the round-1 per-block
-            # Python loop made the indexed phrase path lose to a full scan
+            # (flat concatenated buffers), like the postings' decode_blocks
+            # — the round-1 per-block Python loop made the indexed phrase
+            # path lose to a full scan
             ns = pdf["n"].to_numpy(np.int64)
             noc = pdf["n_occ"].to_numpy(np.int64)
             total_n = int(ns.sum())
             total_occ = int(noc.sum())
             if total_n == 0 or total_occ == 0:
                 continue
-            base = pdf["base"].to_numpy(np.int64)
-            gaps = varint_decode(
-                b"".join(pdf["doc_ids_packed"]), total_n
-            ).astype(np.int64)
-            counts = varint_decode(
-                b"".join(pdf["counts_packed"]), total_n
-            ).astype(np.int64)
-            deltas = varint_decode(
-                b"".join(pdf["positions_packed"]), total_occ
-            ).astype(np.int64)
-            # per-block doc ids: cumsum of gaps, rebased per block
-            starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            g = np.cumsum(gaps)
-            before = g[starts] - gaps[starts]
-            docs = g - np.repeat(before, ns) + np.repeat(base, ns)
+            docs = rebase(
+                unpack_blocks(pdf["doc_ids_packed"], total_n),
+                ns, pdf["base"].to_numpy(np.int64),
+            )
+            counts = unpack_blocks(pdf["counts_packed"], total_n)
             # per-doc positions: every doc's first occurrence is a stored
-            # raw position (a cumsum reset point), so the global cumsum is
-            # rebased at each doc's first-occurrence index
-            occ_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            c = np.cumsum(deltas)
-            doc_base = c[occ_starts] - deltas[occ_starts]
-            pos = c - np.repeat(doc_base, counts)
+            # raw position, so the cumsum restarts at each doc
+            pos = rebase(unpack_blocks(pdf["positions_packed"], total_occ), counts)
             yield pd.DataFrame(
                 {
                     "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), noc),
@@ -301,35 +253,30 @@ def decode_positions(
 ) -> DataFrame:
     """(term_id, doc_id, pos) — decoded occurrence relation, optionally
     restricted to ``term_ids`` with directory-level part pruning."""
+    if term_ids is None:
+        return _decode_positions(read_table(spark, index_dir, "positions"))
+    dct = read_dictionary(index_dir, pc.field("term_id").isin(list(term_ids)))
+    return _positions_of(spark, index_dir, dct.to_pylist())
+
+
+def _positions_of(spark: SparkSession, index_dir: str, dct_rows: list[dict]) -> DataFrame:
+    """Decoded occurrences of the dictionary rows' terms: the positions scan
+    directory-pruned to the part_ids of their (term_id, salt) pairs, which
+    are resolved driver-side with the bit-exact python twin of
+    pmod(xxhash64(...)) — no Spark job."""
     seg = read_segments(spark, index_dir)
-    pos = read_table(spark, index_dir, "positions")
-    if term_ids is not None:
-        dct = read_table(spark, index_dir, "dictionary")
-        salts = {
-            int(r.term_id): int(r.n_salts)
-            for r in dct.filter(F.col("term_id").isin(list(term_ids)))
-            .select("term_id", "n_salts")
-            .collect()
-        }
-        parts = _parts_for(spark, salts, int(seg["n_parts"]))
-        pos = pos.filter(
-            F.col("part_id").isin(parts) & F.col("term_id").isin(list(term_ids))
-        )
+    parts = term_parts(((r["term_id"], r["n_salts"]) for r in dct_rows), seg["n_parts"])
+    pos = read_table(spark, index_dir, "positions").filter(
+        F.col("part_id").isin(parts)
+        & F.col("term_id").isin([r["term_id"] for r in dct_rows])
+    )
+    return _decode_positions(pos)
+
+
+def _decode_positions(pos: DataFrame) -> DataFrame:
     return pos.mapInPandas(
         _decode_positions_map_fn(), schema="term_id long, doc_id long, pos long"
     )
-
-
-def _parts_for(spark: SparkSession, salts: dict[int, int], n_parts: int) -> list[int]:
-    """part_ids holding any (term_id, salt) pair — resolved driver-side
-    with the bit-exact python twin of pmod(xxhash64(...)) (rows = Σ
-    n_salts of the *queried* terms only, never corpus-sized)."""
-    from .storage import hash_parts
-
-    pairs = [(t, s) for t, ns in salts.items() for s in range(ns)]
-    if not pairs:
-        return []
-    return hash_parts(pairs, n_parts)
 
 
 def _occurrences_for_terms(
@@ -338,40 +285,17 @@ def _occurrences_for_terms(
     """Decode the positional occurrences of ``terms``: (occ, term→term_id).
 
     ``occ`` is a (term_id, doc_id, pos) DataFrame over ONLY the queried
-    terms' blocks (directory-pruned to their part_ids — one driver job
-    resolves term_ids AND the pruned part set: the salt explode + xxhash64
-    ride the same tiny collect). ``occ`` is None when any term is OOV —
-    no positional query over all of ``terms`` can match."""
+    terms' blocks (directory-pruned to their part_ids); the terms are
+    looked up with a pyarrow filter on the dictionary, so no Spark job runs
+    before the read. ``occ`` is None when any term is OOV — no positional
+    query over all of ``terms`` can match."""
     if not has_positions(index_dir):
         raise ValueError(f"index at {index_dir} has no positions feature")
-    seg = read_segments(spark, index_dir)
-    dct = read_table(spark, index_dir, "dictionary")
-    tid_rows = (
-        dct.filter(F.col("term").isin(list(set(terms))))
-        .select(
-            "term",
-            "term_id",
-            F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)).alias("salt"),
-        )
-        .withColumn(
-            "part_id",
-            F.pmod(F.xxhash64("term_id", "salt"), F.lit(int(seg["n_parts"])))
-            .cast("int"),
-        )
-        .collect()
-    )
-    tids = {r.term: r.term_id for r in tid_rows}
+    dct = read_dictionary(index_dir, pc.field("term").isin(list(set(terms)))).to_pylist()
+    tids = {r["term"]: r["term_id"] for r in dct}
     if len(tids) < len(set(terms)):
         return None, tids
-    parts = sorted({int(r.part_id) for r in tid_rows})
-    pos = read_table(spark, index_dir, "positions").filter(
-        F.col("part_id").isin(parts)
-        & F.col("term_id").isin([int(v) for v in tids.values()])
-    )
-    occ = pos.mapInPandas(
-        _decode_positions_map_fn(), schema="term_id long, doc_id long, pos long"
-    )
-    return occ, tids
+    return _positions_of(spark, index_dir, dct), tids
 
 
 def phrase_count_indexed(

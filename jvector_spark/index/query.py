@@ -17,7 +17,9 @@ Plan shape / scale notes:
   holding the query's terms — the analog of jvector seeking only the
   adjacency regions a search touches;
 - the fused blocks carry tf **and dl** inline, so exact scoring never
-  touches the corpus-sized doc_stats table at query time;
+  touches the corpus-sized doc_stats table at query time. Every path
+  decodes them with the one decoder, :func:`codec.decode_blocks` (the
+  WAND kernel per chunk of blocks, the relational reads per Arrow batch);
 - pruned path: a searcher per query (the reference's GraphSearcher-per-
   thread model); candidate segments are processed in descending
   upper-bound order with a rising top-k floor θ, skipping every block
@@ -35,10 +37,12 @@ Plan shape / scale notes:
     queries, so cluster QPS scales across queries.
   Both run the same per-bucket body (:func:`_wand_queries`) over blocks in
   one fixed order, so they return the same rows and score bits (tested);
-- unpruned path: decode → relational aggregate → window top-k; it is the
-  oracle for the pruned path and the scale-out path for very large single
-  queries (per-doc-range partial top-k then global merge, the rerankFloor
-  analog of Q10).
+- relational reads: one body, :func:`_scored` — decode → tombstone mask
+  → (optional accept join) → JVM-side BM25 or tf-idf contribution → sum
+  per (query, doc) — and one rank step, :func:`_ranked`. The unpruned
+  top-k (the oracle for the pruned path and the scale-out path for very
+  large single queries), tf-idf top-k, threshold search and the
+  broad-predicate filtered top-k are thin calls of it.
 """
 
 from __future__ import annotations
@@ -54,10 +58,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import BM25_B, BM25_K1
-from .codec import varint_decode
+from .codec import decode_blocks
 from .storage import (
-    hash_parts,
     ids_in,
     local_relation,
     postings_files,
@@ -65,6 +67,7 @@ from .storage import (
     read_files,
     read_segments,
     read_table,
+    term_parts,
     tombstone_ids,
 )
 
@@ -73,30 +76,6 @@ from .storage import (
 # decode
 # ---------------------------------------------------------------------------
 
-def _decode_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a frame of posting blocks → flat (row_idx, doc_id, tf, dl)."""
-    ids_out, tfs_out, dls_out, idx_out = [], [], [], []
-    base = pdf["base"].to_numpy(np.int64)
-    ns = pdf["n"].to_numpy(np.int64)
-    for i in range(len(pdf)):
-        n = int(ns[i])
-        gaps = varint_decode(pdf["doc_ids_packed"].iat[i], n).astype(np.int64)
-        gaps[0] += base[i]
-        ids_out.append(np.cumsum(gaps))
-        tfs_out.append(varint_decode(pdf["tfs_packed"].iat[i], n).astype(np.int64))
-        dls_out.append(varint_decode(pdf["dls_packed"].iat[i], n).astype(np.int64))
-        idx_out.append(np.full(n, i, dtype=np.int64))
-    if not ids_out:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, z
-    return (
-        np.concatenate(idx_out),
-        np.concatenate(ids_out),
-        np.concatenate(tfs_out),
-        np.concatenate(dls_out),
-    )
-
-
 def _decode_map_fn(carry_cols: list[str]):
     out_cols = carry_cols + ["doc_id", "tf", "dl"]
 
@@ -104,7 +83,7 @@ def _decode_map_fn(carry_cols: list[str]):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            idx, doc, tf, dl = _decode_rows(pdf)
+            idx, doc, tf, dl = decode_blocks(pdf)
             out = pdf.iloc[idx][carry_cols].reset_index(drop=True)
             out["doc_id"] = doc
             out["tf"] = tf
@@ -209,14 +188,6 @@ def lookup_terms(
     return qd_rows, qid_type
 
 
-def _part_ids(qd_rows: list, seg: dict) -> list[int]:
-    """The postings part ids holding the queried terms, resolved driver-side
-    with the bit-exact python twin of pmod(xxhash64(...)) — no throwaway
-    Spark job."""
-    pairs = {(tid, s) for _, tid, _, _, n_salts, _ in qd_rows for s in range(n_salts)}
-    return hash_parts(pairs, int(seg["n_parts"])) if pairs else []
-
-
 def _postings_scan(spark: SparkSession, index_dir: str, parts: list[int]) -> DataFrame:
     """The postings scan directory-pruned to ``parts``."""
     postings = read_table(spark, index_dir, "postings")
@@ -246,7 +217,8 @@ def _prepared_query_blocks(
         [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _, _ in qd_rows],
         f"query_id {qid_type}, term_id long, weight double, idf double",
     )
-    postings = _postings_scan(spark, index_dir, _part_ids(qd_rows, seg))
+    parts = term_parts(((tid, ns) for _, tid, _, _, ns, _ in qd_rows), seg["n_parts"])
+    postings = _postings_scan(spark, index_dir, parts)
     return postings.join(F.broadcast(qd), "term_id")
 
 
@@ -261,8 +233,60 @@ def _mask_tombstones(spark: SparkSession, index_dir: str, decoded: DataFrame) ->
 
 
 # ---------------------------------------------------------------------------
-# unpruned (relational, exact) path
+# relational (exact) reads
 # ---------------------------------------------------------------------------
+
+def _scored(
+    spark: SparkSession, index_dir: str, qterms: DataFrame, seg: dict,
+    idf: str = "bm25",
+    global_df: DataFrame | None = None,
+    accept: DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, doc_id, score) for every live doc matching a query term:
+    the one body of the relational reads. Decode the matched blocks
+    (directory-pruned), mask tombstones, keep only ``accept``'s doc_ids
+    when given (a hash join Catalyst/AQE plans), score each posting
+    JVM-side — BM25 ``w·idf·tf / (tf + k1·(1 - b + b·dl/avgdl))`` or, for
+    ``idf="tfidf"``, ``w·idf·(1 + ln tf)`` — and sum per (query, doc)."""
+    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg, global_df, idf)
+    carry = ["term_id", "query_id", "weight", "idf"]
+    schema = "term_id long, query_id int, weight double, idf double, doc_id long, tf long, dl long"
+    decoded = blocks.select(*carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed").mapInPandas(
+        _decode_map_fn(carry), schema=schema
+    )
+    decoded = _mask_tombstones(spark, index_dir, decoded)
+    if accept is not None:
+        decoded = decoded.join(accept.select("doc_id").distinct(), "doc_id")
+    if idf == "tfidf":
+        contrib = F.col("weight") * F.col("idf") * (F.lit(1.0) + F.log(F.col("tf")))
+    else:
+        k1, b, avgdl = seg["k1"], seg["b"], seg["avgdl"]
+        contrib = (
+            F.col("weight")
+            * F.col("idf")
+            * F.col("tf")
+            / (
+                F.col("tf")
+                + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+            )
+        )
+    return (
+        decoded.withColumn("contrib", contrib)
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("contrib").alias("score"))
+    )
+
+
+def _ranked(scored: DataFrame, k: int, offset: int = 0) -> DataFrame:
+    """Ranks (offset, offset + k] of each query's scored docs, score
+    descending, ties by ascending doc_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") > offset) & (F.col("rank") <= offset + k))
+        .select("query_id", "rank", "doc_id", "score")
+    )
+
 
 def bm25_topk_indexed_unpruned(
     spark: SparkSession, index_dir: str, qterms: DataFrame, k: int = 10,
@@ -274,34 +298,7 @@ def bm25_topk_indexed_unpruned(
     seg = read_segments(spark, index_dir)
     if global_stats:
         seg = {**seg, **global_stats}
-    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg, global_df)
-    carry = ["term_id", "query_id", "weight", "idf"]
-    schema = "term_id long, query_id int, weight double, idf double, doc_id long, tf long, dl long"
-    decoded = blocks.select(*carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed").mapInPandas(
-        _decode_map_fn(carry), schema=schema
-    )
-    decoded = _mask_tombstones(spark, index_dir, decoded)
-    k1, b, avgdl = seg["k1"], seg["b"], seg["avgdl"]
-    contrib = (
-        F.col("weight")
-        * F.col("idf")
-        * F.col("tf")
-        / (
-            F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-        )
-    )
-    scored = (
-        decoded.withColumn("contrib", contrib)
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") > offset) & (F.col("rank") <= offset + k))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _ranked(_scored(spark, index_dir, qterms, seg, global_df=global_df), k, offset)
 
 
 # ---------------------------------------------------------------------------
@@ -367,36 +364,25 @@ def wand_topk_arrays(
         weight * idf * max_tf
         / (max_tf + k1 * (1.0 - b + b * min_dl / avgdl))
     )
-    ids_col = pdf["doc_ids_packed"].to_numpy(object)
-    tfs_col = pdf["tfs_packed"].to_numpy(object)
-    dls_col = pdf["dls_packed"].to_numpy(object)
+    packed = {
+        c: pdf[c].to_numpy(object)
+        for c in ("doc_ids_packed", "tfs_packed", "dls_packed")
+    }
+    packed.update(n=ns, base=lo)
+    wi = weight * idf
 
     n_decoded = 0
 
     def batch_decode(bis: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Decode MANY blocks in three varint calls total (flat buffers) —
-        the bulk-decode analog of the reference's fused SIMD scoring
-        (FusedPQDecoder / jvector_simd.c bulk kernels). Returns flat
-        (docs, contribs) across the given block indices."""
+        """Decode MANY blocks at once (:func:`codec.decode_blocks`, three
+        varint calls); returns flat (docs, contribs) across the given block
+        indices."""
         nonlocal n_decoded
         n_decoded += len(bis)
-        counts = ns[bis]
-        total = int(counts.sum())
-        if total == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z.astype(np.float64)
-        gaps = varint_decode(b"".join(ids_col[bis]), total).astype(np.int64)
-        tf = varint_decode(b"".join(tfs_col[bis]), total).astype(np.float64)
-        dl = varint_decode(b"".join(dls_col[bis]), total).astype(np.float64)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        g = np.cumsum(gaps)
-        before = g[starts] - gaps[starts]  # cumsum just before each block
-        docs = g - np.repeat(before, counts) + np.repeat(lo[bis], counts)
-        contrib = (
-            np.repeat(weight[bis] * idf[bis], counts)
-            * tf
-            / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        )
+        row, docs, tf, dl = decode_blocks(packed, bis)
+        tf = tf.astype(np.float64)
+        dl = dl.astype(np.float64)
+        contrib = wi[row] * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
         if dead is not None and len(dead):
             alive = ~np.isin(docs, dead, assume_unique=False)
             docs, contrib = docs[alive], contrib[alive]
@@ -580,21 +566,6 @@ def _block_order(blocks: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _wand_group_fn(
-    k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
-    dead: np.ndarray | None = None,
-    accept: np.ndarray | None = None,
-    offset: int = 0,
-):
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _wand_query(
-            _block_order(pdf), int(key[0]), k, k1, b, avgdl, with_metrics,
-            dead, accept, offset,
-        )
-
-    return fn
-
-
 def _wand_queries(
     blocks: pd.DataFrame, queries,
     k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
@@ -650,8 +621,8 @@ def _wand_bucket_fn(bucket_queries_bc, **kernel):
     query from scaling past ~0.5 efficiency at 2→8 cores (the broadcast
     ships once per worker instead). Each query selects its terms' blocks
     from the group and runs the standard per-query WAND kernel —
-    identical math/tie-breaks to the per-query grouping, ~queries-per-term/
-    buckets less shuffle+Arrow traffic."""
+    the same math and tie-breaks whatever the bucket count, ~queries-per-
+    term/buckets less shuffle+Arrow traffic than a per-query grouping."""
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _wand_queries(
@@ -659,6 +630,22 @@ def _wand_bucket_fn(bucket_queries_bc, **kernel):
         )
 
     return fn
+
+
+# The Spark path's bucket count is sized by the QUERY BATCH, never by
+# parallelism: the shuffled volume is Σ_buckets |blocks(bucket's terms)| —
+# hot Zipf terms appear in most buckets, so volume grows with bucket count,
+# and a core-derived count would make the hi-parallelism leg shuffle MORE
+# bytes for the same batch (the same principle as data-sized shuffle
+# partitions). ~64 queries a bucket amortizes each bucket's block set; the
+# floor keeps small batches parallel across a few dozen tasks.
+QUERIES_PER_BUCKET = 64
+MIN_QUERY_BUCKETS = 32
+
+
+def query_buckets(n_queries: int) -> int:
+    """Buckets for a Spark-path batch of ``n_queries`` (≥ 1) queries."""
+    return min(n_queries, max(MIN_QUERY_BUCKETS, -(-n_queries // QUERIES_PER_BUCKET)))
 
 
 # The sizing rule between the two pruned paths. A batch runs on the driver
@@ -713,7 +700,6 @@ def bm25_topk_indexed(
     offset: int = 0,
     global_stats: dict | None = None,
     global_df: DataFrame | None = None,
-    query_buckets: int | None = None,
     accept_ids: np.ndarray | None = None,
 ) -> DataFrame:
     """BM25 top-k over the index. ``prune=False`` is the relational exact
@@ -737,7 +723,8 @@ def bm25_topk_indexed(
 
     A pruned batch under the sizing rule (:data:`DRIVER_MAX_POSTINGS`,
     :data:`DRIVER_MAX_BYTES`) runs on the driver and returns a local
-    relation: no Spark job. ``query_buckets`` applies to the Spark path."""
+    relation: no Spark job. The Spark path deals the batch into
+    :func:`query_buckets` buckets."""
     seg0 = read_segments(spark, index_dir)
     if global_stats:
         seg0 = {**seg0, **global_stats}
@@ -771,8 +758,7 @@ def bm25_topk_indexed(
     qspec: dict = {}
     n_postings = 0
     for qid, tid, weight, idf_v, _, df in qd_rows:
-        # duplicate (query, term) rows sum their weights — same math as the
-        # per-query path scoring each duplicate block row separately
+        # duplicate (query, term) rows sum their weights
         tmap = qspec.setdefault(qid, {})
         if tid not in tmap:
             n_postings += df
@@ -780,8 +766,8 @@ def bm25_topk_indexed(
         tmap[tid] = (w + weight, i_)
     if not qspec:
         # no query term matched the dictionary (OOV batch, or a shard whose
-        # local vocabulary lacks every term): same empty result as the
-        # per-query grouping — never repartition(0), which raises
+        # local vocabulary lacks every term): an empty result — never
+        # repartition(0), which raises
         return local_relation(spark, [], schema)
     queries = [
         (
@@ -798,7 +784,7 @@ def bm25_topk_indexed(
         k=k, k1=seg["k1"], b=seg["b"], avgdl=seg["avgdl"],
         with_metrics=with_metrics, dead=dead, accept=accept_ids, offset=offset,
     )
-    parts = _part_ids(qd_rows, seg)
+    parts = term_parts(((tid, ns) for _, tid, _, _, ns, _ in qd_rows), seg["n_parts"])
     files = _driver_files(index_dir, parts, n_postings)
     if files is not None:
         # driver path: the part files' blocks of the queried terms, read
@@ -814,25 +800,16 @@ def bm25_topk_indexed(
     # for a 5000-query batch over a shared vocabulary that is a memory-
     # bandwidth-bound shuffle + Arrow transfer which stops scaling inside
     # one box long before the (parallelism-independent) WAND kernel does.
-    # Instead, queries are dealt round-robin into ``query_buckets`` groups
-    # and each block ships once per BUCKET that needs its term (≤ buckets
-    # times total, vs ≤ queries times); the kernel loops the bucket's
-    # queries in-task. Math, tie-breaks, metrics and pagination are
-    # identical to the per-query grouping (equivalence pytest-enforced).
-    if query_buckets is None:
-        # bucket count sized by the QUERY BATCH, never by parallelism: the
-        # shuffled volume is Σ_buckets |blocks(bucket's terms)| — hot Zipf
-        # terms appear in most buckets, so volume grows with bucket count,
-        # and a core-derived count would make the hi-parallelism leg
-        # shuffle MORE bytes for the same batch (an anti-scaling harness
-        # artifact, the same principle as data-sized shuffle partitions).
-        # ~64 queries/bucket amortizes each bucket's block set well; the
-        # floor keeps small batches parallel across a few dozen tasks.
-        query_buckets = min(len(queries), max(32, -(-len(queries) // 64)))
+    # Instead, queries are dealt round-robin into buckets and each block
+    # ships once per BUCKET that needs its term (≤ buckets times total, vs
+    # ≤ queries times); the kernel loops the bucket's queries in-task.
+    # Math, tie-breaks, metrics and pagination do not depend on the bucket
+    # count (pytest-enforced).
+    n_buckets = query_buckets(len(queries))
     bucket_queries: dict[int, list] = {}
     tb_pairs = set()
     for i, (qid, arrs) in enumerate(queries):
-        bkt = i % query_buckets
+        bkt = i % n_buckets
         bucket_queries.setdefault(bkt, []).append((qid, arrs))
         tb_pairs.update((int(t), bkt) for t in arrs[0])
     tb = local_relation(
@@ -847,7 +824,7 @@ def bm25_topk_indexed(
         # task serializes 4-6 buckets' kernels — a straggler that costs
         # nothing at low parallelism and ~20% wall at 8+ cores. groupBy
         # reuses this exchange (partitioning satisfies the distribution).
-        .repartition(query_buckets, "bucket")
+        .repartition(n_buckets, "bucket")
         .groupBy("bucket")
         .applyInPandas(_wand_bucket_fn(bq_bc, **kernel), schema=schema)
     )
@@ -896,30 +873,7 @@ def tfidf_topk_indexed(
     JVM-side, window top-k. Must equal the brute-force tfidf oracle
     (hash-checked by the driver)."""
     seg = read_segments(spark, index_dir)
-    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg, idf="tfidf")
-    carry = ["term_id", "query_id", "weight", "idf"]
-    schema = (
-        "term_id long, query_id int, weight double, idf double, "
-        "doc_id long, tf long, dl long"
-    )
-    decoded = blocks.select(
-        *carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed"
-    ).mapInPandas(_decode_map_fn(carry), schema=schema)
-    decoded = _mask_tombstones(spark, index_dir, decoded)
-    contrib = (
-        F.col("weight") * F.col("idf") * (F.lit(1.0) + F.log(F.col("tf")))
-    )
-    scored = (
-        decoded.withColumn("contrib", contrib)
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _ranked(_scored(spark, index_dir, qterms, seg, idf="tfidf"), k)
 
 
 def threshold_search_indexed(
@@ -929,33 +883,16 @@ def threshold_search_indexed(
     threshold search, GraphSearcher.java:192-196 / Q7) — exact and cheap in
     batch: score-all then filter."""
     seg = read_segments(spark, index_dir)
-    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg)
-    carry = ["term_id", "query_id", "weight", "idf"]
-    schema = "term_id long, query_id int, weight double, idf double, doc_id long, tf long, dl long"
-    decoded = blocks.select(*carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed").mapInPandas(
-        _decode_map_fn(carry), schema=schema
-    )
-    decoded = _mask_tombstones(spark, index_dir, decoded)
-    k1, b, avgdl = seg["k1"], seg["b"], seg["avgdl"]
-    contrib = (
-        F.col("weight") * F.col("idf") * F.col("tf")
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        decoded.withColumn("contrib", contrib)
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .filter(F.col("score") >= theta)
-    )
+    return _scored(spark, index_dir, qterms, seg).filter(F.col("score") >= theta)
 
 
 # ---------------------------------------------------------------------------
 # predicate-filtered search (Bits acceptOrds analog, Q8)
 # ---------------------------------------------------------------------------
 
-# above this many accepted ids, stop shipping the mask into the WAND UDF and
-# switch to the shuffle-join relational plan — same crossover reasoning as
-# Spark's own broadcast-join threshold
+# above this many accepted ids, stop shipping the mask into the WAND kernel
+# and switch to the join-filtered relational plan — same crossover
+# reasoning as Spark's own broadcast-join threshold
 ACCEPT_BROADCAST_LIMIT = 5_000_000
 
 
@@ -965,8 +902,6 @@ def bm25_topk_indexed_filtered(
     qterms: DataFrame,
     accept: DataFrame,
     k: int = 10,
-    accept_limit: int = ACCEPT_BROADCAST_LIMIT,
-    bucketed: bool = True,
 ) -> DataFrame:
     """Top-k restricted to the docs in ``accept`` (a DataFrame with a
     ``doc_id`` column — typically the output of any predicate over
@@ -975,80 +910,22 @@ def bm25_topk_indexed_filtered(
     TestLowCardinalityFiltering.java:53-57).
 
     Physical strategy, chosen like the reference chooses filter strategy by
-    selectivity: a *selective* predicate yields a small accept set → ship it
-    into the Block-Max WAND kernel as a sorted id mask (pruning stays
-    lossless: unfiltered block bounds still upper-bound filtered scores). A
-    *broad* predicate (> ``accept_limit`` ids) → relational plan: decode
-    matched blocks, hash-join the accept set on doc_id (Catalyst/AQE pick
-    broadcast vs shuffle), score JVM-side, window top-k. Both paths return
-    identical results (tested).
-
-    The selective path rides the BUCKETED gather (blocks ship ≤ buckets×,
-    not ≤ queries× — at a 5000-query filtered batch the per-query grouping
-    reintroduces the block-replication shuffle the bucketed path was built
-    to kill); ``bucketed=False`` keeps the per-query grouping as the
-    equivalence-tested fallback."""
-    n_accept = accept.count()
-    if n_accept <= accept_limit:
+    selectivity: a *selective* predicate (at most
+    :data:`ACCEPT_BROADCAST_LIMIT` ids) ships its sorted ids into the
+    Block-Max WAND kernel of :func:`bm25_topk_indexed` as ``accept_ids``
+    (pruning stays lossless: unfiltered block bounds still upper-bound
+    filtered scores). A *broad* predicate runs the relational read with the
+    accept set hash-joined on doc_id. Both paths return identical results
+    (tested)."""
+    if accept.count() <= ACCEPT_BROADCAST_LIMIT:
         ids = np.sort(
             np.fromiter(
                 (r[0] for r in accept.select("doc_id").distinct().collect()),
                 dtype=np.int64,
             )
         )
-        if bucketed:
-            return bm25_topk_indexed(
-                spark, index_dir, qterms, k=k, prune=True, accept_ids=ids
-            )
-        seg = read_segments(spark, index_dir)
-        dead_set = tombstone_ids(spark, index_dir)
-        dead = (
-            np.sort(np.fromiter(dead_set, dtype=np.int64)) if dead_set else None
+        return bm25_topk_indexed(
+            spark, index_dir, qterms, k=k, prune=True, accept_ids=ids
         )
-        blocks = _prepared_query_blocks(spark, index_dir, qterms, seg)
-        return (
-            blocks.select(
-                "query_id", "term_id", "weight", "idf", "n", "base", "max_doc_id",
-                "max_tf", "min_dl", "doc_ids_packed", "tfs_packed", "dls_packed",
-            )
-            .groupBy("query_id")
-            .applyInPandas(
-                _wand_group_fn(
-                    k, seg["k1"], seg["b"], seg["avgdl"], False, dead, ids
-                ),
-                schema="query_id int, rank int, doc_id long, score double",
-            )
-        )
-
-    # relational path: scales to arbitrarily large accept sets
     seg = read_segments(spark, index_dir)
-    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg)
-    carry = ["term_id", "query_id", "weight", "idf"]
-    schema = (
-        "term_id long, query_id int, weight double, idf double, "
-        "doc_id long, tf long, dl long"
-    )
-    decoded = blocks.select(
-        *carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed"
-    ).mapInPandas(_decode_map_fn(carry), schema=schema)
-    decoded = _mask_tombstones(spark, index_dir, decoded)
-    decoded = decoded.join(accept.select("doc_id").distinct(), "doc_id")
-    k1, b, avgdl = seg["k1"], seg["b"], seg["avgdl"]
-    contrib = (
-        F.col("weight") * F.col("idf") * F.col("tf")
-        / (
-            F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-        )
-    )
-    scored = (
-        decoded.withColumn("contrib", contrib)
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _ranked(_scored(spark, index_dir, qterms, seg, accept=accept), k)

@@ -65,7 +65,7 @@ looks its terms up in the dictionary with a pyarrow dataset filter on
 ``term`` (:func:`read_dictionary`), not with a Spark scan. A read whose
 matched postings and part files are small (the rule in ``index.query``)
 then reads only the ``postings/part_id=…`` directories its (term_id,
-salt) pairs hash to (:func:`postings_files`, :func:`hash_parts`), with a
+salt) pairs hash to (:func:`postings_files`, :func:`term_parts`), with a
 ``term_id`` filter (:func:`read_files`), and runs no Spark job at all.
 Larger reads scan the same directories with Spark.
 
@@ -356,6 +356,13 @@ def hash_parts(pairs, n_parts: int) -> list[int]:
     return sorted({hash_part_id(int(t), int(s), int(n_parts)) for t, s in pairs})
 
 
+def term_parts(terms, n_parts: int) -> list[int]:
+    """Distinct sorted part ids holding every salt of the ``(term_id,
+    n_salts)`` pairs ``terms`` — the postings and positions part set a read
+    of those terms directory-prunes to, resolved driver-side."""
+    return hash_parts(((t, s) for t, n in terms for s in range(int(n))), n_parts)
+
+
 def ids_in(id_col: str, ids: list[int]) -> Column:
     """``id_col IN (ids)``, parsed from one SQL string: ``Column.isin``
     makes one Py4J call per literal, ~0.3 s of driver time for a
@@ -428,7 +435,8 @@ def read_files(files: list[str], columns: list[str], filter=None) -> pa.Table:
 
 def read_dictionary(index_dir: str, filter) -> pa.Table:
     """The dictionary rows (term, term_id, df, n_salts) that pass a pyarrow
-    ``filter`` on ``term``."""
+    ``filter`` (on ``term`` or ``term_id``): every indexed read's term
+    lookup, with no Spark job."""
     return read_files(
         _data_files(index_dir, "dictionary"),
         ["term", "term_id", "df", "n_salts"],

@@ -8,6 +8,7 @@ groupBy, no UDFs, no corpus shuffle (the term filter broadcasts).
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,34 +46,30 @@ def boolean_or(
 
 
 def _matches_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:
-    """Decoded postings of ``terms`` only, with directory-level part
+    """Decoded live postings of ``terms`` only, with directory-level part
     pruning — the index-backed candidate generator (reads Σ blocks(terms)
-    bytes regardless of corpus size, vs the brute-force path's full scan)."""
-    from ..index.query import decode_postings
-    from ..index.storage import hash_parts, read_segments, read_table
+    bytes regardless of corpus size, vs the brute-force path's full scan).
+    The terms are looked up with a pyarrow filter on the dictionary and
+    their part ids hashed driver-side, so no Spark job runs before the
+    read; tombstoned docs are masked like every indexed read."""
+    from ..index.query import _decode_map_fn, _mask_tombstones
+    from ..index.storage import read_dictionary, read_segments, read_table, term_parts
 
     seg = read_segments(spark, index_dir)
-    dct = read_table(spark, index_dir, "dictionary")
-    rows = dct.filter(F.col("term").isin(sorted(set(terms)))).select(
-        "term_id", "n_salts"
-    ).collect()
+    rows = read_dictionary(index_dir, pc.field("term").isin(sorted(set(terms)))).to_pylist()
     if not rows:
         return local_relation(spark, [], "term_id long, doc_id long, tf long, dl long")
-    tids = [int(r.term_id) for r in rows]
     postings = read_table(spark, index_dir, "postings")
     if seg.get("layout") != "doc":
-        # part ids resolved driver-side (bit-exact python pmod(xxhash64))
-        pairs = [(int(r.term_id), s) for r in rows for s in range(int(r.n_salts))]
-        parts = hash_parts(pairs, int(seg["n_parts"]))
+        parts = term_parts(((r["term_id"], r["n_salts"]) for r in rows), seg["n_parts"])
         postings = postings.filter(F.col("part_id").isin(parts))
-    postings = postings.filter(F.col("term_id").isin(tids))
-    from ..index.query import _decode_map_fn
-
-    return postings.select(
+    postings = postings.filter(F.col("term_id").isin([r["term_id"] for r in rows]))
+    decoded = postings.select(
         "term_id", "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed"
     ).mapInPandas(
         _decode_map_fn(["term_id"]), schema="term_id long, doc_id long, tf long, dl long"
     )
+    return _mask_tombstones(spark, index_dir, decoded)
 
 
 def boolean_and_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:

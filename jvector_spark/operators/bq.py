@@ -13,9 +13,9 @@ Spark-first shape — the ``BQ`` tier record on the shared two-phase path
 (``similarity.ann_topk_tier``): codes persist once
 (``index.vectors.bq_build``), each query scans dim/8 bytes per vector
 (vectorized ``np.unpackbits`` XOR popcount per Arrow batch), the top
-``rerank`` candidates per query go to the exact rerank. The packed layout
-is the shelved PFor bitpack codec at width 1 (``index/codec.py:107-133``)
-— little-bit-first, exact round-trip property-tested there.
+``rerank`` candidates per query go to the exact rerank. The codes are
+``np.packbits`` over the sign bits, little-bit-first (checked against a
+Python oracle in ``tests/test_vector_tables.py``).
 
 A 1-bit code is the coarsest tier, so the rank-identical-to-exact margin
 needs more headroom than SQ8/PQ: on the near-uniform synthetic fixture
@@ -81,7 +81,7 @@ BQ = Tier(
 def bq_encode(embeddings: DataFrame, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """(id, codes binary) — one sign bit per dimension, packed
-    little-bit-first (bitpack width-1 layout): dim/8 bytes per vector,
+    little-bit-first (``np.packbits``): dim/8 bytes per vector,
     32× smaller than float32. No training phase."""
     return encode_codes(BQ, embeddings, None, id_col, vec_col)
 

@@ -85,7 +85,7 @@ def _unwarp(y: np.ndarray, alpha: np.ndarray) -> np.ndarray:
 def _pack(codes: np.ndarray, bits: int) -> np.ndarray:
     """(n, dim) uint8 code points → (n, dim·bits/8) packed bytes.
     4-bit packs two codes per byte, low nibble first (the little-end
-    convention of the BQ/bitpack layouts)."""
+    convention of the BQ layout)."""
     if bits == 8:
         return codes
     if codes.shape[1] % 2:

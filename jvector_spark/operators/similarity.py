@@ -687,15 +687,18 @@ def ivf_extend(
     is the compaction analog once drift accumulates."""
     spark = new_embeddings.sparkSession
     C = ivf_read_centroids(spark, index_dir)
-    delta = ivf_assign(new_embeddings, C, id_col, vec_col)
-    delta.write.mode("append").partitionBy("cluster").parquet(
-        os.path.join(index_dir, "assignments")
-    )
-    # keep the k-row live-count sidecar current (appended delta; readers
-    # sum) — ivf_assign is deterministic on fixed centroids, so this
-    # re-execution emits the same assignment the write persisted, and its
-    # counts sum to the number appended
-    counts = delta.groupBy("cluster").count().collect()
+    # the assignment is cached on the append, so the sidecar's counts read
+    # it back instead of assigning every new vector a second time
+    delta = ivf_assign(new_embeddings, C, id_col, vec_col).persist()
+    try:
+        delta.write.mode("append").partitionBy("cluster").parquet(
+            os.path.join(index_dir, "assignments")
+        )
+        # keep the k-row live-count sidecar current (appended delta;
+        # readers sum); the counts sum to the number appended
+        counts = delta.groupBy("cluster").count().collect()
+    finally:
+        delta.unpersist()
     _write_cluster_sizes(counts, index_dir)
     return sum(int(n) for _, n in counts)
 

@@ -1,82 +1,122 @@
-"""Property tests for the posting-block codec — the analog of the
-reference's compression round-trip suite (TestCompressedVectors.java:43-116):
-decode(encode(x)) == x exactly, across edge cases (single element, zero
-first gap, huge gaps, block boundaries)."""
+"""Property tests for the posting-block codec the engine runs — the analog
+of the reference's compression round-trip suite
+(TestCompressedVectors.java:43-116): decode(encode(x)) == x exactly, across
+edge cases (single element, zero first gap, huge values and gaps, block
+boundaries). No Spark session: the codec is numpy on Arrow frames."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from jvector_spark.index.codec import (
-    decode_block,
-    encode_block,
-    varint_decode,
-    varint_encode,
-)
+from jvector_spark.index.build import encode_partition_pdf
+from jvector_spark.index.codec import decode_blocks, varint_decode, varint_encode
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
 @settings(max_examples=200, deadline=None)
 def test_varint_roundtrip(xs):
     arr = np.array(xs, dtype=np.uint64)
-    assert np.array_equal(varint_decode(varint_encode(arr), len(xs)), arr)
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=300, unique=True),
-    st.lists(st.integers(min_value=1, max_value=10**6), min_size=1, max_size=300),
-    st.integers(min_value=0, max_value=1000),
-)
-@settings(max_examples=200, deadline=None)
-def test_block_roundtrip(ids, tfs, base_jitter):
-    ids = sorted(ids)
-    tfs = (tfs * ((len(ids) // len(tfs)) + 1))[: len(ids)]
-    base = max(0, ids[0] - base_jitter)
-    d, t = encode_block(np.array(ids), np.array(tfs), base)
-    rid, rtf = decode_block(d, t, len(ids), base)
-    assert rid.tolist() == ids
-    assert rtf.tolist() == tfs
+    buf, lengths = varint_encode(arr)
+    assert np.array_equal(varint_decode(buf, len(xs)), arr)
+    # one length per value: its LEB128 byte count, and the bytes it spans
+    assert lengths.tolist() == [max(1, -(-x.bit_length() // 7)) for x in xs]
+    assert len(buf) == int(lengths.sum())
+    off = np.concatenate(([0], np.cumsum(lengths)))
+    for i, x in enumerate(xs[:20]):
+        assert varint_decode(buf[off[i] : off[i + 1]], 1).tolist() == [x]
 
 
 def test_varint_empty_and_zero():
-    assert varint_encode(np.array([], dtype=np.uint64)) == b""
+    buf, lengths = varint_encode(np.array([], dtype=np.uint64))
+    assert buf == b"" and lengths.tolist() == []
     assert varint_decode(b"", 0).tolist() == []
-    assert varint_decode(varint_encode(np.array([0], dtype=np.uint64)), 1).tolist() == [0]
+    assert varint_decode(varint_encode(np.array([0], dtype=np.uint64))[0], 1).tolist() == [0]
 
 
 def test_known_leb128_bytes():
     # 300 = 0b100101100 -> 0xAC 0x02
-    assert varint_encode(np.array([300], dtype=np.uint64)) == b"\xac\x02"
+    buf, lengths = varint_encode(np.array([300], dtype=np.uint64))
+    assert buf == b"\xac\x02" and lengths.tolist() == [2]
     assert varint_decode(b"\xac\x02", 1).tolist() == [300]
 
 
-# --- binary packing (PFor-family alternative codec) -------------------------
+@st.composite
+def posting_rows(draw):
+    """(term_id, salt, doc_id, tf, dl) rows of 1-6 (term, salt) runs, each
+    of 1-300 docs from an arbitrary start, shuffled (the encoder sorts)."""
+    cols = {c: [] for c in ("term_id", "salt", "doc_id", "tf", "dl")}
+    for r in range(draw(st.integers(1, 6))):
+        n = draw(st.integers(1, 300))
+        start = draw(st.integers(0, 2**40))
+        gaps = draw(st.lists(st.integers(1, 2**20), min_size=n - 1, max_size=n - 1))
+        cols["term_id"] += [r // 2] * n
+        cols["salt"] += [r % 2] * n
+        cols["doc_id"] += (start + np.concatenate(([0], np.cumsum(gaps, dtype=np.int64)))).tolist()
+        cols["tf"] += draw(st.lists(st.integers(1, 2**31), min_size=n, max_size=n))
+        cols["dl"] += draw(st.lists(st.integers(1, 2**40), min_size=n, max_size=n))
+    pdf = pd.DataFrame(cols).astype({"salt": "int32"})
+    perm = np.random.default_rng(draw(st.integers(0, 2**32 - 1))).permutation(len(pdf))
+    return pdf.iloc[perm].reset_index(drop=True)
 
-def test_bitpack_roundtrip_random():
-    import numpy as np
 
-    from jvector_spark.index.codec import bitpack_decode, bitpack_encode
+@given(posting_rows(), st.sampled_from([1, 3, 128]))
+@settings(max_examples=100, deadline=None)
+def test_block_roundtrip(pdf, block_size):
+    """decode_blocks(encode) returns every row, each in a block of its own
+    (term, salt) run; runs cut every ``block_size`` docs; a run's first
+    block has base = its first doc and a first gap of 0."""
+    blocks = encode_partition_pdf(pdf, block_size=block_size)
+    row, doc, tf, dl = decode_blocks(blocks)
+    want = pdf.sort_values(["term_id", "salt", "doc_id"])
+    assert doc.tolist() == want["doc_id"].tolist()
+    assert tf.tolist() == want["tf"].tolist()
+    assert dl.tolist() == want["dl"].tolist()
+    assert blocks["term_id"].to_numpy()[row].tolist() == want["term_id"].tolist()
+    assert blocks["salt"].to_numpy()[row].tolist() == want["salt"].tolist()
 
-    rng = np.random.default_rng(5)
-    for _ in range(40):
-        n = int(rng.integers(0, 500))
-        hi = int(rng.choice([1, 2, 7, 255, 2**16, 2**31, 2**63 - 1]))
-        v = rng.integers(0, hi, size=n, dtype=np.uint64)
-        buf, w = bitpack_encode(v)
-        out = bitpack_decode(buf, n, w)
-        assert np.array_equal(out, v)
+    runs = want.groupby(["term_id", "salt"])["doc_id"]
+    assert len(blocks) == sum(-(-n // block_size) for n in runs.size())
+    assert (blocks["n"] <= block_size).all()
+    first = blocks[blocks["block_id"] == 0].set_index(["term_id", "salt"])
+    assert first["base"].to_dict() == runs.min().to_dict()
+    for packed in first["doc_ids_packed"]:
+        assert varint_decode(packed, 1).tolist() == [0]
+    ends = np.cumsum(blocks["n"].to_numpy()) - 1
+    assert blocks["max_doc_id"].tolist() == doc[ends].tolist()
 
 
-def test_bitpack_edge_cases():
-    import numpy as np
+def _per_block_decode(frame: pd.DataFrame, rows: np.ndarray):
+    """The block-at-a-time decode: three varint calls per block."""
+    idx, ids, tfs, dls = [], [], [], []
+    for i in rows:
+        n = int(frame["n"].iat[i])
+        gaps = varint_decode(frame["doc_ids_packed"].iat[i], n).astype(np.int64)
+        gaps[0] += frame["base"].iat[i]
+        ids.append(np.cumsum(gaps))
+        tfs.append(varint_decode(frame["tfs_packed"].iat[i], n).astype(np.int64))
+        dls.append(varint_decode(frame["dls_packed"].iat[i], n).astype(np.int64))
+        idx.append(np.full(n, i, dtype=np.int64))
+    return tuple(np.concatenate(a) for a in (idx, ids, tfs, dls))
 
-    from jvector_spark.index.codec import bitpack_decode, bitpack_encode
 
-    assert bitpack_encode(np.array([], dtype=np.uint64)) == (b"", 0)
-    buf, w = bitpack_encode(np.array([0, 0, 0], dtype=np.uint64))
-    assert w == 1 and list(bitpack_decode(buf, 3, w)) == [0, 0, 0]
-    big = np.array([2**63 - 1, 1], dtype=np.uint64)
-    buf, w = bitpack_encode(big)
-    assert np.array_equal(bitpack_decode(buf, 2, w), big)
+@given(posting_rows(), st.sampled_from([1, 3, 128]), st.data())
+@settings(max_examples=50, deadline=None)
+def test_decode_blocks_equals_per_block_loop(pdf, block_size, data):
+    """The flat decode equals a per-block loop on the same frame, for all
+    blocks and for any subset of them in any order."""
+    blocks = encode_partition_pdf(pdf, block_size=block_size)
+    rows = np.array(
+        data.draw(st.lists(st.integers(0, len(blocks) - 1), min_size=1, unique=True)),
+        dtype=np.int64,
+    )
+    for got, want in (
+        (decode_blocks(blocks), _per_block_decode(blocks, np.arange(len(blocks)))),
+        (decode_blocks(blocks, rows), _per_block_decode(blocks, rows)),
+    ):
+        for g, w in zip(got, want):
+            assert g.dtype == np.int64 and np.array_equal(g, w)
+    empty = decode_blocks(blocks, np.zeros(0, dtype=np.int64))
+    assert all(len(a) == 0 for a in empty)

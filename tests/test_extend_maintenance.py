@@ -146,6 +146,7 @@ def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
     from jvector_spark.index.build import build_index
     from jvector_spark.index.maintenance import compact_index, delete_docs
     from jvector_spark.index.query import bm25_topk_indexed
+    from jvector_spark.operators.boolean import boolean_and_indexed, boolean_or_indexed
     from jvector_spark.operators.topk import bm25_topk_bruteforce
 
     small = corpus.filter(F.col("doc_id") < 1500).cache()
@@ -153,10 +154,11 @@ def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
     try:
         build_index(small, d, n_parts=2)
         # tombstone every current top-1 doc → they must vanish, successors rise
-        top1 = {
-            r.doc_id
+        top = {
+            r.query_id: r.doc_id
             for r in bm25_topk_indexed(spark, d, qterms, k=1).collect()
         }
+        top1 = set(top.values())
         assert delete_docs(spark, d, top1) == len(top1)
 
         dead_df = spark.createDataFrame([(int(x),) for x in top1], "doc_id long")
@@ -173,6 +175,13 @@ def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
         assert_topk_match(got, want)
         got_unpruned = bm25_topk_indexed(spark, d, qterms, k=10, prune=False)
         assert_topk_match(got_unpruned, want)
+        # the boolean reads mask the same tombstones: a query's terms
+        # match its (now deleted) top-1 doc
+        q0 = min(top)
+        terms = [r.term for r in qterms.filter(F.col("query_id") == q0).collect()]
+        for fn in (boolean_and_indexed, boolean_or_indexed):
+            ids = {r.doc_id for r in fn(spark, d, terms).collect()}
+            assert not ids & top1, fn.__name__
 
         # compaction: physically removes them; same answers, no tombstones
         m = compact_index(spark, d)
@@ -188,6 +197,8 @@ def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
         # deleting everything leaves empty results
         delete_docs(spark, d, {int(r.doc_id) for r in live.select("doc_id").collect()})
         assert bm25_topk_indexed(spark, d, qterms, k=10).count() == 0
+        assert boolean_and_indexed(spark, d, terms).count() == 0
+        assert boolean_or_indexed(spark, d, terms).count() == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

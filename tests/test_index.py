@@ -98,12 +98,21 @@ def test_bucketed_gather_invariant_to_bucket_count(spark, index_dir, query_set, 
             for r in bm25_topk_indexed(spark, index_dir, qdf, k=10, **kw).collect()
         )
 
+    def buckets(n_buckets, **kw):
+        # the bucket count is min(nq, max(MIN_QUERY_BUCKETS, ⌈nq /
+        # QUERIES_PER_BUCKET⌉)): one bucket per query at most
+        with monkeypatch.context() as m:
+            m.setattr(Q, "MIN_QUERY_BUCKETS", n_buckets)
+            m.setattr(Q, "QUERIES_PER_BUCKET", nq)
+            assert Q.query_buckets(nq) == min(n_buckets, nq)
+            return rows(**kw)
+
     base = rows()
-    assert base == rows(query_buckets=1)
-    assert base == rows(query_buckets=nq)
+    assert base == buckets(1)
+    assert base == buckets(nq)
     # pagination composes with bucketing: the page's ranks ≤ 10 must be
     # exactly the base rows at those ranks
-    page = rows(query_buckets=3, offset=5)
+    page = buckets(3, offset=5)
     assert [t for t in page if t[1] <= 10] == [t for t in base if t[1] > 5]
 
 
@@ -231,11 +240,13 @@ def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set)
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_filtered_topk_both_paths_equal_bruteforce(spark, corpus, index_dir, query_set):
+def test_filtered_topk_both_paths_equal_bruteforce(spark, corpus, index_dir, query_set,
+                                                   monkeypatch):
     """Bits-acceptOrds analog (Q8): top-k restricted to an accept set must
     equal brute-force scoring of only the accepted docs — on both physical
     paths (WAND id-mask and relational join), mirroring
     TestLowCardinalityFiltering.java:53-57."""
+    import jvector_spark.index.query as Q
     from jvector_spark.index.query import bm25_topk_indexed_filtered
     from jvector_spark.operators.topk import bm25_score_all, queries_df
     from pyspark.sql import Window
@@ -253,16 +264,12 @@ def test_filtered_topk_both_paths_equal_bruteforce(spark, corpus, index_dir, que
         .filter(F.col("rank") <= 10)
         .collect()
     }
-    for limit, bucketed, tag in (
-        (10**9, True, "wand-mask-bucketed"),
-        (10**9, False, "wand-mask-perquery"),
-        (0, True, "relational"),
-    ):
+    for limit, tag in ((10**9, "wand-mask-bucketed"), (0, "relational")):
+        monkeypatch.setattr(Q, "ACCEPT_BROADCAST_LIMIT", limit)
         got = {
             (r.query_id, r.rank): (r.doc_id, round(r.score, 9))
             for r in bm25_topk_indexed_filtered(
-                spark, index_dir, qdf, accept, k=10, accept_limit=limit,
-                bucketed=bucketed,
+                spark, index_dir, qdf, accept, k=10
             ).collect()
         }
         assert got == want, tag
@@ -271,7 +278,7 @@ def test_filtered_topk_both_paths_equal_bruteforce(spark, corpus, index_dir, que
 def test_oov_query_batch_returns_empty(spark, index_dir):
     """A batch whose terms all miss the dictionary must return an empty
     frame with the declared schema on the bucketed WAND path (regression:
-    query_buckets=0 → repartition(0) raised IllegalArgumentException)."""
+    a bucket count of 0 → repartition(0) raised IllegalArgumentException)."""
     from jvector_spark.index.query import bm25_topk_indexed
     from jvector_spark.operators.topk import queries_df
 

@@ -205,6 +205,45 @@ def test_ivf_extend_equals_rebuild_with_same_centroids(spark, embeddings, tmp_pa
     assert got == want
 
 
+def test_ivf_extend_assigns_the_delta_once(spark, embeddings, tmp_path):
+    """The sidecar's per-cluster counts read the assignment the append
+    cached: extend's last query (the counts) scans the cache, and the
+    Python map node of ``ivf_assign`` — present in its plan only as the
+    cached relation's lineage — emits no row in that query."""
+    from pyspark.sql import functions as F
+
+    from jvector_spark.operators.similarity import ivf_build, ivf_extend
+
+    d = str(tmp_path / "ivf_once")
+    ivf_build(embeddings.filter(F.col("vec_id") % 2 == 0), d, n_clusters=8,
+              n_iters=2, seed=5)
+    rest = embeddings.filter(F.col("vec_id") % 2 == 1)
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    n0 = store.executionsCount()
+    n_added = ivf_extend(rest, d)
+    listener_bus.waitUntilEmpty()
+    execs = store.executionsList(n0, 1 << 20)
+    assert execs.size() >= 2  # the append, then the counts
+    count_id = execs.last().executionId()
+    graph = store.planGraph(count_id).allNodes()
+    nodes = [graph.apply(i) for i in range(graph.size())]
+    names = [n.name() for n in nodes]
+    assert any("InMemoryTableScan" in n for n in names), names
+    values = store.executionMetrics(count_id)
+    py_rows = []
+    for node in nodes:
+        if "InPandas" in node.name() or "InArrow" in node.name():
+            ms = node.metrics()
+            for m in (ms.apply(i) for i in range(ms.size())):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    py_rows.append(int(v.get().replace(",", "")))
+    assert sum(py_rows) == 0, py_rows
+    assert n_added == rest.count()
+
+
 def test_ivf_delete_masks_topk(spark, embeddings, tmp_path):
     """Tombstoned ids (M1 for the ANN tier) must vanish from every probe's
     candidate set — the survivors' ranking equals the exact scan over the

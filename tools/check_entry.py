@@ -17,6 +17,11 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+# the check's session holds the sf tables' working set, not get_spark's 8g
+# default (which is also -Xms); the same sizing as tests/conftest.py, and
+# an explicit setting still wins
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
