@@ -168,7 +168,7 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument(
         "--layout", choices=["term", "doc"], default="term",
         help="term = salted term-partitioned (lookup-optimal); "
-        "doc = doc-partitioned scatter-gather (QPS-optimal)",
+        "doc = doc-partitioned (each part a doc range, same reads)",
     )
     b.set_defaults(fn=cmd_build)
 

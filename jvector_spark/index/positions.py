@@ -6,7 +6,7 @@ Reference analog: the on-disk format's *feature-flagged per-node payloads*
 records per node, discovered via a header bitset
 (jvector-base/.../graph/disk/feature/FeatureId.java:31-62,
 AbstractGraphIndexWriter.java:46-53). Here the optional feature is a
-``positions/`` table (same hive ``part_id`` bucketing as ``postings/``);
+``positions/`` table (hashed ``part_id`` buckets on both layouts);
 its presence on disk *is* the feature flag. Indexes built without it answer
 every non-positional query unchanged.
 
@@ -41,6 +41,7 @@ from .. import BLOCK_SIZE
 from ..operators.phrase import token_positions
 from .codec import block_layout, pack_blocks, rebase, unpack_blocks
 from .storage import (
+    POSITIONS_SCHEMA,
     local_relation,
     read_dictionary,
     read_segments,
@@ -50,12 +51,6 @@ from .storage import (
     table_path,
     term_parts,
 )
-
-POSITIONS_SCHEMA = (
-    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
-    "n_occ int, doc_ids_packed binary, counts_packed binary, positions_packed binary"
-)
-
 
 def _empty_positions_pdf() -> pd.DataFrame:
     return pd.DataFrame(

@@ -12,10 +12,13 @@ Plan shape / scale notes:
 - the query set is collected to the driver and its terms are looked up in
   the dictionary with a pyarrow filter on ``term``; idf is computed there
   with the JVM's own ``StrictMath.log`` (:func:`idf_values`), so the lookup
-  runs no Spark job. The needed ``part_id`` hive-buckets are then computed
-  driver-side, so postings reads *directory-prune* to only the buckets
-  holding the query's terms — the analog of jvector seeking only the
-  adjacency regions a search touches;
+  runs no Spark job. The ``part_id`` directories to open then come from
+  the one part rule, :func:`storage.postings_parts`: the hashed parts of
+  the query's terms on the term-partitioned layout (the analog of jvector
+  seeking only the adjacency regions a search touches), every doc bucket
+  on the doc-partitioned one (``index.docpart``). That rule is the only
+  read-time difference between the layouts, as the reference's one
+  ``GraphSearcher`` searches its on-heap and on-disk graphs;
 - the fused blocks carry tf **and dl** inline, so exact scoring never
   touches the corpus-sized doc_stats table at query time. Every path
   decodes them with the one decoder, :func:`codec.decode_blocks` (the
@@ -63,11 +66,11 @@ from .storage import (
     ids_in,
     local_relation,
     postings_files,
+    postings_parts,
     read_dictionary,
     read_files,
     read_segments,
     read_table,
-    term_parts,
     tombstone_ids,
 )
 
@@ -188,12 +191,24 @@ def lookup_terms(
     return qd_rows, qid_type
 
 
-def _postings_scan(spark: SparkSession, index_dir: str, parts: list[int]) -> DataFrame:
-    """The postings scan directory-pruned to ``parts``."""
-    postings = read_table(spark, index_dir, "postings")
-    if parts:
-        postings = postings.filter(F.col("part_id").isin(parts))
-    return postings
+def _read_set(seg: dict, qd_rows: list) -> tuple[list[int], list[int]]:
+    """(parts, term_ids) of a read of :func:`lookup_terms` rows: the
+    postings part ids it opens (:func:`storage.postings_parts`) and its
+    distinct sorted term ids."""
+    parts = postings_parts(seg, ((tid, ns) for _, tid, _, _, ns, _ in qd_rows))
+    return parts, sorted({tid for _, tid, *_ in qd_rows})
+
+
+def _postings_scan(
+    spark: SparkSession, index_dir: str, parts: list[int], term_ids: list[int]
+) -> DataFrame:
+    """The Spark scan of the blocks of ``term_ids``: directory-pruned to
+    ``parts``, and filtered on ``term_id`` in the scan, which lets the
+    Parquet reader skip row groups of other terms inside each part file
+    (every part of a doc-partitioned index holds every term)."""
+    return read_table(spark, index_dir, "postings").filter(
+        ids_in("part_id", parts) & ids_in("term_id", term_ids)
+    )
 
 
 def _prepared_query_blocks(
@@ -202,7 +217,7 @@ def _prepared_query_blocks(
     idf: str = "bm25",
 ) -> DataFrame:
     """Join the query set to the dictionary and fetch only the posting
-    blocks of queried terms, with directory-level part_id pruning. Each
+    blocks of queried terms (:func:`_postings_scan`). Each
     block row replicates once per matching (query, term) pair — fine for
     the relational paths; the WAND batch path uses the bucketed gather in
     :func:`bm25_topk_indexed` instead (blocks ship once per query BUCKET)."""
@@ -217,8 +232,7 @@ def _prepared_query_blocks(
         [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _, _ in qd_rows],
         f"query_id {qid_type}, term_id long, weight double, idf double",
     )
-    parts = term_parts(((tid, ns) for _, tid, _, _, ns, _ in qd_rows), seg["n_parts"])
-    postings = _postings_scan(spark, index_dir, parts)
+    postings = _postings_scan(spark, index_dir, *_read_set(seg, qd_rows))
     return postings.join(F.broadcast(qd), "term_id")
 
 
@@ -314,7 +328,7 @@ SPARSE_EXACT_LIMIT = 2048
 
 
 def wand_topk_arrays(
-    pdf: pd.DataFrame,
+    pdf: pd.DataFrame | dict,
     k: int,
     k1: float,
     b: float,
@@ -323,9 +337,10 @@ def wand_topk_arrays(
     accept: np.ndarray | None = None,
     sparse_limit: int = SPARSE_EXACT_LIMIT,
 ) -> tuple[np.ndarray, np.ndarray, int, int]:
-    """Pure numpy Block-Max top-k for one query's posting blocks — the
-    two-phase scorer (approx bound + exact, GraphSearcher.java:451-487)
-    with a two-tier term split:
+    """Pure numpy Block-Max top-k for one query's posting blocks ``pdf``
+    (a DataFrame, or a dict of column arrays) — the two-phase scorer
+    (approx bound + exact, GraphSearcher.java:451-487) with a two-tier
+    term split:
 
     - **Sparse terms** (≤ ``sparse_limit`` postings in this query's working
       set) are decoded EXACTLY upfront — microseconds of work. A sparse
@@ -351,21 +366,21 @@ def wand_topk_arrays(
     filter of GraphSearcher.java:202-205 (Q8).
     Returns (doc_ids, scores, blocks_decoded, blocks_skipped).
     """
-    nb = len(pdf)
-    lo = pdf["base"].to_numpy(np.int64)
-    hi = pdf["max_doc_id"].to_numpy(np.int64)
-    idf = pdf["idf"].to_numpy(np.float64)
-    weight = pdf["weight"].to_numpy(np.float64)
-    ns = pdf["n"].to_numpy(np.int64)
-    term = pdf["term_id"].to_numpy(np.int64)
-    max_tf = pdf["max_tf"].to_numpy(np.float64)
-    min_dl = pdf["min_dl"].to_numpy(np.float64)
+    lo = np.asarray(pdf["base"], np.int64)
+    hi = np.asarray(pdf["max_doc_id"], np.int64)
+    idf = np.asarray(pdf["idf"], np.float64)
+    weight = np.asarray(pdf["weight"], np.float64)
+    ns = np.asarray(pdf["n"], np.int64)
+    term = np.asarray(pdf["term_id"], np.int64)
+    max_tf = np.asarray(pdf["max_tf"], np.float64)
+    min_dl = np.asarray(pdf["min_dl"], np.float64)
+    nb = len(lo)
     ub = (
         weight * idf * max_tf
         / (max_tf + k1 * (1.0 - b + b * min_dl / avgdl))
     )
     packed = {
-        c: pdf[c].to_numpy(object)
+        c: np.asarray(pdf[c], object)
         for c in ("doc_ids_packed", "tfs_packed", "dls_packed")
     }
     packed.update(n=ns, base=lo)
@@ -520,14 +535,14 @@ def wand_topk_arrays(
 
 
 def _wand_query(
-    sub: pd.DataFrame, qid: int,
+    sub: dict, qid: int,
     k: int, k1: float, b: float, avgdl: float, with_metrics: bool,
     dead: np.ndarray | None = None,
     accept: np.ndarray | None = None,
     offset: int = 0,
 ) -> pd.DataFrame:
-    """One query's output rows from its posting blocks ``sub`` (with
-    ``weight`` and ``idf`` columns): the WAND kernel, then ranks
+    """One query's output rows from its posting blocks ``sub`` (column
+    arrays, with ``weight`` and ``idf``): the WAND kernel, then ranks
     (offset, offset+k] and, ``with_metrics``, its search-cost columns."""
     # pagination (Q9 resume analog): compute top-(offset+k) exactly,
     # emit ranks (offset, offset+k] — a batch engine re-derives the
@@ -576,14 +591,19 @@ def _wand_queries(
     """WAND top-k of each ``(query_id, (term_ids, weights, idfs))`` in
     ``queries`` over ``blocks``, which hold each block of their terms once:
     the body of a Spark bucket task and of a driver-side read alike. Each
-    query selects its terms' blocks (spec merge) and runs
+    query gathers its terms' blocks, in block order, and runs
     :func:`_wand_query`."""
     blocks = _block_order(blocks)
+    cols = {c: blocks[c].to_numpy() for c in _WAND_COLS}
+    term = cols["term_id"]
     outs = []
     for qid, (tids, weights, idfs) in queries:
-        spec = pd.DataFrame({"term_id": tids, "weight": weights, "idf": idfs})
-        sub = blocks.merge(spec, on="term_id")
-        if len(sub):
+        rows = np.flatnonzero(np.isin(term, tids))
+        if len(rows):
+            o = np.argsort(tids)
+            at = o[np.searchsorted(tids, term[rows], sorter=o)]
+            sub = {c: a[rows] for c, a in cols.items()}
+            sub["weight"], sub["idf"] = weights[at], idfs[at]
             outs.append(
                 _wand_query(
                     sub, qid, k, k1, b, avgdl, with_metrics, dead, accept, offset
@@ -707,8 +727,9 @@ def bm25_topk_indexed(
     the ``usePruning`` escape hatch mirrors Bench.java:56). Tombstoned
     docs (index/maintenance.delete_docs) are masked on both paths.
     ``offset`` pages past the first ``offset`` results (Q9 resume analog,
-    GraphSearcher.java:489-527). A doc-partitioned index (layout="doc")
-    dispatches to the scatter-gather engine transparently.
+    GraphSearcher.java:489-527). Both index layouts run this one body
+    with every parameter; they differ only in the part directories a read
+    opens (:func:`storage.postings_parts`).
 
     ``global_stats`` ({n_docs, avgdl}) and ``global_df`` (term → corpus
     df) override shard-local statistics so a shard of a sharded index
@@ -725,27 +746,15 @@ def bm25_topk_indexed(
     :data:`DRIVER_MAX_BYTES`) runs on the driver and returns a local
     relation: no Spark job. The Spark path deals the batch into
     :func:`query_buckets` buckets."""
-    seg0 = read_segments(spark, index_dir)
-    if global_stats:
-        seg0 = {**seg0, **global_stats}
-    if seg0.get("layout") == "doc":
-        if offset or with_metrics or global_stats or global_df:
-            raise ValueError(
-                "offset/with_metrics/global overrides not supported on "
-                "doc-partitioned layout"
-            )
-        from .docpart import bm25_topk_docpart
-
-        if accept_ids is not None:
-            raise ValueError("accept_ids not supported on doc-partitioned layout")
-        return bm25_topk_docpart(spark, index_dir, qterms, k, prune)
     if not prune:
         if accept_ids is not None:
             raise ValueError("accept_ids requires the pruned (WAND) path")
         return bm25_topk_indexed_unpruned(
             spark, index_dir, qterms, k, offset, global_stats, global_df
         )
-    seg = seg0
+    seg = read_segments(spark, index_dir)
+    if global_stats:
+        seg = {**seg, **global_stats}
     dead_set = tombstone_ids(spark, index_dir)
     dead = (
         np.sort(np.fromiter(dead_set, dtype=np.int64)) if dead_set else None
@@ -784,12 +793,11 @@ def bm25_topk_indexed(
         k=k, k1=seg["k1"], b=seg["b"], avgdl=seg["avgdl"],
         with_metrics=with_metrics, dead=dead, accept=accept_ids, offset=offset,
     )
-    parts = term_parts(((tid, ns) for _, tid, _, _, ns, _ in qd_rows), seg["n_parts"])
+    parts, term_ids = _read_set(seg, qd_rows)
     files = _driver_files(index_dir, parts, n_postings)
     if files is not None:
         # driver path: the part files' blocks of the queried terms, read
         # with pyarrow, through the same kernel body a bucket task runs
-        term_ids = sorted({tid for _, tid, *_ in qd_rows})
         blocks = read_files(
             files, _WAND_COLS, pc.field("term_id").isin(term_ids)
         ).to_pandas()
@@ -816,7 +824,9 @@ def bm25_topk_indexed(
         spark, sorted(tb_pairs), "term_id long, bucket int"
     )
     bq_bc = spark.sparkContext.broadcast(bucket_queries)
-    blocks = _postings_scan(spark, index_dir, parts).join(F.broadcast(tb), "term_id")
+    blocks = _postings_scan(spark, index_dir, parts, term_ids).join(
+        F.broadcast(tb), "term_id"
+    )
     return (
         blocks.select("bucket", *_WAND_COLS)
         # one shuffle partition PER BUCKET: under the session default (32)
@@ -916,14 +926,13 @@ def bm25_topk_indexed_filtered(
     (pruning stays lossless: unfiltered block bounds still upper-bound
     filtered scores). A *broad* predicate runs the relational read with the
     accept set hash-joined on doc_id. Both paths return identical results
-    (tested)."""
-    if accept.count() <= ACCEPT_BROADCAST_LIMIT:
-        ids = np.sort(
-            np.fromiter(
-                (r[0] for r in accept.select("doc_id").distinct().collect()),
-                dtype=np.int64,
-            )
-        )
+    (tested). One bounded collect of the distinct ids serves both the
+    strategy choice and the mask, so ``accept`` is evaluated once."""
+    rows = (
+        accept.select("doc_id").distinct().limit(ACCEPT_BROADCAST_LIMIT + 1).collect()
+    )
+    if len(rows) <= ACCEPT_BROADCAST_LIMIT:
+        ids = np.sort(np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows)))
         return bm25_topk_indexed(
             spark, index_dir, qterms, k=k, prune=True, accept_ids=ids
         )

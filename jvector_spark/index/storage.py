@@ -33,7 +33,9 @@ jvector-base/.../graph/disk/OnDiskGraphIndex.java:72, CommonHeader.java:59-152):
 ``postings/`` is hive-partitioned by ``part_id`` (a deterministic hash
 bucket of (term_id, salt)) so query-time term lookups prune directories —
 the analog of jvector only seeking the adjacency regions the search
-touches.
+touches. On a doc-partitioned index (``index.docpart``) ``part_id`` is a
+doc-range bucket instead, and a term's blocks lie in every bucket;
+:func:`postings_parts` is the one place a read tells the two apart.
 
 Driver-sized tables go through Arrow on the driver; Spark jobs are only for
 corpus-sized tables. The segments row, the tombstone set and the lineage
@@ -50,8 +52,8 @@ one file; an overwrite swaps in a sibling directory that carries Spark's
 ``_SUCCESS`` marker. Index directories are therefore
 driver-visible paths — the same assumption the ``os.rename`` /
 ``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
-corpus-sized tables (postings, dictionary, doc_stats) are read with their
-known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
+corpus-sized tables (postings, positions, dictionary, doc_stats) are read
+with their known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
 schema-inference job. An aggregate the Parquet footers already hold is
 read from them, not computed by a job: ``extend_index`` takes the
 dictionary's max term_id from its row-group statistics
@@ -64,10 +66,10 @@ A query's own slice of the index is driver-sized too. Every indexed read
 looks its terms up in the dictionary with a pyarrow dataset filter on
 ``term`` (:func:`read_dictionary`), not with a Spark scan. A read whose
 matched postings and part files are small (the rule in ``index.query``)
-then reads only the ``postings/part_id=…`` directories its (term_id,
-salt) pairs hash to (:func:`postings_files`, :func:`term_parts`), with a
-``term_id`` filter (:func:`read_files`), and runs no Spark job at all.
-Larger reads scan the same directories with Spark.
+then reads only the ``postings/part_id=…`` directories that hold its
+terms (:func:`postings_parts`, :func:`postings_files`), with a ``term_id``
+filter (:func:`read_files`), and runs no Spark job at all. Larger reads
+scan the same directories with Spark, with the same ``term_id`` filter.
 
 The persisted vector tiers (``index.vectors``) follow the same rule: the
 manifest, SQ8 params, PQ codebooks and vector tombstones are read with
@@ -105,11 +107,18 @@ POSTINGS_SCHEMA = (
     "tfs_packed binary, dls_packed binary"
 )
 
+# the positional feature's blocks (index.positions), hashed by part_id
+POSITIONS_SCHEMA = (
+    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
+    "n_occ int, doc_ids_packed binary, counts_packed binary, positions_packed binary"
+)
+
 # the schemas the engine writes its corpus-sized tables with, as Spark would
 # infer them back (postings' hive partition column last); passing them to
 # the reader skips the footer-sampling job an inferred read plans
 TABLE_SCHEMAS = {
     "postings": POSTINGS_SCHEMA + ", part_id int",
+    "positions": POSITIONS_SCHEMA + ", part_id int",
     "dictionary": "term string, term_id long, df long, cf long, n_salts int",
     "doc_stats": "doc_id long, dl long",
 }
@@ -358,9 +367,19 @@ def hash_parts(pairs, n_parts: int) -> list[int]:
 
 def term_parts(terms, n_parts: int) -> list[int]:
     """Distinct sorted part ids holding every salt of the ``(term_id,
-    n_salts)`` pairs ``terms`` — the postings and positions part set a read
-    of those terms directory-prunes to, resolved driver-side."""
+    n_salts)`` pairs ``terms``, resolved driver-side: the hashed part set
+    (``positions/`` on both layouts, see :func:`postings_parts`)."""
     return hash_parts(((t, s) for t, n in terms for s in range(int(n))), n_parts)
+
+
+def postings_parts(seg: dict, terms) -> list[int]:
+    """The ``postings/part_id=…`` directories holding the blocks of the
+    ``(term_id, n_salts)`` pairs ``terms`` on the index with segments row
+    ``seg``, every read's one layout decision: all ``n_parts`` doc buckets
+    on a doc-partitioned index, else the hashed :func:`term_parts`."""
+    if seg.get("layout") == "doc":
+        return list(range(int(seg["n_parts"])))
+    return term_parts(terms, seg["n_parts"])
 
 
 def ids_in(id_col: str, ids: list[int]) -> Column:

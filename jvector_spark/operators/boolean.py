@@ -50,20 +50,18 @@ def _matches_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:
     pruning — the index-backed candidate generator (reads Σ blocks(terms)
     bytes regardless of corpus size, vs the brute-force path's full scan).
     The terms are looked up with a pyarrow filter on the dictionary and
-    their part ids hashed driver-side, so no Spark job runs before the
-    read; tombstoned docs are masked like every indexed read."""
-    from ..index.query import _decode_map_fn, _mask_tombstones
-    from ..index.storage import read_dictionary, read_segments, read_table, term_parts
+    their part ids resolved driver-side (:func:`storage.postings_parts`,
+    either layout), so no Spark job runs before the read; tombstoned docs
+    are masked like every indexed read."""
+    from ..index.query import _decode_map_fn, _mask_tombstones, _postings_scan
+    from ..index.storage import postings_parts, read_dictionary, read_segments
 
     seg = read_segments(spark, index_dir)
     rows = read_dictionary(index_dir, pc.field("term").isin(sorted(set(terms)))).to_pylist()
     if not rows:
         return local_relation(spark, [], "term_id long, doc_id long, tf long, dl long")
-    postings = read_table(spark, index_dir, "postings")
-    if seg.get("layout") != "doc":
-        parts = term_parts(((r["term_id"], r["n_salts"]) for r in rows), seg["n_parts"])
-        postings = postings.filter(F.col("part_id").isin(parts))
-    postings = postings.filter(F.col("term_id").isin([r["term_id"] for r in rows]))
+    parts = postings_parts(seg, ((r["term_id"], r["n_salts"]) for r in rows))
+    postings = _postings_scan(spark, index_dir, parts, sorted(r["term_id"] for r in rows))
     decoded = postings.select(
         "term_id", "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed"
     ).mapInPandas(

@@ -1,9 +1,8 @@
 """Doc-partitioned index tests: results identical to the term-partitioned
-engine AND the brute-force oracle (pruned + unpruned), buckets actually
-partition the doc space, decode parity.
-
-The layout is the multi-index search shape surveyed as Q10 — per-segment
-top-k then rerankFloor merge (GraphSearcher.java:196-201,368-386)."""
+engine AND the brute-force oracle (pruned, unpruned and every relational
+read), buckets actually partition the doc space, decode parity. Reads of
+this layout run the term layout's query bodies; only the part directories
+they open differ (every doc bucket)."""
 
 from __future__ import annotations
 
@@ -23,6 +22,15 @@ def dp_index(tmp_path_factory, corpus):
     return d
 
 
+@pytest.fixture(scope="module")
+def tp_index(tmp_path_factory, corpus):
+    from jvector_spark.index.build import build_index
+
+    d = str(tmp_path_factory.mktemp("tpidx"))
+    build_index(corpus, d, n_parts=4, doc_map_cols=["conv_id", "turn_idx"])
+    return d
+
+
 def test_buckets_partition_doc_space(spark, corpus, dp_index):
     from jvector_spark.index.storage import read_segments, read_table
 
@@ -39,9 +47,8 @@ def test_buckets_partition_doc_space(spark, corpus, dp_index):
 
 
 def test_docpart_topk_equals_bruteforce_and_termpart(
-    spark, corpus, dp_index, query_set, tmp_path_factory
+    spark, corpus, dp_index, tp_index, query_set
 ):
-    from jvector_spark.index.build import build_index
     from jvector_spark.index.docpart import bm25_topk_docpart
     from jvector_spark.index.query import bm25_topk_indexed
     from jvector_spark.operators.topk import bm25_topk_bruteforce, queries_df
@@ -61,13 +68,71 @@ def test_docpart_topk_equals_bruteforce_and_termpart(
         )
         assert got == want, f"prune={prune}"
 
-    tp = str(tmp_path_factory.mktemp("tpidx"))
-    build_index(corpus, tp, n_parts=4)
     tp_rows = sorted(
         (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-        for r in bm25_topk_indexed(spark, tp, qdf, k=10).collect()
+        for r in bm25_topk_indexed(spark, tp_index, qdf, k=10).collect()
     )
     assert tp_rows == want
+
+
+def _rows(df) -> list[tuple]:
+    """Sorted rows, scores rounded to 9 places (the oracle sums in another
+    order)."""
+    return sorted(
+        tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_docpart_relational_reads_equal_termpart_and_oracle(
+    spark, monkeypatch, corpus, dp_index, tp_index
+):
+    """The relational reads decode the query terms' blocks in every doc
+    bucket, not only in the part a term's id hashes to: t0300 (df 13) and
+    t0042 (df 129) lie in several buckets of the 8, and each read must
+    return the term layout's rows and the brute-force oracle's."""
+    import jvector_spark.index.query as Q
+    from jvector_spark.operators.conversation import conv_topk, conv_topk_indexed
+    from jvector_spark.operators.topk import (
+        bm25_score_all,
+        queries_df,
+        tfidf_topk_bruteforce,
+        topk,
+    )
+
+    qdf = queries_df(
+        spark, [(0, ["t0042"]), (1, ["t0300"]), (2, ["t0042", "t0300", "t0007"])]
+    )
+    accept = corpus.filter(F.col("role") == "assistant").select("doc_id")
+    scored = bm25_score_all(corpus, qdf)
+    # the broad (relational, accept-joined) branch of the filtered read
+    monkeypatch.setattr(Q, "ACCEPT_BROADCAST_LIMIT", 0)
+    reads = {
+        "threshold": (
+            lambda d: Q.threshold_search_indexed(spark, d, qdf, 0.0),
+            scored.filter(F.col("score") >= 0.0),
+        ),
+        "tfidf": (
+            lambda d: Q.tfidf_topk_indexed(spark, d, qdf, k=50),
+            tfidf_topk_bruteforce(corpus, qdf, k=50),
+        ),
+        "unpruned": (
+            lambda d: Q.bm25_topk_indexed(spark, d, qdf, k=50, prune=False),
+            topk(scored, k=50),
+        ),
+        "filtered": (
+            lambda d: Q.bm25_topk_indexed_filtered(spark, d, qdf, accept, k=50),
+            topk(scored.join(accept, "doc_id"), k=50),
+        ),
+        "conv": (
+            lambda d: conv_topk_indexed(spark, d, qdf, k=20),
+            conv_topk(corpus, qdf, k=20),
+        ),
+    }
+    for name, (read, oracle) in reads.items():
+        want = _rows(oracle)
+        assert {r[0] for r in want} == {0, 1, 2}, name
+        assert _rows(read(dp_index)) == _rows(read(tp_index)) == want, name
 
 
 def test_docpart_decode_parity(spark, corpus, dp_index):

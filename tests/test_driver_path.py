@@ -1,34 +1,22 @@
-"""The two pruned BM25 read paths must agree bit for bit. A driver-sized
-read runs the WAND kernel on the driver over a pyarrow read of the pruned
-part files; a larger one runs it in Spark bucket tasks. Each test forces a
-path by setting the sizing rule's module constants. The shared idf
-function must equal Catalyst's ``log`` expressions bit for bit, and a
-query id that does not fit the output's ``query_id int`` fails loudly."""
+"""The two pruned BM25 read paths must agree bit for bit, on both index
+layouts. A driver-sized read runs the WAND kernel on the driver over a
+pyarrow read of the pruned part files; a larger one runs it in Spark
+bucket tasks. Each test forces a path by setting the sizing rule's module
+constants. A term-partitioned and a doc-partitioned index of one corpus
+return the same rows and score bits. The shared idf function must equal
+Catalyst's ``log`` expressions bit for bit, and a query id that does not
+fit the output's ``query_id int`` fails loudly."""
 
 from __future__ import annotations
-
-import uuid
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_local_tables import _jobs
 
 import jvector_spark.index.query as Q
 
 OOV = ["zzz_oov_a", "zzz_oov_b"]
-
-
-def _jobs(spark, fn):
-    """(result, Spark jobs ``fn`` ran), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"path-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _force(monkeypatch, path: str) -> None:
@@ -77,17 +65,27 @@ def _random_queries(rng, vocab: list[str], n: int) -> list[tuple]:
     return rows
 
 
-@pytest.fixture(scope="module")
-def index_dir(tmp_path_factory, corpus):
+def _build(corpus, layout: str, d: str) -> str:
     from jvector_spark.index.build import build_index
+    from jvector_spark.index.docpart import build_doc_partitioned
 
-    d = str(tmp_path_factory.mktemp("paths_idx"))
-    # low salt threshold: hot terms span several salts and part files
-    build_index(
-        corpus.filter(F.col("doc_id") < 2000), d, n_parts=4,
-        salt_threshold=64, target_salt_postings=64,
-    )
+    small = corpus.filter(F.col("doc_id") < 2000)
+    if layout == "term":
+        # low salt threshold: hot terms span several salts and part files
+        build_index(small, d, n_parts=4, salt_threshold=64, target_salt_postings=64)
+    else:
+        build_doc_partitioned(small, d, n_buckets=4)
     return d
+
+
+@pytest.fixture(scope="module", params=["term", "doc"])
+def index_dir(request, tmp_path_factory, corpus):
+    return _build(corpus, request.param, str(tmp_path_factory.mktemp("paths_idx")))
+
+
+@pytest.fixture(scope="module")
+def term_index_dir(tmp_path_factory, corpus):
+    return _build(corpus, "term", str(tmp_path_factory.mktemp("term_idx")))
 
 
 def test_driver_path_equals_spark_path(spark, monkeypatch, index_dir):
@@ -138,7 +136,40 @@ def test_driver_path_equals_spark_path(spark, monkeypatch, index_dir):
         assert sum(r[4] for r in metrics) > 0
 
 
-def test_kernel_body_is_block_order_independent(index_dir):
+def test_layouts_return_the_same_rows_and_score_bits(
+    spark, monkeypatch, corpus, term_index_dir, tmp_path
+):
+    """A term-partitioned and a doc-partitioned index of one corpus differ
+    only in which part files a read opens: both paths return the same
+    rows and score bits on both, and a driver-sized read of either runs
+    no Spark job."""
+    from jvector_spark.index.storage import local_relation
+
+    dirs = {"term": term_index_dir, "doc": _build(corpus, "doc", str(tmp_path))}
+    rng = np.random.default_rng(17)
+    dct = spark.read.parquet(f"{dirs['term']}/dictionary").select("term", "df").collect()
+    hot = [r.term for r in sorted(dct, key=lambda r: -r.df)[:40]]
+    vocab = hot + list(rng.choice([r.term for r in dct], size=40, replace=False))
+    qdf = local_relation(
+        spark, _random_queries(rng, vocab, 30),
+        "query_id int, term string, weight double",
+    )
+    rows = {
+        lay: _both(spark, monkeypatch, lambda: Q.bm25_topk_indexed(spark, d, qdf, k=10))
+        for lay, d in dirs.items()
+    }
+    assert len(rows["term"]) > 200
+    # scores are positive floats: equal values are equal bits
+    assert rows["doc"] == rows["term"]
+    # unforced, a small read of the doc layout stays on the driver
+    monkeypatch.undo()
+    _, jobs = _jobs(
+        spark, lambda: Q.bm25_topk_indexed(spark, dirs["doc"], qdf, k=10).collect()
+    )
+    assert jobs == 0, f"driver-sized doc-layout read ran {jobs} Spark jobs"
+
+
+def test_kernel_body_is_block_order_independent(term_index_dir):
     """Spark-free: the shared per-bucket body returns the same rows and
     score bits whatever order its blocks arrive in (a shuffle's fetch
     order, a file listing's order)."""
@@ -147,7 +178,7 @@ def test_kernel_body_is_block_order_independent(index_dir):
     from jvector_spark.index.storage import read_files
 
     rng = np.random.default_rng(3)
-    files = sorted(glob.glob(f"{index_dir}/postings/part_id=*/*.parquet"))
+    files = sorted(glob.glob(f"{term_index_dir}/postings/part_id=*/*.parquet"))
     blocks = read_files(files, Q._WAND_COLS).to_pandas()
     terms = blocks["term_id"].value_counts()
     vocab = np.concatenate([terms.index[:30], rng.choice(terms.index, 30)])
@@ -228,10 +259,10 @@ def test_idf_values_equal_catalyst_log(spark):
 
 
 @pytest.mark.parametrize("path", ["driver", "spark"])
-def test_query_ids_wider_than_int_raise(spark, monkeypatch, index_dir, path):
+def test_query_ids_wider_than_int_raise(spark, monkeypatch, term_index_dir, path):
     from jvector_spark.index.storage import local_relation
 
-    term = spark.read.parquet(f"{index_dir}/dictionary").orderBy(F.desc("df")).first().term
+    term = spark.read.parquet(f"{term_index_dir}/dictionary").orderBy(F.desc("df")).first().term
     # both ids are 7 modulo 2^32: truncated, they would merge into query 7
     qdf = local_relation(
         spark, [((1 << 33) + 7, term, 1.0), ((1 << 34) + 7, term, 1.0)],
@@ -239,11 +270,13 @@ def test_query_ids_wider_than_int_raise(spark, monkeypatch, index_dir, path):
     )
     _force(monkeypatch, path)
     with pytest.raises(ValueError, match="does not fit the output's query_id int"):
-        Q.bm25_topk_indexed(spark, index_dir, qdf, k=10).collect()
+        Q.bm25_topk_indexed(spark, term_index_dir, qdf, k=10).collect()
     # ids inside the int range still pass through a long relation
     ok = local_relation(
         spark, [(7, term, 1.0), (-(1 << 31), term, 1.0)],
         "query_id long, term string, weight double",
     )
-    got = {r.query_id for r in Q.bm25_topk_indexed(spark, index_dir, ok, k=3).collect()}
+    got = {
+        r.query_id for r in Q.bm25_topk_indexed(spark, term_index_dir, ok, k=3).collect()
+    }
     assert got == {7, -(1 << 31)}

@@ -162,13 +162,17 @@ def _by_name(schema) -> list:
 
 
 @pytest.mark.parametrize("layout", ["term", "doc"])
-def test_known_table_schemas_match_inferred(spark, term_index, doc_index, layout):
+def test_known_table_schemas_match_inferred(
+    spark, corpus, term_index, doc_index, tmp_path, layout
+):
+    from jvector_spark.index.positions import add_positions
     from jvector_spark.index.storage import TABLE_SCHEMAS, read_table
 
     # columns are matched by name: the build paths do not all write the
     # dictionary's columns in one order, and the known schema fixes the
     # scan's order
-    d = term_index if layout == "term" else doc_index
+    d = _copy(term_index if layout == "term" else doc_index, tmp_path)
+    add_positions(corpus.filter(F.col("doc_id") < 800), d)
     for name in TABLE_SCHEMAS:
         inferred = spark.read.parquet(os.path.join(d, name))
         known = read_table(spark, d, name)
@@ -248,6 +252,35 @@ def test_serve_and_delete_job_budgets(spark, term_index, tmp_path):
     )
     assert len(rows) == 10 and not {r.doc_id for r in rows} & dead
     assert jobs <= 4, f"single-query unpruned read ran {jobs} Spark jobs"
+
+
+def test_filtered_and_positional_read_job_budgets(spark, corpus, term_index, tmp_path):
+    """A selective filtered read evaluates its accept relation once (one
+    bounded distinct collect picks the branch and is the mask), and a
+    positional read opens ``positions`` with its known schema."""
+    from jvector_spark.index.positions import add_positions, phrase_count_indexed
+    from jvector_spark.index.query import bm25_topk_indexed_filtered
+    from jvector_spark.operators.topk import queries_df
+
+    d = _copy(term_index, tmp_path)
+    add_positions(corpus.filter(F.col("doc_id") < 800), d)
+    terms = [
+        r.term
+        for r in spark.read.parquet(os.path.join(d, "dictionary"))
+        .orderBy(F.desc("df")).limit(2).collect()
+    ]
+    accept = corpus.filter(F.col("role") == "assistant").select("doc_id")
+    rows, jobs = _jobs(
+        spark,
+        lambda: bm25_topk_indexed_filtered(
+            spark, d, queries_df(spark, [(0, terms)]), accept, k=10
+        ).collect(),
+    )
+    assert len(rows) == 10
+    assert jobs <= 2, f"selective filtered read ran {jobs} Spark jobs"
+    # ``positions`` opens with its known schema: no inference job
+    _, jobs = _jobs(spark, lambda: phrase_count_indexed(spark, d, *terms).collect())
+    assert jobs <= 2, f"phrase_count_indexed ran {jobs} Spark jobs"
 
 
 def _doc_stats_totals(spark, index_dir: str) -> tuple[int, float]:
