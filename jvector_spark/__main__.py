@@ -163,7 +163,7 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--index", required=True)
     b.add_argument("--order-cols", default="conv_id,turn_idx")
     b.add_argument("--n-parts", type=int, default=8)
-    b.add_argument("--resume", action="store_true")
+    b.add_argument("--resume", action="store_true", help="finish an interrupted term-layout build")
     b.add_argument("--positions", action="store_true")
     b.add_argument(
         "--layout", choices=["term", "doc"], default="term",
@@ -216,6 +216,8 @@ def main(argv: list[str] | None = None) -> int:
     st.set_defaults(fn=cmd_stats)
 
     args = p.parse_args(argv)
+    if args.cmd == "build" and args.resume and args.layout == "doc":
+        b.error("--resume supports --layout term only")
     return args.fn(args)
 
 

@@ -1,6 +1,7 @@
 """Inverted-index build pipeline (SURVEY.md §3.1 Spark translation).
 
-``build_index`` and ``build_index_transcripts`` run one pipeline
+``build_index``, ``build_index_transcripts`` and the doc-partitioned
+layout's ``docpart.build_doc_partitioned`` run one pipeline, ``_build``
 (reference analog: GraphIndexBuilder.build → cleanup → write,
 jvector-base/.../graph/GraphIndexBuilder.java:439-511):
 
@@ -21,12 +22,15 @@ jvector-base/.../graph/GraphIndexBuilder.java:439-511):
      encoder counts tf over runs and emits fused posting blocks
      (delta+varint doc gaps, varint tfs + dls inline, (max_tf, min_dl)
      block-max metadata — score bounds derive from these at query time),
-     hive-partitioned by ``part_id`` (a deterministic hash bucket of
-     (term_id, salt)). When the widths do not fit 63 bits, the four
+     hive-partitioned by ``part_id``, the layout's part rule
+     (``storage.part_id_col``): a deterministic hash bucket of (term_id,
+     salt) on the term layout; the salt itself on the doc layout, whose
+     salt is the doc bucket. When the widths do not fit 63 bits, the four
      columns travel instead.
-  5. **Commit**: one ``build_lineage`` row per part, with its postings and
-     bytes observed during the write, then ``segments``, the completion
-     marker; both are written with pyarrow.
+  5. **Commit**: one ``build_lineage`` row per part (per doc bucket on the
+     doc layout), with its postings and bytes observed during the write,
+     then ``segments``, the completion marker; both are written with
+     pyarrow.
 
 Resume (analog of OnHeapGraphIndex save/load + CheckpointManager.java:33-112,
 B11/B12): a resumed build encodes only the parts that have no complete
@@ -49,6 +53,7 @@ vocabulary aggregate combines map-side.
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 from typing import Iterator
@@ -69,6 +74,7 @@ from .storage import (
     POSTINGS_SCHEMA,
     arrow_rows,
     lineage_totals,
+    part_id_col,
     read_local,
     sized_shuffle_n,
     table_path,
@@ -306,11 +312,6 @@ def _encode_map_fn(block_size: int):
     return fn
 
 
-def part_id_col(n_parts: int) -> Column:
-    """``pmod(xxhash64(term_id, salt), n_parts)``: the postings' hive part."""
-    return F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int")
-
-
 def packed_bytes_col() -> Column:
     """A block's payload bytes: its three packed columns' lengths."""
     return (
@@ -399,19 +400,27 @@ def build_index(
     raises after that many parts' lineage rows are written, before
     ``segments`` — the resume tests' crash (the analog of the reference's
     checkpoint kill/restart tests)."""
-    # tokenize EXACTLY once into a narrow cached projection, the same shape
-    # the fused transcripts path pins; its first consumer (the doc_stats
-    # write) populates it
+    return _build_corpus(
+        corpus, index_dir, text_col, id_col, doc_map_cols, k1=k1, b=b,
+        block_size=block_size, salt_threshold=salt_threshold,
+        target_salt_postings=target_salt_postings, n_parts=n_parts,
+        resume=resume, fail_after_parts=fail_after_parts,
+    )
+
+
+def _build_corpus(
+    corpus: DataFrame, index_dir: str, text_col: str, id_col: str,
+    doc_map_cols: list[str] | None, **build_kw,
+) -> dict:
+    """:func:`_build` over ``corpus`` (ids assigned), tokenized EXACTLY once
+    into a narrow cached projection, the shape the fused transcripts path
+    pins; its first consumer (the doc_stats write) populates it."""
     keep = [c for c in (doc_map_cols or []) if c != id_col]
     toks = corpus.select(
         F.col(id_col), tokens_col(text_col).alias("_toks"), *keep
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _build(
-            toks, index_dir, id_col, doc_map_cols, k1, b, block_size,
-            salt_threshold, target_salt_postings, n_parts, populated=False,
-            resume=resume, fail_after_parts=fail_after_parts,
-        )
+        return _build(toks, index_dir, id_col, doc_map_cols, populated=False, **build_kw)
     finally:
         toks.unpersist()
 
@@ -466,9 +475,10 @@ def build_index_transcripts(
         pre = pre.withColumn("doc_id", F.col("doc_id") + F.lit(int(id_offset)))
     try:
         return _build(
-            pre, index_dir, "doc_id", doc_map_cols, k1, b, block_size,
-            salt_threshold, target_salt_postings, n_parts, populated=True,
-            id_offset=id_offset, phases=phases,
+            pre, index_dir, "doc_id", doc_map_cols, k1=k1, b=b,
+            block_size=block_size, salt_threshold=salt_threshold,
+            target_salt_postings=target_salt_postings, n_parts=n_parts,
+            populated=True, id_offset=id_offset, phases=phases,
         )
     finally:
         for p in pins:
@@ -480,13 +490,15 @@ def _build(
     index_dir: str,
     id_col: str,
     doc_map_cols: list[str] | None,
+    *,
     k1: float,
     b: float,
     block_size: int,
-    salt_threshold: int,
-    target_salt_postings: int,
     n_parts: int,
     populated: bool,
+    salt_threshold: int = 4096,
+    target_salt_postings: int = 4096,
+    layout: str = "term",
     resume: bool = False,
     fail_after_parts: int | None = None,
     id_offset: int = 0,
@@ -497,9 +509,13 @@ def _build(
     the cache is already materialized, so the doc_stats write may run from
     a background thread beside the vocabulary aggregate; otherwise it runs
     first and populates the cache (two concurrent first consumers would
-    tokenize every partition twice)."""
+    tokenize every partition twice). ``layout="doc"`` builds the
+    doc-partitioned layout (``index.docpart``) with ``n_parts`` doc
+    buckets; the salt plan's arguments are then unused."""
     spark = toks.sparkSession
     phases = [] if phases is None else phases
+    doc = layout == "doc"
+    part_of = {"layout": layout, "n_parts": n_parts}
 
     def _tick(name: str, t0: float) -> None:
         phases.append((name, time.perf_counter() - t0))
@@ -537,14 +553,14 @@ def _build(
 
     # dictionary: term_id (dense, lexicographic) + df/cf + the df salt plan;
     # vocabulary size and max n_salts ride assign_dense_ids' own count
-    # collect (no separate pack-plan job)
+    # collect (no separate pack-plan job). The doc layout subsumes salting:
+    # a term's run in one bucket is capped at bucket_width docs.
     t = time.perf_counter()
-    salted = F.col("df") > salt_threshold
-    vocab = vocabulary(toks).withColumn(
-        "n_salts",
-        F.when(salted, F.ceil(F.col("df") / F.lit(target_salt_postings)).cast("int"))
-        .otherwise(F.lit(1)),
-    )
+    n_salts = F.lit(1) if doc else F.when(
+        F.col("df") > salt_threshold,
+        F.ceil(F.col("df") / F.lit(target_salt_postings)).cast("int"),
+    ).otherwise(F.lit(1))
+    vocab = vocabulary(toks).withColumn("n_salts", n_salts)
     pins: list = []
     n_terms: list = []
     mx: dict = {}
@@ -562,6 +578,23 @@ def _build(
         dct.select("term", "term_id", "df", "cf", "n_salts"), index_dir, "dictionary"
     )))
 
+    # salt from the SHARD-LOCAL rank (doc_id - id_offset): a sharded
+    # build's ids start at its global offset, and salting must span the
+    # shard's own [0, n_docs) range to keep doc-range sub-lists balanced
+    local = F.col("doc_id") - F.lit(int(id_offset))
+    if doc:
+        # the salt IS the doc bucket: encoder groups are (term_id, salt), so
+        # no posting block straddles a bucket even when one shuffle task
+        # holds several buckets
+        bucket_width = max(1, math.ceil(n_docs / n_parts))
+        salt = (local / F.lit(bucket_width)).cast("int")
+        salt_bits = max(1, int(n_parts).bit_length())
+    else:
+        salt = F.least(
+            (local * F.col("n_salts") / F.lit(n_docs)).cast("int"),
+            F.col("n_salts") - 1,
+        ).cast("int")
+        salt_bits = max(1, (int(mx.get("n_salts") or 1) - 1).bit_length())
     enriched = (
         toks.select(
             F.col(id_col).alias("doc_id"),
@@ -569,25 +602,19 @@ def _build(
             F.explode("_toks").alias("term"),
         )
         .join(F.broadcast(dct.select("term", "term_id", "n_salts")), "term")
-        # salt from the SHARD-LOCAL rank (doc_id - id_offset): a sharded
-        # build's ids start at its global offset, and salting must span the
-        # shard's own [0, n_docs) range to keep doc-range sub-lists balanced
-        .withColumn(
-            "salt",
-            F.least(
-                ((F.col("doc_id") - F.lit(int(id_offset))) * F.col("n_salts")
-                 / F.lit(n_docs)).cast("int"),
-                F.col("n_salts") - 1,
-            ).cast("int"),
-        )
+        .withColumn("salt", salt)
     )
     if done:
-        enriched = enriched.filter(part_id_col(n_parts).isin(todo))
-    salt_bits = max(1, (int(mx.get("n_salts") or 1) - 1).bit_length())
+        enriched = enriched.filter(part_id_col(part_of).isin(todo))
     row, bits = exchange_row(enriched, int(n_terms[0]), salt_bits, stats)
     # partition on the (term, salt) prefix: it co-locates each run and
-    # still spreads a hot term's salts over partitions
-    keys = [F.shiftright("tsdd", bits[1] + bits[2])] if bits else ["term_id", "salt"]
+    # still spreads a hot term's salts over partitions; the doc layout
+    # partitions on the salt bits alone, so a task writes whole buckets
+    if bits:
+        prefix = F.shiftright("tsdd", bits[1] + bits[2])
+        keys = [prefix.bitwiseAND((1 << salt_bits) - 1) if doc else prefix]
+    else:
+        keys = ["salt"] if doc else ["term_id", "salt"]
 
     metrics: dict = {}
     if todo:
@@ -610,9 +637,12 @@ def _build(
             row.repartition(sized_shuffle_n(row, n_docs * avgdl), *keys)
             .sortWithinPartitions(*(["tsdd"] if bits else ["term_id", "salt", "doc_id"]))
             .mapInPandas(_encode_occ_map_fn(block_size, bits), schema=POSTINGS_SCHEMA)
-            .withColumn("part_id", part_id_col(n_parts))
+            .withColumn("part_id", part_id_col(part_of))
             .observe(obs, *per_part)
         )
+        if doc:
+            # bucket files sorted by term_id: term lookups prune row groups
+            blocks = blocks.sortWithinPartitions("term_id", "block_id")
         writer = blocks.write.mode("overwrite").partitionBy("part_id")
         if done:
             writer = writer.option("partitionOverwriteMode", "dynamic")
@@ -657,9 +687,9 @@ def _build(
     if fail:
         raise RuntimeError(f"injected failure after {len(rows)} part commits")
     seg = (FORMAT_VERSION, n_docs, avgdl, float(k1), float(b), int(block_size),
-           TOKEN_PATTERN, int(n_parts))
-    write_local(arrow_rows([seg], SEGMENTS_SCHEMA), index_dir, "segments",
-                mode="overwrite")
+           TOKEN_PATTERN, int(n_parts), *(("doc", bucket_width) if doc else ()))
+    schema = SEGMENTS_SCHEMA + (", layout string, bucket_width long" if doc else "")
+    write_local(arrow_rows([seg], schema), index_dir, "segments", mode="overwrite")
     _tick("meta_writes", t)
     postings_emitted, bytes_compressed = lineage_totals(index_dir)
     return {

@@ -96,7 +96,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.analysis import tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import _encode_map_fn, encode_partition_pdf, packed_bytes_col, part_id_col
+from .build import _encode_map_fn, encode_partition_pdf, packed_bytes_col
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
@@ -106,6 +106,7 @@ from .storage import (
     footer_max,
     hash_part_id,
     local_relation,
+    part_id_col,
     read_dictionary,
     read_segments,
     read_table,
@@ -391,7 +392,7 @@ def _extend_in_spark(
                 "term",
             )
             .withColumn("salt", (F.col("n_salts") - 1).cast("int"))
-            .withColumn("part_id", part_id_col(n_parts))
+            .withColumn("part_id", part_id_col({"n_parts": n_parts}))
             .select("part_id", "term_id", "salt", "doc_id", "tf", "dl")
         )
         # one occurrence row per (doc, term): Σ df_new of them
@@ -453,8 +454,8 @@ def extend_index(
     if seg.get("layout") == "doc":
         raise NotImplementedError(
             "extend_index does not support the doc-partitioned layout yet "
-            "(delta docs would need bucket-aligned part_ids, not the "
-            "(term_id, salt) hash); rebuild via build_doc_partitioned"
+            "(delta ids past the last bucket have no bucket); rebuild via "
+            "build_doc_partitioned"
         )
     n_old = int(seg["n_docs"])
     n_parts = int(seg["n_parts"])

@@ -30,7 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import _encode_map_fn, packed_bytes_col, part_id_col
+from .build import _encode_map_fn, packed_bytes_col
 from .query import decode_postings
 from .storage import (
     LINEAGE_SCHEMA,
@@ -38,6 +38,7 @@ from .storage import (
     arrow_rows,
     lineage_totals,
     local_relation,
+    part_id_col,
     read_segments,
     read_table,
     shuffle_n,
@@ -72,19 +73,15 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
 
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
-    """Rewrite the index without tombstoned docs (B8 analog). Idempotent;
-    no-op when there are no tombstones."""
+    """Rewrite the index without tombstoned docs (B8 analog), on either
+    layout: the blocks are re-encoded per (term_id, salt) and written to
+    the layout's part (``storage.part_id_col``), so a doc-partitioned
+    index keeps every block inside its bucket. Idempotent; no-op when
+    there are no tombstones."""
     dead = tombstone_ids(spark, index_dir)
     if not dead:
         return {"docs_removed": 0}
     seg = read_segments(spark, index_dir)
-    if seg.get("layout") == "doc":
-        raise NotImplementedError(
-            "compact_index does not support the doc-partitioned layout yet "
-            "(its part_id is the doc bucket, not a (term_id, salt) hash); "
-            "rebuild via build_doc_partitioned over the live corpus"
-        )
-    n_parts = int(seg["n_parts"])
     block_size = int(seg["block_size"])
     dead_df = F.broadcast(
         local_relation(spark, [(int(d),) for d in sorted(dead)], "doc_id long")
@@ -96,7 +93,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     live = decode_postings(
         spark, index_dir, extra_cols=["salt"]
     ).join(dead_df, "doc_id", "left_anti")
-    enriched = live.withColumn("part_id", part_id_col(n_parts)).select(
+    enriched = live.withColumn("part_id", part_id_col(seg)).select(
         "part_id", "term_id", "salt", "doc_id", "tf", "dl"
     )
     obs = Observation("compact_metrics")

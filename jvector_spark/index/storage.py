@@ -35,7 +35,8 @@ bucket of (term_id, salt)) so query-time term lookups prune directories —
 the analog of jvector only seeking the adjacency regions the search
 touches. On a doc-partitioned index (``index.docpart``) ``part_id`` is a
 doc-range bucket instead, and a term's blocks lie in every bucket;
-:func:`postings_parts` is the one place a read tells the two apart.
+:func:`postings_parts` is the one place a read tells the two apart, and
+:func:`part_id_col` the one place a write does.
 
 Driver-sized tables go through Arrow on the driver; Spark jobs are only for
 corpus-sized tables. The segments row, the tombstone set and the lineage
@@ -380,6 +381,17 @@ def postings_parts(seg: dict, terms) -> list[int]:
     if seg.get("layout") == "doc":
         return list(range(int(seg["n_parts"])))
     return term_parts(terms, seg["n_parts"])
+
+
+def part_id_col(seg: dict) -> Column:
+    """The ``postings/`` part of a (term_id, salt) row on the index with
+    segments row ``seg``, every write's one layout decision (the twin of
+    :func:`postings_parts`): the salt, which is the doc bucket, on a
+    doc-partitioned index, else ``pmod(xxhash64(term_id, salt), n_parts)``
+    (:func:`hash_part_id`)."""
+    if seg.get("layout") == "doc":
+        return F.col("salt")
+    return F.pmod(F.xxhash64("term_id", "salt"), F.lit(int(seg["n_parts"]))).cast("int")
 
 
 def ids_in(id_col: str, ids: list[int]) -> Column:

@@ -148,12 +148,12 @@ def nvq_reconstruct_batch(
 
 def nvq_scores(codes: pd.DataFrame, Q: np.ndarray, params) -> np.ndarray:
     """Cosine of each query against the DEQUANTIZED codes, one reconstruct
-    + GEMV per query per Arrow batch (NVQScorer.java's
-    score-off-the-codes contract; raw vectors are never read). ``params``
-    is the bit width."""
+    per Arrow batch + one row-wise ``einsum`` per query, so a row's score
+    does not depend on its batch (NVQScorer.java's score-off-the-codes
+    contract; raw vectors are never read). ``params`` is the bit width."""
     X = nvq_reconstruct_batch(codes, Q.shape[1], params)
     norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
-    return per_query(Q, lambda q: (X @ unit(q)) / norms)
+    return per_query(Q, lambda q: np.einsum("ij,j->i", X, unit(q)) / norms)
 
 
 def _check_bits(bits: int) -> int:

@@ -1106,12 +1106,13 @@ def sq8_train(
 
 def sq8_scores(codes: pd.DataFrame, Q: np.ndarray, params) -> np.ndarray:
     """Dequantized cosine: x = code·scale + mn per dimension, then
-    (x · q̂) / |x| — one GEMV per query over the whole Arrow batch (the
-    bulk-ADC shape of Q14). Reads 1 byte/dim instead of 4."""
+    (x · q̂) / |x| — one row-wise ``einsum`` per query over the Arrow batch
+    (bulk ADC, Q14; batch-independent bits, as :func:`cosine_kernel`).
+    Reads 1 byte/dim instead of 4."""
     mn, scale = params
     X = code_matrix(codes, len(mn)).astype(np.float64) * scale + mn
     norms = np.maximum(np.linalg.norm(X, axis=1), 1e-12)
-    return per_query(Q, lambda q: (X @ unit(q)) / norms)
+    return per_query(Q, lambda q: np.einsum("ij,j->i", X, unit(q)) / norms)
 
 
 def _sq8_encode(X: np.ndarray, params) -> dict:

@@ -31,13 +31,13 @@ def tp_index(tmp_path_factory, corpus):
     return d
 
 
-def test_buckets_partition_doc_space(spark, corpus, dp_index):
+def _assert_buckets_partition_doc_space(spark, d):
     from jvector_spark.index.storage import read_segments, read_table
 
-    seg = read_segments(spark, dp_index)
+    seg = read_segments(spark, d)
     assert seg["layout"] == "doc"
     w = int(seg["bucket_width"])
-    p = read_table(spark, dp_index, "postings")
+    p = read_table(spark, d, "postings")
     bad = p.filter(
         (F.col("base") < F.col("part_id") * w)
         | (F.col("max_doc_id") >= (F.col("part_id") + 1) * w)
@@ -46,17 +46,25 @@ def test_buckets_partition_doc_space(spark, corpus, dp_index):
     assert p.select("part_id").distinct().count() > 1
 
 
-def test_docpart_topk_equals_bruteforce_and_termpart(
-    spark, corpus, dp_index, tp_index, query_set
-):
-    from jvector_spark.index.docpart import bm25_topk_docpart
-    from jvector_spark.index.query import bm25_topk_indexed
-    from jvector_spark.operators.topk import bm25_topk_bruteforce, queries_df
+def test_buckets_partition_doc_space(spark, corpus, dp_index):
+    _assert_buckets_partition_doc_space(spark, dp_index)
 
-    qdf = queries_df(
+
+def _queries(spark, query_set):
+    from jvector_spark.operators.topk import queries_df
+
+    return queries_df(
         spark,
         list(zip(query_set["query_id"][:15], [list(t) for t in query_set["terms"][:15]])),
     )
+
+
+def _assert_topk_equals_bruteforce(spark, corpus, d, qdf) -> list:
+    """Pruned and unpruned top-10 over the index at ``d`` equal the
+    brute-force oracle's over ``corpus``; returns the oracle's rows."""
+    from jvector_spark.index.docpart import bm25_topk_docpart
+    from jvector_spark.operators.topk import bm25_topk_bruteforce
+
     want = sorted(
         (r.query_id, r.rank, r.doc_id, round(r.score, 9))
         for r in bm25_topk_bruteforce(corpus, qdf, k=10).collect()
@@ -64,10 +72,19 @@ def test_docpart_topk_equals_bruteforce_and_termpart(
     for prune in (True, False):
         got = sorted(
             (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-            for r in bm25_topk_docpart(spark, dp_index, qdf, k=10, prune=prune).collect()
+            for r in bm25_topk_docpart(spark, d, qdf, k=10, prune=prune).collect()
         )
         assert got == want, f"prune={prune}"
+    return want
 
+
+def test_docpart_topk_equals_bruteforce_and_termpart(
+    spark, corpus, dp_index, tp_index, query_set
+):
+    from jvector_spark.index.query import bm25_topk_indexed
+
+    qdf = _queries(spark, query_set)
+    want = _assert_topk_equals_bruteforce(spark, corpus, dp_index, qdf)
     tp_rows = sorted(
         (r.query_id, r.rank, r.doc_id, round(r.score, 9))
         for r in bm25_topk_indexed(spark, tp_index, qdf, k=10).collect()
@@ -157,6 +174,32 @@ def test_docpart_decode_parity(spark, corpus, dp_index):
     assert (got["n"], got["s"]) == (want["n"], want["s"])
 
 
+def test_compaction_keeps_buckets_and_answers(
+    spark, corpus, dp_index, query_set, tmp_path
+):
+    """Compaction rewrites a doc-partitioned index through the layout's
+    part rule: with every 7th doc deleted, the compacted index verifies,
+    no block straddles a bucket, and pruned and unpruned reads equal the
+    brute-force oracle over the live docs."""
+    import shutil
+
+    from jvector_spark.index.maintenance import compact_index, delete_docs, verify_index
+    from jvector_spark.index.storage import read_segments
+
+    d = str(tmp_path / "dp")
+    shutil.copytree(dp_index, d)
+    dead = list(range(0, corpus.count(), 7))
+    delete_docs(spark, d, dead)
+    m = compact_index(spark, d)
+    assert m["docs_removed"] == len(dead)
+    assert verify_index(spark, d)["ok"]
+    seg = read_segments(spark, d)
+    assert (seg["n_docs"], seg["n_parts"]) == (corpus.count() - len(dead), 8)
+    _assert_buckets_partition_doc_space(spark, d)
+    live = corpus.filter(F.col("doc_id") % 7 != 0)
+    _assert_topk_equals_bruteforce(spark, live, d, _queries(spark, query_set))
+
+
 def test_docpart_rejects_wrong_layout(spark, corpus, tmp_path):
     from jvector_spark.index.build import build_index
     from jvector_spark.index.docpart import bm25_topk_docpart
@@ -174,3 +217,19 @@ def test_empty_and_unknown_queries(spark, dp_index):
 
     q = queries_df(spark, [(0, ["zzznope"]), (1, [])])
     assert bm25_topk_docpart(spark, dp_index, q, k=5).count() == 0
+
+
+def test_cli_rejects_resume_for_doc_layout(monkeypatch, capsys):
+    """A doc-layout build has no resume, so the CLI refuses ``--resume``
+    with ``--layout doc`` before any Spark session starts, where it once
+    ran a full rebuild."""
+    import jvector_spark.session as S
+    from jvector_spark.__main__ import main
+
+    monkeypatch.setattr(
+        S, "get_spark", lambda *a, **k: pytest.fail("a Spark session started")
+    )
+    with pytest.raises(SystemExit) as e:
+        main(["build", "--source", "src", "--index", "idx", "--layout", "doc", "--resume"])
+    assert e.value.code == 2
+    assert "--resume" in capsys.readouterr().err

@@ -25,12 +25,15 @@ def golden_case():
         return json.load(f)
 
 
-def test_golden_index_loads_and_answers(spark, golden_case):
+@pytest.mark.parametrize("name", ["v2_index", "doc_index"])
+def test_golden_index_loads_and_answers(spark, golden_case, name):
+    """Both committed layouts of the one corpus answer with the same rows
+    and scores."""
     from jvector_spark.index.query import bm25_topk_indexed
     from jvector_spark.index.storage import read_segments
     from jvector_spark.operators.topk import queries_df
 
-    idx = os.path.join(GOLDEN, "v2_index")
+    idx = os.path.join(GOLDEN, name)
     seg = read_segments(spark, idx)
     assert seg["format_version"] == 2
     qdf = queries_df(spark, [(q, terms) for q, terms in golden_case["queries"]])
@@ -48,27 +51,27 @@ def test_golden_index_loads_and_answers(spark, golden_case):
     assert got == golden_case["expected"]
 
 
-def test_build_reproduces_golden_index(spark, tmp_path):
+@pytest.mark.parametrize("name", ["v2_index", "doc_index"])
+def test_build_reproduces_golden_index(spark, tmp_path, name):
     """A fresh build with ``tools/make_golden.py``'s arguments writes the
     committed index's rows: segments, dictionary, postings, doc_stats and
-    doc_map equal, and one complete lineage row per part with the same
-    postings and bytes. The lineage's ``docs_indexed`` is the build's
-    document count on every part row, so it is left out."""
+    doc_map equal, and complete lineage rows with the same postings and
+    bytes. The lineage's ``docs_indexed`` is the build's document count on
+    every part row, so it is left out. The term layout's lineage rows
+    (one per part) are compared whole; the doc layout's by their sums,
+    since its golden predates one lineage row per bucket."""
     from jvector_spark.fixtures import make_transcripts_pdf
-    from jvector_spark.index.build import build_index
     from jvector_spark.operators.doc_ids import assign_dense_ids
     from tools.diff_index import diff_dirs, read_rows
+    from tools.make_golden import BUILDERS
 
     corpus = assign_dense_ids(
         spark.createDataFrame(make_transcripts_pdf(n_turns=300, seed=123)),
         ["conv_id", "turn_idx"], "doc_id",
     )
-    d = str(tmp_path / "v2_index")
-    build_index(
-        corpus, d, doc_map_cols=["conv_id", "turn_idx"],
-        salt_threshold=32, target_salt_postings=32, n_parts=2,
-    )
-    golden = os.path.join(GOLDEN, "v2_index")
+    d = str(tmp_path / name)
+    BUILDERS[name](corpus, d)
+    golden = os.path.join(GOLDEN, name)
     same = diff_dirs(d, golden)
     tables = ("segments", "dictionary", "postings", "doc_stats", "doc_map")
     assert all(same[t] for t in tables), same
@@ -78,9 +81,16 @@ def test_build_reproduces_golden_index(spark, tmp_path):
         rows = read_rows(os.path.join(idx, "build_lineage")).select(cols)
         return sorted(tuple(r.values()) for r in rows.to_pylist())
 
-    assert lineage(d) == lineage(golden)
-    assert [r[0] for r in lineage(d)] == [0, 1]
-    assert {r[3] for r in lineage(d)} == {"complete"}
+    got, want = lineage(d), lineage(golden)
+    assert {r[3] for r in got} == {"complete"}
+    if name == "v2_index":
+        assert got == want
+        assert [r[0] for r in got] == [0, 1]
+    else:
+        assert [r[0] for r in got] == [0, 1, 2, 3]
+        assert [sum(r[i] for r in got) for i in (1, 2)] == [
+            sum(r[i] for r in want) for i in (1, 2)
+        ]
 
 
 def test_golden_positions_feature_still_decodes(spark, golden_case):

@@ -164,6 +164,32 @@ def test_nvq_scores_match_python_oracle():
         assert not S[6].any() and not S[:, 2].any()
 
 
+@pytest.mark.parametrize("tier", ["sq8", "nvq"])
+def test_dequantized_scores_do_not_depend_on_the_batch(tier):
+    """A row's SQ8 or NVQ score has the same bits in any row subset of the
+    codes: the Spark scan cuts a tier's codes into Arrow batches at any
+    row. (A BLAS matrix-vector product gave a row different bits in most
+    subsets of this 5000 × 64 matrix.)"""
+    from jvector_spark.operators.nvq import NVQ, nvq_scores
+    from jvector_spark.operators.similarity import SQ8, sq8_scores
+
+    rng = np.random.default_rng(26)
+    X = rng.standard_normal((5000, 64))
+    if tier == "sq8":
+        mn = X.min(axis=0)
+        kernel, params = sq8_scores, (mn, (X.max(axis=0) - mn) / 255.0)
+        codes = pd.DataFrame(SQ8.encode(X, params))
+    else:
+        kernel, params = nvq_scores, 8
+        codes = pd.DataFrame(NVQ.encode(X, params))
+    Q = rng.standard_normal((2, 64))
+    S = kernel(codes, Q, params)
+    for size in (1, 3, 64, 999, 2500):
+        idx = np.sort(rng.choice(len(X), size=size, replace=False))
+        sub = codes.iloc[idx].reset_index(drop=True)
+        assert np.array_equal(kernel(sub, Q, params), S[idx]), size
+
+
 # ---------------------------------------------------------------------------
 # persisted tiers against Spark reads
 # ---------------------------------------------------------------------------

@@ -5,12 +5,20 @@ the same rows may be split across files differently. So each table is read
 whole with pyarrow (hive ``key=value`` directories become columns), sorted
 on every column, and compared row for row. No Spark session is started.
 
+Each equal table is also compared in file order: whether every partition
+directory holds the same row sequences file by file (file names ignored,
+since they carry a write's id). Readers that stop at the first rows of a
+file, or prune row groups by a sort key, see the difference.
+
 Usage: python tools/diff_index.py INDEX_A INDEX_B
 
-or, from Python, ``diff_dirs(INDEX_A, INDEX_B)`` for {table: equal}.
+or, from Python, ``diff_dirs(INDEX_A, INDEX_B)`` for {table: equal} and
+``same_file_order(INDEX_A, INDEX_B)`` for {table: same file order}.
 
 The command prints one line per table and exits 1 when any table differs
-or exists on one side only, 0 when every table holds the same rows.
+or exists on one side only, 0 when every table holds the same rows; a
+file order difference alone is reported but does not change the exit
+code.
 """
 
 from __future__ import annotations
@@ -56,6 +64,32 @@ def read_rows(table_dir: str) -> pa.Table | None:
     return pa.concat_tables(parts, promote_options="permissive")
 
 
+def file_sequences(table_dir: str) -> dict[str, list]:
+    """{partition directory: sorted list of its files' row sequences},
+    each a tuple of rows over the file's columns in name order."""
+    out: dict[str, list] = {}
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not _skipped(d))
+        seqs = []
+        for f in files:
+            if _skipped(f):
+                continue
+            t = pq.read_table(os.path.join(root, f))
+            t = t.select(sorted(t.column_names))
+            seqs.append(tuple(zip(*(c.to_pylist() for c in t.columns))))
+        if seqs:
+            out[os.path.relpath(root, table_dir)] = sorted(seqs)
+    return out
+
+
+def _order_note(dir_a: str, dir_b: str) -> tuple[str, bool]:
+    fa, fb = file_sequences(dir_a), file_sequences(dir_b)
+    bad = sorted(k for k in fa.keys() | fb.keys() if fa.get(k) != fb.get(k))
+    if not bad:
+        return "same file order", True
+    return f"file order differs in {', '.join(bad)}", False
+
+
 def _sorted(t: pa.Table, names: list[str]) -> pa.Table:
     t = t.select(names)
     return t.sort_by([(n, "ascending") for n in names])
@@ -93,25 +127,41 @@ def tables(index_dir: str) -> set[str]:
     }
 
 
-def _table_diffs(dir_a: str, dir_b: str):
-    """(table, report line, equal) for every table of either directory."""
+def _table_diffs(dir_a: str, dir_b: str, order: bool = False):
+    """(table, report line, equal, same file order) for every table of
+    either directory; file order is compared only when ``order`` is set
+    and the rows are equal (else it is False)."""
     for name in sorted(tables(dir_a) | tables(dir_b)):
         pa_, pb = os.path.join(dir_a, name), os.path.join(dir_b, name)
         if not (os.path.isdir(pa_) and os.path.isdir(pb)):
-            yield name, f"{name}: only in {dir_a if os.path.isdir(pa_) else dir_b}", False
+            where = dir_a if os.path.isdir(pa_) else dir_b
+            yield name, f"{name}: only in {where}", False, False
             continue
         a, b = read_rows(pa_), read_rows(pb)
         why = compare(a, b)
-        if why is None:
-            yield name, f"{name}: equal ({0 if a is None else a.num_rows} rows)", True
-        else:
-            yield name, f"{name}: DIFFERENT: {why}", False
+        if why is not None:
+            yield name, f"{name}: DIFFERENT: {why}", False, False
+            continue
+        line = f"{name}: equal ({0 if a is None else a.num_rows} rows)"
+        same = False
+        if order:
+            note, same = _order_note(pa_, pb)
+            line += f", {note}"
+        yield name, line, True, same
 
 
 def diff_dirs(dir_a: str, dir_b: str) -> dict[str, bool]:
     """{table: whether both index directories hold its same rows}, for
     every table of either directory."""
-    return {name: equal for name, _, equal in _table_diffs(dir_a, dir_b)}
+    return {name: equal for name, _, equal, _ in _table_diffs(dir_a, dir_b)}
+
+
+def same_file_order(dir_a: str, dir_b: str) -> dict[str, bool]:
+    """{table: whether both index directories hold its same rows in the
+    same per-file sequences in every partition directory}."""
+    return {
+        name: same for name, _, _, same in _table_diffs(dir_a, dir_b, order=True)
+    }
 
 
 def main(argv: list[str]) -> int:
@@ -119,7 +169,7 @@ def main(argv: list[str]) -> int:
         print("usage: python tools/diff_index.py INDEX_A INDEX_B", file=sys.stderr)
         return 2
     bad = 0
-    for _, line, equal in _table_diffs(*argv):
+    for _, line, equal, _ in _table_diffs(*argv, order=True):
         print(line)
         bad += not equal
     print("all tables equal" if not bad else f"{bad} table(s) differ")
