@@ -298,9 +298,9 @@ def _encode_map_fn(block_size: int):
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Concatenate the partition's Arrow batches: groups are confined to
-        # one partition by the repartition(term_id, salt) upstream, but may
-        # span batches within it. Memory = one shuffle partition (sized via
-        # spark.sql.shuffle.partitions).
+        # one partition by the repartition upstream (on part_id, or on
+        # term_id and salt), but may span batches within it. Memory = one
+        # shuffle partition (sized via spark.sql.shuffle.partitions).
         batches = [p for p in it]
         if not batches:
             yield _empty_postings_pdf(carry_part_id=True)

@@ -88,8 +88,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     )
 
     # decode → drop dead docs → re-encode (streams through the same
-    # vectorized encoder as the build; doc order within (term, salt) is
-    # preserved so blocks stay sorted and doc-range-disjoint)
+    # vectorized encoder as the build, which sorts each task's rows by
+    # (term, salt, doc), so blocks stay sorted and doc-range-disjoint).
+    # The exchange hashes part_id alone: each part is encoded and written
+    # by one task, as one file, its blocks in (term, salt, block) order
     live = decode_postings(
         spark, index_dir, extra_cols=["salt"]
     ).join(dead_df, "doc_id", "left_anti")
@@ -98,7 +100,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     )
     obs = Observation("compact_metrics")
     blocks = (
-        enriched.repartition(shuffle_n(enriched), "part_id", "term_id", "salt")
+        enriched.repartition(shuffle_n(enriched), "part_id")
         .mapInPandas(
             _encode_map_fn(block_size),
             schema="part_id int, " + POSTINGS_SCHEMA,
@@ -108,6 +110,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
             F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
         )
+        .sortWithinPartitions("part_id", "term_id", "salt", "block_id")
     )
     tmp = table_path(index_dir, "postings__compact")
     blocks.write.mode("overwrite").partitionBy("part_id").parquet(tmp)

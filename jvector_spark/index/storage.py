@@ -455,10 +455,11 @@ def read_required(index_dir: str, name: str) -> pa.Table:
     return tbl
 
 
-def read_files(files: list[str], columns: list[str], filter=None) -> pa.Table:
-    """``columns`` of the rows of Parquet ``files`` that pass the pyarrow
-    ``filter`` expression, read on the driver (no Spark job). Files may
-    hold their columns in different orders; they are matched by name."""
+def read_files(files: list[str], columns: list[str] | None, filter=None) -> pa.Table:
+    """``columns`` (None: all) of the rows of Parquet ``files`` that pass
+    the pyarrow ``filter`` expression, read on the driver (no Spark job).
+    Files may hold their columns in different orders; they are matched by
+    name."""
     return ds.dataset(files, format="parquet").to_table(
         columns=columns, filter=filter
     )

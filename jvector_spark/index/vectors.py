@@ -34,8 +34,14 @@ rule): the manifest, params, codebooks and tombstones are read with
 pyarrow and run no Spark job, and ``codes/`` is opened with the schema in
 its own footer, so no schema-inference job is planned either. A build or
 extend counts its rows on the codes write itself. A query runs the shared
-two-phase path (``operators.similarity.ann_topk_tier``): two Spark jobs,
-the codes scan and the fetch of the candidates' vectors.
+two-phase path (``operators.similarity.ann_topk_tier``), and one sizing
+rule on the bytes of the ``codes/`` data files (:data:`DRIVER_MAX_CODE_BYTES`)
+picks where its first pass runs: under it, pyarrow reads the codes with
+the tombstones masked at the read and the per-batch top-k body runs on the
+driver, so the one Spark job is the fetch of the candidates' raw vectors;
+above it, the same body runs in a ``mapInPandas`` over the codes scan, a
+second job. ``ann_topk_pq_nvq_indexed`` reads both of its structures
+through the same rule and, under it, runs no Spark job.
 """
 
 from __future__ import annotations
@@ -62,6 +68,7 @@ from ..operators.similarity import (
     topk_relation,
 )
 from .storage import (
+    _data_files,
     arrow_rows,
     local_relation,
     local_schema,
@@ -73,6 +80,24 @@ from .storage import (
 
 FORMAT_VERSION = 1
 TIERS = {t.kind: t for t in (SQ8, PQ, BQ, NVQ)}
+
+# The sizing rule of a tier read: its first pass runs on the driver when
+# the ``codes/`` data files total under this many bytes, otherwise in
+# Spark. Measured on local[4] (4 cores), ``topk_pass`` of one query at the
+# default depth with 5% of the rows tombstoned, over a structure built from
+# n clustered 64-dim vectors (2 codes files); median of 5 interleaved
+# driver/Spark pairs, ms:
+#   n       SQ8 MB drv/spk   PQ MB drv/spk   BQ MB drv/spk   NVQ MB drv/spk
+#    25k    1.6   61/500     0.25  24/499    0.19  25/435    2.0    87/460
+#   100k    6.3  221/551     0.96  85/418    0.69  85/377    8.0   441/591
+#   400k   25.1  867/923     3.8  357/605    2.7  306/567   31.9 1688/1543
+# The driver costs ~35 (SQ8), ~45-55 (NVQ), ~90 (PQ) and ~115-130 (BQ)
+# ms per MB of codes, a per-row cost that a tier with fewer bytes per row
+# pays on more rows; the Spark path is ~0.4-0.6 s fixed at these sizes.
+# So the crossover is near 5 MB for BQ and PQ and above 8 MB for SQ8 and
+# NVQ; 4 MB keeps every tier on the winning side, and also bounds what one
+# read pulls into the driver process.
+DRIVER_MAX_CODE_BYTES = 1 << 22
 
 
 # ---------------------------------------------------------------------------
@@ -114,6 +139,16 @@ def read_codes(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.schema(local_schema(index_dir, "codes")).parquet(
         os.path.join(index_dir, "codes")
     )
+
+
+def _codes(spark: SparkSession, index_dir: str) -> DataFrame | list[str]:
+    """What a query's passes read the codes from: their data files (read
+    with pyarrow on the driver, appended extend files included) when they
+    total under :data:`DRIVER_MAX_CODE_BYTES`, else the Spark scan."""
+    files = _data_files(index_dir, "codes")
+    if files and sum(os.path.getsize(f) for f in files) < DRIVER_MAX_CODE_BYTES:
+        return files
+    return read_codes(spark, index_dir)
 
 
 def _dead(spark: SparkSession, index_dir: str) -> list[int]:
@@ -213,11 +248,13 @@ def serve(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-phase top-k against the persisted structure, tombstones masked
-    off the codes scan (M1). Runs eagerly — two Spark jobs — and returns
-    (rank, id, cos) as a local relation."""
-    params, codes = load(tier, spark, index_dir)
+    off the codes read (M1). Runs eagerly and returns (rank, id, cos) as a
+    local relation: one Spark job, the fetch of the candidates' raw
+    vectors, when the codes are under :data:`DRIVER_MAX_CODE_BYTES` (the
+    first pass runs on the driver), else two (the codes scan in Spark)."""
+    params = tier.read_params(index_dir, read_manifest(spark, index_dir))
     return ann_topk_tier(
-        tier, embeddings, query_vec, k, rerank, codes, params,
+        tier, embeddings, query_vec, k, rerank, _codes(spark, index_dir), params,
         _dead(spark, index_dir), id_col, vec_col,
     )
 
@@ -495,12 +532,16 @@ def ann_topk_pq_nvq_indexed(
     path with NVQ's kernel as the second-phase scorer; scores are
     quantized-precision cosines, so recall vs the exact scan is a pytest
     floor, not a hash contract — the operator exists for the scan-byte
-    budget (m B + ~dim B per vector vs 4·dim B raw)."""
-    books, pq_codes = pq_load(spark, pq_dir)
-    bits, nvq_codes = nvq_load(spark, nvq_dir)
+    budget (m B + ~dim B per vector vs 4·dim B raw). Each structure is
+    read through :func:`serve`'s sizing rule: when both are under
+    :data:`DRIVER_MAX_CODE_BYTES`, the PQ pass and the NVQ fetch of the
+    candidates' rows are pyarrow reads and no Spark job runs."""
+    books = pq_read_codebooks(spark, pq_dir)
+    bits = NVQ.read_params(nvq_dir, read_manifest(spark, nvq_dir))
     Q = np.asarray([query_vec], dtype=np.float64)
     depth = PQ.rerank(k) if rerank is None else int(rerank)
-    cands = topk_pass(pq_codes, partial(PQ.score, params=books), Q, depth,
+    cands = topk_pass(_codes(spark, pq_dir), partial(PQ.score, params=books), Q, depth,
                       _dead(spark, pq_dir), id_col)
-    hits = rerank_pass(nvq_codes, partial(NVQ.score, params=bits), Q, cands, k, id_col)
+    hits = rerank_pass(_codes(spark, nvq_dir), partial(NVQ.score, params=bits), Q,
+                       cands, k, id_col)
     return topk_relation(spark, hits, id_col)

@@ -30,6 +30,8 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +39,7 @@ from ..index.storage import (
     arrow_rows,
     ids_in,
     local_relation,
+    read_files,
     read_required,
     tombstone_ids,
     write_local,
@@ -798,17 +801,26 @@ def ivf_topk_indexed(
 # Reference analog: an ``ApproximateScoreFunction`` feeds a ``Reranker``
 # (ScoreFunction.java:69-79, GraphSearcher.java:451-487). Here a tier is
 # the record below; a single query is a batch of one, and every call runs
-# the same two passes:
+# the same two passes over the codes, which are either a Spark scan or,
+# for a persisted structure under ``index.vectors``' sizing rule
+# (``DRIVER_MAX_CODE_BYTES``), the data files pyarrow reads on the driver:
 #
-# 1. ``topk_pass``: one ``mapInPandas`` over the codes (tombstones masked
-#    off by the ``NOT IN`` filter first) scores each Arrow batch with the
-#    tier's kernel and yields each query's top ``rerank`` rows of the batch
-#    by (approx desc, id asc); the driver merges them per query.
-# 2. ``rerank_pass``: one JVM-only ``IN`` fetch of the candidates' vectors,
-#    scored on the driver by the exact kernel (:func:`cosine_kernel`); the
-#    top k return as a local relation.
+# 1. ``topk_pass``: tombstones are masked off the codes first (a ``NOT IN``
+#    filter on the scan, its ``is_in`` twin on the pyarrow read), then
+#    :func:`topk_rows` scores each Arrow batch with the tier's kernel and
+#    keeps each query's top ``rerank`` rows of the batch by (approx desc,
+#    id asc); the driver merges them per query. On a Spark scan
+#    :func:`topk_rows` runs inside one ``mapInPandas`` (one Spark job and
+#    one Python-worker crossing); on a driver read it runs on the driver.
+# 2. ``rerank_pass``: the candidates' rows come back through an ``IN``
+#    filter (a JVM-only Spark fetch, or the pyarrow read of driver-sized
+#    codes), are scored on the driver (the exact kernel,
+#    :func:`cosine_kernel`, or a codes kernel), and the top k return as a
+#    local relation.
 #
-# Two Spark jobs for any number of queries, and one Python-worker crossing.
+# A persisted tier under the rule therefore serves any number of queries
+# in one Spark job (the fetch of the raw vectors) and no Python-worker
+# crossing; above it, or over an unpersisted codes scan, in two.
 
 
 @dataclass(frozen=True)
@@ -928,6 +940,36 @@ def deleted_ids(deleted: DataFrame | None, id_col: str) -> list[int]:
     return sorted({r[0] for r in deleted.select(id_col).collect()})
 
 
+def topk_rows(
+    pdf: pd.DataFrame,
+    score: Callable,
+    Q: np.ndarray,
+    depth: int,
+    id_col: str = "vec_id",
+) -> pd.DataFrame:
+    """(_q, id, _s) of one batch of code rows: ``score(pdf, Q)``, then per
+    query its ``depth`` best rows by (score desc, id asc). Any row of a
+    query's global top ``depth`` is in its batch's top ``depth``, so a
+    merge of the batches' rows is exact. The one per-batch body of the
+    first pass, in a Spark task (:func:`topk_frame`) or on the driver
+    (:func:`topk_pass` over a driver-sized read); an empty batch yields
+    an empty frame without reaching the kernel."""
+    if len(pdf) == 0:
+        return pd.DataFrame({
+            "_q": np.array([], dtype=np.int32),
+            id_col: np.array([], dtype=np.int64),
+            "_s": np.array([], dtype=np.float64),
+        })
+    ids = pdf[id_col].to_numpy()
+    S = score(pdf, Q)
+    tops = [np.lexsort((ids, -S[:, j]))[: int(depth)] for j in range(len(Q))]
+    return pd.DataFrame({
+        "_q": np.repeat(np.arange(len(Q), dtype=np.int32), [len(t) for t in tops]),
+        id_col: np.concatenate([ids[t] for t in tops]),
+        "_s": np.concatenate([S[t, j] for j, t in enumerate(tops)]),
+    })
+
+
 def topk_frame(
     frame: DataFrame,
     score: Callable,
@@ -936,44 +978,51 @@ def topk_frame(
     dead=(),
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(_q, id, _s): the first pass as a frame. ``dead`` ids are masked off
-    the scan with the ``NOT IN`` filter, so tombstones neither surface nor
-    consume depth; then each Arrow batch is scored with ``score(batch, Q)``
-    and yields, per query, its ``depth`` best rows by (score desc, id asc).
-    Any row of a query's global top ``depth`` is in its batch's top
-    ``depth``, so the output is ≤ batches × nq × depth rows."""
+    """(_q, id, _s): the first pass as a Spark frame. ``dead`` ids are
+    masked off the scan with the ``NOT IN`` filter, so tombstones neither
+    surface nor consume depth; then :func:`topk_rows` runs on each Arrow
+    batch in one ``mapInPandas``, so the output is ≤ batches × nq × depth
+    rows."""
     if dead:
         frame = frame.filter(~ids_in(id_col, list(dead)))
-    depth = int(depth)
 
     def fn(it):
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            S = score(pdf, Q)
-            tops = [np.lexsort((ids, -S[:, j]))[:depth] for j in range(len(Q))]
-            yield pd.DataFrame({
-                "_q": np.repeat(np.arange(len(Q), dtype=np.int32), [len(t) for t in tops]),
-                id_col: np.concatenate([ids[t] for t in tops]),
-                "_s": np.concatenate([S[t, j] for j, t in enumerate(tops)]),
-            })
+            yield topk_rows(pdf, score, Q, depth, id_col)
 
     return frame.mapInPandas(fn, schema=f"_q int, {id_col} long, _s double")
 
 
+def _read_codes(files: list[str], id_col: str, ids, keep: bool) -> pd.DataFrame:
+    """The rows of driver-sized code ``files`` whose id is in ``ids``
+    (``keep``) or not in them (a tombstone mask), read with pyarrow on the
+    driver. ``skip_nulls`` gives a null id a null test, which drops the
+    row either way, as Spark's ``IN``/``NOT IN`` filters do."""
+    if not keep and not ids:
+        return read_files(files, None).to_pandas()
+    hit = pc.is_in(pc.field(id_col), value_set=pa.array(list(ids), pa.int64()),
+                   skip_nulls=True)
+    return read_files(files, None, hit if keep else ~hit).to_pandas()
+
+
 def topk_pass(
-    frame: DataFrame,
+    codes: DataFrame | list[str],
     score: Callable,
     Q: np.ndarray,
     depth: int,
     dead=(),
     id_col: str = "vec_id",
 ) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Per query, (ids, scores) of its top ``depth`` rows of ``frame`` by
-    (score desc, id asc): :func:`topk_frame` collected (one Spark job) and
-    merged on the driver."""
-    got = topk_frame(frame, score, Q, depth, dead, id_col).toPandas()
+    """Per query, (ids, scores) of its top ``depth`` live rows of
+    ``codes`` by (score desc, id asc). ``codes`` is a Spark frame —
+    :func:`topk_frame` collected, one Spark job — or the data files of a
+    driver-sized codes table, read with pyarrow with the tombstones masked
+    at the read and scored by :func:`topk_rows` on the driver (no job).
+    The batches' rows are merged on the driver either way."""
+    if isinstance(codes, DataFrame):
+        got = topk_frame(codes, score, Q, depth, dead, id_col).toPandas()
+    else:
+        got = topk_rows(_read_codes(codes, id_col, dead, keep=False), score, Q, depth, id_col)
     q, ids, s = got["_q"].to_numpy(), got[id_col].to_numpy(), got["_s"].to_numpy()
     order = np.lexsort((ids, -s, q))
     q, ids, s = q[order], ids[order], s[order]
@@ -984,7 +1033,7 @@ def topk_pass(
 
 
 def rerank_pass(
-    frame: DataFrame,
+    frame: DataFrame | list[str],
     score: Callable,
     Q: np.ndarray,
     cands: list[tuple[np.ndarray, np.ndarray]],
@@ -992,11 +1041,18 @@ def rerank_pass(
     id_col: str = "vec_id",
 ) -> list[tuple[np.ndarray, np.ndarray]]:
     """The second pass: the rows of ``frame`` whose ids are in any query's
-    candidates come back through a JVM-only ``IN`` filter (one Spark job,
-    no Python worker), ``score`` runs on the driver, and each query keeps
-    the top k of its own candidates by (score desc, id asc)."""
+    candidates come back through an ``IN`` filter — a JVM-only Spark fetch
+    (one job, no Python worker), or a pyarrow read when ``frame`` is the
+    data files of driver-sized codes (no job) — ``score`` runs on the
+    driver, and each query keeps the top k of its own candidates by (score
+    desc, id asc). No candidate at all reads nothing."""
     union = sorted({int(i) for ids, _ in cands for i in ids})
-    pdf = frame.filter(ids_in(id_col, union)).toPandas()
+    if not union:
+        return [(np.array([], dtype=np.int64), np.array([]))] * len(Q)
+    if isinstance(frame, DataFrame):
+        pdf = frame.filter(ids_in(id_col, union)).toPandas()
+    else:
+        pdf = _read_codes(frame, id_col, union, keep=True)
     if len(pdf) == 0:
         return [(np.array([], dtype=np.int64), np.array([]))] * len(Q)
     fid = pdf[id_col].to_numpy()
@@ -1044,11 +1100,14 @@ def ann_topk_tier(
 ) -> DataFrame:
     """Two-phase top-k for every compressed tier, single query and batch:
     ``query`` is one vector → (rank, id, cos), or a query table →
-    (query_id, rank, id, cos). ``codes`` None encodes ``embeddings`` under
-    ``params`` inline; ``rerank`` None is the tier's default depth. With a
-    sufficient depth the answer equals the exact scan (the fast-vs-slow
-    idiom, TestCompressedVectors.java:231). Runs eagerly — two Spark jobs,
-    plus one to collect a query table that is not a local relation."""
+    (query_id, rank, id, cos). ``codes`` is a Spark frame, the data files
+    of a driver-sized codes table (:func:`topk_pass`), or None, which
+    encodes ``embeddings`` under ``params`` inline; ``rerank`` None is the
+    tier's default depth. With a sufficient depth the answer equals the
+    exact scan (the fast-vs-slow idiom, TestCompressedVectors.java:231).
+    Runs eagerly: the fetch of the candidates' raw vectors is one Spark
+    job, a codes scan in Spark one more (none for data files), and
+    collecting a query table that is not a local relation one more."""
     spark = embeddings.sparkSession
     if isinstance(query, DataFrame):
         qids, Q = query_matrix(query, qid_col, qvec_col)

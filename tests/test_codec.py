@@ -46,20 +46,25 @@ def test_known_leb128_bytes():
 @st.composite
 def posting_rows(draw):
     """(term_id, salt, doc_id, tf, dl) rows of 1-6 (term, salt) runs, each
-    of 1-300 docs from an arbitrary start, shuffled (the encoder sorts)."""
+    of 1-300 docs from an arbitrary start, shuffled (the encoder sorts).
+    Hypothesis draws the shape (run count, run lengths, starts) and one
+    seed; the values come from that seed's generator over the same ranges
+    (gaps 1..2^20, tf 1..2^31, dl 1..2^40), so an example costs a few
+    draws instead of one per value."""
+    runs = draw(st.integers(1, 6))
+    lengths = [draw(st.integers(1, 300)) for _ in range(runs)]
+    starts = [draw(st.integers(0, 2**40)) for _ in range(runs)]
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     cols = {c: [] for c in ("term_id", "salt", "doc_id", "tf", "dl")}
-    for r in range(draw(st.integers(1, 6))):
-        n = draw(st.integers(1, 300))
-        start = draw(st.integers(0, 2**40))
-        gaps = draw(st.lists(st.integers(1, 2**20), min_size=n - 1, max_size=n - 1))
+    for r, (n, start) in enumerate(zip(lengths, starts)):
+        gaps = rng.integers(1, 2**20, size=n - 1, endpoint=True)
         cols["term_id"] += [r // 2] * n
         cols["salt"] += [r % 2] * n
         cols["doc_id"] += (start + np.concatenate(([0], np.cumsum(gaps, dtype=np.int64)))).tolist()
-        cols["tf"] += draw(st.lists(st.integers(1, 2**31), min_size=n, max_size=n))
-        cols["dl"] += draw(st.lists(st.integers(1, 2**40), min_size=n, max_size=n))
+        cols["tf"] += rng.integers(1, 2**31, size=n, endpoint=True).tolist()
+        cols["dl"] += rng.integers(1, 2**40, size=n, endpoint=True).tolist()
     pdf = pd.DataFrame(cols).astype({"salt": "int32"})
-    perm = np.random.default_rng(draw(st.integers(0, 2**32 - 1))).permutation(len(pdf))
-    return pdf.iloc[perm].reset_index(drop=True)
+    return pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
 
 
 @given(posting_rows(), st.sampled_from([1, 3, 128]))

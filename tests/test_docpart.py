@@ -185,6 +185,7 @@ def test_compaction_keeps_buckets_and_answers(
 
     from jvector_spark.index.maintenance import compact_index, delete_docs, verify_index
     from jvector_spark.index.storage import read_segments
+    from test_extend_maintenance import files_per_part
 
     d = str(tmp_path / "dp")
     shutil.copytree(dp_index, d)
@@ -196,6 +197,8 @@ def test_compaction_keeps_buckets_and_answers(
     seg = read_segments(spark, d)
     assert (seg["n_docs"], seg["n_parts"]) == (corpus.count() - len(dead), 8)
     _assert_buckets_partition_doc_space(spark, d)
+    # each bucket is re-encoded by one task, into one file
+    assert files_per_part(d) == [1] * 8
     live = corpus.filter(F.col("doc_id") % 7 != 0)
     _assert_topk_equals_bruteforce(spark, live, d, _queries(spark, query_set))
 

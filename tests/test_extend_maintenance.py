@@ -5,11 +5,21 @@ live corpus — the analog of the reference's deletion/merge test suite
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+
+
+def files_per_part(index_dir: str) -> list[int]:
+    """The number of postings data files in each part directory."""
+    from jvector_spark.index.storage import postings_files
+
+    root = os.path.join(index_dir, "postings")
+    parts = sorted(int(p.split("=")[1]) for p in os.listdir(root) if p.startswith("part_id="))
+    return [len(postings_files(index_dir, [p])) for p in parts]
 
 
 def _rows(df):
@@ -186,6 +196,8 @@ def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
         # compaction: physically removes them; same answers, no tombstones
         m = compact_index(spark, d)
         assert m["docs_removed"] == len(top1)
+        # each part is re-encoded by one task, into one file
+        assert files_per_part(d) == [1, 1]
         from jvector_spark.index.maintenance import tombstone_ids
 
         assert tombstone_ids(spark, d) is None

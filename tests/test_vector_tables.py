@@ -1,7 +1,9 @@
 """The persisted vector tiers follow the driver-sized-tables rule: the
 pyarrow metadata readers must return exactly what a Spark read returns,
-every tier must serve a single query inside a two-job budget, and the one
-exact-cosine kernel must agree with a plain numpy oracle (Spark-free)."""
+every tier serves a single query in one Spark job when its codes are
+under the driver cap (two over it), the driver and Spark first passes
+return the same bits, and the one exact-cosine kernel must agree with a
+plain numpy oracle (Spark-free)."""
 
 from __future__ import annotations
 
@@ -281,33 +283,147 @@ def test_read_manifest_runs_no_job(spark, tier_dirs):
         assert jobs == 0, tier
 
 
+def _force_codes(monkeypatch, path: str) -> None:
+    """Send every persisted-tier read's first pass to ``path`` ("driver"
+    or "spark") through the one sizing constant."""
+    from jvector_spark.index import vectors as V
+
+    monkeypatch.setattr(V, "DRIVER_MAX_CODE_BYTES", 1 << 62 if path == "driver" else 0)
+
+
 @pytest.mark.parametrize("tier", TIERS)
-def test_indexed_tier_serves_in_two_jobs(spark, embeddings, tier_dirs, tmp_path, tier):
+def test_indexed_tier_job_budget_by_path(
+    spark, monkeypatch, embeddings, tier_dirs, tmp_path, tier
+):
+    """A single query runs one Spark job (the fetch of the candidates' raw
+    vectors) when its codes are under the driver cap, and two (plus the
+    codes scan) over it; both answer with the exact scan over the live
+    rows, bit for bit, as tombstones accumulate."""
     import shutil
 
     from jvector_spark.index import vectors as V
     from jvector_spark.operators.similarity import cosine_topk
 
     serve = getattr(V, f"ann_topk_{tier}_indexed")
-    d = str(tmp_path / tier)
-    shutil.copytree(tier_dirs[tier], d)
     qv = list(embeddings.filter(F.col("vec_id") == 4).select("embedding").first()[0])
 
     def exact(dead):
         live = embeddings.filter(~F.col("vec_id").isin(sorted(dead)))
         return [tuple(r) for r in cosine_topk(live, qv, k=10).collect()]
 
-    dead: set[int] = set()
+    for path, budget in (("driver", 1), ("spark", 2)):
+        _force_codes(monkeypatch, path)
+        d = str(tmp_path / path)
+        shutil.copytree(tier_dirs[tier], d)
+        dead: set[int] = set()
+        for _ in range(3):
+            rows, jobs = _jobs(spark, lambda: serve(spark, d, embeddings, qv, k=10).collect())
+            assert jobs <= budget, f"{tier} {path} call, {len(dead)} tombstones: {jobs} jobs"
+            # same exact kernel on both sides: scores equal bit for bit
+            assert [tuple(r) for r in rows] == exact(dead)
+            # tombstone the current top two (one id twice): the next answer
+            # must be the exact scan over the survivors
+            top = [rows[0].vec_id, rows[1].vec_id, rows[0].vec_id]
+            V.vector_delete(spark, d, top)
+            dead |= set(top)
+
+
+def _on_both_paths(spark, monkeypatch, fn, driver_jobs: int) -> tuple[list, list]:
+    """(columns, rows) of ``fn()`` (a local relation) on the forced-Spark
+    path, asserted equal to the driver path's: columns, rows, ranks, ids
+    and ``cos`` bits. The driver path must run at most ``driver_jobs``
+    jobs."""
+    def columns_and_rows():
+        df = fn()
+        return df.columns, [tuple(r) for r in df.collect()]
+
+    got = {}
+    for path in ("spark", "driver"):
+        _force_codes(monkeypatch, path)
+        got[path], jobs = _jobs(spark, columns_and_rows)
+        if path == "driver":
+            assert jobs <= driver_jobs, f"driver path ran {jobs} Spark jobs"
+    assert got["driver"] == got["spark"]
+    return got["spark"]
+
+
+def _extended_dir(spark, embeddings, root, tier: str) -> str:
+    """A tier built over two thirds of the fixture and extended with the
+    rest, so its codes span the build's files and the extend's."""
+    from jvector_spark.index import vectors as V
+    from jvector_spark.index.storage import _data_files
+
+    d = str(root / tier)
+    getattr(V, f"{tier}_build")(embeddings.filter(F.col("vec_id") < 330), d)
+    n_build = len(_data_files(d, "codes"))
+    getattr(V, f"{tier}_extend")(embeddings.filter(F.col("vec_id") >= 330), d)
+    assert len(_data_files(d, "codes")) > n_build >= 1
+    return d
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_driver_and_spark_first_pass_are_bit_equal(
+    spark, monkeypatch, embeddings, tmp_path, tier
+):
+    """Property: on an extended structure under random tombstone waves, a
+    read whose first pass runs on the driver returns the rows, ranks and
+    ``cos`` bits of the forced-Spark read, at the default depth and at a
+    depth of k (where the merge of the batches decides every candidate);
+    an all-tombstoned structure returns an empty (rank, vec_id, cos)
+    relation on both paths."""
+    from jvector_spark.index import vectors as V
+
+    serve = getattr(V, f"ann_topk_{tier}_indexed")
+    d = _extended_dir(spark, embeddings, tmp_path, tier)
+    vecs = {r[0]: list(r[1]) for r in embeddings.select("vec_id", "embedding").collect()}
+    rng = np.random.default_rng(TIERS.index(tier))
+    live = sorted(vecs)
     for _ in range(3):
-        rows, jobs = _jobs(spark, lambda: serve(spark, d, embeddings, qv, k=10).collect())
-        assert jobs <= 2, f"{tier} call with {len(dead)} tombstones ran {jobs} jobs"
-        # same exact kernel on both sides: scores equal bit for bit
-        assert [tuple(r) for r in rows] == exact(dead)
-        # tombstone the current top two (one id twice): the next answer
-        # must be the exact scan over the survivors
-        top = [rows[0].vec_id, rows[1].vec_id, rows[0].vec_id]
-        V.vector_delete(spark, d, top)
-        dead |= set(top)
+        for qid in rng.choice(live, size=2, replace=False):
+            for rerank in (None, 10):
+                _, rows = _on_both_paths(
+                    spark, monkeypatch,
+                    lambda: serve(spark, d, embeddings, vecs[int(qid)], k=10, rerank=rerank),
+                    driver_jobs=1,
+                )
+                assert [r[0] for r in rows] == list(range(1, 11))
+                assert not {r[1] for r in rows} - set(live)
+        # a wave: 60 random live ids and the wave's last query id, whose
+        # own row would top its answer if the mask missed it
+        dead = {int(i) for i in rng.choice(live, size=60, replace=False)} | {int(qid)}
+        V.vector_delete(spark, d, sorted(dead))
+        live = sorted(set(live) - dead)
+
+    V.vector_delete(spark, d, sorted(vecs))
+    assert _on_both_paths(
+        spark, monkeypatch, lambda: serve(spark, d, embeddings, vecs[5], k=10), driver_jobs=0
+    ) == (["rank", "vec_id", "cos"], [])
+
+
+def test_pq_nvq_pipeline_paths_are_bit_equal(spark, monkeypatch, embeddings, tmp_path):
+    """The compressed-only pipeline reads both structures through the
+    sizing rule: under it no Spark job runs, and its rows and ``cos`` bits
+    equal the forced-Spark read's, with tombstones and when every PQ row
+    is tombstoned."""
+    from jvector_spark.index import vectors as V
+
+    pq_dir = _extended_dir(spark, embeddings, tmp_path, "pq")
+    nvq_dir = _extended_dir(spark, embeddings, tmp_path, "nvq")
+    vecs = {r[0]: list(r[1]) for r in embeddings.select("vec_id", "embedding").collect()}
+
+    def call(qid):
+        return lambda: V.ann_topk_pq_nvq_indexed(spark, pq_dir, nvq_dir, vecs[qid], k=10)
+
+    for qid in (3, 250, 400):
+        assert len(_on_both_paths(spark, monkeypatch, call(qid), driver_jobs=0)[1]) == 10
+    V.vector_delete(spark, pq_dir, range(0, 500, 3))
+    for qid in (3, 250, 400):
+        _, rows = _on_both_paths(spark, monkeypatch, call(qid), driver_jobs=0)
+        assert len(rows) == 10 and all(r[1] % 3 for r in rows)
+    V.vector_delete(spark, pq_dir, sorted(vecs))
+    assert _on_both_paths(spark, monkeypatch, call(3), driver_jobs=0) == (
+        ["rank", "vec_id", "cos"], []
+    )
 
 
 def test_all_tombstoned_tier_returns_no_rows(spark, embeddings, tier_dirs):
