@@ -25,7 +25,6 @@ large to inline in every read's plan is the signal to run
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -36,12 +35,15 @@ from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
     arrow_rows,
+    drop_table,
     lineage_totals,
     local_relation,
     part_id_col,
     read_segments,
     read_table,
     shuffle_n,
+    staged_dir,
+    swap_in,
     table_path,
     tombstone_ids,
     update_segments,
@@ -112,11 +114,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         )
         .sortWithinPartitions("part_id", "term_id", "salt", "block_id")
     )
-    tmp = table_path(index_dir, "postings__compact")
-    blocks.write.mode("overwrite").partitionBy("part_id").parquet(tmp)
-    old = table_path(index_dir, "postings")
-    shutil.rmtree(old)
-    os.rename(tmp, old)
+    staged = staged_dir(index_dir, "postings")
+    blocks.write.mode("overwrite").partitionBy("part_id").parquet(staged)
+    swap_in(staged, index_dir, "postings")
     postings_live = int(obs.get["postings"])
     bytes_live = int(obs.get["bytes"])
 
@@ -124,18 +124,18 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # on the doc_stats rewrite (the global stats refresh below needs no
     # second scan)
     def shrink(name: str, obs: Observation | None = None) -> None:
-        path = table_path(index_dir, name)
-        kept = spark.read.parquet(path).join(dead_df, "doc_id", "left_anti")
+        kept = spark.read.parquet(table_path(index_dir, name)).join(
+            dead_df, "doc_id", "left_anti"
+        )
         if obs is not None:
             kept = kept.observe(
                 obs,
                 F.count("*").alias("n"),
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
             )
-        tmp = path + "__compact"
-        kept.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        staged = staged_dir(index_dir, name)
+        kept.write.mode("overwrite").parquet(staged)
+        swap_in(staged, index_dir, name)
 
     stats_obs = Observation("compact_doc_stats")
     shrink("doc_stats", stats_obs)
@@ -160,11 +160,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             "n_salts",
         )
     )
-    tmp = table_path(index_dir, "dictionary__compact")
-    new_dct.write.mode("overwrite").parquet(tmp)
-    old = table_path(index_dir, "dictionary")
-    shutil.rmtree(old)
-    os.rename(tmp, old)
+    staged = staged_dir(index_dir, "dictionary")
+    new_dct.write.mode("overwrite").parquet(staged)
+    swap_in(staged, index_dir, "dictionary")
 
     # refresh global stats (all other segment columns preserved verbatim);
     # Σdl / n in Python is correctly rounded, bit-equal to Spark's avg(dl)
@@ -179,7 +177,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         arrow_rows([(-1, n_docs, postings_live, bytes_live, "compacted")], LINEAGE_SCHEMA),
         index_dir, "build_lineage", mode="overwrite",
     )
-    shutil.rmtree(table_path(index_dir, TOMBSTONES), ignore_errors=True)
+    drop_table(index_dir, TOMBSTONES)
     return {
         "docs_removed": len(dead),
         "postings_live": postings_live,

@@ -47,21 +47,27 @@ rows are read with pyarrow straight from the index directory
 worker, even when it is empty. Driver-sized rows are written the same
 way, with pyarrow and no job (:func:`write_local`): the segments row,
 tombstone appends, lineage rows, a driver-sized extend's postings,
-doc_stats and doc_map delta, the vector tiers' manifests, parameters and
-codebooks, and the streaming and sharded metadata rows. An append adds
-one file; an overwrite swaps in a sibling directory that carries Spark's
-``_SUCCESS`` marker. Index directories are therefore
-driver-visible paths — the same assumption the ``os.rename`` /
-``shutil.rmtree`` swaps in extend and compact already make. Engine-owned
-corpus-sized tables (postings, positions, dictionary, doc_stats) are read
+doc_stats and doc_map delta, a driver-sized dictionary rewrite, the
+vector tiers' manifests, parameters and codebooks, and the streaming and
+sharded metadata rows. An append adds one file; an overwrite writes a
+hidden sibling directory that carries Spark's ``_SUCCESS`` marker and
+swaps it in (:func:`swap_in`). Every rewrite of a whole table (this one,
+the Spark side of an extend's dictionary rewrite, and compaction's
+postings, doc_stats, doc_map and dictionary) is staged in such a sibling
+(:func:`staged_dir`) and swapped in by that one helper, which renames the
+live table aside before it deletes anything, so a failure part-way
+leaves every table whole, old or new; compaction drops the tombstones
+the same way (:func:`drop_table`). Index directories are therefore
+driver-visible paths. Engine-owned corpus-sized tables (postings, positions, dictionary, doc_stats) are read
 with their known schema (:data:`TABLE_SCHEMAS`), so opening one plans no
 schema-inference job. An aggregate the Parquet footers already hold is
 read from them, not computed by a job: ``extend_index`` takes the
 dictionary's max term_id from its row-group statistics
 (:func:`footer_max`). An extend's delta vocabulary is delta-sized, so it
-is resolved on the driver against its existing (term_id, n_salts); fresh
-term ids are numbered there, and only the dictionary rewrite, the one
-corpus-sized step, goes back to Spark.
+is resolved on the driver against its existing (term_id, n_salts), and
+fresh term ids are numbered there. The dictionary rewrite is
+vocabulary-sized: it runs on the driver when the dictionary's data files
+are small (the rule in ``index.extend``), and in Spark otherwise.
 
 A query's own slice of the index is driver-sized too. Every indexed read
 looks its terms up in the dictionary with a pyarrow dataset filter on
@@ -272,19 +278,56 @@ def write_local(table: pa.Table, index_dir: str, name: str,
         return
     if mode != "overwrite":
         raise ValueError(f"unknown write mode {mode!r}")
-    parent, base = os.path.split(path)
-    tag = uuid.uuid4().hex
-    new = os.path.join(parent, f".{base}.{tag}.new")
+    new = staged_dir(index_dir, name)
     os.makedirs(new)
     _write_file(table, new)
     open(os.path.join(new, "_SUCCESS"), "wb").close()
-    if os.path.exists(path):
-        old = os.path.join(parent, f".{base}.{tag}.old")
-        os.rename(path, old)
-        os.rename(new, path)
+    swap_in(new, index_dir, name)
+
+
+def _hidden_sibling(index_dir: str, name: str, suffix: str) -> str:
+    parent, base = os.path.split(table_path(index_dir, name))
+    return os.path.join(parent, f".{base}.{uuid.uuid4().hex}.{suffix}")
+
+
+def staged_dir(index_dir: str, name: str) -> str:
+    """A fresh path beside table ``name`` to write its replacement to
+    before :func:`swap_in`. Its ``.``-name is skipped by every reader, so a
+    write that fails half-way leaves nothing a read opens."""
+    return _hidden_sibling(index_dir, name, "new")
+
+
+def swap_in(staged: str, index_dir: str, name: str) -> None:
+    """Replace table ``name`` with the complete directory ``staged`` (from
+    :func:`staged_dir`): the live directory is renamed aside to a hidden
+    name, ``staged`` is renamed into its place, and only then is the old
+    copy deleted. A failure while deleting it leaves the live table whole
+    (the new one) and the rest of the old one under its hidden name; a
+    crash between the two renames leaves the whole old table there."""
+    old = _set_aside(index_dir, name)
+    os.rename(staged, table_path(index_dir, name))
+    if old is not None:
         shutil.rmtree(old)
-    else:
-        os.rename(new, path)
+
+
+def drop_table(index_dir: str, name: str) -> None:
+    """Delete table ``name``, if present, as :func:`swap_in` deletes a
+    replaced one: renamed aside first, so a failure part-way leaves no
+    part of it live."""
+    old = _set_aside(index_dir, name)
+    if old is not None:
+        shutil.rmtree(old)
+
+
+def _set_aside(index_dir: str, name: str) -> str | None:
+    """Rename table ``name`` to a fresh hidden sibling; return that path,
+    or None when the table is absent."""
+    path = table_path(index_dir, name)
+    if not os.path.exists(path):
+        return None
+    old = _hidden_sibling(index_dir, name, "old")
+    os.rename(path, old)
+    return old
 
 
 def _write_file(table: pa.Table, directory: str) -> None:

@@ -168,10 +168,10 @@ def flush_staged(
     """Merge ALL staged batches into the index in ONE ``extend_index``
     delta — the amortization point of the reference's cleanup-threshold
     idiom (GraphIndexBuilder.java:475-511: inserts accumulate, one cleanup
-    pass merges). An extend's fixed costs (the tokenized collect and the
-    dictionary rewrite, 3 Spark jobs for a driver-sized delta, about 20
-    on the Spark path) are paid once per flush instead of once per
-    microbatch.
+    pass merges). An extend's fixed costs (the tokenized collect, 1 Spark
+    job for a driver-sized delta, about 18 on the Spark path, and the
+    vocabulary-sized dictionary rewrite) are paid once per flush instead
+    of once per microbatch.
 
     Crash semantics match the per-batch path: 'pending' rows for every
     staged batch are written BEFORE the (non-atomic) extend and 'complete'

@@ -71,10 +71,11 @@ def _odd_keys(df):
 
 
 # Spark jobs an extend may run on each path, measured on these tests: the
-# driver path 3 (the tokenized collect, 2 for the dictionary rewrite); the
-# Spark path 20 with order_cols, 15 with caller ids or with no tokens.
-# An empty delta stops after the collect, or after the Spark path's count
-JOB_BUDGET = {"driver": 3, "spark": 20}
+# driver path 1 (the tokenized collect; the dictionary is driver-sized and
+# rewritten with pyarrow); the Spark path 18 with order_cols, 13-14 with
+# caller ids or with no tokens. An empty delta stops after the collect, or
+# after the Spark path's count
+JOB_BUDGET = {"driver": 1, "spark": 18}
 
 
 def _extend_both(spark, monkeypatch, base: str, tmp_path, make_call) -> dict:
