@@ -135,13 +135,13 @@ def _deleted_index_for(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _ivf_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted IVF structure (≈√N clusters, assignments partitioned by
+    """Persisted IVF structure (≈√N clusters, codes partitioned by
     cluster) over the embeddings table; built once per process per sf_dir."""
     key = (sf_dir, "ivf")
     got = _MUTIDX_CACHE.get(key)
-    if got and os.path.exists(os.path.join(got, "centroids")):
+    if got and os.path.exists(os.path.join(got, "manifest")):
         return got
-    from jvector_spark.operators.similarity import ivf_build
+    from jvector_spark.index.vectors import ivf_build
 
     emb = _read(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     d = tempfile.mkdtemp(prefix="jvidx_ivf_")
@@ -638,7 +638,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return t.select("rank", "vec_id", _u6(F.col("cos")).alias("cos_u6"))
 
     def q_ann_topk_ivf(spark, sf):
-        # IVF probe path against the PERSISTED index (assignments hive-
+        # IVF probe path against the PERSISTED index (codes hive-
         # partitioned by cluster → probes prune directories): rows-only
         # check — approximate by construction; full-probe == exact and
         # recall floors are pytest-enforced (tests/test_ivf.py).
@@ -651,7 +651,7 @@ def _build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         qv = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
         base = emb.filter(F.col("vec_id") != 0)
         idx = _ivf_index_for(spark, sf)
-        from jvector_spark.operators.similarity import ivf_topk_indexed
+        from jvector_spark.index.vectors import ivf_topk_indexed
 
         t = ivf_topk_indexed(
             spark, idx, base, list(qv), k=10, n_probe=None, target_recall=0.9

@@ -472,11 +472,8 @@ def clustered_recall(spark) -> dict:
     import numpy as np
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        cosine_topk,
-        ivf_build,
-        ivf_topk_indexed,
-    )
+    from jvector_spark.index.vectors import ivf_build, ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
     rng = np.random.default_rng(3)
     centers = rng.standard_normal((20, 32)) * 3.0
@@ -633,12 +630,11 @@ def recall_qps_grid(spark) -> dict:
     each point times pure query cost."""
     import tempfile
 
+    from jvector_spark.index.vectors import ivf_build, ivf_topk_indexed
     from jvector_spark.operators.pq import ann_topk_pq, pq_encode, pq_train
     from jvector_spark.operators.similarity import (
         ann_topk_sq8_batch,
         cosine_topk_batch,
-        ivf_build,
-        ivf_topk_indexed,
         sq8_encode,
         sq8_train,
     )

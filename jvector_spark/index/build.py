@@ -572,6 +572,13 @@ def _build(
     _tick("term_ids", t)
     if ds_job is not None:
         _bg_join(*ds_job)
+    if not stats["n"]:
+        # no document: avgdl is undefined and there is nothing to encode
+        if dm_job is not None:
+            _bg_join(*dm_job)
+        for p in pins:
+            p.unpersist()
+        raise ValueError(f"empty corpus: no document to index into {index_dir}")
     n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
     # the dictionary is final: its write overlaps the encode
     dct_job = _bg_job(_timed("dictionary_write", lambda: write_table(

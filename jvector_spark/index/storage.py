@@ -535,6 +535,11 @@ def local_schema(index_dir: str, name: str) -> StructType | None:
     it to ``spark.read.schema`` skips the schema-inference job, and it is
     right for whatever id column name the table was written with."""
     files = _data_files(index_dir, name)
+    if files and os.path.isdir(files[0]):
+        # written partitionBy: the first partition directory's files hold
+        # the data columns, and Spark adds the partition column from the
+        # directory names
+        files = _data_files(files[0], "")
     return from_arrow_schema(pq.read_schema(files[0])) if files else None
 
 

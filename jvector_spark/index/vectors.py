@@ -1,6 +1,6 @@
-"""Persisted compressed-vector index structures: PQ / SQ8 / BQ / NVQ
-tiers with an on-disk layout, load path, incremental extend, tombstone
-delete, drift metric, and refine (retrain + re-encode).
+"""Persisted compressed-vector index structures: PQ / SQ8 / BQ / NVQ /
+IVF tiers with an on-disk layout, load path, incremental extend,
+tombstone delete, drift metric, and refine (retrain + re-encode).
 
 Reference analogs: the reference persists and reuses trained PQ across
 runs instead of retraining per query (Grid.java:681-719 ``pq_cache``,
@@ -12,22 +12,28 @@ Binary Quantization tier as the cheapest memory point
 (BinaryQuantization.java:88-110, BQVectors.java:95-118).
 
 On-disk layout (one directory per structure, all parquet — same
-conventions as the text index's format v2 and the IVF structure):
+conventions as the text index's format v2):
 
 - ``manifest/``   one row: (version, kind, dim, m, k, dsub, train_mse)
 - ``codebooks/``  PQ: (subspace, cluster, centroid array<double>)
 - ``params/``     SQ8: (i, mn, scale) per dimension
+- ``centroids/``  IVF: (cluster, centroid array<double>), k rows
 - ``codes/``      (vec_id, codes binary) — m B (PQ), dim B (SQ8),
                   dim/8 B (BQ), dim·bits/8 B + 3 doubles inline (NVQ,
                   per-vector params — NVQuantization.java:583-638)
-                  per vector
+                  per vector; IVF: (vec_id) under ``cluster=c/``
+                  directories (written ``partitionBy``, the tier's
+                  ``partition_by``)
+- ``cluster_sizes/`` IVF: (cluster, n) live-count deltas, summed on read
 - ``tombstones/`` optional (vec_id) appended by ``vector_delete``
 
 One lifecycle serves every tier: a tier is a record
 (``operators.similarity.Tier``: params, fit, encode kernel, score kernel,
 default rerank depth), and :func:`build`, :func:`load`, :func:`extend`
 and :func:`serve` are the one body each; the ``<tier>_build`` /
-``_load`` / ``_extend`` / ``ann_topk_<tier>_indexed`` names bind it.
+``_load`` / ``_extend`` / ``ann_topk_<tier>_indexed`` names bind it. IVF
+runs the same build, extend and delete bodies; its query probes the
+nearest clusters and reranks their live vectors (:func:`ivf_topk_indexed`).
 
 Driver-sized tables go through Arrow on the driver (the ``index.storage``
 rule): the manifest, params, codebooks and tombstones are read with
@@ -47,10 +53,12 @@ through the same rule and, under it, runs no Spark job.
 from __future__ import annotations
 
 import os
+from collections import Counter
 from functools import partial
 
 import numpy as np
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,28 +66,34 @@ from ..operators.bq import BQ
 from ..operators.nvq import NVQ
 from ..operators.pq import PQ, pq_sample_mse
 from ..operators.similarity import (
+    IVF,
     SQ8,
     Tier,
+    _read_codes,
     ann_topk_tier,
+    cosine_rows,
     encode_codes,
     rerank_pass,
     sample_matrix,
     topk_pass,
     topk_relation,
+    unit,
 )
 from .storage import (
     _data_files,
     arrow_rows,
+    ids_in,
     local_relation,
     local_schema,
     read_local,
     read_required,
+    table_path,
     tombstone_ids,
     write_local,
 )
 
 FORMAT_VERSION = 1
-TIERS = {t.kind: t for t in (SQ8, PQ, BQ, NVQ)}
+TIERS = {t.kind: t for t in (SQ8, PQ, BQ, NVQ)}  # the tiers :func:`serve` scores
 
 # The sizing rule of a tier read: its first pass runs on the driver when
 # the ``codes/`` data files total under this many bytes, otherwise in
@@ -141,12 +155,18 @@ def read_codes(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
+def _driver_sized(files: list[str]) -> bool:
+    """The sizing rule: code files totalling under
+    :data:`DRIVER_MAX_CODE_BYTES` are read with pyarrow on the driver."""
+    return sum(os.path.getsize(f) for f in files) < DRIVER_MAX_CODE_BYTES
+
+
 def _codes(spark: SparkSession, index_dir: str) -> DataFrame | list[str]:
     """What a query's passes read the codes from: their data files (read
     with pyarrow on the driver, appended extend files included) when they
-    total under :data:`DRIVER_MAX_CODE_BYTES`, else the Spark scan."""
+    are driver-sized, else the Spark scan."""
     files = _data_files(index_dir, "codes")
-    if files and sum(os.path.getsize(f) for f in files) < DRIVER_MAX_CODE_BYTES:
+    if files and _driver_sized(files):
         return files
     return read_codes(spark, index_dir)
 
@@ -182,12 +202,15 @@ def _write_codes(
     tier: Tier, embeddings: DataFrame, params, index_dir: str, mode: str,
     id_col: str, vec_col: str, **encode_kw,
 ) -> int:
-    """Encode and write ``codes/``; the row count is observed on the write
+    """Encode and write ``codes/`` (``partitionBy`` the tier's
+    ``partition_by`` columns); the row count is observed on the write
     itself, so the encode runs once."""
     obs = Observation(f"{tier.kind}_codes_n")
     encode_codes(tier, embeddings, params, id_col, vec_col, **encode_kw).observe(
         obs, F.count("*").alias("n")
-    ).write.mode(mode).parquet(os.path.join(index_dir, "codes"))
+    ).write.mode(mode).partitionBy(*tier.partition_by).parquet(
+        os.path.join(index_dir, "codes")
+    )
     return int(obs.get["n"])
 
 
@@ -545,3 +568,154 @@ def ann_topk_pq_nvq_indexed(
     hits = rerank_pass(_codes(spark, nvq_dir), partial(NVQ.score, params=bits), Q,
                        cands, k, id_col)
     return topk_relation(spark, hits, id_col)
+
+
+# ---------------------------------------------------------------------------
+# IVF structure (coarse quantizer: codes partitioned by cluster)
+# ---------------------------------------------------------------------------
+
+# The sizing rule of an IVF query: up to this many probed live ids (the
+# ``cluster_sizes`` sidecar) are read with pyarrow and reranked through one
+# ``IN`` fetch of their raw vectors, ~60 µs per id on local[4]; above it
+# the join runs in Spark, 1-2.6 s up to 80k vectors. The bound keeps the
+# driver side the faster one and bounds its ``IN`` list (docs/SCALE.md).
+IVF_DRIVER_MAX_PROBED = 1 << 14
+
+
+def _cluster_files(index_dir: str) -> dict[int, list[str]]:
+    """The data files of each ``codes/cluster=c/`` directory, by c."""
+    codes = table_path(index_dir, "codes")
+    if not os.path.isdir(codes):
+        return {}
+    return {
+        int(name.split("=", 1)[1]): _data_files(codes, name)
+        for name in os.listdir(codes)
+        if name.startswith("cluster=")
+    }
+
+
+def _write_cluster_sizes(counts, index_dir: str, mode: str = "append") -> None:
+    """(cluster, n) count deltas to the k-row sidecar, with pyarrow; no
+    deltas write nothing."""
+    if counts:
+        write_local(arrow_rows(sorted((int(c), int(n)) for c, n in counts),
+                               "cluster int, n long"), index_dir, "cluster_sizes", mode=mode)
+
+
+def _footer_counts(files: dict[int, list[str]]) -> list[tuple[int, int]]:
+    """(cluster, rows) of code files, from their Parquet footers."""
+    return [(c, sum(pq.read_metadata(f).num_rows for f in fs)) for c, fs in files.items() if fs]
+
+
+def ivf_build(
+    embeddings: DataFrame,
+    index_dir: str,
+    n_clusters: int | None = None,
+    n_iters: int = 10,
+    seed: int = 77,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> np.ndarray:
+    """Train and persist the IVF structure (:func:`build`): ``centroids/``,
+    ``codes/`` partitioned by cluster, and the k-row ``cluster_sizes``
+    sidecar counted from the files' footers. ``n_clusters`` defaults to
+    ≈√N, the classic IVF operating point. Returns the centroid matrix."""
+    if n_clusters is None:
+        n_clusters = max(2, int(round(float(embeddings.count()) ** 0.5)))
+    cents = build(IVF, embeddings, index_dir, id_col, vec_col,
+                  fit_kw=dict(n_clusters=n_clusters, n_iters=n_iters, seed=seed))[0]
+    _write_cluster_sizes(_footer_counts(_cluster_files(index_dir)), index_dir, "overwrite")
+    return cents
+
+
+def ivf_read_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
+    return IVF.read_params(index_dir, read_manifest(spark, index_dir))
+
+
+def ivf_cluster_sizes(spark: SparkSession, index_dir: str) -> dict[int, int]:
+    """Per-cluster LIVE vector counts: the sum of the ``cluster_sizes``
+    deltas build, extend and delete append, read with pyarrow (no Spark
+    job). Raises ``FileNotFoundError`` when the sidecar is missing."""
+    tbl = read_required(index_dir, "cluster_sizes").group_by("cluster").aggregate([("n", "sum")])
+    return dict(zip(tbl["cluster"].to_pylist(), tbl["n_sum"].to_pylist()))
+
+
+def ivf_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id",
+               vec_col: str = "embedding") -> int:
+    """Append vectors assigned to the EXISTING centroids (:func:`extend`;
+    buildAndMergeNewNodes, GraphIndexBuilder.java:1015-1057), so extend ≡
+    rebuild-with-the-same-centroids. The sidecar's deltas come from the
+    appended files' footers: the append is the one Spark job."""
+    before = {f for fs in _cluster_files(index_dir).values() for f in fs}
+    n = extend(IVF, new_embeddings, index_dir, id_col, vec_col)
+    new = {c: [f for f in fs if f not in before] for c, fs in _cluster_files(index_dir).items()}
+    _write_cluster_sizes(_footer_counts(new), index_dir)
+    return n
+
+
+def ivf_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_id") -> None:
+    """:func:`vector_delete` of the ids not already dead, and their
+    clusters' negative deltas in the sidecar. The clusters are looked up
+    under the codes sizing rule: a pyarrow read of each cluster's files
+    (no Spark job), or an ``IN`` scan of the codes."""
+    new = sorted({int(i) for i in ids} - (tombstone_ids(spark, index_dir) or set()))
+    if not new:
+        return
+    vector_delete(spark, index_dir, new, id_col)
+    files = _cluster_files(index_dir)
+    if _driver_sized([f for fs in files.values() for f in fs]):
+        dead = {c: len(_read_codes(fs, id_col, new, keep=True)) for c, fs in files.items() if fs}
+    else:
+        dead = Counter(
+            r[0] for r in read_codes(spark, index_dir)
+            .filter(ids_in(id_col, new)).select("cluster").collect()
+        )
+    _write_cluster_sizes([(c, -n) for c, n in dead.items() if n], index_dir)
+
+
+def ivf_topk_indexed(
+    spark: SparkSession,
+    index_dir: str,
+    embeddings: DataFrame,
+    query_vec: list[float],
+    k: int = 10,
+    n_probe: int | None = 4,
+    target_recall: float = 0.9,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Probe-limited top-k: the live vectors of the ``n_probe`` clusters
+    nearest the query are scored exactly (``cosine_rows``). Up to
+    :data:`IVF_DRIVER_MAX_PROBED` probed live ids, pyarrow reads them from
+    the probed ``cluster=c`` files and ``rerank_pass`` fetches their raw
+    vectors (one Spark job); above it, the embeddings are joined to a
+    codes scan whose ``cluster IN (probes)`` partition filter reads only
+    those directories, and ``topk_pass`` keeps the top k in Spark. Both
+    sides return the same rows and bits. Runs eagerly and returns (rank,
+    id, cos) as a local relation.
+
+    ``n_probe=None`` probes the nearest clusters until their live mass
+    (the ``cluster_sizes`` sidecar) covers ``target_recall`` of the
+    corpus: on near-uniform data recall ≈ probed fraction, so mass
+    coverage is the honest guarantee knob, and on clustered data it
+    over-probes benignly."""
+    C = ivf_read_centroids(spark, index_dir)
+    order = np.argsort(-(C @ unit(np.asarray(query_vec, dtype=np.float64))), kind="stable")
+    sizes = ivf_cluster_sizes(spark, index_dir)
+    if n_probe is None:  # the fewest nearest clusters whose mass covers the need
+        mass = np.cumsum([sizes.get(int(c), 0) for c in order])
+        n_probe = np.searchsorted(mass, float(target_recall) * max(1, sum(sizes.values()))) + 1
+    probes = [int(c) for c in order[: int(n_probe)]]
+    dead = _dead(spark, index_dir)
+    by_cluster = _cluster_files(index_dir)
+    files = [f for c in probes for f in by_cluster.get(c, ())]
+    Q = np.asarray([query_vec], dtype=np.float64)
+    vecs = embeddings.select(id_col, vec_col)
+    score = partial(cosine_rows, vec_col=vec_col)
+    if sum(sizes.get(c, 0) for c in probes) > IVF_DRIVER_MAX_PROBED:
+        probed = read_codes(spark, index_dir).filter(F.col("cluster").isin(probes))
+        hits = topk_pass(vecs.join(probed.select(id_col), id_col), score, Q, k, dead, id_col)
+    else:
+        ids = _read_codes(files, id_col, dead, keep=False)[id_col].to_numpy() if files else ()
+        hits = rerank_pass(vecs, score, Q, [(ids, None)], k, id_col)
+    return topk_relation(spark, hits, id_col, embeddings.schema[id_col].dataType.simpleString())

@@ -50,6 +50,7 @@ from .similarity import (
     encode_codes,
     per_query,
     sample_matrix,
+    training_sample,
     unit,
 )
 
@@ -106,8 +107,7 @@ def pq_train(
         # codes are uint8 — more than 256 clusters would silently wrap
         # modulo 256 and corrupt every ADC score downstream
         raise ValueError(f"n_clusters must be in [1, 256], got {n_clusters}")
-    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = training_sample(embeddings, sample_size, id_col, vec_col)
     dim = X.shape[1]
     if m is None:
         m = max(1, dim // 8)

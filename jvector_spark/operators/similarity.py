@@ -15,6 +15,9 @@ GraphSearcher.java:209-230), re-expressed Spark-first.
 - compressed tiers (SQ8 here; PQ, BQ, NVQ in their modules): each is a
   ``Tier`` record, and single queries and batches share one two-phase
   path (``ann_topk_tier``: approximate codes scan, exact rerank).
+- ``IVF``: the coarse-quantizer record (``ivf_train``'s spherical k-means,
+  a nearest-centroid encode); ``index.vectors.ivf_*`` writes its codes by
+  cluster, so a probe reads only its clusters' files, then reranks exactly.
 
 Hyperplanes are generated from a fixed seed so results are deterministic
 across runs (the reference's randomizedtesting-with-fixed-seed idiom).
@@ -22,8 +25,6 @@ across runs (the reference's randomizedtesting-with-fixed-seed idiom).
 
 from __future__ import annotations
 
-import os
-from collections import Counter
 from dataclasses import dataclass
 from functools import partial
 from typing import Callable
@@ -41,7 +42,6 @@ from ..index.storage import (
     local_relation,
     read_files,
     read_required,
-    tombstone_ids,
     write_local,
 )
 
@@ -500,302 +500,6 @@ def embedding_near_dups_lsh(
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the k-means codebook analog
-# ---------------------------------------------------------------------------
-
-IVF_MAX_TRAINING = 131_072  # reference: MAX_PQ_TRAINING_SET_SIZE = 128k
-                            # (quantization/ProductQuantization.java:67)
-
-
-def ivf_train(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    n_iters: int = 10,
-    sample_size: int = IVF_MAX_TRAINING,
-    seed: int = 77,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Deterministic spherical k-means over a bounded training sample —
-    the coarse-quantizer twin of the reference's PQ codebook training
-    (k-means++ init + Lloyd iterations, capped training set;
-    quantization/KMeansPlusPlusClusterer.java:1-450,
-    ProductQuantization.java:88-154). Returns L2-normalized centroids
-    (n_clusters × dim, float64).
-
-    The sample is the lowest ``sample_size`` ids (TakeOrderedAndProject —
-    no global sort), so training is reproducible at any corpus size."""
-    X = sample_matrix(embeddings, sample_size, id_col, vec_col)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    n = len(X)
-    k = min(n_clusters, n)
-    rng = np.random.default_rng(seed)
-
-    # k-means++ seeding (distance = 1 - cos on the unit sphere)
-    centroids = np.empty((k, X.shape[1]))
-    centroids[0] = X[int(rng.integers(n))]
-    d2 = 1.0 - X @ centroids[0]
-    for j in range(1, k):
-        p = np.maximum(d2, 0)
-        s = p.sum()
-        idx = int(rng.choice(n, p=p / s)) if s > 0 else int(rng.integers(n))
-        centroids[j] = X[idx]
-        d2 = np.minimum(d2, 1.0 - X @ centroids[j])
-
-    for _ in range(n_iters):
-        assign = np.argmax(X @ centroids.T, axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                c = X[m].mean(axis=0)
-                centroids[j] = c / max(np.linalg.norm(c), 1e-12)
-    return centroids
-
-
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, cluster) — nearest-centroid assignment, Arrow-vectorized
-    (whole-batch ``X @ C.T`` argmax; the bulk-ADC shape of Q14). At cluster
-    scale this relation is written ``partitionBy(cluster)`` so a probe scans
-    only its clusters' files (partition pruning)."""
-    import pandas as pd
-
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cluster": np.argmax(X @ C.T, axis=1).astype(np.int32),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, cluster int"
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    assignments: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score only the ``n_probe`` clusters nearest the
-    query (IVF probe — the analog of the graph search visiting a small
-    neighborhood). ``n_probe == n_clusters`` degrades gracefully to the
-    exact scan (tested identical to ``cosine_topk``)."""
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q /= max(np.linalg.norm(q), 1e-12)
-    probes = [int(c) for c in np.argsort(-(C @ q), kind="stable")[: int(n_probe)]]
-    if assignments is None:
-        assignments = ivf_assign(embeddings, centroids, id_col, vec_col)
-    cand_ids = assignments.filter(F.col("cluster").isin(probes)).select(id_col)
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-# ---------------------------------------------------------------------------
-# on-disk IVF index: centroids + assignments persisted partitionBy(cluster)
-# ---------------------------------------------------------------------------
-
-def ivf_build(
-    embeddings: DataFrame,
-    index_dir: str,
-    n_clusters: int | None = None,
-    n_iters: int = 10,
-    seed: int = 77,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train and PERSIST the IVF structure: ``centroids/`` (k rows) and
-    ``assignments/`` hive-partitioned by ``cluster`` — so a probe-limited
-    query scans only the probed clusters' directories (partition pruning;
-    plan-audit-tested), instead of recomputing the full assignment scan per
-    query (the round-1 anti-pattern). ``n_clusters`` defaults to ≈√N, the
-    classic IVF operating point. Returns the centroid matrix."""
-    if n_clusters is None:
-        n_clusters = max(2, int(round(float(embeddings.count()) ** 0.5)))
-    cents = ivf_train(embeddings, n_clusters, n_iters, seed=seed,
-                      id_col=id_col, vec_col=vec_col)
-    write_local(
-        arrow_rows(
-            [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cluster int, centroid array<double>",
-        ),
-        index_dir, "centroids", mode="overwrite",
-    )
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col).persist()
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(index_dir, "assignments")
-    )
-    # k-row sidecar of per-cluster LIVE counts: the probe-adaptive query
-    # path reads this instead of re-aggregating the full assignments scan
-    # per query; extend appends positive deltas, delete appends negatives
-    # (readers sum), so the mass-coverage knob never counts dead docs.
-    # Aggregated from the persisted assignment relation (populated by the
-    # write above) instead of re-reading the parquet just written.
-    _write_cluster_sizes(assigned.groupBy("cluster").count().collect(), index_dir,
-                         "overwrite")
-    assigned.unpersist()
-    return cents
-
-
-def _write_cluster_sizes(counts, index_dir: str, mode: str = "append") -> None:
-    """(cluster, n) count deltas to the k-row sidecar, with pyarrow."""
-    write_local(arrow_rows(sorted((int(c), int(n)) for c, n in counts), "cluster int, n long"),
-                index_dir, "cluster_sizes", mode=mode)
-
-
-def ivf_cluster_sizes(spark, index_dir: str) -> dict[int, int]:
-    """Per-cluster LIVE vector counts — the k-row ``cluster_sizes``
-    sidecar (build/extend/delete each append deltas; readers sum), read
-    with pyarrow on the driver: no Spark job. Raises
-    ``FileNotFoundError`` when the sidecar is missing."""
-    tbl = read_required(index_dir, "cluster_sizes")
-    sizes: dict[int, int] = {}
-    for c, n in zip(tbl["cluster"].to_pylist(), tbl["n"].to_pylist()):
-        sizes[c] = sizes.get(c, 0) + n
-    return sizes
-
-
-def ivf_extend(
-    new_embeddings: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Append new vectors to a persisted IVF index WITHOUT retraining:
-    assign each into the existing centroids and append to the hive
-    ``assignments`` partitions — the exact graft of the reference's
-    buildAndMergeNewNodes (insert new nodes into the existing structure,
-    GraphIndexBuilder.java:1015-1057; B10 for the ANN tier). Centroids are
-    unchanged, so extend ≡ rebuild-with-the-same-centroids (tested), and
-    partition pruning keeps working for the appended files. Returns the
-    number of vectors appended. Periodic retrain (a fresh ``ivf_build``)
-    is the compaction analog once drift accumulates."""
-    spark = new_embeddings.sparkSession
-    C = ivf_read_centroids(spark, index_dir)
-    # the assignment is cached on the append, so the sidecar's counts read
-    # it back instead of assigning every new vector a second time
-    delta = ivf_assign(new_embeddings, C, id_col, vec_col).persist()
-    try:
-        delta.write.mode("append").partitionBy("cluster").parquet(
-            os.path.join(index_dir, "assignments")
-        )
-        # keep the k-row live-count sidecar current (appended delta;
-        # readers sum); the counts sum to the number appended
-        counts = delta.groupBy("cluster").count().collect()
-    finally:
-        delta.unpersist()
-    _write_cluster_sizes(counts, index_dir)
-    return sum(int(n) for _, n in counts)
-
-
-def ivf_delete(spark, index_dir: str, ids, id_col: str = "vec_id") -> None:
-    """Tombstone vectors in a persisted IVF index (markNodeDeleted / M1 for
-    the ANN tier), with the compressed tiers' plumbing: the ids not
-    already dead are appended with pyarrow (``vector_delete``) and every
-    ``ivf_topk_indexed`` masks them out of the candidate set; their
-    clusters' negative deltas keep the live-count sidecar honest. Looking
-    those clusters up (an ``IN`` scan of the assignments) is the one Spark
-    job. Physical removal = rebuild (``ivf_build`` over the live rows),
-    the B8 compaction analog."""
-    from ..index.vectors import vector_delete
-
-    new = sorted({int(i) for i in ids} - (tombstone_ids(spark, index_dir) or set()))
-    if not new:
-        return
-    vector_delete(spark, index_dir, new, id_col)
-    dead = Counter(
-        r[0]
-        for r in _assignments(spark, index_dir, id_col)
-        .filter(ids_in(id_col, new)).select("cluster").collect()
-    )
-    if dead:
-        _write_cluster_sizes([(c, -n) for c, n in dead.items()], index_dir)
-
-
-def _assignments(spark, index_dir: str, id_col: str) -> DataFrame:
-    """The hive-partitioned assignments, opened with the schema
-    ``ivf_assign`` writes, so no schema-inference job runs."""
-    return spark.read.schema(f"{id_col} long, cluster int").parquet(
-        os.path.join(index_dir, "assignments")
-    )
-
-
-def ivf_read_centroids(spark, index_dir: str) -> np.ndarray:
-    tbl = read_required(index_dir, "centroids").sort_by("cluster")
-    return np.array(tbl["centroid"].to_pylist(), dtype=np.float64)
-
-
-def ivf_topk_indexed(
-    spark,
-    index_dir: str,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int | None = 4,
-    target_recall: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe-limited top-k against a persisted IVF index: the assignments
-    scan carries a ``cluster IN (probes)`` partition filter, so only the
-    probed hive directories are read (the analog of jvector seeking only
-    the graph neighborhoods a search visits).
-
-    ``n_probe=None`` → probe-ADAPTIVE: probe the nearest clusters (by
-    centroid score) until their cumulative assignment mass covers
-    ``target_recall`` of the corpus. On worst-case (near-uniform) data
-    expected recall ≈ probed fraction — information-theoretic, not an
-    index defect — so mass-coverage is the honest guarantee knob: it
-    over-probes benignly on clustered data (where a few clusters already
-    hold the neighbors) and delivers the floor on noise. Cluster sizes
-    come from the persisted k-row ``cluster_sizes`` sidecar (maintained by
-    build/extend/delete, so tombstoned rows never count toward mass)."""
-    C = ivf_read_centroids(spark, index_dir)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q /= max(np.linalg.norm(q), 1e-12)
-    order = np.argsort(-(C @ q), kind="stable")
-    assignments = _assignments(spark, index_dir, id_col)
-    if n_probe is None:
-        sizes = ivf_cluster_sizes(spark, index_dir)
-        total = max(1, sum(sizes.values()))
-        need = float(target_recall) * total
-        probes, acc = [], 0
-        for c in order:
-            probes.append(int(c))
-            acc += sizes.get(int(c), 0)
-            if acc >= need:
-                break
-    else:
-        probes = [int(c) for c in order[: int(n_probe)]]
-    cand_ids = assignments.filter(F.col("cluster").isin(probes)).select(id_col)
-    dead = tombstone_ids(spark, index_dir)
-    if dead:
-        # deleted ids never reach scoring (M1 mask, the NOT IN filter
-        # every tier applies)
-        cand_ids = cand_ids.filter(~ids_in(id_col, sorted(dead)))
-    cand = embeddings.join(cand_ids, id_col)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-# ---------------------------------------------------------------------------
 # compressed tiers: one record per tier, one two-phase path for all of them
 # ---------------------------------------------------------------------------
 # Reference analog: an ``ApproximateScoreFunction`` feeds a ``Reranker``
@@ -836,19 +540,26 @@ class Tier:
     - ``score(codes, Q, params)`` → S[n × nq], the ONE approximate-score
       kernel: column j has the bits of a one-query call on ``Q[j]``.
     - ``floor``/``factor``: the default rerank depth, max(floor, factor·k).
+      ``score``, ``floor`` and ``factor`` serve the scoring tiers only
+      (those ``serve`` and ``ann_topk_tier`` run).
     - ``read_params(index_dir, manifest)`` and ``write_params(params,
       index_dir)``: the params (or codebooks) table; ``write_params`` is
-      None when the manifest holds everything."""
+      None when the manifest holds everything.
+    - ``partition_by``: the code columns that ``codes/`` is written
+      ``partitionBy`` (IVF's ``cluster``, so a probe reads only its
+      clusters' files). IVF's codes filter rather than score: its
+      ``score`` is None, and its query is ``ivf_topk_indexed``."""
 
     kind: str
     fit: Callable
     encode: Callable
-    score: Callable
+    score: Callable | None
     floor: int
     factor: int
     read_params: Callable
     write_params: Callable | None = None
     code_schema: str = "codes binary"
+    partition_by: tuple[str, ...] = ()
 
     def rerank(self, k: int) -> int:
         return max(self.floor, self.factor * int(k))
@@ -864,6 +575,18 @@ def sample_matrix(
     if len(pdf) == 0:
         return np.empty((0, 0))
     return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+
+
+def training_sample(
+    embeddings: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> np.ndarray:
+    """The L2-normalized :func:`sample_matrix` a k-means trainer fits (PQ's
+    codebooks, IVF's centroids). An empty corpus has nothing to train on
+    and raises ``ValueError``."""
+    X = sample_matrix(embeddings, n, id_col, vec_col)
+    if len(X) == 0:
+        raise ValueError("empty corpus: no vector to train on")
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
 
 
 def first_dim(embeddings: DataFrame, vec_col: str = "embedding") -> int:
@@ -1251,3 +974,90 @@ def ann_topk_sq8_batch(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         SQ8, embeddings, queries, k, rerank, codes, params,
         deleted_ids(deleted, id_col), id_col, vec_col, qid_col, qvec_col,
     )
+
+
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) coarse quantizer — the k-means codebook analog; its
+# codes are each vector's nearest centroid (``index.vectors.ivf_*``)
+# ---------------------------------------------------------------------------
+
+IVF_MAX_TRAINING = 131_072  # reference: MAX_PQ_TRAINING_SET_SIZE = 128k
+                            # (quantization/ProductQuantization.java:67)
+
+
+def ivf_train(
+    embeddings: DataFrame,
+    n_clusters: int = 16,
+    n_iters: int = 10,
+    sample_size: int = IVF_MAX_TRAINING,
+    seed: int = 77,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> np.ndarray:
+    """Deterministic spherical k-means over a bounded training sample —
+    the coarse-quantizer twin of the reference's PQ codebook training
+    (k-means++ init + Lloyd iterations, capped training set;
+    quantization/KMeansPlusPlusClusterer.java:1-450,
+    ProductQuantization.java:88-154). Returns L2-normalized centroids
+    (n_clusters × dim, float64).
+
+    The sample is the lowest ``sample_size`` ids (TakeOrderedAndProject —
+    no global sort), so training is reproducible at any corpus size."""
+    X = training_sample(embeddings, sample_size, id_col, vec_col)
+    n = len(X)
+    k = min(n_clusters, n)
+    rng = np.random.default_rng(seed)
+
+    # k-means++ seeding (distance = 1 - cos on the unit sphere)
+    centroids = np.empty((k, X.shape[1]))
+    centroids[0] = X[int(rng.integers(n))]
+    d2 = 1.0 - X @ centroids[0]
+    for j in range(1, k):
+        p = np.maximum(d2, 0)
+        s = p.sum()
+        idx = int(rng.choice(n, p=p / s)) if s > 0 else int(rng.integers(n))
+        centroids[j] = X[idx]
+        d2 = np.minimum(d2, 1.0 - X @ centroids[j])
+
+    for _ in range(n_iters):
+        assign = np.argmax(X @ centroids.T, axis=1)
+        for j in range(k):
+            m = assign == j
+            if m.any():
+                c = X[m].mean(axis=0)
+                centroids[j] = c / max(np.linalg.norm(c), 1e-12)
+    return centroids
+
+
+def _ivf_encode(X: np.ndarray, params) -> dict:
+    # nearest centroid of each normalized vector: one whole-batch GEMM argmax
+    C = np.ascontiguousarray(params, dtype=np.float64)
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return {"cluster": np.argmax(X @ C.T, axis=1).astype(np.int32)}
+
+
+def _ivf_write(centroids: np.ndarray, index_dir: str) -> None:
+    write_local(
+        arrow_rows(
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
+            "cluster int, centroid array<double>",
+        ),
+        index_dir, "centroids", mode="overwrite",
+    )
+
+
+def _ivf_read(index_dir: str, manifest: dict) -> np.ndarray:
+    tbl = read_required(index_dir, "centroids").sort_by("cluster")
+    return np.array(tbl["centroid"].to_pylist(), dtype=np.float64)
+
+
+def _ivf_fit(embeddings: DataFrame, id_col: str, vec_col: str, **kw):
+    cents = ivf_train(embeddings, id_col=id_col, vec_col=vec_col, **kw)
+    return cents, {"dim": cents.shape[1], "k": len(cents)}
+
+
+IVF = Tier(
+    "ivf", _ivf_fit, _ivf_encode, score=None, floor=0, factor=0,
+    read_params=_ivf_read, write_params=_ivf_write,
+    code_schema="cluster int", partition_by=("cluster",),
+)

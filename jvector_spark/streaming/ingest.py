@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..index.storage import arrow_rows, write_local
+from ..index.storage import arrow_rows, read_local, write_local
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -79,22 +79,19 @@ def _batch_states(
     the index may hold a partial delta. A 'staged' row means the batch's
     raw rows are durably parked in ``stream_staging`` awaiting the next
     amortized merge (see ``flush_staged``)."""
-    path = os.path.join(index_dir, "stream_lineage")
-    if not os.path.exists(path):
+    tbl = read_local(index_dir, "stream_lineage")
+    if tbl is None:
         return set(), set(), set()
-    # mergeSchema: a lineage dir written by the pre-status 4-column format
-    # (or a mix of old and new files) must not have its schema sampled from
-    # one file; rows lacking a status column are treated as committed —
-    # the old format only ever wrote a row AFTER a successful extend.
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if "status" not in df.columns:
-        df = df.withColumn("status", F.lit("complete"))
-    rows = df.select(
-        "batch_id", F.coalesce("status", F.lit("complete")).alias("status")
-    ).collect()
-    complete = {r.batch_id for r in rows if r.status == "complete"}
-    pending = {r.batch_id for r in rows if r.status == "pending"} - complete
-    staged = {r.batch_id for r in rows if r.status == "staged"} - complete
+    # a lineage dir written by the pre-status 4-column format (or a mix of
+    # old and new files) reads with a null (or no) status; such rows are
+    # committed — the old format only ever wrote a row AFTER a successful
+    # extend. pyarrow on the driver: every microbatch reads this table.
+    ids = tbl["batch_id"].to_pylist()
+    status = tbl["status"].to_pylist() if "status" in tbl.column_names else [None] * len(ids)
+    rows = [(b, st or "complete") for b, st in zip(ids, status)]
+    complete = {b for b, st in rows if st == "complete"}
+    pending = {b for b, st in rows if st == "pending"} - complete
+    staged = {b for b, st in rows if st == "staged"} - complete
     return complete, pending, staged
 
 

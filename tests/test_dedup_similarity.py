@@ -126,6 +126,58 @@ def test_embedding_near_dups_lsh_selective_on_real_dups(spark):
     assert found >= 0.9, (found, len(got))
 
 
+@pytest.mark.parametrize("offset", [1 << 40, -1000])
+def test_embedding_near_dups_lsh_wide_ids_verify_like_packed(spark, offset):
+    """Ids that do not fit 31 bits (here ≥ 2^40, or negative) take the
+    verify kernel's struct-pair fallback; it must find the same pairs with
+    the same cos bits as the packed path on the same vectors with small
+    ids."""
+    import numpy as np
+
+    from jvector_spark.operators.similarity import embedding_near_dups_lsh
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((200, 32))
+    X = np.vstack([base, base[:20] + 0.05 * rng.standard_normal((20, 32))])
+
+    def pairs(shift):
+        emb = spark.createDataFrame(
+            [(i + shift, [float(x) for x in v]) for i, v in enumerate(X)],
+            "vec_id long, embedding array<float>",
+        )
+        return sorted(
+            (r.a - shift, r.b - shift, r.cos)
+            for r in embedding_near_dups_lsh(emb, 0.9).collect()
+        )
+
+    packed = pairs(0)
+    assert len(packed) >= 18
+    assert pairs(offset) == packed
+
+
+def test_embedding_near_dups_zero_vector_scores_zero(spark):
+    """A zero vector normalizes to zero (the 1e-300 norm clamp), so every
+    pair with it scores cos 0 — it surfaces at threshold 0 and no pair
+    scores NaN."""
+    import math
+
+    import numpy as np
+
+    from jvector_spark.operators.similarity import embedding_near_dups
+
+    X = np.random.default_rng(5).standard_normal((6, 8))
+    X[2] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "vec_id long, embedding array<float>",
+    )
+    rows = embedding_near_dups(emb, 0.0, n_blocks=2).collect()
+    assert not any(math.isnan(r.cos) for r in rows)
+    zero = {(r.a, r.b): r.cos for r in rows if 2 in (r.a, r.b)}
+    assert sorted(zero) == sorted((min(i, 2), max(i, 2)) for i in range(6) if i != 2)
+    assert set(zero.values()) == {0.0}
+
+
 def test_ann_sq8_two_phase_equals_exact(spark):
     """SQ8 compressed first pass + exact rerank must be rank-identical to
     the exact scan (fast-vs-slow equivalence, TestCompressedVectors.java:231)

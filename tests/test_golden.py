@@ -111,9 +111,9 @@ def vec_golden_case():
         return json.load(f)
 
 
-@pytest.mark.parametrize("tier", ["pq", "sq8", "bq", "nvq"])
+@pytest.mark.parametrize("tier", ["pq", "sq8", "bq", "nvq", "ivf"])
 def test_golden_vector_tier_loads_and_answers(spark, vec_golden_case, tier):
-    """Committed PQ/SQ8/BQ structures must keep loading and answering
+    """Committed PQ/SQ8/BQ/NVQ/IVF structures must keep loading and answering
     rank-identically (the version0.pq idiom for the vector-tier formats,
     TestProductQuantization.java:216-231): a format-breaking change to
     index/vectors.py fails HERE without regenerating the artifacts."""
@@ -123,6 +123,7 @@ def test_golden_vector_tier_loads_and_answers(spark, vec_golden_case, tier):
         ann_topk_nvq_indexed,
         ann_topk_pq_indexed,
         ann_topk_sq8_indexed,
+        ivf_topk_indexed,
         read_manifest,
     )
 
@@ -131,6 +132,7 @@ def test_golden_vector_tier_loads_and_answers(spark, vec_golden_case, tier):
         "sq8": ann_topk_sq8_indexed,
         "bq": ann_topk_bq_indexed,
         "nvq": ann_topk_nvq_indexed,
+        "ivf": ivf_topk_indexed,
     }
     idx = os.path.join(GOLDEN, f"{tier}_index")
     man = read_manifest(spark, idx)

@@ -1,5 +1,6 @@
 """IVF ANN tests: deterministic training, full-probe == exact scan,
-probe-recall floor, Arrow-vectorized assignment.
+probe-recall floor, the nearest-centroid encode, and the persisted
+structure's extend, delete and partition-pruned probe.
 
 Analog of the reference's PQ/codebook tests: deterministic k-means training
 on a capped sample (TestProductQuantization.java:56-133) and
@@ -17,10 +18,12 @@ def embeddings(spark):
 
 
 @pytest.fixture(scope="module")
-def centroids(embeddings):
-    from jvector_spark.operators.similarity import ivf_train
+def ivf_dir(tmp_path_factory, embeddings):
+    from jvector_spark.index.vectors import ivf_build
 
-    return ivf_train(embeddings, n_clusters=8, n_iters=6, seed=77)
+    d = str(tmp_path_factory.mktemp("ivf") / "idx")
+    ivf_build(embeddings, d, n_clusters=8, n_iters=6, seed=77)
+    return d
 
 
 def test_training_is_deterministic(embeddings):
@@ -32,21 +35,44 @@ def test_training_is_deterministic(embeddings):
     assert np.allclose(np.linalg.norm(a, axis=1), 1.0)
 
 
-def test_assignment_covers_all_vectors(spark, embeddings, centroids):
-    from jvector_spark.operators.similarity import ivf_assign
+def test_assignment_covers_all_vectors(spark, embeddings, ivf_dir):
+    """The written ``codes/`` hold every vector once, each in a
+    ``cluster=c`` directory of a trained centroid."""
+    from jvector_spark.index.vectors import ivf_read_centroids, read_codes
 
-    assigns = ivf_assign(embeddings, centroids)
-    n = embeddings.count()
-    assert assigns.count() == n
-    clusters = {r.cluster for r in assigns.select("cluster").distinct().collect()}
-    assert clusters <= set(range(len(centroids)))
+    codes = read_codes(spark, ivf_dir)
+    assert codes.columns == ["vec_id", "cluster"]
+    rows = codes.collect()
+    assert sorted(r.vec_id for r in rows) == sorted(
+        r.vec_id for r in embeddings.select("vec_id").collect()
+    )
+    clusters = {r.cluster for r in rows}
+    assert clusters <= set(range(len(ivf_read_centroids(spark, ivf_dir))))
     assert len(clusters) > 1  # training actually split the space
 
 
-def test_full_probe_equals_exact(spark, embeddings, centroids):
+def test_encode_kernel_matches_numpy_argmax():
+    """The IVF encode kernel (no Spark) picks, for every vector, the
+    centroid with the largest cosine — a per-row numpy oracle; a zero
+    vector stays finite and lands in a valid cluster."""
+    from jvector_spark.operators.similarity import IVF
+
+    rng = np.random.default_rng(11)
+    C = rng.standard_normal((7, 16))
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    X = rng.standard_normal((300, 16)) * rng.uniform(0.1, 10.0, (300, 1))
+    X[5] = 0.0
+    got = IVF.encode(X, C)["cluster"]
+    assert got.dtype == np.int32
+    want = [int(np.argmax([x @ c / max(np.linalg.norm(x), 1e-12) for c in C])) for x in X]
+    assert got.tolist() == want
+
+
+def test_full_probe_equals_exact(spark, embeddings, ivf_dir):
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import cosine_topk, ivf_topk
+    from jvector_spark.index.vectors import ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
     qv = list(
         embeddings.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -58,20 +84,20 @@ def test_full_probe_equals_exact(spark, embeddings, centroids):
     ]
     got = [
         (r.rank, r.vec_id, round(r.cos, 9))
-        for r in ivf_topk(base, centroids, qv, k=10, n_probe=len(centroids)).collect()
+        for r in ivf_topk_indexed(spark, ivf_dir, base, qv, k=10, n_probe=8).collect()
     ]
     assert got == want
 
 
-def test_probe_recall_floor(spark, embeddings, centroids):
+def test_probe_recall_floor(spark, embeddings, ivf_dir):
     """recall@10 over several query vectors with n_probe=3 of 8 — the IVF
     probe must land most true neighbors (analog of the reference's
     recall > 0.9 randomized floor; looser here: tiny corpus, hard floor)."""
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import cosine_topk, ivf_assign, ivf_topk
+    from jvector_spark.index.vectors import ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
-    assigns = ivf_assign(embeddings, centroids).cache()
     recalls = []
     for qid in [0, 5, 11]:
         qv = list(
@@ -81,9 +107,7 @@ def test_probe_recall_floor(spark, embeddings, centroids):
         want = {r.vec_id for r in cosine_topk(base, qv, k=10).collect()}
         got = {
             r.vec_id
-            for r in ivf_topk(
-                base, centroids, qv, k=10, n_probe=3, assignments=assigns
-            ).collect()
+            for r in ivf_topk_indexed(spark, ivf_dir, base, qv, k=10, n_probe=3).collect()
         }
         recalls.append(len(want & got) / 10)
     assert sum(recalls) / len(recalls) >= 0.5, recalls
@@ -99,11 +123,8 @@ def test_ivf_recall_floor_on_clustered_data(spark, tmp_path):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        cosine_topk,
-        ivf_build,
-        ivf_topk_indexed,
-    )
+    from jvector_spark.index.vectors import ivf_build, ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
     rng = np.random.default_rng(3)
     centers = rng.standard_normal((20, 32)) * 3.0
@@ -133,11 +154,8 @@ def test_probe_adaptive_contract_operating_point_recall(spark, embeddings, tmp_p
     verdict: the contract row must clear 0.9 on its own fixture)."""
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        cosine_topk,
-        ivf_build,
-        ivf_topk_indexed,
-    )
+    from jvector_spark.index.vectors import ivf_build, ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
     d = str(tmp_path / "ivf_adaptive")
     base_all = embeddings
@@ -161,18 +179,19 @@ def test_probe_adaptive_contract_operating_point_recall(spark, embeddings, tmp_p
 
 def test_ivf_extend_equals_rebuild_with_same_centroids(spark, embeddings, tmp_path):
     """Append-into-existing-centroids (B10 for the ANN tier): extending an
-    index built on half the corpus must yield the SAME assignments relation
-    as assigning the full corpus against those centroids — and identical
+    index built on half the corpus must yield the SAME codes relation as
+    encoding the full corpus against those centroids — and identical
     top-k answers."""
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        ivf_assign,
+    from jvector_spark.index.vectors import (
         ivf_build,
         ivf_extend,
         ivf_read_centroids,
         ivf_topk_indexed,
+        read_codes,
     )
+    from jvector_spark.operators.similarity import IVF, encode_codes
 
     half = embeddings.filter(F.col("vec_id") % 2 == 0)
     rest = embeddings.filter(F.col("vec_id") % 2 == 1)
@@ -183,12 +202,9 @@ def test_ivf_extend_equals_rebuild_with_same_centroids(spark, embeddings, tmp_pa
 
     C = ivf_read_centroids(spark, d)
     want_assign = {
-        (r.vec_id, r.cluster) for r in ivf_assign(embeddings, C).collect()
+        (r.vec_id, r.cluster) for r in encode_codes(IVF, embeddings, C).collect()
     }
-    got_assign = {
-        (r.vec_id, r.cluster)
-        for r in spark.read.parquet(str(tmp_path / "ivf_ext" / "assignments")).collect()
-    }
+    got_assign = {(r.vec_id, r.cluster) for r in read_codes(spark, d).collect()}
     assert got_assign == want_assign
 
     qv = list(
@@ -205,57 +221,15 @@ def test_ivf_extend_equals_rebuild_with_same_centroids(spark, embeddings, tmp_pa
     assert got == want
 
 
-def test_ivf_extend_assigns_the_delta_once(spark, embeddings, tmp_path):
-    """The sidecar's per-cluster counts read the assignment the append
-    cached: extend's last query (the counts) scans the cache, and the
-    Python map node of ``ivf_assign`` — present in its plan only as the
-    cached relation's lineage — emits no row in that query."""
-    from pyspark.sql import functions as F
-
-    from jvector_spark.operators.similarity import ivf_build, ivf_extend
-
-    d = str(tmp_path / "ivf_once")
-    ivf_build(embeddings.filter(F.col("vec_id") % 2 == 0), d, n_clusters=8,
-              n_iters=2, seed=5)
-    rest = embeddings.filter(F.col("vec_id") % 2 == 1)
-    store = spark._jsparkSession.sharedState().statusStore()
-    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
-    listener_bus.waitUntilEmpty()
-    n0 = store.executionsCount()
-    n_added = ivf_extend(rest, d)
-    listener_bus.waitUntilEmpty()
-    execs = store.executionsList(n0, 1 << 20)
-    assert execs.size() >= 2  # the append, then the counts
-    count_id = execs.last().executionId()
-    graph = store.planGraph(count_id).allNodes()
-    nodes = [graph.apply(i) for i in range(graph.size())]
-    names = [n.name() for n in nodes]
-    assert any("InMemoryTableScan" in n for n in names), names
-    values = store.executionMetrics(count_id)
-    py_rows = []
-    for node in nodes:
-        if "InPandas" in node.name() or "InArrow" in node.name():
-            ms = node.metrics()
-            for m in (ms.apply(i) for i in range(ms.size())):
-                v = values.get(m.accumulatorId())
-                if m.name() == "number of output rows" and v.isDefined():
-                    py_rows.append(int(v.get().replace(",", "")))
-    assert sum(py_rows) == 0, py_rows
-    assert n_added == rest.count()
-
-
-def test_ivf_delete_masks_topk(spark, embeddings, tmp_path):
+def test_ivf_delete_masks_topk(spark, embeddings, tmp_path, monkeypatch):
     """Tombstoned ids (M1 for the ANN tier) must vanish from every probe's
     candidate set — the survivors' ranking equals the exact scan over the
-    live rows."""
+    live rows, on both sides of the probe's sizing rule."""
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        cosine_topk,
-        ivf_build,
-        ivf_delete,
-        ivf_topk_indexed,
-    )
+    from jvector_spark.index import vectors as V
+    from jvector_spark.index.vectors import ivf_build, ivf_delete, ivf_topk_indexed
+    from jvector_spark.operators.similarity import cosine_topk
 
     d = str(tmp_path / "ivf_del")
     ivf_build(embeddings, d, n_clusters=8, n_iters=4, seed=77)
@@ -276,6 +250,12 @@ def test_ivf_delete_masks_topk(spark, embeddings, tmp_path):
     assert not {v for _, v in got} & set(top)
     live = base.filter(~F.col("vec_id").isin(top))
     want = [(r.rank, r.vec_id) for r in cosine_topk(live, qv, k=10).collect()]
+    assert got == want
+    monkeypatch.setattr(V, "IVF_DRIVER_MAX_PROBED", 0)
+    got = [
+        (r.rank, r.vec_id)
+        for r in ivf_topk_indexed(spark, d, base, qv, k=10, n_probe=8).collect()
+    ]
     assert got == want
 
 
@@ -316,52 +296,78 @@ def test_sq8_delete_masks_topk(spark, embeddings):
     assert got_b == want
 
 
-def test_ivf_indexed_probe_prunes_partitions(spark, embeddings, tmp_path):
-    """The persisted-assignments probe must PARTITION-PRUNE: the scan's
-    plan carries a cluster partition filter, so only probed hive dirs are
-    read (round 1 recomputed the full assignment per query)."""
+def test_ivf_indexed_probe_prunes_partitions(spark, embeddings, ivf_dir, monkeypatch):
+    """A probe reads only the probed clusters' codes: on the Spark side
+    the codes scan carries a ``cluster`` partition filter and is joined to
+    the embeddings (no id list), and on the driver side pyarrow opens
+    exactly the probed ``cluster=c`` files (round 1 recomputed the full
+    assignment per query)."""
+    import re
+
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import ivf_build, ivf_topk_indexed
-    from jvector_spark.plans import explain_str
+    from jvector_spark.index import vectors as V
+    from jvector_spark.operators import similarity as S
 
-    d = str(tmp_path / "ivf_small")
-    ivf_build(embeddings, d, n_clusters=8, n_iters=4, seed=77)
     qv = list(
         embeddings.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     )
-    df = ivf_topk_indexed(
-        spark, d, embeddings.filter(F.col("vec_id") != 0), qv, k=10, n_probe=2
-    )
-    plan = explain_str(df, "formatted")
-    assert "cluster" in plan  # partition filter present on assignments scan
-    # and no full-assignment recompute: no mapInPandas over embeddings
-    # appears on the assignments side (it is a pure parquet scan)
-    got = df.count()
-    assert got > 0
+    base = embeddings.filter(F.col("vec_id") != 0)
+    C = V.ivf_read_centroids(spark, ivf_dir)
+    probes = np.argsort(-(C @ S.unit(np.asarray(qv, dtype=np.float64))), kind="stable")[:2]
+    files = V._cluster_files(ivf_dir)
+    probed = sorted(f for c in probes for f in files.get(int(c), []))
+    assert probed and len(probed) < sum(len(fs) for fs in files.values())
+
+    opened = []
+    read_files = S.read_files
+
+    def spy(fs, *args, **kw):
+        opened.extend(fs)
+        return read_files(fs, *args, **kw)
+
+    monkeypatch.setattr(S, "read_files", spy)
+    driver = V.ivf_topk_indexed(spark, ivf_dir, base, qv, k=10, n_probe=2).collect()
+    assert sorted(opened) == probed
+
+    monkeypatch.setattr(V, "IVF_DRIVER_MAX_PROBED", 0)
+    opened.clear()
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    n0 = store.executionsCount()
+    spark_rows = V.ivf_topk_indexed(spark, ivf_dir, base, qv, k=10, n_probe=2).collect()
+    listener_bus.waitUntilEmpty()
+    execs = store.executionsList(n0, 1 << 20)
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    scans = [p for p in plans if "codes" in p]
+    assert scans and all(
+        re.search(r"PartitionFilters: \[[^\]]*cluster#\d+ IN \(", p) for p in scans
+    ), scans
+    # the Spark side joins the probed codes: no id list reaches a filter
+    assert not any(re.search(r"vec_id#\d+L? (IN|INSET) ", p) for p in plans), plans
+    assert not opened
+    assert spark_rows == driver and len(driver) == 10
 
 
-def test_cluster_sizes_sidecar_tracks_build_extend_delete(spark, embeddings, tmp_path):
+def test_cluster_sizes_sidecar_tracks_build_extend_delete(
+    spark, embeddings, tmp_path, monkeypatch
+):
     """The persisted k-row ``cluster_sizes`` sidecar must equal the actual
     live per-cluster counts after build, extend, and delete — so the
     probe-adaptive mass knob reads k rows instead of re-aggregating the
-    assignments scan per query, and never counts tombstoned docs."""
+    codes scan per query, and never counts tombstoned docs. A delete looks
+    up its ids' clusters under the codes sizing rule, so both sides of the
+    rule (a pyarrow read, a Spark scan) must keep the sidecar right."""
     from pyspark.sql import functions as F
 
-    from jvector_spark.operators.similarity import (
-        ivf_build,
-        ivf_cluster_sizes,
-        ivf_delete,
-        ivf_extend,
-    )
+    from jvector_spark.index import vectors as V
 
-    d = str(tmp_path / "ivf_sizes")
     first = embeddings.filter(F.col("vec_id") < 1500)
     rest = embeddings.filter(F.col("vec_id") >= 1500)
-    ivf_build(first, d, n_clusters=8, n_iters=4, seed=77)
 
-    def live_counts(dead=()):
-        a = spark.read.parquet(d + "/assignments")
+    def live_counts(d, dead=()):
+        a = V.read_codes(spark, d)
         if dead:
             a = a.filter(~F.col("vec_id").isin(list(dead)))
         return {
@@ -369,16 +375,22 @@ def test_cluster_sizes_sidecar_tracks_build_extend_delete(spark, embeddings, tmp
             for r in a.groupBy("cluster").agg(F.count("*").alias("n")).collect()
         }
 
-    assert ivf_cluster_sizes(spark, d) == live_counts()
-    ivf_extend(rest, d)
-    assert ivf_cluster_sizes(spark, d) == live_counts()
-    dead = [3, 7, 11]
-    ivf_delete(spark, d, dead)
-    got = ivf_cluster_sizes(spark, d)
-    want = live_counts(dead)
-    # zero-count clusters may drop out of either map — compare non-zero
-    assert {k: v for k, v in got.items() if v} == {k: v for k, v in want.items() if v}
-    # re-deleting the same ids must not double-count the negatives
-    ivf_delete(spark, d, dead)
-    got2 = ivf_cluster_sizes(spark, d)
-    assert {k: v for k, v in got2.items() if v} == {k: v for k, v in want.items() if v}
+    def nonzero(sizes):
+        # zero-count clusters may drop out of either map — compare non-zero
+        return {k: v for k, v in sizes.items() if v}
+
+    for side, cap in (("driver", 1 << 62), ("spark", 0)):
+        monkeypatch.setattr(V, "DRIVER_MAX_CODE_BYTES", cap)
+        d = str(tmp_path / f"ivf_sizes_{side}")
+        V.ivf_build(first, d, n_clusters=8, n_iters=4, seed=77)
+        assert V.ivf_cluster_sizes(spark, d) == live_counts(d), side
+        V.ivf_extend(rest, d)
+        assert V.ivf_cluster_sizes(spark, d) == live_counts(d), side
+        dead = [3, 7, 11, 1600]
+        V.ivf_delete(spark, d, dead)
+        want = nonzero(live_counts(d, dead))
+        assert want != nonzero(live_counts(d))
+        assert nonzero(V.ivf_cluster_sizes(spark, d)) == want, side
+        # re-deleting the same ids must not double-count the negatives
+        V.ivf_delete(spark, d, dead)
+        assert nonzero(V.ivf_cluster_sizes(spark, d)) == want, side

@@ -347,3 +347,32 @@ def test_orphaned_committed_staging_is_pruned(spark, stream_pdf, tmp_path_factor
     assert staged_docs(spark, idx) is None  # committed → not a memtable row
     flush_staged(spark, idx)
     assert not os.path.exists(orphan)
+
+
+def test_batch_states_read_a_mixed_lineage_without_a_job(spark, tmp_path):
+    """A lineage that mixes a pre-status 4-column file with new rows: the
+    old rows count as committed (a null status), a 'pending' or 'staged'
+    row of a committed batch is ignored, and the read is a pyarrow read
+    on the driver — no Spark job per microbatch."""
+    from test_local_tables import _jobs
+
+    from jvector_spark.index.storage import arrow_rows, write_local
+    from jvector_spark.streaming.ingest import _batch_states, _record_batch
+
+    d = str(tmp_path / "idx")
+    assert _batch_states(spark, d) == (set(), set(), set())
+    write_local(
+        arrow_rows(
+            [(1, 10, 100, 1000), (2, 5, 50, 500)],
+            "batch_id long, docs_indexed long, postings_emitted long, bytes_compressed long",
+        ),
+        d, "stream_lineage",
+    )
+    assert _batch_states(spark, d) == ({1, 2}, set(), set())
+    _record_batch(spark, d, 2, {}, status="pending")
+    _record_batch(spark, d, 3, {}, status="pending")
+    _record_batch(spark, d, 4, {}, status="staged")
+    _record_batch(spark, d, 5, {})
+    states, jobs = _jobs(spark, lambda: _batch_states(spark, d))
+    assert states == ({1, 2, 5}, {3}, {4})
+    assert jobs == 0

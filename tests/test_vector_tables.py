@@ -476,10 +476,11 @@ def test_batch_serves_in_two_jobs(spark, embeddings, tier_dirs, tier):
     assert len(rows) == 60 and not {r.vec_id for r in rows} & {0, 1}
 
 
-@pytest.mark.parametrize("tier", TIERS)
+@pytest.mark.parametrize("tier", TIERS + ("ivf",))
 def test_extend_counts_on_the_write(spark, embeddings, tmp_path, tier):
     """An extend encodes the delta once: the count is observed on the
-    codes append, one Spark job."""
+    codes append, one Spark job (IVF's sidecar deltas come from the
+    appended files' footers)."""
     from jvector_spark.index import vectors as V
 
     d = str(tmp_path / tier)
@@ -491,13 +492,14 @@ def test_extend_counts_on_the_write(spark, embeddings, tmp_path, tier):
 
 
 def test_ivf_delete_and_query_job_budgets(spark, embeddings, tmp_path):
-    """IVF shares the tiers' tombstone plumbing: a delete is one Spark job
-    (the clusters of the new ids), a repeat delete none, the sidecar and
-    centroid reads none, and a probed query two, with or without
-    tombstones. A missing sidecar raises."""
+    """IVF shares the tiers' tombstone plumbing: under the codes sizing
+    rule a delete (the clusters of the new ids, read with pyarrow), a
+    repeat delete, and the sidecar and centroid reads run no Spark job,
+    and a probed query one (the fetch of the candidates' raw vectors),
+    with or without tombstones. A missing sidecar raises."""
     import shutil
 
-    from jvector_spark.operators.similarity import (
+    from jvector_spark.index.vectors import (
         ivf_build,
         ivf_cluster_sizes,
         ivf_delete,
@@ -509,10 +511,10 @@ def test_ivf_delete_and_query_job_budgets(spark, embeddings, tmp_path):
     ivf_build(embeddings, d, n_clusters=8, n_iters=4, seed=77)
     qv = list(embeddings.filter(F.col("vec_id") == 4).select("embedding").first()[0])
     rows, jobs = _jobs(spark, lambda: ivf_topk_indexed(spark, d, embeddings, qv, k=10).collect())
-    assert jobs <= 2
+    assert jobs <= 1
     dead = [r.vec_id for r in rows[:3]]
     _, jobs = _jobs(spark, lambda: ivf_delete(spark, d, dead + dead[:1]))
-    assert jobs == 1
+    assert jobs == 0
     _, jobs = _jobs(spark, lambda: ivf_delete(spark, d, dead))
     assert jobs == 0
     _, jobs = _jobs(spark, lambda: (ivf_cluster_sizes(spark, d), ivf_read_centroids(spark, d)))
@@ -522,7 +524,7 @@ def test_ivf_delete_and_query_job_budgets(spark, embeddings, tmp_path):
             spark,
             lambda: ivf_topk_indexed(spark, d, embeddings, qv, k=10, n_probe=n_probe).collect(),
         )
-        assert jobs <= 2 and not {r.vec_id for r in rows} & set(dead)
+        assert jobs <= 1 and not {r.vec_id for r in rows} & set(dead)
     shutil.rmtree(os.path.join(d, "cluster_sizes"))
     with pytest.raises(FileNotFoundError, match="cluster_sizes"):
         ivf_cluster_sizes(spark, d)

@@ -298,14 +298,13 @@ def test_vector_delete_survivors_equal_exact_live_scan(spark, embeddings, tmp_pa
     nor consume rerank budget (M1 parity across sq8/pq/bq/nvq/ivf; IVF
     runs at full probe so its candidate set is the whole live corpus)."""
     from jvector_spark.index import vectors as V
-    from jvector_spark.operators import similarity as S
 
     if tier == "ivf":
-        build = lambda emb, d: S.ivf_build(emb, d, n_clusters=8, n_iters=4, seed=77)
-        query = lambda sp, d, emb, qv, k: S.ivf_topk_indexed(
+        build = lambda emb, d: V.ivf_build(emb, d, n_clusters=8, n_iters=4, seed=77)
+        query = lambda sp, d, emb, qv, k: V.ivf_topk_indexed(
             sp, d, emb, qv, k=k, n_probe=8
         )
-        delete = lambda sp, d, ids: S.ivf_delete(sp, d, ids)
+        delete = V.ivf_delete
     else:
         build = {
             "pq": V.pq_build, "sq8": V.sq8_build,

@@ -1,5 +1,5 @@
 """Generate the committed golden VECTOR-TIER structures
-(tests/golden/{pq,sq8,bq}_index) and their expected top-k results — the
+(tests/golden/{pq,sq8,bq,nvq,ivf}_index) and their expected top-k results — the
 ``version0.pq`` idiom applied to the persisted compressed-vector formats
 (jvector-tests/resources/version0.pq, TestProductQuantization.java:216-231).
 
@@ -47,6 +47,8 @@ def main() -> None:
         ann_topk_pq_indexed,
         ann_topk_sq8_indexed,
         bq_build,
+        ivf_build,
+        ivf_topk_indexed,
         nvq_build,
         pq_build,
         sq8_build,
@@ -62,6 +64,7 @@ def main() -> None:
         "sq8": os.path.join(GOLDEN, "sq8_index"),
         "bq": os.path.join(GOLDEN, "bq_index"),
         "nvq": os.path.join(GOLDEN, "nvq_index"),
+        "ivf": os.path.join(GOLDEN, "ivf_index"),
     }
     only = set(sys.argv[1:]) or set(dirs)
     dirs = {t: d for t, d in dirs.items() if t in only}
@@ -78,12 +81,15 @@ def main() -> None:
         bq_build(emb, dirs["bq"])
     if "nvq" in dirs:
         nvq_build(emb, dirs["nvq"])
+    if "ivf" in dirs:
+        ivf_build(emb, dirs["ivf"], n_clusters=8, n_iters=4, seed=77)
 
     runners = {
         "pq": ann_topk_pq_indexed,
         "sq8": ann_topk_sq8_indexed,
         "bq": ann_topk_bq_indexed,
         "nvq": ann_topk_nvq_indexed,
+        "ivf": ivf_topk_indexed,
     }
     runners = {t: f for t, f in runners.items() if t in dirs}
     expected: dict = {"query_vec_ids": QUERY_VEC_IDS, "k": K, "tiers": {}}
