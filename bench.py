@@ -826,7 +826,12 @@ def transcripts_job(
 ) -> dict:
     """The north-rule job: build the inverted index over the transcripts
     corpus, then answer the fixed reference query set via Block-Max WAND.
-    Returns wall-clock + throughput numbers.
+    Returns wall-clock + throughput numbers. ``build_phase_secs`` is the
+    build's ``phase_secs``, whose phases name the side that ran: the Spark
+    pipeline's (``ids_tokenize_cache``, ``doc_stats_write``, ``term_ids``,
+    ``encode_shuffle_write``, ...) or, for a driver-sized corpus, the
+    driver side's (``collect``, ``encode``, ``write``); both end in
+    ``meta_writes``.
 
     ``warmup`` first runs a ~1/12-size build + a 50-query batch untimed —
     the JIT / Python-worker-pool / shuffle-service warmup the reference

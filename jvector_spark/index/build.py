@@ -1,9 +1,27 @@
 """Inverted-index build pipeline (SURVEY.md §3.1 Spark translation).
 
 ``build_index``, ``build_index_transcripts`` and the doc-partitioned
-layout's ``docpart.build_doc_partitioned`` run one pipeline, ``_build``
-(reference analog: GraphIndexBuilder.build → cleanup → write,
-jvector-base/.../graph/GraphIndexBuilder.java:439-511):
+layout's ``docpart.build_doc_partitioned`` run one build with two sides
+and one commit tail (reference analog: GraphIndexBuilder.build → cleanup
+→ write, jvector-base/.../graph/GraphIndexBuilder.java:439-511; a build
+inserts nodes into an empty graph, as an extend inserts more,
+GraphIndexBuilder.java:591-662). The side is decided once, before
+anything is tokenized or cached, by the sizing rule extends use too
+(:func:`_driver_sized`, :data:`DRIVER_MAX_INGEST_BYTES`).
+
+**The driver side** (:func:`_build_on_driver`) is an extend into an empty
+index: :func:`_ingest_on_driver`, the body ``extend_index``'s driver path
+also runs, with no base. One job tokenizes the corpus and collects it to
+the driver as Arrow (sorted by the order columns, which the ids follow);
+tf, dl, df and cf are counted with pyarrow; every term is fresh, numbered
+in term order from 0 with the salt plan below; the salt and part id of
+each posting are computed as the Spark side's expressions compute them
+(``hash_part_id``, or the doc bucket); ``encode_partition_pdf`` encodes
+the blocks. Every row is computed before the first file is written, and
+every table is overwritten with pyarrow (``write_local``: staged and
+swapped in), one postings file per ``part_id=`` directory. 1 Spark job.
+
+**The Spark side** (:func:`_build`) runs for larger inputs:
 
   1. **Tokenize once** into a cached narrow relation (doc id, token array
      [, doc_map columns]); the fused transcripts build does it inside the
@@ -27,20 +45,27 @@ jvector-base/.../graph/GraphIndexBuilder.java:439-511):
      salt) on the term layout; the salt itself on the doc layout, whose
      salt is the doc bucket. When the widths do not fit 63 bits, the four
      columns travel instead.
-  5. **Commit**: one ``build_lineage`` row per part (per doc bucket on the
-     doc layout), with its postings and bytes observed during the write,
-     then ``segments``, the completion marker; both are written with
-     pyarrow.
+
+**Commit** (:func:`_commit`, both sides): one ``build_lineage`` row per
+part (per doc bucket on the doc layout), with its postings and bytes
+(observed during the Spark side's write, counted on the driver side's
+blocks), honouring ``fail_after_parts``, then ``segments``, the
+completion marker; both are written with pyarrow. Both sides write the
+same rows in every table (tests/test_build_sides.py). An empty corpus
+raises ``ValueError("empty corpus …")`` on both sides.
 
 Resume (analog of OnHeapGraphIndex save/load + CheckpointManager.java:33-112,
 B11/B12): a resumed build encodes only the parts that have no complete
-lineage row and overwrites only their directories; every other table is
+lineage row and overwrites only their directories (the driver side
+encodes every part, and writes only those); every other table is
 rewritten with the same rows. The resumed index equals an uninterrupted
-build (tested).
+build (tested on both sides).
 
 Skew (SURVEY.md P11): a term with df > ``salt_threshold`` is split into
-``n_salts`` doc-range sub-lists — salt = doc_id * n_salts // n_docs — so a
-hot term's postings land in multiple shuffle groups. Doc-range (not hash)
+``n_salts = ceil(df / target_salt_postings)`` doc-range sub-lists — salt
+= ``least(int(local * n_salts / n_docs), n_salts - 1)`` in doubles, where
+``local = doc_id - id_offset`` — so a hot term's postings land in
+multiple shuffle groups. Doc-range (not hash)
 salting keeps every (term, salt) run sorted and doc-disjoint, which the
 WAND query path exploits for block skipping.
 
@@ -54,15 +79,19 @@ vocabulary aggregate combines map-side.
 from __future__ import annotations
 
 import math
+import os
 import threading
 import time
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import BLOCK_SIZE, BM25_B, BM25_K1
 from ..functions.analysis import TOKEN_PATTERN, tokens_col
@@ -72,13 +101,19 @@ from .storage import (
     FORMAT_VERSION,
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
+    TABLE_SCHEMAS,
     arrow_rows,
+    arrow_schema,
+    footer_max,
+    hash_part_id,
     lineage_totals,
     part_id_col,
+    read_dictionary,
     read_local,
     sized_shuffle_n,
     table_path,
     write_local,
+    write_local_parts,
     write_table,
 )
 
@@ -95,6 +130,44 @@ ENCODE_ARROW_BATCH = 131072
 # serializes the session-global Arrow batch-size override around the encode
 # write across threads sharing a SparkSession
 _ARROW_BATCH_LOCK = threading.Lock()
+
+# The sizing rule between the two sides of a build and of an extend: the
+# input is ingested on the driver (:func:`_ingest_on_driver`) when the
+# Catalyst size estimate of its tokenized projection (id or order columns,
+# doc_map columns, token array; for a Parquet scan, the files' bytes scaled
+# to those columns) is at most this constant. A build over an empty base
+# and an extend over a live one run the same driver body, so one cap sizes
+# both.
+#
+# Speed sets no cap: on local[4], transcript deltas into a copy of a
+# 6,000-turn index, the driver side was faster at every measured size, from
+# 400 turns (17 KB; 2.3 vs 10.0 core-s) to 400,000 (14 MB; 12.0 vs 71.7
+# core-s); serve_mixed's cold build of 6,000 turns ran 1 job in 4.4 s on
+# the driver side against the Spark side's 27 jobs in 11.7 s. Driver
+# memory does. Measured on extends (order_cols and doc_map_cols set; peak
+# RSS of the driver's Python process during the extend, above its level
+# before it):
+#     turns  estimate  collected Arrow  peak RSS
+#     2,000     64 KB                     22 MB
+#    30,000    0.9 MB                    171 MB
+#   100,000    3.0 MB          17 MB     480 MB
+#   200,000    5.9 MB          34 MB    1.07 GB
+# The peak is ~180x the estimate; the collect itself (~6x) is also bounded
+# by spark.driver.maxResultSize (1 GB by default), past which the toArrow
+# job fails before anything is written. The cap holds the peak near 0.75 GB,
+# under that same 1 GB. The Spark side is the fallback for what the driver
+# cannot hold: larger inputs, and plans Spark cannot size (an RDD scan
+# estimates at Long.MaxValue). No benchmark workload runs above the cap, so
+# the two sides' costs there are unmeasured.
+DRIVER_MAX_INGEST_BYTES = 1 << 22
+
+
+def _driver_sized(sel: DataFrame) -> bool:
+    """The sizing rule: the tokenized projection's Catalyst ``sizeInBytes``
+    (file sizes for a file scan, no job) is at most
+    :data:`DRIVER_MAX_INGEST_BYTES`."""
+    est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return est <= DRIVER_MAX_INGEST_BYTES
 
 
 def _bg_job(fn) -> "tuple[threading.Thread, list]":
@@ -377,6 +450,301 @@ def exchange_row(
     return enriched.select(tsdd.alias("tsdd")), (salt_bits, doc_bits, dl_bits)
 
 
+def _resolve_vocabulary(
+    vocab: list, max_tid: int | None, n_salts_of=None
+) -> tuple[list, list, list]:
+    """Split an ingest's vocabulary ``(term, df_new, cf_new, term_id,
+    n_salts)`` — term_id/n_salts null for a term the dictionary lacks —
+    into the dictionary's update rows ``(term, df_new, cf_new)``, its fresh
+    rows ``(term, term_id, df, cf, n_salts)`` and the encode's ``(term,
+    term_id, n_salts)`` map. Fresh terms are numbered in term order from
+    ``max_tid + 1`` (from 0 for an empty dictionary): the ids a dense rank
+    over ``term`` would give them. A fresh term gets ``n_salts_of(df)``
+    salts (a build's salt plan), else 1. Python orders ``str`` by code
+    point, which is the UTF-8 byte order Spark sorts strings by."""
+    nxt = 0 if max_tid is None else max_tid + 1
+    updates, fresh, tmap = [], [], []
+    for term, df_new, cf_new, tid, n_salts in sorted(vocab, key=lambda r: r[0]):
+        if tid is None:
+            tid, n_salts = nxt, n_salts_of(df_new) if n_salts_of else 1
+            nxt += 1
+            fresh.append((term, tid, df_new, cf_new, n_salts))
+        else:
+            updates.append((term, df_new, cf_new))
+        tmap.append((term, tid, n_salts))
+    return updates, fresh, tmap
+
+
+def _bucket_width(n_docs: int, n_parts: int) -> int:
+    """The doc layout's bucket width: ``n_parts`` buckets cover the ids."""
+    return max(1, math.ceil(n_docs / n_parts))
+
+
+def _empty_corpus(index_dir: str) -> ValueError:
+    # no document: avgdl is undefined and there is nothing to encode
+    return ValueError(f"empty corpus: no document to index into {index_dir}")
+
+
+class _Ingested(NamedTuple):
+    """The rows :func:`_ingest_on_driver` computed, before any write."""
+
+    docs: int
+    dl_sum: int
+    doc_stats: pa.Table
+    doc_map: pa.Table | None
+    updates: list  # dictionary rows to grow: (term, df_new, cf_new)
+    fresh: list  # dictionary rows to add: (term, term_id, df, cf, n_salts)
+    parts: list  # (part_id, postings rows, postings, bytes), by part_id
+
+
+def _ingest_on_driver(
+    sel: DataFrame,
+    id_col: str,
+    order_cols: list[str] | None,
+    doc_map_cols: list[str] | None,
+    first: int,
+    block_size: int,
+    part_of: dict,
+    *,
+    base: str | None = None,
+    salt_plan: tuple[int, int] | None = None,
+    phases: list | None = None,
+) -> _Ingested | None:
+    """The driver side of a build and of an extend, one body for both
+    (module docstring): everything but the writes. ``sel`` is the
+    tokenized projection (``id_col`` or ``order_cols``, doc_map columns,
+    ``_toks``); with ``order_cols`` doc ids are numbered from ``first`` in
+    that order. ``part_of`` is the segments row's part rule (``layout``,
+    ``n_parts``).
+
+    ``base`` is the live index an extend's terms are looked up in, whose
+    delta postings go to each term's last salt. A build has an empty base
+    (None): every term is fresh, numbered from 0, with the salt plan
+    ``salt_plan = (salt_threshold, target_salt_postings)`` on the term
+    layout; each posting's salt is computed from ``doc_id - first`` as
+    the Spark side's expression computes it, in doubles. ``phases``
+    receives the ``collect`` and ``encode`` wall times. Returns None when
+    ``sel`` has no row."""
+    t = time.perf_counter()
+    one = sel.coalesce(1)
+    tbl = (one.sortWithinPartitions(*order_cols) if order_cols else one).toArrow()
+    if phases is not None:
+        phases.append(("collect", time.perf_counter() - t))
+    m = tbl.num_rows
+    if m == 0:
+        return None
+    t = time.perf_counter()
+    if order_cols:
+        doc_id = pa.array(np.arange(first, first + m, dtype=np.int64))
+    else:
+        doc_id = tbl[id_col].cast(to_arrow_type(sel.schema[id_col].dataType))
+
+    # (doc_id, term, tf, dl): a repeated caller row sums its tf into one
+    # posting, and dl is the max, as the Spark extend's groupBy gives them
+    toks = tbl["_toks"].combine_chunks()
+    dl = pc.list_value_length(toks).cast(pa.int64())
+    parent = pc.list_parent_indices(toks)
+    occ = (
+        pa.table({
+            "doc_id": pc.take(doc_id.cast(pa.int64()), parent),
+            "term": pc.list_flatten(toks),
+            "dl": pc.take(dl, parent),
+        })
+        .group_by(["doc_id", "term"])
+        .aggregate([("dl", "count"), ("dl", "max")])
+        .rename_columns(["doc_id", "term", "tf", "dl"])
+    )
+    voc = occ.group_by("term").aggregate([("doc_id", "count"), ("tf", "sum")])
+    # one typed array: the value set of a filter must have the column's type,
+    # which a ChunkedArray of no chunks (no tokens in the input) does not give
+    terms = voc["term"].combine_chunks()
+    ids, max_tid = {}, None
+    if base is not None:
+        known = read_dictionary(base, pc.field("term").isin(terms))
+        ids = dict(zip(known["term"].to_pylist(),
+                       zip(known["term_id"].to_pylist(), known["n_salts"].to_pylist())))
+        max_tid = footer_max(base, "dictionary", "term_id")
+    vocab = [
+        (t, df, cf, *ids.get(t, (None, None)))
+        for t, df, cf in zip(terms.to_pylist(), voc["doc_id_count"].to_pylist(),
+                             voc["tf_sum"].to_pylist())
+    ]
+    doc = part_of.get("layout") == "doc"
+    n_salts_of = None
+    if salt_plan is not None and not doc:
+        threshold, target = salt_plan
+
+        def n_salts_of(df: int) -> int:
+            return math.ceil(df / target) if df > threshold else 1
+
+    updates, fresh, tmap = _resolve_vocabulary(vocab, max_tid, n_salts_of)
+
+    # each occurrence's (term_id, salt, part_id)
+    at = pc.index_in(
+        occ["term"], pa.array([r[0] for r in tmap], occ["term"].type)
+    ).to_numpy()
+    tid = np.array([r[1] for r in tmap], dtype=np.int64)[at]
+    n_salts = np.array([r[2] for r in tmap], dtype=np.int64)[at]
+    d = occ["doc_id"].to_numpy()
+    local = d - first
+    n_parts = int(part_of["n_parts"])
+    if base is not None:
+        salt = n_salts - 1
+    elif doc:
+        salt = (local.astype(np.float64) / _bucket_width(m, n_parts)).astype(np.int64)
+    else:
+        salt = np.minimum(
+            ((local * n_salts).astype(np.float64) / m).astype(np.int64), n_salts - 1
+        )
+    if doc:
+        part = salt
+    else:
+        pairs, inv = np.unique(
+            np.column_stack((tid, salt)), axis=0, return_inverse=True
+        )
+        part = np.array(
+            [hash_part_id(int(x), int(s), n_parts) for x, s in pairs], dtype=np.int64
+        )[inv.ravel()]
+    blocks = encode_partition_pdf(
+        pd.DataFrame({
+            "part_id": part, "term_id": tid, "salt": salt, "doc_id": d,
+            "tf": occ["tf"].to_numpy(), "dl": occ["dl"].to_numpy(),
+        }),
+        block_size, carry_part_id=True,
+    )
+    post_schema = arrow_schema(POSTINGS_SCHEMA)
+    parts = [
+        (int(p),
+         pa.Table.from_pandas(g[post_schema.names], post_schema, preserve_index=False),
+         int(g["n"].sum()),
+         int(sum(g[c].map(len).sum() for c in ("doc_ids_packed", "tfs_packed", "dls_packed"))))
+        for p, g in blocks.groupby("part_id", sort=True)
+    ]
+    doc_map = pa.table({
+        id_col: doc_id,
+        **{c: tbl[c].cast(to_arrow_type(sel.schema[c].dataType)) for c in doc_map_cols},
+    }) if doc_map_cols else None
+    if phases is not None:
+        phases.append(("encode", time.perf_counter() - t))
+    return _Ingested(
+        m, int(pc.sum(dl).as_py() or 0), pa.table({"doc_id": doc_id, "dl": dl}),
+        doc_map, updates, fresh, parts,
+    )
+
+
+def _build_on_driver(
+    sel: DataFrame,
+    index_dir: str,
+    id_col: str,
+    order_cols: list[str] | None,
+    doc_map_cols: list[str] | None,
+    *,
+    k1: float,
+    b: float,
+    block_size: int,
+    n_parts: int,
+    salt_threshold: int = 4096,
+    target_salt_postings: int = 4096,
+    layout: str = "term",
+    resume: bool = False,
+    fail_after_parts: int | None = None,
+    id_offset: int = 0,
+) -> dict:
+    """The driver side of a build (module docstring): :func:`_ingest_on_driver`
+    over an empty base, every table overwritten with pyarrow (a resume
+    overwrites only the postings of the parts it encodes), then
+    :func:`_commit`. Takes ``_build``'s arguments."""
+    phases: list = []
+    ing = _ingest_on_driver(
+        sel, id_col, order_cols, doc_map_cols, id_offset, block_size,
+        {"layout": layout, "n_parts": n_parts},
+        salt_plan=(salt_threshold, target_salt_postings), phases=phases,
+    )
+    if ing is None:
+        raise _empty_corpus(index_dir)
+    done, todo = _todo(index_dir, n_parts, resume)
+    t = time.perf_counter()
+    built = [r for r in ing.parts if r[0] in todo]
+    if done:
+        for p, rows, _, _ in built:
+            write_local(rows, index_dir, os.path.join("postings", f"part_id={p}"),
+                        mode="overwrite")
+    else:
+        write_local_parts(
+            {f"part_id={p}": rows for p, rows, _, _ in built}, index_dir, "postings"
+        )
+    write_local(arrow_rows(ing.fresh, TABLE_SCHEMAS["dictionary"]), index_dir,
+                "dictionary", mode="overwrite")
+    write_local(ing.doc_stats, index_dir, "doc_stats", mode="overwrite")
+    if ing.doc_map is not None:
+        write_local(ing.doc_map, index_dir, "doc_map", mode="overwrite")
+    phases.append(("write", time.perf_counter() - t))
+    counts = {p: (n, nbytes) for p, _, n, nbytes in ing.parts}
+    return _commit(
+        index_dir, [(p, *counts.get(p, (0, 0))) for p in todo],
+        ing.docs, ing.dl_sum / ing.docs, k1=k1, b=b, block_size=block_size,
+        n_parts=n_parts, layout=layout, resume=resume,
+        fail_after_parts=fail_after_parts, phases=phases,
+    )
+
+
+def _todo(index_dir: str, n_parts: int, resume: bool) -> tuple[set, list]:
+    """(parts with a complete lineage row, parts to encode): a resumed
+    build skips the first."""
+    done: set = set()
+    lineage = read_local(index_dir, "build_lineage") if resume else None
+    if lineage is not None:
+        done = {r["part_id"] for r in lineage.to_pylist() if r["status"] == "complete"}
+    return done, [p for p in range(n_parts) if p not in done]
+
+
+def _commit(
+    index_dir: str,
+    parts: list,
+    n_docs: int,
+    avgdl: float,
+    *,
+    k1: float,
+    b: float,
+    block_size: int,
+    n_parts: int,
+    layout: str,
+    resume: bool,
+    fail_after_parts: int | None,
+    phases: list,
+) -> dict:
+    """The commit tail of both sides: one lineage row per encoded part
+    ``(part_id, postings, bytes)`` in ``parts`` (only the first
+    ``fail_after_parts`` of them, then the injected failure), then
+    segments, the completion marker; both written with pyarrow. Returns
+    the build metrics."""
+    t = time.perf_counter()
+    rows = [(p, n_docs, postings, nbytes, "complete") for p, postings, nbytes in parts]
+    fail = fail_after_parts is not None and len(rows) >= fail_after_parts
+    if fail:
+        rows = rows[:fail_after_parts]
+    if rows:
+        write_local(arrow_rows(rows, LINEAGE_SCHEMA), index_dir, "build_lineage",
+                    mode="append" if resume else "overwrite")
+    if fail:
+        raise RuntimeError(f"injected failure after {len(rows)} part commits")
+    doc = layout == "doc"
+    seg = (FORMAT_VERSION, n_docs, avgdl, float(k1), float(b), int(block_size),
+           TOKEN_PATTERN, int(n_parts),
+           *(("doc", _bucket_width(n_docs, n_parts)) if doc else ()))
+    schema = SEGMENTS_SCHEMA + (", layout string, bucket_width long" if doc else "")
+    write_local(arrow_rows([seg], schema), index_dir, "segments", mode="overwrite")
+    phases.append(("meta_writes", time.perf_counter() - t))
+    postings_emitted, bytes_compressed = lineage_totals(index_dir)
+    return {
+        "parts": n_parts,
+        "parts_built": len(parts),
+        "postings_emitted": postings_emitted,
+        "bytes_compressed": bytes_compressed,
+        "phase_secs": {k: round(v, 3) for k, v in phases},
+    }
+
+
 def build_index(
     corpus: DataFrame,
     index_dir: str,
@@ -412,13 +780,16 @@ def _build_corpus(
     corpus: DataFrame, index_dir: str, text_col: str, id_col: str,
     doc_map_cols: list[str] | None, **build_kw,
 ) -> dict:
-    """:func:`_build` over ``corpus`` (ids assigned), tokenized EXACTLY once
-    into a narrow cached projection, the shape the fused transcripts path
-    pins; its first consumer (the doc_stats write) populates it."""
+    """Build ``corpus`` (ids assigned) on the side the sizing rule picks
+    for its tokenized projection: :func:`_build_on_driver`, or
+    :func:`_build` over the projection cached EXACTLY once, the shape the
+    fused transcripts path pins; its first consumer (the doc_stats write)
+    populates it."""
     keep = [c for c in (doc_map_cols or []) if c != id_col]
-    toks = corpus.select(
-        F.col(id_col), tokens_col(text_col).alias("_toks"), *keep
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sel = corpus.select(F.col(id_col), tokens_col(text_col).alias("_toks"), *keep)
+    if _driver_sized(sel):
+        return _build_on_driver(sel, index_dir, id_col, None, doc_map_cols, **build_kw)
+    toks = sel.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return _build(toks, index_dir, id_col, doc_map_cols, populated=False, **build_kw)
     finally:
@@ -453,9 +824,20 @@ def build_index_transcripts(
     traffic, which saturates a single box's memory bandwidth long before
     the cores do. Here exactly one relation is ever cached — (_pid,
     order_cols, token array), raw text already projected away — and the
-    scan reads text bytes once. Same output index (equivalence-tested)."""
-    pins: list = []
+    scan reads text bytes once. Same output index (equivalence-tested).
+    A driver-sized ``src`` caches nothing: its ids follow the order
+    columns on the driver (module docstring)."""
     keep = [c for c in (doc_map_cols or []) if c not in order_cols]
+    build_kw = dict(
+        k1=k1, b=b, block_size=block_size, salt_threshold=salt_threshold,
+        target_salt_postings=target_salt_postings, n_parts=n_parts,
+        id_offset=id_offset,
+    )
+    sel = src.select(*order_cols, *keep, tokens_col(text_col).alias("_toks"))
+    if _driver_sized(sel):
+        return _build_on_driver(sel, index_dir, "doc_id", order_cols, doc_map_cols,
+                                **build_kw)
+    pins: list = []
     phases: list = []
     t0 = time.perf_counter()
     pre = assign_dense_ids(
@@ -475,10 +857,8 @@ def build_index_transcripts(
         pre = pre.withColumn("doc_id", F.col("doc_id") + F.lit(int(id_offset)))
     try:
         return _build(
-            pre, index_dir, "doc_id", doc_map_cols, k1=k1, b=b,
-            block_size=block_size, salt_threshold=salt_threshold,
-            target_salt_postings=target_salt_postings, n_parts=n_parts,
-            populated=True, id_offset=id_offset, phases=phases,
+            pre, index_dir, "doc_id", doc_map_cols, populated=True, phases=phases,
+            **build_kw,
         )
     finally:
         for p in pins:
@@ -528,11 +908,7 @@ def _build(
 
         return run
 
-    done: set = set()
-    lineage = read_local(index_dir, "build_lineage") if resume else None
-    if lineage is not None:
-        done = {r["part_id"] for r in lineage.to_pylist() if r["status"] == "complete"}
-    todo = [p for p in range(n_parts) if p not in done]
+    done, todo = _todo(index_dir, n_parts, resume)
 
     # doc_map reads only the cache, so its write overlaps everything up to
     # the encode (phase wall times therefore overlap; build_sec is the truth)
@@ -573,12 +949,11 @@ def _build(
     if ds_job is not None:
         _bg_join(*ds_job)
     if not stats["n"]:
-        # no document: avgdl is undefined and there is nothing to encode
         if dm_job is not None:
             _bg_join(*dm_job)
         for p in pins:
             p.unpersist()
-        raise ValueError(f"empty corpus: no document to index into {index_dir}")
+        raise _empty_corpus(index_dir)
     n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
     # the dictionary is final: its write overlaps the encode
     dct_job = _bg_job(_timed("dictionary_write", lambda: write_table(
@@ -593,8 +968,7 @@ def _build(
         # the salt IS the doc bucket: encoder groups are (term_id, salt), so
         # no posting block straddles a bucket even when one shuffle task
         # holds several buckets
-        bucket_width = max(1, math.ceil(n_docs / n_parts))
-        salt = (local / F.lit(bucket_width)).cast("int")
+        salt = (local / F.lit(_bucket_width(n_docs, n_parts))).cast("int")
         salt_bits = max(1, int(n_parts).bit_length())
     else:
         salt = F.least(
@@ -678,31 +1052,11 @@ def _build(
     for p in pins:
         p.unpersist()
 
-    # commit: the lineage rows, then segments (the completion marker)
-    t = time.perf_counter()
-    rows = [
-        (p, n_docs, int(metrics[f"postings_{p}"] or 0),
-         int(metrics[f"bytes_{p}"] or 0), "complete")
-        for p in todo
-    ]
-    fail = fail_after_parts is not None and len(rows) >= fail_after_parts
-    if fail:
-        rows = rows[:fail_after_parts]
-    if rows:
-        write_local(arrow_rows(rows, LINEAGE_SCHEMA), index_dir, "build_lineage",
-                    mode="append" if resume else "overwrite")
-    if fail:
-        raise RuntimeError(f"injected failure after {len(rows)} part commits")
-    seg = (FORMAT_VERSION, n_docs, avgdl, float(k1), float(b), int(block_size),
-           TOKEN_PATTERN, int(n_parts), *(("doc", bucket_width) if doc else ()))
-    schema = SEGMENTS_SCHEMA + (", layout string, bucket_width long" if doc else "")
-    write_local(arrow_rows([seg], schema), index_dir, "segments", mode="overwrite")
-    _tick("meta_writes", t)
-    postings_emitted, bytes_compressed = lineage_totals(index_dir)
-    return {
-        "parts": n_parts,
-        "parts_built": len(todo),
-        "postings_emitted": postings_emitted,
-        "bytes_compressed": bytes_compressed,
-        "phase_secs": {k: round(v, 3) for k, v in phases},
-    }
+    return _commit(
+        index_dir,
+        [(p, int(metrics[f"postings_{p}"] or 0), int(metrics[f"bytes_{p}"] or 0))
+         for p in todo],
+        n_docs, avgdl, k1=k1, b=b, block_size=block_size, n_parts=n_parts,
+        layout=layout, resume=resume, fail_after_parts=fail_after_parts,
+        phases=phases,
+    )

@@ -30,11 +30,13 @@ Design:
 - per-generation lineage rows record the delta (docs, postings, bytes) —
   the same checkpoint/metrics contract as the initial build.
 
-Two paths, one on-disk result. A delta is *driver-sized* when the
-Catalyst size estimate of its tokenized projection (``sizeInBytes``, known
-without a job) is at most :data:`DRIVER_MAX_DELTA_BYTES`, a cap set by
-the driver path's peak memory (measured at the constant). Such a delta is
-extended in 1 Spark job:
+Two paths, one on-disk result. A delta is *driver-sized* under the
+build's own sizing rule (``build._driver_sized``): the Catalyst size
+estimate of its tokenized projection (``sizeInBytes``, known without a
+job) is at most ``build.DRIVER_MAX_INGEST_BYTES``, a cap set by the driver
+body's peak memory. Such a delta runs the body a driver-sized build runs,
+``build._ingest_on_driver``, with the live index as its base, in 1 Spark
+job:
 - one job tokenizes the delta in Catalyst (``tokens_col``) and collects it
   to the driver as Arrow, sorted by ``order_cols`` within one partition,
   so Spark's own ordering (nulls, NaN, strings) fixes the order doc ids
@@ -45,7 +47,9 @@ extended in 1 Spark job:
   from the footer max term_id, part ids come from the pure-Python
   ``hash_part_id``, and the blocks are encoded with the build's own
   ``encode_partition_pdf``. Every row to write is computed before the
-  first file is written;
+  first file is written; a build differs only in its empty base (every
+  term fresh, numbered from 0, with the salt plan) and in overwriting
+  where an extend appends;
 - the dictionary rewrite (:func:`_rewrite_dictionary`) is
   vocabulary-sized. A dictionary whose data files total at most
   :data:`DRIVER_MAX_DICTIONARY_BYTES` is read with pyarrow, its update rows
@@ -89,17 +93,20 @@ from __future__ import annotations
 import os
 from fractions import Fraction
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.analysis import tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from .build import _encode_map_fn, encode_partition_pdf, packed_bytes_col
+from .build import (
+    _driver_sized,
+    _encode_map_fn,
+    _ingest_on_driver,
+    _resolve_vocabulary,
+    packed_bytes_col,
+)
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
@@ -108,10 +115,8 @@ from .storage import (
     arrow_rows,
     arrow_schema,
     footer_max,
-    hash_part_id,
     local_relation,
     part_id_col,
-    read_dictionary,
     read_local,
     read_segments,
     read_table,
@@ -122,31 +127,6 @@ from .storage import (
     update_segments,
     write_local,
 )
-
-# The sizing rule between the two paths: a delta is extended on the driver
-# when the Catalyst size estimate of its tokenized projection (id or order
-# columns, doc_map columns, token array; for a Parquet scan, the files'
-# bytes scaled to those columns) is at most this constant.
-#
-# Speed sets no cap: on local[4], transcript deltas into a copy of a
-# 6,000-turn index, the driver path was faster at every measured size, from
-# 400 turns (17 KB; 2.3 vs 10.0 core-s) to 400,000 (14 MB; 12.0 vs 71.7
-# core-s). Driver memory does. Measured the same way (order_cols and
-# doc_map_cols set; peak RSS of the driver's Python process during the
-# extend, above its level before it):
-#     turns  estimate  collected Arrow  peak RSS
-#     2,000     64 KB                     22 MB
-#    30,000    0.9 MB                    171 MB
-#   100,000    3.0 MB          17 MB     480 MB
-#   200,000    5.9 MB          34 MB    1.07 GB
-# The peak is ~180x the estimate; the collect itself (~6x) is also bounded
-# by spark.driver.maxResultSize (1 GB by default), past which the toArrow
-# job fails before anything is written. The cap holds the peak near 0.75 GB,
-# under that same 1 GB. The Spark path is the fallback for what the driver
-# path cannot hold: larger deltas, and plans Spark cannot size (an RDD scan
-# estimates at Long.MaxValue). No benchmark workload runs above the cap, so
-# the two paths' costs there are unmeasured.
-DRIVER_MAX_DELTA_BYTES = 1 << 22
 
 # The sizing rule of the dictionary rewrite: a dictionary whose data files
 # total at most this many bytes is rewritten with pyarrow on the driver,
@@ -163,9 +143,10 @@ DRIVER_MAX_DELTA_BYTES = 1 << 22
 # Spark's fixed cost of ~0.5 s, and the Spark side spreads over a cluster
 # where the driver cannot. Memory sets the cap: the peak is ~15x the file
 # bytes, on top of whatever the extend already holds (up to ~0.75 GB for
-# the largest driver-sized delta, see above). 16 MB, about 3M terms, keeps
-# the rewrite's own peak near 0.25 GB; docs/SCALE.md expects 10^8-10^9
-# terms at scale, which stay on the Spark side.
+# the largest driver-sized delta, see build.DRIVER_MAX_INGEST_BYTES).
+# 16 MB, about 3M terms, keeps the rewrite's own peak near 0.25 GB;
+# docs/SCALE.md expects 10^8-10^9 terms at scale, which stay on the Spark
+# side.
 DRIVER_MAX_DICTIONARY_BYTES = 1 << 24
 
 
@@ -178,36 +159,6 @@ def _dl_sum(seg: dict) -> int:
     avgdl and Σdl 0."""
     n_docs = int(seg["n_docs"])
     return round(Fraction(seg["avgdl"]) * n_docs) if n_docs else 0
-
-
-def _resolve_vocabulary(vocab: list, max_tid: int | None) -> tuple[list, list, list]:
-    """Split the collected delta vocabulary ``(term, df_new, cf_new,
-    term_id, n_salts)`` — term_id/n_salts null for a term the dictionary
-    lacks — into the dictionary's update rows ``(term, df_new, cf_new)``,
-    its fresh rows ``(term, term_id, df, cf, n_salts)`` and the encode's
-    ``(term, term_id, n_salts)`` map. Fresh terms are numbered in term
-    order from ``max_tid + 1`` (from 0 for an empty dictionary): the ids a
-    dense rank over ``term`` would give them. Python orders ``str`` by code
-    point, which is the UTF-8 byte order Spark sorts strings by."""
-    nxt = 0 if max_tid is None else max_tid + 1
-    updates, fresh, tmap = [], [], []
-    for term, df_new, cf_new, tid, n_salts in sorted(vocab, key=lambda r: r[0]):
-        if tid is None:
-            tid, n_salts = nxt, 1
-            nxt += 1
-            fresh.append((term, tid, df_new, cf_new, n_salts))
-        else:
-            updates.append((term, df_new, cf_new))
-        tmap.append((term, tid, n_salts))
-    return updates, fresh, tmap
-
-
-def _driver_sized(sel: DataFrame) -> bool:
-    """The sizing rule: the delta projection's Catalyst ``sizeInBytes``
-    (file sizes for a file scan, no job) is at most
-    :data:`DRIVER_MAX_DELTA_BYTES`."""
-    est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return est <= DRIVER_MAX_DELTA_BYTES
 
 
 def _first_id(index_dir: str, n_old: int) -> int:
@@ -277,91 +228,26 @@ def _extend_on_driver(
     sel: DataFrame, index_dir: str, order_cols: list[str] | None,
     doc_map_cols: list[str] | None, first: int, n_parts: int, block_size: int,
 ) -> tuple[int, int, int, int] | None:
-    """The driver path (module docstring); new doc ids start at ``first``.
-    Returns (docs, Σdl, postings, bytes), or None for an empty delta,
-    which writes nothing."""
-    spark = sel.sparkSession
-    one = sel.coalesce(1)
-    tbl = (one.sortWithinPartitions(*order_cols) if order_cols else one).toArrow()
-    m = tbl.num_rows
-    if order_cols:
-        doc_id = pa.array(np.arange(first, first + m, dtype=np.int64))
-    else:
-        doc_id = tbl["doc_id"].cast(to_arrow_type(sel.schema["doc_id"].dataType))
-        _check_caller_ids(pc.min(doc_id).as_py(), first)
-    if m == 0:
+    """The driver path (module docstring): ``build._ingest_on_driver`` with
+    the live index as its base, then the appends; new doc ids start at
+    ``first``. Returns (docs, Σdl, postings, bytes), or None for an empty
+    delta, which writes nothing."""
+    ing = _ingest_on_driver(
+        sel, "doc_id", order_cols, doc_map_cols, first, block_size,
+        {"n_parts": n_parts}, base=index_dir,
+    )
+    if ing is None:
         return None
-
-    # (doc_id, term, tf, dl): a repeated caller row sums its tf into one
-    # posting, and dl is the max, as the Spark path's groupBy gives them
-    toks = tbl["_toks"].combine_chunks()
-    dl = pc.list_value_length(toks).cast(pa.int64())
-    parent = pc.list_parent_indices(toks)
-    occ = (
-        pa.table({
-            "doc_id": pc.take(doc_id.cast(pa.int64()), parent),
-            "term": pc.list_flatten(toks),
-            "dl": pc.take(dl, parent),
-        })
-        .group_by(["doc_id", "term"])
-        .aggregate([("dl", "count"), ("dl", "max")])
-        .rename_columns(["doc_id", "term", "tf", "dl"])
-    )
-    voc = occ.group_by("term").aggregate([("doc_id", "count"), ("tf", "sum")])
-    # one typed array: the value set of a filter must have the column's type,
-    # which a ChunkedArray of no chunks (no tokens in the delta) does not give
-    terms = voc["term"].combine_chunks()
-    known = read_dictionary(index_dir, pc.field("term").isin(terms))
-    ids = dict(zip(known["term"].to_pylist(),
-                   zip(known["term_id"].to_pylist(), known["n_salts"].to_pylist())))
-    vocab = [
-        (t, df, cf, *ids.get(t, (None, None)))
-        for t, df, cf in zip(terms.to_pylist(), voc["doc_id_count"].to_pylist(),
-                             voc["tf_sum"].to_pylist())
-    ]
-    updates, fresh, tmap = _resolve_vocabulary(
-        vocab, footer_max(index_dir, "dictionary", "term_id")
-    )
-
-    # encode: each term's (term_id, salt, part_id) looked up per occurrence
-    tid = np.array([t for _, t, _ in tmap], dtype=np.int64)
-    salt = np.array([s - 1 for _, _, s in tmap], dtype=np.int32)
-    part = np.array(
-        [hash_part_id(t, s - 1, n_parts) for _, t, s in tmap], dtype=np.int32
-    )
-    at = pc.index_in(
-        occ["term"], pa.array([r[0] for r in tmap], occ["term"].type)
-    ).to_numpy()
-    blocks = encode_partition_pdf(
-        pd.DataFrame({
-            "part_id": part[at], "term_id": tid[at], "salt": salt[at],
-            "doc_id": occ["doc_id"].to_numpy(), "tf": occ["tf"].to_numpy(),
-            "dl": occ["dl"].to_numpy(),
-        }),
-        block_size, carry_part_id=True,
-    )
-    postings = int(blocks["n"].sum())
-    nbytes = int(sum(
-        blocks[c].map(len).sum() for c in ("doc_ids_packed", "tfs_packed", "dls_packed")
-    ))
-    post_schema = arrow_schema(POSTINGS_SCHEMA)
-    per_part = [
-        (p, pa.Table.from_pandas(g[post_schema.names], post_schema, preserve_index=False))
-        for p, g in blocks.groupby("part_id", sort=True)
-    ]
-    doc_stats = pa.table({"doc_id": doc_id, "dl": dl})
-    doc_map = pa.table({
-        "doc_id": doc_id,
-        **{c: tbl[c].cast(to_arrow_type(sel.schema[c].dataType)) for c in doc_map_cols},
-    }) if doc_map_cols else None
-
-    _rewrite_dictionary(spark, index_dir, updates, fresh)
-    for p, t in per_part:
-        write_local(t, index_dir, os.path.join("postings", f"part_id={p}"))
-    write_local(doc_stats, index_dir, "doc_stats")
-    if doc_map is not None:
-        write_local(doc_map, index_dir, "doc_map")
-    return m, int(pc.sum(dl).as_py() or 0), postings, nbytes
+    if not order_cols:
+        _check_caller_ids(pc.min(ing.doc_stats["doc_id"]).as_py(), first)
+    _rewrite_dictionary(sel.sparkSession, index_dir, ing.updates, ing.fresh)
+    for p, rows, _, _ in ing.parts:
+        write_local(rows, index_dir, os.path.join("postings", f"part_id={p}"))
+    write_local(ing.doc_stats, index_dir, "doc_stats")
+    if ing.doc_map is not None:
+        write_local(ing.doc_map, index_dir, "doc_map")
+    return (ing.docs, ing.dl_sum, sum(r[2] for r in ing.parts),
+            sum(r[3] for r in ing.parts))
 
 
 def _extend_in_spark(

@@ -151,12 +151,19 @@ def build_sharded(
     shard at its global id offset, merge stats. (The multi-PROCESS variant
     — one spark-submit per shard, the true N-executor-group deployment —
     drives `build_shard` directly; see bench.py's sharded scaling section.)
-    Returns the shard dirs."""
+    A shard that holds no document (fewer ``shard_col`` values than
+    shards) is not built: its id range has zero width. Returns the dirs of
+    the shards built, the ones a query reads; raises ``ValueError`` when
+    ``src`` has no row, before anything is written."""
     shards = shard_corpus(src, n_shards, shard_col)
     counts = [s.count() for s in shards]
+    if not any(counts):
+        raise ValueError(f"empty corpus: no document to index into {base_dir}")
     offsets = [sum(counts[:i]) for i in range(n_shards)]
     dirs = []
-    for i, (shard, off) in enumerate(zip(shards, offsets)):
+    for i, (shard, off, n) in enumerate(zip(shards, offsets, counts)):
+        if not n:
+            continue
         d = os.path.join(base_dir, f"shard_{i:04d}")
         build_shard(shard, d, order_cols, id_offset=off, **build_kwargs)
         dirs.append(d)

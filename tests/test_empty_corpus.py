@@ -1,6 +1,8 @@
 """An empty corpus has nothing to index or train on: every build entry
 point raises a ``ValueError`` that names it, instead of failing midway on
-an undefined statistic (the text builds' avgdl, the k-means seed draw)."""
+an undefined statistic (the text builds' avgdl, the k-means seed draw).
+The text builds raise it on both sides of the build's sizing rule, before
+any table is written."""
 
 from __future__ import annotations
 
@@ -32,10 +34,19 @@ def _text_builds():
     "entry",
     ["build_index", "build_index_transcripts", "build_doc_partitioned", "build_sharded"],
 )
-def test_text_build_of_an_empty_corpus_raises(spark, corpus, transcripts, tmp_path, entry):
+def test_text_build_of_an_empty_corpus_raises(spark, corpus, transcripts, tmp_path,
+                                              monkeypatch, entry):
+    from test_local_tables import _force
+
     build = _text_builds()[entry]
-    with pytest.raises(ValueError, match="empty corpus"):
-        build(corpus.limit(0), transcripts.limit(0), str(tmp_path / entry))
+    for side in ("driver", "spark"):
+        _force(monkeypatch, side)
+        d = tmp_path / f"{entry}_{side}"
+        with pytest.raises(ValueError, match="empty corpus"):
+            build(corpus.limit(0), transcripts.limit(0), str(d))
+        assert not (d / "segments").exists(), side
+        if side == "driver":
+            assert not d.exists() or not any(d.iterdir()), side
 
 
 @pytest.mark.parametrize("tier", ["pq", "ivf"])

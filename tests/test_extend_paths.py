@@ -14,7 +14,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
-from test_local_tables import _jobs, _snapshot, _with_fresh_terms
+from test_local_tables import _force, _jobs, _snapshot, _with_fresh_terms
 
 import jvector_spark.index.extend as E
 import jvector_spark.index.query as Q
@@ -23,10 +23,6 @@ from tools.diff_index import diff_dirs
 KEYS = ["conv_id", "turn_idx"]
 PATHS = ("spark", "driver")
 DEAD = [3, 17, 400]  # tombstoned in the base index, so it has all 7 tables
-
-
-def _force(monkeypatch, path: str) -> None:
-    monkeypatch.setattr(E, "DRIVER_MAX_DELTA_BYTES", 1 << 62 if path == "driver" else -1)
 
 
 @pytest.fixture(scope="module")

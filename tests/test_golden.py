@@ -52,14 +52,18 @@ def test_golden_index_loads_and_answers(spark, golden_case, name):
 
 
 @pytest.mark.parametrize("name", ["v2_index", "doc_index"])
-def test_build_reproduces_golden_index(spark, tmp_path, name):
-    """A fresh build with ``tools/make_golden.py``'s arguments writes the
-    committed index's rows: segments, dictionary, postings, doc_stats and
-    doc_map equal, and complete lineage rows with the same postings and
-    bytes. The lineage's ``docs_indexed`` is the build's document count on
-    every part row, so it is left out. The term layout's lineage rows
-    (one per part) are compared whole; the doc layout's by their sums,
-    since its golden predates one lineage row per bucket."""
+def test_build_reproduces_golden_index(spark, tmp_path, monkeypatch, name):
+    """A fresh build with ``tools/make_golden.py``'s arguments, on either
+    side of the build's sizing rule, writes the committed index's rows:
+    segments, dictionary, postings, doc_stats and doc_map equal, and
+    complete lineage rows with the same postings and bytes. ``v2_index``
+    salts at threshold 32, so the driver side's salt plan is checked too.
+    The lineage's ``docs_indexed`` is the build's document count on every
+    part row, so it is left out. The term layout's lineage rows (one per
+    part) are compared whole; the doc layout's by their sums, since its
+    golden predates one lineage row per bucket."""
+    from test_local_tables import _force
+
     from jvector_spark.fixtures import make_transcripts_pdf
     from jvector_spark.operators.doc_ids import assign_dense_ids
     from tools.diff_index import diff_dirs, read_rows
@@ -69,28 +73,32 @@ def test_build_reproduces_golden_index(spark, tmp_path, name):
         spark.createDataFrame(make_transcripts_pdf(n_turns=300, seed=123)),
         ["conv_id", "turn_idx"], "doc_id",
     )
-    d = str(tmp_path / name)
-    BUILDERS[name](corpus, d)
     golden = os.path.join(GOLDEN, name)
-    same = diff_dirs(d, golden)
-    tables = ("segments", "dictionary", "postings", "doc_stats", "doc_map")
-    assert all(same[t] for t in tables), same
 
     def lineage(idx):
         cols = ["part_id", "postings_emitted", "bytes_compressed", "status"]
         rows = read_rows(os.path.join(idx, "build_lineage")).select(cols)
         return sorted(tuple(r.values()) for r in rows.to_pylist())
 
-    got, want = lineage(d), lineage(golden)
-    assert {r[3] for r in got} == {"complete"}
-    if name == "v2_index":
-        assert got == want
-        assert [r[0] for r in got] == [0, 1]
-    else:
-        assert [r[0] for r in got] == [0, 1, 2, 3]
-        assert [sum(r[i] for r in got) for i in (1, 2)] == [
-            sum(r[i] for r in want) for i in (1, 2)
-        ]
+    want = lineage(golden)
+    for side in ("driver", "spark"):
+        _force(monkeypatch, side)
+        d = str(tmp_path / f"{name}_{side}")
+        BUILDERS[name](corpus, d)
+        same = diff_dirs(d, golden)
+        tables = ("segments", "dictionary", "postings", "doc_stats", "doc_map")
+        assert all(same[t] for t in tables), (side, same)
+
+        got = lineage(d)
+        assert {r[3] for r in got} == {"complete"}, side
+        if name == "v2_index":
+            assert got == want, side
+            assert [r[0] for r in got] == [0, 1]
+        else:
+            assert [r[0] for r in got] == [0, 1, 2, 3]
+            assert [sum(r[i] for r in got) for i in (1, 2)] == [
+                sum(r[i] for r in want) for i in (1, 2)
+            ], side
 
 
 def test_golden_positions_feature_still_decodes(spark, golden_case):

@@ -10,6 +10,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from test_local_tables import _force
 
 
 @pytest.fixture(scope="module")
@@ -205,8 +206,13 @@ def test_lineage_reconciles(spark, corpus, index_dir):
     assert lineage.agg(F.sum("bytes_compressed")).collect()[0][0] > 0
 
 
-def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set):
+def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set,
+                                            monkeypatch):
+    """Resume on the Spark side, where a part's encode is a task of its
+    own (the driver side's resume is in tests/test_build_sides.py)."""
     from jvector_spark.index.build import build_index
+
+    _force(monkeypatch, "spark")
     from jvector_spark.index.query import bm25_topk_indexed
     from jvector_spark.operators.topk import queries_df
 
@@ -305,6 +311,7 @@ def test_four_column_fallback_for_wide_ids(spark, transcripts, corpus, tmp_path,
         return encoder(block_size, bits)
 
     monkeypatch.setattr(B, "_encode_occ_map_fn", spy)
+    _force(monkeypatch, "spark")
     offset = 1 << 55
     d = str(tmp_path / "wide")
     B.build_index_transcripts(
@@ -323,11 +330,14 @@ def test_four_column_fallback_for_wide_ids(spark, transcripts, corpus, tmp_path,
     assert got == want
 
 
-def test_fused_transcripts_build_equals_chained(spark, transcripts, corpus, query_set, tmp_path):
+def test_fused_transcripts_build_equals_chained(spark, transcripts, corpus, query_set, tmp_path,
+                                                monkeypatch):
     """build_index_transcripts (one cached narrow token relation, text
     dropped in the caching pass) must produce an index logically identical
     to assign_dense_ids + build_index — same segments, same decoded
-    postings, same top-k."""
+    postings, same top-k. Both run the Spark side, whose caches this
+    pins."""
+    _force(monkeypatch, "spark")
     from pyspark.sql import functions as F
 
     from jvector_spark.index.build import build_index, build_index_transcripts

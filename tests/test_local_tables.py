@@ -29,6 +29,14 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _force(monkeypatch, side: str) -> None:
+    """Force the side (``"driver"`` or ``"spark"``) every build and extend
+    takes, through the one sizing constant."""
+    import jvector_spark.index.build as B
+
+    monkeypatch.setattr(B, "DRIVER_MAX_INGEST_BYTES", 1 << 62 if side == "driver" else -1)
+
+
 def _copy(src: str, tmp_path) -> str:
     dst = str(tmp_path / "idx")
     shutil.copytree(src, dst)
@@ -117,8 +125,7 @@ def test_write_local_appends_and_swaps_without_spark(tmp_path):
     assert os.listdir(d) == ["t"]
     assert not [f for f in os.listdir(os.path.join(d, "t")) if f.startswith(".")]
 
-    # floating-point and nested columns get no dictionary page, as Spark
-    # writes distinct doubles
+    # no column gets a dictionary page; integer columns are delta-encoded
     import pyarrow.parquet as pq
 
     write_local(
@@ -128,7 +135,9 @@ def test_write_local_appends_and_swaps_without_spark(tmp_path):
     )
     (f,) = [f for f in os.listdir(os.path.join(d, "f")) if f.endswith(".parquet")]
     rg = pq.ParquetFile(os.path.join(d, "f", f)).metadata.row_group(0)
-    assert [rg.column(i).has_dictionary_page for i in range(3)] == [True, False, False]
+    assert [rg.column(i).has_dictionary_page for i in range(3)] == [False, False, False]
+    assert "DELTA_BINARY_PACKED" in rg.column(0).encodings
+    assert "DELTA_BINARY_PACKED" not in rg.column(1).encodings
 
 
 def _spark_segments(spark, index_dir: str) -> dict:

@@ -105,3 +105,33 @@ def test_sharded_topk_pruned_equals_unpruned_per_shard(spark, sharded, query_set
     a = bm25_topk_sharded(spark, sharded, qdf, k=10, prune=True)
     b = bm25_topk_sharded(spark, sharded, qdf, k=10, prune=False)
     assert_topk_match(a, b)
+
+
+def test_fewer_shard_values_than_shards(spark, transcripts, tmp_path, query_set):
+    """One conversation over 4 shards: the empty shards are skipped (their
+    id range has zero width), and the one built shard answers like a
+    single index over the conversation."""
+    from jvector_spark.index.build import build_index_transcripts
+    from jvector_spark.index.query import bm25_topk_indexed
+    from jvector_spark.index.sharded import bm25_topk_sharded, build_sharded
+    from jvector_spark.operators.topk import queries_df
+
+    conv = transcripts.agg(F.min("conv_id")).collect()[0][0]
+    one = transcripts.filter(F.col("conv_id") == conv)
+    dirs = build_sharded(
+        one, str(tmp_path / "sharded"), n_shards=4, order_cols=["conv_id", "turn_idx"],
+        n_parts=2,
+    )
+    assert len(dirs) == 1
+    assert sorted(p.name for p in (tmp_path / "sharded").iterdir()) == [
+        dirs[0].rsplit("/", 1)[1]
+    ]
+    d = str(tmp_path / "single")
+    build_index_transcripts(one, d, ["conv_id", "turn_idx"], n_parts=2)
+    qdf = queries_df(
+        spark,
+        list(zip(query_set["query_id"][:10], [list(t) for t in query_set["terms"][:10]])),
+    )
+    got = bm25_topk_sharded(spark, dirs, qdf, k=10)
+    assert got.count() > 0
+    assert_topk_match(got, bm25_topk_indexed(spark, d, qdf, k=10, prune=True))

@@ -49,7 +49,12 @@ def main() -> int:
     import __spark_entry__ as e
     from jvector_spark.session import get_spark
 
-    spark = get_spark(cores=8, shuffle_partitions=8, app_name="check_entry")
+    # no console progress bar: its [Stage …] text would land at the start
+    # of the OK/FAIL lines a status diff matches
+    spark = get_spark(
+        cores=8, shuffle_partitions=8, app_name="check_entry",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
