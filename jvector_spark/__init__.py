@@ -32,6 +32,3 @@ BM25_B = 0.75
 # Postings per block; the analog of the reference's fused per-block layout
 # (jvector-base/.../graph/disk/feature/FusedPQ.java:75-122).
 BLOCK_SIZE = 128
-# A term whose df exceeds this is "hot" and gets salted into multiple
-# doc-range sub-lists at build time (SURVEY.md P11).
-HOT_TERM_DF = 50_000

@@ -21,19 +21,30 @@ the blocks. Every row is computed before the first file is written, and
 every table is overwritten with pyarrow (``write_local``: staged and
 swapped in), one postings file per ``part_id=`` directory. 1 Spark job.
 
-**The Spark side** (:func:`_build`) runs for larger inputs:
+**The Spark side** (:func:`_build`) runs for larger inputs, builds and
+extends alike:
 
-  1. **Tokenize once** into a cached narrow relation (doc id, token array
-     [, doc_map columns]); the fused transcripts build does it inside the
-     id-assignment pass. Every later step re-derives what it needs from
-     the cached arrays.
-  2. **doc_stats** is ``size(tokens)``; n_docs, avgdl and the id and
-     length maxima are observed on its write. doc_map is written beside it.
+  1. **Tokenize and count once** (:func:`_tokenized`) into a cached narrow
+     relation (doc id, token array [, doc_map columns]), populated by the
+     job that counts it: with order columns the id pass tokenizes
+     (``assign_dense_ids(pre_persist=…)``) and its per-partition counts
+     give the size; with caller ids one aggregate gives the size, the
+     smallest id and the distinct count. Every later step re-derives what
+     it needs from the cached arrays. The size is known before the first
+     write, so an empty input writes nothing.
+  2. **doc_stats** is ``size(tokens)``; Σdl and the id and length maxima
+     are observed on its write, which overlaps the vocabulary. avgdl is
+     Σdl / n, the rule of the driver side, of extends and of compaction
+     (the bits of Spark's ``avg(dl)`` for integer dl below 2⁵³; a null
+     text's null dl counts in n and adds nothing). doc_map is written
+     beside it.
   3. **Vocabulary**: one aggregate over ``posexplode(array_sort(tokens))``
      gives cf (occurrences) and df (a term's first occurrence in its doc's
-     sorted array), so no ``countDistinct`` expansion runs. Term ids are a
-     dense rank in term order, and the salt plan derives from df. The
-     dictionary is final before the encode.
+     sorted array), so no ``countDistinct`` expansion runs; df counts
+     rows, which is why caller doc ids must be unique (a repeated or null
+     one raises ``ValueError`` on both sides). Term ids are a dense rank
+     in term order, and the salt plan derives from df. The dictionary is
+     final before the encode.
   4. **One exchange**: each occurrence travels as one int64, ``tsdd`` =
      (term_id, salt, doc_id, dl) packed at driver-chosen widths, so the
      JVM's sort on it IS the (term_id, salt, doc_id) order. The Arrow
@@ -46,13 +57,24 @@ swapped in), one postings file per ``part_id=`` directory. 1 Spark job.
      salt is the doc bucket. When the widths do not fit 63 bits, the four
      columns travel instead.
 
+An extend is :func:`_build` with ``base``, the live index, as the driver
+side is :func:`_ingest_on_driver` with one. It differs from a build in
+four places: the delta vocabulary is left-joined to the base dictionary
+and collected, fresh terms are numbered from its footer max term id
+(:func:`_resolve_vocabulary`) and the dictionary is rewritten (extend's
+``_rewrite_dictionary``); the exchange's term width is the max term id + 1
+and its salt width the delta's largest ``n_salts``; each posting goes to
+its term's last salt, ``n_salts - 1``; doc_stats, doc_map and postings are
+appended, and instead of the commit the delta's (docs, Σdl, postings,
+bytes) go back to ``extend_index``.
+
 **Commit** (:func:`_commit`, both sides): one ``build_lineage`` row per
 part (per doc bucket on the doc layout), with its postings and bytes
 (observed during the Spark side's write, counted on the driver side's
 blocks), honouring ``fail_after_parts``, then ``segments``, the
 completion marker; both are written with pyarrow. Both sides write the
 same rows in every table (tests/test_build_sides.py). An empty corpus
-raises ``ValueError("empty corpus …")`` on both sides.
+raises ``ValueError("empty corpus …")`` on both sides, before any write.
 
 Resume (analog of OnHeapGraphIndex save/load + CheckpointManager.java:33-112,
 B11/B12): a resumed build encodes only the parts that have no complete
@@ -82,6 +104,7 @@ import math
 import os
 import threading
 import time
+from contextlib import contextmanager
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -107,9 +130,11 @@ from .storage import (
     footer_max,
     hash_part_id,
     lineage_totals,
+    local_relation,
     part_id_col,
     read_dictionary,
     read_local,
+    read_table,
     sized_shuffle_n,
     table_path,
     write_local,
@@ -141,12 +166,15 @@ _ARROW_BATCH_LOCK = threading.Lock()
 #
 # Speed sets no cap: on local[4], transcript deltas into a copy of a
 # 6,000-turn index, the driver side was faster at every measured size, from
-# 400 turns (17 KB; 2.3 vs 10.0 core-s) to 400,000 (14 MB; 12.0 vs 71.7
-# core-s); serve_mixed's cold build of 6,000 turns ran 1 job in 4.4 s on
-# the driver side against the Spark side's 27 jobs in 11.7 s. Driver
-# memory does. Measured on extends (order_cols and doc_map_cols set; peak
-# RSS of the driver's Python process during the extend, above its level
-# before it):
+# 400 turns (17 KB; 2.3 core-s) to 400,000 (14 MB; 12.0 core-s). The
+# Spark side, :func:`_build` over the base, took 20.1 and 51.1 core-s at
+# those sizes (CPU of the process tree: driver, JVM, Python workers; the
+# first Spark-side extend in a fresh process, so the 400-turn figure
+# includes the workers' start). serve_mixed's cold build of 6,000 turns ran
+# 1 job in 4.4 s on the driver side against the Spark side's 27 jobs in
+# 11.7 s. Driver memory does. Measured on extends (order_cols and
+# doc_map_cols set; peak RSS of the driver's Python process during the
+# extend, above its level before it):
 #     turns  estimate  collected Arrow  peak RSS
 #     2,000     64 KB                     22 MB
 #    30,000    0.9 MB                    171 MB
@@ -366,8 +394,8 @@ def _encode_occ_map_fn(block_size: int, bits: tuple[int, int, int] | None):
 
 def _encode_map_fn(block_size: int):
     """mapInPandas fn over (part_id, term_id, salt, doc_id, tf, dl) rows in
-    any order (extend's Spark path, compaction): each partition's rows are
-    encoded by :func:`encode_partition_pdf`, part_id carried through."""
+    any order, compaction's encode (its only caller): each partition's rows
+    are encoded by :func:`encode_partition_pdf`, part_id carried through."""
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Concatenate the partition's Arrow batches: groups are confined to
@@ -409,20 +437,21 @@ def vocabulary(toks: DataFrame) -> DataFrame:
     )
 
 
-def write_doc_stats(toks: DataFrame, id_col: str, index_dir: str) -> dict:
+def _write_doc_stats(toks: DataFrame, id_col: str, index_dir: str, mode: str) -> dict:
     """Write doc_stats (doc_id, dl = token count) from a relation's
     ``_toks`` arrays (an empty doc carries an empty array, so no join);
-    return n, avgdl, max_dl, max_doc and min_doc, observed on the write."""
+    return Σdl (``dl_sum``), max_dl, max_doc and min_doc, observed on the
+    write."""
     obs = Observation("corpus_stats")
     write_table(
         toks.select(
             F.col(id_col).alias("doc_id"), F.size("_toks").cast("long").alias("dl")
         ).observe(
-            obs, F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
+            obs, F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
             F.max("dl").alias("max_dl"),
             F.max("doc_id").alias("max_doc"), F.min("doc_id").alias("min_doc"),
         ),
-        index_dir, "doc_stats",
+        index_dir, "doc_stats", mode,
     )
     return obs.get
 
@@ -434,9 +463,9 @@ def exchange_row(
     occurrences, and the ``bits`` :func:`_encode_occ_map_fn` reads it with.
     The one-column ``tsdd`` (8 bytes a row, a single-long sort key) is
     used whenever every field fits at widths chosen from driver-known
-    maxima — the vocabulary size, ``salt_bits``, and the doc_stats pass's
-    doc_id and dl maxima; otherwise (negative or huge ids) the four
-    columns travel."""
+    maxima — ``vocab_n`` (max term id + 1), ``salt_bits``, and the
+    doc_stats pass's doc_id and dl maxima; otherwise (negative or huge
+    ids) the four columns travel."""
     dl_bits = max(1, int(stats["max_dl"] or 0).bit_length())
     doc_bits = max(1, int(stats["max_doc"] or 0).bit_length())
     dd_bits = doc_bits + dl_bits
@@ -485,6 +514,14 @@ def _empty_corpus(index_dir: str) -> ValueError:
     return ValueError(f"empty corpus: no document to index into {index_dir}")
 
 
+def _repeated_id(doc_id) -> ValueError:
+    # df counts rows and the exchange keys each occurrence on its doc id, so
+    # two rows of one id would count one document twice
+    what = "a null doc_id" if doc_id is None else f"doc_id {doc_id} more than once"
+    return ValueError(
+        f"the input holds {what}: caller doc_ids must be unique and not null")
+
+
 class _Ingested(NamedTuple):
     """The rows :func:`_ingest_on_driver` computed, before any write."""
 
@@ -524,7 +561,8 @@ def _ingest_on_driver(
     layout; each posting's salt is computed from ``doc_id - first`` as
     the Spark side's expression computes it, in doubles. ``phases``
     receives the ``collect`` and ``encode`` wall times. Returns None when
-    ``sel`` has no row."""
+    ``sel`` has no row; a repeated or null caller id raises
+    ``ValueError``."""
     t = time.perf_counter()
     one = sel.coalesce(1)
     tbl = (one.sortWithinPartitions(*order_cols) if order_cols else one).toArrow()
@@ -538,9 +576,15 @@ def _ingest_on_driver(
         doc_id = pa.array(np.arange(first, first + m, dtype=np.int64))
     else:
         doc_id = tbl[id_col].cast(to_arrow_type(sel.schema[id_col].dataType))
+        if pc.count_distinct(doc_id).as_py() < m:
+            vc = pc.value_counts(doc_id)
+            raise _repeated_id(next(
+                (v for v, c in zip(vc.field("values").to_pylist(),
+                                   vc.field("counts").to_pylist()) if c > 1),
+                None,
+            ))
 
-    # (doc_id, term, tf, dl): a repeated caller row sums its tf into one
-    # posting, and dl is the max, as the Spark extend's groupBy gives them
+    # (doc_id, term, tf, dl): a doc's one dl rides its group as the max
     toks = tbl["_toks"].combine_chunks()
     dl = pc.list_value_length(toks).cast(pa.int64())
     parent = pc.list_parent_indices(toks)
@@ -776,24 +820,88 @@ def build_index(
     )
 
 
+def _projection(df: DataFrame, text_col: str, cols: list) -> DataFrame:
+    """``cols`` and ``text_col``'s ``_toks`` token array: the tokenized
+    projection every ingest reads, and the one the sizing rule sizes."""
+    return df.select(*cols, tokens_col(text_col).alias("_toks"))
+
+
+@contextmanager
+def _tokenized(
+    src: DataFrame,
+    text_col: str,
+    id_col: str,
+    order_cols: list[str] | None,
+    keep: list[str],
+    first: int = 0,
+    phases: list | None = None,
+) -> Iterator[tuple[DataFrame, int, int | None]]:
+    """The Spark side's tokenize-and-count step (module docstring), run by
+    every Spark build and extend before :func:`_build`. Yields ``(toks, n,
+    min_id)``: the tokenized relation (``id_col``, ``keep``, ``_toks``),
+    cached exactly once and populated by the job that counts it, its row
+    count, and its smallest caller id; unpersists it on exit. With
+    ``order_cols`` the id pass tokenizes, its per-partition counts give
+    ``n``, the ids start at ``first`` and ``min_id`` is None. With caller
+    ids one aggregate gives all three and the distinct count; a repeated or
+    null id raises ``ValueError`` before anything is written. ``phases``
+    receives the step's wall time."""
+    t = time.perf_counter()
+    pins: list = []
+    try:
+        if order_cols:
+            n_out: list = []
+            toks = assign_dense_ids(
+                src, order_cols, id_col, pins=pins, n_out=n_out,
+                pre_persist=lambda d: _projection(
+                    d, text_col, ["_pid", *order_cols, *keep]),
+            )
+            # the ids come from a window that shuffles the token arrays by
+            # _pid, which each of the four readers would repeat: cache the
+            # numbered relation too, populated once (the pin above still
+            # fixes the ids a lost block is recomputed with)
+            toks = toks.withColumn(
+                id_col, F.col(id_col) + F.lit(int(first))
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            pins.append(toks)
+            toks.count()
+            n, min_id = n_out[0], None
+        else:
+            toks = _projection(src, text_col, [id_col, *keep]).persist(
+                StorageLevel.MEMORY_AND_DISK)
+            pins.append(toks)
+            n, min_id, n_ids = toks.agg(
+                F.count("*"), F.min(id_col), F.count_distinct(id_col)
+            ).collect()[0]
+            if n_ids < n:
+                rep = toks.groupBy(id_col).count().filter(F.col("count") > 1).first()
+                raise _repeated_id(rep[0] if rep else None)
+        if phases is not None:
+            # assign_dense_ids materializes eagerly (range sampling, tokenize,
+            # cache populate, count collect), as the aggregate does: a real
+            # phase boundary, not lazy-plan time
+            phases.append(("ids_tokenize_cache", time.perf_counter() - t))
+        yield toks, n, min_id
+    finally:
+        for p in pins:
+            p.unpersist()
+
+
 def _build_corpus(
     corpus: DataFrame, index_dir: str, text_col: str, id_col: str,
     doc_map_cols: list[str] | None, **build_kw,
 ) -> dict:
     """Build ``corpus`` (ids assigned) on the side the sizing rule picks
     for its tokenized projection: :func:`_build_on_driver`, or
-    :func:`_build` over the projection cached EXACTLY once, the shape the
-    fused transcripts path pins; its first consumer (the doc_stats write)
-    populates it."""
+    :func:`_tokenized` and :func:`_build`."""
     keep = [c for c in (doc_map_cols or []) if c != id_col]
-    sel = corpus.select(F.col(id_col), tokens_col(text_col).alias("_toks"), *keep)
+    sel = _projection(corpus, text_col, [id_col, *keep])
     if _driver_sized(sel):
         return _build_on_driver(sel, index_dir, id_col, None, doc_map_cols, **build_kw)
-    toks = sel.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return _build(toks, index_dir, id_col, doc_map_cols, populated=False, **build_kw)
-    finally:
-        toks.unpersist()
+    phases: list = []
+    with _tokenized(corpus, text_col, id_col, None, keep, phases=phases) as (toks, n, _):
+        return _build(toks, index_dir, id_col, doc_map_cols, n_docs=n, phases=phases,
+                      **build_kw)
 
 
 def build_index_transcripts(
@@ -833,36 +941,15 @@ def build_index_transcripts(
         target_salt_postings=target_salt_postings, n_parts=n_parts,
         id_offset=id_offset,
     )
-    sel = src.select(*order_cols, *keep, tokens_col(text_col).alias("_toks"))
+    sel = _projection(src, text_col, [*order_cols, *keep])
     if _driver_sized(sel):
         return _build_on_driver(sel, index_dir, "doc_id", order_cols, doc_map_cols,
                                 **build_kw)
-    pins: list = []
     phases: list = []
-    t0 = time.perf_counter()
-    pre = assign_dense_ids(
-        src,
-        order_cols,
-        "doc_id",
-        pins=pins,
-        pre_persist=lambda d: d.select(
-            "_pid", *order_cols, *keep, tokens_col(text_col).alias("_toks")
-        ),
-    )
-    # assign_dense_ids materializes eagerly (range-sampling job + tokenize
-    # + cache populate + per-partition count collect), so this bracket is
-    # a real phase boundary, not lazy-plan time
-    phases.append(("ids_tokenize_cache", time.perf_counter() - t0))
-    if id_offset:
-        pre = pre.withColumn("doc_id", F.col("doc_id") + F.lit(int(id_offset)))
-    try:
-        return _build(
-            pre, index_dir, "doc_id", doc_map_cols, populated=True, phases=phases,
-            **build_kw,
-        )
-    finally:
-        for p in pins:
-            p.unpersist()
+    with _tokenized(src, text_col, "doc_id", order_cols, keep, id_offset,
+                    phases) as (toks, n, _):
+        return _build(toks, index_dir, "doc_id", doc_map_cols, n_docs=n,
+                      phases=phases, **build_kw)
 
 
 def _build(
@@ -871,31 +958,41 @@ def _build(
     id_col: str,
     doc_map_cols: list[str] | None,
     *,
-    k1: float,
-    b: float,
+    n_docs: int,
     block_size: int,
     n_parts: int,
-    populated: bool,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
     salt_threshold: int = 4096,
     target_salt_postings: int = 4096,
     layout: str = "term",
     resume: bool = False,
     fail_after_parts: int | None = None,
     id_offset: int = 0,
+    base: str | None = None,
     phases: list | None = None,
-) -> dict:
-    """The pipeline (module docstring) over ``toks``, a cached relation of
-    (``id_col``, ``_toks`` token array[, doc_map columns]). ``populated``:
-    the cache is already materialized, so the doc_stats write may run from
-    a background thread beside the vocabulary aggregate; otherwise it runs
-    first and populates the cache (two concurrent first consumers would
-    tokenize every partition twice). ``layout="doc"`` builds the
-    doc-partitioned layout (``index.docpart``) with ``n_parts`` doc
-    buckets; the salt plan's arguments are then unused."""
+) -> dict | tuple[int, int, int, int] | None:
+    """The Spark side (module docstring) over ``toks``, the populated cache
+    of ``n_docs`` rows of (``id_col``, ``_toks`` token array[, doc_map
+    columns]) that :func:`_tokenized` yields; returns the build metrics.
+    ``layout="doc"`` builds the doc-partitioned layout (``index.docpart``)
+    with ``n_parts`` doc buckets; the salt plan's arguments are then
+    unused. An empty corpus raises before anything is written.
+
+    ``base`` is the live index an extend's delta goes into (``index_dir``
+    itself; the term layout): its terms are looked up there, each posting
+    goes to its term's last salt, the tables are appended to, and the
+    commit is left to ``extend_index``, which gets the delta's (docs, Σdl,
+    postings, bytes); an empty delta returns None and writes nothing."""
+    if not n_docs:
+        if base is None:
+            raise _empty_corpus(index_dir)
+        return None
     spark = toks.sparkSession
     phases = [] if phases is None else phases
     doc = layout == "doc"
     part_of = {"layout": layout, "n_parts": n_parts}
+    mode = "overwrite" if base is None else "append"
 
     def _tick(name: str, t0: float) -> None:
         phases.append((name, time.perf_counter() - t0))
@@ -910,61 +1007,80 @@ def _build(
 
     done, todo = _todo(index_dir, n_parts, resume)
 
-    # doc_map reads only the cache, so its write overlaps everything up to
-    # the encode (phase wall times therefore overlap; build_sec is the truth)
+    # doc_map and doc_stats read only the populated cache, so their writes
+    # overlap everything up to the encode (phase wall times therefore
+    # overlap; build_sec is the truth)
     dm_job = None
     if doc_map_cols:
         dm = toks.select(id_col, *doc_map_cols)
         dm_job = _bg_job(_timed(
-            "doc_map_write", lambda: write_table(dm, index_dir, "doc_map")))
+            "doc_map_write", lambda: write_table(dm, index_dir, "doc_map", mode)))
     stats: dict = {}
-    ds = _timed(
-        "doc_stats_write", lambda: stats.update(write_doc_stats(toks, id_col, index_dir))
-    )
-    ds_job = None
-    if populated:
-        ds_job = _bg_job(ds)
-    else:
-        ds()
+    ds_job = _bg_job(_timed("doc_stats_write", lambda: stats.update(
+        _write_doc_stats(toks, id_col, index_dir, mode))))
 
-    # dictionary: term_id (dense, lexicographic) + df/cf + the df salt plan;
-    # vocabulary size and max n_salts ride assign_dense_ids' own count
-    # collect (no separate pack-plan job). The doc layout subsumes salting:
-    # a term's run in one bucket is capped at bucket_width docs.
+    # the dictionary: term_id + df/cf + n_salts, and the exchange's term
+    # and salt widths, all final before the encode
     t = time.perf_counter()
-    n_salts = F.lit(1) if doc else F.when(
-        F.col("df") > salt_threshold,
-        F.ceil(F.col("df") / F.lit(target_salt_postings)).cast("int"),
-    ).otherwise(F.lit(1))
-    vocab = vocabulary(toks).withColumn("n_salts", n_salts)
     pins: list = []
-    n_terms: list = []
-    mx: dict = {}
-    dct = assign_dense_ids(
-        vocab, ["term"], id_col="term_id", pins=pins,
-        n_out=n_terms, max_of={"n_salts": F.col("n_salts")}, max_out=mx,
-    ).persist()
-    pins.append(dct)
+    if base is None:
+        # term ids dense in term order, the df salt plan; the vocabulary
+        # size and max n_salts ride assign_dense_ids' own count collect (no
+        # separate pack-plan job). The doc layout subsumes salting: a
+        # term's run in one bucket is capped at bucket_width docs.
+        n_salts = F.lit(1) if doc else F.when(
+            F.col("df") > salt_threshold,
+            F.ceil(F.col("df") / F.lit(target_salt_postings)).cast("int"),
+        ).otherwise(F.lit(1))
+        n_terms: list = []
+        mx: dict = {}
+        dct = assign_dense_ids(
+            vocabulary(toks).withColumn("n_salts", n_salts), ["term"],
+            id_col="term_id", pins=pins, n_out=n_terms,
+            max_of={"n_salts": F.col("n_salts")}, max_out=mx,
+        ).persist()
+        pins.append(dct)
+        terms = dct.select("term", "term_id", "n_salts")
+        width, max_salts = int(n_terms[0]), mx.get("n_salts")
+
+        def write_dictionary() -> None:
+            write_table(dct.select("term", "term_id", "df", "cf", "n_salts"),
+                        index_dir, "dictionary")
+    else:
+        from .extend import _rewrite_dictionary  # extend imports this module
+
+        # the delta vocabulary and its existing (term_id, n_salts), in one
+        # collect; fresh terms are numbered from the footer max term id
+        vocab = (
+            vocabulary(toks)
+            .join(read_table(spark, base, "dictionary")
+                  .select("term", "term_id", "n_salts"), "term", "left")
+            .select("term", "df", "cf", "term_id", "n_salts")
+            .collect()
+        )
+        updates, fresh, tmap = _resolve_vocabulary(
+            vocab, footer_max(base, "dictionary", "term_id"))
+        terms = local_relation(spark, tmap, "term string, term_id long, n_salts int")
+        width = 1 + max((r[1] for r in tmap), default=-1)
+        max_salts = max((r[2] for r in tmap), default=1)
+
+        def write_dictionary() -> None:
+            _rewrite_dictionary(spark, base, updates, fresh)
     _tick("term_ids", t)
-    if ds_job is not None:
-        _bg_join(*ds_job)
-    if not stats["n"]:
-        if dm_job is not None:
-            _bg_join(*dm_job)
-        for p in pins:
-            p.unpersist()
-        raise _empty_corpus(index_dir)
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
+    _bg_join(*ds_job)
+    dl_sum = int(stats["dl_sum"])
     # the dictionary is final: its write overlaps the encode
-    dct_job = _bg_job(_timed("dictionary_write", lambda: write_table(
-        dct.select("term", "term_id", "df", "cf", "n_salts"), index_dir, "dictionary"
-    )))
+    dct_job = _bg_job(_timed("dictionary_write", write_dictionary))
 
     # salt from the SHARD-LOCAL rank (doc_id - id_offset): a sharded
     # build's ids start at its global offset, and salting must span the
-    # shard's own [0, n_docs) range to keep doc-range sub-lists balanced
+    # shard's own [0, n_docs) range to keep doc-range sub-lists balanced;
+    # an extend's delta ids all lie past that range, in the last salt
     local = F.col("doc_id") - F.lit(int(id_offset))
-    if doc:
+    salt_bits = max(1, (int(max_salts or 1) - 1).bit_length())
+    if base is not None:
+        salt = (F.col("n_salts") - 1).cast("int")
+    elif doc:
         # the salt IS the doc bucket: encoder groups are (term_id, salt), so
         # no posting block straddles a bucket even when one shuffle task
         # holds several buckets
@@ -975,19 +1091,18 @@ def _build(
             (local * F.col("n_salts") / F.lit(n_docs)).cast("int"),
             F.col("n_salts") - 1,
         ).cast("int")
-        salt_bits = max(1, (int(mx.get("n_salts") or 1) - 1).bit_length())
     enriched = (
         toks.select(
             F.col(id_col).alias("doc_id"),
             F.size("_toks").alias("dl"),
             F.explode("_toks").alias("term"),
         )
-        .join(F.broadcast(dct.select("term", "term_id", "n_salts")), "term")
+        .join(F.broadcast(terms), "term")
         .withColumn("salt", salt)
     )
     if done:
         enriched = enriched.filter(part_id_col(part_of).isin(todo))
-    row, bits = exchange_row(enriched, int(n_terms[0]), salt_bits, stats)
+    row, bits = exchange_row(enriched, width, salt_bits, stats)
     # partition on the (term, salt) prefix: it co-locates each run and
     # still spreads a hot term's salts over partitions; the doc layout
     # partitions on the salt bits alone, so a task writes whole buckets
@@ -1014,8 +1129,8 @@ def _build(
             # the JVM sorts the exchange (Tungsten's off-heap sort keeps
             # scaling when workers share a socket), so the Arrow worker only
             # counts runs; partitions are sized from the occurrence count
-            # (n_docs × avgdl), capped at the configured shuffle partitions
-            row.repartition(sized_shuffle_n(row, n_docs * avgdl), *keys)
+            # (Σdl), capped at the configured shuffle partitions
+            row.repartition(sized_shuffle_n(row, dl_sum), *keys)
             .sortWithinPartitions(*(["tsdd"] if bits else ["term_id", "salt", "doc_id"]))
             .mapInPandas(_encode_occ_map_fn(block_size, bits), schema=POSTINGS_SCHEMA)
             .withColumn("part_id", part_id_col(part_of))
@@ -1024,7 +1139,7 @@ def _build(
         if doc:
             # bucket files sorted by term_id: term lookups prune row groups
             blocks = blocks.sortWithinPartitions("term_id", "block_id")
-        writer = blocks.write.mode("overwrite").partitionBy("part_id")
+        writer = blocks.write.mode(mode).partitionBy("part_id")
         if done:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         # doc_map first: the Arrow batch-size override is session-global,
@@ -1052,11 +1167,12 @@ def _build(
     for p in pins:
         p.unpersist()
 
+    parts = [(p, int(metrics[f"postings_{p}"] or 0), int(metrics[f"bytes_{p}"] or 0))
+             for p in todo]
+    if base is not None:
+        return (n_docs, dl_sum, sum(r[1] for r in parts), sum(r[2] for r in parts))
     return _commit(
-        index_dir,
-        [(p, int(metrics[f"postings_{p}"] or 0), int(metrics[f"bytes_{p}"] or 0))
-         for p in todo],
-        n_docs, avgdl, k1=k1, b=b, block_size=block_size, n_parts=n_parts,
-        layout=layout, resume=resume, fail_after_parts=fail_after_parts,
-        phases=phases,
+        index_dir, parts, n_docs, dl_sum / n_docs, k1=k1, b=b,
+        block_size=block_size, n_parts=n_parts, layout=layout, resume=resume,
+        fail_after_parts=fail_after_parts, phases=phases,
     )

@@ -60,32 +60,37 @@ job:
   doc_map, segments and the lineage row are written with pyarrow
   (``storage.write_local``, no job).
 
-A delta over that memory cap, or one whose plan Spark cannot size, runs the
-Spark path (18 jobs on a 400-turn delta):
-- the id pass tokenizes: ``assign_dense_ids(pre_persist=...)`` caches
-  (doc_id, token array, doc_map columns), and the delta's text is never
-  read again (5 jobs). With caller doc_ids (``order_cols=None``) one
-  select caches the same relation, and one aggregate returns the delta's
-  size and min(doc_id), which must be at least ``first``;
-- one ``groupBy(doc_id, term)`` gives the cached (doc_id, term, tf, dl)
-  occurrences, ``dl`` as a max, so no doc_stats join is needed;
-- the delta vocabulary (term, df_new, cf_new) and its existing
-  (term_id, n_salts) come to the driver in ONE collect (8 jobs, most of
-  them populating the two caches), and fresh terms are numbered there;
-- the dictionary rewrite is the same function, under the same rule;
-- postings are encoded against a local term → (term_id, n_salts)
-  relation, in ``sized_shuffle_n`` tasks sized from the occurrence count
-  Σ df_new (3 jobs);
-- doc_stats and doc_map are one job each; segments and lineage are
-  written with pyarrow.
+A delta over that memory cap, or one whose plan Spark cannot size, runs
+the Spark path, the Spark side of a build, ``build._build``, with the live
+index as its base (18 Spark jobs on a 400- or 2,000-turn delta with
+order columns, 12 on a 150-turn one with caller ids):
+- ``build._tokenized`` caches the tokenized delta (doc_id, doc_map
+  columns, token array) and counts it: with ``order_cols`` the id pass
+  tokenizes (``assign_dense_ids(pre_persist=...)``) and its numbered
+  result is cached too; with caller doc_ids one aggregate gives the
+  delta's size, its smallest id (at least ``first``) and its distinct
+  count. Either way the delta's text is read once;
+- doc_stats and doc_map are appended from the cache, with Σdl observed on
+  the doc_stats write;
+- the delta vocabulary (term, df_new, cf_new) is left-joined to the base
+  dictionary's (term_id, n_salts) and collected, fresh terms are numbered
+  on the driver, and the dictionary rewrite is the same function, under
+  the same rule;
+- postings go through the build's one exchange (one int64 per occurrence,
+  sorted by the JVM) against a local term → (term_id, n_salts) relation,
+  and are appended; segments and lineage are written with pyarrow.
 
 Both paths put a delta posting in its term's last salt, ``n_salts - 1``:
 every delta doc id is at least ``first`` ≥ n_docs, past the doc range the
 build's ``doc_id * n_salts // n_docs`` split covers.
 
+Caller doc ids must be unique: a repeated or null one raises
+``ValueError`` on both paths before anything is written.
+
 Every query after ``extend_index`` must equal a brute-force BM25 over the
 unioned corpus exactly (tests/test_extend_maintenance.py), and both paths
-must write the same rows (tests/test_extend_paths.py).
+must write the same rows (tests/test_extend_paths.py, and at random in
+tests/test_build_sides.py).
 """
 
 from __future__ import annotations
@@ -95,35 +100,23 @@ from fractions import Fraction
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.analysis import tokens_col
-from ..operators.doc_ids import assign_dense_ids
-from .build import (
-    _driver_sized,
-    _encode_map_fn,
-    _ingest_on_driver,
-    _resolve_vocabulary,
-    packed_bytes_col,
-)
+from .build import _build, _driver_sized, _ingest_on_driver, _projection, _tokenized
 from .storage import (
     LINEAGE_SCHEMA,
-    POSTINGS_SCHEMA,
     TABLE_SCHEMAS,
     _data_files,
     arrow_rows,
     arrow_schema,
     footer_max,
     local_relation,
-    part_id_col,
     read_local,
     read_segments,
     read_table,
-    sized_shuffle_n,
     staged_dir,
     swap_in,
-    table_path,
     update_segments,
     write_local,
 )
@@ -152,8 +145,8 @@ DRIVER_MAX_DICTIONARY_BYTES = 1 << 24
 
 def _dl_sum(seg: dict) -> int:
     """Σdl of the index's documents, recovered exactly from the segments row.
-    ``avgdl`` is the correctly rounded ``Σdl / n_docs`` (Spark's ``avg`` over
-    the integer dl column), so the exact product differs from the integer
+    ``avgdl`` is the correctly rounded ``Σdl / n_docs`` (every build, extend
+    and compaction computes it so), so the exact product differs from the integer
     Σdl by at most Σdl·2⁻⁵³ — under ½ below 2⁵² tokens, where rounding it
     recovers Σdl. An index with no documents (compacted empty) has a null
     avgdl and Σdl 0."""
@@ -250,127 +243,6 @@ def _extend_on_driver(
             sum(r[3] for r in ing.parts))
 
 
-def _extend_in_spark(
-    new_corpus: DataFrame, sel: DataFrame, index_dir: str,
-    order_cols: list[str] | None, keep: list[str], text_col: str,
-    doc_map_cols: list[str] | None, first: int, n_parts: int, block_size: int,
-) -> tuple[int, int, int, int] | None:
-    """The Spark path (module docstring); takes and returns as
-    :func:`_extend_on_driver`."""
-    spark = new_corpus.sparkSession
-    cached: list = []
-    try:
-        # ---- tokenize once: the cached delta is (doc_id, _toks, doc_map cols)
-        if order_cols:
-            # the id pass tokenizes, and its per-partition counts give the
-            # delta size
-            n_out: list = []
-            delta = assign_dense_ids(
-                new_corpus, order_cols, "doc_id", pins=cached, n_out=n_out,
-                pre_persist=lambda d: d.select(
-                    "_pid", *order_cols, *keep, tokens_col(text_col).alias("_toks")
-                ),
-            ).withColumn("doc_id", F.col("doc_id") + F.lit(first)).persist()
-            cached.append(delta)
-            m = n_out[0]
-        else:
-            delta = sel.persist()
-            cached.append(delta)
-            m, min_id = delta.agg(F.count("*"), F.min("doc_id")).collect()[0]
-            _check_caller_ids(min_id, first)
-        if m == 0:
-            return None
-
-        # (doc_id, term, tf, dl) from one groupBy: a repeated caller row
-        # sums its tf into one posting, and dl needs no doc_stats join
-        occ = (
-            delta.select(
-                "doc_id",
-                F.size("_toks").cast("long").alias("dl"),
-                F.explode("_toks").alias("term"),
-            )
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("long").alias("tf"), F.max("dl").alias("dl"))
-            .persist()
-        )
-        cached.append(occ)
-
-        # ---- resolve the dictionary once: the delta vocabulary with its
-        # existing (term_id, n_salts) comes to the driver in one collect;
-        # fresh terms are numbered there from the old max term_id, which the
-        # dictionary's Parquet footers hold
-        vocab = (
-            occ.groupBy("term")
-            .agg(
-                F.count("*").cast("long").alias("df_new"),
-                F.sum("tf").cast("long").alias("cf_new"),
-            )
-            .join(
-                read_table(spark, index_dir, "dictionary").select(
-                    "term", "term_id", "n_salts"
-                ),
-                "term", "left",
-            )
-            .select("term", "df_new", "cf_new", "term_id", "n_salts")
-            .collect()
-        )
-        updates, fresh, tmap = _resolve_vocabulary(
-            vocab, footer_max(index_dir, "dictionary", "term_id")
-        )
-        _rewrite_dictionary(spark, index_dir, updates, fresh)
-
-        # ---- encode delta postings into the same part buckets
-        enriched = (
-            occ.join(
-                local_relation(spark, tmap, "term string, term_id long, n_salts int"),
-                "term",
-            )
-            .withColumn("salt", (F.col("n_salts") - 1).cast("int"))
-            .withColumn("part_id", part_id_col({"n_parts": n_parts}))
-            .select("part_id", "term_id", "salt", "doc_id", "tf", "dl")
-        )
-        # one occurrence row per (doc, term): Σ df_new of them
-        n_occ = sum(r[1] for r in vocab)
-        obs = Observation("extend_metrics")
-        blocks = (
-            enriched.repartition(
-                sized_shuffle_n(enriched, n_occ), "part_id", "term_id", "salt"
-            )
-            .mapInPandas(
-                _encode_map_fn(block_size),
-                schema="part_id int, " + POSTINGS_SCHEMA,
-            )
-            .observe(
-                obs,
-                F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-                F.coalesce(F.sum(packed_bytes_col()), F.lit(0)).alias("bytes"),
-            )
-        )
-        blocks.write.mode("append").partitionBy("part_id").parquet(
-            table_path(index_dir, "postings")
-        )
-
-        # ---- append doc_stats / doc_map; the delta's Σdl is observed on
-        # the doc_stats write
-        stats_obs = Observation("extend_doc_stats")
-        delta.select(
-            "doc_id", F.size("_toks").cast("long").alias("dl")
-        ).observe(
-            stats_obs, F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
-        ).write.mode("append").parquet(table_path(index_dir, "doc_stats"))
-        if doc_map_cols:
-            delta.select("doc_id", *doc_map_cols).write.mode("append").parquet(
-                table_path(index_dir, "doc_map")
-            )
-        return (
-            int(m), int(stats_obs.get["dl_sum"]),
-            int(obs.get["postings"]), int(obs.get["bytes"]),
-        )
-    finally:
-        for p in cached:
-            p.unpersist()
-
-
 def extend_index(
     new_corpus: DataFrame,
     index_dir: str,
@@ -380,10 +252,10 @@ def extend_index(
 ) -> dict:
     """Append ``new_corpus`` (raw rows, no doc_id yet unless ``order_cols``
     is None and a ``doc_id`` column exists) to the index at ``index_dir``.
-    With ``order_cols=None`` every caller-provided doc_id must be at least
-    the index's first free id, max(n_docs, max doc_id + 1); a smaller one
-    raises ``ValueError`` before anything is written. Returns delta
-    metrics."""
+    With ``order_cols=None`` every caller-provided doc_id must be unique and
+    at least the index's first free id, max(n_docs, max doc_id + 1); a
+    repeated or smaller one raises ``ValueError`` before anything is
+    written. Returns delta metrics."""
     seg = read_segments(new_corpus.sparkSession, index_dir)
     if seg.get("layout") == "doc":
         raise NotImplementedError(
@@ -395,26 +267,25 @@ def extend_index(
     n_parts = int(seg["n_parts"])
     block_size = int(seg["block_size"])
     keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
-    id_cols = list(order_cols) if order_cols else ["doc_id"]
-    sel = new_corpus.select(*id_cols, *keep, tokens_col(text_col).alias("_toks"))
+    sel = _projection(new_corpus, text_col, [*(order_cols or ["doc_id"]), *keep])
     first = _first_id(index_dir, n_old)
     if _driver_sized(sel):
         out = _extend_on_driver(
             sel, index_dir, order_cols, doc_map_cols, first, n_parts, block_size
         )
     else:
-        out = _extend_in_spark(
-            new_corpus, sel, index_dir, order_cols, keep, text_col,
-            doc_map_cols, first, n_parts, block_size,
-        )
+        with _tokenized(new_corpus, text_col, "doc_id", order_cols, keep,
+                        first) as (toks, m, min_id):
+            _check_caller_ids(min_id, first)
+            out = _build(toks, index_dir, "doc_id", doc_map_cols, n_docs=m,
+                         block_size=block_size, n_parts=n_parts, base=index_dir)
     if out is None:
         return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}
     m, dl_sum, postings, nbytes = out
 
     # doc_stats now holds the old rows plus the delta's: its count(*) and
-    # avg(dl) follow from the old segments row and the delta with no scan
-    # (Σdl / n in Python is correctly rounded, like Spark's avg over the
-    # integer dl column); every other segments column is preserved
+    # Σdl / n follow from the old segments row and the delta with no scan;
+    # every other segments column is preserved
     n_docs = n_old + m
     avgdl = (_dl_sum(seg) + dl_sum) / n_docs
     update_segments(new_corpus.sparkSession, index_dir, n_docs=n_docs, avgdl=avgdl)

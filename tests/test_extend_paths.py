@@ -66,11 +66,13 @@ def _odd_keys(df):
     )
 
 
-# Spark jobs an extend may run on each path, measured on these tests: the
-# driver path 1 (the tokenized collect; the dictionary is driver-sized and
-# rewritten with pyarrow); the Spark path 18 with order_cols, 13-14 with
-# caller ids or with no tokens. An empty delta stops after the collect, or
-# after the Spark path's count
+# Spark jobs an extend may run on each path, measured on these tests and
+# tests/test_build_sides.py's random deltas: the driver path 1 (the
+# tokenized collect; the dictionary is driver-sized and rewritten with
+# pyarrow); the Spark path (the build's Spark side over the base) 18 with
+# order_cols and 12 with caller ids on a 150-turn delta, fewer on small
+# random ones. An empty delta stops after the collect, or after the Spark
+# path's count (5 jobs)
 JOB_BUDGET = {"driver": 1, "spark": 18}
 
 
@@ -159,6 +161,9 @@ def test_order_keys_with_null_and_non_ascii(spark, monkeypatch, corpus, base_ind
 
 
 def test_caller_ids_with_repeated_doc_id(spark, monkeypatch, corpus, base_index, tmp_path):
+    """A repeated caller doc_id raises on both paths, and nothing is
+    written: df counts rows, so the two rows would be one document counted
+    twice."""
     from jvector_spark.index.storage import read_segments
 
     n_old = read_segments(spark, base_index)["n_docs"]
@@ -168,12 +173,14 @@ def test_caller_ids_with_repeated_doc_id(spark, monkeypatch, corpus, base_index,
     raw = _with_fresh_terms(raw, "c").select("doc_id", *KEYS, "text")
     raw = raw.unionByName(raw.filter(F.col("doc_id") == n_old + 3))
     delta = _file(raw, tmp_path, "delta")
-    dirs = _extend_both(
-        spark, monkeypatch, base_index, tmp_path,
-        lambda d: E.extend_index(delta, d, order_cols=None, doc_map_cols=KEYS),
-    )
-    _assert_same_index(dirs["spark"], dirs["driver"])
-    assert read_segments(spark, dirs["driver"])["n_docs"] == n_old + 151
+    before = _snapshot(base_index)
+    for path in PATHS:
+        d = str(tmp_path / path)
+        shutil.copytree(base_index, d)
+        _force(monkeypatch, path)
+        with pytest.raises(ValueError, match=f"doc_id {n_old + 3} more than once"):
+            E.extend_index(delta, d, order_cols=None, doc_map_cols=KEYS)
+        assert _snapshot(d) == before, path
 
 
 def test_empty_delta_writes_nothing(spark, monkeypatch, corpus, base_index, tmp_path):

@@ -334,12 +334,20 @@ def test_ivf_indexed_probe_prunes_partitions(spark, embeddings, ivf_dir, monkeyp
     opened.clear()
     store = spark._jsparkSession.sharedState().statusStore()
     listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_execution() -> int:
+        # the store keeps only the newest spark.sql.ui.retainedExecutions
+        # (1,000), so its count stops growing in a long session: the
+        # call's executions are found by id, not by position
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
     listener_bus.waitUntilEmpty()
-    n0 = store.executionsCount()
+    e0 = last_execution()
     spark_rows = V.ivf_topk_indexed(spark, ivf_dir, base, qv, k=10, n_probe=2).collect()
     listener_bus.waitUntilEmpty()
-    execs = store.executionsList(n0, 1 << 20)
-    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    execs = [store.execution(i) for i in range(e0 + 1, last_execution() + 1)]
+    plans = [e.get().physicalPlanDescription() for e in execs if e.isDefined()]
     scans = [p for p in plans if "codes" in p]
     assert scans and all(
         re.search(r"PartitionFilters: \[[^\]]*cluster#\d+ IN \(", p) for p in scans

@@ -318,15 +318,18 @@ def test_extend_and_compact_keep_exact_global_stats(spark, corpus, term_index, t
     m = extend_index(raw, d, order_cols=["conv_id", "turn_idx"])
     assert m["docs_added"] == 300
     check()
-    # caller-provided doc_ids, one row repeated: doc_stats keeps both rows,
-    # and the segments row must count both like count(*) does
+    # caller-provided doc_ids; a repeated one raises and writes nothing
     n_old = read_segments(spark, d)["n_docs"]
     delta = corpus.filter((F.col("doc_id") >= 1100) & (F.col("doc_id") < 1250)).withColumn(
         "doc_id", F.col("doc_id") - F.lit(1100) + F.lit(n_old)
     )
-    delta = delta.unionByName(delta.filter(F.col("doc_id") == n_old + 3))
+    before = _snapshot(d)
+    with pytest.raises(ValueError, match=f"doc_id {n_old + 3} more than once"):
+        extend_index(delta.unionByName(delta.filter(F.col("doc_id") == n_old + 3)), d,
+                     order_cols=None)
+    assert _snapshot(d) == before
     m = extend_index(delta, d, order_cols=None)
-    assert m["docs_added"] == 151
+    assert m["docs_added"] == 150
     check()
     delete_docs(spark, d, [0, 1, 850, n_old + 3])
     compact_index(spark, d)
@@ -362,7 +365,7 @@ def test_footer_max_and_fresh_term_numbering_without_spark(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from jvector_spark.index.extend import _resolve_vocabulary
+    from jvector_spark.index.build import _resolve_vocabulary
     from jvector_spark.index.storage import footer_max
 
     t = str(tmp_path / "dictionary")
