@@ -384,12 +384,13 @@ def run_headline(spark) -> dict[str, float]:
     entry_mod._ivf_index_for(spark, SF_DIR)
     out["ivf_build"] = round(time.perf_counter() - t0, 4)
     # persisted compressed-vector structures (train+encode once per sf_dir;
-    # the ann_topk_{sq8,pq,bq} entries below then time pure codes-scan
+    # the ann_topk_{sq8,pq,bq,nvq} entries below then time pure codes-scan
     # queries — the serving shape, Grid.java:681-719 pq_cache idiom)
     for tag, builder in (
         ("pq_build", entry_mod._pq_index_for),
         ("sq8_build", entry_mod._sq8_index_for),
         ("bq_build", entry_mod._bq_index_for),
+        ("nvq_build", entry_mod._nvq_index_for),
     ):
         t0 = time.perf_counter()
         builder(spark, SF_DIR)
@@ -938,9 +939,9 @@ def transcripts_job(
 
     out_dp = {}
     if include_docpart and qterms is not None:
-        # the scatter-gather layout's build + query at the same parallelism:
-        # its query path ships the query set INTO the scan (no per-query
-        # shuffle), so its QPS scaling isolates kernel-compute scaling
+        # the doc-partitioned layout's build + query at the same
+        # parallelism: the one build pipeline with doc buckets as parts, and
+        # index.query's read bodies over every bucket's postings
         from jvector_spark.index.docpart import (
             bm25_topk_docpart,
             build_doc_partitioned,
@@ -2059,8 +2060,9 @@ def main() -> None:
         section("phrase_at_scale", 150, _phrase)
 
     def _docpart():
-        # the doc-partitioned (scatter-gather) engine over the same corpus
-        # and query set — the serving-QPS architecture (SURVEY Q10 shape)
+        # the doc-partitioned layout over the same corpus and query set:
+        # built by the one build pipeline with doc buckets as parts, read
+        # by index.query's bodies over every bucket (SURVEY Q10 shape)
         from jvector_spark.fixtures import make_query_set
         from jvector_spark.index.docpart import (
             bm25_topk_docpart,

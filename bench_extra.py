@@ -40,6 +40,7 @@ BUILDS = [
     ("pq_build", "_pq_index_for"),
     ("sq8_build", "_sq8_index_for"),
     ("bq_build", "_bq_index_for"),
+    ("nvq_build", "_nvq_index_for"),
 ]
 
 

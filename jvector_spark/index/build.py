@@ -7,7 +7,7 @@ and one commit tail (reference analog: GraphIndexBuilder.build → cleanup
 inserts nodes into an empty graph, as an extend inserts more,
 GraphIndexBuilder.java:591-662). The side is decided once, before
 anything is tokenized or cached, by the sizing rule extends use too
-(:func:`_driver_sized`, :data:`DRIVER_MAX_INGEST_BYTES`).
+(``storage.driver_sized``, ``storage.DRIVER_MAX_INGEST_BYTES``).
 
 **The driver side** (:func:`_build_on_driver`) is an extend into an empty
 index: :func:`_ingest_on_driver`, the body ``extend_index``'s driver path
@@ -127,6 +127,7 @@ from .storage import (
     TABLE_SCHEMAS,
     arrow_rows,
     arrow_schema,
+    driver_sized,
     footer_max,
     hash_part_id,
     lineage_totals,
@@ -155,48 +156,6 @@ ENCODE_ARROW_BATCH = 131072
 # serializes the session-global Arrow batch-size override around the encode
 # write across threads sharing a SparkSession
 _ARROW_BATCH_LOCK = threading.Lock()
-
-# The sizing rule between the two sides of a build and of an extend: the
-# input is ingested on the driver (:func:`_ingest_on_driver`) when the
-# Catalyst size estimate of its tokenized projection (id or order columns,
-# doc_map columns, token array; for a Parquet scan, the files' bytes scaled
-# to those columns) is at most this constant. A build over an empty base
-# and an extend over a live one run the same driver body, so one cap sizes
-# both.
-#
-# Speed sets no cap: on local[4], transcript deltas into a copy of a
-# 6,000-turn index, the driver side was faster at every measured size, from
-# 400 turns (17 KB; 2.3 core-s) to 400,000 (14 MB; 12.0 core-s). The
-# Spark side, :func:`_build` over the base, took 20.1 and 51.1 core-s at
-# those sizes (CPU of the process tree: driver, JVM, Python workers; the
-# first Spark-side extend in a fresh process, so the 400-turn figure
-# includes the workers' start). serve_mixed's cold build of 6,000 turns ran
-# 1 job in 4.4 s on the driver side against the Spark side's 27 jobs in
-# 11.7 s. Driver memory does. Measured on extends (order_cols and
-# doc_map_cols set; peak RSS of the driver's Python process during the
-# extend, above its level before it):
-#     turns  estimate  collected Arrow  peak RSS
-#     2,000     64 KB                     22 MB
-#    30,000    0.9 MB                    171 MB
-#   100,000    3.0 MB          17 MB     480 MB
-#   200,000    5.9 MB          34 MB    1.07 GB
-# The peak is ~180x the estimate; the collect itself (~6x) is also bounded
-# by spark.driver.maxResultSize (1 GB by default), past which the toArrow
-# job fails before anything is written. The cap holds the peak near 0.75 GB,
-# under that same 1 GB. The Spark side is the fallback for what the driver
-# cannot hold: larger inputs, and plans Spark cannot size (an RDD scan
-# estimates at Long.MaxValue). No benchmark workload runs above the cap, so
-# the two sides' costs there are unmeasured.
-DRIVER_MAX_INGEST_BYTES = 1 << 22
-
-
-def _driver_sized(sel: DataFrame) -> bool:
-    """The sizing rule: the tokenized projection's Catalyst ``sizeInBytes``
-    (file sizes for a file scan, no job) is at most
-    :data:`DRIVER_MAX_INGEST_BYTES`."""
-    est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return est <= DRIVER_MAX_INGEST_BYTES
-
 
 def _bg_job(fn) -> "tuple[threading.Thread, list]":
     """Submit an independent Spark job from a background thread.
@@ -896,7 +855,7 @@ def _build_corpus(
     :func:`_tokenized` and :func:`_build`."""
     keep = [c for c in (doc_map_cols or []) if c != id_col]
     sel = _projection(corpus, text_col, [id_col, *keep])
-    if _driver_sized(sel):
+    if driver_sized(sel):
         return _build_on_driver(sel, index_dir, id_col, None, doc_map_cols, **build_kw)
     phases: list = []
     with _tokenized(corpus, text_col, id_col, None, keep, phases=phases) as (toks, n, _):
@@ -942,7 +901,7 @@ def build_index_transcripts(
         id_offset=id_offset,
     )
     sel = _projection(src, text_col, [*order_cols, *keep])
-    if _driver_sized(sel):
+    if driver_sized(sel):
         return _build_on_driver(sel, index_dir, "doc_id", order_cols, doc_map_cols,
                                 **build_kw)
     phases: list = []

@@ -31,9 +31,9 @@ Design:
   the same checkpoint/metrics contract as the initial build.
 
 Two paths, one on-disk result. A delta is *driver-sized* under the
-build's own sizing rule (``build._driver_sized``): the Catalyst size
+build's own sizing rule (``storage.driver_sized``): the Catalyst size
 estimate of its tokenized projection (``sizeInBytes``, known without a
-job) is at most ``build.DRIVER_MAX_INGEST_BYTES``, a cap set by the driver
+job) is at most ``storage.DRIVER_MAX_INGEST_BYTES``, a cap set by the driver
 body's peak memory. Such a delta runs the body a driver-sized build runs,
 ``build._ingest_on_driver``, with the live index as its base, in 1 Spark
 job:
@@ -103,13 +103,14 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import _build, _driver_sized, _ingest_on_driver, _projection, _tokenized
+from .build import _build, _ingest_on_driver, _projection, _tokenized
 from .storage import (
     LINEAGE_SCHEMA,
     TABLE_SCHEMAS,
     _data_files,
     arrow_rows,
     arrow_schema,
+    driver_sized,
     footer_max,
     local_relation,
     read_local,
@@ -136,7 +137,7 @@ from .storage import (
 # Spark's fixed cost of ~0.5 s, and the Spark side spreads over a cluster
 # where the driver cannot. Memory sets the cap: the peak is ~15x the file
 # bytes, on top of whatever the extend already holds (up to ~0.75 GB for
-# the largest driver-sized delta, see build.DRIVER_MAX_INGEST_BYTES).
+# the largest driver-sized delta, see storage.DRIVER_MAX_INGEST_BYTES).
 # 16 MB, about 3M terms, keeps the rewrite's own peak near 0.25 GB;
 # docs/SCALE.md expects 10^8-10^9 terms at scale, which stay on the Spark
 # side.
@@ -269,7 +270,7 @@ def extend_index(
     keep = [c for c in doc_map_cols or [] if c not in ("doc_id", *(order_cols or []))]
     sel = _projection(new_corpus, text_col, [*(order_cols or ["doc_id"]), *keep])
     first = _first_id(index_dir, n_old)
-    if _driver_sized(sel):
+    if driver_sized(sel):
         out = _extend_on_driver(
             sel, index_dir, order_cols, doc_map_cols, first, n_parts, block_size
         )

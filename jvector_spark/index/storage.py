@@ -50,8 +50,9 @@ tombstone appends, lineage rows, every table of a driver-sized build
 (its postings one file per ``part_id=`` directory,
 :func:`write_local_parts`), a driver-sized extend's postings,
 doc_stats and doc_map delta, a driver-sized dictionary rewrite, the
-vector tiers' manifests, parameters and codebooks, and the streaming and
-sharded metadata rows. An append adds one file; an overwrite writes a
+vector tiers' manifests, parameters and codebooks, a driver-sized vector
+build's or extend's codes (IVF's one file per ``cluster=`` directory),
+and the streaming and sharded metadata rows. An append adds one file; an overwrite writes a
 hidden sibling directory that carries Spark's ``_SUCCESS`` marker and
 swaps it in (:func:`swap_in`). Every rewrite of a whole table (this one,
 the Spark side of an extend's dictionary rewrite, and compaction's
@@ -179,6 +180,55 @@ def sized_shuffle_n(df: DataFrame, approx_rows: float | None) -> int:
     if approx_rows is None or approx_rows <= 0:
         return n
     return max(1, min(n, -(-int(approx_rows) // ENCODE_ROWS_PER_TASK)))
+
+
+# The one sizing rule of every ingest: a build's or an extend's input (the
+# BM25 builds' tokenized projection; a vector tier's, or an exact cosine
+# scan's, (id, vector) projection) is collected to the driver with one
+# ``toArrow`` job and processed there when the Catalyst size estimate of
+# that projection (for a Parquet scan, the files' bytes scaled to those
+# columns) is at most this constant; a larger one runs in Spark. A BM25
+# build over an empty base and an extend over a live one run the same
+# driver body, so one cap sizes both, and the vector tiers use it as is.
+#
+# Speed sets no cap: on local[4], transcript deltas into a copy of a
+# 6,000-turn index, the driver side was faster at every measured size, from
+# 400 turns (17 KB; 2.3 core-s) to 400,000 (14 MB; 12.0 core-s). The
+# Spark side, ``build._build`` over the base, took 20.1 and 51.1 core-s at
+# those sizes (CPU of the process tree: driver, JVM, Python workers; the
+# first Spark-side extend in a fresh process, so the 400-turn figure
+# includes the workers' start). serve_mixed's cold build of 6,000 turns ran
+# 1 job in 4.4 s on the driver side against the Spark side's 27 jobs in
+# 11.7 s. Driver memory does. Measured on BM25 extends (order_cols and
+# doc_map_cols set; peak RSS of the driver's Python process during the
+# extend, above its level before it):
+#     turns  estimate  collected Arrow  peak RSS
+#     2,000     64 KB                     22 MB
+#    30,000    0.9 MB                    171 MB
+#   100,000    3.0 MB          17 MB     480 MB
+#   200,000    5.9 MB          34 MB    1.07 GB
+# The peak is ~180x the estimate; the collect itself (~6x) is also bounded
+# by spark.driver.maxResultSize (1 GB by default), past which the toArrow
+# job fails before anything is written. The cap holds the peak near 0.75 GB,
+# under that same 1 GB. A vector ingest peaks far lower: its rows are
+# only sorted, fitted and encoded. Measured on 12,500 64-dim float vectors
+# in one Parquet file (estimate 3.7 MB, just under the cap), one call per
+# fresh process, peak RSS above the level before the call: SQ8 build 28
+# MB, PQ 100 MB, BQ 20 MB, NVQ 62 MB, IVF 45 MB, exact scan 19 MB, at most
+# ~27x the estimate. A higher vector cap would fit; no workload needs it.
+# The Spark side is the fallback for what the driver cannot hold: larger
+# inputs, and plans Spark cannot size (an RDD scan estimates at
+# Long.MaxValue). No benchmark workload runs above the cap, so the two
+# sides' costs there are unmeasured.
+DRIVER_MAX_INGEST_BYTES = 1 << 22
+
+
+def driver_sized(sel: DataFrame) -> bool:
+    """The ingest sizing rule: the projection ``sel``'s Catalyst
+    ``sizeInBytes`` (file sizes for a file scan; no job) is at most
+    :data:`DRIVER_MAX_INGEST_BYTES`."""
+    est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return est <= DRIVER_MAX_INGEST_BYTES
 
 
 def _ddl_cols(schema: str) -> list[str]:

@@ -39,7 +39,13 @@ Driver-sized tables go through Arrow on the driver (the ``index.storage``
 rule): the manifest, params, codebooks and tombstones are read with
 pyarrow and run no Spark job, and ``codes/`` is opened with the schema in
 its own footer, so no schema-inference job is planned either. A build or
-extend counts its rows on the codes write itself. A query runs the shared
+extend sizes its input by the one ingest rule
+(``storage.driver_sized``): a driver-sized input is collected once
+(``similarity.vector_input``), and the fit, the tier's encode kernel and
+the pyarrow writes of every table run on the driver, 1 Spark job and no
+Python worker; a larger one fits in Spark, encodes in a ``mapInPandas``
+and counts its rows on the codes write itself. Both sides write the same
+rows. A query runs the shared
 two-phase path (``operators.similarity.ann_topk_tier``), and one sizing
 rule on the bytes of the ``codes/`` data files (:data:`DRIVER_MAX_CODE_BYTES`)
 picks where its first pass runs: under it, pyarrow reads the codes with
@@ -69,15 +75,18 @@ from ..operators.similarity import (
     IVF,
     SQ8,
     Tier,
+    VectorRows,
     _read_codes,
     ann_topk_tier,
     cosine_rows,
     encode_codes,
+    encode_rows,
     rerank_pass,
     sample_matrix,
     topk_pass,
     topk_relation,
     unit,
+    vector_input,
 )
 from .storage import (
     _data_files,
@@ -90,6 +99,7 @@ from .storage import (
     table_path,
     tombstone_ids,
     write_local,
+    write_local_parts,
 )
 
 FORMAT_VERSION = 1
@@ -155,8 +165,8 @@ def read_codes(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def _driver_sized(files: list[str]) -> bool:
-    """The sizing rule: code files totalling under
+def _small_codes(files: list[str]) -> bool:
+    """The read sizing rule: code files totalling under
     :data:`DRIVER_MAX_CODE_BYTES` are read with pyarrow on the driver."""
     return sum(os.path.getsize(f) for f in files) < DRIVER_MAX_CODE_BYTES
 
@@ -166,7 +176,7 @@ def _codes(spark: SparkSession, index_dir: str) -> DataFrame | list[str]:
     with pyarrow on the driver, appended extend files included) when they
     are driver-sized, else the Spark scan."""
     files = _data_files(index_dir, "codes")
-    if files and _driver_sized(files):
+    if files and _small_codes(files):
         return files
     return read_codes(spark, index_dir)
 
@@ -199,14 +209,34 @@ def vector_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_i
 
 
 def _write_codes(
-    tier: Tier, embeddings: DataFrame, params, index_dir: str, mode: str,
+    tier: Tier, src: DataFrame | VectorRows, params, index_dir: str, mode: str,
     id_col: str, vec_col: str, **encode_kw,
 ) -> int:
-    """Encode and write ``codes/`` (``partitionBy`` the tier's
-    ``partition_by`` columns); the row count is observed on the write
-    itself, so the encode runs once."""
+    """Encode ``src`` and write (``mode`` "overwrite" or "append") it to
+    ``codes/``, split into directories by the tier's ``partition_by``
+    column; returns the rows written. Collected :class:`VectorRows` are
+    encoded on the driver (:func:`encode_rows`) and written with pyarrow,
+    one file per table or per partition directory, no job. A DataFrame
+    runs the encode kernel in Spark and is written ``partitionBy``, its
+    row count observed on the write itself, so the encode runs once."""
+    if isinstance(src, VectorRows):
+        tbl = encode_rows(tier, src, params, id_col, **encode_kw)
+        if not tier.partition_by:
+            write_local(tbl, index_dir, "codes", mode=mode)
+            return tbl.num_rows
+        (col,) = tier.partition_by
+        parts = {
+            f"{col}={v}": tbl.filter(pc.equal(tbl[col], v)).drop_columns([col])
+            for v in np.unique(tbl[col].to_numpy()).tolist()
+        }
+        if mode == "overwrite":
+            write_local_parts(parts, index_dir, "codes")
+        else:
+            for sub, part in parts.items():
+                write_local(part, table_path(index_dir, "codes"), sub)
+        return tbl.num_rows
     obs = Observation(f"{tier.kind}_codes_n")
-    encode_codes(tier, embeddings, params, id_col, vec_col, **encode_kw).observe(
+    encode_codes(tier, src, params, id_col, vec_col, **encode_kw).observe(
         obs, F.count("*").alias("n")
     ).write.mode(mode).partitionBy(*tier.partition_by).parquet(
         os.path.join(index_dir, "codes")
@@ -226,11 +256,15 @@ def build(
     """Fit the tier once, persist its params, encode the corpus once —
     the serve-time query path is then one codes scan per query batch (the
     Grid.java:681-719 pq_cache idiom; the anti-pattern this replaces is
-    retraining + re-encoding per call). Returns (params, rows encoded)."""
-    params, fields = tier.fit(embeddings, id_col, vec_col, **(fit_kw or {}))
+    retraining + re-encoding per call). A driver-sized corpus
+    (:func:`~jvector_spark.operators.similarity.vector_input`) is
+    collected once, and the fit, the encode and every write run on the
+    driver: 1 Spark job. Returns (params, rows encoded)."""
+    src = vector_input(embeddings, id_col, vec_col)
+    params, fields = tier.fit(src, id_col, vec_col, **(fit_kw or {}))
     if tier.write_params is not None:
         tier.write_params(params, index_dir)
-    n = _write_codes(tier, embeddings, params, index_dir, "overwrite",
+    n = _write_codes(tier, src, params, index_dir, "overwrite",
                      id_col, vec_col, **(encode_kw or {}))
     _write_manifest(index_dir, tier.kind, **fields)
     return params, n
@@ -251,12 +285,14 @@ def extend(
     vec_col: str = "embedding",
 ) -> int:
     """Append vectors encoded under the EXISTING params (B10 —
-    buildAndMergeNewNodes: insert into the existing structure). Returns
-    the number of vectors appended."""
+    buildAndMergeNewNodes: insert into the existing structure); a
+    driver-sized delta is collected, encoded and appended on the driver,
+    as :func:`build` does. 1 Spark job either way. Returns the number of
+    vectors appended."""
     spark = new_embeddings.sparkSession
     params = tier.read_params(index_dir, read_manifest(spark, index_dir))
-    return _write_codes(tier, new_embeddings, params, index_dir, "append",
-                        id_col, vec_col)
+    return _write_codes(tier, vector_input(new_embeddings, id_col, vec_col), params,
+                        index_dir, "append", id_col, vec_col)
 
 
 def serve(
@@ -619,9 +655,8 @@ def ivf_build(
     """Train and persist the IVF structure (:func:`build`): ``centroids/``,
     ``codes/`` partitioned by cluster, and the k-row ``cluster_sizes``
     sidecar counted from the files' footers. ``n_clusters`` defaults to
-    ≈√N, the classic IVF operating point. Returns the centroid matrix."""
-    if n_clusters is None:
-        n_clusters = max(2, int(round(float(embeddings.count()) ** 0.5)))
+    ≈√N, the classic IVF operating point (the number of rows collected,
+    or a count job on the Spark side). Returns the centroid matrix."""
     cents = build(IVF, embeddings, index_dir, id_col, vec_col,
                   fit_kw=dict(n_clusters=n_clusters, n_iters=n_iters, seed=seed))[0]
     _write_cluster_sizes(_footer_counts(_cluster_files(index_dir)), index_dir, "overwrite")
@@ -645,7 +680,8 @@ def ivf_extend(new_embeddings: DataFrame, index_dir: str, id_col: str = "vec_id"
     """Append vectors assigned to the EXISTING centroids (:func:`extend`;
     buildAndMergeNewNodes, GraphIndexBuilder.java:1015-1057), so extend ≡
     rebuild-with-the-same-centroids. The sidecar's deltas come from the
-    appended files' footers: the append is the one Spark job."""
+    appended files' footers: the collect (driver-sized) or the append is
+    the one Spark job."""
     before = {f for fs in _cluster_files(index_dir).values() for f in fs}
     n = extend(IVF, new_embeddings, index_dir, id_col, vec_col)
     new = {c: [f for f in fs if f not in before] for c, fs in _cluster_files(index_dir).items()}
@@ -663,7 +699,7 @@ def ivf_delete(spark: SparkSession, index_dir: str, ids, id_col: str = "vec_id")
         return
     vector_delete(spark, index_dir, new, id_col)
     files = _cluster_files(index_dir)
-    if _driver_sized([f for fs in files.values() for f in fs]):
+    if _small_codes([f for fs in files.values() for f in fs]):
         dead = {c: len(_read_codes(fs, id_col, new, keep=True)) for c, fs in files.items() if fs}
     else:
         dead = Counter(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 
 from .similarity import (
     Tier,
+    VectorRows,
     ann_topk_tier,
     binary_rows,
     code_matrix,
@@ -66,7 +67,7 @@ def _bq_encode(X: np.ndarray, params=None) -> dict:
     )}
 
 
-def _bq_fit(embeddings: DataFrame, id_col: str, vec_col: str):
+def _bq_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str):
     dim = first_dim(embeddings, vec_col)
     return dim, {"dim": dim}
 

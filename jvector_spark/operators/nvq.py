@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 
 from .similarity import (
     Tier,
+    VectorRows,
     ann_topk_tier,
     binary_rows,
     code_matrix,
@@ -162,7 +163,8 @@ def _check_bits(bits: int) -> int:
     return int(bits)
 
 
-def _nvq_fit(embeddings: DataFrame, id_col: str, vec_col: str, bits: int = 8):
+def _nvq_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str,
+             bits: int = 8):
     # nothing trained: the manifest records (dim, bits), ``m`` carrying bits
     bits = _check_bits(bits)
     return bits, {"dim": first_dim(embeddings, vec_col), "m": bits}

@@ -12,7 +12,8 @@ Spark-first shape — the ``PQ`` tier record on the shared two-phase path
 (``similarity.ann_topk_tier``):
 
 - ``pq_train``: driver-side seeded k-means per subspace over a bounded
-  ``orderBy(id).limit(n)`` sample — deterministic at any corpus size.
+  ``orderBy(id).limit(n)`` sample (the first rows of a collected,
+  driver-sized input) — deterministic at any corpus size.
 - encode: one argmin GEMM per (Arrow batch × subspace), emitting ``m``
   uint8 codes per vector as binary. At scale the codes table is persisted
   once (``index.vectors.pq_build``) and scanned per query batch.
@@ -43,11 +44,13 @@ from ..index.storage import arrow_rows, read_required, write_local
 from .similarity import (
     IVF_MAX_TRAINING,
     Tier,
+    VectorRows,
     ann_topk_tier,
     binary_rows,
     code_matrix,
     deleted_ids,
     encode_codes,
+    first_equal,
     per_query,
     sample_matrix,
     training_sample,
@@ -90,7 +93,7 @@ def _kmeans_euclid(X: np.ndarray, k: int, n_iters: int, rng) -> np.ndarray:
 
 
 def pq_train(
-    embeddings: DataFrame,
+    embeddings: DataFrame | VectorRows,
     m: int | None = None,
     n_clusters: int = 256,
     n_iters: int = 10,
@@ -125,13 +128,14 @@ def pq_train(
 
 def _encode_batch(X: np.ndarray, B: np.ndarray, bsq: np.ndarray) -> np.ndarray:
     """Nearest-centroid codes for a normalized batch: one argmin GEMM per
-    subspace (the plain MSE encoder)."""
+    subspace (the plain MSE encoder), naming the first of equal centroids
+    (:func:`~jvector_spark.operators.similarity.first_equal`)."""
     m, _, dsub = B.shape
     codes = np.empty((len(X), m), dtype=np.uint8)
     for s in range(m):
         sub = X[:, s * dsub : (s + 1) * dsub]
         d = bsq[s] - 2.0 * (sub @ B[s].T)
-        codes[:, s] = np.argmin(d, axis=1).astype(np.uint8)
+        codes[:, s] = first_equal(B[s])[np.argmin(d, axis=1)].astype(np.uint8)
     return codes
 
 
@@ -165,6 +169,7 @@ def _encode_batch_anisotropic(
         dot_tables.append(t)
         dots[:, s] = t[np.arange(n), codes[:, s]]
     rows = np.arange(n)
+    first = [first_equal(B[s]) for s in range(m)]
     for _ in range(n_passes):
         changed = 0
         for s in range(m):
@@ -172,7 +177,7 @@ def _encode_batch_anisotropic(
             c_other = (xsq.sum(axis=1) - xsq[:, s]) - (dots.sum(axis=1) - dots[:, s])
             g = c_other[:, None] + xsq[:, s, None] - t  # residual·x if b chosen
             f = (eta - 1.0) * g**2 + bsq[s][None, :] - 2.0 * t
-            new = np.argmin(f, axis=1)
+            new = first[s][np.argmin(f, axis=1)]
             changed += int((new != codes[:, s]).sum())
             codes[:, s] = new
             dots[:, s] = t[rows, new]
@@ -182,7 +187,7 @@ def _encode_batch_anisotropic(
 
 
 def pq_sample_mse(
-    embeddings: DataFrame,
+    embeddings: DataFrame | VectorRows,
     books: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -256,7 +261,7 @@ def _pq_read(index_dir: str, manifest: dict) -> np.ndarray:
     return books.reshape(manifest["m"], manifest["k"], manifest["dsub"])
 
 
-def _pq_fit(embeddings: DataFrame, id_col: str, vec_col: str, **kw):
+def _pq_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str, **kw):
     books = pq_train(embeddings, id_col=id_col, vec_col=vec_col, **kw)
     mm, k, dsub = books.shape
     mse = pq_sample_mse(embeddings, books, id_col, vec_col)

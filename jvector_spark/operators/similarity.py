@@ -2,10 +2,14 @@
 descendant of the reference's core capability (ANN top-k,
 GraphSearcher.java:209-230), re-expressed Spark-first.
 
-- ``cosine_topk``: exact brute-force scan — one float64 Arrow batch
-  kernel (``cosine_kernel``) per scan batch, global top-k without a
-  window. This is the ground-truth path, like jvector's exact-similarity
-  rerank tier.
+- ``cosine_topk``: exact brute-force scan — one float64 kernel
+  (``cosine_kernel``) per scan batch, global top-k without a window. This
+  is the ground-truth path, like jvector's exact-similarity rerank tier.
+  A driver-sized corpus (the ingest rule, ``storage.driver_sized``) is
+  collected once (:func:`vector_input`) and scored on the driver, eagerly,
+  in one JVM-only job; a larger one stays a lazy TakeOrderedAndProject
+  plan over a ``mapInPandas`` scan. ``cosine_topk_batch`` follows the same
+  rule.
 - ``cosine_topk_lsh``: the scale path — random-hyperplane LSH bucketing
   (signs of dot products with R fixed seeded hyperplanes); candidates are
   restricted to the query's bucket (± multi-probe neighbors at Hamming
@@ -14,7 +18,12 @@ GraphSearcher.java:209-230), re-expressed Spark-first.
   visiting a tiny fraction of the corpus.
 - compressed tiers (SQ8 here; PQ, BQ, NVQ in their modules): each is a
   ``Tier`` record, and single queries and batches share one two-phase
-  path (``ann_topk_tier``: approximate codes scan, exact rerank).
+  path (``ann_topk_tier``: approximate codes scan, exact rerank). A
+  tier's fit reads a DataFrame or the collected :class:`VectorRows` of a
+  driver-sized input (:func:`sample_matrix`, :func:`first_dim`,
+  :func:`sq8_train` take either), and its encode kernel runs per Arrow
+  batch (:func:`encode_codes`) or over the whole collected matrix
+  (:func:`encode_rows`).
 - ``IVF``: the coarse-quantizer record (``ivf_train``'s spherical k-means,
   a nearest-centroid encode); ``index.vectors.ivf_*`` writes its codes by
   cluster, so a probe reads only its clusters' files, then reranks exactly.
@@ -38,6 +47,8 @@ from pyspark.sql import functions as F
 
 from ..index.storage import (
     arrow_rows,
+    arrow_schema,
+    driver_sized,
     ids_in,
     local_relation,
     read_files,
@@ -116,17 +127,30 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(rank, vec_id, cos): exact top-k by cosine, ties → ascending id
-    (same determinism contract as BM25 top-k).
+    (same determinism contract as BM25 top-k). An undefined cosine (an
+    infinite component) comes back null and ranks last.
 
-    ``orderBy().limit(k)`` compiles to TakeOrderedAndProject — every
-    partition keeps a local k-heap and only k rows per partition reach the
-    driver-side merge, so this scans 10^12 rows without a global sort.
-    Rank is then derived WITHOUT a window: the ≤ k survivors coalesce to
-    one partition (global limit output is single-partition already; the
-    coalesce makes that explicit), a within-partition sort fixes the
-    order, and ``monotonically_increasing_id`` on partition 0 counts
-    0..k-1 in that order. This keeps Spark's single-partition window
-    warning a real signal elsewhere instead of noise every query."""
+    A driver-sized corpus (the ingest rule, ``storage.driver_sized``) is
+    collected once (:func:`vector_input`), scored on the driver by
+    :func:`cosine_kernel` and returned as a local relation: the call runs
+    eagerly, one JVM-only Spark job and no Python worker.
+
+    A larger one stays lazy. ``orderBy().limit(k)`` compiles to
+    TakeOrderedAndProject — every partition keeps a local k-heap and only
+    k rows per partition reach the driver-side merge, so this scans 10^12
+    rows without a global sort. Rank is then derived WITHOUT a window: the
+    ≤ k survivors coalesce to one partition (global limit output is
+    single-partition already; the coalesce makes that explicit), a
+    within-partition sort fixes the order, and
+    ``monotonically_increasing_id`` on partition 0 counts 0..k-1 in that
+    order. This keeps Spark's single-partition window warning a real
+    signal elsewhere instead of noise every query. Both sides score each
+    row with the same kernel, so they return the same rows and bits."""
+    rows = vector_input(embeddings, id_col, vec_col)
+    if isinstance(rows, VectorRows):
+        Q = np.asarray([query_vec], dtype=np.float64)
+        return topk_relation(embeddings.sparkSession, exact_hits(rows, Q, k), id_col,
+                             embeddings.schema[id_col].dataType.simpleString())
     scored = cosine_scores(embeddings, query_vec, id_col, vec_col)
     top = scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
     return (
@@ -150,17 +174,23 @@ def cosine_topk_batch(
     vectors in ONE corpus scan — the batch analog of :func:`cosine_topk`
     and the embedding twin of the docpart BM25 batch (surveyed Q13: the
     bounded query set ships inside the kernel closure; the corpus never
-    shuffles). It is the first pass of the shared two-phase path
-    (:func:`topk_pass`) with the exact kernel and depth k, so each row
-    scores with the bits :func:`cosine_topk` gives it. Runs eagerly and
-    returns a local relation; ties break by ascending id."""
+    shuffles). A driver-sized corpus is collected once and scored on the
+    driver (:func:`exact_hits`); a larger one runs the first pass of the
+    shared two-phase path (:func:`topk_pass`) with the exact kernel and
+    depth k. Either way each row scores with the bits :func:`cosine_topk`
+    gives it. Runs eagerly and returns a local relation; ties break by
+    ascending id."""
     qids, Q = query_matrix(queries, qid_col, qvec_col)
     hits = []
     if qids:
-        hits = topk_pass(
-            embeddings.select(id_col, vec_col),
-            partial(cosine_rows, vec_col=vec_col), Q, k, (), id_col,
-        )
+        rows = vector_input(embeddings, id_col, vec_col)
+        if isinstance(rows, VectorRows):
+            hits = exact_hits(rows, Q, k)
+        else:
+            hits = topk_pass(
+                embeddings.select(id_col, vec_col),
+                partial(cosine_rows, vec_col=vec_col), Q, k, (), id_col,
+            )
     return topk_relation(embeddings.sparkSession, hits, id_col, qids=qids,
                          qid_col=qid_col)
 
@@ -360,6 +390,35 @@ def embedding_near_dups(
     return out
 
 
+def lsh_verify_cell(vsa, vsb, pairs, packed: bool, threshold: float) -> pd.DataFrame:
+    """(a, b, cos) of the candidate ``pairs`` of one (block(a), block(b))
+    cell of :func:`embedding_near_dups_lsh` whose cosine is at least
+    ``threshold``: the exact verify kernel. ``vsa``/``vsb`` are the two
+    blocks' rows ({"id", "_nv"}: id and unit vector), ``pairs`` the
+    cell's pairs, each packed into one int64 ``a<<32 | b`` (``packed``,
+    ids in [0, 2³¹)) or a {"a", "b"} struct (any ids). Every pair's ids
+    must be in its blocks. One row-wise ``einsum`` scores every pair."""
+    ida = np.fromiter((v["id"] for v in vsa), dtype=np.int64, count=len(vsa))
+    idb = np.fromiter((v["id"] for v in vsb), dtype=np.int64, count=len(vsb))
+    A = np.array([v["_nv"] for v in vsa], dtype=np.float64)
+    B = np.array([v["_nv"] for v in vsb], dtype=np.float64)
+    if packed:
+        pab = np.asarray(pairs, dtype=np.int64)
+        a_ids = pab >> 32
+        b_ids = pab & 0xFFFFFFFF
+    else:
+        a_ids = np.fromiter((p["a"] for p in pairs), dtype=np.int64, count=len(pairs))
+        b_ids = np.fromiter((p["b"] for p in pairs), dtype=np.int64, count=len(pairs))
+    # id → block-row position via sorted searchsorted gathers (no per-pair
+    # Python dict lookups)
+    oa, ob = np.argsort(ida), np.argsort(idb)
+    ra = oa[np.searchsorted(ida[oa], a_ids)]
+    rb = ob[np.searchsorted(idb[ob], b_ids)]
+    cos = np.einsum("ij,ij->i", A[ra], B[rb])
+    keep = cos >= threshold
+    return pd.DataFrame({"a": a_ids[keep], "b": b_ids[keep], "cos": cos[keep]})
+
+
 def embedding_near_dups_lsh(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -462,39 +521,7 @@ def embedding_near_dups_lsh(
     def fn(it):
         for pdf in it:
             for _, row in pdf.iterrows():
-                ida = np.fromiter(
-                    (v["id"] for v in row["_vsa"]), dtype=np.int64,
-                    count=len(row["_vsa"]),
-                )
-                idb = np.fromiter(
-                    (v["id"] for v in row["_vsb"]), dtype=np.int64,
-                    count=len(row["_vsb"]),
-                )
-                A = np.array([v["_nv"] for v in row["_vsa"]], dtype=np.float64)
-                B = np.array([v["_nv"] for v in row["_vsb"]], dtype=np.float64)
-                if packable:
-                    pab = np.asarray(row["_ps"], dtype=np.int64)
-                    a_ids = pab >> 32
-                    b_ids = pab & 0xFFFFFFFF
-                else:
-                    a_ids = np.fromiter(
-                        (p["a"] for p in row["_ps"]), dtype=np.int64,
-                        count=len(row["_ps"]),
-                    )
-                    b_ids = np.fromiter(
-                        (p["b"] for p in row["_ps"]), dtype=np.int64,
-                        count=len(row["_ps"]),
-                    )
-                # id → block-row position via sorted searchsorted gathers
-                # (no per-pair Python dict lookups)
-                oa, ob = np.argsort(ida), np.argsort(idb)
-                pa = oa[np.searchsorted(ida[oa], a_ids)]
-                pb = ob[np.searchsorted(idb[ob], b_ids)]
-                cos = np.einsum("ij,ij->i", A[pa], B[pb])
-                keep = cos >= thr
-                yield pd.DataFrame(
-                    {"a": a_ids[keep], "b": b_ids[keep], "cos": cos[keep]}
-                )
+                yield lsh_verify_cell(row["_vsa"], row["_vsb"], row["_ps"], packable, thr)
 
     return joined.mapInPandas(fn, schema="a long, b long, cos double")
 
@@ -534,9 +561,12 @@ class Tier:
 
     - ``fit(embeddings, id_col, vec_col, **kw)`` → (params, manifest
       fields): the training pass, or only the dimension for a tier
-      without trained state.
+      without trained state, over a DataFrame or over collected
+      :class:`VectorRows` (the same params either way).
     - ``encode(X, params, **kw)`` → the code columns (``code_schema``) of
-      a float64 batch of vectors.
+      a float64 batch of vectors: one Arrow batch in a Spark task
+      (:func:`encode_codes`) or a whole collected matrix on the driver
+      (:func:`encode_rows`).
     - ``score(codes, Q, params)`` → S[n × nq], the ONE approximate-score
       kernel: column j has the bits of a one-query call on ``Q[j]``.
     - ``floor``/``factor``: the default rerank depth, max(floor, factor·k).
@@ -565,12 +595,58 @@ class Tier:
         return max(self.floor, self.factor * int(k))
 
 
+@dataclass(frozen=True)
+class VectorRows:
+    """A driver-sized (id, vector) input, collected once
+    (:func:`vector_input`): the int64 ``ids`` in ascending order and the
+    float64 matrix ``X`` of their vectors, one row each ((0, 0) when
+    empty). Every fit, encode and exact scan of such an input reads these
+    arrays instead of a DataFrame."""
+
+    ids: np.ndarray
+    X: np.ndarray
+
+
+def vector_input(
+    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame | VectorRows:
+    """``embeddings`` collected to the driver as :class:`VectorRows` when
+    its (id, vector) projection is driver-sized (the one ingest rule,
+    ``storage.driver_sized``; one ``toArrow`` job, which starts no Python
+    worker unless the input's own plan does), else
+    ``embeddings`` itself, for the Spark side. Rows are sorted by id,
+    stably, so the first n are the rows ``orderBy(id).limit(n)`` takes.
+    A null id, a null vector or vectors of different lengths raise
+    ``ValueError``."""
+    sel = embeddings.select(id_col, vec_col)
+    if not driver_sized(sel):
+        return embeddings
+    tbl = sel.toArrow()
+    if tbl[id_col].null_count or tbl[vec_col].null_count:
+        raise ValueError(f"a null {id_col} or {vec_col} among the vectors")
+    ids = tbl[id_col].to_numpy().astype(np.int64)
+    if len(ids) == 0:
+        return VectorRows(ids, np.empty((0, 0)))
+    vecs = tbl[vec_col].combine_chunks()
+    lengths = pc.list_value_length(vecs).to_numpy()
+    if lengths.min() != lengths.max():
+        raise ValueError(f"{vec_col} vectors differ in length")
+    flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+    X = flat.astype(np.float64).reshape(len(ids), int(lengths[0]))
+    order = np.argsort(ids, kind="stable")
+    return VectorRows(ids[order], X[order])
+
+
 def sample_matrix(
-    embeddings: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+    embeddings: DataFrame | VectorRows, n: int, id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> np.ndarray:
     """float64 rows of the ``n`` lowest ids (TakeOrderedAndProject, no
-    global sort): the deterministic bounded sample every training pass and
-    health metric reads, reproducible at any corpus size."""
+    global sort; the first n rows of collected :class:`VectorRows`): the
+    deterministic bounded sample every training pass and health metric
+    reads, reproducible at any corpus size."""
+    if isinstance(embeddings, VectorRows):
+        return embeddings.X[: int(n)].copy()
     pdf = embeddings.select(id_col, vec_col).orderBy(id_col).limit(int(n)).toPandas()
     if len(pdf) == 0:
         return np.empty((0, 0))
@@ -578,7 +654,8 @@ def sample_matrix(
 
 
 def training_sample(
-    embeddings: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+    embeddings: DataFrame | VectorRows, n: int, id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> np.ndarray:
     """The L2-normalized :func:`sample_matrix` a k-means trainer fits (PQ's
     codebooks, IVF's centroids). An empty corpus has nothing to train on
@@ -589,8 +666,10 @@ def training_sample(
     return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
 
 
-def first_dim(embeddings: DataFrame, vec_col: str = "embedding") -> int:
+def first_dim(embeddings: DataFrame | VectorRows, vec_col: str = "embedding") -> int:
     """The vector dimension, from one row (0 for an empty table)."""
+    if isinstance(embeddings, VectorRows):
+        return embeddings.X.shape[1]
     first = embeddings.select(vec_col).first()
     return len(first[0]) if first else 0
 
@@ -648,6 +727,19 @@ def encode_codes(
     )
 
 
+def encode_rows(
+    tier: Tier, rows: VectorRows, params, id_col: str = "vec_id", **kw
+) -> pa.Table:
+    """(id, code columns) of collected rows as an Arrow table: the driver
+    twin of :func:`encode_codes`, the tier's encode kernel over the whole
+    matrix."""
+    schema = arrow_schema(f"{id_col} long, {tier.code_schema}")
+    if len(rows.ids) == 0:
+        return schema.empty_table()
+    return pa.Table.from_pydict({id_col: rows.ids, **tier.encode(rows.X, params, **kw)},
+                                schema=schema)
+
+
 def query_matrix(
     queries: DataFrame, qid_col: str = "query_id", qvec_col: str = "qvec"
 ) -> tuple[list[int], np.ndarray]:
@@ -661,6 +753,18 @@ def deleted_ids(deleted: DataFrame | None, id_col: str) -> list[int]:
     if deleted is None:
         return []
     return sorted({r[0] for r in deleted.select(id_col).collect()})
+
+
+def exact_hits(rows: VectorRows, Q: np.ndarray, k: int) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per query, (ids, cos) of the exact top k of collected rows by (cos
+    desc, id asc): :func:`cosine_kernel` on the driver. numpy's sort puts
+    a NaN score last, where Spark's ``DESC NULLS LAST`` puts the null a
+    NaN from a ``mapInPandas`` kernel becomes."""
+    if len(rows.ids) == 0:
+        return [(rows.ids, np.array([]))] * len(Q)
+    S = per_query(Q, lambda q: cosine_kernel(rows.X, q))
+    tops = [np.lexsort((rows.ids, -S[:, j]))[: int(k)] for j in range(len(Q))]
+    return [(rows.ids[t], S[t, j]) for j, t in enumerate(tops)]
 
 
 def topk_rows(
@@ -798,8 +902,10 @@ def topk_relation(
 ) -> DataFrame:
     """The answer as a local relation (reading it runs no job): (rank, id,
     cos) for a single query (``qids`` None), else (query_id, rank, id,
-    cos)."""
-    rows = [(q, r + 1, int(i), float(c)) for q, (ids, cos) in zip(qids or [0], hits)
+    cos). A NaN cos is written as null, as Spark's Arrow conversion
+    writes a NaN that a ``mapInPandas`` kernel returns."""
+    rows = [(q, r + 1, int(i), None if np.isnan(c) else float(c))
+            for q, (ids, cos) in zip(qids or [0], hits)
             for r, (i, c) in enumerate(zip(ids, cos))]
     if qids is None:
         return local_relation(spark, [r[1:] for r in rows],
@@ -866,22 +972,32 @@ def ann_topk_tier(
 
 
 def sq8_train(
-    embeddings: DataFrame, vec_col: str = "embedding"
+    embeddings: DataFrame | VectorRows, vec_col: str = "embedding"
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-dimension (min, scale) from one aggregated pass — the codebook
     of scalar quantization (ProductQuantization.java:88-154's training
     analog, trivially exact instead of k-means). The posexplode relation is
     (rows × dim) narrow ints/floats with map-side combine into ``dim``
-    groups — vocabulary-sized output at any corpus size."""
-    stats = (
-        embeddings.select(F.posexplode(vec_col).alias("i", "x"))
-        .groupBy("i")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .orderBy("i")
-        .collect()
-    )
-    mn = np.array([r.mn for r in stats], dtype=np.float64)
-    mx = np.array([r.mx for r in stats], dtype=np.float64)
+    groups — vocabulary-sized output at any corpus size. Collected
+    :class:`VectorRows` take the column min/max with numpy, as Spark's
+    aggregates order NaN: above every number, so a NaN is skipped by the
+    min and is the max."""
+    if isinstance(embeddings, VectorRows):
+        X = embeddings.X
+        if len(X) == 0:
+            mn = mx = np.empty(0)
+        else:
+            mn, mx = np.fmin.reduce(X, axis=0), X.max(axis=0)
+    else:
+        stats = (
+            embeddings.select(F.posexplode(vec_col).alias("i", "x"))
+            .groupBy("i")
+            .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
+            .orderBy("i")
+            .collect()
+        )
+        mn = np.array([r.mn for r in stats], dtype=np.float64)
+        mx = np.array([r.mx for r in stats], dtype=np.float64)
     scale = np.maximum(mx - mn, 1e-12) / 255.0
     return mn, scale
 
@@ -923,7 +1039,7 @@ def _sq8_read(index_dir: str, manifest: dict) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _sq8_fit(embeddings: DataFrame, id_col: str, vec_col: str):
+def _sq8_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str):
     mn, scale = sq8_train(embeddings, vec_col)
     return (mn, scale), {"dim": len(mn)}
 
@@ -986,7 +1102,7 @@ IVF_MAX_TRAINING = 131_072  # reference: MAX_PQ_TRAINING_SET_SIZE = 128k
 
 
 def ivf_train(
-    embeddings: DataFrame,
+    embeddings: DataFrame | VectorRows,
     n_clusters: int = 16,
     n_iters: int = 10,
     sample_size: int = IVF_MAX_TRAINING,
@@ -1002,7 +1118,8 @@ def ivf_train(
     (n_clusters × dim, float64).
 
     The sample is the lowest ``sample_size`` ids (TakeOrderedAndProject —
-    no global sort), so training is reproducible at any corpus size."""
+    no global sort — or the first rows of collected :class:`VectorRows`),
+    so training is reproducible at any corpus size."""
     X = training_sample(embeddings, sample_size, id_col, vec_col)
     n = len(X)
     k = min(n_clusters, n)
@@ -1029,11 +1146,22 @@ def ivf_train(
     return centroids
 
 
+def first_equal(C: np.ndarray) -> np.ndarray:
+    """For each row of ``C``, the index of its first bit-equal row. A
+    nearest-centroid encode names the lowest-numbered of equal centroids
+    through it: their distances are equal in exact arithmetic, but a
+    GEMM's bits for them depend on the shape of the batch, so the argmin
+    alone could pick either, by batch. (k-means makes equal centroids from
+    repeated vectors, or when k reaches the sample size.)"""
+    _, first, inverse = np.unique(C, axis=0, return_index=True, return_inverse=True)
+    return first[inverse.ravel()]
+
+
 def _ivf_encode(X: np.ndarray, params) -> dict:
     # nearest centroid of each normalized vector: one whole-batch GEMM argmax
     C = np.ascontiguousarray(params, dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return {"cluster": np.argmax(X @ C.T, axis=1).astype(np.int32)}
+    return {"cluster": first_equal(C)[np.argmax(X @ C.T, axis=1)].astype(np.int32)}
 
 
 def _ivf_write(centroids: np.ndarray, index_dir: str) -> None:
@@ -1051,8 +1179,12 @@ def _ivf_read(index_dir: str, manifest: dict) -> np.ndarray:
     return np.array(tbl["centroid"].to_pylist(), dtype=np.float64)
 
 
-def _ivf_fit(embeddings: DataFrame, id_col: str, vec_col: str, **kw):
-    cents = ivf_train(embeddings, id_col=id_col, vec_col=vec_col, **kw)
+def _ivf_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str,
+             n_clusters: int | None = None, **kw):
+    if n_clusters is None:  # ≈√N, the classic IVF operating point
+        n = len(embeddings.ids) if isinstance(embeddings, VectorRows) else embeddings.count()
+        n_clusters = max(2, int(round(float(n) ** 0.5)))
+    cents = ivf_train(embeddings, n_clusters, id_col=id_col, vec_col=vec_col, **kw)
     return cents, {"dim": cents.shape[1], "k": len(cents)}
 
 

@@ -2,7 +2,7 @@
 (one tokenized collect, ``build._ingest_on_driver`` over an empty base,
 pyarrow writes); a larger one runs the Spark pipeline (``build._build``).
 An extend is either body over the live index as its base. One constant,
-``build.DRIVER_MAX_INGEST_BYTES``, sizes builds and extends, and tests
+``storage.DRIVER_MAX_INGEST_BYTES``, sizes builds and extends, and tests
 force a side through it (``test_local_tables._force``). Both sides must
 write the same rows in every table, under ``tools/diff_index.py``."""
 

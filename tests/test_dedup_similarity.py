@@ -483,3 +483,47 @@ def test_ann_bq_batch_equals_per_query_and_exact(spark):
 
     empty = qs.filter(F.lit(False))
     assert ann_topk_bq_batch(emb, empty, k=10).count() == 0
+
+
+@pytest.mark.parametrize("packed", [True, False])
+def test_lsh_verify_cell_matches_brute_force(packed):
+    """Spark-free: one cell of the LSH verify kernel keeps exactly the
+    candidate pairs whose unit-vector dot reaches the threshold, with
+    their cosines, in both pair forms: ids packed as ``a<<32 | b`` (ids in
+    [0, 2³¹)), and {"a", "b"} structs, the fallback for a negative id or
+    one ≥ 2³¹."""
+    import numpy as np
+
+    from jvector_spark.operators.similarity import lsh_verify_cell
+
+    rng = np.random.default_rng(9 + packed)
+    ids = rng.choice(1 << 31, size=60, replace=False).astype(np.int64)
+    if not packed:
+        ids[:20] -= 1 << 31  # negative
+        ids[20:40] += 1 << 33  # wider than 31 bits
+    V = rng.standard_normal((60, 12))
+    V[7] = V[3] + 0.01 * rng.standard_normal(12)  # a near duplicate
+    V /= np.linalg.norm(V, axis=1, keepdims=True)
+    V[11] = 0.0  # a zero vector's unit form
+    blk_a, blk_b = rng.permutation(60)[:35], rng.permutation(60)[:40]
+    rows = lambda blk: [{"id": int(ids[i]), "_nv": V[i].tolist()} for i in blk]  # noqa: E731
+    cand = [(int(i), int(j)) for i in blk_a for j in blk_b if rng.random() < 0.4]
+    cand += [(3, 7)] if 3 in blk_a and 7 in blk_b else []
+    pairs = (
+        np.array([(int(ids[i]) << 32) | int(ids[j]) for i, j in cand], dtype=np.int64)
+        if packed
+        else [{"a": int(ids[i]), "b": int(ids[j])} for i, j in cand]
+    )
+    thr = 0.2
+    want = {}
+    for i, j in cand:
+        c = sum(float(x) * float(y) for x, y in zip(V[i], V[j]))
+        assert abs(c - thr) > 1e-9  # no pair on the boundary
+        if c >= thr:
+            want[(int(ids[i]), int(ids[j]))] = c
+    got = lsh_verify_cell(rows(blk_a), rows(blk_b), pairs, packed, thr)
+    assert list(got.columns) == ["a", "b", "cos"]
+    pairs_got = list(zip(got["a"].tolist(), got["b"].tolist()))
+    assert sorted(pairs_got) == sorted(want)
+    assert np.allclose(got["cos"].to_numpy(), [want[p] for p in pairs_got], rtol=0, atol=1e-12)
+    assert len(want) >= 5  # the threshold keeps a real share of the pairs

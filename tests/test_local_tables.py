@@ -30,11 +30,13 @@ def _jobs(spark, fn):
 
 
 def _force(monkeypatch, side: str) -> None:
-    """Force the side (``"driver"`` or ``"spark"``) every build and extend
-    takes, through the one sizing constant."""
-    import jvector_spark.index.build as B
+    """Force the side (``"driver"`` or ``"spark"``) every ingest takes (BM25
+    and vector builds and extends, exact cosine scans), through the one
+    sizing constant. 2^63 is above every estimate, Long.MaxValue (an RDD
+    scan's) included."""
+    import jvector_spark.index.storage as S
 
-    monkeypatch.setattr(B, "DRIVER_MAX_INGEST_BYTES", 1 << 62 if side == "driver" else -1)
+    monkeypatch.setattr(S, "DRIVER_MAX_INGEST_BYTES", 1 << 63 if side == "driver" else -1)
 
 
 def _copy(src: str, tmp_path) -> str:

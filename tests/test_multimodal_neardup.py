@@ -122,10 +122,15 @@ def test_embedding_near_dups_lsh_subset_and_recall(spark, vectors):
     assert len(got) >= 0.9 * len(exact)
 
 
-def test_cosine_topk_no_global_window_plan(spark, vectors):
-    """The exact top-k must compile to TakeOrderedAndProject, not a
-    single-partition global Window sort (SURVEY.md P-scale audit)."""
+def test_cosine_topk_no_global_window_plan(spark, vectors, monkeypatch):
+    """Above the ingest rule (forced here), the exact top-k must compile
+    to TakeOrderedAndProject, not a single-partition global Window sort
+    (SURVEY.md P-scale audit)."""
+    from test_local_tables import _force
+
     from jvector_spark.operators.similarity import cosine_topk
+
+    _force(monkeypatch, "spark")
 
     qv = [float(x) for x in np.arange(16)]
     plan = cosine_topk(vectors, qv, k=5)._jdf.queryExecution().executedPlan().toString()

@@ -477,18 +477,24 @@ def test_batch_serves_in_two_jobs(spark, embeddings, tier_dirs, tier):
 
 
 @pytest.mark.parametrize("tier", TIERS + ("ivf",))
-def test_extend_counts_on_the_write(spark, embeddings, tmp_path, tier):
-    """An extend encodes the delta once: the count is observed on the
-    codes append, one Spark job (IVF's sidecar deltas come from the
-    appended files' footers)."""
+def test_extend_counts_on_the_write(spark, embeddings, tmp_path, monkeypatch, tier):
+    """An extend encodes the delta once, in one Spark job on either side
+    of the ingest rule: a driver-sized delta's collect (its count is the
+    rows collected), or the Spark side's codes append, with the count
+    observed on it (IVF's sidecar deltas come from the appended files'
+    footers)."""
+    from test_local_tables import _force
+
     from jvector_spark.index import vectors as V
 
-    d = str(tmp_path / tier)
-    getattr(V, f"{tier}_build")(embeddings.filter(F.col("vec_id") < 300), d)
-    rest = embeddings.filter(F.col("vec_id") >= 300)
-    n, jobs = _jobs(spark, lambda: getattr(V, f"{tier}_extend")(rest, d))
-    assert jobs == 1
-    assert n == rest.count() == V.read_codes(spark, d).count() - 300
+    for side in ("driver", "spark"):
+        _force(monkeypatch, side)
+        d = str(tmp_path / f"{tier}_{side}")
+        getattr(V, f"{tier}_build")(embeddings.filter(F.col("vec_id") < 300), d)
+        rest = embeddings.filter(F.col("vec_id") >= 300)
+        n, jobs = _jobs(spark, lambda: getattr(V, f"{tier}_extend")(rest, d))
+        assert jobs == 1, side
+        assert n == rest.count() == V.read_codes(spark, d).count() - 300, side
 
 
 def test_ivf_delete_and_query_job_budgets(spark, embeddings, tmp_path):

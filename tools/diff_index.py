@@ -3,7 +3,8 @@
 Two Spark writes of the same rows do not give the same Parquet bytes, and
 the same rows may be split across files differently. So each table is read
 whole with pyarrow (hive ``key=value`` directories become columns), sorted
-on every column, and compared row for row. No Spark session is started.
+on every column but its list columns (which Arrow cannot sort on), and
+compared row for row, list columns included. No Spark session is started.
 
 Each equal table is also compared in file order: whether every partition
 directory holds the same row sequences file by file (file names ignored,
@@ -91,8 +92,18 @@ def _order_note(dir_a: str, dir_b: str) -> tuple[str, bool]:
 
 
 def _sorted(t: pa.Table, names: list[str]) -> pa.Table:
+    """``t``'s columns ``names`` sorted on those that Arrow can sort: list
+    columns (PQ codebooks, IVF centroids) cannot be sort keys, so they
+    ride along and are compared with their rows."""
     t = t.select(names)
-    return t.sort_by([(n, "ascending") for n in names])
+    keys = [n for n in names if not pa.types.is_list(t.schema.field(n).type)]
+    return t.sort_by([(n, "ascending") for n in keys])
+
+
+def _row_key(row: dict) -> tuple:
+    # nulls first, lists as tuples, so any two rows compare
+    return tuple((v is not None, tuple(v) if isinstance(v, list) else v)
+                 for v in row.values())
 
 
 def compare(a: pa.Table | None, b: pa.Table | None) -> str | None:
@@ -112,6 +123,15 @@ def compare(a: pa.Table | None, b: pa.Table | None) -> str | None:
     # nullability, which a Spark rewrite of the same rows can change
     if all(sa.column(n).equals(sb.column(n)) for n in names):
         return None
+    if any(pa.types.is_list(sa.schema.field(n).type) for n in names):
+        # rows tied on every sortable column may sit in either order:
+        # compare the whole rows, list columns included, as sorted tuples
+        ra = sorted(sa.to_pylist(), key=_row_key)
+        rb = sorted(sb.to_pylist(), key=_row_key)
+        if ra == rb:
+            return None
+        i = next(i for i, (x, y) in enumerate(zip(ra, rb)) if x != y)
+        return f"sorted row {i} differs: {ra[i]} != {rb[i]}"
     for i in range(sa.num_rows):
         ra, rb = sa.slice(i, 1).to_pylist()[0], sb.slice(i, 1).to_pylist()[0]
         if ra != rb:

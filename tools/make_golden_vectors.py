@@ -24,12 +24,27 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from jvector_spark.index import vectors as V  # noqa: E402
+
 GOLDEN = os.path.join(REPO, "tests", "golden")
 
 # fixed query set: golden embeddings' own vec_ids (self-match included —
 # rank 1 is the query vector itself, a stable anchor for the comparison)
 QUERY_VEC_IDS = [0, 17, 255]
 K = 8
+
+
+# the structures a fresh build over ``make_embeddings(spark)`` must
+# reproduce (tests/test_vector_sides.py), by tier, in generation order. Small
+# PQ m/k keeps the committed codebooks parquet tiny (dim=32 → m=4 subspaces
+# of 8 dims, 16 centroids each)
+BUILDERS = {
+    "pq": lambda emb, d: V.pq_build(emb, d, m=4, n_clusters=16, seed=99),
+    "sq8": V.sq8_build,
+    "bq": V.bq_build,
+    "nvq": V.nvq_build,
+    "ivf": lambda emb, d: V.ivf_build(emb, d, n_clusters=8, n_iters=4, seed=77),
+}
 
 
 def _strip_noise(path: str) -> None:
@@ -41,55 +56,26 @@ def _strip_noise(path: str) -> None:
 
 def main() -> None:
     from jvector_spark.fixtures import make_embeddings, make_embeddings_pdf
-    from jvector_spark.index.vectors import (
-        ann_topk_bq_indexed,
-        ann_topk_nvq_indexed,
-        ann_topk_pq_indexed,
-        ann_topk_sq8_indexed,
-        bq_build,
-        ivf_build,
-        ivf_topk_indexed,
-        nvq_build,
-        pq_build,
-        sq8_build,
-    )
     from jvector_spark.session import get_spark
 
     spark = get_spark(cores=4, shuffle_partitions=4, app_name="make_golden_vectors")
     emb = make_embeddings(spark).cache()
     pdf = make_embeddings_pdf()
 
-    dirs = {
-        "pq": os.path.join(GOLDEN, "pq_index"),
-        "sq8": os.path.join(GOLDEN, "sq8_index"),
-        "bq": os.path.join(GOLDEN, "bq_index"),
-        "nvq": os.path.join(GOLDEN, "nvq_index"),
-        "ivf": os.path.join(GOLDEN, "ivf_index"),
-    }
+    dirs = {t: os.path.join(GOLDEN, f"{t}_index") for t in BUILDERS}
     only = set(sys.argv[1:]) or set(dirs)
     dirs = {t: d for t, d in dirs.items() if t in only}
     for d in dirs.values():
         shutil.rmtree(d, ignore_errors=True)
-
-    # small m/k keeps the committed codebooks parquet tiny (dim=32 → m=4
-    # subspaces of 8 dims, 16 centroids each)
-    if "pq" in dirs:
-        pq_build(emb, dirs["pq"], m=4, n_clusters=16, seed=99)
-    if "sq8" in dirs:
-        sq8_build(emb, dirs["sq8"])
-    if "bq" in dirs:
-        bq_build(emb, dirs["bq"])
-    if "nvq" in dirs:
-        nvq_build(emb, dirs["nvq"])
-    if "ivf" in dirs:
-        ivf_build(emb, dirs["ivf"], n_clusters=8, n_iters=4, seed=77)
+    for tier, d in dirs.items():
+        BUILDERS[tier](emb, d)
 
     runners = {
-        "pq": ann_topk_pq_indexed,
-        "sq8": ann_topk_sq8_indexed,
-        "bq": ann_topk_bq_indexed,
-        "nvq": ann_topk_nvq_indexed,
-        "ivf": ivf_topk_indexed,
+        "pq": V.ann_topk_pq_indexed,
+        "sq8": V.ann_topk_sq8_indexed,
+        "bq": V.ann_topk_bq_indexed,
+        "nvq": V.ann_topk_nvq_indexed,
+        "ivf": V.ivf_topk_indexed,
     }
     runners = {t: f for t, f in runners.items() if t in dirs}
     expected: dict = {"query_vec_ids": QUERY_VEC_IDS, "k": K, "tiers": {}}
