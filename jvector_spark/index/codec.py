@@ -1,9 +1,9 @@
 """Posting-block codec: delta-encoded docID gaps + LEB128 varint packing,
 vectorized in numpy (no per-element Python loops on the hot path). This
 module is the one place that knows the block wire format: the postings
-encoder (``build``), the positions encoder and decoder (``positions``) and
-every postings read (the WAND kernel, the relational reads, compaction,
-the boolean reads) call it.
+encoder (``build``), the positions encoder (``positions``) and every
+block read (the WAND kernel, and ``query.decoded`` under the relational,
+boolean and positional reads and compaction) call it.
 
 This is the text-domain analog of the reference's lossy PQ encode/decode
 (jvector-base/.../quantization/ProductQuantization.java:244-446, surveyed
@@ -27,7 +27,9 @@ Encode: :func:`block_layout` cuts sorted rows into blocks,
 :func:`pack_blocks` varint-encodes a column once and slices it per block.
 Decode: :func:`unpack_blocks` decodes any set of a column's blocks as one
 flat buffer and :func:`rebase` restarts the prefix sums per block;
-:func:`decode_blocks` is the one postings decoder built from them.
+:func:`decode_blocks` is the one postings decoder built from them, and
+:func:`decode_position_blocks` the one positions decoder (the positions
+wire format is in ``index.positions``).
 """
 
 from __future__ import annotations
@@ -193,3 +195,25 @@ def decode_blocks(
     )
     docs = rebase(gaps, counts, np.asarray(frame["base"])[rows])
     return np.repeat(rows, counts), docs, tf, dl
+
+
+def decode_position_blocks(frame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode every positions block of ``frame`` (its ``n``, ``base``,
+    ``n_occ`` and three packed columns) into flat int64 ``(row_idx, doc_id,
+    pos)``, one row per occurrence, in three varint calls. Every doc's
+    first position is stored raw, so the position sums restart at each
+    doc."""
+    ns = np.asarray(frame["n"], np.int64)
+    n_occ = np.asarray(frame["n_occ"], np.int64)
+    total_occ = int(n_occ.sum())
+    if total_occ == 0:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, z
+    total_n = int(ns.sum())
+    docs = rebase(
+        unpack_blocks(frame["doc_ids_packed"], total_n), ns,
+        np.asarray(frame["base"], np.int64),
+    )
+    counts = unpack_blocks(frame["counts_packed"], total_n)
+    pos = rebase(unpack_blocks(frame["positions_packed"], total_occ), counts)
+    return np.repeat(np.arange(len(ns)), n_occ), np.repeat(docs, counts), pos

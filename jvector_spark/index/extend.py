@@ -85,7 +85,11 @@ every delta doc id is at least ``first`` ≥ n_docs, past the doc range the
 build's ``doc_id * n_salts // n_docs`` split covers.
 
 Caller doc ids must be unique: a repeated or null one raises
-``ValueError`` on both paths before anything is written.
+``ValueError`` on both paths before anything is written. An index with
+the positional feature (``index.positions``) is refused with
+``NotImplementedError`` before anything is written, as the doc layout
+is: neither path writes ``positions/``, so phrase and proximity reads
+would miss every extended doc.
 
 Every query after ``extend_index`` must equal a brute-force BM25 over the
 unioned corpus exactly (tests/test_extend_maintenance.py), and both paths
@@ -104,6 +108,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import _build, _ingest_on_driver, _projection, _tokenized
+from .positions import has_positions
 from .storage import (
     LINEAGE_SCHEMA,
     TABLE_SCHEMAS,
@@ -263,6 +268,11 @@ def extend_index(
             "extend_index does not support the doc-partitioned layout yet "
             "(delta ids past the last bucket have no bucket); rebuild via "
             "build_doc_partitioned"
+        )
+    if has_positions(index_dir):
+        raise NotImplementedError(
+            "extend_index does not write positions (phrase and proximity reads "
+            "would miss every new doc); rebuild, then add_positions"
         )
     n_old = int(seg["n_docs"])
     n_parts = int(seg["n_parts"])

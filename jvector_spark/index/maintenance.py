@@ -8,16 +8,18 @@ Semantics:
 - ``delete_docs`` appends doc_ids to a ``tombstones`` table — O(deletes),
   no index rewrite. Queries mask tombstoned docs *before* top-k selection
   (a deleted doc must not occupy a result slot NOR shadow a live doc).
-- ``compact_index`` physically rewrites the postings without tombstoned
-  docs, shrinks doc_stats/doc_map, refreshes dictionary df/cf and global
-  stats, and clears the tombstone set — the FreshDiskANN-style cleanup.
+- ``compact_index`` physically rewrites the postings (and the positions,
+  when the index has them) without tombstoned docs, shrinks
+  doc_stats/doc_map, refreshes dictionary df/cf and global stats, and
+  clears the tombstone set — the FreshDiskANN-style cleanup.
   doc_ids are NOT renumbered (stable external references, like the
   reference's holes-then-renumber-at-write model); density is restored by
   a full rebuild if ever needed.
 
 Scale notes: the tombstone set is read with pyarrow on the driver and
-applied as a ``doc_id NOT IN`` filter (relational paths) or a numpy mask
-in the WAND kernel, on the driver or in Spark tasks. A tombstone set too
+applied as a ``doc_id NOT IN`` filter by the one reader of the relational
+and positional reads (``query.live_rows``) or as a numpy mask in the WAND
+kernel, on the driver or in Spark tasks. A tombstone set too
 large to inline in every read's plan is the signal to run
 ``compact_index`` — same policy as the reference's cleanup threshold.
 """
@@ -30,7 +32,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .build import _encode_map_fn, packed_bytes_col
-from .query import decode_postings
+from .positions import has_positions, write_positions
+from .query import decode_postings, decoded
 from .storage import (
     LINEAGE_SCHEMA,
     POSTINGS_SCHEMA,
@@ -78,8 +81,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """Rewrite the index without tombstoned docs (B8 analog), on either
     layout: the blocks are re-encoded per (term_id, salt) and written to
     the layout's part (``storage.part_id_col``), so a doc-partitioned
-    index keeps every block inside its bucket. Idempotent; no-op when
-    there are no tombstones."""
+    index keeps every block inside its bucket. The positions, when
+    present, are decoded with their salt, the dead docs anti-joined off,
+    and re-encoded by ``positions.write_positions`` into the same hashed
+    parts. Idempotent; no-op when there are no tombstones."""
     dead = tombstone_ids(spark, index_dir)
     if not dead:
         return {"docs_removed": 0}
@@ -119,6 +124,11 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     swap_in(staged, index_dir, "postings")
     postings_live = int(obs.get["postings"])
     bytes_live = int(obs.get["bytes"])
+    if has_positions(index_dir):
+        occ = decoded(
+            read_table(spark, index_dir, "positions"), "positions", ["term_id", "salt"]
+        )
+        write_positions(occ.join(dead_df, "doc_id", "left_anti"), index_dir, seg)
 
     # shrink doc_stats / doc_map; the live docs' count and Σdl are observed
     # on the doc_stats rewrite (the global stats refresh below needs no

@@ -40,12 +40,20 @@ Plan shape / scale notes:
     queries, so cluster QPS scales across queries.
   Both run the same per-bucket body (:func:`_wand_queries`) over blocks in
   one fixed order, so they return the same rows and score bits (tested);
-- relational reads: one body, :func:`_scored` — decode → tombstone mask
-  → (optional accept join) → JVM-side BM25 or tf-idf contribution → sum
-  per (query, doc) — and one rank step, :func:`_ranked`. The unpruned
-  top-k (the oracle for the pruned path and the scale-out path for very
-  large single queries), tf-idf top-k, threshold search and the
-  broad-predicate filtered top-k are thin calls of it.
+- one reader, :func:`live_rows`, gives every relational and positional
+  read its rows: the dictionary rows' parts (postings: the layout's part
+  rule; positions: hashed on both layouts), a ``term_id``-filtered scan,
+  one decode per block with the table's own decoder (:func:`decoded`,
+  over :mod:`codec`), then the tombstone mask. The relational reads run
+  one body on it, :func:`_scored` — live postings → broadcast join to the
+  (query, term) rows → (optional accept join) → JVM-side BM25 or tf-idf
+  contribution → sum per (query, doc) — and one rank step,
+  :func:`_ranked`. The unpruned top-k (the oracle for the pruned path and
+  the scale-out path for very large single queries), tf-idf top-k,
+  threshold search and the broad-predicate filtered top-k are thin calls
+  of it; the boolean reads (``operators.boolean``) and the phrase and
+  proximity reads (``index.positions``) call the reader itself. The two
+  WAND paths read blocks undecoded and mask tombstones in the kernel.
 """
 
 from __future__ import annotations
@@ -61,7 +69,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .codec import decode_blocks
+from .codec import decode_blocks, decode_position_blocks
 from .storage import (
     ids_in,
     local_relation,
@@ -71,6 +79,7 @@ from .storage import (
     read_files,
     read_segments,
     read_table,
+    term_parts,
     tombstone_ids,
 )
 
@@ -79,34 +88,88 @@ from .storage import (
 # decode
 # ---------------------------------------------------------------------------
 
-def _decode_map_fn(carry_cols: list[str]):
-    out_cols = carry_cols + ["doc_id", "tf", "dl"]
+# each block table's one decoder: (kernel, the block columns it reads, the
+# long columns it decodes each block into)
+_DECODERS = {
+    "postings": (decode_blocks, "n base doc_ids_packed tfs_packed dls_packed", "doc_id tf dl"),
+    "positions": (
+        decode_position_blocks,
+        "n base n_occ doc_ids_packed counts_packed positions_packed", "doc_id pos",
+    ),
+}
+
+
+def decoded(blocks: DataFrame, table: str, carry: list[str]) -> DataFrame:
+    """The rows of ``blocks``, a scan of ``table``'s blocks, decoded per
+    Arrow batch by that table's one decoder: ``carry`` (block columns,
+    repeated on each row) then ``(doc_id, tf, dl)`` for postings or
+    ``(doc_id, pos)`` for positions. Unmasked: :func:`live_rows` is the
+    read that drops tombstoned docs."""
+    decode, block_cols, cols = _DECODERS[table]
+    block_cols, cols = block_cols.split(), cols.split()
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            idx, doc, tf, dl = decode_blocks(pdf)
-            out = pdf.iloc[idx][carry_cols].reset_index(drop=True)
-            out["doc_id"] = doc
-            out["tf"] = tf
-            out["dl"] = dl
-            yield out[out_cols]
+            row, *vals = decode(pdf)
+            yield pd.DataFrame(
+                {**{c: pdf[c].to_numpy()[row] for c in carry}, **dict(zip(cols, vals))}
+            )
 
-    return fn
+    schema = [f"{c} {blocks.schema[c].dataType.simpleString()}" for c in carry]
+    return blocks.select(*carry, *block_cols).mapInPandas(
+        fn, schema=", ".join(schema + [f"{c} long" for c in cols])
+    )
 
 
 def decode_postings(spark: SparkSession, index_dir: str, extra_cols: list[str] | None = None) -> DataFrame:
     """(term_id, doc_id, tf, dl [, extra]) — full decode of the postings
-    table; must equal the enriched term_freq relation exactly (round-trip
-    test, the analog of TestOnDiskGraphIndex write→load→search parity)."""
-    carry = ["term_id"] + (extra_cols or [])
-    postings = read_table(spark, index_dir, "postings")
-    schema = ", ".join(
-        {"term_id": "term_id long"}.get(c, f"{c} {'int' if c in ('salt','block_id','n') else 'long'}")
-        for c in carry
-    ) + ", doc_id long, tf long, dl long"
-    return postings.mapInPandas(_decode_map_fn(carry), schema=schema)
+    table, tombstoned docs included; must equal the enriched term_freq
+    relation exactly (round-trip test, the analog of TestOnDiskGraphIndex
+    write→load→search parity)."""
+    return decoded(
+        read_table(spark, index_dir, "postings"), "postings",
+        ["term_id", *(extra_cols or [])],
+    )
+
+
+def _read_set(seg: dict, table: str, terms) -> tuple[list[int], list[int]]:
+    """(parts, term_ids) of a read of ``table``'s blocks of the ``(term_id,
+    n_salts)`` pairs ``terms``: the part directories it opens — the one
+    layout rule :func:`storage.postings_parts` for postings, the hashed
+    :func:`storage.term_parts` for positions, which are hashed on both
+    layouts — and its distinct sorted term ids."""
+    terms = [(int(t), int(n)) for t, n in terms]
+    parts = (postings_parts(seg, terms) if table == "postings"
+             else term_parts(terms, seg["n_parts"]))
+    return parts, sorted({t for t, _ in terms})
+
+
+def _scan(
+    spark: SparkSession, index_dir: str, table: str, parts: list[int], term_ids: list[int]
+) -> DataFrame:
+    """The Spark scan of ``table``'s blocks of ``term_ids``: directory-pruned
+    to ``parts``, and filtered on ``term_id`` in the scan, which lets the
+    Parquet reader skip row groups of other terms inside each part file
+    (every part of a doc-partitioned index holds every term)."""
+    return read_table(spark, index_dir, table).filter(
+        ids_in("part_id", parts) & ids_in("term_id", term_ids)
+    )
+
+
+def live_rows(spark: SparkSession, index_dir: str, table: str, terms) -> DataFrame:
+    """The decoded live rows of the dictionary rows ``terms`` (``(term_id,
+    n_salts)`` pairs) in ``table``: ``(term_id, doc_id, tf, dl)`` from
+    ``postings`` or ``(term_id, doc_id, pos)`` from ``positions``. The one
+    reader of every relational and positional read: it opens the parts
+    that hold the terms (:func:`_read_set`), scans them filtered on
+    ``term_id``, decodes each block once (:func:`decoded`) and drops
+    tombstoned docs with a ``doc_id NOT IN`` filter — deleted docs must
+    neither fill nor shadow result slots (M1 semantics, the Bits-acceptOrds
+    filter of GraphSearcher.java:202-205)."""
+    parts, term_ids = _read_set(read_segments(spark, index_dir), table, terms)
+    rows = decoded(_scan(spark, index_dir, table, parts, term_ids), table, ["term_id"])
+    dead = tombstone_ids(spark, index_dir)
+    return rows.filter(~ids_in("doc_id", sorted(dead))) if dead else rows
 
 
 # ---------------------------------------------------------------------------
@@ -141,12 +204,12 @@ def lookup_terms(
     spark: SparkSession, index_dir: str, qterms: DataFrame, seg: dict,
     global_df: DataFrame | None = None,
     idf: str = "bm25",
-) -> tuple[list, str]:
-    """(qd_rows, qid_type): the caller's (query_id, term, weight) relation,
-    collected once, as driver-side ``(query_id, term_id, weight, idf,
-    n_salts, df)`` tuples for its rows whose term is in the dictionary, and
-    the relation's query_id dtype. ``df`` is this index's own document
-    frequency: the number of postings a read of the term decodes.
+) -> list:
+    """The caller's (query_id, term, weight) relation, collected once, as
+    driver-side ``(query_id, term_id, weight, idf, n_salts, df)`` tuples
+    for its rows whose term is in the dictionary. ``df`` is this index's
+    own document frequency: the number of postings a read of the term
+    decodes.
 
     Runs no Spark job when ``qterms`` is a local relation: the dictionary
     rows of the query terms are read with a pyarrow filter on ``term``
@@ -160,7 +223,6 @@ def lookup_terms(
     per-shard scores are exact final scores (see ``index.sharded``);
     ``seg['n_docs']`` is likewise already the global count there. Its rows
     for the query terms are collected in one Spark job."""
-    qid_type = dict(qterms.dtypes).get("query_id", "int")
     qrows = qterms.select("query_id", "term", "weight").collect()
     for r in qrows:
         if not -(1 << 31) <= int(r.query_id) < 1 << 31:
@@ -169,7 +231,7 @@ def lookup_terms(
             )
     terms = sorted({r.term for r in qrows if r.term is not None})
     if not terms:
-        return [], qid_type
+        return []
     dct = read_dictionary(index_dir, pc.field("term").isin(terms)).to_pylist()
     idf_df = {r["term"]: r["df"] for r in dct}
     if global_df is not None:
@@ -188,62 +250,7 @@ def lookup_terms(
         if r.term in by_term:
             tid, idf_v, n_salts, df = by_term[r.term]
             qd_rows.append((r.query_id, tid, float(r.weight), idf_v, n_salts, df))
-    return qd_rows, qid_type
-
-
-def _read_set(seg: dict, qd_rows: list) -> tuple[list[int], list[int]]:
-    """(parts, term_ids) of a read of :func:`lookup_terms` rows: the
-    postings part ids it opens (:func:`storage.postings_parts`) and its
-    distinct sorted term ids."""
-    parts = postings_parts(seg, ((tid, ns) for _, tid, _, _, ns, _ in qd_rows))
-    return parts, sorted({tid for _, tid, *_ in qd_rows})
-
-
-def _postings_scan(
-    spark: SparkSession, index_dir: str, parts: list[int], term_ids: list[int]
-) -> DataFrame:
-    """The Spark scan of the blocks of ``term_ids``: directory-pruned to
-    ``parts``, and filtered on ``term_id`` in the scan, which lets the
-    Parquet reader skip row groups of other terms inside each part file
-    (every part of a doc-partitioned index holds every term)."""
-    return read_table(spark, index_dir, "postings").filter(
-        ids_in("part_id", parts) & ids_in("term_id", term_ids)
-    )
-
-
-def _prepared_query_blocks(
-    spark: SparkSession, index_dir: str, qterms: DataFrame, seg: dict,
-    global_df: DataFrame | None = None,
-    idf: str = "bm25",
-) -> DataFrame:
-    """Join the query set to the dictionary and fetch only the posting
-    blocks of queried terms (:func:`_postings_scan`). Each
-    block row replicates once per matching (query, term) pair — fine for
-    the relational paths; the WAND batch path uses the bucketed gather in
-    :func:`bm25_topk_indexed` instead (blocks ship once per query BUCKET)."""
-    qd_rows, qid_type = lookup_terms(spark, index_dir, qterms, seg, global_df, idf)
-    # the enriched query relation is tiny (queries × terms): re-emitted as
-    # a local relation for the broadcast join — no persist, so a
-    # long-running query loop pins zero executor storage (round-1 leak).
-    # Schema derives query_id's type from the caller's relation
-    # (long/string query ids must round-trip unchanged)
-    qd = local_relation(
-        spark,
-        [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _, _ in qd_rows],
-        f"query_id {qid_type}, term_id long, weight double, idf double",
-    )
-    postings = _postings_scan(spark, index_dir, *_read_set(seg, qd_rows))
-    return postings.join(F.broadcast(qd), "term_id")
-
-
-def _mask_tombstones(spark: SparkSession, index_dir: str, decoded: DataFrame) -> DataFrame:
-    """Filter the tombstone set off decoded postings (``doc_id NOT IN``) —
-    deleted docs must neither fill nor shadow result slots (M1 semantics,
-    the Bits-acceptOrds filter of GraphSearcher.java:202-205)."""
-    dead = tombstone_ids(spark, index_dir)
-    if not dead:
-        return decoded
-    return decoded.filter(~ids_in("doc_id", sorted(dead)))
+    return qd_rows
 
 
 # ---------------------------------------------------------------------------
@@ -257,20 +264,28 @@ def _scored(
     accept: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score) for every live doc matching a query term:
-    the one body of the relational reads. Decode the matched blocks
-    (directory-pruned), mask tombstones, keep only ``accept``'s doc_ids
-    when given (a hash join Catalyst/AQE plans), score each posting
-    JVM-side — BM25 ``w·idf·tf / (tf + k1·(1 - b + b·dl/avgdl))`` or, for
-    ``idf="tfidf"``, ``w·idf·(1 + ln tf)`` — and sum per (query, doc)."""
-    blocks = _prepared_query_blocks(spark, index_dir, qterms, seg, global_df, idf)
-    carry = ["term_id", "query_id", "weight", "idf"]
-    schema = "term_id long, query_id int, weight double, idf double, doc_id long, tf long, dl long"
-    decoded = blocks.select(*carry, "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed").mapInPandas(
-        _decode_map_fn(carry), schema=schema
+    the one body of the relational reads. Read the queried terms' live
+    postings (:func:`live_rows`, each block decoded once), broadcast-join
+    them to the (query, term) rows of :func:`lookup_terms`, keep only
+    ``accept``'s doc_ids when given (a hash join Catalyst/AQE plans), score
+    each posting JVM-side — BM25 ``w·idf·tf / (tf + k1·(1 - b + b·dl/avgdl))``
+    or, for ``idf="tfidf"``, ``w·idf·(1 + ln tf)`` — and sum per (query,
+    doc)."""
+    qd_rows = lookup_terms(spark, index_dir, qterms, seg, global_df, idf)
+    # the query relation is tiny (queries × terms): a local relation for the
+    # broadcast join — no persist, so a long-running query loop pins zero
+    # executor storage (round-1 leak). query_id is every read's output int
+    # (lookup_terms checks that it fits)
+    qd = local_relation(
+        spark,
+        [(qid, tid, w, idf_v) for qid, tid, w, idf_v, _, _ in qd_rows],
+        "query_id int, term_id long, weight double, idf double",
     )
-    decoded = _mask_tombstones(spark, index_dir, decoded)
+    rows = live_rows(
+        spark, index_dir, "postings", {(tid, ns) for _, tid, _, _, ns, _ in qd_rows}
+    ).join(F.broadcast(qd), "term_id")
     if accept is not None:
-        decoded = decoded.join(accept.select("doc_id").distinct(), "doc_id")
+        rows = rows.join(accept.select("doc_id").distinct(), "doc_id")
     if idf == "tfidf":
         contrib = F.col("weight") * F.col("idf") * (F.lit(1.0) + F.log(F.col("tf")))
     else:
@@ -285,7 +300,7 @@ def _scored(
             )
         )
     return (
-        decoded.withColumn("contrib", contrib)
+        rows.withColumn("contrib", contrib)
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
@@ -763,7 +778,7 @@ def bm25_topk_indexed(
     if with_metrics:
         schema += ", blocks_decoded int, blocks_skipped int, kernel_ms double"
 
-    qd_rows, _ = lookup_terms(spark, index_dir, qterms, seg, global_df)
+    qd_rows = lookup_terms(spark, index_dir, qterms, seg, global_df)
     qspec: dict = {}
     n_postings = 0
     for qid, tid, weight, idf_v, _, df in qd_rows:
@@ -793,7 +808,9 @@ def bm25_topk_indexed(
         k=k, k1=seg["k1"], b=seg["b"], avgdl=seg["avgdl"],
         with_metrics=with_metrics, dead=dead, accept=accept_ids, offset=offset,
     )
-    parts, term_ids = _read_set(seg, qd_rows)
+    parts, term_ids = _read_set(
+        seg, "postings", ((tid, ns) for _, tid, _, _, ns, _ in qd_rows)
+    )
     files = _driver_files(index_dir, parts, n_postings)
     if files is not None:
         # driver path: the part files' blocks of the queried terms, read
@@ -824,7 +841,7 @@ def bm25_topk_indexed(
         spark, sorted(tb_pairs), "term_id long, bucket int"
     )
     bq_bc = spark.sparkContext.broadcast(bucket_queries)
-    blocks = _postings_scan(spark, index_dir, parts, term_ids).join(
+    blocks = _scan(spark, index_dir, "postings", parts, term_ids).join(
         F.broadcast(tb), "term_id"
     )
     return (

@@ -3,7 +3,10 @@
 Reference analog: posting-list traversal during beam search (surveyed Q2,
 GraphSearcher.java:387-437) — here expressed as set algebra over the
 term-frequency relation. Both are pure aggregations: a semi-restricted
-groupBy, no UDFs, no corpus shuffle (the term filter broadcasts).
+groupBy, no UDFs, no corpus shuffle (the term filter broadcasts). The
+indexed twins aggregate the same way over the queried terms' live
+postings, read by the index's one reader (``index.query.live_rows``), so
+a tombstoned doc is masked as in every indexed read.
 """
 
 from __future__ import annotations
@@ -12,7 +15,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.storage import local_relation
+from ..index.query import live_rows
+from ..index.storage import local_relation, read_dictionary
 from .text_stats import term_freq
 
 
@@ -46,28 +50,15 @@ def boolean_or(
 
 
 def _matches_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:
-    """Decoded live postings of ``terms`` only, with directory-level part
-    pruning — the index-backed candidate generator (reads Σ blocks(terms)
-    bytes regardless of corpus size, vs the brute-force path's full scan).
-    The terms are looked up with a pyarrow filter on the dictionary and
-    their part ids resolved driver-side (:func:`storage.postings_parts`,
-    either layout), so no Spark job runs before the read; tombstoned docs
-    are masked like every indexed read."""
-    from ..index.query import _decode_map_fn, _mask_tombstones, _postings_scan
-    from ..index.storage import postings_parts, read_dictionary, read_segments
-
-    seg = read_segments(spark, index_dir)
-    rows = read_dictionary(index_dir, pc.field("term").isin(sorted(set(terms)))).to_pylist()
-    if not rows:
-        return local_relation(spark, [], "term_id long, doc_id long, tf long, dl long")
-    parts = postings_parts(seg, ((r["term_id"], r["n_salts"]) for r in rows))
-    postings = _postings_scan(spark, index_dir, parts, sorted(r["term_id"] for r in rows))
-    decoded = postings.select(
-        "term_id", "n", "base", "doc_ids_packed", "tfs_packed", "dls_packed"
-    ).mapInPandas(
-        _decode_map_fn(["term_id"]), schema="term_id long, doc_id long, tf long, dl long"
-    )
-    return _mask_tombstones(spark, index_dir, decoded)
+    """(term_id, doc_id, tf, dl): the live postings of ``terms``, the
+    index-backed candidate generator (reads Σ blocks(terms) bytes
+    regardless of corpus size, vs the brute-force path's full scan). The
+    terms are looked up with a pyarrow filter on the dictionary, so no
+    Spark job runs before the read, and their rows come from the one
+    reader, ``index.query.live_rows``, which masks tombstoned docs."""
+    rows = read_dictionary(index_dir, pc.field("term").isin(sorted(set(terms))))
+    pairs = zip(rows["term_id"].to_pylist(), rows["n_salts"].to_pylist())
+    return live_rows(spark, index_dir, "postings", pairs)
 
 
 def boolean_and_indexed(spark, index_dir: str, terms: list[str]) -> DataFrame:

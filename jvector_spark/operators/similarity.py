@@ -85,10 +85,13 @@ def cosine_kernel(X: np.ndarray, q: np.ndarray) -> np.ndarray:
     call, and the two callers score different row sets. ``einsum`` sums
     each row on its own, so a vector gets the same bits from any batch. A
     zero-norm row (or query) scores 0, not NaN: a NaN would sort above
-    every real score in Spark's descending order."""
-    dots = np.einsum("ij,j->i", X, q)
-    den = float(np.linalg.norm(q)) * np.linalg.norm(X, axis=1)
-    return np.divide(dots, den, out=np.zeros_like(dots), where=den > 0)
+    every real score in Spark's descending order. A NaN or infinite
+    component raises no warning: a NaN row has no positive norm and scores
+    0, an infinite one scores NaN (inf/inf), which the callers rank last."""
+    with np.errstate(invalid="ignore"):
+        dots = np.einsum("ij,j->i", X, q)
+        den = float(np.linalg.norm(q)) * np.linalg.norm(X, axis=1)
+        return np.divide(dots, den, out=np.zeros_like(dots), where=den > 0)
 
 
 def cosine_scores(
@@ -1041,6 +1044,8 @@ def _sq8_read(index_dir: str, manifest: dict) -> tuple[np.ndarray, np.ndarray]:
 
 def _sq8_fit(embeddings: DataFrame | VectorRows, id_col: str, vec_col: str):
     mn, scale = sq8_train(embeddings, vec_col)
+    if len(mn) == 0:
+        raise ValueError("empty corpus: no vector to train on")
     return (mn, scale), {"dim": len(mn)}
 
 

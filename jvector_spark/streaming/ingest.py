@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..index.storage import arrow_rows, read_local, write_local
+from ..index.storage import arrow_rows, read_local, read_segments, write_local
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -233,7 +233,8 @@ def stream_index_transcripts(
     (incremental ingest); with ``False`` it keeps running on the default
     trigger. Returns the (already awaited, if availableNow) StreamingQuery.
 
-    Microbatch semantics: the first ever batch creates the index; every
+    Microbatch semantics: the first ever batch builds the index
+    (:func:`build_index_transcripts`, ids over ``order_cols``); every
     subsequent batch is an :func:`extend_index` delta whose doc_ids continue
     densely above the existing corpus.
 
@@ -260,9 +261,8 @@ def stream_index_transcripts(
     streaming checkpoint replays only unconsumed source files.
     """
     order_cols = order_cols or ["conv_id", "turn_idx"]
-    from ..index.build import build_index
+    from ..index.build import build_index_transcripts
     from ..index.extend import extend_index
-    from ..operators.doc_ids import assign_dense_ids
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -307,11 +307,11 @@ def stream_index_transcripts(
                 batch, index_dir, order_cols=order_cols, doc_map_cols=doc_map_cols
             )
         else:
-            docs = assign_dense_ids(batch, order_cols, "doc_id")
-            m = build_index(
-                docs, index_dir, doc_map_cols=doc_map_cols, n_parts=n_parts
+            m = build_index_transcripts(
+                batch, index_dir, order_cols, doc_map_cols=doc_map_cols,
+                n_parts=n_parts,
             )
-            m["docs_added"] = batch.count()
+            m["docs_added"] = read_segments(s, index_dir)["n_docs"]
         _record_batch(s, index_dir, batch_id, m, status="complete")
 
     stream = transcript_stream(spark, source_dir, max_files_per_trigger)

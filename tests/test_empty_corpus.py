@@ -2,9 +2,9 @@
 point raises a ``ValueError`` that names it, instead of failing midway on
 an undefined statistic (the text builds' avgdl, the k-means seed draw).
 The text builds raise it on both sides of the build's sizing rule, before
-any table is written, and so do the trained vector tiers (PQ, IVF); the
-untrained ones (SQ8, BQ, NVQ) build the same empty structure on both
-sides."""
+any table is written, and so do the trained vector tiers (PQ, IVF, and
+SQ8, whose per-dimension min and scale have no rows to come from); the
+untrained ones (BQ, NVQ) build the same empty structure on both sides."""
 
 from __future__ import annotations
 
@@ -49,7 +49,7 @@ def test_text_build_of_an_empty_corpus_raises(spark, corpus, transcripts, tmp_pa
         assert not d.exists() or not any(d.iterdir()), side
 
 
-@pytest.mark.parametrize("tier", ["pq", "ivf"])
+@pytest.mark.parametrize("tier", ["pq", "ivf", "sq8"])
 def test_trained_tier_build_of_an_empty_corpus_raises(spark, tmp_path, monkeypatch, tier):
     """On both sides of the ingest rule, before any table is written."""
     from test_local_tables import _force
@@ -66,15 +66,14 @@ def test_trained_tier_build_of_an_empty_corpus_raises(spark, tmp_path, monkeypat
         assert not d.exists() or not any(d.iterdir()), side
 
 
-@pytest.mark.parametrize("tier", ["sq8", "bq", "nvq"])
+@pytest.mark.parametrize("tier", ["bq", "nvq"])
 def test_untrained_tier_of_an_empty_corpus_agrees_across_sides(
     spark, tmp_path, monkeypatch, tier
 ):
     """A tier with nothing to train builds an empty structure on both sides
     of the ingest rule (dimension 0, no code row, the same rows in every
-    table): SQ8's extend then finds no params and raises, and BQ's and
-    NVQ's extend append nothing and serve no row. The exact scans of an
-    empty corpus return no row on both sides."""
+    table): their extends append nothing and serve no row. The exact
+    scans of an empty corpus return no row on both sides."""
     from test_local_tables import _force
 
     from jvector_spark.fixtures import make_embeddings
@@ -89,17 +88,12 @@ def test_untrained_tier_of_an_empty_corpus_agrees_across_sides(
     for side in ("driver", "spark"):
         _force(monkeypatch, side)
         d = dirs[side] = str(tmp_path / side)
-        built = getattr(V, f"{tier}_build")(emb, d)
-        assert (len(built[0]) if tier == "sq8" else built) == 0, side
+        assert getattr(V, f"{tier}_build")(emb, d) == 0, side
         assert V.read_manifest(spark, d)["dim"] == 0
         assert V.read_codes(spark, d).count() == 0
-        if tier == "sq8":
-            with pytest.raises(FileNotFoundError, match="params"):
-                V.sq8_extend(emb, d)
-        else:
-            assert getattr(V, f"{tier}_extend")(emb, d) == 0
-            serve = getattr(V, f"ann_topk_{tier}_indexed")
-            assert serve(spark, d, emb, [1.0] * 32, k=3).collect() == []
+        assert getattr(V, f"{tier}_extend")(emb, d) == 0
+        serve = getattr(V, f"ann_topk_{tier}_indexed")
+        assert serve(spark, d, emb, [1.0] * 32, k=3).collect() == []
         assert cosine_topk(emb, [1.0] * 32, k=3).collect() == []
         assert cosine_topk_batch(emb, qs, k=3).collect() == []
     assert all(diff_dirs(dirs["driver"], dirs["spark"]).values())

@@ -58,6 +58,26 @@ def test_cosine_kernel_matches_numpy_oracle():
             assert np.array_equal(cosine_kernel(X[idx], q), got[idx])
 
 
+def test_cosine_kernel_is_silent_on_nan_and_infinite_rows():
+    """A NaN row (or query) has no positive norm and scores 0, an infinite
+    row scores NaN, and neither raises a numpy warning: in a Spark task
+    one would reach the executor's stderr once per batch."""
+    import warnings
+
+    from jvector_spark.operators.similarity import cosine_kernel
+
+    X = np.array([[1.0, 2.0], [np.nan, 1.0], [np.inf, 1.0], [-np.inf, np.inf], [0.0, 0.0]])
+    q = np.array([1.0, 1.0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = cosine_kernel(X, q)
+        nan_q = cosine_kernel(X, np.array([np.nan, 1.0]))
+    assert got[0] == cosine_kernel(X[:1], q)[0] > 0
+    assert got[1] == got[4] == 0.0
+    assert np.isnan(got[2]) and np.isnan(got[3])
+    assert np.array_equal(nan_q, np.zeros(len(X)))
+
+
 # ---------------------------------------------------------------------------
 # approximate-score kernels (no Spark): each against a plain-Python oracle,
 # and column j of a multi-query call bit-equal to a one-query call on Q[j]
